@@ -52,27 +52,32 @@ object Fastq {
     * parsing the Illumina header fields out of `key`. Works on batch AND
     * streaming frames (pure narrow expressions) — the streaming FASTQ
     * source ([[graft.streaming.GenomicStreams]]) shares it.
+    *
+    * Null-safe under ANSI mode: a missing field (`name/1` keys carry no
+    * Illumina comment) or a non-integer one reads NULL instead of
+    * throwing, the same rule as [[graft.io.v2.FastqSource]].
     */
   private[graft] def project(raw: DataFrame): DataFrame = {
-    val head = split(col("key"), " ").getItem(0)
-    val tailCol = split(col("key"), " ").getItem(1)
-    val h = split(head, ":")
-    val t = split(tailCol, ":")
+    val parts = split(col("key"), " ")
+    val h = split(get(parts, lit(0)), ":")
+    val t = split(get(parts, lit(1)), ":")
+    def hs(i: Int) = get(h, lit(i))
+    def ts(i: Int) = get(t, lit(i))
     raw.select(
       col("key"),
       col("sequence"),
       col("quality"),
-      t.getItem(0).cast("int").as("read"),
-      h.getItem(0).as("instrument"),
-      h.getItem(1).cast("int").as("runNumber"),
-      h.getItem(2).as("flowcellId"),
-      h.getItem(3).cast("int").as("lane"),
-      h.getItem(4).cast("int").as("tile"),
-      h.getItem(5).cast("int").as("xpos"),
-      h.getItem(6).cast("int").as("ypos"),
-      t.getItem(3).as("indexSequence"),
-      when(t.getItem(1) === "N", true)
-        .when(t.getItem(1) === "Y", false)
+      ts(0).try_cast("int").as("read"),
+      hs(0).as("instrument"),
+      hs(1).try_cast("int").as("runNumber"),
+      hs(2).as("flowcellId"),
+      hs(3).try_cast("int").as("lane"),
+      hs(4).try_cast("int").as("tile"),
+      hs(5).try_cast("int").as("xpos"),
+      hs(6).try_cast("int").as("ypos"),
+      ts(3).as("indexSequence"),
+      when(ts(1) === "N", true)
+        .when(ts(1) === "Y", false)
         .otherwise(lit(null).cast("boolean")).as("filterPassed"))
   }
 

@@ -67,6 +67,9 @@ private[operators] object Parallelism {
     * SparkContext local properties (job group/description). The first
     * failure propagates with its ORIGINAL exception (operators throw
     * typed errors the specs assert on), after every thunk settles.
+    * An interrupt of the caller cancels the siblings (`shutdownNow`
+    * interrupts their threads), restores the interrupt flag and
+    * rethrows.
     */
   private[operators] def inParallel[A](thunks: (() => A)*): Seq[A] = {
     require(thunks.nonEmpty, "inParallel needs at least one thunk")
@@ -81,6 +84,10 @@ private[operators] object Parallelism {
         catch {
           case e: java.util.concurrent.ExecutionException =>
             Left(Option(e.getCause).getOrElse(e))
+          case e: InterruptedException =>
+            pool.shutdownNow()
+            Thread.currentThread().interrupt()
+            throw e
         }
       }
       results.collectFirst { case Left(e) => throw e }

@@ -674,10 +674,10 @@ object Similarity {
     * Runs as ONE native expression (l2_argmin_native) holding the whole
     * codebook — the literal struct-max form ([[pqAssignLit]]) is
     * semantically identical but inlines m·ksub struct/round/dot nodes
-    * into a single projection, and BenchFunnel measured its ANALYSIS +
-    * CODEGEN cost dominating the composed funnel (pqEncode ≈8 s on
-    * 2 000 rows, nearly all plan compilation). DedupSpec pins the two
-    * paths equal row-for-row on fixed books.
+    * into a single projection, and its ANALYSIS + CODEGEN cost measured
+    * dominant in the composed funnel (pqEncode ≈8 s on 2 000 rows,
+    * nearly all plan compilation — BASELINE.md, Round-7 funnel probe).
+    * DedupSpec pins the two paths equal row-for-row on fixed books.
     */
   private def pqAssign(s: Int, cents: Codebook): Column =
     call_function("l2_argmin_native", col(s"sub$s"), col(s"nv$s"),
@@ -980,12 +980,12 @@ object Similarity {
     * re-rank), so the DuckDB oracle replays the full funnel stage by
     * stage (q128).
     *
-    * Defaults are MEASURED, not guessed (BenchRecall's sweep, published
-    * in BASELINE.md): on the gaussian worst case — random vectors give
-    * the coarse quantizer almost no locality signal — (nCells=16,
-    * nProbe=12, shortlist=256) is the cheapest sweep point clearing
-    * 0.9 top-3 recall (0.91 at sf0.01; the old r7 default nProbe=4/8,
-    * shortlist=64 measured 0.64). The probe fraction is high BECAUSE
+    * Defaults are MEASURED, not guessed (the recall sweep in BASELINE.md,
+    * Round-8 ANN recall curves): on the gaussian worst case — random
+    * vectors give the coarse quantizer almost no locality signal —
+    * (nCells=16, nProbe=12, shortlist=256) is the cheapest sweep point
+    * clearing 0.9 top-3 recall (0.91 at sf0.01; the old r7 default
+    * nProbe=4/8, shortlist=64 measured 0.64). The probe fraction is high BECAUSE
     * the fixture is adversarial: clustered real embeddings concentrate
     * neighbors in few cells and want nProbe well under nCells — sweep
     * on a sample before trusting any smaller setting, and treat

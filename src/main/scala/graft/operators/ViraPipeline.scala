@@ -124,10 +124,12 @@ object ViraPipeline {
     // 4. FastqGroupper is a write-side concern (partitionBy on sample) —
     //    see Pipeline.writeGroupedBySample; the dataflow continues fused.
 
-    // 5. Assemble: MegaHit pipe over FASTA-ified reads.
+    // 5. Assemble: MegaHit pipe over FASTA-ified reads, one read per
+    //    pair name — the minimum-key mate, so every evaluation of the
+    //    Result frames assembles the same reads whatever the row order.
     val readFasta = toFastaLines(normalized
-      .select(regexp_replace(col("key"), "[/ ].*$", "").as("id"), col("sequence"))
-      .dropDuplicates("id"))
+      .groupBy(regexp_replace(col("key"), "[/ ].*$", "").as("id"))
+      .agg(min_by(col("sequence"), col("key")).as("sequence")))
     val contigLines = Pipes.assembleMegahit(spark, readFasta)
     val contigs0 = fastaLinesToContigs(spark, contigLines)
 

@@ -678,8 +678,8 @@ case class DotProductExpression(left: Expression, right: Expression)
   * HOF form (`transform(sequence(...), aggregate(sequence(...), ...))`)
   * is CodegenFallback: TWO nested interpreted lambda evals per packed
   * bit plus a materialized index array per block. This compiles to one
-  * JIT-ed while-loop inside whole-stage codegen (BenchScalars measures
-  * the gap).
+  * JIT-ed while-loop inside whole-stage codegen (BASELINE.md, Round-6
+  * scalar-kernel probe, records the gap).
   */
 case class BinaryQuantizeExpression(child: Expression) extends UnaryExpression {
 
@@ -714,7 +714,7 @@ case class BinaryQuantizeExpression(child: Expression) extends UnaryExpression {
   * native codegen expression: one xor+popcount while-loop replacing the
   * interpreted `aggregate(zip_with(...))` HOF — the inner kernel of
   * binary-code search, where per-element interpreted dispatch costs 4×+
-  * (BenchScalars).
+  * (BASELINE.md, Round-6 scalar-kernel probe).
   */
 case class HammingDistanceExpression(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -904,9 +904,9 @@ case class CosineArgmaxExpression(emb: Expression, norm: Expression,
   * assignment. The literal path (ksub inline struct/round/dot
   * expressions PER SUBSPACE — m·ksub struct nodes in one projection)
   * is correct but its analysis + codegen cost dominates small-input
-  * runs: BenchFunnel measured pqEncode at ~8 s on 2 000 rows, nearly
-  * all of it plan compilation. One kernel call per subspace collapses
-  * the tree to O(m).
+  * runs: pqEncode measured ~8 s on 2 000 rows, nearly all of it plan
+  * compilation (BASELINE.md, Round-7 funnel probe). One kernel call per
+  * subspace collapses the tree to O(m).
   */
 final class L2ArgminKernel(ids: Array[Long], vecs: Array[Array[Double]],
     normsSq: Array[Double], subIsFloat: Boolean) extends Serializable {

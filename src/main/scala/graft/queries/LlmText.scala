@@ -1205,11 +1205,11 @@ object LlmText {
     // ColBERT MaxSim late-interaction retrieval (q310): vec_id // 5
     // plays the chunk→doc mapping — the SIZED shape (r14 re-pin per
     // the r13 verdict): doc count tracks the corpus and chunks/doc
-    // stays fixed at 5, which is the production contract (BenchScale
-    // measured the old %100 fixture — chunks/doc ∝ N — harness-
-    // quadratic while this shape is linear). Since r12 maxSimTopK IS
-    // the two-stage PER-CHUNK funnel (each query chunk nominates the
-    // docs of its m=8 LSH-nearest foreign chunks; only nominated pairs
+    // stays fixed at 5, which is the production contract (the old %100
+    // fixture — chunks/doc ∝ N — measured harness-quadratic while this
+    // shape is linear: BASELINE.md, Round-13 measured scale trend).
+    // Since r12 maxSimTopK IS the two-stage PER-CHUNK funnel (each
+    // query chunk nominates the docs of its m=8 LSH-nearest foreign chunks; only nominated pairs
     // pay exact chunk×chunk rerank) — the r11 flat chunk-bucket gate
     // was retired as a hot-bucket quadratic. Measured recall vs
     // exhaustive MaxSim: 0.94 (q322).
@@ -2136,8 +2136,8 @@ object LlmText {
           "binary_prefilter"))
         .unionByName(row(Similarity.binaryPrefilterTopK(e, 3, shortlist = 320),
           "binary_prefilter_320"))
-        // r8: the measured defaults (BenchRecall sweep) — the old
-        // nProbe=4/8 shortlist=64 point read 0.64 recall
+        // r8: the measured defaults (BASELINE.md, Round-8 ANN recall
+        // curves) — the old nProbe=4/8 shortlist=64 point read 0.64 recall
         .unionByName(row(Similarity.ivfAdcRerankTopK(e, 3, nCells = 16,
           nProbe = 12, shortlist = 256), "ivf_adc_rerank"))
         // r11: the full recall-vs-cost CURVE for the IVF funnel — the

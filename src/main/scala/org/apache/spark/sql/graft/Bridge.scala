@@ -16,6 +16,12 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Block until every posted listener event is delivered (the bus is
+    * private[spark]); listener-based probes read their buffers after it.
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
+
   /** LogicalPlan → DataFrame for command implementations (classic
     * `Dataset.ofRows` is private[sql]).
     */

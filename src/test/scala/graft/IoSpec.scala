@@ -67,6 +67,41 @@ class IoSpec extends AnyFunSuite {
     assert(a == b)
   }
 
+  test("Fastq.read under ANSI mode: /1-/2 keys and bad ints read NULL header columns") {
+    val fixture =
+      """@pairA/1
+        |ACGT
+        |+
+        |IIII
+        |@pairA/2
+        |TTGG
+        |+
+        |@@@@
+        |@SAMPLE01:x42:FC1:1:1101:1001:2201 1:N:0:ACGT
+        |CCAA
+        |+
+        |IIII
+        |""".stripMargin
+    val dir = writeFixture("fq_ansi", fixture)
+    val saved = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      val rows = Fastq.read(spark, dir).orderBy("key").collect()
+      assert(rows.map(_.length).toSet == Set(13))
+      val byKey = rows.map(r => r.getString(0) -> r).toMap
+      val mate = byKey("pairA/1")
+      assert(mate.getAs[String]("instrument") == "pairA/1")
+      Seq("read", "runNumber", "flowcellId", "lane", "tile", "xpos", "ypos",
+        "indexSequence", "filterPassed").foreach(c => assert(mate.isNullAt(mate.fieldIndex(c)), c))
+      val bad = byKey("SAMPLE01:x42:FC1:1:1101:1001:2201 1:N:0:ACGT")
+      assert(bad.isNullAt(bad.fieldIndex("runNumber")))
+      assert(bad.getAs[Int]("tile") == 1101 && bad.getAs[Int]("read") == 1)
+      // same NULL rule as the DataSourceV2 reader
+      val v2 = spark.read.format(classOf[graft.io.v2.FastqSource].getName).load(dir)
+      assert(v2.collect().map(_.toSeq).toSet == rows.map(_.toSeq).toSet)
+    } finally spark.conf.set("spark.sql.ansi.enabled", saved)
+  }
+
   test("Fastq.readSplittable: tiny splits cutting mid-record, hostile quality lines") {
     // Quality lines that START with '@' and '+' — the probe must never
     // take one for a record boundary; varied lengths force splits to cut

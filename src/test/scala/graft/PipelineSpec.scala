@@ -60,6 +60,33 @@ class PipelineSpec extends AnyFunSuite {
     assert(res.hmmHits.count() > 0)
   }
 
+  test("run assembles the minimum-key mate of each pair under any partitioning") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(9)
+    def dna() = Seq.fill(24)("ACGT"(rnd.nextInt(4))).mkString
+    val pairs = (0 until 12).map(i => (f"p$i%02d", dna(), dna()))
+    val r1 = pairs.map(p => (p._1 + "/1", p._2, "I" * 24)).toDF("key", "sequence", "quality")
+    val r2 = pairs.map(p => (p._1 + "/2", p._3, "I" * 24)).toDF("key", "sequence", "quality")
+    val cfg = ViraPipeline.Config(k = 8, minc = 0, maxc = 1000, orfMinLen = 2)
+    def contigSeqs(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
+      ViraPipeline.run(spark, a, b, cfg).contigs.select("sequence")
+        .collect().map(_.getString(0)).sorted.toSeq
+    val plain = contigSeqs(r1, r2)
+    // mates reach the assembler's aggregate through a shuffled join and
+    // in a different order: the kept read must not change
+    val overrides = Map("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "7")
+    val saved = overrides.keys.map(k => k -> spark.conf.get(k))
+    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
+    val shuffled = try contigSeqs(
+        r1.repartition(3).sortWithinPartitions(col("key").desc),
+        r2.repartition(2).sortWithinPartitions(col("key").desc))
+      finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+    assert(plain == shuffled)
+    assert(plain == pairs.map(_._2).sorted)
+  }
+
   test("digitalNormalize drops reads whose k-mers are all outside the band") {
     import spark.implicits._
     // 'AAAA' k-mers appear 12 times (3 reads × 4 windows with k=4... the
