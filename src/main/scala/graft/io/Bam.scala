@@ -23,9 +23,9 @@ import java.util.zip.{CRC32, Deflater, GZIPInputStream}
   *    spec-compliant tools can read what we write.
   *
   * Parallelism model: one task per file ([[read]] uses the binaryFile
-  * source), matching [[Fastq.read]] — BAM corpora arrive as many
-  * per-sample files — with an AUTO-ROUTE to [[readSplittable]] when any
-  * file exceeds 256 MiB: byte ranges are parallelized, each task scans
+  * source) — BAM corpora arrive as many per-sample files — with an
+  * AUTO-ROUTE to [[readSplittable]] when any file exceeds 256 MiB:
+  * byte ranges are parallelized, each task scans
   * to the first BGZF block magic in its range (chain-validated), aligns
   * to the first alignment-record start (exact offset for the header
   * range — the driver parses the header once — and a field-validated

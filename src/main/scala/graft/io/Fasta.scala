@@ -7,31 +7,18 @@ import org.apache.spark.sql.functions._
   * records via `textinputformat.record.delimiter=">"`, SplitFasta.java:41-43,
   * and writes `">"+id+"\n"+seq`, RenameContigsUniq.java:61-67).
   *
-  * The read is genuinely splittable: the text source's `lineSep` option
-  * delegates to Hadoop's delimiter-aware line reader, which resolves
-  * record boundaries across split edges — so one 1 TB FASTA still scans
-  * in parallel with no shuffle.
+  * Reading is [[graft.io.v2.FastaSource]]: byte ranges split at
+  * header lines, so one large FASTA scans in parallel with no shuffle,
+  * and `select(id)` never builds the body strings.
   */
 object Fasta {
 
   /** `Dataset`-shaped contigs: (id = header token before first space,
     * description = rest of header, sequence = body lines joined).
-    * Empty records (F11 guard) are dropped.
+    * Empty-id records (F11 guard) are dropped.
     */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val rec = spark.read.option("lineSep", ">").text(path)
-      .filter(length(trim(col("value"))) > 0)
-    val headerAndBody = split(col("value"), "\n", 2)
-    val header = headerAndBody.getItem(0)
-    rec.select(
-      split(header, " ").getItem(0).as("id"),
-      when(instr(header, " ") > 0,
-        header.substr(instr(header, " ") + 1, length(header)))
-        .otherwise("").as("description"),
-      regexp_replace(coalesce(headerAndBody.getItem(1), lit("")), "\n", "")
-        .as("sequence"))
-      .filter(length(col("id")) > 0)
-  }
+  def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.format(classOf[graft.io.v2.FastaSource].getName).load(path)
 
   /** FASTA sink; wraps sequences at `wrap` chars per line when > 0 (the
     * reference writes unwrapped single-line bodies).

@@ -35,8 +35,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Column pruning (SupportsPushDownRequiredColumns) prunes the emitted
   * row to the required fields. (The binary record decode itself still
   * parses every field — BAM's in-record layout demands walking all
-  * lengths anyway; the FASTQ/FASTA twins' allocation-level pruning has
-  * its analog here in the rows, not the decode.)
+  * lengths anyway; the FASTQ/FASTA sources' allocation-level pruning
+  * has its analog here in the rows, not the decode.)
   */
 class BamSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
@@ -94,7 +94,7 @@ private[v2] class BamScanBuilder(path: String, splitBytes: Option[Long],
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
   override def build(): Scan =
-    new BamScan(path, splitBytes, region, maxSpan, required)
+    BamScan(path, splitBytes, region, maxSpan, required)
 }
 
 /** One decodable byte range + the owning file's header meta (refs +
@@ -106,7 +106,10 @@ private[v2] case class BamPartition(path: String, start: Long, end: Long,
                                     firstBlock: Long, firstOff: Int)
     extends InputPartition
 
-private[v2] class BamScan(path: String, splitOpt: Option[Long],
+/** A case class: two scans of one relation compare equal, so a plan
+  * reading the same BAM twice reuses its exchanges.
+  */
+private[v2] case class BamScan(path: String, splitOpt: Option[Long],
                           region: Option[String], maxSpanOpt: Option[Int],
                           required: StructType)
     extends Scan with Batch {

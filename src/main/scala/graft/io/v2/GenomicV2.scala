@@ -1,6 +1,7 @@
 package graft.io.v2
 
 import java.util
+import java.util.OptionalLong
 
 import scala.jdk.CollectionConverters._
 
@@ -18,13 +19,10 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** DataSourceV2 FASTQ/FASTA readers with REAL column pruning
-  * (SURVEY.md §4.2's deferred item; the v1 readers in [[graft.io.Fastq]]
-  * / [[graft.io.Fasta]] parse behind an RDD boundary, so Catalyst can
-  * prune projected columns but the scan still materializes every line as
-  * a String).
-  *
-  * Here `SupportsPushDownRequiredColumns` reaches the byte scanner:
+/** The FASTQ and FASTA readers ([[graft.io.Fastq.read]] and
+  * [[graft.io.Fasta.read]] are one call each to these sources), with
+  * REAL column pruning (SURVEY.md §4.2's deferred item):
+  * `SupportsPushDownRequiredColumns` reaches the byte scanner:
   * `select(sequence)` on FASTQ never materializes quality or name
   * strings (record framing still counts their bytes — FASTQ's 4-line
   * frame demands it — but no String/UTF8String is ever built), and
@@ -32,13 +30,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * reads, quality is half the bytes of the file; a pruned scan halves
   * the garbage the hot path allocates.
   *
-  * Splitting matches the v1 contract (Fastq.readSplittable's probe:
-  * reference rides the same model via FastqInputFormat,
-  * SQLQueryFastq.java:69): parallel byte ranges, each task probes
+  * Splitting is the FastqInputFormat model the reference rides
+  * (SQLQueryFastq.java:69): parallel byte ranges, each task probes
   * forward to the first true record boundary (chain-validated), owns
   * records starting at offset ≤ range end, tail record reads past the
   * end. Compressed files are not byte-addressable → one partition per
   * file, codec-decoded.
+  *
+  * Scans are case classes: two scans of one relation compare equal, so
+  * a plan that reads a frame twice reuses its exchanges. Each reports
+  * its listed byte total as `sizeInBytes`, so join planning sees the
+  * input's real size.
   *
   * Usage: `spark.read.format("fastq").load(path)` (registered via
   * DataSourceRegister) or the full class name.
@@ -49,27 +51,30 @@ class FastqSource extends TableProvider
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = Fastq.schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table =
-    new FastqTable(properties.get("path"),
-      Option(properties.get("splitBytes")).map(_.toLong))
+    new RangeTable("fastq", Fastq.schema, properties, FastqScan(_, _, _))
 }
 
-private[v2] class FastqTable(path: String, splitBytes: Option[Long])
+/** The files under the `path` option, read by one [[RangeScan]] pruned
+  * to the required columns; the `splitBytes` option sets the range size.
+  */
+private[v2] class RangeTable(format: String, fullSchema: StructType,
+                             properties: util.Map[String, String],
+                             scan: (String, Option[Long], StructType) => Scan)
     extends Table with SupportsRead {
-  require(path != null, "FastqSource needs .load(path)")
-  override def name(): String = s"fastq($path)"
-  override def schema(): StructType = Fastq.schema
+  private val path = properties.get("path")
+  private val splitBytes = Option(properties.get("splitBytes")).map(_.toLong)
+  require(path != null, s"the $format source needs .load(path)")
+  override def name(): String = s"$format($path)"
+  override def schema(): StructType = fullSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    new FastqScanBuilder(path, splitBytes)
-}
-
-private[v2] class FastqScanBuilder(path: String, splitBytes: Option[Long])
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = Fastq.schema
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  override def build(): Scan = new FastqScan(path, splitBytes, required)
+    new ScanBuilder with SupportsPushDownRequiredColumns {
+      private var required = fullSchema
+      override def pruneColumns(requiredSchema: StructType): Unit =
+        required = requiredSchema
+      override def build(): Scan = scan(path, splitBytes, required)
+    }
 }
 
 private[v2] case class RangePartition(path: String, start: Long, end: Long,
@@ -83,23 +88,22 @@ private[v2] object RangePlanner {
     codecExts.exists(l.endsWith)
   }
 
-  /** Driver-side listing → byte-range partitions; compressed files get
-    * one whole-file partition (not byte-addressable). Listing rules
-    * (glob/dir, hidden-file filter, len>0, path order) are the v1
-    * reader's own `Fastq.listFiles` — one copy, no drift. Split size
-    * defaults to the session's `spark.sql.files.maxPartitionBytes`
-    * (what every other source honors); the `splitBytes` option
-    * overrides it.
+  /** Listed files → byte-range partitions; compressed files get one
+    * whole-file partition (not byte-addressable).
     */
-  def plan(spark: SparkSession, path: String,
-           splitOpt: Option[Long]): Array[InputPartition] = {
-    val splitBytes = splitOpt.getOrElse(
-      spark.sessionState.conf.filesMaxPartitionBytes)
-    Fastq.listFiles(spark, path).flatMap { case (f, len) =>
+  def plan(files: Seq[(String, Long)], splitBytes: Long): Array[InputPartition] =
+    files.flatMap { case (f, len) =>
       if (isCompressed(f)) Seq(RangePartition(f, 0L, Long.MaxValue, compressed = true))
       else (0L until len by splitBytes)
         .map(s => RangePartition(f, s, math.min(s + splitBytes, len), compressed = false))
     }.toArray[InputPartition]
+
+  /** The listed byte total as the scan's size (compressed files count
+    * their stored bytes); the row count is unknown before the scan.
+    */
+  def statistics(files: Seq[(String, Long)]): Statistics = new Statistics {
+    override def sizeInBytes(): OptionalLong = OptionalLong.of(files.map(_._2).sum)
+    override def numRows(): OptionalLong = OptionalLong.empty()
   }
 
   def open(conf: Configuration, part: RangePartition): java.io.InputStream = {
@@ -120,8 +124,8 @@ private[v2] object RangePlanner {
   * byte, and length. Line bytes land in ONE reusable buffer; [[text]]
   * builds a String only on request — the mechanism that lets pruned
   * columns skip all per-record String/UTF8String allocation while
-  * record framing still sees every line. Empty lines are skipped (same
-  * as the v1 readers); trailing '\r' is stripped/uncounted.
+  * record framing still sees every line. Empty lines are skipped;
+  * '\r' is stripped/uncounted.
   */
 private[v2] final class PrunedLineScanner(in: java.io.InputStream, startOffset: Long) {
   private var offset = startOffset
@@ -190,24 +194,48 @@ private[v2] final class PrunedLineScanner(in: java.io.InputStream, startOffset: 
   }
 }
 
-private[v2] class FastqScan(path: String, splitBytes: Option[Long], required: StructType)
-    extends Scan with Batch {
+/** The byte-range scan both formats share: listing (once per scan),
+  * statistics, range planning and the reader factory. Split size
+  * defaults to the session's `spark.sql.files.maxPartitionBytes` (what
+  * every other source honors); the `splitBytes` option overrides it.
+  * Implementations are case classes, so equal scans compare equal.
+  */
+private[v2] trait RangeScan extends Scan with Batch with SupportsReportStatistics {
+  def path: String
+  def splitBytes: Option[Long]
+  def required: StructType
+  protected def reader: RangeScan.Reader
+
+  private lazy val files = Fastq.listFiles(SparkSession.active, path)
+
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
-  override def description(): String =
-    s"GraftFastqScan path=$path ReadSchema: ${required.simpleString}"
+  override def estimateStatistics(): Statistics = RangePlanner.statistics(files)
   override def planInputPartitions(): Array[InputPartition] =
-    RangePlanner.plan(SparkSession.active, path, splitBytes)
+    RangePlanner.plan(files, splitBytes.getOrElse(
+      SparkSession.active.sessionState.conf.filesMaxPartitionBytes))
   override def createReaderFactory(): PartitionReaderFactory =
-    new FastqReaderFactory(
+    new RangeReaderFactory(
       new HadoopConfCarrier(SparkSession.active.sparkContext.hadoopConfiguration),
-      required.fieldNames)
+      required.fieldNames, reader)
 }
 
-private[v2] class FastqReaderFactory(conf: HadoopConfCarrier, fields: Array[String])
+private[v2] object RangeScan {
+  type Reader = (Configuration, RangePartition, Array[String]) => PartitionReader[InternalRow]
+}
+
+private[v2] class RangeReaderFactory(conf: HadoopConfCarrier, fields: Array[String],
+                                     reader: RangeScan.Reader)
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new FastqPartitionReader(conf.toConf, p.asInstanceOf[RangePartition], fields)
+    reader(conf.toConf, p.asInstanceOf[RangePartition], fields)
+}
+
+private[v2] case class FastqScan(path: String, splitBytes: Option[Long], required: StructType)
+    extends RangeScan {
+  override def description(): String =
+    s"GraftFastqScan path=$path ReadSchema: ${required.simpleString}"
+  override protected def reader: RangeScan.Reader = new FastqPartitionReader(_, _, _)
 }
 
 /** Emits one InternalRow per owned FASTQ record, materializing only the
@@ -226,11 +254,11 @@ private[v2] class FastqPartitionReader(conf: Configuration, part: RangePartition
     if (part.compressed) 0L else part.start)
   if (!part.compressed && part.start != 0) sc.skipToNextNewline()
 
-  // --- boundary probe (uncompressed ranges only; compressed partitions
-  // own the whole file so record 1 starts at line 1). Probing needs the
-  // 4-line frame shape: '@' line, '+' two below, |seq| == |qual|,
-  // chain-validated one record further so a quality line starting with
-  // '@' cannot fake a boundary (same rule as Fastq.decodeFastqRange).
+  // --- boundary probe (ranges starting mid-file only; a range at offset
+  // 0 — every compressed partition among them — starts at record 1).
+  // Probing needs the 4-line frame shape: '@' line, '+' two below,
+  // |seq| == |qual|, chain-validated one record further so a quality
+  // line starting with '@' cannot fake a boundary.
   // The probe's lookahead window extracts text per line-ROLE: once a
   // candidate boundary is fixed, line i%4 of the window is a name /
   // sequence / '+' / quality line, so pruned roles keep text=null even
@@ -270,7 +298,7 @@ private[v2] class FastqPartitionReader(conf: Configuration, part: RangePartition
       ahead(i + 5).len == ahead(i + 7).len
   }
 
-  private var started = part.compressed
+  private var started = part.compressed || part.start == 0
   private def ensureStart(): Unit = {
     if (!started) {
       started = true
@@ -298,15 +326,14 @@ private[v2] class FastqPartitionReader(conf: Configuration, part: RangePartition
     true
   }
 
-  // replicate graft.io.Fastq.project's parse + null semantics exactly:
-  // head = key.split(" ")(0) → h = head.split(":"); t = second space
-  // token split on ":" (null when absent); int casts null on non-numeric
+  // graft.io.Fastq.project's parse + null semantics exactly (the
+  // streaming FASTQ source projects through it): head = key.split(" ")(0)
+  // → h = head.split(":"); t = second space token split on ":" (null
+  // when absent); int casts null on non-numeric
 
-  /** v1 parity for int fields: the v1 projection goes through a SQL
-    * string→int CAST, which trimAll()s then parses via UTF8String.toInt
-    * — whitespace-tolerant (" 5" parses), unlike a bare Scala
-    * toIntOption. Route through the identical UTF8String sequence so
-    * both readers agree on every input.
+  /** Int fields as `Fastq.project`'s SQL string→int `try_cast`: trimAll()
+    * then UTF8String.toInt — whitespace-tolerant (" 5" parses), unlike a
+    * bare Scala toIntOption.
     */
   private def castInt(s: String): Any = {
     val out = new UTF8String.IntWrapper
@@ -368,8 +395,7 @@ class FastaSource extends TableProvider
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = schema
   override def getTable(s: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table =
-    new FastaTable(properties.get("path"),
-      Option(properties.get("splitBytes")).map(_.toLong))
+    new RangeTable("fasta", schema, properties, FastaScan(_, _, _))
 }
 
 object FastaSource {
@@ -379,50 +405,18 @@ object FastaSource {
     StructField("sequence", StringType)))
 }
 
-private[v2] class FastaTable(path: String, splitBytes: Option[Long])
-    extends Table with SupportsRead {
-  require(path != null, "FastaSource needs .load(path)")
-  override def name(): String = s"fasta($path)"
-  override def schema(): StructType = FastaSource.schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    new FastaScanBuilder(path, splitBytes)
-}
-
-private[v2] class FastaScanBuilder(path: String, splitBytes: Option[Long])
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = FastaSource.schema
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  override def build(): Scan = new FastaScan(path, splitBytes, required)
-}
-
-private[v2] class FastaScan(path: String, splitBytes: Option[Long], required: StructType)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
+private[v2] case class FastaScan(path: String, splitBytes: Option[Long], required: StructType)
+    extends RangeScan {
   override def description(): String =
     s"GraftFastaScan path=$path ReadSchema: ${required.simpleString}"
-  override def planInputPartitions(): Array[InputPartition] =
-    RangePlanner.plan(SparkSession.active, path, splitBytes)
-  override def createReaderFactory(): PartitionReaderFactory =
-    new FastaReaderFactory(
-      new HadoopConfCarrier(SparkSession.active.sparkContext.hadoopConfiguration),
-      required.fieldNames)
-}
-
-private[v2] class FastaReaderFactory(conf: HadoopConfCarrier, fields: Array[String])
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new FastaPartitionReader(conf.toConf, p.asInstanceOf[RangePartition], fields)
+  override protected def reader: RangeScan.Reader = new FastaPartitionReader(_, _, _)
 }
 
 /** A record is a '>' header line plus body lines up to the next '>'.
   * Ownership: the range owning the header's start byte owns the record
   * (start ≤ end; the tail record's body reads past the range end —
   * identical to the FASTQ convention). `select(id)` never materializes
-  * body lines; empty-id records are dropped (v1 parity).
+  * body lines; empty-id records are dropped (the F11 guard).
   */
 private[v2] class FastaPartitionReader(conf: Configuration, part: RangePartition,
                                       fields: Array[String])
@@ -481,7 +475,7 @@ private[v2] class FastaPartitionReader(conf: Configuration, part: RangePartition
         row = new GenericInternalRow(vals.asInstanceOf[Array[Any]])
         return true
       }
-      // empty id (v1 drops): loop to next record
+      // empty id (dropped): loop to next record
     }
     false // unreachable
   }

@@ -640,7 +640,7 @@ object Similarity {
   /** Per-subspace codebook: (cid, centroid, ||centroid||²). Missing cids
     * (emptied clusters) simply drop out, as in [[kmeansAssign]].
     */
-  private type Codebook = Array[(Long, Array[Double], Double)]
+  private[graft] type Codebook = Array[(Long, Array[Double], Double)]
 
   /** Internal: base projection with per-subspace slices `sub_s` and
     * squared norms `nv_s` (computed once, checkpointed — every training
@@ -872,6 +872,14 @@ object Similarity {
                 iters: Int = 1): DataFrame =
     pqAdcTopKWith(vectors, k, m, ksub, iters, useLitTerms = false)
 
+  /** The ADC distance through the kernel or the literal terms — the
+    * parity harness the ADC specs compare the two paths through.
+    */
+  private[graft] def adcDistance(books: Array[Codebook], m: Int, ksub: Int,
+                                 dsub: Int, useLitTerms: Boolean): Column =
+    if (useLitTerms) adcTerms(books, m, ksub, dsub).reduce(_ + _)
+    else adcSum(books, m, ksub, dsub)
+
   /** ADC top-k through either distance path — the parity harness for
     * the adc_sum_native kernel (DedupSpec pins kernel == literal terms
     * row-for-row through the full funnel, the pqEncodeWith doctrine).
@@ -882,9 +890,7 @@ object Similarity {
     val (base, books, dsub) = pqPrepare(vectors, m, ksub, iters)
     val coded = base.select(
       col("id") +: (0 until m).map(s => pqAssign(s, books(s)).as(s"a$s")): _*)
-    val dist =
-      if (useLitTerms) adcTerms(books, m, ksub, dsub).reduce(_ + _)
-      else adcSum(books, m, ksub, dsub)
+    val dist = adcDistance(books, m, ksub, dsub, useLitTerms)
     val q = base.select(col("id").as("query_id") +:
       (0 until m).flatMap(s => Seq(col(s"sub$s").as(s"qsub$s"),
         col(s"nv$s").as(s"qnv$s"))): _*)
@@ -1138,11 +1144,12 @@ object Similarity {
         codes.repartitionByRange(math.max(1, math.min(nCells, 32)),
           col("cell")).sortWithinPartitions("cell")
       else codes
-    // Four INDEPENDENT snapshot tables (distinct dirs, no cross-table
-    // atomicity contract — the maintenance cycle is single-writer, and
-    // the sequential form never had a multi-table commit either):
-    // publish them as concurrent jobs (guide §2.6), so the phase pays
-    // the slowest write + stats pass, not the sum of four.
+    // The three data tables are independent (distinct dirs): publish
+    // them as concurrent jobs (guide §2.6), so the phase pays the
+    // slowest write + stats pass, not the sum of three. Meta goes last,
+    // once all three have committed: a failed data write throws out of
+    // inParallel and leaves the previous meta — the contract an
+    // optimize must not overwrite with one describing unpublished data.
     Parallelism.inParallel[Long](
       () => Layout.snapshotWrite(cent, s"$indexDir/centroids"),
       () => Layout.snapshotWrite(
@@ -1151,11 +1158,11 @@ object Similarity {
         }.toSeq.toDF("s", "cid", "ce"),
         s"$indexDir/codebooks"),
       () => Layout.snapshotWrite(codesOut, s"$indexDir/codes",
-        statsCols = "cell" +: attrCols),
-      () => Layout.snapshotWrite(
-        Seq((nCells, m, ksub, dim, attrCols.mkString(",")))
-          .toDF("n_cells", "m", "ksub", "dim", "attrs"),
-        s"$indexDir/meta"))
+        statsCols = "cell" +: attrCols))
+    Layout.snapshotWrite(
+      Seq((nCells, m, ksub, dim, attrCols.mkString(",")))
+        .toDF("n_cells", "m", "ksub", "dim", "attrs"),
+      s"$indexDir/meta")
     ()
   }
 

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -1144,8 +1145,9 @@ case class LogisticScoreExpression(weights: Expression,
   * is bit-identical (DedupSpec pins it). Null semantics mirror the
   * literal form: a dim-mismatched codebook slice or a null sub-vector
   * element nulls the SUM (dot_native's null propagated through Add).
-  * An out-of-range code fails loudly (the literal path's ANSI
-  * element_at would too).
+  * A code outside its table (a corrupt codes row) does what the literal
+  * form's `element_at` does with an index past the end: under ANSI
+  * (`failOnError`) it fails, otherwise the SUM is null.
   *
   * Why a kernel: the literal form inlines m×(2 element_at over nested
   * array literals + a dot call + adds) per CANDIDATE PAIR — the inner
@@ -1154,7 +1156,7 @@ case class LogisticScoreExpression(weights: Expression,
   * shrinks the scoring projection's codegen.
   */
 final class AdcSumKernel(ce: Array[Array[Array[Double]]],
-    nc: Array[Array[Double]]) extends Serializable {
+    nc: Array[Array[Double]], failOnError: Boolean) extends Serializable {
 
   def apply(codes: Array[Long],
             qsubs: Array[org.apache.spark.sql.catalyst.util.ArrayData],
@@ -1162,6 +1164,11 @@ final class AdcSumKernel(ce: Array[Array[Array[Double]]],
     var acc = 0.0
     var s = 0
     while (s < codes.length) {
+      if (codes(s) < 0 || codes(s) >= ce(s).length) {
+        if (failOnError) throw new ArrayIndexOutOfBoundsException(
+          s"adc_sum_native: code ${codes(s)} of subspace $s is outside [0, ${ce(s).length})")
+        return null
+      }
       val c = codes(s).toInt
       val cev = ce(s)(c)
       val q = qsubs(s)
@@ -1186,10 +1193,12 @@ final class AdcSumKernel(ce: Array[Array[Array[Double]]],
   * nc: array<array<double>>), then the m corpus codes (bigint), the m
   * query sub-vectors (array<double>) and the m query squared norms
   * (double). NULL in any data child yields NULL, matching the literal
-  * form's propagation.
+  * form's propagation. `failOnError` is the session's ANSI flag at
+  * resolution, as `element_at` captures it.
   */
 case class AdcSumExpression(ceLit: Expression, ncLit: Expression,
-    data: Seq[Expression]) extends Expression {
+    data: Seq[Expression],
+    failOnError: Boolean = SQLConf.get.ansiEnabled) extends Expression {
 
   import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
   override def children: Seq[Expression] = ceLit +: ncLit +: data
@@ -1231,7 +1240,7 @@ case class AdcSumExpression(ceLit: Expression, ncLit: Expression,
       .map(_.asInstanceOf[ArrayData].toDoubleArray())
     require(ce.length == m && nc.length == m,
       s"lookup tables for ${ce.length}/${nc.length} subspaces, need $m")
-    new AdcSumKernel(ce, nc)
+    new AdcSumKernel(ce, nc, failOnError)
   }
 
   override def eval(input: InternalRow): Any = {

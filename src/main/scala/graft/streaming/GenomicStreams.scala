@@ -13,11 +13,11 @@ import org.apache.spark.sql.types._
   * Source shape: the `binaryFile` file-stream source — FILES are the
   * atomic micro-batch unit, so FASTQ's 4-line record frame can never
   * straddle a batch boundary (the property a line-level stream source
-  * would violate); each file parses with the batch whole-file rule
-  * (linesIterator, grouped 4, trailing partial dropped) and projects
-  * through [[Fastq.project]] — one code path, no drift. Per-file
-  * whole-bytes parsing carries the batch reader's wholetext size
-  * caveat; sequencer-run files at the 100 TB tier arrive as MANY
+  * would violate); each file parses whole (non-empty lines, grouped 4,
+  * trailing partial dropped — the batch reader's framing for a range
+  * that starts at offset 0) and projects through [[Fastq.project]], the
+  * header parse the batch reader mirrors. Each file is held whole in
+  * one task; sequencer-run files at the 100 TB tier arrive as MANY
   * files, which is exactly the unit this source parallelizes over.
   */
 object GenomicStreams {

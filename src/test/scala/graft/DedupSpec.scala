@@ -427,6 +427,59 @@ class DedupSpec extends AnyFunSuite {
     }, s"overlapping cell ranges across files: $ranges")
   }
 
+  test("ivfAdcIndexOptimize: a failed data-table write leaves the previous meta and search") {
+    import spark.implicits._
+    val dirs = Seq(
+      Array(1f, 0f, 0f, 0f, 1f, 0f, 0f, 0f),
+      Array(0f, 1f, 0f, 0f, 0f, 1f, 0f, 0f),
+      Array(0f, 0f, 1f, 0f, 0f, 0f, 1f, 0f))
+    val tmp = java.nio.file.Files.createTempDirectory("graft_ivffail").toString
+    (0 until 9).map(i => (i.toLong, dirs(i % 3).map(x => x * (1f + 0.01f * (i / 3))), "en"))
+      .toDF("id", "embedding", "lang").write.parquet(s"$tmp/vecs")
+    val vecs = spark.read.parquet(s"$tmp/vecs")
+    val idx = s"$tmp/idx"
+    Similarity.ivfAdcBuildIndex(vecs, idx, nCells = 3, m = 2, ksub = 4,
+      attrCols = Seq("lang"))
+    def search() = Similarity.ivfAdcSearchWith(vecs, idx, 1, nProbe = 1,
+      shortlist = 3).collect().map(_.toSeq).toSet
+    def metaSnapshots() = graft.operators.Layout.snapshotHistory(spark, s"$idx/meta").count()
+    val (before, metaBefore) = (search(), metaSnapshots())
+    // same corpus, so retraining reproduces centroids and codebooks; only
+    // the codes write reads the attr column, and it fails on one row
+    val poisoned = vecs.withColumn("lang",
+      when(col("id") === 4L, raise_error(lit("codes write fails"))).otherwise(col("lang")))
+    intercept[Exception](Similarity.ivfAdcIndexOptimize(poisoned, idx))
+    assert(metaSnapshots() === metaBefore)
+    assert(search() === before)
+  }
+
+  test("ADC distance: kernel and literal terms agree on an out-of-range code") {
+    // two subspaces of 4 two-dim centroids; row 1's subspace-1 code is 9
+    def books: Array[Similarity.Codebook] = Array.tabulate(2)(s =>
+      Array.tabulate(4) { c =>
+        val ce = Array(c + s.toDouble, 1.0 - c)
+        (c.toLong, ce, ce.map(x => x * x).sum)
+      })
+    def distances(useLitTerms: Boolean): Seq[Option[Double]] =
+      spark.range(2).select(
+        lit(3L).as("a0"),
+        when(col("id") === 1L, lit(9L)).otherwise(lit(1L)).as("a1"),
+        typedLit(Seq(0.5, -1.0)).as("qsub0"), typedLit(Seq(2.0, 0.25)).as("qsub1"),
+        lit(1.25).as("qnv0"), lit(4.0625).as("qnv1"))
+        .select(Similarity.adcDistance(books, m = 2, ksub = 4, dsub = 2, useLitTerms))
+        .collect().map(r => Option.when(!r.isNullAt(0))(r.getDouble(0))).toSeq
+    val saved = spark.conf.get("spark.sql.ansi.enabled")
+    try {
+      spark.conf.set("spark.sql.ansi.enabled", "false")
+      val kernel = distances(useLitTerms = false)
+      assert(kernel === distances(useLitTerms = true))
+      assert(kernel(0).isDefined && kernel(1).isEmpty)
+      spark.conf.set("spark.sql.ansi.enabled", "true")
+      intercept[Exception](distances(useLitTerms = false))
+      intercept[Exception](distances(useLitTerms = true))
+    } finally spark.conf.set("spark.sql.ansi.enabled", saved)
+  }
+
   test("pqAdcTopK finds each vector's planted near-twin from codes alone") {
     import spark.implicits._
     // three well-separated directions in dim 8, two vectors per

@@ -60,11 +60,30 @@ class IoSpec extends AnyFunSuite {
       df.select("key", "sequence", "quality").collect().toSet)
   }
 
-  test("Fastq.readSplittable agrees with Fastq.read") {
+  private def readSplit(dir: String, splitBytes: Long) =
+    spark.read.format("fastq").option("splitBytes", splitBytes.toString).load(dir)
+
+  test("Fastq.read agrees with a splitBytes read cutting mid-record") {
     val dir = writeFixture("fq3", fastqFixture)
     val a = Fastq.read(spark, dir).collect().toSet
-    val b = Fastq.readSplittable(spark, dir).collect().toSet
+    val b = readSplit(dir, 64L).collect().toSet
     assert(a == b)
+    assert(a.map(_.toSeq) == V1Parse.fastq(spark, fastqFixture).toSet)
+  }
+
+  test("Fastq.read frames a file from its first line, as the v1 parse does") {
+    // the first record's quality is short: a mid-file probe would skip
+    // it, but offset 0 is a record start by definition
+    val text = "@R1 1:N:0:A\nACGTAC\n+\nIII\n@R2 1:N:0:A\nACGT\n+\nIIII\n"
+    val dir = writeFixture("fq_first", text)
+    assert(Fastq.read(spark, dir).collect().map(_.toSeq).toSeq == V1Parse.fastq(spark, text))
+    assert(Fastq.read(spark, dir).count() == 2)
+  }
+
+  test("Fastq.read and Fasta.read fail on a path that does not exist") {
+    val missing = Files.createTempDirectory("graft_missing").toString + "/nope"
+    intercept[java.io.FileNotFoundException](Fastq.read(spark, missing).collect())
+    intercept[java.io.FileNotFoundException](Fasta.read(spark, missing).collect())
   }
 
   test("Fastq.read under ANSI mode: /1-/2 keys and bad ints read NULL header columns") {
@@ -102,7 +121,7 @@ class IoSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.ansi.enabled", saved)
   }
 
-  test("Fastq.readSplittable: tiny splits cutting mid-record, hostile quality lines") {
+  test("Fastq.read splitBytes: tiny splits cutting mid-record, hostile quality lines") {
     // Quality lines that START with '@' and '+' — the probe must never
     // take one for a record boundary; varied lengths force splits to cut
     // records at every position.
@@ -117,8 +136,9 @@ class IoSpec extends AnyFunSuite {
     val dir = writeFixture("fq_split", recs)
     val whole = Fastq.read(spark, dir)
       .select("key", "sequence", "quality").collect().map(_.toSeq).toSeq
+    assert(whole == V1Parse.fastq(spark, recs).map(_.take(3)))
     for (split <- Seq(256L, 1021L, 4096L)) {
-      val sp = Fastq.readSplittable(spark, dir, splitBytes = split)
+      val sp = readSplit(dir, split)
         .select("key", "sequence", "quality").collect().map(_.toSeq).toSeq
       assert(sp.size == whole.size, s"split=$split")
       assert(sp == whole, s"split=$split") // same records, same order

@@ -60,6 +60,22 @@ class PipelineSpec extends AnyFunSuite {
     assert(res.hmmHits.count() > 0)
   }
 
+  test("plan fence: mates read from FASTQ files keep filteredContigs' exchange counts") {
+    // contigs feed both the blastn pipe and the filter join, so the read
+    // lineage appears twice in the plan: equal scans let the second copy
+    // reuse the first copy's exchanges instead of shuffling again
+    val (r1, r2) = pairedReads
+    val dir = java.nio.file.Files.createTempDirectory("graft_fence").toString
+    graft.io.Fastq.write(r1.coalesce(1), s"$dir/r1")
+    graft.io.Fastq.write(r2.coalesce(1), s"$dir/r2")
+    val res = ViraPipeline.run(spark,
+      graft.io.Fastq.read(spark, s"$dir/r1"), graft.io.Fastq.read(spark, s"$dir/r2"),
+      ViraPipeline.Config(k = 4, minc = 0, maxc = 100, orfMinLen = 2))
+    val (shuffles, reused) = FinalPlan.exchanges(res.filteredContigs)
+    assert((shuffles, reused) == ((5, 2)),
+      res.filteredContigs.queryExecution.executedPlan.toString.take(4000))
+  }
+
   test("run assembles the minimum-key mate of each pair under any partitioning") {
     import spark.implicits._
     val rnd = new scala.util.Random(9)

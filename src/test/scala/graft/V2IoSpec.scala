@@ -1,17 +1,18 @@
 package graft
 
-import graft.io.{Fasta, Fastq}
 import graft.io.v2.{FastaSource, FastqSource}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
 
-/** DataSourceV2 FASTQ/FASTA readers: row parity with the v1 readers
-  * (incl. hostile split boundaries and gzip), and the point of the
-  * exercise — `SupportsPushDownRequiredColumns` actually pruning the
-  * scan's read schema.
+/** DataSourceV2 FASTQ/FASTA/BAM readers: row parity with the v1 parse
+  * rules ([[V1Parse]], incl. hostile split boundaries and gzip), the
+  * point of the exercise — `SupportsPushDownRequiredColumns` actually
+  * pruning the scan's read schema — and scan equality for exchange
+  * reuse.
   */
 class V2IoSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -39,7 +40,7 @@ class V2IoSpec extends AnyFunSuite {
 
   test("v2 FASTQ: full-schema rows equal v1 across split sizes") {
     val dir = writeFixture("fq", hostileFastq)
-    val v1 = Fastq.read(spark, dir).collect().map(_.toSeq).toSet
+    val v1 = V1Parse.fastq(spark, hostileFastq).toSet
     for (split <- Seq(256L, 1021L, 64L << 20)) {
       val v2 = readV2(classOf[FastqSource], dir, split).collect().map(_.toSeq).toSet
       assert(v2 == v1, s"split=$split")
@@ -51,7 +52,7 @@ class V2IoSpec extends AnyFunSuite {
     val out = new java.util.zip.GZIPOutputStream(
       Files.newOutputStream(dir.resolve("data.fastq.gz")))
     out.write(hostileFastq.getBytes("US-ASCII")); out.close()
-    val v1 = Fastq.read(spark, dir.toString).collect().map(_.toSeq).toSet
+    val v1 = V1Parse.fastq(spark, hostileFastq).toSet
     val v2 = readV2(classOf[FastqSource], dir.toString).collect().map(_.toSeq).toSet
     assert(v2 == v1)
     assert(v2.nonEmpty)
@@ -64,7 +65,7 @@ class V2IoSpec extends AnyFunSuite {
     val os = out.createOutputStream(
       Files.newOutputStream(dir.resolve("data.fastq.bz2")))
     os.write(hostileFastq.getBytes("US-ASCII")); os.close()
-    val v1 = Fastq.read(spark, dir.toString).collect().map(_.toSeq).toSet
+    val v1 = V1Parse.fastq(spark, hostileFastq).toSet
     val v2 = readV2(classOf[FastqSource], dir.toString).collect().map(_.toSeq).toSet
     assert(v2 == v1)
     assert(v2.nonEmpty)
@@ -94,7 +95,7 @@ class V2IoSpec extends AnyFunSuite {
 
   test("v2 FASTA: rows equal v1 (multi-line bodies, empty records, descriptions)") {
     val dir = writeFixture("fa", fastaFixture)
-    val v1 = Fasta.read(spark, dir).collect().map(_.toSeq).toSet
+    val v1 = V1Parse.fasta(fastaFixture).toSet
     for (split <- Seq(16L, 64L, 64L << 20)) {
       val v2 = readV2(classOf[FastaSource], dir, split).collect().map(_.toSeq).toSet
       assert(v2 == v1, s"split=$split")
@@ -126,7 +127,7 @@ class V2IoSpec extends AnyFunSuite {
       s">c$i d$i\n$body\n"
     }.mkString
     val dir = writeFixture("fa_big", recs)
-    val v1 = Fasta.read(spark, dir).collect().map(_.toSeq).toSet
+    val v1 = V1Parse.fasta(recs).toSet
     val v2 = readV2(classOf[FastaSource], dir, 512L).collect().map(_.toSeq).toSet
     assert(v2 == v1)
   }
@@ -193,5 +194,20 @@ class V2IoSpec extends AnyFunSuite {
     assert(scans.head.scan.readSchema().fieldNames.toSeq == Seq("readName", "start"),
       scans.head.scan.description())
     assert(df.count() == 3000)
+  }
+
+  test("equal scans: a self-join reuses the scan's exchange for FASTQ, FASTA and BAM") {
+    val inputs = Seq(
+      ("fastq", writeFixture("fq_reuse", hostileFastq), "key"),
+      ("fasta", writeFixture("fa_reuse", fastaFixture), "id"),
+      ("bam", bamFixture(None), "readName"))
+    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // keep both sides shuffled
+    try for ((format, path, key) <- inputs) {
+      val df = spark.read.format(format).load(path)
+      val joined = df.as("a").join(df.as("b"), col(s"a.$key") === col(s"b.$key"))
+      val (_, reused) = FinalPlan.exchanges(joined)
+      assert(reused == 1, s"$format:\n${joined.queryExecution.executedPlan}")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.io.{Fasta, Fastq}
+import graft.io.Fastq
 import graft.io.v2.{FastaSource, FastqSource}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -11,8 +11,8 @@ import java.nio.file.Files
 /** Property-based parity for the DataSourceV2 readers: ARBITRARY
   * well-formed corpora (random record counts, lengths, hostile quality
   * first-bytes, multi-line bodies, CRLF line endings) read through the
-  * v2 byte scanner must equal the v1 readers at every split size —
-  * including splits smaller than one record. Raw ScalaCheck generators
+  * v2 byte scanner must equal the v1 parse rules ([[V1Parse]]) at
+  * every split size — including splits smaller than one record. Raw ScalaCheck generators
   * driven by fixed seeds (the scalatest bridge isn't on the classpath;
   * fixed seeds keep failures reproducible anyway).
   */
@@ -51,7 +51,7 @@ class V2PropertySpec extends AnyFunSuite {
       val corpus = sample(fastqCorpusGen, 1000L + i)
       val split = splits(i % splits.length)
       val dir = write("fq", corpus)
-      val v1 = Fastq.read(spark, dir).collect().map(_.toSeq).toSet
+      val v1 = V1Parse.fastq(spark, corpus).toSet
       val v2 = spark.read.format(classOf[FastqSource].getName)
         .option("splitBytes", split.toString).load(dir)
         .collect().map(_.toSeq).toSet
@@ -81,7 +81,7 @@ class V2PropertySpec extends AnyFunSuite {
       val corpus = sample(fastaCorpusGen, 2000L + i)
       val split = splits(i % splits.length)
       val dir = write("fa", corpus)
-      val v1 = Fasta.read(spark, dir).collect().map(_.toSeq).toSet
+      val v1 = V1Parse.fasta(corpus).toSet
       val v2 = spark.read.format(classOf[FastaSource].getName)
         .option("splitBytes", split.toString).load(dir)
         .collect().map(_.toSeq).toSet
@@ -92,9 +92,8 @@ class V2PropertySpec extends AnyFunSuite {
   test("CRLF line endings parse identically in both readers") {
     val crlf = "@R1:7:FC:1:2:3:4 1:N:0:AC\r\nACGT\r\n+\r\nIIII\r\n"
     val dir = write("crlf", crlf)
-    val v1 = Fastq.read(spark, dir).collect().map(_.toSeq).toSet
-    val v2 = spark.read.format(classOf[FastqSource].getName).load(dir)
-      .collect().map(_.toSeq).toSet
+    val v1 = V1Parse.fastq(spark, crlf).toSet
+    val v2 = Fastq.read(spark, dir).collect().map(_.toSeq).toSet
     assert(v1 == v2)
     assert(v1.nonEmpty)
   }
