@@ -35,7 +35,10 @@ object Fasta {
   }
 
   /** T5: uniquify contig ids (RenameContigsUniq.java:52-62) — built-in
-    * uuid() appended exactly like the reference.
+    * uuid() appended exactly like the reference. `uuid()` draws fresh
+    * ids on every evaluation: a caller that reads the result more than
+    * once must pin it first, as `ViraPipeline.run` does, or two reads
+    * disagree on the ids.
     */
   def renameContigsUniq(df: DataFrame): DataFrame =
     df.withColumn("id", concat(col("id"), lit("_"), expr("uuid()")))

@@ -8,10 +8,15 @@ import org.apache.spark.sql.functions._
 
 /** The reference's 8-stage pipeline (scripts/virapipe.sh:38-63 — SURVEY.md
   * §3.2) collapsed into ONE SparkSession program: each stage is a Dataset
-  * transform, stage boundaries are Catalyst plan nodes instead of
-  * spark-submit + HDFS round-trips, and the external tools ride behind
-  * injectable [[graft.pipe.PipeStage]] commands (mock stand-ins by
-  * default; real BWA/MegaHit/blastn/hmmsearch in production).
+  * transform and the external tools ride behind injectable
+  * [[graft.pipe.PipeStage]] commands (mock stand-ins by default; real
+  * BWA/MegaHit/blastn/hmmsearch through the [[Config]] command fields).
+  *
+  * Each stage runs once per [[run]]: its output is pinned through
+  * [[Staging.pin]] where the reference writes its per-stage HDFS
+  * directory, and the next stage reads the pinned copy. So every tool
+  * spawns once per non-empty input partition, and the `uuid()` contig
+  * ids are drawn once, however often a caller reads the [[Result]].
   *
   * Scale: the only shuffles are the ones the semantics demand — the
   * interleave pairing join, the k-mer aggregation, and the blast-filter
@@ -28,8 +33,20 @@ object ViraPipeline {
       lowQualThreshold: Int = 0,
       maxLowQualCount: Int = Int.MaxValue,
       blastThreshold: Double = 70.0,
-      orfMinLen: Int = 2)
+      orfMinLen: Int = 2,
+      staging: Option[String] = None,
+      align: Option[Seq[String]] = None,
+      assemble: Option[Seq[String]] = None,
+      blastn: Option[Seq[String]] = None,
+      hmmsearch: Option[Seq[String]] = None)
 
+  /** The six stage outputs, each already computed and pinned: reading a
+    * frame reruns no stage. With `staging = None` the frames are
+    * `localCheckpoint` blocks, which live as long as their executor (a
+    * lost executor fails the job that reads them); with `staging =
+    * Some(dir)` they are snapshot tables under `dir/<stage>` that
+    * survive executors and restarts.
+    */
   final case class Result(
       aligned: DataFrame,
       normalized: DataFrame,
@@ -93,11 +110,15 @@ object ViraPipeline {
   }
 
   /** Run the full pipeline from paired FASTQ DataFrames (key, sequence,
-    * quality). Every stage's output is returned for inspection.
+    * quality). Eager: every stage runs, once, before this returns. Each
+    * stage output is pinned in dependency order (`cfg.staging` picks
+    * the tier, see [[Staging]]) and returned for inspection. The tool
+    * commands default to the mocks of [[graft.pipe.Pipes]].
     */
   def run(spark: SparkSession, r1: DataFrame, r2: DataFrame,
           cfg: Config = Config()): Result = {
-    import spark.implicits._
+    def pin(df: DataFrame, stage: String): DataFrame =
+      Staging.pin(df, cfg.staging, stage)
 
     // 1. DecompressInterleave → name-keyed mate pairing (T9/J3/F6).
     val interleaved = Pipeline.interleave(r1, r2)
@@ -110,55 +131,56 @@ object ViraPipeline {
 
     // 2. AlignInterleavedMulti: BWA pipe, keep flag-77/141 pairs (F5).
     val samLines = Pipes.alignBwa(spark,
-      toFastqLines(qualified.select("key", "sequence", "quality")))
-    val aligned = parseSam(spark, samLines)
+      toFastqLines(qualified.select("key", "sequence", "quality")), cfg.align)
+    val aligned = pin(parseSam(spark, samLines)
       .filter(col("flag").isin(77, 141))
       .select(
         concat(col("readName"),
           when(col("flag") === 77, "/1").otherwise("/2")).as("key"),
-        col("sequence"), col("quality"))
+        col("sequence"), col("quality")), "aligned")
 
     // 3. NormalizeRDD: k-mer coverage-band digital normalization.
-    val normalized = digitalNormalize(aligned, cfg.k, cfg.minc, cfg.maxc)
+    val normalized = pin(digitalNormalize(aligned, cfg.k, cfg.minc, cfg.maxc), "normalized")
 
     // 4. FastqGroupper is a write-side concern (partitionBy on sample) —
     //    see Pipeline.writeGroupedBySample; the dataflow continues fused.
 
     // 5. Assemble: MegaHit pipe over FASTA-ified reads, one read per
-    //    pair name — the minimum-key mate, so every evaluation of the
-    //    Result frames assembles the same reads whatever the row order.
+    //    pair name — the minimum-key mate, so the assembled reads do not
+    //    depend on row order.
     val readFasta = toFastaLines(normalized
       .groupBy(regexp_replace(col("key"), "[/ ].*$", "").as("id"))
       .agg(min_by(col("sequence"), col("key")).as("sequence")))
-    val contigLines = Pipes.assembleMegahit(spark, readFasta)
+    val contigLines = Pipes.assembleMegahit(spark, readFasta, cfg.assemble)
     val contigs0 = fastaLinesToContigs(spark, contigLines)
 
-    // 6. RenameContigsUniq (T5).
-    val contigs = Fasta.renameContigsUniq(contigs0)
+    // 6. RenameContigsUniq (T5), pinned so the blastn input and the
+    //    filter join below see the same uuid() suffixes.
+    val contigs = pin(Fasta.renameContigsUniq(contigs0), "contigs")
 
     // 7. BlastNFilter: blastn pipe → J1 left-outer join + F10 threshold.
-    val blastTsv = Pipes.blastn(spark, toFastaLines(contigs))
+    val blastTsv = Pipes.blastn(spark, toFastaLines(contigs), cfg.blastn)
     val f = split(col("value"), "\t")
     val hits = blastTsv.toDF("value").select(
       f.getItem(0).as("qseqid"),
       f.getItem(2).cast("double").as("pident"),
       f.getItem(6).cast("long").as("qstart"),
       f.getItem(7).cast("long").as("qend"))
-    val filteredContigs = Pipeline.blastThresholdFilter(
-      contigs, hits, cfg.blastThreshold)
+    val filteredContigs = pin(Pipeline.blastThresholdFilter(
+      contigs, hits, cfg.blastThreshold), "filtered_contigs")
 
     // 8. Protein/ORF + HMMSearch pipe.
     val orfUdf = udf((id: String, s: String, minLen: Int) =>
       Dna.sixFrameOrfs(id, s, minLen))
-    val orfs = filteredContigs
+    val orfs = pin(filteredContigs
       .select(explode(orfUdf(col("id"), col("sequence"), lit(cfg.orfMinLen))).as("o"))
       .select(col("o.contigId").as("id"), col("o.strand"), col("o.frame"),
-        col("o.protein").as("sequence"))
+        col("o.protein").as("sequence")), "orfs")
     val hmmLines = Pipes.hmmsearch(spark, toFastaLines(
       orfs.select(concat_ws("_", col("id"), col("strand"), col("frame")).as("id"),
-        col("sequence")).dropDuplicates("id")))
-    val hmmHits = hmmLines.toDF("value")
-      .select(split(col("value"), " ").getItem(0).as("orf_id"))
+        col("sequence")).dropDuplicates("id")), cfg.hmmsearch)
+    val hmmHits = pin(hmmLines.toDF("value")
+      .select(split(col("value"), " ").getItem(0).as("orf_id")), "hmm_hits")
 
     Result(aligned, normalized, contigs, filteredContigs, orfs, hmmHits)
   }

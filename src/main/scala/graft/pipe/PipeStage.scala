@@ -1,5 +1,6 @@
 package graft.pipe
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -53,7 +54,10 @@ object PipeStage {
 
   /** Executor-side core of the pipe operator: fork `command`, feed
     * `records` line-by-line from a writer thread, stream stdout back,
-    * drain stderr, and fail (never truncate) on a non-zero exit. Shared
+    * drain stderr, and fail (never truncate) on a non-zero exit. A
+    * child still alive when its task completes (a consumer stopped
+    * reading early, or the task failed) is killed with its descendants,
+    * so no tool outlives its task. Shared
     * by the per-PARTITION path ([[PipeStage.run]]) and the per-GROUP
     * path ([[Pipes.assembleMegahitGrouped]] — one process per
     * `groupByKey` group, the reference's per-sample assembly shape).
@@ -66,6 +70,14 @@ object PipeStage {
       extraEnv.foreach { case (k, v) => pb.environment().put(k, v) }
       pb.redirectErrorStream(false)
       val proc = pb.start()
+      Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
+        if (proc.isAlive) {
+          // descendants first: once the child dies they are re-parented
+          // and no longer reachable from it
+          proc.descendants().forEach(d => d.destroyForcibly())
+          proc.destroyForcibly()
+        }
+      })
 
       // Kill switch for the writer: once the child has exited there is
       // no point feeding more stdin, and the writer must stop touching
@@ -149,6 +161,25 @@ object PipeStage {
   */
 object Pipes {
 
+  /** The default commands: deterministic awk stand-ins for the four
+    * tools, each honouring its tool's line contract (see the wrappers).
+    */
+  private[graft] val AlignMock: Seq[String] = Seq("awk",
+    "NR % 4 == 1 { name = substr($1, 2) } " +
+      "NR % 4 == 2 { seq = $0 } " +
+      "NR % 4 == 0 { flag = (name ~ /\\/1$/) ? 77 : 141; sub(/\\/[12]$/, \"\", name); " +
+      "print name \"\\t\" flag \"\\t*\\t0\\t0\\t*\\t*\\t0\\t0\\t\" seq \"\\t\" $0 }")
+  private[graft] val AssembleMock: Seq[String] = Seq("awk",
+    """/^>/ { n += 1; print ">contig_" n; next } { print }""")
+  private[graft] val BlastnMock: Seq[String] = Seq("awk",
+    "/^>/ { id = substr($1, 2); next } " +
+      "{ print id \"\\tSUBJ\\t\" (50 + length($0) % 50) \".0\\t\" length($0) " +
+      "\"\\t0\\t0\\t1\\t\" length($0) \"\\t1\\t\" length($0) \"\\t0.001\\t100.0\\t\" " +
+      "(length($0) % 7) }")
+  private[graft] val HmmsearchMock: Seq[String] = Seq("awk",
+    "/^>/ { id = substr($1, 2); next } " +
+      "{ print id \" - vFam_mock - 1e-5 \" length($0) \" 0.0\" }")
+
   /** Typed argv builder for REAL blastn, reproducing the reference's
     * command line and defaults verbatim (BlastN.java:69-82 builds
     * `-word_size 11 -gapopen 0 -gapextend 2 -penalty -1 -reward 1
@@ -208,12 +239,7 @@ object Pipes {
     */
   def alignBwa(spark: SparkSession, interleavedFastq: Dataset[String],
                cmd: Option[Seq[String]] = None): Dataset[String] = {
-    val mock = Seq("awk",
-      "NR % 4 == 1 { name = substr($1, 2) } " +
-        "NR % 4 == 2 { seq = $0 } " +
-        "NR % 4 == 0 { flag = (name ~ /\\/1$/) ? 77 : 141; sub(/\\/[12]$/, \"\", name); " +
-        "print name \"\\t\" flag \"\\t*\\t0\\t0\\t*\\t*\\t0\\t0\\t\" seq \"\\t\" $0 }")
-    PipeStage(cmd.getOrElse(mock)).run(interleavedFastq)
+    PipeStage(cmd.getOrElse(AlignMock)).run(interleavedFastq)
   }
 
   /** P2 `assemble_megahit`: FASTA reads in → contig FASTA out
@@ -222,9 +248,7 @@ object Pipes {
     */
   def assembleMegahit(spark: SparkSession, fasta: Dataset[String],
                       cmd: Option[Seq[String]] = None): Dataset[String] = {
-    val mock = Seq("awk",
-      """/^>/ { n += 1; print ">contig_" n; next } { print }""")
-    PipeStage(cmd.getOrElse(mock)).run(fasta)
+    PipeStage(cmd.getOrElse(AssembleMock)).run(fasta)
   }
 
   /** P2 at the reference's actual granularity: one assembler process
@@ -249,9 +273,7 @@ object Pipes {
                              cmd: Option[Seq[String]] = None): DataFrame = {
     val spark = reads.sparkSession
     import spark.implicits._
-    val mock = Seq("awk",
-      """/^>/ { n += 1; print ">contig_" n; next } { print }""")
-    val command = cmd.getOrElse(mock)
+    val command = cmd.getOrElse(AssembleMock)
     reads
       .select(col(sampleCol).cast("string"), col(idCol).cast("string"),
         col(seqCol).cast("string"))
@@ -278,12 +300,7 @@ object Pipes {
     */
   def blastn(spark: SparkSession, fasta: Dataset[String],
              cmd: Option[Seq[String]] = None): Dataset[String] = {
-    val mock = Seq("awk",
-      "/^>/ { id = substr($1, 2); next } " +
-        "{ print id \"\\tSUBJ\\t\" (50 + length($0) % 50) \".0\\t\" length($0) " +
-        "\"\\t0\\t0\\t1\\t\" length($0) \"\\t1\\t\" length($0) \"\\t0.001\\t100.0\\t\" " +
-        "(length($0) % 7) }")
-    PipeStage(cmd.getOrElse(mock)).run(fasta)
+    PipeStage(cmd.getOrElse(BlastnMock)).run(fasta)
   }
 
   /** P4 `hmmsearch`: protein FASTA in → tblout-style lines out
@@ -291,9 +308,6 @@ object Pipes {
     */
   def hmmsearch(spark: SparkSession, proteinFasta: Dataset[String],
                 cmd: Option[Seq[String]] = None): Dataset[String] = {
-    val mock = Seq("awk",
-      "/^>/ { id = substr($1, 2); next } " +
-        "{ print id \" - vFam_mock - 1e-5 \" length($0) \" 0.0\" }")
-    PipeStage(cmd.getOrElse(mock)).run(proteinFasta)
+    PipeStage(cmd.getOrElse(HmmsearchMock)).run(proteinFasta)
   }
 }

@@ -1,7 +1,11 @@
 package graft
 
 import graft.operators.ViraPipeline
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.MapPartitionsExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end mini pipeline (SURVEY.md §5 item 4): paired FASTQ →
@@ -17,6 +21,16 @@ class PipelineSpec extends AnyFunSuite {
   // and full-length overlap, so contigs pass the threshold filter.
   private val seqA = "ATGAAACCCTAAGGGTTTCCCGGA"
   private val seqB = "ATGTTTAAACCCGGGTAACCCGGA"
+
+  /** `n` pairs of random 24-mers, keyed p00/1, p00/2, ... */
+  private def randomPairs(n: Int): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(9)
+    def dna() = Seq.fill(24)("ACGT"(rnd.nextInt(4))).mkString
+    val pairs = (0 until n).map(i => (f"p$i%02d", dna(), dna()))
+    (pairs.map(p => (p._1 + "/1", p._2, "I" * 24)).toDF("key", "sequence", "quality"),
+      pairs.map(p => (p._1 + "/2", p._3, "I" * 24)).toDF("key", "sequence", "quality"))
+  }
 
   private def pairedReads = {
     import spark.implicits._
@@ -60,10 +74,30 @@ class PipelineSpec extends AnyFunSuite {
     assert(res.hmmHits.count() > 0)
   }
 
-  test("plan fence: mates read from FASTQ files keep filteredContigs' exchange counts") {
-    // contigs feed both the blastn pipe and the filter join, so the read
-    // lineage appears twice in the plan: equal scans let the second copy
-    // reuse the first copy's exchanges instead of shuffling again
+  private val stages =
+    Seq("aligned", "normalized", "contigs", "filtered_contigs", "orfs", "hmm_hits")
+
+  private def frames(res: ViraPipeline.Result): Seq[DataFrame] = Seq(res.aligned,
+    res.normalized, res.contigs, res.filteredContigs, res.orfs, res.hmmHits)
+
+  private def contigSeqs(res: ViraPipeline.Result): Seq[String] =
+    res.contigs.select("sequence").collect().map(_.getString(0)).sorted.toSeq
+
+  /** Runs `body` with the given session confs, restoring them after. */
+  private def withConf[T](overrides: Map[String, String])(body: => T): T = {
+    val saved = overrides.keys.map(k => k -> spark.conf.get(k))
+    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  /** Shuffled joins over 7 uncoalesced partitions, so stage inputs span
+    * several partitions, some of them empty.
+    */
+  private val spreadConf = Map("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+    "spark.sql.shuffle.partitions" -> "7")
+
+  test("plan fence: every Result frame reads its pinned stage, with no shuffle and no pipe") {
     val (r1, r2) = pairedReads
     val dir = java.nio.file.Files.createTempDirectory("graft_fence").toString
     graft.io.Fastq.write(r1.coalesce(1), s"$dir/r1")
@@ -71,36 +105,82 @@ class PipelineSpec extends AnyFunSuite {
     val res = ViraPipeline.run(spark,
       graft.io.Fastq.read(spark, s"$dir/r1"), graft.io.Fastq.read(spark, s"$dir/r2"),
       ViraPipeline.Config(k = 4, minc = 0, maxc = 100, orfMinLen = 2))
-    val (shuffles, reused) = FinalPlan.exchanges(res.filteredContigs)
-    assert((shuffles, reused) == ((5, 2)),
-      res.filteredContigs.queryExecution.executedPlan.toString.take(4000))
+    stages.zip(frames(res)).foreach { case (stage, df) =>
+      val rerun = FinalPlan.nodes(df).filter {
+        case _: ShuffleExchangeExec | _: MapPartitionsExec => true
+        case _ => false
+      }
+      assert(rerun.isEmpty, s"$stage:\n${df.queryExecution.executedPlan}")
+    }
+  }
+
+  test("staging = Some(dir) commits one snapshot per stage and keeps the contigs") {
+    val (r1, r2) = pairedReads
+    val cfg = ViraPipeline.Config(k = 4, minc = 0, maxc = 100, orfMinLen = 2)
+    val dir = java.nio.file.Files.createTempDirectory("graft_vp_staging").toFile
+    val staged = ViraPipeline.run(spark, r1, r2, cfg.copy(staging = Some(dir.toString)))
+    val manifests = dir.listFiles().map(d =>
+      d.getName -> d.listFiles().count(_.getName.startsWith("manifest-"))).toMap
+    assert(manifests == stages.map(_ -> 1).toMap)
+    assert(contigSeqs(staged) == contigSeqs(ViraPipeline.run(spark, r1, r2, cfg)))
+    assert(contigSeqs(staged).nonEmpty)
+  }
+
+  test("run spawns each tool once per non-empty input partition, however often the Result is read") {
+    import graft.pipe.Pipes
+    val log = java.nio.file.Files.createTempFile("graft_spawns", ".log")
+    // the mock behind a shell that logs one line per spawn
+    def logged(tool: String, mock: Seq[String]) =
+      Some(Seq("sh", "-c", s"echo $tool >> '$log'; exec \"$$@\"", "sh") ++ mock)
+    val (r1, r2) = randomPairs(12)
+    val res = withConf(spreadConf) {
+      ViraPipeline.run(spark, r1.repartition(3), r2.repartition(2),
+        ViraPipeline.Config(k = 8, minc = 0, maxc = 1000, orfMinLen = 2,
+          align = logged("align", Pipes.AlignMock),
+          assemble = logged("assemble", Pipes.AssembleMock),
+          blastn = logged("blastn", Pipes.BlastnMock),
+          hmmsearch = logged("hmmsearch", Pipes.HmmsearchMock)))
+    }
+    for (_ <- 1 to 2; df <- frames(res)) df.collect()
+    val spawns = java.nio.file.Files.readAllLines(log).asScala
+      .groupBy(identity).map { case (tool, ls) => tool -> ls.size }
+    // each stage below is narrow over its tool's output, and every mock
+    // emits a line per input record: its non-empty partitions are the
+    // tool's non-empty input partitions
+    def nonEmpty(df: DataFrame): Int =
+      df.rdd.mapPartitions(it => Iterator(if (it.hasNext) 1 else 0)).sum().toInt
+    assert(spawns == Map("align" -> nonEmpty(res.aligned),
+      "assemble" -> nonEmpty(res.contigs), "blastn" -> nonEmpty(res.contigs),
+      "hmmsearch" -> nonEmpty(res.hmmHits)))
+    assert(nonEmpty(res.contigs) > 1, "the fixture must spread the contigs")
+  }
+
+  test("contig ids agree across the Result frames, each read on its own") {
+    val (r1, r2) = randomPairs(12)
+    val res = ViraPipeline.run(spark, r1, r2,
+      ViraPipeline.Config(k = 8, minc = 0, maxc = 1000, orfMinLen = 2))
+    def ids(df: DataFrame): Set[String] =
+      df.select("id").collect().map(_.getString(0)).toSet
+    // read under other shuffle settings, a recomputed lineage would
+    // partition the contigs differently and uuid() would draw other ids
+    val contigs = ids(res.contigs)
+    val (kept, orfIds) = withConf(spreadConf)((ids(res.filteredContigs), ids(res.orfs)))
+    assert(kept.nonEmpty && orfIds.nonEmpty)
+    assert(kept.subsetOf(contigs), s"kept $kept, contigs $contigs")
+    assert(orfIds.subsetOf(kept), s"orfs $orfIds, kept $kept")
   }
 
   test("run assembles the minimum-key mate of each pair under any partitioning") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(9)
-    def dna() = Seq.fill(24)("ACGT"(rnd.nextInt(4))).mkString
-    val pairs = (0 until 12).map(i => (f"p$i%02d", dna(), dna()))
-    val r1 = pairs.map(p => (p._1 + "/1", p._2, "I" * 24)).toDF("key", "sequence", "quality")
-    val r2 = pairs.map(p => (p._1 + "/2", p._3, "I" * 24)).toDF("key", "sequence", "quality")
+    val (r1, r2) = randomPairs(12)
     val cfg = ViraPipeline.Config(k = 8, minc = 0, maxc = 1000, orfMinLen = 2)
-    def contigSeqs(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
-      ViraPipeline.run(spark, a, b, cfg).contigs.select("sequence")
-        .collect().map(_.getString(0)).sorted.toSeq
-    val plain = contigSeqs(r1, r2)
+    val plain = contigSeqs(ViraPipeline.run(spark, r1, r2, cfg))
     // mates reach the assembler's aggregate through a shuffled join and
     // in a different order: the kept read must not change
-    val overrides = Map("spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> "7")
-    val saved = overrides.keys.map(k => k -> spark.conf.get(k))
-    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-    val shuffled = try contigSeqs(
-        r1.repartition(3).sortWithinPartitions(col("key").desc),
-        r2.repartition(2).sortWithinPartitions(col("key").desc))
-      finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+    val shuffled = withConf(spreadConf)(contigSeqs(ViraPipeline.run(spark,
+      r1.repartition(3).sortWithinPartitions(col("key").desc),
+      r2.repartition(2).sortWithinPartitions(col("key").desc), cfg)))
     assert(plain == shuffled)
-    assert(plain == pairs.map(_._2).sorted)
+    assert(plain == r1.select("sequence").collect().map(_.getString(0)).sorted.toSeq)
   }
 
   test("digitalNormalize drops reads whose k-mers are all outside the band") {
@@ -126,6 +206,20 @@ class PipelineSpec extends AnyFunSuite {
     val ds = spark.range(n).map(i => s"line_$i").repartition(8)
     val out = graft.pipe.PipeStage(Seq("cat")).run(ds)
     assert(out.count() == n)
+  }
+
+  test("pipe stage kills a tool whose consumer stops reading early") {
+    import spark.implicits._
+    def live(): Set[Long] = ProcessHandle.current().descendants()
+      .filter(_.isAlive).map[Long](_.pid()).iterator().asScala.toSet
+    val before = live()
+    val ds = spark.range(10).map(i => s"line_$i").repartition(1)
+    // `yes` never exits on its own: only the task-completion hook ends it
+    val out = graft.pipe.PipeStage(Seq("sh", "-c", "yes")).run(ds).limit(1).collect()
+    assert(out.toSeq == Seq("y"))
+    val deadline = System.nanoTime() + 5000000000L
+    while ((live() -- before).nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    assert((live() -- before).isEmpty, "tool processes outlived their task")
   }
 
   test("pipe stage drains stderr and fails the task on non-zero exit") {

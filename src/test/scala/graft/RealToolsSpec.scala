@@ -124,4 +124,50 @@ class RealToolsSpec extends AnyFunSuite {
     assert(aligned.exists(f => f(2) == "ref1"),
       "at least one mate should map to the reference contig")
   }
+
+  test("run: the eight-stage pipeline drives all four real tools through Config") {
+    need("bwa", "megahit", "blastn", "makeblastdb", "hmmsearch", "hmmbuild")
+    import spark.implicits._
+    val dir = tmpDir("run")
+    val rnd = new scala.util.Random(11)
+    def dna(n: Int) = Seq.fill(n)("ACGT"(rnd.nextInt(4))).mkString
+    val target = dna(200)
+    // bwa indexes an unrelated decoy, so every pair stays unmapped
+    // (flags 77/141) — the reads run() keeps for assembly
+    val decoy = write(dir, "decoy.fa", Seq(">decoy", dna(500)))
+    sh(dir, "bwa", "index", decoy)
+    write(dir, "target.fa", Seq(">target", target))
+    sh(dir, "makeblastdb", "-in", "target.fa", "-dbtype", "nucl", "-out", "targetdb")
+    val protein = "MKTAYIAKQRQISFVKSHFSRQLEERLGLIEVQAPILSRVGDGTQDNLSGAEKAVQ"
+    write(dir, "seed.fa", Seq(">seed1", protein))
+    sh(dir, "hmmbuild", "--amino", "profile.hmm", "seed.fa")
+
+    // 80 bp first mates tiling the target: run() assembles those
+    val offsets = 0 to 120 by 20
+    val qual = "I" * 80
+    val r1 = offsets.map(o => (f"p$o%03d/1", target.slice(o, o + 80), qual))
+      .toDF("key", "sequence", "quality")
+    val r2 = offsets.map(o => (f"p$o%03d/2",
+      graft.functions.Dna.reverseComplement(target.slice(o, o + 80)), qual))
+      .toDF("key", "sequence", "quality")
+    // megahit writes its contigs to a fresh output directory; the shell
+    // sends its log to stderr and the contig FASTA to stdout
+    val megahit = Pipes.megahitCmd(outDir = "$d", single = true).mkString(" ")
+    val res = graft.operators.ViraPipeline.run(spark, r1, r2,
+      graft.operators.ViraPipeline.Config(
+        align = Some(Seq("bwa", "mem", "-p", decoy, "-")),
+        assemble = Some(Seq("sh", "-c",
+          s"""d="$$(mktemp -d)/mh"; $megahit --min-contig-len 100 >&2 && cat "$$d/final.contigs.fa"""")),
+        blastn = Some(Pipes.blastnCmd(db = dir.resolve("targetdb").toString)),
+        hmmsearch = Some(Pipes.hmmsearchCmd(db = dir.resolve("profile.hmm").toString))))
+
+    assert(res.aligned.count() == 2 * offsets.size)
+    val contigs = res.contigs.select("id").as[String].collect().toSet
+    val kept = res.filteredContigs.select("id").as[String].collect().toSet
+    assert(contigs.nonEmpty, "megahit should assemble the tiled mates")
+    // the contigs are target subsequences: blastn self-hits keep them
+    assert(kept.nonEmpty && kept.subsetOf(contigs), s"kept $kept, contigs $contigs")
+    assert(res.orfs.select("id").as[String].collect().toSet.subsetOf(kept))
+    res.hmmHits.collect() // tblout rows; the seed profile need not hit
+  }
 }
