@@ -13,8 +13,11 @@ object FinalPlan extends AdaptiveSparkPlanHelper {
   /** Runs `df` once, then returns every node of its final plan. */
   def nodes(df: DataFrame): Seq[SparkPlan] = {
     df.collect()
-    collect(df.queryExecution.executedPlan) { case p => p }
+    collectAll(df.queryExecution.executedPlan)
   }
+
+  /** Every node of an already executed plan. */
+  def collectAll(plan: SparkPlan): Seq[SparkPlan] = collect(plan) { case p => p }
 
   /** Runs `df` once, then counts (shuffle exchanges, reused exchanges). */
   def exchanges(df: DataFrame): (Int, Int) = {

@@ -2,11 +2,15 @@ package graft
 
 import graft.operators.ViraPipeline
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.MapPartitionsExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.{MapPartitionsExec, QueryExecution}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import scala.jdk.CollectionConverters._
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 /** End-to-end mini pipeline (SURVEY.md §5 item 4): paired FASTQ →
   * interleave → mock-BWA pipe → flag filter → digital normalize → mock
@@ -96,6 +100,39 @@ class PipelineSpec extends AnyFunSuite {
   private val spreadConf = Map("spark.sql.autoBroadcastJoinThreshold" -> "-1",
     "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
     "spark.sql.shuffle.partitions" -> "7")
+
+  test("plan fence: mates read from FASTQ files keep filteredContigs' exchange counts") {
+    // contigs feed both the blastn pipe and the filter join; pinned, the
+    // stage that computes filteredContigs reads the pinned contigs twice
+    // and the FASTQ scans never, so the only shuffle left is the distinct
+    // (the blast hits are broadcast into the join)
+    val (r1, r2) = pairedReads
+    val dir = java.nio.file.Files.createTempDirectory("graft_fence").toString
+    graft.io.Fastq.write(r1.coalesce(1), s"$dir/r1")
+    graft.io.Fastq.write(r2.coalesce(1), s"$dir/r2")
+    val pinned = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") pinned.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val res = try {
+      val res = ViraPipeline.run(spark,
+        graft.io.Fastq.read(spark, s"$dir/r1"), graft.io.Fastq.read(spark, s"$dir/r2"),
+        ViraPipeline.Config(k = 4, minc = 0, maxc = 100, orfMinLen = 2))
+      eventually(timeout(Span(30, Seconds))) { assert(pinned.size == stages.size) }
+      res
+    } finally spark.listenerManager.unregister(listener)
+    // the pinning jobs run in stage order
+    val stage = pinned.asScala.toSeq(stages.indexOf("filtered_contigs")).executedPlan
+    val nodes = FinalPlan.collectAll(stage)
+    assert(!nodes.exists(_.isInstanceOf[BatchScanExec]), stage.toString.take(4000))
+    assert((nodes.count(_.isInstanceOf[ShuffleExchangeExec]),
+      nodes.count(_.isInstanceOf[ReusedExchangeExec])) == ((1, 0)), stage.toString.take(4000))
+    assert(FinalPlan.exchanges(res.filteredContigs) == ((0, 0)),
+      res.filteredContigs.queryExecution.executedPlan.toString.take(4000))
+  }
 
   test("plan fence: every Result frame reads its pinned stage, with no shuffle and no pipe") {
     val (r1, r2) = pairedReads
