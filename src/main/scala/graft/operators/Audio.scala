@@ -167,17 +167,13 @@ object Audio {
     * pass; payloads are built and stay on the executors.
     */
   def asAudio(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    Parallelism.ensure(docs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val s = samplesOf(text)
-          AudioMedia(id, Wav.encodePcm16(SampleRate, s), "audio/wav",
-            SampleRate, s.length)
-        }
+    Multimodal.perDocument(Parallelism.ensure(docs)) { rows =>
+      rows.map { case (id, text) =>
+        val s = samplesOf(text)
+        AudioMedia(id, Wav.encodePcm16(SampleRate, s), "audio/wav",
+          SampleRate, s.length)
       }
+    }
       .select(col("doc_id"), col("payload"),
         struct(col("format"), col("sample_rate"), col("n_samples")).as("meta"))
   }
@@ -993,43 +989,39 @@ object Audio {
     * replays from the rule. One narrow mapPartitions pass.
     */
   def flacRoundtrip(docs: DataFrame, blockSize: Int = 256): Dataset[FlacRoundtrip] = {
-    import docs.sparkSession.implicits._
-    Parallelism.ensure(docs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, text) =>
-          val base = samplesOf(text)
-          // tail value stays on the byte lattice (<=127·257−16384), so
-          // the oracle's integer arithmetic never sees a 16-bit wrap
-          val tail: Array[Short] =
-            if (id % 5 == 0)
-              Array.fill(300)(((id % 120) * 257 - 16384).toShort)
-            else Array.emptyShortArray
-          val s = base ++ tail
-          // an empty-text doc with no tail has nothing to encode — emit
-          // no row, exactly as the oracle's length(text) > 0 gate does
-          if (s.isEmpty) None else Some {
-          val payload = Flac.encode(SampleRate, s, blockSize,
-            forceVerbatim = id % 7 == 0)
-          val dec = Flac.decode(payload)
-          require(java.util.Arrays.equals(dec.samples, s),
-            s"doc $id: FLAC round trip not bit-exact")
-          var sum = 0L
-          var sumSq = 0L
-          var peak = 0
-          var i = 0
-          while (i < dec.samples.length) {
-            val v = dec.samples(i).toInt
-            sum += v
-            sumSq += v.toLong * v
-            if (math.abs(v) > peak) peak = math.abs(v)
-            i += 1
-          }
-          FlacRoundtrip(id, dec.samples.length, dec.nFrames, sum, sumSq, peak)
-          }
+    Multimodal.perDocument(Parallelism.ensure(docs)) { rows =>
+      rows.flatMap { case (id, text) =>
+        val base = samplesOf(text)
+        // tail value stays on the byte lattice (<=127·257−16384), so
+        // the oracle's integer arithmetic never sees a 16-bit wrap
+        val tail: Array[Short] =
+          if (id % 5 == 0)
+            Array.fill(300)(((id % 120) * 257 - 16384).toShort)
+          else Array.emptyShortArray
+        val s = base ++ tail
+        // an empty-text doc with no tail has nothing to encode — emit
+        // no row, exactly as the oracle's length(text) > 0 gate does
+        if (s.isEmpty) None else Some {
+        val payload = Flac.encode(SampleRate, s, blockSize,
+          forceVerbatim = id % 7 == 0)
+        val dec = Flac.decode(payload)
+        require(java.util.Arrays.equals(dec.samples, s),
+          s"doc $id: FLAC round trip not bit-exact")
+        var sum = 0L
+        var sumSq = 0L
+        var peak = 0
+        var i = 0
+        while (i < dec.samples.length) {
+          val v = dec.samples(i).toInt
+          sum += v
+          sumSq += v.toLong * v
+          if (math.abs(v) > peak) peak = math.abs(v)
+          i += 1
+        }
+        FlacRoundtrip(id, dec.samples.length, dec.nFrames, sum, sumSq, peak)
         }
       }
+    }
   }
 
   object G711 {
@@ -1458,24 +1450,20 @@ object Audio {
     * that a channel-swap or de-interleave bug changes the mix.
     */
   def asStereoAudio(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    Parallelism.ensure(docs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val l = samplesOf(text)
-          val inter = new Array[Short](l.length * 2)
-          var i = 0
-          while (i < l.length) {
-            inter(2 * i) = l(i)
-            inter(2 * i + 1) = l(math.min(i + 1, l.length - 1))
-            i += 1
-          }
-          AudioMedia(id, Wav.encodePcm16N(SampleRate, 2, inter),
-            "audio/wav", SampleRate, l.length)
+    Multimodal.perDocument(Parallelism.ensure(docs)) { rows =>
+      rows.map { case (id, text) =>
+        val l = samplesOf(text)
+        val inter = new Array[Short](l.length * 2)
+        var i = 0
+        while (i < l.length) {
+          inter(2 * i) = l(i)
+          inter(2 * i + 1) = l(math.min(i + 1, l.length - 1))
+          i += 1
         }
+        AudioMedia(id, Wav.encodePcm16N(SampleRate, 2, inter),
+          "audio/wav", SampleRate, l.length)
       }
+    }
       .select(col("doc_id"), col("payload"),
         struct(col("format"), col("sample_rate"), col("n_samples")).as("meta"))
   }

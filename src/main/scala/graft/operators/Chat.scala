@@ -52,22 +52,17 @@ object Chat {
     * never document text.
     */
   def asChatDocs(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    Parallelism.ensure(docs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val msgs = text.split(" ", -1).grouped(WordsPerMsg).zipWithIndex
-            .map { case (ws, i) =>
-              (if (i % 2 == 0) "user" else "assistant", ws.mkString(" "))
-            }.toSeq
-          val sys =
-            if (id % 5 == 0) Some(s"You are assistant #$id.") else None
-          (id, renderChatML(sys, msgs))
-        }
+    Multimodal.perDocument(Parallelism.ensure(docs)) { rows =>
+      rows.map { case (id, text) =>
+        val msgs = text.split(" ", -1).grouped(WordsPerMsg).zipWithIndex
+          .map { case (ws, i) =>
+            (if (i % 2 == 0) "user" else "assistant", ws.mkString(" "))
+          }.toSeq
+        val sys =
+          if (id % 5 == 0) Some(s"You are assistant #$id.") else None
+        (id, renderChatML(sys, msgs))
       }
-      .toDF("doc_id", "chat")
+    }.toDF("doc_id", "chat")
   }
 
   // ------------------------------------------------------------------

@@ -1446,42 +1446,38 @@ object Corpus {
     * (whitespace split, empties dropped).
     */
   def repetitionSignals(docs: DataFrame): org.apache.spark.sql.Dataset[RepetitionSignals] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val lines = text.split("\n", -1)
-          val lineCounts = new java.util.HashMap[String, Int]()
-          lines.foreach(l => lineCounts.merge(l, 1, (a, b) => a + b))
-          var dupLines = 0L; var totalLineChars = 0L; var dupLineChars = 0L
-          lineCounts.forEach { (l, c) =>
-            dupLines += c - 1
-            totalLineChars += c.toLong * l.length
-            dupLineChars += (c - 1).toLong * l.length
-          }
-          val toks = text.trim.split("\\s+").filter(_.nonEmpty)
-          val bigramCounts = new java.util.HashMap[String, Int]()
-          var i = 0
-          while (i + 1 < toks.length) {
-            bigramCounts.merge(toks(i) + " " + toks(i + 1), 1, (a, b) => a + b)
-            i += 1
-          }
-          var topBigram = 0L
-          bigramCounts.forEach { (_, c) => if (c > topBigram) topBigram = c.toLong }
-          var maxRun = 0L; var run = 0L
-          i = 0
-          while (i < toks.length) {
-            run = if (i > 0 && toks(i) == toks(i - 1)) run + 1 else 1
-            if (run > maxRun) maxRun = run
-            i += 1
-          }
-          RepetitionSignals(id, lines.length.toLong, dupLines, totalLineChars,
-            dupLineChars, topBigram, math.max(0, toks.length - 1).toLong,
-            maxRun)
+    Multimodal.perDocument(docs) { rows =>
+      rows.map { case (id, text) =>
+        val lines = text.split("\n", -1)
+        val lineCounts = new java.util.HashMap[String, Int]()
+        lines.foreach(l => lineCounts.merge(l, 1, (a, b) => a + b))
+        var dupLines = 0L; var totalLineChars = 0L; var dupLineChars = 0L
+        lineCounts.forEach { (l, c) =>
+          dupLines += c - 1
+          totalLineChars += c.toLong * l.length
+          dupLineChars += (c - 1).toLong * l.length
         }
+        val toks = text.trim.split("\\s+").filter(_.nonEmpty)
+        val bigramCounts = new java.util.HashMap[String, Int]()
+        var i = 0
+        while (i + 1 < toks.length) {
+          bigramCounts.merge(toks(i) + " " + toks(i + 1), 1, (a, b) => a + b)
+          i += 1
+        }
+        var topBigram = 0L
+        bigramCounts.forEach { (_, c) => if (c > topBigram) topBigram = c.toLong }
+        var maxRun = 0L; var run = 0L
+        i = 0
+        while (i < toks.length) {
+          run = if (i > 0 && toks(i) == toks(i - 1)) run + 1 else 1
+          if (run > maxRun) maxRun = run
+          i += 1
+        }
+        RepetitionSignals(id, lines.length.toLong, dupLines, totalLineChars,
+          dupLineChars, topBigram, math.max(0, toks.length - 1).toLong,
+          maxRun)
       }
+    }
   }
 
   final case class GopherSignals(

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
 
 /** EPUB text extraction — books, the long-form corpus source. An
   * .epub is an OCF ZIP container (IDPF/W3C spec): a STORED (never
@@ -197,34 +196,26 @@ object Epub {
   val LinesPerChapter = 2
 
   def asEpubMedia(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    Parallelism.ensure(docs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val lines = text.split(" ", -1).grouped(WordsPerLine)
-            .map(_.mkString(" ")).toSeq
-          val chapters = lines.grouped(LinesPerChapter).map(_.toSeq).toSeq
-          Multimodal.MediaRecord(id,
-            encode(if (chapters.isEmpty) Seq(Seq("")) else chapters))
-        }
+    Multimodal.perDocument(Parallelism.ensure(docs)) { rows =>
+      rows.map { case (id, text) =>
+        val lines = text.split(" ", -1).grouped(WordsPerLine)
+          .map(_.mkString(" ")).toSeq
+        val chapters = lines.grouped(LinesPerChapter).map(_.toSeq).toSeq
+        Multimodal.MediaRecord(id,
+          encode(if (chapters.isEmpty) Seq(Seq("")) else chapters))
       }
-      .toDF("doc_id", "payload")
+    }.toDF("doc_id", "payload")
   }
 
   final case class EpubText(doc_id: Long, n_chapters: Int, text: String)
 
   /** Distributed extraction; `text` = chapters joined by newlines. */
   def extractTexts(media: DataFrame): Dataset[EpubText] = {
-    import media.sparkSession.implicits._
-    media.select(col("doc_id"), col("payload"))
-      .as[Multimodal.MediaRecord]
-      .mapPartitions { records =>
-        records.map { r =>
-          val chapters = extractText(r.payload)
-          EpubText(r.doc_id, chapters.size, chapters.mkString("\n"))
-        }
+    Multimodal.perPayload(media) { records =>
+      records.map { r =>
+        val chapters = extractText(r.payload)
+        EpubText(r.doc_id, chapters.size, chapters.mkString("\n"))
       }
+    }
   }
 }

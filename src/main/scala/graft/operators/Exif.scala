@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
 
 /** Exif metadata for JPEG payloads — the metadata layer real web
   * images carry (camera make/model, capture time, pixel dimensions,
@@ -533,26 +532,22 @@ object Exif {
     * [[Jpeg.asColorJpegMedia]]'s payloads via [[insertApp1]].
     */
   def asExifJpegMedia(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    Jpeg.asColorJpegMedia(docs)
-      .select(col("doc_id"), col("payload")).as[Multimodal.MediaRecord]
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.doc_id
-          val (dw, dh) = Multimodal.jpegDims(r.payload).getOrElse(
-            throw new IllegalArgumentException("payload has no SOF"))
-          val meta = Meta(
-            orientation = (1 + id % 8).toInt,
-            make = s"Cam${id % 3}",
-            model = s"M-${id % 5}",
-            dateTime = f"2026:08:${1 + id % 9}%02d 00:00:00",
-            xresNum = 72 + (id % 4) * 10, xresDen = 1,
-            pixelX = dw.toLong, pixelY = dh.toLong,
-            littleEndian = id % 2 == 0)
-          Multimodal.MediaRecord(id, insertApp1(r.payload, buildApp1(meta)))
-        }
+    Multimodal.perPayload(Jpeg.asColorJpegMedia(docs)) { rows =>
+      rows.map { r =>
+        val id = r.doc_id
+        val (dw, dh) = Multimodal.jpegDims(r.payload).getOrElse(
+          throw new IllegalArgumentException("payload has no SOF"))
+        val meta = Meta(
+          orientation = (1 + id % 8).toInt,
+          make = s"Cam${id % 3}",
+          model = s"M-${id % 5}",
+          dateTime = f"2026:08:${1 + id % 9}%02d 00:00:00",
+          xresNum = 72 + (id % 4) * 10, xresDen = 1,
+          pixelX = dw.toLong, pixelY = dh.toLong,
+          littleEndian = id % 2 == 0)
+        Multimodal.MediaRecord(id, insertApp1(r.payload, buildApp1(meta)))
       }
-      .toDF("doc_id", "payload")
+    }.toDF("doc_id", "payload")
   }
 
   /** 4:4:4 Y/Cb/Cr planes from a block-byte grid: block (br, bc)
@@ -587,43 +582,38 @@ object Exif {
     * makes orientation-normalized dedup provable.
     */
   def asOrientedPairMedia(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
     // two color encodes per row; a byte-small scan folding into one
     // task serializes them (the q193/q391 lesson)
-    Parallelism.ensure(docs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, text) =>
-          val bt = Jpeg.colorBlockBytesOf(text)
-          val bRows = bt.length / 8
-          // stored(nr, nc) = upright(br = nc, bc = 7 − nr): the block
-          // grid of the upright rotated 90° CCW
-          val sb = new Array[Byte](bt.length)
-          var nr = 0
-          while (nr < 8) {
-            var nc = 0
-            while (nc < bRows) {
-              sb(nr * bRows + nc) = bt(nc * 8 + (7 - nr))
-              nc += 1
-            }
-            nr += 1
+    Multimodal.perDocument(Parallelism.ensure(docs)) { rows =>
+      rows.flatMap { case (id, text) =>
+        val bt = Jpeg.colorBlockBytesOf(text)
+        val bRows = bt.length / 8
+        // stored(nr, nc) = upright(br = nc, bc = 7 − nr): the block
+        // grid of the upright rotated 90° CCW
+        val sb = new Array[Byte](bt.length)
+        var nr = 0
+        while (nr < 8) {
+          var nc = 0
+          while (nc < bRows) {
+            sb(nr * bRows + nc) = bt(nc * 8 + (7 - nr))
+            nc += 1
           }
-          val (yu, cbu, cru) = planesOfBlocks(bt, bRows, 8)
-          val (ys, cbs, crs) = planesOfBlocks(sb, 8, bRows)
-          def meta(o: Int) = Meta(o, "Cam", "M", "2026:08:16 00:00:00",
-            72, 1, 0, 0, littleEndian = true)
-          val up = insertApp1(
-            Jpeg.encodeColor(64, bRows * 8, yu, cbu, cru, 1, 1),
-            buildApp1(meta(1)))
-          val rot = insertApp1(
-            Jpeg.encodeColor(bRows * 8, 64, ys, cbs, crs, 1, 1),
-            buildApp1(meta(6)))
-          Seq(Multimodal.MediaRecord(id, up),
-            Multimodal.MediaRecord(id + 200000, rot))
+          nr += 1
         }
+        val (yu, cbu, cru) = planesOfBlocks(bt, bRows, 8)
+        val (ys, cbs, crs) = planesOfBlocks(sb, 8, bRows)
+        def meta(o: Int) = Meta(o, "Cam", "M", "2026:08:16 00:00:00",
+          72, 1, 0, 0, littleEndian = true)
+        val up = insertApp1(
+          Jpeg.encodeColor(64, bRows * 8, yu, cbu, cru, 1, 1),
+          buildApp1(meta(1)))
+        val rot = insertApp1(
+          Jpeg.encodeColor(bRows * 8, 64, ys, cbs, crs, 1, 1),
+          buildApp1(meta(6)))
+        Seq(Multimodal.MediaRecord(id, up),
+          Multimodal.MediaRecord(id + 200000, rot))
       }
-      .toDF("doc_id", "payload")
+    }.toDF("doc_id", "payload")
   }
 
   /** Orientation-NORMALIZED perceptual near-dup pairs: parse Exif,
@@ -638,21 +628,17 @@ object Exif {
     * the rotation-robust dedup compositions.
     */
   def orientedPHash(media: DataFrame): Dataset[Multimodal.PHash] = {
-    import media.sparkSession.implicits._
     // decode + upright + DCT per row over what is often a pinned
     // byte-small parquet scan (q380): spread before paying the codec
-    Parallelism.ensure(media)
-      .select(col("doc_id"), col("payload"))
-      .as[Multimodal.MediaRecord]
-      .mapPartitions { records =>
-        records.map { r =>
-          val o = parseExif(r.payload).map(_.orientation).getOrElse(1)
-          val img = Jpeg.decodeColor(r.payload)
-          val (ow, oh, rgb) = orientRgb(img.pixels, img.width, img.height, o)
-          val b = Multimodal.pHashBlocksOfRgb(rgb, ow, oh, 3)
-          Multimodal.PHash(r.doc_id, b(0), b(1), b(2), b(3))
-        }
+    Multimodal.perPayload(Parallelism.ensure(media)) { records =>
+      records.map { r =>
+        val o = parseExif(r.payload).map(_.orientation).getOrElse(1)
+        val img = Jpeg.decodeColor(r.payload)
+        val (ow, oh, rgb) = orientRgb(img.pixels, img.width, img.height, o)
+        val b = Multimodal.pHashBlocksOfRgb(rgb, ow, oh, 3)
+        Multimodal.PHash(r.doc_id, b(0), b(1), b(2), b(3))
       }
+    }
   }
 
   def orientedPHashPairs(media: DataFrame, radius: Int = 2): DataFrame =
@@ -665,26 +651,22 @@ object Exif {
     * since the 1.2 extension.
     */
   def asExifPngMedia(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    Multimodal.asColorMedia(docs)
-      .select(col("doc_id"), col("payload")).as[Multimodal.MediaRecord]
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.doc_id
-          val meta = Meta(
-            orientation = (1 + id % 8).toInt,
-            make = s"Cam${id % 3}",
-            model = s"M-${id % 5}",
-            dateTime = f"2026:08:${1 + id % 9}%02d 00:00:00",
-            xresNum = 72 + (id % 4) * 10, xresDen = 1,
-            pixelX = 64, pixelY = 0,
-            littleEndian = id % 2 == 0)
-          // buildApp1 emits the JPEG wrapper; eXIf carries bare TIFF
-          val tiff = buildApp1(meta).drop(6)
-          Multimodal.MediaRecord(id, insertPngExif(r.payload, tiff))
-        }
+    Multimodal.perPayload(Multimodal.asColorMedia(docs)) { rows =>
+      rows.map { r =>
+        val id = r.doc_id
+        val meta = Meta(
+          orientation = (1 + id % 8).toInt,
+          make = s"Cam${id % 3}",
+          model = s"M-${id % 5}",
+          dateTime = f"2026:08:${1 + id % 9}%02d 00:00:00",
+          xresNum = 72 + (id % 4) * 10, xresDen = 1,
+          pixelX = 64, pixelY = 0,
+          littleEndian = id % 2 == 0)
+        // buildApp1 emits the JPEG wrapper; eXIf carries bare TIFF
+        val tiff = buildApp1(meta).drop(6)
+        Multimodal.MediaRecord(id, insertPngExif(r.payload, tiff))
       }
-      .toDF("doc_id", "payload")
+    }.toDF("doc_id", "payload")
   }
 
   /** Attach color JPEGs where EVEN doc_ids carry a GPS block (lat =
@@ -692,26 +674,22 @@ object Exif {
     * geo-PII fixture for the scrub.
     */
   def asGpsJpegMedia(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    Jpeg.asColorJpegMedia(docs)
-      .select(col("doc_id"), col("payload")).as[Multimodal.MediaRecord]
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val id = r.doc_id
-          val meta = Meta(
-            orientation = (1 + id % 8).toInt,
-            make = s"Cam${id % 3}", model = s"M-${id % 5}",
-            dateTime = f"2026:08:${1 + id % 9}%02d 00:00:00",
-            xresNum = 72 + (id % 4) * 10, xresDen = 1,
-            pixelX = 64, pixelY = 0, littleEndian = id % 2 == 0)
-          val app1 =
-            if (id % 2 == 0)
-              buildApp1WithGps(meta, Gps(id % 90000000L, id % 180000000L))
-            else buildApp1(meta)
-          Multimodal.MediaRecord(id, insertApp1(r.payload, app1))
-        }
+    Multimodal.perPayload(Jpeg.asColorJpegMedia(docs)) { rows =>
+      rows.map { r =>
+        val id = r.doc_id
+        val meta = Meta(
+          orientation = (1 + id % 8).toInt,
+          make = s"Cam${id % 3}", model = s"M-${id % 5}",
+          dateTime = f"2026:08:${1 + id % 9}%02d 00:00:00",
+          xresNum = 72 + (id % 4) * 10, xresDen = 1,
+          pixelX = 64, pixelY = 0, littleEndian = id % 2 == 0)
+        val app1 =
+          if (id % 2 == 0)
+            buildApp1WithGps(meta, Gps(id % 90000000L, id % 180000000L))
+          else buildApp1(meta)
+        Multimodal.MediaRecord(id, insertApp1(r.payload, app1))
       }
-      .toDF("doc_id", "payload")
+    }.toDF("doc_id", "payload")
   }
 
   final case class GpsScrubbed(doc_id: Long, had_gps: Int, lat_udeg: Long,
@@ -727,36 +705,34 @@ object Exif {
     * bytes, not assumed).
     */
   def gpsScrub(media: DataFrame): Dataset[GpsScrubbed] = {
-    import media.sparkSession.implicits._
-    media.select(col("doc_id"), col("payload")).as[Multimodal.MediaRecord]
-      .mapPartitions { records =>
-        val hex = "0123456789abcdef".toCharArray
-        records.map { r =>
-          val gps = parseGps(r.payload)
-          val scrubbed = if (gps.isDefined) stripGps(r.payload) else r.payload
-          val after = parseGps(scrubbed)
-          val meta = parseExif(scrubbed).getOrElse(
-            throw new IllegalArgumentException("scrub lost the APP1"))
-          val img = Jpeg.decodeColor(scrubbed)
-          val n = img.width * img.height
-          val sb = new java.lang.StringBuilder(n * 6)
-          var sum = 0L
-          var i = 0
-          while (i < n * 3) {
-            val v = img.pixels(i) & 0xff
-            sb.append(hex(v >> 4)).append(hex(v & 0xf))
-            sum += v
-            i += 1
-          }
-          GpsScrubbed(r.doc_id, if (gps.isDefined) 1 else 0,
-            gps.map(_.latUdeg).getOrElse(-1L),
-            gps.map(_.lonUdeg).getOrElse(-1L),
-            if (after.isDefined) 1 else 0, meta.orientation,
-            java.security.MessageDigest.getInstance("MD5")
-              .digest(sb.toString.getBytes("US-ASCII"))
-              .map(b => f"$b%02x").mkString, sum)
+    Multimodal.perPayload(media) { records =>
+      val hex = "0123456789abcdef".toCharArray
+      records.map { r =>
+        val gps = parseGps(r.payload)
+        val scrubbed = if (gps.isDefined) stripGps(r.payload) else r.payload
+        val after = parseGps(scrubbed)
+        val meta = parseExif(scrubbed).getOrElse(
+          throw new IllegalArgumentException("scrub lost the APP1"))
+        val img = Jpeg.decodeColor(scrubbed)
+        val n = img.width * img.height
+        val sb = new java.lang.StringBuilder(n * 6)
+        var sum = 0L
+        var i = 0
+        while (i < n * 3) {
+          val v = img.pixels(i) & 0xff
+          sb.append(hex(v >> 4)).append(hex(v & 0xf))
+          sum += v
+          i += 1
         }
+        GpsScrubbed(r.doc_id, if (gps.isDefined) 1 else 0,
+          gps.map(_.latUdeg).getOrElse(-1L),
+          gps.map(_.lonUdeg).getOrElse(-1L),
+          if (after.isDefined) 1 else 0, meta.orientation,
+          java.security.MessageDigest.getInstance("MD5")
+            .digest(sb.toString.getBytes("US-ASCII"))
+            .map(b => f"$b%02x").mkString, sum)
       }
+    }
   }
 
   final case class OrientedPng(doc_id: Long, orientation: Int,
@@ -767,38 +743,36 @@ object Exif {
     * decode (any of the three storage types), upright, digest RGB.
     */
   def orientNormalizedPng(media: DataFrame): Dataset[OrientedPng] = {
-    import media.sparkSession.implicits._
-    media.select(col("doc_id"), col("payload")).as[Multimodal.MediaRecord]
-      .mapPartitions { records =>
-        val hex = "0123456789abcdef".toCharArray
-        records.map { r =>
-          val o = parsePngExif(r.payload).map(_.orientation).getOrElse(1)
-          val img = Multimodal.Png.decodeColor(r.payload)
-          val n = img.width * img.height
-          val rgb = new Array[Byte](n * 3)
-          var i = 0
-          while (i < n) {
-            rgb(i * 3) = img.rgba(i * 4)
-            rgb(i * 3 + 1) = img.rgba(i * 4 + 1)
-            rgb(i * 3 + 2) = img.rgba(i * 4 + 2)
-            i += 1
-          }
-          val (ow, oh, up) = orientRgb(rgb, img.width, img.height, o)
-          val md = java.security.MessageDigest.getInstance("MD5")
-          val sb = new java.lang.StringBuilder(up.length * 2)
-          var sum = 0L
-          i = 0
-          while (i < up.length) {
-            val v = up(i) & 0xff
-            sb.append(hex(v >> 4)).append(hex(v & 0xf))
-            sum += v
-            i += 1
-          }
-          OrientedPng(r.doc_id, o, ow, oh,
-            md.digest(sb.toString.getBytes("US-ASCII"))
-              .map(b => f"$b%02x").mkString, sum)
+    Multimodal.perPayload(media) { records =>
+      val hex = "0123456789abcdef".toCharArray
+      records.map { r =>
+        val o = parsePngExif(r.payload).map(_.orientation).getOrElse(1)
+        val img = Multimodal.Png.decodeColor(r.payload)
+        val n = img.width * img.height
+        val rgb = new Array[Byte](n * 3)
+        var i = 0
+        while (i < n) {
+          rgb(i * 3) = img.rgba(i * 4)
+          rgb(i * 3 + 1) = img.rgba(i * 4 + 1)
+          rgb(i * 3 + 2) = img.rgba(i * 4 + 2)
+          i += 1
         }
+        val (ow, oh, up) = orientRgb(rgb, img.width, img.height, o)
+        val md = java.security.MessageDigest.getInstance("MD5")
+        val sb = new java.lang.StringBuilder(up.length * 2)
+        var sum = 0L
+        i = 0
+        while (i < up.length) {
+          val v = up(i) & 0xff
+          sb.append(hex(v >> 4)).append(hex(v & 0xf))
+          sum += v
+          i += 1
+        }
+        OrientedPng(r.doc_id, o, ow, oh,
+          md.digest(sb.toString.getBytes("US-ASCII"))
+            .map(b => f"$b%02x").mkString, sum)
       }
+    }
   }
 
   final case class Oriented(doc_id: Long, orientation: Int, make: String,
@@ -814,32 +788,30 @@ object Exif {
     * pass; payloads never at the driver.
     */
   def orientNormalized(media: DataFrame): Dataset[Oriented] = {
-    import media.sparkSession.implicits._
-    media.select(col("doc_id"), col("payload")).as[Multimodal.MediaRecord]
-      .mapPartitions { records =>
-        val hex = "0123456789abcdef".toCharArray
-        records.map { r =>
-          val meta = parseExif(r.payload).getOrElse(
-            throw new IllegalArgumentException(
-              s"doc ${r.doc_id}: payload has no Exif APP1"))
-          val img = Jpeg.decodeColor(r.payload)
-          val (ow, oh, rgb) =
-            orientRgb(img.pixels, img.width, img.height, meta.orientation)
-          val md = java.security.MessageDigest.getInstance("MD5")
-          val sb = new java.lang.StringBuilder(rgb.length * 2)
-          var sum = 0L
-          var i = 0
-          while (i < rgb.length) {
-            val v = rgb(i) & 0xff
-            sb.append(hex(v >> 4)).append(hex(v & 0xf))
-            sum += v
-            i += 1
-          }
-          Oriented(r.doc_id, meta.orientation, meta.make, meta.model,
-            meta.dateTime, meta.xresNum, meta.pixelX, meta.pixelY, ow, oh,
-            md.digest(sb.toString.getBytes("US-ASCII"))
-              .map(b => f"$b%02x").mkString, sum)
+    Multimodal.perPayload(media) { records =>
+      val hex = "0123456789abcdef".toCharArray
+      records.map { r =>
+        val meta = parseExif(r.payload).getOrElse(
+          throw new IllegalArgumentException(
+            s"doc ${r.doc_id}: payload has no Exif APP1"))
+        val img = Jpeg.decodeColor(r.payload)
+        val (ow, oh, rgb) =
+          orientRgb(img.pixels, img.width, img.height, meta.orientation)
+        val md = java.security.MessageDigest.getInstance("MD5")
+        val sb = new java.lang.StringBuilder(rgb.length * 2)
+        var sum = 0L
+        var i = 0
+        while (i < rgb.length) {
+          val v = rgb(i) & 0xff
+          sb.append(hex(v >> 4)).append(hex(v & 0xf))
+          sum += v
+          i += 1
         }
+        Oriented(r.doc_id, meta.orientation, meta.make, meta.model,
+          meta.dateTime, meta.xresNum, meta.pixelX, meta.pixelY, ow, oh,
+          md.digest(sb.toString.getBytes("US-ASCII"))
+            .map(b => f"$b%02x").mkString, sum)
       }
+    }
   }
 }

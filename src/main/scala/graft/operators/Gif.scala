@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
 
 /** GIF89a codec + dataset operators — the third real web-image
   * container after JPEG ([[Jpeg]]) and PNG ([[Multimodal.Png]]), and
@@ -389,21 +388,16 @@ object Gif {
     * narrow mapPartitions pass; payloads never at the driver.
     */
   def asGifMedia(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    Parallelism.ensure(docs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        val w = Multimodal.ImgWidth
-        rows.map { case (id, text) =>
-          val pix = Multimodal.pixelsOf(text)
-          val h = pix.length / w
-          val payload = encode(w, h, Multimodal.FixturePalette,
-            Seq(FrameSpec(0, 0, w, h, 0, interlaced = id % 2 == 1, pix)))
-          Multimodal.MediaRecord(id, payload)
-        }
+    Multimodal.perDocument(Parallelism.ensure(docs)) { rows =>
+      val w = Multimodal.ImgWidth
+      rows.map { case (id, text) =>
+        val pix = Multimodal.pixelsOf(text)
+        val h = pix.length / w
+        val payload = encode(w, h, Multimodal.FixturePalette,
+          Seq(FrameSpec(0, 0, w, h, 0, interlaced = id % 2 == 1, pix)))
+        Multimodal.MediaRecord(id, payload)
       }
-      .toDF("doc_id", "payload")
+    }.toDF("doc_id", "payload")
   }
 
   /** Attach an ANIMATED GIF payload per document: 1 + doc_id%4 frames,
@@ -412,29 +406,24 @@ object Gif {
     * replays every frame's decoded RGB and delay exactly.
     */
   def asAnimatedGifMedia(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    Parallelism.ensure(docs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        val w = Multimodal.ImgWidth
-        rows.map { case (id, text) =>
-          val pix = Multimodal.pixelsOf(text)
-          val h = pix.length / w
-          val nFrames = (1 + id % 4).toInt
-          val frames = (0 until nFrames).map { f =>
-            val fpix = new Array[Byte](pix.length)
-            var i = 0
-            while (i < pix.length) {
-              fpix(i) = (((pix(i) & 0xff) + 17 * f) % 256).toByte
-              i += 1
-            }
-            FrameSpec(0, 0, w, h, 10 * (f + 1), interlaced = false, fpix)
+    Multimodal.perDocument(Parallelism.ensure(docs)) { rows =>
+      val w = Multimodal.ImgWidth
+      rows.map { case (id, text) =>
+        val pix = Multimodal.pixelsOf(text)
+        val h = pix.length / w
+        val nFrames = (1 + id % 4).toInt
+        val frames = (0 until nFrames).map { f =>
+          val fpix = new Array[Byte](pix.length)
+          var i = 0
+          while (i < pix.length) {
+            fpix(i) = (((pix(i) & 0xff) + 17 * f) % 256).toByte
+            i += 1
           }
-          Multimodal.MediaRecord(id, encode(w, h, Multimodal.FixturePalette, frames))
+          FrameSpec(0, 0, w, h, 10 * (f + 1), interlaced = false, fpix)
         }
+        Multimodal.MediaRecord(id, encode(w, h, Multimodal.FixturePalette, frames))
       }
-      .toDF("doc_id", "payload")
+    }.toDF("doc_id", "payload")
   }
 
   final case class GifMeta(doc_id: Long, width: Int, height: Int,
@@ -471,17 +460,15 @@ object Gif {
     * the decoder (interlace flag included), not construction metadata.
     */
   def parseGifMeta(media: DataFrame): Dataset[GifMeta] = {
-    import media.sparkSession.implicits._
-    Parallelism.ensure(media).select(col("doc_id"), col("payload")).as[Multimodal.MediaRecord]
-      .mapPartitions { records =>
-        records.map { r =>
-          val g = decode(r.payload)
-          val f0 = g.frames.head
-          val (digest, sum) = hexDigestOf(f0)
-          GifMeta(r.doc_id, g.width, g.height, g.frames.size,
-            if (f0.interlaced) 1 else 0, f0.width * f0.height, digest, sum)
-        }
+    Multimodal.perPayload(Parallelism.ensure(media)) { records =>
+      records.map { r =>
+        val g = decode(r.payload)
+        val f0 = g.frames.head
+        val (digest, sum) = hexDigestOf(f0)
+        GifMeta(r.doc_id, g.width, g.height, g.frames.size,
+          if (f0.interlaced) 1 else 0, f0.width * f0.height, digest, sum)
       }
+    }
   }
 
   /** Enumerate frames with stride sampling (frame_idx % stride == 0) —
@@ -491,17 +478,15 @@ object Gif {
     */
   def sampleGifFrames(media: DataFrame, stride: Int): Dataset[GifFrame] = {
     require(stride >= 1, s"bad stride $stride")
-    import media.sparkSession.implicits._
-    Parallelism.ensure(media).select(col("doc_id"), col("payload")).as[Multimodal.MediaRecord]
-      .mapPartitions { records =>
-        records.flatMap { r =>
-          val g = decode(r.payload)
-          g.frames.zipWithIndex.collect {
-            case (f, idx) if idx % stride == 0 =>
-              val (digest, sum) = hexDigestOf(f)
-              GifFrame(r.doc_id, idx, g.frames.size, f.delayCs, digest, sum)
-          }
+    Multimodal.perPayload(Parallelism.ensure(media)) { records =>
+      records.flatMap { r =>
+        val g = decode(r.payload)
+        g.frames.zipWithIndex.collect {
+          case (f, idx) if idx % stride == 0 =>
+            val (digest, sum) = hexDigestOf(f)
+            GifFrame(r.doc_id, idx, g.frames.size, f.delayCs, digest, sum)
         }
       }
+    }
   }
 }

@@ -1387,19 +1387,15 @@ object Jpeg {
     * payloads built and kept on the executors.
     */
   def asJpegMedia(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
     // JPEG encode per row is codec-priced; a byte-small scan folding
     // into one task serializes it (the q193/q391 lesson)
-    Parallelism.ensure(docs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val pix = blockPixelsOf(text)
-          val h = pix.length / 64
-          Multimodal.Media(id, encodeGray(64, h, pix), "image/jpeg", 64, h)
-        }
+    Multimodal.perDocument(Parallelism.ensure(docs)) { rows =>
+      rows.map { case (id, text) =>
+        val pix = blockPixelsOf(text)
+        val h = pix.length / 64
+        Multimodal.Media(id, encodeGray(64, h, pix), "image/jpeg", 64, h)
       }
+    }
       .select(col("doc_id"), col("payload"),
         struct(col("format"), col("width"), col("height")).as("meta"))
   }
@@ -1462,17 +1458,13 @@ object Jpeg {
     * chroma, interleaved MCU scan), one narrow mapPartitions pass.
     */
   def asColorJpegMedia(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    Parallelism.ensure(docs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val (yP, cbP, crP, h) = colorPlanesOf(text)
-          Multimodal.Media(id, encodeColor(64, h, yP, cbP, crP),
-            "image/jpeg", 64, h)
-        }
+    Multimodal.perDocument(Parallelism.ensure(docs)) { rows =>
+      rows.map { case (id, text) =>
+        val (yP, cbP, crP, h) = colorPlanesOf(text)
+        Multimodal.Media(id, encodeColor(64, h, yP, cbP, crP),
+          "image/jpeg", 64, h)
       }
+    }
       .select(col("doc_id"), col("payload"),
         struct(col("format"), col("width"), col("height")).as("meta"))
   }
@@ -1485,17 +1477,13 @@ object Jpeg {
     * oracle verbatim: hash equality proves the progressive path.
     */
   def asProgressiveJpegMedia(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    Parallelism.ensure(docs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val (yP, cbP, crP, h) = colorPlanesOf(text)
-          Multimodal.Media(id, encodeColorProgressive(64, h, yP, cbP, crP),
-            "image/jpeg", 64, h)
-        }
+    Multimodal.perDocument(Parallelism.ensure(docs)) { rows =>
+      rows.map { case (id, text) =>
+        val (yP, cbP, crP, h) = colorPlanesOf(text)
+        Multimodal.Media(id, encodeColorProgressive(64, h, yP, cbP, crP),
+          "image/jpeg", 64, h)
       }
+    }
       .select(col("doc_id"), col("payload"),
         struct(col("format"), col("width"), col("height")).as("meta"))
   }
@@ -1512,30 +1500,28 @@ object Jpeg {
     * only hash strings, so both sides hash the hex text instead.
     */
   def parseColorMeta(media: DataFrame): Dataset[JpegColorMeta] = {
-    import media.sparkSession.implicits._
-    Parallelism.ensure(media).select(col("doc_id"), col("payload")).as[Multimodal.MediaRecord]
-      .mapPartitions { records =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        records.map { r =>
-          val img = decodeColor(r.payload)
-          var s = 0L
-          // hex dump straight into an ASCII byte buffer: same md5 input
-          // bytes as the StringBuilder→String→getBytes chain, without
-          // the two intermediate copies and per-char appends
-          val hex = new Array[Byte](img.pixels.length * 2)
-          var i = 0
-          while (i < img.pixels.length) {
-            val v = img.pixels(i) & 0xff
-            s += v
-            hex(2 * i) = Character.forDigit(v >> 4, 16).toByte
-            hex(2 * i + 1) = Character.forDigit(v & 0xf, 16).toByte
-            i += 1
-          }
-          JpegColorMeta(r.doc_id, img.width, img.height, img.channels,
-            img.width * img.height,
-            md.digest(hex).map(b => f"$b%02x").mkString, s)
+    Multimodal.perPayload(Parallelism.ensure(media)) { records =>
+      val md = java.security.MessageDigest.getInstance("MD5")
+      records.map { r =>
+        val img = decodeColor(r.payload)
+        var s = 0L
+        // hex dump straight into an ASCII byte buffer: same md5 input
+        // bytes as the StringBuilder→String→getBytes chain, without
+        // the two intermediate copies and per-char appends
+        val hex = new Array[Byte](img.pixels.length * 2)
+        var i = 0
+        while (i < img.pixels.length) {
+          val v = img.pixels(i) & 0xff
+          s += v
+          hex(2 * i) = Character.forDigit(v >> 4, 16).toByte
+          hex(2 * i + 1) = Character.forDigit(v & 0xf, 16).toByte
+          i += 1
         }
+        JpegColorMeta(r.doc_id, img.width, img.height, img.channels,
+          img.width * img.height,
+          md.digest(hex).map(b => f"$b%02x").mkString, s)
       }
+    }
   }
 
   final case class JpegMeta(doc_id: Long, width: Int, height: Int,
@@ -1547,18 +1533,16 @@ object Jpeg {
     * rule, so encoder and decoder are both under the hash.
     */
   def parseMeta(media: DataFrame): Dataset[JpegMeta] = {
-    import media.sparkSession.implicits._
-    Parallelism.ensure(media).select(col("doc_id"), col("payload")).as[Multimodal.MediaRecord]
-      .mapPartitions { records =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        records.map { r =>
-          val img = decode(r.payload)
-          var s = 0L
-          var i = 0
-          while (i < img.pixels.length) { s += (img.pixels(i) & 0xff); i += 1 }
-          JpegMeta(r.doc_id, img.width, img.height, img.pixels.length,
-            md.digest(img.pixels).map(b => f"$b%02x").mkString, s)
-        }
+    Multimodal.perPayload(Parallelism.ensure(media)) { records =>
+      val md = java.security.MessageDigest.getInstance("MD5")
+      records.map { r =>
+        val img = decode(r.payload)
+        var s = 0L
+        var i = 0
+        while (i < img.pixels.length) { s += (img.pixels(i) & 0xff); i += 1 }
+        JpegMeta(r.doc_id, img.width, img.height, img.pixels.length,
+          md.digest(img.pixels).map(b => f"$b%02x").mkString, s)
       }
+    }
   }
 }

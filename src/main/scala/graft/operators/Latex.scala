@@ -284,18 +284,13 @@ object Latex {
     * text — the math-channel routing case).
     */
   def asLatexDocs(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    Parallelism.ensure(docs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val words = text.split(" ", -1).toSeq
-          val eq = if (id % 3 == 0) Some("E = m c^2") else None
-          (id, render(words, eq))
-        }
+    Multimodal.perDocument(Parallelism.ensure(docs)) { rows =>
+      rows.map { case (id, text) =>
+        val words = text.split(" ", -1).toSeq
+        val eq = if (id % 3 == 0) Some("E = m c^2") else None
+        (id, render(words, eq))
       }
-      .toDF("doc_id", "latex")
+    }.toDF("doc_id", "latex")
   }
 
   final case class TexText(doc_id: Long, n_lines: Int, n_math: Int,

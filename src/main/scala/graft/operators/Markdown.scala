@@ -226,18 +226,13 @@ object Markdown {
     * text — the channel-routing case).
     */
   def asMarkdownDocs(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    Parallelism.ensure(docs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val words = text.split(" ", -1).toSeq
-          val cb = if (id % 4 == 0) Some(s"print('doc $id')") else None
-          (id, render(words, cb))
-        }
+    Multimodal.perDocument(Parallelism.ensure(docs)) { rows =>
+      rows.map { case (id, text) =>
+        val words = text.split(" ", -1).toSeq
+        val cb = if (id % 4 == 0) Some(s"print('doc $id')") else None
+        (id, render(words, cb))
       }
-      .toDF("doc_id", "markdown")
+    }.toDF("doc_id", "markdown")
   }
 
   final case class MdText(doc_id: Long, n_lines: Int, n_code_blocks: Int,

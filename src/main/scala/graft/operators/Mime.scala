@@ -212,14 +212,9 @@ object Mime {
 
   /** Render the documents table as EML messages by the fixture rule. */
   def asEmailDocs(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    Parallelism.ensure(docs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text) =>
-        (id, renderEmail(id, text))
-      })
-      .toDF("doc_id", "eml")
+    Multimodal.perDocument(Parallelism.ensure(docs))(_.map { case (id, text) =>
+      (id, renderEmail(id, text))
+    }).toDF("doc_id", "eml")
   }
 
   final case class EmailRow(doc_id: Long, subject: String, from: String,

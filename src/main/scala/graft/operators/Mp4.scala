@@ -277,24 +277,19 @@ object Mp4 {
     * q403 oracle replays.
     */
   def asVideoDocs(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    Parallelism.ensure(docs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val langs = Array("eng", "und", "fra", "deu")
-          val m = VideoMeta(
-            frames = text.split(" ", -1).length,
-            delta = 24 + (id % 7).toInt,
-            timescale = 600 + (id % 3).toInt * 300,
-            width = 160 + (id % 5).toInt * 32,
-            height = 120 + (id % 4).toInt * 24,
-            lang = langs((id % 4).toInt))
-          (id, encode(m))
-        }
+    Multimodal.perDocument(Parallelism.ensure(docs)) { rows =>
+      rows.map { case (id, text) =>
+        val langs = Array("eng", "und", "fra", "deu")
+        val m = VideoMeta(
+          frames = text.split(" ", -1).length,
+          delta = 24 + (id % 7).toInt,
+          timescale = 600 + (id % 3).toInt * 300,
+          width = 160 + (id % 5).toInt * 32,
+          height = 120 + (id % 4).toInt * 24,
+          lang = langs((id % 4).toInt))
+        (id, encode(m))
       }
-      .toDF("doc_id", "mp4")
+    }.toDF("doc_id", "mp4")
   }
 
   final case class VideoRow(doc_id: Long, brand: String, timescale: Int,

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
+
+import scala.reflect.runtime.universe.TypeTag
 
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.{CRC32, Deflater, Inflater}
@@ -591,24 +593,44 @@ object Multimodal {
     * executors.
     */
   def asMedia(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
     // PNG encode per row is codec-priced; a byte-small scan folding
     // into one task serializes it (the q193/q391 lesson)
-    Parallelism.ensure(docs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val pix = pixelsOf(text)
-          val h = pix.length / ImgWidth
-          Media(id, Png.encodeGray(ImgWidth, h, pix), "image/png", ImgWidth, h)
-        }
+    perDocument(Parallelism.ensure(docs)) { rows =>
+      rows.map { case (id, text) =>
+        val pix = pixelsOf(text)
+        val h = pix.length / ImgWidth
+        Media(id, Png.encodeGray(ImgWidth, h, pix), "image/png", ImgWidth, h)
       }
+    }
       .select(col("doc_id"), col("payload"),
         struct(col("format"), col("width"), col("height")).as("meta"))
   }
 
   final case class MediaRecord(doc_id: Long, payload: Array[Byte])
+
+  /** The per-document pass every text-rendered fixture builds on: `f`
+    * maps one partition of `(doc_id, text)` rows, a null text read as
+    * "". The spread is the caller's: a codec-priced builder passes
+    * `Parallelism.ensure(docs)`.
+    */
+  private[graft] def perDocument[U <: Product : TypeTag](docs: DataFrame)(
+      f: Iterator[(Long, String)] => Iterator[U]): Dataset[U] = {
+    import docs.sparkSession.implicits._
+    docs.select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
+      .as[(Long, String)]
+      .mapPartitions(f)(Encoders.product[U])
+  }
+
+  /** The decode pass every media parser builds on: `f` maps one
+    * partition of `(doc_id, payload)` records. The spread is the
+    * caller's, as in [[perDocument]].
+    */
+  private[graft] def perPayload[U <: Product : TypeTag](media: DataFrame)(
+      f: Iterator[MediaRecord] => Iterator[U]): Dataset[U] = {
+    import media.sparkSession.implicits._
+    media.select(col("doc_id"), col("payload")).as[MediaRecord]
+      .mapPartitions(f)(Encoders.product[U])
+  }
   final case class MediaMeta(doc_id: Long, width: Int, height: Int,
                              bit_depth: Int, color_type: Int,
                              n_pixels: Int, pixel_md5: String)
@@ -623,17 +645,15 @@ object Multimodal {
     * mis-unfilters a row hash-mismatches.
     */
   def parseMeta(media: DataFrame): Dataset[MediaMeta] = {
-    import media.sparkSession.implicits._
-    Parallelism.ensure(media).select(col("doc_id"), col("payload")).as[MediaRecord]
-      .mapPartitions { records =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        records.map { r =>
-          val img = Png.decode(r.payload)
-          MediaMeta(r.doc_id, img.width, img.height, img.bitDepth,
-            img.colorType, img.pixels.length,
-            md.digest(img.pixels).map(b => f"$b%02x").mkString)
-        }
+    perPayload(Parallelism.ensure(media)) { records =>
+      val md = java.security.MessageDigest.getInstance("MD5")
+      records.map { r =>
+        val img = Png.decode(r.payload)
+        MediaMeta(r.doc_id, img.width, img.height, img.bitDepth,
+          img.colorType, img.pixels.length,
+          md.digest(img.pixels).map(b => f"$b%02x").mkString)
       }
+    }
   }
 
   final case class Frame(doc_id: Long, frame_idx: Int, n_bytes: Int,
@@ -647,22 +667,20 @@ object Multimodal {
     * narrow flatMap, no shuffle; payload bytes never leave the executor.
     */
   def sampleFrames(media: DataFrame, every: Int): Dataset[Frame] = {
-    import media.sparkSession.implicits._
-    media.select(col("doc_id"), col("payload")).as[MediaRecord]
-      .mapPartitions { records =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        records.flatMap { r =>
-          val d = Png.decode(r.payload).pixels
-          val nFrames = math.ceil(d.length.toDouble / FrameBytes).toInt
-          (0 until nFrames by every).iterator.map { fi =>
-            val start = fi * FrameBytes
-            val end = math.min(start + FrameBytes, d.length)
-            val digest = md.digest(java.util.Arrays.copyOfRange(d, start, end))
-            Frame(r.doc_id, fi, end - start,
-              digest.map(b => f"$b%02x").mkString)
-          }
+    perPayload(media) { records =>
+      val md = java.security.MessageDigest.getInstance("MD5")
+      records.flatMap { r =>
+        val d = Png.decode(r.payload).pixels
+        val nFrames = math.ceil(d.length.toDouble / FrameBytes).toInt
+        (0 until nFrames by every).iterator.map { fi =>
+          val start = fi * FrameBytes
+          val end = math.min(start + FrameBytes, d.length)
+          val digest = md.digest(java.util.Arrays.copyOfRange(d, start, end))
+          Frame(r.doc_id, fi, end - start,
+            digest.map(b => f"$b%02x").mkString)
         }
       }
+    }
   }
 
   final case class ResizedImage(doc_id: Long, out_width: Int, out_height: Int,
@@ -748,68 +766,64 @@ object Multimodal {
   def clipPreprocess(media: DataFrame, size: Int = 32,
                      crop: Int = 24): Dataset[ClipPre] = {
     require(size > 0 && crop > 0 && crop <= size, s"bad $size/$crop")
-    import media.sparkSession.implicits._
-    Parallelism.ensure(media).select(col("doc_id"), col("payload")).as[MediaRecord]
-      .mapPartitions { records =>
-        val hex = "0123456789abcdef".toCharArray
-        val off = (size - crop) / 2
-        val md = java.security.MessageDigest.getInstance("MD5")
-        records.map { r =>
-          val img = Jpeg.decodeColor(r.payload)
-          val rs = bilinearResizeRgb(img.pixels, img.width, img.height,
-            size, size)
-          val sb = new java.lang.StringBuilder(crop * crop * 6)
-          var sum = 0L
-          var dy = 0
-          while (dy < crop) {
-            var dx = 0
-            while (dx < crop) {
-              var ch = 0
-              while (ch < 3) {
-                val v = rs(((dy + off) * size + dx + off) * 3 + ch) & 0xff
-                sb.append(hex(v >> 4)).append(hex(v & 0xf))
-                sum += v
-                ch += 1
-              }
-              dx += 1
+    perPayload(Parallelism.ensure(media)) { records =>
+      val hex = "0123456789abcdef".toCharArray
+      val off = (size - crop) / 2
+      val md = java.security.MessageDigest.getInstance("MD5")
+      records.map { r =>
+        val img = Jpeg.decodeColor(r.payload)
+        val rs = bilinearResizeRgb(img.pixels, img.width, img.height,
+          size, size)
+        val sb = new java.lang.StringBuilder(crop * crop * 6)
+        var sum = 0L
+        var dy = 0
+        while (dy < crop) {
+          var dx = 0
+          while (dx < crop) {
+            var ch = 0
+            while (ch < 3) {
+              val v = rs(((dy + off) * size + dx + off) * 3 + ch) & 0xff
+              sb.append(hex(v >> 4)).append(hex(v & 0xf))
+              sum += v
+              ch += 1
             }
-            dy += 1
+            dx += 1
           }
-          ClipPre(r.doc_id, img.width, img.height, crop, crop,
-            md.digest(sb.toString.getBytes("US-ASCII"))
-              .map(b => f"$b%02x").mkString, sum)
+          dy += 1
         }
+        ClipPre(r.doc_id, img.width, img.height, crop, crop,
+          md.digest(sb.toString.getBytes("US-ASCII"))
+            .map(b => f"$b%02x").mkString, sum)
       }
+    }
   }
 
   def resizeNearest(media: DataFrame, factor: Int): Dataset[ResizedImage] = {
     require(factor > 0, s"bad resize factor $factor")
-    import media.sparkSession.implicits._
-    media.select(col("doc_id"), col("payload")).as[MediaRecord]
-      .mapPartitions { records =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        records.map { r =>
-          val img = Png.decode(r.payload)
-          val ow = (img.width + factor - 1) / factor
-          val oh = (img.height + factor - 1) / factor
-          val small = new Array[Byte](ow * oh)
-          var rr = 0
-          while (rr < oh) {
-            var cc = 0
-            while (cc < ow) {
-              small(rr * ow + cc) = img.pixels(rr * factor * img.width + cc * factor)
-              cc += 1
-            }
-            rr += 1
+    perPayload(media) { records =>
+      val md = java.security.MessageDigest.getInstance("MD5")
+      records.map { r =>
+        val img = Png.decode(r.payload)
+        val ow = (img.width + factor - 1) / factor
+        val oh = (img.height + factor - 1) / factor
+        val small = new Array[Byte](ow * oh)
+        var rr = 0
+        while (rr < oh) {
+          var cc = 0
+          while (cc < ow) {
+            small(rr * ow + cc) = img.pixels(rr * factor * img.width + cc * factor)
+            cc += 1
           }
-          val out = Png.decode(Png.encodeGray(ow, oh, small))
-          var s = 0L
-          var i = 0
-          while (i < out.pixels.length) { s += (out.pixels(i) & 0xff); i += 1 }
-          ResizedImage(r.doc_id, out.width, out.height, out.pixels.length,
-            md.digest(out.pixels).map(b => f"$b%02x").mkString, s)
+          rr += 1
         }
+        val out = Png.decode(Png.encodeGray(ow, oh, small))
+        var s = 0L
+        var i = 0
+        while (i < out.pixels.length) { s += (out.pixels(i) & 0xff); i += 1 }
+        ResizedImage(r.doc_id, out.width, out.height, out.pixels.length,
+          md.digest(out.pixels).map(b => f"$b%02x").mkString, s)
       }
+    }
   }
 
   /** Per-partition batch decode + feature extraction (pixel stats and a
@@ -817,23 +831,21 @@ object Multimodal {
     * over genuinely decoded image data.
     */
   def extractFeatures(media: DataFrame): Dataset[MediaFeatures] = {
-    import media.sparkSession.implicits._
-    media.select(col("doc_id"), col("payload")).as[MediaRecord]
-      .mapPartitions { records =>
-        // per-partition codec state would initialize once, here
-        records.map { r =>
-          val img = Png.decode(r.payload)
-          val n = img.pixels.length
-          var s = 0L
-          var i = 0
-          while (i < n) { s += (img.pixels(i) & 0xff); i += 1 }
-          MediaFeatures(
-            doc_id = r.doc_id,
-            n_pixels = n,
-            mean_pixel = if (n == 0) 0.0 else s.toDouble / n,
-            n_frames = math.ceil(n.toDouble / FrameBytes).toInt)
-        }
+    perPayload(media) { records =>
+      // per-partition codec state would initialize once, here
+      records.map { r =>
+        val img = Png.decode(r.payload)
+        val n = img.pixels.length
+        var s = 0L
+        var i = 0
+        while (i < n) { s += (img.pixels(i) & 0xff); i += 1 }
+        MediaFeatures(
+          doc_id = r.doc_id,
+          n_pixels = n,
+          mean_pixel = if (n == 0) 0.0 else s.toDouble / n,
+          n_frames = math.ceil(n.toDouble / FrameBytes).toInt)
       }
+    }
   }
 
   final case class Patch(doc_id: Long, patch_row: Int, patch_col: Int,
@@ -853,36 +865,34 @@ object Multimodal {
     */
   def imagePatches(media: DataFrame, size: Int): Dataset[Patch] = {
     require(size > 0, s"bad patch size $size")
-    import media.sparkSession.implicits._
-    media.select(col("doc_id"), col("payload")).as[MediaRecord]
-      .mapPartitions { records =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        records.flatMap { r =>
-          val img = Png.decode(r.payload)
-          val pRows = img.height / size
-          val pCols = img.width / size
-          val buf = new Array[Byte](size * size)
-          for {
-            pr <- (0 until pRows).iterator
-            pc <- (0 until pCols).iterator
-          } yield {
-            var s = 0L
-            var i = 0
-            while (i < size) {
-              var j = 0
-              while (j < size) {
-                val b = img.pixels((pr * size + i) * img.width + pc * size + j)
-                buf(i * size + j) = b
-                s += (b & 0xff)
-                j += 1
-              }
-              i += 1
+    perPayload(media) { records =>
+      val md = java.security.MessageDigest.getInstance("MD5")
+      records.flatMap { r =>
+        val img = Png.decode(r.payload)
+        val pRows = img.height / size
+        val pCols = img.width / size
+        val buf = new Array[Byte](size * size)
+        for {
+          pr <- (0 until pRows).iterator
+          pc <- (0 until pCols).iterator
+        } yield {
+          var s = 0L
+          var i = 0
+          while (i < size) {
+            var j = 0
+            while (j < size) {
+              val b = img.pixels((pr * size + i) * img.width + pc * size + j)
+              buf(i * size + j) = b
+              s += (b & 0xff)
+              j += 1
             }
-            Patch(r.doc_id, pr, pc, s,
-              md.digest(buf).map(b => f"$b%02x").mkString)
+            i += 1
           }
+          Patch(r.doc_id, pr, pc, s,
+            md.digest(buf).map(b => f"$b%02x").mkString)
         }
       }
+    }
   }
 
   /** Deterministic multi-frame "video" fixture: `nFrames` complete
@@ -894,27 +904,24 @@ object Multimodal {
     */
   def asVideo(docs: DataFrame, nFrames: Int): DataFrame = {
     require(nFrames >= 1, s"bad frame count $nFrames")
-    import docs.sparkSession.implicits._
-    docs.select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val pix = pixelsOf(text)
-          val h = pix.length / ImgWidth
-          val frames = (0 until nFrames).map { f =>
-            val rot = new Array[Byte](pix.length)
-            var i = 0
-            while (i < pix.length) { rot(i) = pix((i + f) % pix.length); i += 1 }
-            Png.encodeGray(ImgWidth, h, rot)
-          }
-          val buf = new Array[Byte](frames.map(_.length).sum)
-          var off = 0
-          frames.foreach { fb =>
-            System.arraycopy(fb, 0, buf, off, fb.length); off += fb.length
-          }
-          (id, buf)
+    perDocument(docs) { rows =>
+      rows.map { case (id, text) =>
+        val pix = pixelsOf(text)
+        val h = pix.length / ImgWidth
+        val frames = (0 until nFrames).map { f =>
+          val rot = new Array[Byte](pix.length)
+          var i = 0
+          while (i < pix.length) { rot(i) = pix((i + f) % pix.length); i += 1 }
+          Png.encodeGray(ImgWidth, h, rot)
         }
-      }.toDF("doc_id", "payload")
+        val buf = new Array[Byte](frames.map(_.length).sum)
+        var off = 0
+        frames.foreach { fb =>
+          System.arraycopy(fb, 0, buf, off, fb.length); off += fb.length
+        }
+        (id, buf)
+      }
+    }.toDF("doc_id", "payload")
   }
 
   final case class VideoFrame(doc_id: Long, frame_idx: Int, width: Int,
@@ -933,38 +940,36 @@ object Multimodal {
     */
   def sampleVideoFrames(video: DataFrame, every: Int): Dataset[VideoFrame] = {
     require(every >= 1, s"bad sampling stride $every")
-    import video.sparkSession.implicits._
-    video.select(col("doc_id"), col("payload")).as[MediaRecord]
-      .mapPartitions { records =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        records.flatMap { r =>
-          val bytes = r.payload
-          val bounds = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-          var off = 0
-          while (off < bytes.length) {
-            val start = off
-            require(bytes.length - off > 8, s"truncated container at $off")
-            off += 8 // signature (validated by the per-frame decode)
-            var done = false
-            while (!done) {
-              require(bytes.length - off >= 12, s"truncated chunk at $off")
-              val len = ((bytes(off) & 0xff) << 24) |
-                ((bytes(off + 1) & 0xff) << 16) |
-                ((bytes(off + 2) & 0xff) << 8) | (bytes(off + 3) & 0xff)
-              val typ = new String(bytes, off + 4, 4, "US-ASCII")
-              off += 12 + len
-              if (typ == "IEND") done = true
-            }
-            bounds += ((start, off))
+    perPayload(video) { records =>
+      val md = java.security.MessageDigest.getInstance("MD5")
+      records.flatMap { r =>
+        val bytes = r.payload
+        val bounds = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+        var off = 0
+        while (off < bytes.length) {
+          val start = off
+          require(bytes.length - off > 8, s"truncated container at $off")
+          off += 8 // signature (validated by the per-frame decode)
+          var done = false
+          while (!done) {
+            require(bytes.length - off >= 12, s"truncated chunk at $off")
+            val len = ((bytes(off) & 0xff) << 24) |
+              ((bytes(off + 1) & 0xff) << 16) |
+              ((bytes(off + 2) & 0xff) << 8) | (bytes(off + 3) & 0xff)
+            val typ = new String(bytes, off + 4, 4, "US-ASCII")
+            off += 12 + len
+            if (typ == "IEND") done = true
           }
-          bounds.zipWithIndex.iterator.collect {
-            case ((s0, e0), fi) if fi % every == 0 =>
-              val img = Png.decode(java.util.Arrays.copyOfRange(bytes, s0, e0))
-              VideoFrame(r.doc_id, fi, img.width, img.height,
-                md.digest(img.pixels).map(b => f"$b%02x").mkString)
-          }
+          bounds += ((start, off))
+        }
+        bounds.zipWithIndex.iterator.collect {
+          case ((s0, e0), fi) if fi % every == 0 =>
+            val img = Png.decode(java.util.Arrays.copyOfRange(bytes, s0, e0))
+            VideoFrame(r.doc_id, fi, img.width, img.height,
+              md.digest(img.pixels).map(b => f"$b%02x").mkString)
         }
       }
+    }
   }
 
   /** Deterministic COLOR rule shared with the oracle, applied to the
@@ -998,41 +1003,37 @@ object Multimodal {
     * pass; payloads never at the driver.
     */
   def asColorMedia(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    Parallelism.ensure(docs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val pix = pixelsOf(text)
-          val h = pix.length / ImgWidth
-          val payload = (id % 3) match {
-            case 0 =>
-              val rgb = new Array[Byte](pix.length * 3)
-              var i = 0
-              while (i < pix.length) {
-                val (r, g, b, _) = colorOf(pix(i) & 0xff)
-                rgb(i * 3) = r.toByte; rgb(i * 3 + 1) = g.toByte
-                rgb(i * 3 + 2) = b.toByte
-                i += 1
-              }
-              Png.encodeRgb(ImgWidth, h, rgb)
-            case 1 =>
-              Png.encodePalette(ImgWidth, h, pix, FixturePalette)
-            case _ =>
-              val rgba = new Array[Byte](pix.length * 4)
-              var i = 0
-              while (i < pix.length) {
-                val (r, g, b, a) = colorOf(pix(i) & 0xff)
-                rgba(i * 4) = r.toByte; rgba(i * 4 + 1) = g.toByte
-                rgba(i * 4 + 2) = b.toByte; rgba(i * 4 + 3) = a.toByte
-                i += 1
-              }
-              Png.encodeRgba(ImgWidth, h, rgba)
-          }
-          Media(id, payload, "image/png", ImgWidth, h)
+    perDocument(Parallelism.ensure(docs)) { rows =>
+      rows.map { case (id, text) =>
+        val pix = pixelsOf(text)
+        val h = pix.length / ImgWidth
+        val payload = (id % 3) match {
+          case 0 =>
+            val rgb = new Array[Byte](pix.length * 3)
+            var i = 0
+            while (i < pix.length) {
+              val (r, g, b, _) = colorOf(pix(i) & 0xff)
+              rgb(i * 3) = r.toByte; rgb(i * 3 + 1) = g.toByte
+              rgb(i * 3 + 2) = b.toByte
+              i += 1
+            }
+            Png.encodeRgb(ImgWidth, h, rgb)
+          case 1 =>
+            Png.encodePalette(ImgWidth, h, pix, FixturePalette)
+          case _ =>
+            val rgba = new Array[Byte](pix.length * 4)
+            var i = 0
+            while (i < pix.length) {
+              val (r, g, b, a) = colorOf(pix(i) & 0xff)
+              rgba(i * 4) = r.toByte; rgba(i * 4 + 1) = g.toByte
+              rgba(i * 4 + 2) = b.toByte; rgba(i * 4 + 3) = a.toByte
+              i += 1
+            }
+            Png.encodeRgba(ImgWidth, h, rgba)
         }
+        Media(id, payload, "image/png", ImgWidth, h)
       }
+    }
       .select(col("doc_id"), col("payload"),
         struct(col("format"), col("width"), col("height")).as("meta"))
   }
@@ -1042,26 +1043,22 @@ object Multimodal {
     * layout — [[Png.decodeColor]]'s deinterlacer under the oracle.
     */
   def asInterlacedMedia(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    Parallelism.ensure(docs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val pix = pixelsOf(text)
-          val h = pix.length / ImgWidth
-          val rgb = new Array[Byte](pix.length * 3)
-          var i = 0
-          while (i < pix.length) {
-            val (r, g, b, _) = colorOf(pix(i) & 0xff)
-            rgb(i * 3) = r.toByte; rgb(i * 3 + 1) = g.toByte
-            rgb(i * 3 + 2) = b.toByte
-            i += 1
-          }
-          Media(id, Png.encodeRgbInterlaced(ImgWidth, h, rgb),
-            "image/png", ImgWidth, h)
+    perDocument(Parallelism.ensure(docs)) { rows =>
+      rows.map { case (id, text) =>
+        val pix = pixelsOf(text)
+        val h = pix.length / ImgWidth
+        val rgb = new Array[Byte](pix.length * 3)
+        var i = 0
+        while (i < pix.length) {
+          val (r, g, b, _) = colorOf(pix(i) & 0xff)
+          rgb(i * 3) = r.toByte; rgb(i * 3 + 1) = g.toByte
+          rgb(i * 3 + 2) = b.toByte
+          i += 1
         }
+        Media(id, Png.encodeRgbInterlaced(ImgWidth, h, rgb),
+          "image/png", ImgWidth, h)
       }
+    }
       .select(col("doc_id"), col("payload"),
         struct(col("format"), col("width"), col("height")).as("meta"))
   }
@@ -1080,39 +1077,37 @@ object Multimodal {
     * the oracle hash.
     */
   def parseColorMeta(media: DataFrame): Dataset[ColorMeta] = {
-    import media.sparkSession.implicits._
-    Parallelism.ensure(media).select(col("doc_id"), col("payload")).as[MediaRecord]
-      .mapPartitions { records =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val hex = "0123456789abcdef".toCharArray
-        records.map { r =>
-          val img = Png.decodeColor(r.payload)
-          val n = img.width * img.height
-          // hex dump straight into an ASCII byte buffer: same md5 input
-          // bytes as the StringBuilder→String→getBytes chain, without
-          // the two intermediate copies and per-char appends
-          val hb = new Array[Byte](n * 6)
-          var rgbSum = 0L
-          var aSum = 0L
-          var i = 0
-          while (i < n) {
-            var ch = 0
-            while (ch < 3) {
-              val v = img.rgba(i * 4 + ch) & 0xff
-              hb(i * 6 + 2 * ch) = hex(v >> 4).toByte
-              hb(i * 6 + 2 * ch + 1) = hex(v & 0xf).toByte
-              rgbSum += v
-              ch += 1
-            }
-            aSum += img.rgba(i * 4 + 3) & 0xff
-            i += 1
+    perPayload(Parallelism.ensure(media)) { records =>
+      val md = java.security.MessageDigest.getInstance("MD5")
+      val hex = "0123456789abcdef".toCharArray
+      records.map { r =>
+        val img = Png.decodeColor(r.payload)
+        val n = img.width * img.height
+        // hex dump straight into an ASCII byte buffer: same md5 input
+        // bytes as the StringBuilder→String→getBytes chain, without
+        // the two intermediate copies and per-char appends
+        val hb = new Array[Byte](n * 6)
+        var rgbSum = 0L
+        var aSum = 0L
+        var i = 0
+        while (i < n) {
+          var ch = 0
+          while (ch < 3) {
+            val v = img.rgba(i * 4 + ch) & 0xff
+            hb(i * 6 + 2 * ch) = hex(v >> 4).toByte
+            hb(i * 6 + 2 * ch + 1) = hex(v & 0xf).toByte
+            rgbSum += v
+            ch += 1
           }
-          ColorMeta(r.doc_id, img.width, img.height, img.colorType,
-            img.channels, n,
-            md.digest(hb).map(b => f"$b%02x").mkString,
-            rgbSum, aSum)
+          aSum += img.rgba(i * 4 + 3) & 0xff
+          i += 1
         }
+        ColorMeta(r.doc_id, img.width, img.height, img.colorType,
+          img.channels, n,
+          md.digest(hb).map(b => f"$b%02x").mkString,
+          rgbSum, aSum)
       }
+    }
   }
 
   final case class AHash(doc_id: Long, b0: Int, b1: Int, b2: Int, b3: Int)
@@ -1128,35 +1123,33 @@ object Multimodal {
     * executor.
     */
   def aHash(media: DataFrame): Dataset[AHash] = {
-    import media.sparkSession.implicits._
-    media.select(col("doc_id"), col("payload")).as[MediaRecord]
-      .mapPartitions { records =>
-        records.map { r =>
-          val img = Png.decode(r.payload)
-          val w = img.width
-          val h = img.height
-          val s = new Array[Int](64)
-          var sum = 0L
-          var i = 0
-          while (i < 8) {
-            var j = 0
-            while (j < 8) {
-              val p = img.pixels((i * h / 8) * w + (j * w / 8)) & 0xff
-              s(i * 8 + j) = p
-              sum += p
-              j += 1
-            }
-            i += 1
+    perPayload(media) { records =>
+      records.map { r =>
+        val img = Png.decode(r.payload)
+        val w = img.width
+        val h = img.height
+        val s = new Array[Int](64)
+        var sum = 0L
+        var i = 0
+        while (i < 8) {
+          var j = 0
+          while (j < 8) {
+            val p = img.pixels((i * h / 8) * w + (j * w / 8)) & 0xff
+            s(i * 8 + j) = p
+            sum += p
+            j += 1
           }
-          val b = new Array[Int](4)
-          var k = 0
-          while (k < 64) {
-            if (s(k) * 64L > sum) b(k / 16) |= 1 << (k % 16)
-            k += 1
-          }
-          AHash(r.doc_id, b(0), b(1), b(2), b(3))
+          i += 1
         }
+        val b = new Array[Int](4)
+        var k = 0
+        while (k < 64) {
+          if (s(k) * 64L > sum) b(k / 16) |= 1 << (k % 16)
+          k += 1
+        }
+        AHash(r.doc_id, b(0), b(1), b(2), b(3))
       }
+    }
   }
 
   /** Manku pigeonhole pair search over a 64-bit hash carried as 4×16-
@@ -1288,16 +1281,14 @@ object Multimodal {
   }
 
   def pHash(media: DataFrame): Dataset[PHash] = {
-    import media.sparkSession.implicits._
-    Parallelism.ensure(media).select(col("doc_id"), col("payload")).as[MediaRecord]
-      .mapPartitions { records =>
-        records.map { r =>
-          val img = Jpeg.decodeColor(r.payload)
-          val b = pHashBlocksOfRgb(img.pixels, img.width, img.height,
-            img.channels)
-          PHash(r.doc_id, b(0), b(1), b(2), b(3))
-        }
+    perPayload(Parallelism.ensure(media)) { records =>
+      records.map { r =>
+        val img = Jpeg.decodeColor(r.payload)
+        val b = pHashBlocksOfRgb(img.pixels, img.width, img.height,
+          img.channels)
+        PHash(r.doc_id, b(0), b(1), b(2), b(3))
       }
+    }
   }
 
   /** Perceptual near-duplicate pairs by DCT pHash within Hamming

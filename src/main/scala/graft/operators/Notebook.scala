@@ -73,18 +73,13 @@ object Notebook {
     * markdown/code starting with markdown.
     */
   def asNotebookDocs(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    Parallelism.ensure(docs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val lines = text.split(" ", -1).grouped(WordsPerLine)
-            .map(_.mkString(" ")).toSeq
-          (id, renderIpynb(lines))
-        }
+    Multimodal.perDocument(Parallelism.ensure(docs)) { rows =>
+      rows.map { case (id, text) =>
+        val lines = text.split(" ", -1).grouped(WordsPerLine)
+          .map(_.mkString(" ")).toSeq
+        (id, renderIpynb(lines))
       }
-      .toDF("doc_id", "ipynb")
+    }.toDF("doc_id", "ipynb")
   }
 
   /** nbformat-4 schema (the subset the extraction reads — from_json

@@ -266,33 +266,28 @@ object Ogg {
     * 255-lacing span on some ids).
     */
   def asOggDocs(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    Parallelism.ensure(docs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val nWords = text.split(" ", -1).length
-          val audioPages = math.max(1, (nWords + 15) / 16)
-          val langs = Array("eng", "und", "fra", "deu")
-          val comments = Seq(
-            s"TITLE=doc $id",
-            s"ARTIST=writer ${id % 7}",
-            s"LANGUAGE=${langs((id % 4).toInt)}",
-            // 300 x's: the comment packet tops 255 bytes and spans
-            // lacing segments — the reassembly path is always live
-            "PAD=" + ("x" * 300))
-          val m = OggMeta(
-            serial = (id & 0x7FFFFFFF).toInt,
-            channels = 1 + (id % 2).toInt,
-            sampleRate = 8000 * (1 + (id % 5).toInt),
-            vendor = "graft-0.1",
-            comments = comments,
-            lastGranule = 0L, pages = 0)
-          (id, encode(m, audioPages, 64L * 16))
-        }
+    Multimodal.perDocument(Parallelism.ensure(docs)) { rows =>
+      rows.map { case (id, text) =>
+        val nWords = text.split(" ", -1).length
+        val audioPages = math.max(1, (nWords + 15) / 16)
+        val langs = Array("eng", "und", "fra", "deu")
+        val comments = Seq(
+          s"TITLE=doc $id",
+          s"ARTIST=writer ${id % 7}",
+          s"LANGUAGE=${langs((id % 4).toInt)}",
+          // 300 x's: the comment packet tops 255 bytes and spans
+          // lacing segments — the reassembly path is always live
+          "PAD=" + ("x" * 300))
+        val m = OggMeta(
+          serial = (id & 0x7FFFFFFF).toInt,
+          channels = 1 + (id % 2).toInt,
+          sampleRate = 8000 * (1 + (id % 5).toInt),
+          vendor = "graft-0.1",
+          comments = comments,
+          lastGranule = 0L, pages = 0)
+        (id, encode(m, audioPages, 64L * 16))
       }
-      .toDF("doc_id", "ogg")
+    }.toDF("doc_id", "ogg")
   }
 
   final case class OggRow(doc_id: Long, serial: Int, channels: Int,

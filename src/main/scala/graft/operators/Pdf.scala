@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
 
 /** PDF text extraction — the single biggest untapped document source in
   * real training corpora. Implements the CLASSIC subset of the
@@ -1086,22 +1085,17 @@ object Pdf {
     * supports appears in the corpus under the one q386 oracle.
     */
   def asPdfMedia(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    Parallelism.ensure(docs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val words = text.split(" ", -1).toSeq
-          val lines = words.grouped(WordsPerLine).map(_.mkString(" ")).toSeq
-          val pages = lines.grouped(LinesPerPage).map(_.toSeq).toSeq
-          val payload = encode(if (pages.isEmpty) Seq(Seq("")) else pages,
-            style = (id % 3).toInt, compress = id % 2 == 0,
-            xrefStream = id % 2 == 1, predictor = id % 4 == 3)
-          Multimodal.MediaRecord(id, payload)
-        }
+    Multimodal.perDocument(Parallelism.ensure(docs)) { rows =>
+      rows.map { case (id, text) =>
+        val words = text.split(" ", -1).toSeq
+        val lines = words.grouped(WordsPerLine).map(_.mkString(" ")).toSeq
+        val pages = lines.grouped(LinesPerPage).map(_.toSeq).toSeq
+        val payload = encode(if (pages.isEmpty) Seq(Seq("")) else pages,
+          style = (id % 3).toInt, compress = id % 2 == 0,
+          xrefStream = id % 2 == 1, predictor = id % 4 == 3)
+        Multimodal.MediaRecord(id, payload)
       }
-      .toDF("doc_id", "payload")
+    }.toDF("doc_id", "payload")
   }
 
   final case class PdfText(doc_id: Long, n_pages: Int, text: String)
@@ -1110,14 +1104,11 @@ object Pdf {
     * driver. `text` is all pages' text joined with newlines.
     */
   def extractTexts(media: DataFrame): Dataset[PdfText] = {
-    import media.sparkSession.implicits._
-    media.select(col("doc_id"), col("payload"))
-      .as[Multimodal.MediaRecord]
-      .mapPartitions { records =>
-        records.map { r =>
-          val pages = extractText(r.payload)
-          PdfText(r.doc_id, pages.size, pages.mkString("\n"))
-        }
+    Multimodal.perPayload(media) { records =>
+      records.map { r =>
+        val pages = extractText(r.payload)
+        PdfText(r.doc_id, pages.size, pages.mkString("\n"))
       }
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
 
 /** RTF text extraction — the legacy rich-text format still abundant in
   * older document corpora (court filings, government archives, email
@@ -227,33 +226,25 @@ object Rtf {
   val WordsPerParagraph = 7
 
   def asRtfMedia(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    Parallelism.ensure(docs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val paras = text.split(" ", -1).grouped(WordsPerParagraph)
-            .map(_.mkString(" ")).toSeq
-          Multimodal.MediaRecord(id,
-            encode(if (paras.isEmpty) Seq("") else paras))
-        }
+    Multimodal.perDocument(Parallelism.ensure(docs)) { rows =>
+      rows.map { case (id, text) =>
+        val paras = text.split(" ", -1).grouped(WordsPerParagraph)
+          .map(_.mkString(" ")).toSeq
+        Multimodal.MediaRecord(id,
+          encode(if (paras.isEmpty) Seq("") else paras))
       }
-      .toDF("doc_id", "payload")
+    }.toDF("doc_id", "payload")
   }
 
   final case class RtfText(doc_id: Long, n_paragraphs: Int, text: String)
 
   /** Distributed extraction; `text` = paragraphs joined by newlines. */
   def extractTexts(media: DataFrame): Dataset[RtfText] = {
-    import media.sparkSession.implicits._
-    media.select(col("doc_id"), col("payload"))
-      .as[Multimodal.MediaRecord]
-      .mapPartitions { records =>
-        records.map { r =>
-          val paras = extractText(r.payload)
-          RtfText(r.doc_id, paras.size, paras.mkString("\n"))
-        }
+    Multimodal.perPayload(media) { records =>
+      records.map { r =>
+        val paras = extractText(r.payload)
+        RtfText(r.doc_id, paras.size, paras.mkString("\n"))
       }
+    }
   }
 }

@@ -242,18 +242,13 @@ object Sitemap {
     * `<url>` per [[WordsPerUrl]]-word group, fields from [[entryFor]].
     */
   def asSitemapDocs(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    Parallelism.ensure(docs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val n = math.max(1,
-            (text.split(" ", -1).length + WordsPerUrl - 1) / WordsPerUrl)
-          (id, renderUrlset((0 until n).map(i => entryFor(id, i))))
-        }
+    Multimodal.perDocument(Parallelism.ensure(docs)) { rows =>
+      rows.map { case (id, text) =>
+        val n = math.max(1,
+          (text.split(" ", -1).length + WordsPerUrl - 1) / WordsPerUrl)
+        (id, renderUrlset((0 until n).map(i => entryFor(id, i))))
       }
-      .toDF("doc_id", "sitemap")
+    }.toDF("doc_id", "sitemap")
   }
 
   final case class SitemapRow(doc_id: Long, n_urls: Int, locs_md5: String,

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
 
 /** Baseline TIFF 6.0 codec + dataset operators — the fourth real image
   * container after JPEG, PNG, and GIF ([[Jpeg]], [[Multimodal.Png]],
@@ -422,32 +421,27 @@ object Tiff {
     * pass; payloads never at the driver.
     */
   def asTiffMedia(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    Parallelism.ensure(docs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        val w = Multimodal.ImgWidth
-        rows.map { case (id, text) =>
-          val pix = Multimodal.pixelsOf(text)
-          val h = pix.length / w
-          val rgb = new Array[Byte](pix.length * 3)
-          var i = 0
-          while (i < pix.length) {
-            val (r, g, b, _) = Multimodal.colorOf(pix(i) & 0xff)
-            rgb(i * 3) = r.toByte; rgb(i * 3 + 1) = g.toByte
-            rgb(i * 3 + 2) = b.toByte
-            i += 1
-          }
-          val comp = (id % 3) match {
-            case 0 => CompNone
-            case 1 => CompPackBits
-            case _ => CompLzw
-          }
-          Multimodal.MediaRecord(id, encode(w, h, 3, comp, rgb))
+    Multimodal.perDocument(Parallelism.ensure(docs)) { rows =>
+      val w = Multimodal.ImgWidth
+      rows.map { case (id, text) =>
+        val pix = Multimodal.pixelsOf(text)
+        val h = pix.length / w
+        val rgb = new Array[Byte](pix.length * 3)
+        var i = 0
+        while (i < pix.length) {
+          val (r, g, b, _) = Multimodal.colorOf(pix(i) & 0xff)
+          rgb(i * 3) = r.toByte; rgb(i * 3 + 1) = g.toByte
+          rgb(i * 3 + 2) = b.toByte
+          i += 1
         }
+        val comp = (id % 3) match {
+          case 0 => CompNone
+          case 1 => CompPackBits
+          case _ => CompLzw
+        }
+        Multimodal.MediaRecord(id, encode(w, h, 3, comp, rgb))
       }
-      .toDF("doc_id", "payload")
+    }.toDF("doc_id", "payload")
   }
 
   // ------------------------------------------------------------------
@@ -544,52 +538,45 @@ object Tiff {
     * the sibling containers.
     */
   def asBmpMedia(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    Parallelism.ensure(docs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        val w = Multimodal.ImgWidth
-        rows.map { case (id, text) =>
-          val pix = Multimodal.pixelsOf(text)
-          val h = pix.length / w
-          val rgb = new Array[Byte](pix.length * 3)
-          var i = 0
-          while (i < pix.length) {
-            val (r, g, b, _) = Multimodal.colorOf(pix(i) & 0xff)
-            rgb(i * 3) = r.toByte; rgb(i * 3 + 1) = g.toByte
-            rgb(i * 3 + 2) = b.toByte
-            i += 1
-          }
-          Multimodal.MediaRecord(id, Bmp.encode(w, h, rgb))
+    Multimodal.perDocument(Parallelism.ensure(docs)) { rows =>
+      val w = Multimodal.ImgWidth
+      rows.map { case (id, text) =>
+        val pix = Multimodal.pixelsOf(text)
+        val h = pix.length / w
+        val rgb = new Array[Byte](pix.length * 3)
+        var i = 0
+        while (i < pix.length) {
+          val (r, g, b, _) = Multimodal.colorOf(pix(i) & 0xff)
+          rgb(i * 3) = r.toByte; rgb(i * 3 + 1) = g.toByte
+          rgb(i * 3 + 2) = b.toByte
+          i += 1
         }
+        Multimodal.MediaRecord(id, Bmp.encode(w, h, rgb))
       }
-      .toDF("doc_id", "payload")
+    }.toDF("doc_id", "payload")
   }
 
   final case class BmpMeta(doc_id: Long, width: Int, height: Int,
                            n_pixels: Int, rgb_md5: String, rgb_sum: Long)
 
   def parseBmpMeta(media: DataFrame): Dataset[BmpMeta] = {
-    import media.sparkSession.implicits._
-    Parallelism.ensure(media).select(col("doc_id"), col("payload")).as[Multimodal.MediaRecord]
-      .mapPartitions { records =>
-        val hex = "0123456789abcdef".toCharArray
-        records.map { r =>
-          val img = Bmp.decode(r.payload)
-          val sb = new java.lang.StringBuilder(img.pixels.length * 2)
-          var sum = 0L
-          img.pixels.foreach { b =>
-            val v = b & 0xff
-            sb.append(hex(v >> 4)).append(hex(v & 0xf))
-            sum += v
-          }
-          BmpMeta(r.doc_id, img.width, img.height, img.width * img.height,
-            java.security.MessageDigest.getInstance("MD5")
-              .digest(sb.toString.getBytes("US-ASCII"))
-              .map(b => f"$b%02x").mkString, sum)
+    Multimodal.perPayload(Parallelism.ensure(media)) { records =>
+      val hex = "0123456789abcdef".toCharArray
+      records.map { r =>
+        val img = Bmp.decode(r.payload)
+        val sb = new java.lang.StringBuilder(img.pixels.length * 2)
+        var sum = 0L
+        img.pixels.foreach { b =>
+          val v = b & 0xff
+          sb.append(hex(v >> 4)).append(hex(v & 0xf))
+          sum += v
         }
+        BmpMeta(r.doc_id, img.width, img.height, img.width * img.height,
+          java.security.MessageDigest.getInstance("MD5")
+            .digest(sb.toString.getBytes("US-ASCII"))
+            .map(b => f"$b%02x").mkString, sum)
       }
+    }
   }
 
   final case class TiffMeta(doc_id: Long, width: Int, height: Int,
@@ -601,28 +588,26 @@ object Tiff {
     * included), not construction metadata.
     */
   def parseTiffMeta(media: DataFrame): Dataset[TiffMeta] = {
-    import media.sparkSession.implicits._
-    Parallelism.ensure(media).select(col("doc_id"), col("payload")).as[Multimodal.MediaRecord]
-      .mapPartitions { records =>
-        val hex = "0123456789abcdef".toCharArray
-        records.map { r =>
-          val img = decode(r.payload)
-          val n = img.width * img.height
-          val sb = new java.lang.StringBuilder(n * 6)
-          var sum = 0L
-          var i = 0
-          while (i < n * img.channels) {
-            val v = img.pixels(i) & 0xff
-            sb.append(hex(v >> 4)).append(hex(v & 0xf))
-            sum += v
-            i += 1
-          }
-          TiffMeta(r.doc_id, img.width, img.height, img.channels,
-            img.compression, n,
-            java.security.MessageDigest.getInstance("MD5")
-              .digest(sb.toString.getBytes("US-ASCII"))
-              .map(b => f"$b%02x").mkString, sum)
+    Multimodal.perPayload(Parallelism.ensure(media)) { records =>
+      val hex = "0123456789abcdef".toCharArray
+      records.map { r =>
+        val img = decode(r.payload)
+        val n = img.width * img.height
+        val sb = new java.lang.StringBuilder(n * 6)
+        var sum = 0L
+        var i = 0
+        while (i < n * img.channels) {
+          val v = img.pixels(i) & 0xff
+          sb.append(hex(v >> 4)).append(hex(v & 0xf))
+          sum += v
+          i += 1
         }
+        TiffMeta(r.doc_id, img.width, img.height, img.channels,
+          img.compression, n,
+          java.security.MessageDigest.getInstance("MD5")
+            .digest(sb.toString.getBytes("US-ASCII"))
+            .map(b => f"$b%02x").mkString, sum)
       }
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
 
 /** WebP-lossless (VP8L) codec — the most common modern web image
   * format, implemented from the published "WebP Lossless Bitstream
@@ -547,31 +546,26 @@ object Webp {
     * oracle chain is shared.
     */
   def asWebpMedia(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
     // VP8L encode (package-merge + canonical codes per doc) is the
     // most expensive per-row media builder here; a byte-small scan
     // folding into one task serializes it (the q193/q391 lesson)
-    Parallelism.ensure(docs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val pix = Multimodal.pixelsOf(text)
-          val h = pix.length / Multimodal.ImgWidth
-          val argb = new Array[Int](pix.length)
-          var i = 0
-          while (i < pix.length) {
-            val v = pix(i) & 0xff
-            val (rr, gg, bb, _) = Multimodal.colorOf(v)
-            val aa = 255 - (v % 32)
-            argb(i) = (aa << 24) | (rr << 16) | (gg << 8) | bb
-            i += 1
-          }
-          Multimodal.MediaRecord(id,
-            encode(Multimodal.ImgWidth, h, argb))
+    Multimodal.perDocument(Parallelism.ensure(docs)) { rows =>
+      rows.map { case (id, text) =>
+        val pix = Multimodal.pixelsOf(text)
+        val h = pix.length / Multimodal.ImgWidth
+        val argb = new Array[Int](pix.length)
+        var i = 0
+        while (i < pix.length) {
+          val v = pix(i) & 0xff
+          val (rr, gg, bb, _) = Multimodal.colorOf(v)
+          val aa = 255 - (v % 32)
+          argb(i) = (aa << 24) | (rr << 16) | (gg << 8) | bb
+          i += 1
         }
+        Multimodal.MediaRecord(id,
+          encode(Multimodal.ImgWidth, h, argb))
       }
-      .toDF("doc_id", "payload")
+    }.toDF("doc_id", "payload")
   }
 
   final case class WebpMeta(doc_id: Long, format: String, width: Int,
@@ -582,36 +576,33 @@ object Webp {
     * the cross-engine comparison the PNG/JPEG families use.
     */
   def parseWebpMeta(media: DataFrame): Dataset[WebpMeta] = {
-    import media.sparkSession.implicits._
-    media.select(col("doc_id"), col("payload"))
-      .as[Multimodal.MediaRecord]
-      .mapPartitions { records =>
-        val hex = "0123456789abcdef".toCharArray
-        records.map { rec =>
-          val img = decode(rec.payload)
-          val n = img.width * img.height
-          val sb = new java.lang.StringBuilder(n * 6)
-          var rgbSum = 0L
-          var alphaSum = 0L
-          var i = 0
-          while (i < n) {
-            val px = img.argb(i)
-            val rr = (px >> 16) & 0xff
-            val gg = (px >> 8) & 0xff
-            val bb = px & 0xff
-            sb.append(hex(rr >> 4)).append(hex(rr & 0xf))
-            sb.append(hex(gg >> 4)).append(hex(gg & 0xf))
-            sb.append(hex(bb >> 4)).append(hex(bb & 0xf))
-            rgbSum += rr + gg + bb
-            alphaSum += (px >>> 24) & 0xff
-            i += 1
-          }
-          WebpMeta(rec.doc_id, "image/webp", img.width, img.height, n,
-            java.security.MessageDigest.getInstance("MD5")
-              .digest(sb.toString.getBytes("US-ASCII"))
-              .map(b => f"$b%02x").mkString,
-            rgbSum, alphaSum)
+    Multimodal.perPayload(media) { records =>
+      val hex = "0123456789abcdef".toCharArray
+      records.map { rec =>
+        val img = decode(rec.payload)
+        val n = img.width * img.height
+        val sb = new java.lang.StringBuilder(n * 6)
+        var rgbSum = 0L
+        var alphaSum = 0L
+        var i = 0
+        while (i < n) {
+          val px = img.argb(i)
+          val rr = (px >> 16) & 0xff
+          val gg = (px >> 8) & 0xff
+          val bb = px & 0xff
+          sb.append(hex(rr >> 4)).append(hex(rr & 0xf))
+          sb.append(hex(gg >> 4)).append(hex(gg & 0xf))
+          sb.append(hex(bb >> 4)).append(hex(bb & 0xf))
+          rgbSum += rr + gg + bb
+          alphaSum += (px >>> 24) & 0xff
+          i += 1
         }
+        WebpMeta(rec.doc_id, "image/webp", img.width, img.height, n,
+          java.security.MessageDigest.getInstance("MD5")
+            .digest(sb.toString.getBytes("US-ASCII"))
+            .map(b => f"$b%02x").mkString,
+          rgbSum, alphaSum)
       }
+    }
   }
 }

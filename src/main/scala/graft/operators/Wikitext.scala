@@ -284,18 +284,13 @@ object Wikitext {
     * document text — the structure-dropping case).
     */
   def asWikitextDocs(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    Parallelism.ensure(docs)
-      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val words = text.split(" ", -1).toSeq
-          val tbl = if (id % 4 == 0) Some(s"cell $id") else None
-          (id, render(words, tbl))
-        }
+    Multimodal.perDocument(Parallelism.ensure(docs)) { rows =>
+      rows.map { case (id, text) =>
+        val words = text.split(" ", -1).toSeq
+        val tbl = if (id % 4 == 0) Some(s"cell $id") else None
+        (id, render(words, tbl))
       }
-      .toDF("doc_id", "wikitext")
+    }.toDF("doc_id", "wikitext")
   }
 
   final case class WtText(doc_id: Long, n_lines: Int, n_tables: Int,
