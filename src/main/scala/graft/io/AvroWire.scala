@@ -1,5 +1,6 @@
 package graft.io
 
+import graft.functions.Digest
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
@@ -387,8 +388,7 @@ object AvroWire {
           .toSeq
         if (recs.nonEmpty) {
           val pid = TaskContext.getPartitionId()
-          val sync = java.security.MessageDigest.getInstance("MD5")
-            .digest(s"graft-avro-$pid".getBytes("UTF-8"))
+          val sync = Digest.md5(s"graft-avro-$pid".getBytes("UTF-8"))
           val bytes =
             renderContainer(DocSchemaJson, schema, recs, "deflate", sync)
           val fsw = new org.apache.hadoop.fs.Path(path)

@@ -1,5 +1,6 @@
 package graft.io
 
+import graft.functions.Digest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -87,8 +88,7 @@ object Warc {
     val http = (s"HTTP/1.1 200 OK\r\nContent-Type: $contentType\r\n" +
       s"Content-Length: ${body.length}\r\n\r\n").getBytes(UTF_8)
     val payload = http ++ body
-    val id = "<urn:graft:" + java.security.MessageDigest.getInstance("MD5")
-      .digest(uri.getBytes(UTF_8)).map("%02x".format(_)).mkString + ">"
+    val id = "<urn:graft:" + Digest.md5Hex(uri) + ">"
     record(Seq(
       "WARC-Type" -> "response",
       "WARC-Target-URI" -> uri,

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Digest
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -178,7 +179,6 @@ object Audio {
         struct(col("format"), col("sample_rate"), col("n_samples")).as("meta"))
   }
 
-  final case class AudioRecord(doc_id: Long, payload: Array[Byte])
   final case class AudioFeatures(doc_id: Long, sample_rate: Int,
                                  n_samples: Int, duration_ms: Double,
                                  sum_sq: Long, rms: Double,
@@ -201,43 +201,41 @@ object Audio {
     */
   def extractFeatures(media: DataFrame, every: Int = 4): Dataset[AudioFeatures] = {
     require(every > 0, s"bad decimation factor $every")
-    import media.sparkSession.implicits._
-    media.select(col("doc_id"), col("payload")).as[AudioRecord]
-      .mapPartitions { records =>
-        records.map { r =>
-          val pcm = Wav.decodeMono(r.payload)
-          val s = pcm.samples
-          var sumSq = 0L
-          var zc = 0
-          var peak = 0
-          var i = 0
-          while (i < s.length) {
-            val v = s(i).toInt
-            sumSq += v.toLong * v
-            val a = math.abs(v)
-            if (a > peak) peak = a
-            if (i > 0 && (v ^ s(i - 1).toInt) < 0) zc += 1
-            i += 1
-          }
-          // decimate, re-encode, re-decode: the second codec round trip
-          val dec = Array.tabulate[Short]((s.length + every - 1) / every)(j => s(j * every))
-          val dec2 = Wav.decode(Wav.encodePcm16(pcm.sampleRate, dec)).samples
-          var decSum = 0L
-          var j = 0
-          while (j < dec2.length) { decSum += dec2(j); j += 1 }
-          AudioFeatures(
-            doc_id = r.doc_id,
-            sample_rate = pcm.sampleRate,
-            n_samples = s.length,
-            duration_ms = s.length * 1000.0 / pcm.sampleRate,
-            sum_sq = sumSq,
-            rms = if (s.length == 0) 0.0 else math.sqrt(sumSq.toDouble / s.length),
-            zero_crossings = zc,
-            peak = peak,
-            dec_n = dec2.length,
-            dec_sum = decSum)
+    Multimodal.perPayload(media) { records =>
+      records.map { r =>
+        val pcm = Wav.decodeMono(r.payload)
+        val s = pcm.samples
+        var sumSq = 0L
+        var zc = 0
+        var peak = 0
+        var i = 0
+        while (i < s.length) {
+          val v = s(i).toInt
+          sumSq += v.toLong * v
+          val a = math.abs(v)
+          if (a > peak) peak = a
+          if (i > 0 && (v ^ s(i - 1).toInt) < 0) zc += 1
+          i += 1
         }
+        // decimate, re-encode, re-decode: the second codec round trip
+        val dec = Array.tabulate[Short]((s.length + every - 1) / every)(j => s(j * every))
+        val dec2 = Wav.decode(Wav.encodePcm16(pcm.sampleRate, dec)).samples
+        var decSum = 0L
+        var j = 0
+        while (j < dec2.length) { decSum += dec2(j); j += 1 }
+        AudioFeatures(
+          doc_id = r.doc_id,
+          sample_rate = pcm.sampleRate,
+          n_samples = s.length,
+          duration_ms = s.length * 1000.0 / pcm.sampleRate,
+          sum_sq = sumSq,
+          rms = if (s.length == 0) 0.0 else math.sqrt(sumSq.toDouble / s.length),
+          zero_crossings = zc,
+          peak = peak,
+          dec_n = dec2.length,
+          dec_sum = decSum)
       }
+    }
   }
 
   /** Rational L/M resampling core — linear interpolation with EXACT
@@ -283,27 +281,25 @@ object Audio {
     */
   def resample(media: DataFrame, l: Int, m: Int): Dataset[Resampled] = {
     require(l >= 1 && l <= 16 && m >= 1 && m <= 16, s"bad ratio $l/$m")
-    import media.sparkSession.implicits._
-    media.select(col("doc_id"), col("payload")).as[AudioRecord]
-      .mapPartitions { records =>
-        records.map { r =>
-          val pcm = Wav.decodeMono(r.payload)
-          require(pcm.sampleRate.toLong * l % m == 0,
-            s"rate ${pcm.sampleRate}·$l/$m is not integral")
-          val outRate = (pcm.sampleRate.toLong * l / m).toInt
-          val out = Wav.decode(Wav.encodePcm16(outRate,
-            resampleSamples(pcm.samples, l, m))).samples
-          var s1 = 0L
-          var s2 = 0L
-          var i = 0
-          while (i < out.length) {
-            val v = out(i).toLong
-            s1 += v; s2 += v * v
-            i += 1
-          }
-          Resampled(r.doc_id, pcm.samples.length, out.length, outRate, s1, s2)
+    Multimodal.perPayload(media) { records =>
+      records.map { r =>
+        val pcm = Wav.decodeMono(r.payload)
+        require(pcm.sampleRate.toLong * l % m == 0,
+          s"rate ${pcm.sampleRate}·$l/$m is not integral")
+        val outRate = (pcm.sampleRate.toLong * l / m).toInt
+        val out = Wav.decode(Wav.encodePcm16(outRate,
+          resampleSamples(pcm.samples, l, m))).samples
+        var s1 = 0L
+        var s2 = 0L
+        var i = 0
+        while (i < out.length) {
+          val v = out(i).toLong
+          s1 += v; s2 += v * v
+          i += 1
         }
+        Resampled(r.doc_id, pcm.samples.length, out.length, outRate, s1, s2)
       }
+    }
   }
 
   private[graft] val MelBands = 8
@@ -361,41 +357,39 @@ object Audio {
   def resampleMelEnergies(media: DataFrame, l: Int,
                           m: Int): Dataset[MelBandEnergy] = {
     require(l >= 1 && l <= 16 && m >= 1 && m <= 16, s"bad ratio $l/$m")
-    import media.sparkSession.implicits._
-    media.select(col("doc_id"), col("payload")).as[AudioRecord]
-      .mapPartitions { records =>
-        var tabsFor = -1
-        var cosT: Array[Array[Int]] = null
-        var sinT: Array[Array[Int]] = null
-        records.flatMap { r =>
-          val pcm = Wav.decodeMono(r.payload)
-          require(pcm.sampleRate.toLong * l % m == 0,
-            s"rate ${pcm.sampleRate}·$l/$m is not integral")
-          val outRate = (pcm.sampleRate.toLong * l / m).toInt
-          if (tabsFor != outRate) {
-            val (c, s) = melTables(outRate)
-            cosT = c; sinT = s; tabsFor = outRate
-          }
-          val out = resampleSamples(pcm.samples, l, m)
-          val nFrames = (out.length + MelFrame - 1) / MelFrame
-          (0 until nFrames).iterator.flatMap { fi =>
-            val start = fi * MelFrame
-            val end = math.min(start + MelFrame, out.length)
-            (0 until MelBands).iterator.map { k =>
-              var c = 0L
-              var s = 0L
-              var i = start
-              while (i < end) {
-                val v = out(i).toLong
-                c += v * cosT(k)(i - start)
-                s += v * sinT(k)(i - start)
-                i += 1
-              }
-              MelBandEnergy(r.doc_id, fi, k, c * c + s * s)
+    Multimodal.perPayload(media) { records =>
+      var tabsFor = -1
+      var cosT: Array[Array[Int]] = null
+      var sinT: Array[Array[Int]] = null
+      records.flatMap { r =>
+        val pcm = Wav.decodeMono(r.payload)
+        require(pcm.sampleRate.toLong * l % m == 0,
+          s"rate ${pcm.sampleRate}·$l/$m is not integral")
+        val outRate = (pcm.sampleRate.toLong * l / m).toInt
+        if (tabsFor != outRate) {
+          val (c, s) = melTables(outRate)
+          cosT = c; sinT = s; tabsFor = outRate
+        }
+        val out = resampleSamples(pcm.samples, l, m)
+        val nFrames = (out.length + MelFrame - 1) / MelFrame
+        (0 until nFrames).iterator.flatMap { fi =>
+          val start = fi * MelFrame
+          val end = math.min(start + MelFrame, out.length)
+          (0 until MelBands).iterator.map { k =>
+            var c = 0L
+            var s = 0L
+            var i = start
+            while (i < end) {
+              val v = out(i).toLong
+              c += v * cosT(k)(i - start)
+              s += v * sinT(k)(i - start)
+              i += 1
             }
+            MelBandEnergy(r.doc_id, fi, k, c * c + s * s)
           }
         }
       }
+    }
   }
 
   private[graft] val CepCoefs = 4
@@ -437,54 +431,52 @@ object Audio {
     */
   def resampleCepstra(media: DataFrame, l: Int, m: Int): Dataset[Cepstra] = {
     require(l >= 1 && l <= 16 && m >= 1 && m <= 16, s"bad ratio $l/$m")
-    import media.sparkSession.implicits._
-    media.select(col("doc_id"), col("payload")).as[AudioRecord]
-      .mapPartitions { records =>
-        var tabsFor = -1
-        var cosT: Array[Array[Int]] = null
-        var sinT: Array[Array[Int]] = null
-        records.flatMap { r =>
-          val pcm = Wav.decodeMono(r.payload)
-          require(pcm.sampleRate.toLong * l % m == 0,
-            s"rate ${pcm.sampleRate}·$l/$m is not integral")
-          val outRate = (pcm.sampleRate.toLong * l / m).toInt
-          if (tabsFor != outRate) {
-            val (c, s) = melTables(outRate)
-            cosT = c; sinT = s; tabsFor = outRate
-          }
-          val out = resampleSamples(pcm.samples, l, m)
-          val nFrames = (out.length + MelFrame - 1) / MelFrame
-          (0 until nFrames).iterator.map { fi =>
-            val start = fi * MelFrame
-            val end = math.min(start + MelFrame, out.length)
-            val lv = new Array[Long](MelBands)
-            var k = 0
-            while (k < MelBands) {
-              var c = 0L
-              var s = 0L
-              var i = start
-              while (i < end) {
-                val v = out(i).toLong
-                c += v * cosT(k)(i - start)
-                s += v * sinT(k)(i - start)
-                i += 1
-              }
-              lv(k) = ilog16(c * c + s * s)
-              k += 1
+    Multimodal.perPayload(media) { records =>
+      var tabsFor = -1
+      var cosT: Array[Array[Int]] = null
+      var sinT: Array[Array[Int]] = null
+      records.flatMap { r =>
+        val pcm = Wav.decodeMono(r.payload)
+        require(pcm.sampleRate.toLong * l % m == 0,
+          s"rate ${pcm.sampleRate}·$l/$m is not integral")
+        val outRate = (pcm.sampleRate.toLong * l / m).toInt
+        if (tabsFor != outRate) {
+          val (c, s) = melTables(outRate)
+          cosT = c; sinT = s; tabsFor = outRate
+        }
+        val out = resampleSamples(pcm.samples, l, m)
+        val nFrames = (out.length + MelFrame - 1) / MelFrame
+        (0 until nFrames).iterator.map { fi =>
+          val start = fi * MelFrame
+          val end = math.min(start + MelFrame, out.length)
+          val lv = new Array[Long](MelBands)
+          var k = 0
+          while (k < MelBands) {
+            var c = 0L
+            var s = 0L
+            var i = start
+            while (i < end) {
+              val v = out(i).toLong
+              c += v * cosT(k)(i - start)
+              s += v * sinT(k)(i - start)
+              i += 1
             }
-            val cc = new Array[Long](CepCoefs)
-            var q = 0
-            while (q < CepCoefs) {
-              var acc = 0L
-              k = 0
-              while (k < MelBands) { acc += CepDct(q)(k) * lv(k); k += 1 }
-              cc(q) = acc
-              q += 1
-            }
-            Cepstra(r.doc_id, fi, cc(0), cc(1), cc(2), cc(3))
+            lv(k) = ilog16(c * c + s * s)
+            k += 1
           }
+          val cc = new Array[Long](CepCoefs)
+          var q = 0
+          while (q < CepCoefs) {
+            var acc = 0L
+            k = 0
+            while (k < MelBands) { acc += CepDct(q)(k) * lv(k); k += 1 }
+            cc(q) = acc
+            q += 1
+          }
+          Cepstra(r.doc_id, fi, cc(0), cc(1), cc(2), cc(3))
         }
       }
+    }
   }
 
   /** G.711 µ-law / A-law — the telephony companding codecs speech
@@ -709,7 +701,6 @@ object Audio {
       si.bits(0, 3) // channels - 1
       si.bits(15, 5) // bits per sample - 1
       si.bits(samples.length.toLong, 36)
-      val md = java.security.MessageDigest.getInstance("MD5")
       val pcmBytes = new Array[Byte](samples.length * 2)
       var i = 0
       while (i < samples.length) {
@@ -718,7 +709,7 @@ object Audio {
         i += 1
       }
       si.bytes.foreach(b => out.write(b & 0xff))
-      out.write(md.digest(pcmBytes), 0, 16)
+      out.write(Digest.md5(pcmBytes), 0, 16)
 
       val sInt = samples.map(_.toInt)
       var frameNo = 0L
@@ -945,7 +936,6 @@ object Audio {
       require(written == outSamples.length,
         s"decoded $written of ${outSamples.length} declared samples")
       // the format's own end-to-end check: MD5 of the unencoded PCM
-      val md = java.security.MessageDigest.getInstance("MD5")
       val pcmBytes = new Array[Byte](outSamples.length * 2)
       var k = 0
       while (k < outSamples.length) {
@@ -953,7 +943,7 @@ object Audio {
         pcmBytes(k * 2 + 1) = ((outSamples(k) >> 8) & 0xff).toByte
         k += 1
       }
-      require(java.util.Arrays.equals(md.digest(pcmBytes), declaredMd5),
+      require(java.util.Arrays.equals(Digest.md5(pcmBytes), declaredMd5),
         "STREAMINFO MD5 mismatch — decoded PCM differs from encoded PCM")
       Decoded(sampleRate, nFrames, outSamples)
     }
@@ -1081,34 +1071,28 @@ object Audio {
     * reconstruction under one hash. One narrow mapPartitions pass.
     */
   def g711Compand(media: DataFrame): Dataset[Companded] = {
-    import media.sparkSession.implicits._
-    media.select(col("doc_id"), col("payload")).as[AudioRecord]
-      .mapPartitions { records =>
-        val hex = "0123456789abcdef".toCharArray
-        records.map { r =>
-          val s = Wav.decodeMono(r.payload).samples
-          val ub = new java.lang.StringBuilder(s.length * 2)
-          val ab = new java.lang.StringBuilder(s.length * 2)
-          var us = 0L
-          var as = 0L
-          var i = 0
-          while (i < s.length) {
-            val x = s(i).toInt
-            val uc = G711.ulawEncode(x)
-            val ac = G711.alawEncode(x)
-            ub.append(hex(uc >> 4)).append(hex(uc & 0xf))
-            ab.append(hex(ac >> 4)).append(hex(ac & 0xf))
-            us += G711.ulawDecode(uc)
-            as += G711.alawDecode(ac)
-            i += 1
-          }
-          def md5(sb: java.lang.StringBuilder): String =
-            java.security.MessageDigest.getInstance("MD5")
-              .digest(sb.toString.getBytes("US-ASCII"))
-              .map(b => f"$b%02x").mkString
-          Companded(r.doc_id, s.length, md5(ub), us, md5(ab), as)
+    Multimodal.perPayload(media) { records =>
+      records.map { r =>
+        val s = Wav.decodeMono(r.payload).samples
+        val ub = new Array[Byte](s.length)
+        val ab = new Array[Byte](s.length)
+        var us = 0L
+        var as = 0L
+        var i = 0
+        while (i < s.length) {
+          val x = s(i).toInt
+          val uc = G711.ulawEncode(x)
+          val ac = G711.alawEncode(x)
+          ub(i) = uc.toByte
+          ab(i) = ac.toByte
+          us += G711.ulawDecode(uc)
+          as += G711.alawDecode(ac)
+          i += 1
         }
+        Companded(r.doc_id, s.length, Digest.md5Hex(Digest.hex(ub)), us,
+          Digest.md5Hex(Digest.hex(ab)), as)
       }
+    }
   }
 
   /** IMA ADPCM (DVI4/WAV flavor) — the 4-bit adaptive-delta codec
@@ -1245,29 +1229,19 @@ object Audio {
     * both under one hash. One narrow mapPartitions pass.
     */
   def adpcmRoundtrip(media: DataFrame): Dataset[Adpcm] = {
-    import media.sparkSession.implicits._
-    media.select(col("doc_id"), col("payload")).as[AudioRecord]
-      .mapPartitions { records =>
-        val hex = "0123456789abcdef".toCharArray
-        records.map { r =>
-          val s = Wav.decodeMono(r.payload).samples
-          val code = ImaAdpcm.encode(s)
-          val back = ImaAdpcm.decode(code, s.length)
-          val sb = new java.lang.StringBuilder(code.length * 2)
-          code.foreach { b =>
-            sb.append(hex((b >> 4) & 0xf)).append(hex(b & 0xf))
-          }
-          var s1 = 0L
-          var s2 = 0L
-          back.foreach { v => s1 += v; s2 += v.toLong * v }
-          Adpcm(r.doc_id, s.length,
-            (s.length + ImaAdpcm.BlockSamples - 1) / ImaAdpcm.BlockSamples,
-            java.security.MessageDigest.getInstance("MD5")
-              .digest(sb.toString.getBytes("US-ASCII"))
-              .map(b => f"$b%02x").mkString,
-            s1, s2)
-        }
+    Multimodal.perPayload(media) { records =>
+      records.map { r =>
+        val s = Wav.decodeMono(r.payload).samples
+        val code = ImaAdpcm.encode(s)
+        val back = ImaAdpcm.decode(code, s.length)
+        var s1 = 0L
+        var s2 = 0L
+        back.foreach { v => s1 += v; s2 += v.toLong * v }
+        Adpcm(r.doc_id, s.length,
+          (s.length + ImaAdpcm.BlockSamples - 1) / ImaAdpcm.BlockSamples,
+          Digest.md5Hex(Digest.hex(code)), s1, s2)
       }
+    }
   }
 
   /** ID3v2.3 tag + MPEG-1 Layer III frame-header metadata — the
@@ -1433,15 +1407,13 @@ object Audio {
                            total_samples: Long)
 
   def parseMp3Meta(media: DataFrame): Dataset[Mp3Meta] = {
-    import media.sparkSession.implicits._
-    media.select(col("doc_id"), col("payload")).as[AudioRecord]
-      .mapPartitions { records =>
-        records.map { r =>
-          val m = Id3.parse(r.payload)
-          Mp3Meta(r.doc_id, m.title, m.artist, m.album, m.track,
-            m.bitrate_kbps, m.sample_rate, m.n_frames, m.total_samples)
-        }
+    Multimodal.perPayload(media) { records =>
+      records.map { r =>
+        val m = Id3.parse(r.payload)
+        Mp3Meta(r.doc_id, m.title, m.artist, m.album, m.track,
+          m.bitrate_kbps, m.sample_rate, m.n_frames, m.total_samples)
       }
+    }
   }
 
   /** Attach a STEREO WAV payload per document: the left channel is the
@@ -1478,34 +1450,32 @@ object Audio {
     * emit exact integer aggregates of the second decode.
     */
   def downmixStereo(media: DataFrame): Dataset[Downmixed] = {
-    import media.sparkSession.implicits._
-    media.select(col("doc_id"), col("payload")).as[AudioRecord]
-      .mapPartitions { records =>
-        records.map { r =>
-          val pcm = Wav.decode(r.payload)
-          require(pcm.channels == 2,
-            s"downmixStereo needs stereo input, got ${pcm.channels}")
-          val n = pcm.samples.length / 2
-          val mono = new Array[Short](n)
-          var i = 0
-          while (i < n) {
-            mono(i) = Math.floorDiv(
-              pcm.samples(2 * i) + pcm.samples(2 * i + 1), 2).toShort
-            i += 1
-          }
-          val back = Wav.decode(
-            Wav.encodePcm16N(pcm.sampleRate, 1, mono)).samples
-          var s1 = 0L
-          var s2 = 0L
-          var peak = 0
-          back.foreach { v =>
-            s1 += v; s2 += v.toLong * v
-            val a = math.abs(v.toInt)
-            if (a > peak) peak = a
-          }
-          Downmixed(r.doc_id, back.length, s1, s2, peak)
+    Multimodal.perPayload(media) { records =>
+      records.map { r =>
+        val pcm = Wav.decode(r.payload)
+        require(pcm.channels == 2,
+          s"downmixStereo needs stereo input, got ${pcm.channels}")
+        val n = pcm.samples.length / 2
+        val mono = new Array[Short](n)
+        var i = 0
+        while (i < n) {
+          mono(i) = Math.floorDiv(
+            pcm.samples(2 * i) + pcm.samples(2 * i + 1), 2).toShort
+          i += 1
         }
+        val back = Wav.decode(
+          Wav.encodePcm16N(pcm.sampleRate, 1, mono)).samples
+        var s1 = 0L
+        var s2 = 0L
+        var peak = 0
+        back.foreach { v =>
+          s1 += v; s2 += v.toLong * v
+          val a = math.abs(v.toInt)
+          if (a > peak) peak = a
+        }
+        Downmixed(r.doc_id, back.length, s1, s2, peak)
       }
+    }
   }
 
   final case class VadSegment(doc_id: Long, seg_idx: Int, start_frame: Int,
@@ -1523,50 +1493,48 @@ object Audio {
   def vadSegments(media: DataFrame, frameLen: Int,
                   threshold: Long): Dataset[VadSegment] = {
     require(frameLen > 0 && threshold >= 0, s"bad $frameLen/$threshold")
-    import media.sparkSession.implicits._
-    media.select(col("doc_id"), col("payload")).as[AudioRecord]
-      .mapPartitions { records =>
-        records.flatMap { r =>
-          val s = Wav.decodeMono(r.payload).samples
-          val nFrames = (s.length + frameLen - 1) / frameLen
-          val out = Vector.newBuilder[VadSegment]
-          var segIdx = 0
-          var segStart = -1
-          var segEnergy = 0L
-          var segPeak = 0
-          var fi = 0
-          while (fi <= nFrames) {
-            var active = false
-            var e = 0L
-            var peak = 0
-            if (fi < nFrames) {
-              val start = fi * frameLen
-              val end = math.min(start + frameLen, s.length)
-              var i = start
-              while (i < end) {
-                val v = s(i).toInt
-                e += v.toLong * v
-                val a = math.abs(v)
-                if (a > peak) peak = a
-                i += 1
-              }
-              active = e >= threshold
+    Multimodal.perPayload(media) { records =>
+      records.flatMap { r =>
+        val s = Wav.decodeMono(r.payload).samples
+        val nFrames = (s.length + frameLen - 1) / frameLen
+        val out = Vector.newBuilder[VadSegment]
+        var segIdx = 0
+        var segStart = -1
+        var segEnergy = 0L
+        var segPeak = 0
+        var fi = 0
+        while (fi <= nFrames) {
+          var active = false
+          var e = 0L
+          var peak = 0
+          if (fi < nFrames) {
+            val start = fi * frameLen
+            val end = math.min(start + frameLen, s.length)
+            var i = start
+            while (i < end) {
+              val v = s(i).toInt
+              e += v.toLong * v
+              val a = math.abs(v)
+              if (a > peak) peak = a
+              i += 1
             }
-            if (active) {
-              if (segStart < 0) { segStart = fi; segEnergy = 0L; segPeak = 0 }
-              segEnergy += e
-              if (peak > segPeak) segPeak = peak
-            } else if (segStart >= 0) {
-              out += VadSegment(r.doc_id, segIdx, segStart, fi - segStart,
-                segEnergy, segPeak)
-              segIdx += 1
-              segStart = -1
-            }
-            fi += 1
+            active = e >= threshold
           }
-          out.result()
+          if (active) {
+            if (segStart < 0) { segStart = fi; segEnergy = 0L; segPeak = 0 }
+            segEnergy += e
+            if (peak > segPeak) segPeak = peak
+          } else if (segStart >= 0) {
+            out += VadSegment(r.doc_id, segIdx, segStart, fi - segStart,
+              segEnergy, segPeak)
+            segIdx += 1
+            segStart = -1
+          }
+          fi += 1
         }
+        out.result()
       }
+    }
   }
 
   final case class AudioFrame(doc_id: Long, frame_idx: Int, n_samples: Int,
@@ -1582,28 +1550,26 @@ object Audio {
     */
   def frameEnergies(media: DataFrame, frameLen: Int): Dataset[AudioFrame] = {
     require(frameLen > 0, s"bad frame length $frameLen")
-    import media.sparkSession.implicits._
-    media.select(col("doc_id"), col("payload")).as[AudioRecord]
-      .mapPartitions { records =>
-        records.flatMap { r =>
-          val s = Wav.decodeMono(r.payload).samples
-          val nFrames = (s.length + frameLen - 1) / frameLen
-          (0 until nFrames).iterator.map { fi =>
-            val start = fi * frameLen
-            val end = math.min(start + frameLen, s.length)
-            var e = 0L
-            var peak = 0
-            var i = start
-            while (i < end) {
-              val v = s(i).toInt
-              e += v.toLong * v
-              val a = math.abs(v)
-              if (a > peak) peak = a
-              i += 1
-            }
-            AudioFrame(r.doc_id, fi, end - start, e, peak)
+    Multimodal.perPayload(media) { records =>
+      records.flatMap { r =>
+        val s = Wav.decodeMono(r.payload).samples
+        val nFrames = (s.length + frameLen - 1) / frameLen
+        (0 until nFrames).iterator.map { fi =>
+          val start = fi * frameLen
+          val end = math.min(start + frameLen, s.length)
+          var e = 0L
+          var peak = 0
+          var i = start
+          while (i < end) {
+            val v = s(i).toInt
+            e += v.toLong * v
+            val a = math.abs(v)
+            if (a > peak) peak = a
+            i += 1
           }
+          AudioFrame(r.doc_id, fi, end - start, e, peak)
         }
       }
+    }
   }
 }

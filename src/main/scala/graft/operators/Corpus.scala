@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.TextFunctions
+import graft.functions.{Digest, TextFunctions}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.expressions.Window
@@ -620,9 +620,6 @@ object Corpus {
       .select(col(idCol).cast("long"), col(textCol).cast("string"))
       .as[(Long, String)]
       .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def md5hex(s: String): String =
-          md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
         it.map { case (id, text0) =>
           val text = if (text0 == null) "" else text0
           val toks = text.trim.split("\\s+").filter(_.nonEmpty)
@@ -634,7 +631,7 @@ object Corpus {
           var i = 0
           while (i < toks.length) {
             val h = java.lang.Long.parseLong(
-              md5hex(s"$id:${i + 1}").substring(0, 8), 16)
+              Digest.md5Hex(s"$id:${i + 1}").substring(0, 8), 16)
             if (h % 100 < noisePct) {
               if (!inRun) {
                 if (in.nonEmpty) in.append(' ')
@@ -653,7 +650,8 @@ object Corpus {
             }
             i += 1
           }
-          (id, md5hex(in.toString), md5hex(tgt.toString), spans, nNoise)
+          (id, Digest.md5Hex(in.toString), Digest.md5Hex(tgt.toString),
+            spans, nNoise)
         }
       }
       .toDF(idCol, "input_md5", "target_md5", "n_spans", "n_noise")
@@ -1025,7 +1023,7 @@ object Corpus {
           override def hasNext: Boolean = in.hasNext
           override def next(): (Int, Int, Long, String) = {
             val (e, s, id0) = in.next()
-            val md = java.security.MessageDigest.getInstance("MD5")
+            val md = Digest.md5()
             md.update(id0.toString.getBytes("US-ASCII"))
             var n = 1L
             while (in.hasNext && in.head._1 == e && in.head._2 == s) {
@@ -1033,7 +1031,7 @@ object Corpus {
               md.update(in.next()._3.toString.getBytes("US-ASCII"))
               n += 1
             }
-            (e, s, n, md.digest().map(b => f"$b%02x").mkString)
+            (e, s, n, Digest.hex(md.digest()))
           }
         }
       }
@@ -1695,11 +1693,9 @@ object Corpus {
         rows.map { case (id, t) =>
           val norm = java.text.Normalizer
             .normalize(t, java.text.Normalizer.Form.NFC)
-          val md5 = java.security.MessageDigest.getInstance("MD5")
-            .digest(norm.getBytes("UTF-8")).map(b => f"$b%02x").mkString
           (id, if (norm == t) 0 else 1,
             t.codePointCount(0, t.length), norm.codePointCount(0, norm.length),
-            md5)
+            Digest.md5Hex(norm))
         }
       }
       .toDF("doc_id", "changed", "n_before", "n_after", "nfc_md5")

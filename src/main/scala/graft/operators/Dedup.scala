@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.TextFunctions
+import graft.functions.{Digest, TextFunctions}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -72,19 +72,7 @@ object Dedup {
     Parallelism.ensure(docs)
       .select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
       .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val hexChars = "0123456789abcdef".toCharArray
-        def md5hex(s: String): String = {
-          val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          val out = new Array[Char](32)
-          var i = 0
-          while (i < 16) {
-            out(2 * i) = hexChars((d(i) >> 4) & 0xf)
-            out(2 * i + 1) = hexChars(d(i) & 0xf)
-            i += 1
-          }
-          new String(out)
-        }
+        val md = Digest.md5()
         it.flatMap { case (id, text) =>
           val toks = text.trim.split("\\s+").filter(_.nonEmpty)
           if (toks.length < shingleN) None
@@ -111,7 +99,7 @@ object Dedup {
             }
             val mh = mins.map(w => f"$w%08x")
             val bandKeys = (0 until nBands).map { b =>
-              md5hex(mh.slice(b * rows, (b + 1) * rows).mkString("|"))
+              Digest.md5Hex(mh.slice(b * rows, (b + 1) * rows).mkString("|"))
             }
             Some(SignedDoc(id, shs, bandKeys))
           }
@@ -800,7 +788,7 @@ object Dedup {
     // under-parallel inputs and no-ops on anything already wide
     Parallelism.ensure(docs.select(col(idCol), col(textCol).cast("string")))
       .mapPartitions { rows =>
-        val md = java.security.MessageDigest.getInstance("MD5")
+        val md = Digest.md5()
         rows.flatMap { r =>
           val text = if (r.isNullAt(1)) null else r.getString(1)
           val u = if (text == null) null else UTF8String.fromString(text)
@@ -1001,11 +989,8 @@ object Dedup {
             val ends = bs.map(_ + 1) :+ bytes.length
             starts.iterator.zip(ends.iterator).zipWithIndex.map {
               case ((s, e), ci) =>
-                val md = java.security.MessageDigest.getInstance("MD5")
-                val digest = md.digest(
-                  java.util.Arrays.copyOfRange(bytes, s, e))
-                  .map(b => f"$b%02x").mkString
-                (id, ci, digest, e - s)
+                val chunk = java.util.Arrays.copyOfRange(bytes, s, e)
+                (id, ci, Digest.md5Hex(chunk), e - s)
             }
           }
         }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Digest
 import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** Exif metadata for JPEG payloads — the metadata layer real web
@@ -706,7 +707,6 @@ object Exif {
     */
   def gpsScrub(media: DataFrame): Dataset[GpsScrubbed] = {
     Multimodal.perPayload(media) { records =>
-      val hex = "0123456789abcdef".toCharArray
       records.map { r =>
         val gps = parseGps(r.payload)
         val scrubbed = if (gps.isDefined) stripGps(r.payload) else r.payload
@@ -714,23 +714,12 @@ object Exif {
         val meta = parseExif(scrubbed).getOrElse(
           throw new IllegalArgumentException("scrub lost the APP1"))
         val img = Jpeg.decodeColor(scrubbed)
-        val n = img.width * img.height
-        val sb = new java.lang.StringBuilder(n * 6)
-        var sum = 0L
-        var i = 0
-        while (i < n * 3) {
-          val v = img.pixels(i) & 0xff
-          sb.append(hex(v >> 4)).append(hex(v & 0xf))
-          sum += v
-          i += 1
-        }
+        val (md5, sum) =
+          Digest.hexDumpDigest(img.pixels, img.width * img.height * 3)
         GpsScrubbed(r.doc_id, if (gps.isDefined) 1 else 0,
           gps.map(_.latUdeg).getOrElse(-1L),
           gps.map(_.lonUdeg).getOrElse(-1L),
-          if (after.isDefined) 1 else 0, meta.orientation,
-          java.security.MessageDigest.getInstance("MD5")
-            .digest(sb.toString.getBytes("US-ASCII"))
-            .map(b => f"$b%02x").mkString, sum)
+          if (after.isDefined) 1 else 0, meta.orientation, md5, sum)
       }
     }
   }
@@ -744,33 +733,12 @@ object Exif {
     */
   def orientNormalizedPng(media: DataFrame): Dataset[OrientedPng] = {
     Multimodal.perPayload(media) { records =>
-      val hex = "0123456789abcdef".toCharArray
       records.map { r =>
         val o = parsePngExif(r.payload).map(_.orientation).getOrElse(1)
         val img = Multimodal.Png.decodeColor(r.payload)
-        val n = img.width * img.height
-        val rgb = new Array[Byte](n * 3)
-        var i = 0
-        while (i < n) {
-          rgb(i * 3) = img.rgba(i * 4)
-          rgb(i * 3 + 1) = img.rgba(i * 4 + 1)
-          rgb(i * 3 + 2) = img.rgba(i * 4 + 2)
-          i += 1
-        }
-        val (ow, oh, up) = orientRgb(rgb, img.width, img.height, o)
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val sb = new java.lang.StringBuilder(up.length * 2)
-        var sum = 0L
-        i = 0
-        while (i < up.length) {
-          val v = up(i) & 0xff
-          sb.append(hex(v >> 4)).append(hex(v & 0xf))
-          sum += v
-          i += 1
-        }
-        OrientedPng(r.doc_id, o, ow, oh,
-          md.digest(sb.toString.getBytes("US-ASCII"))
-            .map(b => f"$b%02x").mkString, sum)
+        val (ow, oh, up) = orientRgb(img.rgb, img.width, img.height, o)
+        val (md5, sum) = Digest.hexDumpDigest(up, up.length)
+        OrientedPng(r.doc_id, o, ow, oh, md5, sum)
       }
     }
   }
@@ -789,7 +757,6 @@ object Exif {
     */
   def orientNormalized(media: DataFrame): Dataset[Oriented] = {
     Multimodal.perPayload(media) { records =>
-      val hex = "0123456789abcdef".toCharArray
       records.map { r =>
         val meta = parseExif(r.payload).getOrElse(
           throw new IllegalArgumentException(
@@ -797,20 +764,10 @@ object Exif {
         val img = Jpeg.decodeColor(r.payload)
         val (ow, oh, rgb) =
           orientRgb(img.pixels, img.width, img.height, meta.orientation)
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val sb = new java.lang.StringBuilder(rgb.length * 2)
-        var sum = 0L
-        var i = 0
-        while (i < rgb.length) {
-          val v = rgb(i) & 0xff
-          sb.append(hex(v >> 4)).append(hex(v & 0xf))
-          sum += v
-          i += 1
-        }
+        val (md5, sum) = Digest.hexDumpDigest(rgb, rgb.length)
         Oriented(r.doc_id, meta.orientation, meta.make, meta.model,
           meta.dateTime, meta.xresNum, meta.pixelX, meta.pixelY, ow, oh,
-          md.digest(sb.toString.getBytes("US-ASCII"))
-            .map(b => f"$b%02x").mkString, sum)
+          md5, sum)
       }
     }
   }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Digest
 import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** GIF89a codec + dataset operators — the third real web-image
@@ -434,25 +435,14 @@ object Gif {
                             delay_cs: Int, rgb_md5: String, rgb_sum: Long)
 
   private def hexDigestOf(frame: Frame): (String, Long) = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = "0123456789abcdef".toCharArray
     val n = frame.width * frame.height
-    val sb = new java.lang.StringBuilder(n * 6)
-    var sum = 0L
+    val rgb = new Array[Byte](n * 3)
     var i = 0
     while (i < n) {
-      val idx = frame.indices(i) & 0xff
-      var ch = 0
-      while (ch < 3) {
-        val v = frame.palette(idx * 3 + ch) & 0xff
-        sb.append(hex(v >> 4)).append(hex(v & 0xf))
-        sum += v
-        ch += 1
-      }
+      System.arraycopy(frame.palette, (frame.indices(i) & 0xff) * 3, rgb, i * 3, 3)
       i += 1
     }
-    (md.digest(sb.toString.getBytes("US-ASCII")).map(b => f"$b%02x").mkString,
-      sum)
+    Digest.hexDumpDigest(rgb, rgb.length)
   }
 
   /** Decode each payload and emit header geometry + the FIRST frame's

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Digest
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -1501,25 +1502,11 @@ object Jpeg {
     */
   def parseColorMeta(media: DataFrame): Dataset[JpegColorMeta] = {
     Multimodal.perPayload(Parallelism.ensure(media)) { records =>
-      val md = java.security.MessageDigest.getInstance("MD5")
       records.map { r =>
         val img = decodeColor(r.payload)
-        var s = 0L
-        // hex dump straight into an ASCII byte buffer: same md5 input
-        // bytes as the StringBuilder→String→getBytes chain, without
-        // the two intermediate copies and per-char appends
-        val hex = new Array[Byte](img.pixels.length * 2)
-        var i = 0
-        while (i < img.pixels.length) {
-          val v = img.pixels(i) & 0xff
-          s += v
-          hex(2 * i) = Character.forDigit(v >> 4, 16).toByte
-          hex(2 * i + 1) = Character.forDigit(v & 0xf, 16).toByte
-          i += 1
-        }
+        val (md5, s) = Digest.hexDumpDigest(img.pixels, img.pixels.length)
         JpegColorMeta(r.doc_id, img.width, img.height, img.channels,
-          img.width * img.height,
-          md.digest(hex).map(b => f"$b%02x").mkString, s)
+          img.width * img.height, md5, s)
       }
     }
   }
@@ -1534,14 +1521,13 @@ object Jpeg {
     */
   def parseMeta(media: DataFrame): Dataset[JpegMeta] = {
     Multimodal.perPayload(Parallelism.ensure(media)) { records =>
-      val md = java.security.MessageDigest.getInstance("MD5")
       records.map { r =>
         val img = decode(r.payload)
         var s = 0L
         var i = 0
         while (i < img.pixels.length) { s += (img.pixels(i) & 0xff); i += 1 }
         JpegMeta(r.doc_id, img.width, img.height, img.pixels.length,
-          md.digest(img.pixels).map(b => f"$b%02x").mkString, s)
+          Digest.md5Hex(img.pixels), s)
       }
     }
   }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Digest
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -229,15 +230,12 @@ object Mime {
       .as[(Long, String)]
       .mapPartitions(_.map { case (id, eml) =>
         val e = parse(eml)
-        def md5hex(s: String): String =
-          java.security.MessageDigest.getInstance("MD5")
-            .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
         val plain = e.parts.filter(_.contentType.startsWith("text/plain"))
         val html = e.parts.filter(_.contentType.startsWith("text/html"))
         require(plain.size == 1 && html.size == 1,
           s"doc $id: expected one plain and one html part")
         EmailRow(id, e.subject, e.from, e.parts.size,
-          md5hex(plain.head.body), md5hex(html.head.body))
+          Digest.md5Hex(plain.head.body), Digest.md5Hex(html.head.body))
       })
   }
 }

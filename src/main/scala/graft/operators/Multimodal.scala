@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Digest
+
 import scala.reflect.runtime.universe.TypeTag
 
 import java.nio.{ByteBuffer, ByteOrder}
@@ -342,7 +344,21 @@ object Multimodal {
       */
     final case class ColorImage(width: Int, height: Int, bitDepth: Int,
                                 colorType: Int, channels: Int,
-                                rgba: Array[Byte])
+                                rgba: Array[Byte]) {
+      /** The interleaved RGB, alpha dropped. */
+      def rgb: Array[Byte] = {
+        val n = width * height
+        val out = new Array[Byte](n * 3)
+        var i = 0
+        while (i < n) {
+          out(i * 3) = rgba(i * 4)
+          out(i * 3 + 1) = rgba(i * 4 + 1)
+          out(i * 3 + 2) = rgba(i * 4 + 2)
+          i += 1
+        }
+        out
+      }
+    }
 
     /** Decode any 8-bit-depth non-interlaced PNG — colour types 0
       * (gray), 2 (RGB), 3 (palette + PLTE [+ tRNS]), 4 (gray+alpha),
@@ -646,12 +662,10 @@ object Multimodal {
     */
   def parseMeta(media: DataFrame): Dataset[MediaMeta] = {
     perPayload(Parallelism.ensure(media)) { records =>
-      val md = java.security.MessageDigest.getInstance("MD5")
       records.map { r =>
         val img = Png.decode(r.payload)
         MediaMeta(r.doc_id, img.width, img.height, img.bitDepth,
-          img.colorType, img.pixels.length,
-          md.digest(img.pixels).map(b => f"$b%02x").mkString)
+          img.colorType, img.pixels.length, Digest.md5Hex(img.pixels))
       }
     }
   }
@@ -668,16 +682,14 @@ object Multimodal {
     */
   def sampleFrames(media: DataFrame, every: Int): Dataset[Frame] = {
     perPayload(media) { records =>
-      val md = java.security.MessageDigest.getInstance("MD5")
       records.flatMap { r =>
         val d = Png.decode(r.payload).pixels
         val nFrames = math.ceil(d.length.toDouble / FrameBytes).toInt
         (0 until nFrames by every).iterator.map { fi =>
           val start = fi * FrameBytes
           val end = math.min(start + FrameBytes, d.length)
-          val digest = md.digest(java.util.Arrays.copyOfRange(d, start, end))
           Frame(r.doc_id, fi, end - start,
-            digest.map(b => f"$b%02x").mkString)
+            Digest.md5Hex(java.util.Arrays.copyOfRange(d, start, end)))
         }
       }
     }
@@ -767,33 +779,20 @@ object Multimodal {
                      crop: Int = 24): Dataset[ClipPre] = {
     require(size > 0 && crop > 0 && crop <= size, s"bad $size/$crop")
     perPayload(Parallelism.ensure(media)) { records =>
-      val hex = "0123456789abcdef".toCharArray
       val off = (size - crop) / 2
-      val md = java.security.MessageDigest.getInstance("MD5")
       records.map { r =>
         val img = Jpeg.decodeColor(r.payload)
         val rs = bilinearResizeRgb(img.pixels, img.width, img.height,
           size, size)
-        val sb = new java.lang.StringBuilder(crop * crop * 6)
-        var sum = 0L
+        val cropped = new Array[Byte](crop * crop * 3)
         var dy = 0
         while (dy < crop) {
-          var dx = 0
-          while (dx < crop) {
-            var ch = 0
-            while (ch < 3) {
-              val v = rs(((dy + off) * size + dx + off) * 3 + ch) & 0xff
-              sb.append(hex(v >> 4)).append(hex(v & 0xf))
-              sum += v
-              ch += 1
-            }
-            dx += 1
-          }
+          System.arraycopy(rs, ((dy + off) * size + off) * 3,
+            cropped, dy * crop * 3, crop * 3)
           dy += 1
         }
-        ClipPre(r.doc_id, img.width, img.height, crop, crop,
-          md.digest(sb.toString.getBytes("US-ASCII"))
-            .map(b => f"$b%02x").mkString, sum)
+        val (md5, sum) = Digest.hexDumpDigest(cropped, cropped.length)
+        ClipPre(r.doc_id, img.width, img.height, crop, crop, md5, sum)
       }
     }
   }
@@ -801,7 +800,6 @@ object Multimodal {
   def resizeNearest(media: DataFrame, factor: Int): Dataset[ResizedImage] = {
     require(factor > 0, s"bad resize factor $factor")
     perPayload(media) { records =>
-      val md = java.security.MessageDigest.getInstance("MD5")
       records.map { r =>
         val img = Png.decode(r.payload)
         val ow = (img.width + factor - 1) / factor
@@ -821,7 +819,7 @@ object Multimodal {
         var i = 0
         while (i < out.pixels.length) { s += (out.pixels(i) & 0xff); i += 1 }
         ResizedImage(r.doc_id, out.width, out.height, out.pixels.length,
-          md.digest(out.pixels).map(b => f"$b%02x").mkString, s)
+          Digest.md5Hex(out.pixels), s)
       }
     }
   }
@@ -866,7 +864,6 @@ object Multimodal {
   def imagePatches(media: DataFrame, size: Int): Dataset[Patch] = {
     require(size > 0, s"bad patch size $size")
     perPayload(media) { records =>
-      val md = java.security.MessageDigest.getInstance("MD5")
       records.flatMap { r =>
         val img = Png.decode(r.payload)
         val pRows = img.height / size
@@ -888,8 +885,7 @@ object Multimodal {
             }
             i += 1
           }
-          Patch(r.doc_id, pr, pc, s,
-            md.digest(buf).map(b => f"$b%02x").mkString)
+          Patch(r.doc_id, pr, pc, s, Digest.md5Hex(buf))
         }
       }
     }
@@ -941,7 +937,6 @@ object Multimodal {
   def sampleVideoFrames(video: DataFrame, every: Int): Dataset[VideoFrame] = {
     require(every >= 1, s"bad sampling stride $every")
     perPayload(video) { records =>
-      val md = java.security.MessageDigest.getInstance("MD5")
       records.flatMap { r =>
         val bytes = r.payload
         val bounds = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
@@ -966,7 +961,7 @@ object Multimodal {
           case ((s0, e0), fi) if fi % every == 0 =>
             val img = Png.decode(java.util.Arrays.copyOfRange(bytes, s0, e0))
             VideoFrame(r.doc_id, fi, img.width, img.height,
-              md.digest(img.pixels).map(b => f"$b%02x").mkString)
+              Digest.md5Hex(img.pixels))
         }
       }
     }
@@ -984,15 +979,20 @@ object Multimodal {
     * color rule evaluated at i, so index-byte == gray-rule byte and the
     * decoded RGB equals the other storage types' exactly.
     */
-  private[graft] lazy val FixturePalette: Array[Byte] = {
-    val p = new Array[Byte](256 * 3)
+  private[graft] lazy val FixturePalette: Array[Byte] =
+    rgbOf(Array.tabulate(256)(_.toByte))
+
+  /** The [[colorOf]] rule's interleaved RGB over gray-rule pixels. */
+  private[graft] def rgbOf(pix: Array[Byte]): Array[Byte] = {
+    val rgb = new Array[Byte](pix.length * 3)
     var i = 0
-    while (i < 256) {
-      val (r, g, b, _) = colorOf(i)
-      p(i * 3) = r.toByte; p(i * 3 + 1) = g.toByte; p(i * 3 + 2) = b.toByte
+    while (i < pix.length) {
+      val (r, g, b, _) = colorOf(pix(i) & 0xff)
+      rgb(i * 3) = r.toByte; rgb(i * 3 + 1) = g.toByte
+      rgb(i * 3 + 2) = b.toByte
       i += 1
     }
-    p
+    rgb
   }
 
   /** Attach a real COLOR PNG payload, cycling the three web-reality
@@ -1009,15 +1009,7 @@ object Multimodal {
         val h = pix.length / ImgWidth
         val payload = (id % 3) match {
           case 0 =>
-            val rgb = new Array[Byte](pix.length * 3)
-            var i = 0
-            while (i < pix.length) {
-              val (r, g, b, _) = colorOf(pix(i) & 0xff)
-              rgb(i * 3) = r.toByte; rgb(i * 3 + 1) = g.toByte
-              rgb(i * 3 + 2) = b.toByte
-              i += 1
-            }
-            Png.encodeRgb(ImgWidth, h, rgb)
+            Png.encodeRgb(ImgWidth, h, rgbOf(pix))
           case 1 =>
             Png.encodePalette(ImgWidth, h, pix, FixturePalette)
           case _ =>
@@ -1047,15 +1039,7 @@ object Multimodal {
       rows.map { case (id, text) =>
         val pix = pixelsOf(text)
         val h = pix.length / ImgWidth
-        val rgb = new Array[Byte](pix.length * 3)
-        var i = 0
-        while (i < pix.length) {
-          val (r, g, b, _) = colorOf(pix(i) & 0xff)
-          rgb(i * 3) = r.toByte; rgb(i * 3 + 1) = g.toByte
-          rgb(i * 3 + 2) = b.toByte
-          i += 1
-        }
-        Media(id, Png.encodeRgbInterlaced(ImgWidth, h, rgb),
+        Media(id, Png.encodeRgbInterlaced(ImgWidth, h, rgbOf(pix)),
           "image/png", ImgWidth, h)
       }
     }
@@ -1078,34 +1062,16 @@ object Multimodal {
     */
   def parseColorMeta(media: DataFrame): Dataset[ColorMeta] = {
     perPayload(Parallelism.ensure(media)) { records =>
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val hex = "0123456789abcdef".toCharArray
       records.map { r =>
         val img = Png.decodeColor(r.payload)
         val n = img.width * img.height
-        // hex dump straight into an ASCII byte buffer: same md5 input
-        // bytes as the StringBuilder→String→getBytes chain, without
-        // the two intermediate copies and per-char appends
-        val hb = new Array[Byte](n * 6)
-        var rgbSum = 0L
         var aSum = 0L
         var i = 0
-        while (i < n) {
-          var ch = 0
-          while (ch < 3) {
-            val v = img.rgba(i * 4 + ch) & 0xff
-            hb(i * 6 + 2 * ch) = hex(v >> 4).toByte
-            hb(i * 6 + 2 * ch + 1) = hex(v & 0xf).toByte
-            rgbSum += v
-            ch += 1
-          }
-          aSum += img.rgba(i * 4 + 3) & 0xff
-          i += 1
-        }
+        while (i < n) { aSum += img.rgba(i * 4 + 3) & 0xff; i += 1 }
+        val rgb = img.rgb
+        val (md5, rgbSum) = Digest.hexDumpDigest(rgb, rgb.length)
         ColorMeta(r.doc_id, img.width, img.height, img.colorType,
-          img.channels, n,
-          md.digest(hb).map(b => f"$b%02x").mkString,
-          rgbSum, aSum)
+          img.channels, n, md5, rgbSum, aSum)
       }
     }
   }

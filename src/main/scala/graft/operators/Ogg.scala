@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Digest
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -302,10 +303,8 @@ object Ogg {
       .mapPartitions { rows =>
         rows.map { case (id, bytes) =>
           val m = decode(bytes)
-          val md = java.security.MessageDigest.getInstance("MD5")
-            .digest(m.comments.mkString("\n").getBytes("UTF-8"))
           OggRow(id, m.serial, m.channels, m.sampleRate, m.vendor,
-            m.comments.size, md.map(x => f"$x%02x").mkString,
+            m.comments.size, Digest.md5Hex(m.comments.mkString("\n")),
             m.lastGranule, m.pages)
         }
       }

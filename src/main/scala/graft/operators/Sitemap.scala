@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Digest
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -264,10 +265,8 @@ object Sitemap {
           parse(xml) match {
             case UrlSet(entries) =>
               require(entries.nonEmpty, s"doc $id: empty urlset")
-              val md = java.security.MessageDigest.getInstance("MD5")
-                .digest(entries.map(_.loc).mkString("\n").getBytes("UTF-8"))
               SitemapRow(id, entries.size,
-                md.map(b => f"$b%02x").mkString,
+                Digest.md5Hex(entries.map(_.loc).mkString("\n")),
                 entries.map(_.lastmod).min, entries.map(_.lastmod).max,
                 entries.map(e =>
                   math.round(e.priority.toDouble * 1000)).sum)

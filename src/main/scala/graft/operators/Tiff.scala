@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Digest
 import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** Baseline TIFF 6.0 codec + dataset operators — the fourth real image
@@ -426,14 +427,7 @@ object Tiff {
       rows.map { case (id, text) =>
         val pix = Multimodal.pixelsOf(text)
         val h = pix.length / w
-        val rgb = new Array[Byte](pix.length * 3)
-        var i = 0
-        while (i < pix.length) {
-          val (r, g, b, _) = Multimodal.colorOf(pix(i) & 0xff)
-          rgb(i * 3) = r.toByte; rgb(i * 3 + 1) = g.toByte
-          rgb(i * 3 + 2) = b.toByte
-          i += 1
-        }
+        val rgb = Multimodal.rgbOf(pix)
         val comp = (id % 3) match {
           case 0 => CompNone
           case 1 => CompPackBits
@@ -543,14 +537,7 @@ object Tiff {
       rows.map { case (id, text) =>
         val pix = Multimodal.pixelsOf(text)
         val h = pix.length / w
-        val rgb = new Array[Byte](pix.length * 3)
-        var i = 0
-        while (i < pix.length) {
-          val (r, g, b, _) = Multimodal.colorOf(pix(i) & 0xff)
-          rgb(i * 3) = r.toByte; rgb(i * 3 + 1) = g.toByte
-          rgb(i * 3 + 2) = b.toByte
-          i += 1
-        }
+        val rgb = Multimodal.rgbOf(pix)
         Multimodal.MediaRecord(id, Bmp.encode(w, h, rgb))
       }
     }.toDF("doc_id", "payload")
@@ -561,20 +548,11 @@ object Tiff {
 
   def parseBmpMeta(media: DataFrame): Dataset[BmpMeta] = {
     Multimodal.perPayload(Parallelism.ensure(media)) { records =>
-      val hex = "0123456789abcdef".toCharArray
       records.map { r =>
         val img = Bmp.decode(r.payload)
-        val sb = new java.lang.StringBuilder(img.pixels.length * 2)
-        var sum = 0L
-        img.pixels.foreach { b =>
-          val v = b & 0xff
-          sb.append(hex(v >> 4)).append(hex(v & 0xf))
-          sum += v
-        }
+        val (md5, sum) = Digest.hexDumpDigest(img.pixels, img.pixels.length)
         BmpMeta(r.doc_id, img.width, img.height, img.width * img.height,
-          java.security.MessageDigest.getInstance("MD5")
-            .digest(sb.toString.getBytes("US-ASCII"))
-            .map(b => f"$b%02x").mkString, sum)
+          md5, sum)
       }
     }
   }
@@ -589,24 +567,12 @@ object Tiff {
     */
   def parseTiffMeta(media: DataFrame): Dataset[TiffMeta] = {
     Multimodal.perPayload(Parallelism.ensure(media)) { records =>
-      val hex = "0123456789abcdef".toCharArray
       records.map { r =>
         val img = decode(r.payload)
         val n = img.width * img.height
-        val sb = new java.lang.StringBuilder(n * 6)
-        var sum = 0L
-        var i = 0
-        while (i < n * img.channels) {
-          val v = img.pixels(i) & 0xff
-          sb.append(hex(v >> 4)).append(hex(v & 0xf))
-          sum += v
-          i += 1
-        }
+        val (md5, sum) = Digest.hexDumpDigest(img.pixels, n * img.channels)
         TiffMeta(r.doc_id, img.width, img.height, img.channels,
-          img.compression, n,
-          java.security.MessageDigest.getInstance("MD5")
-            .digest(sb.toString.getBytes("US-ASCII"))
-            .map(b => f"$b%02x").mkString, sum)
+          img.compression, n, md5, sum)
       }
     }
   }

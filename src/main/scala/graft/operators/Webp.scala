@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Digest
 import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** WebP-lossless (VP8L) codec — the most common modern web image
@@ -577,31 +578,23 @@ object Webp {
     */
   def parseWebpMeta(media: DataFrame): Dataset[WebpMeta] = {
     Multimodal.perPayload(media) { records =>
-      val hex = "0123456789abcdef".toCharArray
       records.map { rec =>
         val img = decode(rec.payload)
         val n = img.width * img.height
-        val sb = new java.lang.StringBuilder(n * 6)
-        var rgbSum = 0L
+        val rgb = new Array[Byte](n * 3)
         var alphaSum = 0L
         var i = 0
         while (i < n) {
           val px = img.argb(i)
-          val rr = (px >> 16) & 0xff
-          val gg = (px >> 8) & 0xff
-          val bb = px & 0xff
-          sb.append(hex(rr >> 4)).append(hex(rr & 0xf))
-          sb.append(hex(gg >> 4)).append(hex(gg & 0xf))
-          sb.append(hex(bb >> 4)).append(hex(bb & 0xf))
-          rgbSum += rr + gg + bb
+          rgb(i * 3) = (px >> 16).toByte
+          rgb(i * 3 + 1) = (px >> 8).toByte
+          rgb(i * 3 + 2) = px.toByte
           alphaSum += (px >>> 24) & 0xff
           i += 1
         }
+        val (md5, rgbSum) = Digest.hexDumpDigest(rgb, rgb.length)
         WebpMeta(rec.doc_id, "image/webp", img.width, img.height, n,
-          java.security.MessageDigest.getInstance("MD5")
-            .digest(sb.toString.getBytes("US-ASCII"))
-            .map(b => f"$b%02x").mkString,
-          rgbSum, alphaSum)
+          md5, rgbSum, alphaSum)
       }
     }
   }

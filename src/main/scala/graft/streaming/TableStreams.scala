@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.Digest
 import graft.operators.Layout
 import org.apache.spark.sql.DataFrame
 
@@ -44,9 +45,7 @@ object TableStreams {
     * maintenance tooling can reason about a table's committed batches.
     */
   def sinkId(checkpoint: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpoint.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
+    Digest.md5Hex(checkpoint).take(12)
 
   /** The CONSUMER side of the streaming-table story — tail a snapshot
     * table incrementally, the Delta-streaming-source shape on the
