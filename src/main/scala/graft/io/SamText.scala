@@ -17,26 +17,29 @@ object SamText {
 
   /** Read SAM text into the typed alignment shape (readName, flag,
     * referenceName, start, mapq, cigar, bases, quality + derived
-    * readUnmapped/duplicateRead/firstOfPair/secondOfPair).
+    * readUnmapped/duplicateRead/firstOfPair/secondOfPair), built in one
+    * projection so the frame is analyzed once.
     */
   def read(spark: SparkSession, path: String): DataFrame = {
     val f = split(col("value"), "\t")
+    val flag = f.getItem(1).cast("int")
+    val bases = f.getItem(9)
     spark.read.text(path)
       .filter(!col("value").startsWith("@") && length(trim(col("value"))) > 0)
       .select(
         f.getItem(0).as("readName"),
-        f.getItem(1).cast("int").as("flag"),
+        flag.as("flag"),
         f.getItem(2).as("referenceName"),
         f.getItem(3).cast("int").as("start"),
         f.getItem(4).cast("int").as("mapq"),
         f.getItem(5).as("cigar"),
-        f.getItem(9).as("bases"),
-        f.getItem(10).as("quality"))
-      .withColumn("length", length(col("bases")))
-      .withColumn("readUnmapped", flagBit(col("flag"), 4))
-      .withColumn("duplicateRead", flagBit(col("flag"), 1024))
-      .withColumn("firstOfPair", flagBit(col("flag"), 64))
-      .withColumn("secondOfPair", flagBit(col("flag"), 128))
+        bases.as("bases"),
+        f.getItem(10).as("quality"),
+        length(bases).as("length"),
+        flagBit(flag, 4).as("readUnmapped"),
+        flagBit(flag, 1024).as("duplicateRead"),
+        flagBit(flag, 64).as("firstOfPair"),
+        flagBit(flag, 128).as("secondOfPair"))
   }
 
   /** SAM-text sink: 11 fixed columns, '*' fillers for unused fields. */

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{Digest, TextFunctions}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for large text corpora (north-star surface:
@@ -243,9 +243,10 @@ object Dedup {
     * chain converges in ~20 rounds, not 10⁶. The edge table is static
     * and re-read; labels are the only moving table (narrow relative to
     * the corpus since only paired docs appear). Convergence is detected
-    * by the label-sum action: labels only ever decrease, so an unchanged
-    * sum is a fixpoint — one cheap scalar agg per round instead of a
-    * change-count join. localCheckpoint per round truncates lineage so
+    * by the label sum: labels only ever decrease, so an unchanged sum is
+    * a fixpoint. The sum is an [[org.apache.spark.sql.Observation]] on
+    * the frame each round pins, so it costs no query of its own.
+    * localCheckpoint per round truncates lineage so
     * round N's plan doesn't replay rounds 1..N-1 (and the blocks are
     * reclaimed by the ContextCleaner with the result — no CacheManager
     * residue). Exhausting maxIter without the fixpoint throws — silently
@@ -258,14 +259,18 @@ object Dedup {
       .unionAll(pairs
         .select(col(bCol).cast("long").as("u"), col(aCol).cast("long").as("v")))
       .localCheckpoint()
-    var labels = edges.select(col("u").as("id"), col("u").as("lbl"))
-      .groupBy("id").agg(min("lbl").as("lbl"))
-      .localCheckpoint()
-    // coalesce: an EMPTY pair list (a corpus with zero near-dups — legal
-    // and common on clean data) sums to NULL, and getLong on it threw
-    // before r13; 0 == 0 converges the loop on the first round instead.
-    var prevSum = labels.agg(coalesce(sum("lbl"), lit(0L)))
-      .first().getLong(0)
+    // pin `df` and read its label sum off the same job. coalesce: an
+    // EMPTY pair list (a corpus with zero near-dups — legal and common on
+    // clean data) sums to NULL; 0 == 0 converges on the first round.
+    def pinWithSum(df: DataFrame): (DataFrame, Long) = {
+      val obs = Observation()
+      val pinned = df.observe(obs, coalesce(sum("lbl"), lit(0L)).as("s"))
+        .localCheckpoint()
+      (pinned, obs.get("s").asInstanceOf[Long])
+    }
+    var (labels, prevSum) = pinWithSum(edges
+      .select(col("u").as("id"), col("u").as("lbl"))
+      .groupBy("id").agg(min("lbl").as("lbl")))
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
@@ -281,13 +286,12 @@ object Dedup {
       // `stepped`: jumping through `stepped` would recompute the
       // neighbor-min join for the second branch, and lbl_old(y) ≤ y
       // preserves the min-reachable invariant just the same.
-      labels = stepped.as("x")
+      val (next, s) = pinWithSum(stepped.as("x")
         .join(labels.select(col("id").as("jid"), col("lbl").as("jlbl")),
           col("x.lbl") === col("jid"), "left")
         .select(col("x.id").as("id"),
-          least(col("x.lbl"), coalesce(col("jlbl"), col("x.lbl"))).as("lbl"))
-        .localCheckpoint()
-      val s = labels.agg(coalesce(sum("lbl"), lit(0L))).first().getLong(0)
+          least(col("x.lbl"), coalesce(col("jlbl"), col("x.lbl"))).as("lbl")))
+      labels = next
       converged = s == prevSum
       prevSum = s
       iter += 1

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The reference pipeline's dataflow operators, re-expressed as
@@ -42,14 +43,13 @@ object Pipeline {
                           lowQualThreshold: Int, maxLowQualCount: Int): DataFrame = {
     import graft.functions.DnaFunctions._
     val normName = regexp_extract(col("key"), "^([^/ ]+)", 1)
-    val flagged = reads.withColumn("_name", normName)
+    reads.withColumn("_name", normName)
       .withColumn("_pass",
         avgQualityCol(col("quality")) > minAvgQuality &&
           lowQualityCountCol(col("quality"), lowQualThreshold) < maxLowQualCount)
-    val pairPass = flagged.groupBy("_name")
-      .agg(min(col("_pass")).as("_pair_pass")) // AND across mates
-    flagged.join(pairPass, "_name")
-      .filter(col("_pair_pass"))
+      .withColumn("_pair_pass", // AND across mates
+        min(col("_pass")).over(Window.partitionBy("_name")))
+      .filter(col("_name").isNotNull && col("_pair_pass"))
       .drop("_name", "_pass", "_pair_pass")
   }
 
@@ -65,7 +65,7 @@ object Pipeline {
         .withColumn("mate", lit(mate))
     norm(r1, 1).unionByName(norm(r2, 2))
       .withColumn("_n_mates", count(lit(1))
-        .over(org.apache.spark.sql.expressions.Window.partitionBy("_name")))
+        .over(Window.partitionBy("_name")))
       .filter(col("_n_mates") === 2)
       .drop("_n_mates")
       .withColumnRenamed("_name", "pairName")

@@ -68,12 +68,14 @@ object ViraPipeline {
       .groupBy("kmer")
       .agg(count(lit(1)).as("cnt"), min(col("key")).as("keeper"))
       .filter(col("cnt") > minc && col("cnt") < maxc)
-      .select(col("keeper").as("key")).distinct()
-    reads.join(keepers, "key")
+      .select(col("keeper").as("key"))
+    reads.join(keepers, Seq("key"), "left_semi")
   }
 
-  /** Serialize reads (key, sequence, quality) to 4-line FASTQ records.
-    * PARTITION-LOCAL sort only: each pipe process consumes one
+  /** Serialize reads (key, sequence, quality) to 4-line FASTQ records,
+    * one multi-line string per record: the pipe writes each record
+    * followed by a newline, so the tool reads the same lines as from a
+    * file. PARTITION-LOCAL sort only: each pipe process consumes one
     * partition, so per-partition determinism is all the tools need —
     * a global orderBy would range-shuffle the entire read set before
     * the hottest stage (the reference streams partition-local too,
@@ -86,7 +88,6 @@ object ViraPipeline {
       .select(concat(lit("@"), col("key"), lit("\n"), col("sequence"),
         lit("\n+\n"), col("quality")).as("rec"))
       .as[String]
-      .flatMap(_.split("\n"))
   }
 
   private[graft] def toFastaLines(df: DataFrame): Dataset[String] = {
@@ -94,7 +95,6 @@ object ViraPipeline {
     df.sortWithinPartitions("id")
       .select(concat(lit(">"), col("id"), lit("\n"), col("sequence")).as("rec"))
       .as[String]
-      .flatMap(_.split("\n"))
   }
 
   /** Parse SAM lines coming back from the aligner pipe. */
@@ -169,16 +169,17 @@ object ViraPipeline {
     val filteredContigs = pin(Pipeline.blastThresholdFilter(
       contigs, hits, cfg.blastThreshold), "filtered_contigs")
 
-    // 8. Protein/ORF + HMMSearch pipe.
+    // 8. Protein/ORF + HMMSearch pipe. A frame can hold several
+    //    non-overlapping ORFs, so the start position completes the id.
     val orfUdf = udf((id: String, s: String, minLen: Int) =>
       Dna.sixFrameOrfs(id, s, minLen))
     val orfs = pin(filteredContigs
       .select(explode(orfUdf(col("id"), col("sequence"), lit(cfg.orfMinLen))).as("o"))
       .select(col("o.contigId").as("id"), col("o.strand"), col("o.frame"),
-        col("o.protein").as("sequence")), "orfs")
-    val hmmLines = Pipes.hmmsearch(spark, toFastaLines(
-      orfs.select(concat_ws("_", col("id"), col("strand"), col("frame")).as("id"),
-        col("sequence")).dropDuplicates("id")), cfg.hmmsearch)
+        col("o.start"), col("o.protein").as("sequence")), "orfs")
+    val hmmLines = Pipes.hmmsearch(spark, toFastaLines(orfs.select(
+      concat_ws("_", col("id"), col("strand"), col("frame"), col("start")).as("id"),
+      col("sequence"))), cfg.hmmsearch)
     val hmmHits = pin(hmmLines.toDF("value")
       .select(split(col("value"), " ").getItem(0).as("orf_id")), "hmm_hits")
 

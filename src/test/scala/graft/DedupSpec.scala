@@ -66,6 +66,36 @@ class DedupSpec extends AnyFunSuite {
     assert(Dedup.connectedComponents(none).count() == 0L)
   }
 
+  test("connectedComponents reads its convergence sum off the pinning jobs") {
+    import spark.implicits._
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String,
+                    qe: org.apache.spark.sql.execution.QueryExecution,
+                    durationNs: Long): Unit = actions.add(funcName)
+      def onFailure(funcName: String,
+                    qe: org.apache.spark.sql.execution.QueryExecution,
+                    exception: Exception): Unit = ()
+    }
+    val chain = (1L until 12L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    spark.listenerManager.register(listener)
+    try {
+      Dedup.connectedComponents(chain)
+      org.apache.spark.sql.graft.Bridge.drainListeners(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    // the edge pin, the start labels and one pin per round: no query
+    // of their own for the label sums
+    assert(actions.size > 2 &&
+      actions.toArray.forall(_ == "localCheckpoint"), actions)
+  }
+
+  test("connectedComponents throws when maxIter rounds do not reach the fixpoint") {
+    import spark.implicits._
+    val chain = (1L until 12L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val e = intercept[IllegalStateException](Dedup.connectedComponents(chain, maxIter = 1))
+    assert(e.getMessage.contains("did not converge in 1 rounds"))
+  }
+
   test("decontaminate flags docs sharing an n-gram with the bench set, keeps short docs") {
     val bench = {
       import spark.implicits._

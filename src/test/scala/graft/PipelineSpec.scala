@@ -134,6 +134,56 @@ class PipelineSpec extends AnyFunSuite {
       res.filteredContigs.queryExecution.executedPlan.toString.take(4000))
   }
 
+  test("plan fence: the job that pins aligned scans each FASTQ mate once") {
+    // the quality gate pairs mates by a window over the interleaved
+    // reads, not by joining them to their own aggregate, so neither
+    // file is scanned twice
+    val (r1, r2) = pairedReads
+    val dir = java.nio.file.Files.createTempDirectory("graft_fence").toString
+    graft.io.Fastq.write(r1.coalesce(1), s"$dir/r1")
+    graft.io.Fastq.write(r2.coalesce(1), s"$dir/r2")
+    val pinned = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") pinned.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val res = try {
+      val res = ViraPipeline.run(spark,
+        graft.io.Fastq.read(spark, s"$dir/r1"), graft.io.Fastq.read(spark, s"$dir/r2"),
+        ViraPipeline.Config(k = 4, minc = 0, maxc = 100, orfMinLen = 2,
+          minAvgQuality = 1.0, lowQualThreshold = 1, maxLowQualCount = 1))
+      eventually(timeout(Span(30, Seconds))) { assert(pinned.size == stages.size) }
+      res
+    } finally spark.listenerManager.unregister(listener)
+    assert(res.aligned.count() == 4)
+    val stage = pinned.asScala.toSeq(stages.indexOf("aligned")).executedPlan
+    val scans = FinalPlan.collectAll(stage).collect { case s: BatchScanExec => s }
+    assert(scans.size == 2, stage.toString.take(6000))
+    Seq("r1", "r2").foreach { mate =>
+      assert(scans.count(_.toString.contains(s"$dir/$mate")) == 1, stage.toString.take(6000))
+    }
+  }
+
+  test("every ORF of a frame reaches hmmsearch: the id carries the ORF start") {
+    import spark.implicits._
+    // frame +1 codons: ATG AAA TAA | ATG CCC TAG | GGG CCC — two ORFs,
+    // at 1 and at 10; 24 bases so the blastn mock keeps the contig
+    val twoOrfs = "ATGAAATAAATGCCCTAGGGGCCC"
+    val r1 = Seq(("pairC/1", twoOrfs, "I" * 24)).toDF("key", "sequence", "quality")
+    val r2 = Seq(("pairC/2", twoOrfs, "I" * 24)).toDF("key", "sequence", "quality")
+    val res = ViraPipeline.run(spark, r1, r2,
+      ViraPipeline.Config(k = 4, minc = 0, maxc = 100, orfMinLen = 2))
+    val contig = res.filteredContigs.select("id").as[String].collect().toSeq
+    assert(contig.size == 1)
+    val hits = res.hmmHits.select("orf_id").as[String].collect().toSeq
+    assert(hits.distinct == hits, hits)
+    assert(Set(s"${contig.head}_+_1_1", s"${contig.head}_+_1_10").subsetOf(hits.toSet),
+      hits)
+    assert(hits.size == res.orfs.count())
+  }
+
   test("plan fence: every Result frame reads its pinned stage, with no shuffle and no pipe") {
     val (r1, r2) = pairedReads
     val dir = java.nio.file.Files.createTempDirectory("graft_fence").toString
