@@ -39,16 +39,16 @@ object Digest {
   def md5Hex(s: String): String = md5Hex(s.getBytes("UTF-8"))
 
   /** The decoded-pixel digest of the media decode passes: the
-    * lowercase-hex MD5 of the lowercase-hex DUMP of `bytes(0 until n)`,
-    * and the sum of those bytes read unsigned. The oracle can only hash
-    * strings, and channel values above 127 would be multi-byte UTF-8 in
-    * a DuckDB string, so both engines hash the ASCII hex text instead.
+    * lowercase-hex MD5 of the lowercase-hex DUMP of `bytes`, and the sum
+    * of the bytes read unsigned. The oracle can only hash strings, and
+    * channel values above 127 would be multi-byte UTF-8 in a DuckDB
+    * string, so both engines hash the ASCII hex text instead.
     */
-  def hexDumpDigest(bytes: Array[Byte], n: Int): (String, Long) = {
-    val dump = new Array[Byte](n * 2)
+  def hexDumpDigest(bytes: Array[Byte]): (String, Long) = {
+    val dump = new Array[Byte](bytes.length * 2)
     var sum = 0L
     var i = 0
-    while (i < n) {
+    while (i < bytes.length) {
       val v = bytes(i) & 0xff
       dump(2 * i) = HexChars(v >> 4).toByte
       dump(2 * i + 1) = HexChars(v & 0xf).toByte

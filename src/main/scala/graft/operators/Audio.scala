@@ -174,9 +174,8 @@ object Audio {
         AudioMedia(id, Wav.encodePcm16(SampleRate, s), "audio/wav",
           SampleRate, s.length)
       }
-    }
-      .select(col("doc_id"), col("payload"),
-        struct(col("format"), col("sample_rate"), col("n_samples")).as("meta"))
+    }.select(col("doc_id"), col("payload"),
+      struct(col("format"), col("sample_rate"), col("n_samples")).as("meta"))
   }
 
   final case class AudioFeatures(doc_id: Long, sample_rate: Int,
@@ -1435,9 +1434,8 @@ object Audio {
         AudioMedia(id, Wav.encodePcm16N(SampleRate, 2, inter),
           "audio/wav", SampleRate, l.length)
       }
-    }
-      .select(col("doc_id"), col("payload"),
-        struct(col("format"), col("sample_rate"), col("n_samples")).as("meta"))
+    }.select(col("doc_id"), col("payload"),
+      struct(col("format"), col("sample_rate"), col("n_samples")).as("meta"))
   }
 
   final case class Downmixed(doc_id: Long, n_samples: Int, mix_sum: Long,

@@ -714,8 +714,7 @@ object Exif {
         val meta = parseExif(scrubbed).getOrElse(
           throw new IllegalArgumentException("scrub lost the APP1"))
         val img = Jpeg.decodeColor(scrubbed)
-        val (md5, sum) =
-          Digest.hexDumpDigest(img.pixels, img.width * img.height * 3)
+        val (md5, sum) = Digest.hexDumpDigest(img.pixels)
         GpsScrubbed(r.doc_id, if (gps.isDefined) 1 else 0,
           gps.map(_.latUdeg).getOrElse(-1L),
           gps.map(_.lonUdeg).getOrElse(-1L),
@@ -737,7 +736,7 @@ object Exif {
         val o = parsePngExif(r.payload).map(_.orientation).getOrElse(1)
         val img = Multimodal.Png.decodeColor(r.payload)
         val (ow, oh, up) = orientRgb(img.rgb, img.width, img.height, o)
-        val (md5, sum) = Digest.hexDumpDigest(up, up.length)
+        val (md5, sum) = Digest.hexDumpDigest(up)
         OrientedPng(r.doc_id, o, ow, oh, md5, sum)
       }
     }
@@ -764,7 +763,7 @@ object Exif {
         val img = Jpeg.decodeColor(r.payload)
         val (ow, oh, rgb) =
           orientRgb(img.pixels, img.width, img.height, meta.orientation)
-        val (md5, sum) = Digest.hexDumpDigest(rgb, rgb.length)
+        val (md5, sum) = Digest.hexDumpDigest(rgb)
         Oriented(r.doc_id, meta.orientation, meta.make, meta.model,
           meta.dateTime, meta.xresNum, meta.pixelX, meta.pixelY, ow, oh,
           md5, sum)

@@ -442,7 +442,7 @@ object Gif {
       System.arraycopy(frame.palette, (frame.indices(i) & 0xff) * 3, rgb, i * 3, 3)
       i += 1
     }
-    Digest.hexDumpDigest(rgb, rgb.length)
+    Digest.hexDumpDigest(rgb)
   }
 
   /** Decode each payload and emit header geometry + the FIRST frame's

@@ -1396,9 +1396,8 @@ object Jpeg {
         val h = pix.length / 64
         Multimodal.Media(id, encodeGray(64, h, pix), "image/jpeg", 64, h)
       }
-    }
-      .select(col("doc_id"), col("payload"),
-        struct(col("format"), col("width"), col("height")).as("meta"))
+    }.select(col("doc_id"), col("payload"),
+      struct(col("format"), col("width"), col("height")).as("meta"))
   }
 
   // ---- color fixture + operators -------------------------------------------
@@ -1465,9 +1464,8 @@ object Jpeg {
         Multimodal.Media(id, encodeColor(64, h, yP, cbP, crP),
           "image/jpeg", 64, h)
       }
-    }
-      .select(col("doc_id"), col("payload"),
-        struct(col("format"), col("width"), col("height")).as("meta"))
+    }.select(col("doc_id"), col("payload"),
+      struct(col("format"), col("width"), col("height")).as("meta"))
   }
 
   /** [[asColorJpegMedia]]'s PROGRESSIVE twin: the same planted planes
@@ -1484,9 +1482,8 @@ object Jpeg {
         Multimodal.Media(id, encodeColorProgressive(64, h, yP, cbP, crP),
           "image/jpeg", 64, h)
       }
-    }
-      .select(col("doc_id"), col("payload"),
-        struct(col("format"), col("width"), col("height")).as("meta"))
+    }.select(col("doc_id"), col("payload"),
+      struct(col("format"), col("width"), col("height")).as("meta"))
   }
 
   final case class JpegColorMeta(doc_id: Long, width: Int, height: Int,
@@ -1504,7 +1501,7 @@ object Jpeg {
     Multimodal.perPayload(Parallelism.ensure(media)) { records =>
       records.map { r =>
         val img = decodeColor(r.payload)
-        val (md5, s) = Digest.hexDumpDigest(img.pixels, img.pixels.length)
+        val (md5, s) = Digest.hexDumpDigest(img.pixels)
         JpegColorMeta(r.doc_id, img.width, img.height, img.channels,
           img.width * img.height, md5, s)
       }

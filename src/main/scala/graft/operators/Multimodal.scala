@@ -1,9 +1,8 @@
 package graft.operators
 
+import graft.functions.Digest
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-
-import graft.functions.Digest
 
 import scala.reflect.runtime.universe.TypeTag
 
@@ -617,9 +616,8 @@ object Multimodal {
         val h = pix.length / ImgWidth
         Media(id, Png.encodeGray(ImgWidth, h, pix), "image/png", ImgWidth, h)
       }
-    }
-      .select(col("doc_id"), col("payload"),
-        struct(col("format"), col("width"), col("height")).as("meta"))
+    }.select(col("doc_id"), col("payload"),
+      struct(col("format"), col("width"), col("height")).as("meta"))
   }
 
   final case class MediaRecord(doc_id: Long, payload: Array[Byte])
@@ -647,6 +645,7 @@ object Multimodal {
     media.select(col("doc_id"), col("payload")).as[MediaRecord]
       .mapPartitions(f)(Encoders.product[U])
   }
+
   final case class MediaMeta(doc_id: Long, width: Int, height: Int,
                              bit_depth: Int, color_type: Int,
                              n_pixels: Int, pixel_md5: String)
@@ -791,7 +790,7 @@ object Multimodal {
             cropped, dy * crop * 3, crop * 3)
           dy += 1
         }
-        val (md5, sum) = Digest.hexDumpDigest(cropped, cropped.length)
+        val (md5, sum) = Digest.hexDumpDigest(cropped)
         ClipPre(r.doc_id, img.width, img.height, crop, crop, md5, sum)
       }
     }
@@ -1025,9 +1024,8 @@ object Multimodal {
         }
         Media(id, payload, "image/png", ImgWidth, h)
       }
-    }
-      .select(col("doc_id"), col("payload"),
-        struct(col("format"), col("width"), col("height")).as("meta"))
+    }.select(col("doc_id"), col("payload"),
+      struct(col("format"), col("width"), col("height")).as("meta"))
   }
 
   /** The [[asColorMedia]] rule stored INTERLACED (Adam7, truecolor):
@@ -1042,9 +1040,8 @@ object Multimodal {
         Media(id, Png.encodeRgbInterlaced(ImgWidth, h, rgbOf(pix)),
           "image/png", ImgWidth, h)
       }
-    }
-      .select(col("doc_id"), col("payload"),
-        struct(col("format"), col("width"), col("height")).as("meta"))
+    }.select(col("doc_id"), col("payload"),
+      struct(col("format"), col("width"), col("height")).as("meta"))
   }
 
   final case class ColorMeta(doc_id: Long, width: Int, height: Int,
@@ -1069,7 +1066,7 @@ object Multimodal {
         var i = 0
         while (i < n) { aSum += img.rgba(i * 4 + 3) & 0xff; i += 1 }
         val rgb = img.rgb
-        val (md5, rgbSum) = Digest.hexDumpDigest(rgb, rgb.length)
+        val (md5, rgbSum) = Digest.hexDumpDigest(rgb)
         ColorMeta(r.doc_id, img.width, img.height, img.colorType,
           img.channels, n, md5, rgbSum, aSum)
       }

@@ -550,7 +550,7 @@ object Tiff {
     Multimodal.perPayload(Parallelism.ensure(media)) { records =>
       records.map { r =>
         val img = Bmp.decode(r.payload)
-        val (md5, sum) = Digest.hexDumpDigest(img.pixels, img.pixels.length)
+        val (md5, sum) = Digest.hexDumpDigest(img.pixels)
         BmpMeta(r.doc_id, img.width, img.height, img.width * img.height,
           md5, sum)
       }
@@ -570,7 +570,7 @@ object Tiff {
       records.map { r =>
         val img = decode(r.payload)
         val n = img.width * img.height
-        val (md5, sum) = Digest.hexDumpDigest(img.pixels, n * img.channels)
+        val (md5, sum) = Digest.hexDumpDigest(img.pixels)
         TiffMeta(r.doc_id, img.width, img.height, img.channels,
           img.compression, n, md5, sum)
       }

@@ -592,7 +592,7 @@ object Webp {
           alphaSum += (px >>> 24) & 0xff
           i += 1
         }
-        val (md5, rgbSum) = Digest.hexDumpDigest(rgb, rgb.length)
+        val (md5, rgbSum) = Digest.hexDumpDigest(rgb)
         WebpMeta(rec.doc_id, "image/webp", img.width, img.height, n,
           md5, rgbSum, alphaSum)
       }
