@@ -427,13 +427,12 @@ object Tiff {
       rows.map { case (id, text) =>
         val pix = Multimodal.pixelsOf(text)
         val h = pix.length / w
-        val rgb = Multimodal.rgbOf(pix)
         val comp = (id % 3) match {
           case 0 => CompNone
           case 1 => CompPackBits
           case _ => CompLzw
         }
-        Multimodal.MediaRecord(id, encode(w, h, 3, comp, rgb))
+        Multimodal.MediaRecord(id, encode(w, h, 3, comp, Multimodal.rgbOf(pix)))
       }
     }.toDF("doc_id", "payload")
   }
@@ -537,8 +536,7 @@ object Tiff {
       rows.map { case (id, text) =>
         val pix = Multimodal.pixelsOf(text)
         val h = pix.length / w
-        val rgb = Multimodal.rgbOf(pix)
-        Multimodal.MediaRecord(id, Bmp.encode(w, h, rgb))
+        Multimodal.MediaRecord(id, Bmp.encode(w, h, Multimodal.rgbOf(pix)))
       }
     }.toDF("doc_id", "payload")
   }
@@ -569,10 +567,9 @@ object Tiff {
     Multimodal.perPayload(Parallelism.ensure(media)) { records =>
       records.map { r =>
         val img = decode(r.payload)
-        val n = img.width * img.height
         val (md5, sum) = Digest.hexDumpDigest(img.pixels)
         TiffMeta(r.doc_id, img.width, img.height, img.channels,
-          img.compression, n, md5, sum)
+          img.compression, img.width * img.height, md5, sum)
       }
     }
   }
