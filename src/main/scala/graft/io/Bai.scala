@@ -10,8 +10,10 @@ import java.nio.charset.StandardCharsets.US_ASCII
   * The WRITER builds an index for a coordinate-sorted BAM from the
   * per-record positions/virtual offsets the BAM serializer feeds it;
   * the READER parses any spec-conformant .bai and answers region
-  * queries with a pruned chunk list — [[Bam.readRegion]] prefers this
-  * path over its probe-based pruning when a sibling `.bai` exists:
+  * queries with a pruned chunk list — the BAM scan's region planning
+  * ([[Bam.baiRegionPlan]], behind [[Bam.readRegion]] and the `region`
+  * option) prefers it over the probe plan when every file has a sibling
+  * `.bai`, and each chunk becomes one scan partition:
   * the index prunes without the probe job's one-record-per-range
   * decode pass, and its bin scheme bounds long-spanning records
   * EXACTLY (the probe path's `maxSpan` granularity contract

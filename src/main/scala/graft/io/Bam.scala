@@ -22,19 +22,20 @@ import java.util.zip.{CRC32, Deflater, GZIPInputStream}
   *    subfield plus the fixed 28-byte EOF sentinel block, so external
   *    spec-compliant tools can read what we write.
   *
-  * Parallelism model: one task per file ([[read]] uses the binaryFile
-  * source) — BAM corpora arrive as many per-sample files — with an
-  * AUTO-ROUTE to [[readSplittable]] when any file exceeds 256 MiB:
-  * byte ranges are parallelized, each task scans
+  * Parallelism model: [[read]] and [[readRegion]] are the DataSourceV2
+  * scan ([[graft.io.v2.BamSource]]), one task per byte range, planned
+  * from the file listing alone. Each task reads its file's header, scans
   * to the first BGZF block magic in its range (chain-validated), aligns
   * to the first alignment-record start (exact offset for the header
-  * range — the driver parses the header once — and a field-validated
-  * guess elsewhere, the hadoop-bam split model the reference relies on
-  * at SQLQueryBAM.java:63-66), and decodes exactly the records whose
-  * START block lies inside the range, spilling into following blocks
-  * for its tail record. A 300 GiB single BAM therefore fans out to
-  * ~4800 tasks instead of one. [[write]] emits one BAM per partition
-  * with the header replicated into each file — exactly the reference's
+  * range and for index chunks, a field-validated guess elsewhere — the
+  * hadoop-bam split model the reference relies on at
+  * SQLQueryBAM.java:63-66), and decodes exactly the records whose START
+  * block lies inside the range, spilling into following blocks for its
+  * tail record. A 300 GiB single BAM therefore fans out to thousands of
+  * tasks instead of one. A single-member plain-gzip BAM (legal gzip, not
+  * BGZF) has no block boundaries: its first range decodes the whole
+  * stream. [[write]] emits one BAM per partition with the header
+  * replicated into each file — exactly the reference's
   * KeyIgnoringBAMOutputFormat header-broadcast design, minus the
   * driver-side header mutation.
   */
@@ -42,10 +43,7 @@ object Bam {
 
   private[graft] type Rec = (String, Int, String, Int, Int, String, String, String)
 
-  /** Whole-file read auto-routes to the splittable path above this. */
-  private val SplitRouteBytes: Long = 256L << 20
-
-  /** Default split size for [[readSplittable]]. */
+  /** Default split size for [[readRegion]]. */
   private val DefaultSplitBytes: Long = 64L << 20
 
   /** Upper bound used when VALIDATING a guessed record start — a real
@@ -64,37 +62,14 @@ object Bam {
 
   // ---------- read ----------
 
-  /** Read BAM files into the same typed alignment shape as
-    * [[SamText.read]] (readName, flag, referenceName, start, mapq, cigar,
-    * bases, quality + derived length/flag-bit columns), so the two
-    * sources are drop-in interchangeable.
+  /** Read BAM files (a file, a directory of `.bam` files or a glob) into
+    * the same typed alignment shape as [[SamText.read]] (readName, flag,
+    * referenceName, start, mapq, cigar, bases, quality + derived
+    * length/flag-bit columns), so the two sources are drop-in
+    * interchangeable.
     */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val files = scala.util.Try(listBams(spark, path)).getOrElse(Seq.empty)
-    val (big, small) = files.partition(_._2 > SplitRouteBytes)
-    if (big.isEmpty)
-      return readWhole(spark, Seq(path), glob = true)
-    // MIXED routing: only the oversized files pay the splittable path
-    // (and its one driver-side header parse per file); the rest keep
-    // one-task-per-file semantics. A 10k-file corpus with one jumbo BAM
-    // does not header-parse 10k files on the driver.
-    val bigDf = big.map(f => readSplittable(spark, f._1)).reduce(_ unionByName _)
-    if (small.isEmpty) bigDf
-    else bigDf.unionByName(readWhole(spark, small.map(_._1), glob = false))
-  }
-
-  private def readWhole(spark: SparkSession, paths: Seq[String],
-                        glob: Boolean): DataFrame = {
-    import spark.implicits._
-    val reader = spark.read.format("binaryFile")
-    val raw = (if (glob) reader.option("pathGlobFilter", "*.bam") else reader)
-      .load(paths: _*)
-      .select("content").as[Array[Byte]]
-    val rows = raw.flatMap(parseBam)
-      .toDF("readName", "flag", "referenceName", "start", "mapq", "cigar",
-        "bases", "quality")
-    withDerivedCols(rows)
-  }
+  def read(spark: SparkSession, path: String): DataFrame =
+    withDerivedCols(spark.read.format("bam").load(path))
 
   private def withDerivedCols(rows: DataFrame): DataFrame =
     rows
@@ -104,21 +79,16 @@ object Bam {
       .withColumn("firstOfPair", SamText.flagBit(col("flag"), 64))
       .withColumn("secondOfPair", SamText.flagBit(col("flag"), 128))
 
-  private[graft] def listBams(spark: SparkSession, path: String): Seq[(String, Long)] = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(hPath)
-    val files =
-      if (st.isDirectory)
-        fs.listStatus(hPath).toSeq
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".bam"))
-      else Seq(st)
-    files.filter(_.getLen > 0).map(s => (s.getPath.toString, s.getLen))
-      .sortBy(_._1)
-  }
+  /** The BAM files under `path`: the globbed files themselves, and the
+    * `.bam` children of globbed directories (a sibling `.bai` is never
+    * data). Throws `FileNotFoundException` when nothing matches.
+    */
+  private[graft] def listBams(spark: SparkSession, path: String): Seq[(String, Long)] =
+    Fastq.listFiles(spark, path, _.endsWith(".bam"))
 
-  /** Decode one whole BAM file (BGZF → uncompressed BAM → records).
-    * Exposed for spec-fixture tests.
+  /** Decode one whole BAM stream (gzip members → uncompressed BAM →
+    * records): the reader of plain-gzip files, and the independent
+    * decoder the spec fixtures check the split reader against.
     */
   private[graft] def parseBam(bam: Array[Byte])
       : Iterator[(String, Int, String, Int, Int, String, String, String)] = {
@@ -147,7 +117,7 @@ object Bam {
 
   /** Decode ONE alignment record from `bb` positioned at its block_size
     * field; leaves the buffer positioned after the record's tags. Shared
-    * by the whole-file and splittable paths.
+    * by [[parseBam]] and the range decoder.
     */
   private def decodeOneRecord(bb: ByteBuffer, refs: IndexedSeq[String]): Rec = {
     val blockSize = bb.getInt
@@ -198,65 +168,31 @@ object Bam {
     (name, flag, refName, pos + 1, mapq, cigar, bases, quality)
   }
 
-  // ---------- splittable read ----------
-
-  /** Parallel read of large BAMs: one task per `splitBytes` byte range,
-    * split on BGZF block boundaries (records may span blocks — a task
-    * owns exactly the records whose START block lies in its range and
-    * reads past its end only for the tail record's spill). Correct for
-    * any spec-conformant BGZF BAM; single-member plain-gzip files (legal
-    * but not BGZF) must use [[read]].
-    */
-  def readSplittable(spark: SparkSession, path: String,
-                     splitBytes: Long = DefaultSplitBytes): DataFrame = {
-    import spark.implicits._
-    require(splitBytes >= (1 << 16), s"splitBytes must be >= 64 KiB, got $splitBytes")
-    val files = listBams(spark, path)
-    // ONE header parse per file on the driver (a few BGZF blocks each):
-    // ships refs + the exact first-record position to every task, so the
-    // header-containing range never guesses.
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val metas: Map[String, HeaderMeta] =
-      files.map { case (p, _) =>
-        p -> readHeaderMeta(fs, new org.apache.hadoop.fs.Path(p))
-      }.toMap
-    val ranges: Seq[(String, Long, Long)] = files.flatMap { case (p, len) =>
-      (0L until len by splitBytes).map(s => (p, s, math.min(s + splitBytes, len)))
-    }
-    val confBc = spark.sparkContext.broadcast(
-      new HadoopConfCarrier(spark.sparkContext.hadoopConfiguration))
-    val metaBc = spark.sparkContext.broadcast(metas)
-    val rows = spark.sparkContext
-      .parallelize(ranges, math.max(1, ranges.size))
-      .flatMap { case (p, s, e) =>
-        val (refs, firstBlock, firstOff, _) = metaBc.value(p)
-        decodeRange(confBc.value.toConf, p, s, e, refs, firstBlock, firstOff)
-      }
-      .toDF("readName", "flag", "referenceName", "start", "mapq", "cigar",
-        "bases", "quality")
-    withDerivedCols(rows)
-  }
+  // ---------- region read ----------
 
   /** Region query `rname:[start,end]` (1-based inclusive, SAM
-    * convention) over a COORDINATE-SORTED BAM, without a .bai. Beyond
-    * the reference's surface (SQLQueryBAM.java reads whole files): a
-    * cheap distributed probe pass decodes ONE record per byte range to
-    * learn the range's first (refId, pos); a range survives only if its
-    * [first-key, next-range-first-key] interval can overlap the region,
-    * so the BGZF blocks of pruned ranges are never inflated by the main
-    * decode job. `maxSpan` plays the BAI linear index's role for
-    * records that START before the region but span into it: the region
-    * lower bound is extended by maxSpan, and records longer than
-    * maxSpan starting more than maxSpan before `start` may be missed
-    * (the same granularity contract an index chunk gives).
+    * convention) over a COORDINATE-SORTED BAM: [[read]] with the scan's
+    * `region`, `splitBytes` and `maxSpan` options. Beyond the reference's
+    * surface (SQLQueryBAM.java reads whole files), the scan plans only
+    * the byte ranges that can hold region records and keeps each record
+    * whose reference span overlaps the region.
     *
-    * INDEXED fast path: when every input file has a sibling `.bai`
-    * (written by [[write]] with `index = true`, or any conformant
-    * indexer), pruning comes from the index instead — bin chunks ∩
-    * linear-index lower bound, no probe pass, and long-spanning records
-    * are bounded EXACTLY by their bins (the `maxSpan` contract below
-    * applies only to the probe path).
+    * INDEXED path: when every input file has a sibling `.bai` (written by
+    * [[write]] with `index = true`, or any conformant indexer), pruning
+    * comes from the index ([[baiRegionPlan]]) — bin chunks ∩ linear-index
+    * lower bound, no probe pass, and long-spanning records are bounded
+    * EXACTLY by their bins.
+    *
+    * PROBE path otherwise ([[regionPlan]]): a cheap distributed probe
+    * decodes ONE record per byte range to learn the range's first
+    * (refId, pos); a range survives only if its [first-key,
+    * next-range-first-key] interval can overlap the region, so the BGZF
+    * blocks of pruned ranges are never inflated by the decode job.
+    * `maxSpan` plays the BAI linear index's role for records that START
+    * before the region but span into it: the region lower bound is
+    * extended by maxSpan, and records longer than maxSpan starting more
+    * than maxSpan before `start` may be missed (the same granularity
+    * contract an index chunk gives).
     *
     * Sortedness detection: the @HD SO header tag is AUTHORITATIVE when
     * present — `SO:coordinate` enables pruning (cross-checked against
@@ -274,71 +210,20 @@ object Bam {
                  start: Int, end: Int,
                  splitBytes: Long = DefaultSplitBytes,
                  maxSpan: Int = 16384): DataFrame =
-    readRegionViaBai(spark, path, rname, start, end).getOrElse {
-      import spark.implicits._
-      // reuse the probe pass's broadcasts for the decode job
-      val (_, surviving, metaBc, confBc) =
-        regionPlanBc(spark, path, rname, start, end, splitBytes, maxSpan)
-      val rows = spark.sparkContext
-        .parallelize(surviving, math.max(1, surviving.size))
-        .flatMap { case (p, s, e) =>
-          val (refs, firstBlock, firstOff, _) = metaBc.value(p)
-          decodeRange(confBc.value.toConf, p, s, e, refs, firstBlock, firstOff)
-        }
-        .toDF("readName", "flag", "referenceName", "start", "mapq", "cigar",
-          "bases", "quality")
-      regionFilter(withDerivedCols(rows), rname, start, end)
-    }
+    withDerivedCols(spark.read.format("bam")
+      .option("region", s"$rname:$start-$end")
+      .option("splitBytes", splitBytes.toString)
+      .option("maxSpan", maxSpan.toString)
+      .load(path))
 
-  /** The residual region predicate: reference span consumed by the
-    * alignment = Σ lengths of M/D/N/=/X ops ('*' or all-clipped cigars
-    * span 0 → treated as 1). Shared by the probe and BAI paths (and
-    * mirrored in io.v2.BamV2's in-reader filter).
-    */
-  private def regionFilter(df: DataFrame, rname: String,
-                           start: Int, end: Int): DataFrame = {
-    val nums = regexp_extract_all(col("cigar"), lit("(\\d+)[MDN=X]"), lit(1))
-    val span = aggregate(transform(nums, x => x.cast("int")), lit(0),
-      (a, x) => a + x)
-    df.filter(col("referenceName") === rname &&
-      col("start") <= end &&
-      col("start") + greatest(span, lit(1)) - 1 >= start)
-  }
-
-  /** The .bai fast path of [[readRegion]]: when EVERY input file has a
-    * sibling `<file>.bai`, region pruning comes from the index — bins ∩
-    * linear-index lower bound → merged chunk list ([[Bai.chunksFor]]) —
-    * with NO probe decode pass, and the bin scheme bounds long-spanning
-    * records exactly (no `maxSpan` granularity contract). Each chunk
-    * becomes one decode task starting at the chunk's exact virtual
-    * offset (block-aligned merging guarantees no record decodes twice).
-    * None ⇒ some file lacks an index, caller falls back to the probe
-    * plan. Returns the same filtered alignment frame as the probe path.
-    */
-  private def readRegionViaBai(spark: SparkSession, path: String,
-      rname: String, start: Int, end: Int): Option[DataFrame] = {
-    import spark.implicits._
-    val planned = baiRegionPlan(spark, path, rname, start, end)
-    if (planned.isEmpty) return None
-    val (metas, ranges) = planned.get
-    val confBc = spark.sparkContext.broadcast(
-      new HadoopConfCarrier(spark.sparkContext.hadoopConfiguration))
-    val metaBc = spark.sparkContext.broadcast(metas)
-    val rows = spark.sparkContext
-      .parallelize(ranges, math.max(1, ranges.size))
-      .flatMap { case (p, s, e, off) =>
-        val (refs, _, _, _) = metaBc.value(p)
-        decodeRange(confBc.value.toConf, p, s, e, refs, s, off)
-      }
-      .toDF("readName", "flag", "referenceName", "start", "mapq", "cigar",
-        "bases", "quality")
-    Some(regionFilter(withDerivedCols(rows), rname, start, end))
-  }
-
-  /** The driver half of the .bai path, exposed for plan tests: per-file
-    * header metas + chunk-derived decode ranges (path, compressed
-    * start, compressed end, uoffset of the first record). None when any
-    * input file lacks a sibling `.bai`.
+  /** The .bai half of region planning: when EVERY input file has a
+    * sibling `<file>.bai`, the region's merged chunk list
+    * ([[Bai.chunksFor]]) as decode ranges (path, compressed start,
+    * compressed end, uoffset of the first record), plus the per-file
+    * header metas. Each chunk starts at its exact virtual offset
+    * (block-aligned merging guarantees no record decodes twice). None
+    * when any input file lacks an index: the caller falls back to
+    * [[regionPlan]].
     */
   private[graft] def baiRegionPlan(spark: SparkSession, path: String,
       rname: String, start: Int, end: Int)
@@ -369,23 +254,13 @@ object Bam {
   private def lexLe(a: (Int, Int), b: (Int, Int)): Boolean =
     a._1 < b._1 || (a._1 == b._1 && a._2 <= b._2)
 
-  /** The pruning half of [[readRegion]], exposed for plan tests:
-    * returns (all ranges, surviving ranges, per-file header meta).
+  /** The probe half of region planning (see [[readRegion]]): returns
+    * (all ranges, surviving ranges, per-file header meta).
     */
   private[graft] def regionPlan(spark: SparkSession, path: String,
       rname: String, start: Int, end: Int, splitBytes: Long, maxSpan: Int)
       : (Seq[(String, Long, Long)], Seq[(String, Long, Long)],
          Map[String, HeaderMeta]) = {
-    val (all, surviving, metaBc, _) =
-      regionPlanBc(spark, path, rname, start, end, splitBytes, maxSpan)
-    (all, surviving, metaBc.value)
-  }
-
-  private def regionPlanBc(spark: SparkSession, path: String,
-      rname: String, start: Int, end: Int, splitBytes: Long, maxSpan: Int)
-      : (Seq[(String, Long, Long)], Seq[(String, Long, Long)],
-         org.apache.spark.broadcast.Broadcast[Map[String, HeaderMeta]],
-         org.apache.spark.broadcast.Broadcast[HadoopConfCarrier]) = {
     require(splitBytes >= (1 << 16), s"splitBytes must be >= 64 KiB, got $splitBytes")
     val files = listBams(spark, path)
     val fs = new org.apache.hadoop.fs.Path(path)
@@ -397,24 +272,22 @@ object Bam {
     val ranges: Seq[(String, Long, Long)] = files.flatMap { case (p, len) =>
       (0L until len by splitBytes).map(s => (p, s, math.min(s + splitBytes, len)))
     }
-    val confBc = spark.sparkContext.broadcast(
-      new HadoopConfCarrier(spark.sparkContext.hadoopConfiguration))
-    val metaBc = spark.sparkContext.broadcast(metas)
+    val conf = new HadoopConfCarrier(spark.sparkContext.hadoopConfiguration)
     // distributed probe: decode exactly ONE record per range (a couple
     // of blocks each); unmapped/unknown refs key as MaxValue — the slot
     // coordinate sort gives them (end of file)
     val probes: Map[(String, Long), Option[(Int, Int)]] = spark.sparkContext
       .parallelize(ranges, math.max(1, ranges.size))
       .map { case (p, s, e) =>
-        val (refs, fb, fo, _) = metaBc.value(p)
+        val (refs, fb, fo, _) = metas(p)
         val refIdx = refs.zipWithIndex.toMap
-        val it = decodeRange(confBc.value.toConf, p, s, e, refs, fb, fo)
+        val it = decodeRange(conf.toConf, p, s, e, refs, fb, fo)
         val first =
           if (it.hasNext) {
             val r = it.next()
             Some((refIdx.getOrElse(r._3, Int.MaxValue), r._4))
           } else None
-        it match { case b: BamRangeIterator => b.closeEarly(); case _ => }
+        closeEarly(it)
         ((p, s), first)
       }.collect().toMap
     // one pass over the ranges list (grouped per file), and the
@@ -465,7 +338,7 @@ object Bam {
         }
       }
     }
-    (ranges, surviving, metaBc, confBc)
+    (ranges, surviving, metas)
   }
 
   /** Walk the BC extra subfields of a BGZF member header; returns the
@@ -545,11 +418,6 @@ object Bam {
     }
   }
 
-  /** Driver-side header parse: (reference names, compressed offset of the
-    * block containing the first alignment record, record offset within
-    * that block's payload). An empty BAM reports firstBlock=Long.MaxValue
-    * so every range decodes nothing.
-    */
   /** Per-file header metadata: (reference names, BGZF block offset of
     * the first record, offset within that block, @HD SO tag value if
     * declared). The SO tag drives region-query pruning policy — see
@@ -557,8 +425,11 @@ object Bam {
     */
   private[graft] type HeaderMeta = (IndexedSeq[String], Long, Int, Option[String])
 
-  private[graft] def readHeaderMeta(fs: org.apache.hadoop.fs.FileSystem,
-                                    path: org.apache.hadoop.fs.Path)
+  /** Parse one file's header. A record-less BAM reports
+    * firstBlock = Long.MaxValue, so every range of it decodes nothing.
+    */
+  private def readHeaderMeta(fs: org.apache.hadoop.fs.FileSystem,
+                             path: org.apache.hadoop.fs.Path)
       : HeaderMeta = {
     val len = fs.getFileStatus(path).getLen
     val in = fs.open(path)
@@ -648,7 +519,7 @@ object Bam {
     -1
   }
 
-  private[graft] def decodeRange(conf: org.apache.hadoop.conf.Configuration,
+  private def decodeRange(conf: org.apache.hadoop.conf.Configuration,
                           pathStr: String, s: Long, e: Long,
                           refs: IndexedSeq[String], firstBlock: Long,
                           firstOff: Int): Iterator[Rec] = {
@@ -665,6 +536,34 @@ object Bam {
         (b, -1) // -1 = record alignment unknown: guess
       }
     new BamRangeIterator(in, len, e, startBlock, off0, refs)
+  }
+
+  /** The records of one planned range [s, e) of `pathStr`, read by the
+    * scan's tasks: the file's own header gives the references and the
+    * first record's position; `recordOff >= 0` is instead the exact
+    * in-block offset of an index chunk that starts at block `s`. A
+    * plain-gzip (non-BGZF) file has no block boundaries: its range at
+    * offset 0 decodes the whole stream through [[parseBam]] and every
+    * other range of it is empty.
+    */
+  private[graft] def decodeSplit(conf: org.apache.hadoop.conf.Configuration,
+                                 pathStr: String, s: Long, e: Long,
+                                 recordOff: Int): Iterator[Rec] = {
+    val path = new org.apache.hadoop.fs.Path(pathStr)
+    val fs = path.getFileSystem(conf)
+    val in = fs.open(path)
+    val bgzf = try {
+      val head = new Array[Byte](4096)
+      bgzfBlockSize(head, 0, in.readNBytes(head, 0, head.length)) > 0
+    } finally in.close()
+    if (!bgzf) {
+      if (s > 0) return Iterator.empty
+      val whole = fs.open(path)
+      return try parseBam(whole.readAllBytes()) finally whole.close()
+    }
+    val (refs, firstBlock, firstOff, _) = readHeaderMeta(fs, path)
+    if (recordOff >= 0) decodeRange(conf, pathStr, s, e, refs, s, recordOff)
+    else decodeRange(conf, pathStr, s, e, refs, firstBlock, firstOff)
   }
 
   /** Early-terminate a [[decodeRange]] iterator (releases its stream);
@@ -838,15 +737,6 @@ object Bam {
 
   // ---------- write ----------
 
-  /** Serialize one complete BAM byte stream: header (magic + SAM text +
-    * reference dictionary) then records, the whole stream chunked into
-    * ≤60 KiB uncompressed BGZF payloads INDEPENDENT of logical
-    * boundaries (header and records may legally span blocks, spec §4.1 —
-    * a many-reference header or one long-read record can exceed any
-    * single block, and BSIZE is uint16, so flushing on logical
-    * boundaries could overflow one). 60 KiB + worst-case deflate
-    * expansion + 26 bytes framing stays safely under 65536.
-    */
   /** When indexing, bamBytes also returns the ingredients of the BAI:
     * per MAPPED record (refId, beg0, end0 — 0-based half-open — plus
     * its uncompressed byte span), the compressed offset of each BGZF
@@ -868,6 +758,15 @@ object Bam {
     }
   }
 
+  /** Serialize one complete BAM byte stream: header (magic + SAM text +
+    * reference dictionary) then records, the whole stream chunked into
+    * ≤60 KiB uncompressed BGZF payloads INDEPENDENT of logical
+    * boundaries (header and records may legally span blocks, spec §4.1 —
+    * a many-reference header or one long-read record can exceed any
+    * single block, and BSIZE is uint16, so flushing on logical
+    * boundaries could overflow one). 60 KiB + worst-case deflate
+    * expansion + 26 bytes framing stays safely under 65536.
+    */
   private def bamBytes(localRefs: Seq[(String, Int)],
                        rows: Iterator[org.apache.spark.sql.Row],
                        sortOrder: Option[String],
@@ -932,9 +831,10 @@ object Bam {
     out.toByteArray
   }
 
-  /** Reference span consumed by a CIGAR (Σ M/D/N/=/X op lengths) — the
-    * byte-loop twin of [[readRegion]]'s regexp fold; '*' or all-clipped
-    * spans 0.
+  /** Reference span consumed by a CIGAR (Σ M/D/N/=/X op lengths); '*'
+    * or all-clipped spans 0. The writer's index feed and the region
+    * scan's residual predicate both read it, so the bins a record is
+    * indexed under and the overlap it is kept by agree.
     */
   private[graft] def cigarRefSpan(cigar: String): Int = {
     if (cigar == null) return 0

@@ -79,8 +79,11 @@ object Fastq {
 
   /** Non-empty, non-hidden files under `path` (a file, a directory or
     * a glob), in path order; a path matching nothing is an error.
+    * `keepChild` filters a matched directory's children by name.
     */
-  private[io] def listFiles(spark: SparkSession, path: String): Seq[(String, Long)] = {
+  private[io] def listFiles(spark: SparkSession, path: String,
+                            keepChild: String => Boolean = _ => true)
+      : Seq[(String, Long)] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val top = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Seq.empty)
@@ -89,7 +92,7 @@ object Fastq {
       if (st.isDirectory)
         fs.listStatus(st.getPath).toSeq
           .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-            !s.getPath.getName.startsWith("."))
+            !s.getPath.getName.startsWith(".") && keepChild(s.getPath.getName))
       else Seq(st)
     }.filter(_.getLen > 0).map(s => (s.getPath.toString, s.getLen)).sortBy(_._1)
   }

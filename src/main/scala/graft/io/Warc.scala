@@ -17,7 +17,7 @@ import java.util.zip.{GZIPInputStream, GZIPOutputStream}
   * member, members concatenated into a `.warc.gz` file. That makes the
   * file both streamable (GZIPInputStream consumes concatenated members
   * natively) and indexable (a member offset is a record offset — the
-  * same property BGZF gives BAM, Bam.scala:72).
+  * same property BGZF gives BAM; see [[Bam]]).
   *
   * Scale unit: ONE FILE per task. Crawls shard into many ~1 GiB files
   * (Common Crawl: ~64 000 per snapshot, released monthly), so file

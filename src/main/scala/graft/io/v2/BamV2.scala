@@ -7,28 +7,30 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** DataSourceV2 BAM source over the [[graft.io.Bam]] splittable/region
-  * machinery — completes the v2 family next to [[FastqSource]] /
-  * [[FastaSource]].
+/** The BAM reader: [[graft.io.Bam.read]] and [[graft.io.Bam.readRegion]]
+  * are this source plus derived columns. Completes the v2 family next
+  * to [[FastqSource]] / [[FastaSource]].
   *
   * `spark.read.format("bam").load(path)` plans one task per BGZF byte
-  * range (block-boundary-safe split alignment, Bam.decodeRange).
+  * range from the file listing alone; each task reads its own file's
+  * header (Bam.decodeSplit: block-boundary-safe split alignment).
   *
   * REGION PUSHDOWN through options — the DSv2 filter story for a
-  * coordinate format: `.option("region", "chr1:500-900")` runs the
-  * driver-side probe plan (Bam.regionPlan — @HD SO policy + one-record
-  * probe per range), hands the readers ONLY the surviving ranges (the
-  * pruned ranges' BGZF blocks are never inflated), and applies the
-  * residual overlap predicate per record inside the reader — the scan's
-  * OUTPUT is exactly the region's records, like Bam.readRegion.
-  * `.option("maxSpan", n)` mirrors readRegion's linear-index granularity
+  * coordinate format: `.option("region", "chr1:500-900")` plans on the
+  * driver, from the .bai chunks when every file has an index
+  * (Bam.baiRegionPlan) and otherwise by the probe plan (Bam.regionPlan —
+  * @HD SO policy + one-record probe per range). The readers get ONLY
+  * the surviving ranges (the pruned ranges' BGZF blocks are never
+  * inflated) and apply the residual overlap predicate per record, so
+  * the scan's OUTPUT is exactly the region's records.
+  * `.option("maxSpan", n)` is the probe plan's linear-index granularity
   * contract; `.option("splitBytes", n)` overrides the session's
   * maxPartitionBytes-derived split.
   *
@@ -36,18 +38,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * row to the required fields. (The binary record decode itself still
   * parses every field — BAM's in-record layout demands walking all
   * lengths anyway; the FASTQ/FASTA sources' allocation-level pruning
-  * has its analog here in the rows, not the decode.)
+  * has its analog here in the rows, not the decode.) The scan reports
+  * its listed byte total as `sizeInBytes`, like the FASTQ/FASTA scans.
   */
 class BamSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
   override def shortName(): String = "bam"
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = BamV2.schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new BamTable(properties.get("path"),
-      Option(properties.get("splitBytes")).map(_.toLong),
-      Option(properties.get("region")),
-      Option(properties.get("maxSpan")).map(_.toInt))
+                        properties: util.Map[String, String]): Table = {
+    val region = Option(properties.get("region"))
+    val maxSpan = Option(properties.get("maxSpan")).map(_.toInt)
+    new RangeTable("bam", BamV2.schema, properties, BamScan(_, _, region, maxSpan, _))
+  }
 }
 
 private[v2] object BamV2 {
@@ -68,42 +71,14 @@ private[v2] object BamV2 {
         s"region must be rname:start-end, got '$r'"))
     (m.group(1), m.group(2).toInt, m.group(3).toInt)
   }
-
-  /** Reference span consumed by a CIGAR — [[Bam.cigarRefSpan]] ('*' or
-    * all-clipped spans 0; the caller treats 0 as 1).
-    */
-  def refSpan(cigar: String): Int = Bam.cigarRefSpan(cigar)
 }
 
-private[v2] class BamTable(path: String, splitBytes: Option[Long],
-                           region: Option[String], maxSpan: Option[Int])
-    extends Table with SupportsRead {
-  require(path != null, "BamSource needs .load(path)")
-  override def name(): String = s"bam($path)"
-  override def schema(): StructType = BamV2.schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    new BamScanBuilder(path, splitBytes, region, maxSpan)
-}
-
-private[v2] class BamScanBuilder(path: String, splitBytes: Option[Long],
-                                 region: Option[String], maxSpan: Option[Int])
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = BamV2.schema
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  override def build(): Scan =
-    BamScan(path, splitBytes, region, maxSpan, required)
-}
-
-/** One decodable byte range + the owning file's header meta (refs +
-  * exact first-record position), shipped per partition so the
-  * header-containing range never guesses.
+/** One decodable byte range. `recordOff` is the exact in-block offset
+  * of the first record when the range is an index chunk, else -1 (the
+  * reader takes it from its file's header, or guesses mid-file).
   */
 private[v2] case class BamPartition(path: String, start: Long, end: Long,
-                                    refs: IndexedSeq[String],
-                                    firstBlock: Long, firstOff: Int)
+                                    recordOff: Int)
     extends InputPartition
 
 /** A case class: two scans of one relation compare equal, so a plan
@@ -112,46 +87,37 @@ private[v2] case class BamPartition(path: String, start: Long, end: Long,
 private[v2] case class BamScan(path: String, splitOpt: Option[Long],
                           region: Option[String], maxSpanOpt: Option[Int],
                           required: StructType)
-    extends Scan with Batch {
+    extends Scan with Batch with SupportsReportStatistics {
+  private lazy val files = Bam.listBams(SparkSession.active, path)
+
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
     s"GraftBamScan path=$path region=${region.getOrElse("-")} " +
       s"ReadSchema: ${required.simpleString}"
+  override def estimateStatistics(): Statistics = RangePlanner.statistics(files)
 
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
     val splitBytes = math.max(1L << 16,
       splitOpt.getOrElse(spark.sessionState.conf.filesMaxPartitionBytes))
-    region match {
-      case Some(r) =>
-        val (rname, s, e) = BamV2.parseRegion(r)
-        // .bai fast path first (same preference as Bam.readRegion):
-        // chunk-derived ranges start at exact record virtual offsets
-        Bam.baiRegionPlan(spark, path, rname, s, e) match {
-          case Some((metas, ranges)) =>
-            ranges.map { case (p, st, en, off) =>
-              BamPartition(p, st, en, metas(p)._1, st, off)
-            }.toArray[InputPartition]
-          case None =>
-            val (_, surviving, metas) = Bam.regionPlan(spark, path, rname, s, e,
-              splitBytes, maxSpanOpt.getOrElse(16384))
-            surviving.map { case (p, st, en) =>
-              val (refs, fb, fo, _) = metas(p)
-              BamPartition(p, st, en, refs, fb, fo)
-            }.toArray[InputPartition]
-        }
+    val parts = region.map(BamV2.parseRegion) match {
       case None =>
-        val files = Bam.listBams(spark, path)
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
         files.flatMap { case (p, len) =>
-          val (refs, fb, fo, _) =
-            Bam.readHeaderMeta(fs, new org.apache.hadoop.fs.Path(p))
           (0L until len by splitBytes).map(s =>
-            BamPartition(p, s, math.min(s + splitBytes, len), refs, fb, fo))
-        }.toArray[InputPartition]
+            BamPartition(p, s, math.min(s + splitBytes, len), -1))
+        }
+      case Some((rname, s, e)) =>
+        Bam.baiRegionPlan(spark, path, rname, s, e) match {
+          case Some((_, chunks)) =>
+            chunks.map { case (p, st, en, off) => BamPartition(p, st, en, off) }
+          case None =>
+            Bam.regionPlan(spark, path, rname, s, e, splitBytes,
+              maxSpanOpt.getOrElse(16384))._2
+              .map { case (p, st, en) => BamPartition(p, st, en, -1) }
+        }
     }
+    parts.toArray[InputPartition]
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -175,16 +141,17 @@ private[v2] class BamPartitionReader(conf: Configuration, part: BamPartition,
                                      region: Option[(String, Int, Int)])
     extends PartitionReader[InternalRow] {
 
-  private val it: Iterator[Bam.Rec] = Bam.decodeRange(conf, part.path,
-    part.start, part.end, part.refs, part.firstBlock, part.firstOff)
+  private val it: Iterator[Bam.Rec] =
+    Bam.decodeSplit(conf, part.path, part.start, part.end, part.recordOff)
 
   // residual region predicate (the partition pruning is necessary, not
-  // sufficient — surviving ranges still hold out-of-region records)
+  // sufficient — surviving ranges still hold out-of-region records); a
+  // cigar spanning 0 reference bases counts as 1
   private def inRegion(r: Bam.Rec): Boolean = region match {
     case None => true
     case Some((rname, s, e)) =>
       r._3 == rname && r._4 <= e &&
-        r._4 + math.max(BamV2.refSpan(r._6), 1) - 1 >= s
+        r._4 + math.max(Bam.cigarRefSpan(r._6), 1) - 1 >= s
   }
 
   private var rec: Bam.Rec = _

@@ -37,19 +37,24 @@ object Pipeline {
   /** F2/F3 pairwise quality filter (FastqFilter.java:109-141): a read
     * survives only if BOTH it and its mate pass the quality predicates.
     * The reference walks physically-adjacent records; we pair by
-    * normalized name (T7) — deterministic under any partitioning.
+    * normalized name (T7) — deterministic under any partitioning. Reads
+    * from [[interleave]] carry that name as `pairName` and are already
+    * partitioned by it, so the mate window adds no shuffle.
     */
   def pairedQualityFilter(reads: DataFrame, minAvgQuality: Double,
                           lowQualThreshold: Int, maxLowQualCount: Int): DataFrame = {
     import graft.functions.DnaFunctions._
-    val normName = regexp_extract(col("key"), "^([^/ ]+)", 1)
-    reads.withColumn("_name", normName)
+    val byPair = reads.columns.contains("pairName")
+    val name = if (byPair) "pairName" else "_name"
+    val named = if (byPair) reads
+      else reads.withColumn("_name", regexp_extract(col("key"), "^([^/ ]+)", 1))
+    named
       .withColumn("_pass",
         avgQualityCol(col("quality")) > minAvgQuality &&
           lowQualityCountCol(col("quality"), lowQualThreshold) < maxLowQualCount)
       .withColumn("_pair_pass", // AND across mates
-        min(col("_pass")).over(Window.partitionBy("_name")))
-      .filter(col("_name").isNotNull && col("_pair_pass"))
+        min(col("_pass")).over(Window.partitionBy(name)))
+      .filter(col(name).isNotNull && col("_pair_pass"))
       .drop("_name", "_pass", "_pair_pass")
   }
 

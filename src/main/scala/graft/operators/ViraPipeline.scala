@@ -181,7 +181,8 @@ object ViraPipeline {
       concat_ws("_", col("id"), col("strand"), col("frame"), col("start")).as("id"),
       col("sequence"))), cfg.hmmsearch)
     val hmmHits = pin(hmmLines.toDF("value")
-      .select(split(col("value"), " ").getItem(0).as("orf_id")), "hmm_hits")
+      .filter(!col("value").startsWith("#")) // tblout comment lines
+      .select(split(col("value"), "\\s+").getItem(0).as("orf_id")), "hmm_hits")
 
     Result(aligned, normalized, contigs, filteredContigs, orfs, hmmHits)
   }

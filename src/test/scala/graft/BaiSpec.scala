@@ -76,7 +76,7 @@ class BaiSpec extends AnyFunSuite {
     assert(covered < fileLen / 2,
       s"index should prune most of the file: $covered of $fileLen bytes")
 
-    val full = Bam.readSplittable(spark, file, splitBytes = 1 << 16)
+    val full = Bam.read(spark, file)
       .select("readName", "start", "bases").collect()
       .map(r => (r.getString(0), r.getInt(1), r.getString(2)))
     for ((lo, hi) <- Seq((30000, 40000), (1, 500), (99000, 99900), (500000, 600000))) {

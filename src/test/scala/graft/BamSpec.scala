@@ -1,6 +1,8 @@
 package graft
 
 import graft.io.{Bam, SamText}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -141,10 +143,13 @@ class BamSpec extends AnyFunSuite {
     assert(bamFile.length() > 3 * 65536, "fixture must span several BGZF blocks")
     // 64 KiB splits (the minimum) force many ranges: mid-block cuts,
     // ranges with no block start, header-range and guesser paths all hit.
-    val split = Bam.readSplittable(spark, bamFile.getAbsolutePath, splitBytes = 1 << 16)
+    val split = spark.read.format("bam").option("splitBytes", 1 << 16)
+      .load(bamFile.getAbsolutePath)
       .select(cols.map(col): _*).collect().map(_.toSeq).toSeq
-    assert(split.size == whole.size)
-    assert(split == whole) // same records in the same order = bit-identical
+    val want = V1Parse.bam(bamFile.getAbsolutePath).map(_.productIterator.toSeq)
+    assert(whole == want)
+    assert(split.size == want.size)
+    assert(split == want) // same records in the same order = bit-identical
   }
 
   test("splittable read via a directory path and a coarse split matches too") {
@@ -153,9 +158,82 @@ class BamSpec extends AnyFunSuite {
       "cigar", "bases", "quality")
     val whole = Bam.read(spark, s"$dir/bam")
       .select(cols.map(col): _*).collect().map(_.toSeq).toSeq
-    val split = Bam.readSplittable(spark, s"$dir/bam", splitBytes = 1 << 20)
+    val split = spark.read.format("bam").option("splitBytes", 1 << 20)
+      .load(s"$dir/bam")
       .select(cols.map(col): _*).collect().map(_.toSeq).toSeq
+    assert(whole == V1Parse.bam(s"$dir/bam").map(_.productIterator.toSeq))
     assert(split == whole)
+  }
+
+  private val recCols = Seq("readName", "flag", "referenceName", "start", "mapq",
+    "cigar", "bases", "quality")
+
+  private def rows(df: DataFrame): Seq[Seq[Any]] =
+    df.select(recCols.map(col): _*).collect().map(_.toSeq).toSeq
+
+  test("a plain-gzip (non-BGZF) BAM reads whole, once, through Bam.read and a split scan") {
+    val dir = bigBamFixture(800)
+    val bgzf = new java.io.File(s"$dir/bam").listFiles().filter(_.getName.endsWith(".bam")).head
+    val raw = new java.util.zip.GZIPInputStream(new java.io.FileInputStream(bgzf)).readAllBytes()
+    // one gzip member without the BC subfield: legal gzip, not BGZF
+    val plain = java.nio.file.Files.createTempDirectory("graft_bam_gzip").resolve("plain.bam")
+    val go = new java.util.zip.GZIPOutputStream(java.nio.file.Files.newOutputStream(plain))
+    try go.write(raw) finally go.close()
+    assert(java.nio.file.Files.size(plain) > 65536, "the file must span several splits")
+    val want = V1Parse.bam(plain.toString).map(_.productIterator.toSeq)
+    assert(want.size == 800)
+    assert(rows(Bam.read(spark, plain.toString)) == want)
+    assert(rows(spark.read.format("bam").option("splitBytes", 65536).load(plain.toString)) == want)
+  }
+
+  test("a glob of .bam files reads as their directory does, never the .bai beside them") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_bam_glob").toString
+    for (part <- 0 until 2) {
+      val recs = (0 until 50).map { i =>
+        (s"g${part}_$i", 0, "chr1", part * 1000 + i * 10 + 1, 60, "8M", "ACGTACGT", "IIIIIIII")
+      }.toDF(recCols: _*)
+      Bam.write(recs.coalesce(1), s"$dir/part-$part.bam", refs = Seq(("chr1", 10000)),
+        singleFile = true, sortOrder = Some("coordinate"), index = true)
+    }
+    assert(new java.io.File(s"$dir/part-0.bam.bai").isFile)
+    val byDir = rows(Bam.read(spark, dir))
+    assert(byDir == V1Parse.bam(dir).map(_.productIterator.toSeq))
+    assert(byDir.size == 100)
+    assert(rows(Bam.read(spark, s"$dir/*.bam")) == byDir)
+  }
+
+  test("Bam.read reports the BAM's byte size to the optimizer") {
+    val dir = bigBamFixture(120)
+    val file = new java.io.File(s"$dir/bam").listFiles().filter(_.getName.endsWith(".bam")).head
+    val scan = spark.read.format("bam").load(file.getPath).queryExecution.optimizedPlan
+    assert(scan.stats.sizeInBytes == BigInt(file.length()), scan.stats)
+    val plan = Bam.read(spark, file.getPath).queryExecution.optimizedPlan
+    // the derived columns' projection scales the scan's size by the
+    // estimated row widths, a few percent
+    assert(plan.collectLeaves().map(_.stats.sizeInBytes) == Seq(BigInt(file.length())), plan)
+    assert(plan.stats.sizeInBytes < 2 * file.length(), plan.stats)
+  }
+
+  test("Bam.read and Bam.readRegion run one GraftBamScan, with and without a .bai") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_bam_plan").toString
+    val file = s"$dir/sorted.bam"
+    val recs = (0 until 200).map(i => (f"p$i%04d", 0, "chr1", i * 10 + 1, 60, "8M",
+      "ACGTACGT", "IIIIIIII")).toDF(recCols: _*)
+    Bam.write(recs.coalesce(1), file, refs = Seq(("chr1", 10000)),
+      singleFile = true, sortOrder = Some("coordinate"), index = true)
+    def scans(df: DataFrame): Seq[String] =
+      FinalPlan.nodes(df).collect { case b: BatchScanExec => b.scan.description() }
+    for (indexed <- Seq(true, false)) {
+      if (!indexed) assert(new java.io.File(file + ".bai").delete())
+      for (df <- Seq(Bam.read(spark, file), Bam.readRegion(spark, file, "chr1", 100, 200))) {
+        val s = scans(df)
+        assert(s.size == 1 && s.head.startsWith("GraftBamScan"), s"indexed=$indexed: $s")
+      }
+      // starts 101, 111, ..., 191: the 8-base reads overlapping [100, 200]
+      assert(Bam.readRegion(spark, file, "chr1", 100, 200).count() == 10)
+    }
   }
 
   test("region read prunes out-of-region ranges and equals scan+filter") {
@@ -185,11 +263,8 @@ class BamSpec extends AnyFunSuite {
     val got = Bam.readRegion(spark, file, "chr1", 30000, 40000,
         splitBytes = 1 << 16)
       .select("readName", "start").collect().map(_.toSeq).toSet
-    val want = Bam.readSplittable(spark, file, splitBytes = 1 << 16)
-      .filter(col("referenceName") === "chr1" &&
-        col("start") <= 40000 &&
-        col("start") + length(col("bases")) - 1 >= 30000)
-      .select("readName", "start").collect().map(_.toSeq).toSet
+    val want = V1Parse.bamRegion(V1Parse.bam(file), "chr1", 30000, 40000)
+      .map(r => Seq(r._1, r._4)).toSet
     assert(got == want)
     assert(got.nonEmpty)
     // records spanning INTO the region from before its start are kept
@@ -218,10 +293,8 @@ class BamSpec extends AnyFunSuite {
     val ugot = Bam.readRegion(spark, ufile, "chr1", 30000, 40000,
         splitBytes = 1 << 16)
       .select("readName", "start").collect().map(_.toSeq).toSet
-    val uwant = Bam.readSplittable(spark, ufile, splitBytes = 1 << 16)
-      .filter(col("start") <= 40000 &&
-        col("start") + length(col("bases")) - 1 >= 30000)
-      .select("readName", "start").collect().map(_.toSeq).toSet
+    val uwant = V1Parse.bamRegion(V1Parse.bam(ufile), "chr1", 30000, 40000)
+      .map(r => Seq(r._1, r._4)).toSet
     assert(ugot == uwant)
   }
 
@@ -254,10 +327,8 @@ class BamSpec extends AnyFunSuite {
         splitBytes = 1 << 16)
       .agg(org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1))).collect()(0).getLong(0)
-    val want = Bam.readSplittable(spark, dir, splitBytes = 1 << 16)
-      .filter(col("start") <= 20000 &&
-        col("start") + length(col("bases")) - 1 >= 10000)
-      .count()
+    val want = V1Parse.bamRegion(V1Parse.bam(dir), "chr1", 10000, 20000)
+      .size.toLong
     assert(got == want && got > 0)
   }
 
@@ -296,10 +367,8 @@ class BamSpec extends AnyFunSuite {
     val got = Bam.readRegion(spark, qfile, "chr1", 30000, 40000,
         splitBytes = 1 << 16)
       .select("readName").collect().map(_.getString(0)).toSet
-    val want = Bam.readSplittable(spark, qfile, splitBytes = 1 << 16)
-      .filter(col("start") <= 40000 &&
-        col("start") + length(col("bases")) - 1 >= 30000)
-      .select("readName").collect().map(_.getString(0)).toSet
+    val want = V1Parse.bamRegion(V1Parse.bam(qfile), "chr1", 30000, 40000)
+      .map(_._1).toSet
     assert(got == want && got.nonEmpty)
   }
 
@@ -319,7 +388,7 @@ class BamSpec extends AnyFunSuite {
     val file = s"$dir/sorted.bam"
     Bam.write(rows.coalesce(1), file, refs = Seq(("chr1", 200000)),
       singleFile = true)
-    val full = Bam.readSplittable(spark, file, splitBytes = 1 << 16)
+    val full = Bam.read(spark, file)
       .select("readName", "start", "bases").collect()
       .map(r => (r.getString(0), r.getInt(1), r.getString(2)))
     for (t <- 0 until 6) {

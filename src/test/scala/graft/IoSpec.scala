@@ -84,6 +84,7 @@ class IoSpec extends AnyFunSuite {
     val missing = Files.createTempDirectory("graft_missing").toString + "/nope"
     intercept[java.io.FileNotFoundException](Fastq.read(spark, missing).collect())
     intercept[java.io.FileNotFoundException](Fasta.read(spark, missing).collect())
+    intercept[java.io.FileNotFoundException](graft.io.Bam.read(spark, missing).collect())
   }
 
   test("Fastq.read under ANSI mode: /1-/2 keys and bad ints read NULL header columns") {

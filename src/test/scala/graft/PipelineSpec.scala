@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.ViraPipeline
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{MapPartitionsExec, QueryExecution}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
@@ -164,6 +165,36 @@ class PipelineSpec extends AnyFunSuite {
     Seq("r1", "r2").foreach { mate =>
       assert(scans.count(_.toString.contains(s"$dir/$mate")) == 1, stage.toString.take(6000))
     }
+    // the gate windows on interleave's pairName, so the mates are
+    // hash-partitioned by name once
+    val hashed = FinalPlan.collectAll(stage).collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }
+    assert(hashed.size == 1, stage.toString.take(6000))
+  }
+
+  test("hmm_hits drop the tblout comment lines around the hit rows") {
+    import graft.pipe.Pipes
+    val (r1, r2) = pairedReads
+    val cfg = ViraPipeline.Config(k = 4, minc = 0, maxc = 100, orfMinLen = 2)
+    // the mock framed like a --tblout table: '#' header and trailer
+    // lines, columns padded with runs of spaces
+    val tblout = Some(Seq("sh", "-c",
+      "echo '#  target name  accession'; \"$@\" | sed 's/ /   /g'; echo '# [ok]'",
+      "sh") ++ Pipes.HmmsearchMock)
+    // the mock answers every protein, so a run's hits are its ORF ids
+    // (each run draws fresh contig uuids: check each against its own)
+    def hitsAndOrfs(c: ViraPipeline.Config): (Seq[String], Seq[String]) = {
+      val res = ViraPipeline.run(spark, r1, r2, c)
+      (res.hmmHits.select("orf_id").collect().map(_.getString(0)).sorted.toSeq,
+        res.orfs.select(concat_ws("_", col("id"), col("strand"), col("frame"), col("start")))
+          .collect().map(_.getString(0)).sorted.toSeq)
+    }
+    val (plainHits, plainOrfs) = hitsAndOrfs(cfg)
+    val (hits, orfs) = hitsAndOrfs(cfg.copy(hmmsearch = tblout))
+    assert(hits.nonEmpty && !hits.exists(_.startsWith("#")), hits)
+    assert(plainHits == plainOrfs)
+    assert(hits == orfs)
   }
 
   test("every ORF of a frame reaches hmmsearch: the id carries the ORF start") {
