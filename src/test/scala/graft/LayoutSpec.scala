@@ -942,6 +942,55 @@ class LayoutSpec extends AnyFunSuite {
       prune = Some(Layout.StatPred.Eq("id", 777L))).count() == 1)
   }
 
+  test("every writer stamps new files with the table's stats, blooms and schema id") {
+    import spark.implicits._
+    def base(): String = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_contract").toString
+      // four files with overlapping id ranges: small, unclustered, so
+      // both incremental maintenance passes have work to do
+      val df = (1L to 400L).map(i => (i, s"v$i")).toDF("id", "v").repartition(4)
+      Layout.snapshotWrite(df, dir, statsCols = Seq("id"), bloomCols = Seq("id"))
+      dir
+    }
+    val writers: Seq[(String, String => Unit)] = Seq(
+      "updateWhere" -> (d => Layout.updateWhere(spark, d, col("id") === 7L,
+        Seq("v" -> lit("u7")))),
+      "mergeInto" -> (d => Layout.mergeInto(spark, d,
+        Seq((8L, "m8"), (900L, "m900")).toDF("id", "v"), Seq("id"))),
+      "upsertKeysMoR" -> (d => Layout.upsertKeysMoR(spark, d,
+        Seq((9L, "x9"), (901L, "x901")).toDF("id", "v"), Seq("id"))),
+      "compactSmallFiles" -> (d => Layout.compactSmallFiles(spark, d,
+        targetBytes = 64L << 20)),
+      "optimizeClusteredIncremental" -> (d =>
+        Layout.optimizeClusteredIncremental(spark, d, "id", 64L << 20)),
+      "snapshotAppendStaged -> stageAppendMore -> publishStaged" -> { d =>
+        val tok = Layout.snapshotAppendStaged(
+          Seq((902L, "s902")).toDF("id", "v"), d)
+        Layout.stageAppendMore(Seq((903L, "s903")).toDF("id", "v"), d, tok)
+        Layout.publishStaged(spark, d, tok)
+      })
+    writers.foreach { case (name, write) =>
+      val dir = base()
+      val before = Layout.snapshotFiles(spark, dir).map(_.path).toSet
+      write(dir)
+      val fresh = Layout.snapshotFiles(spark, dir).filterNot(e => before(e.path))
+      assert(fresh.nonEmpty, s"$name wrote no new file")
+      val sid = Layout.snapshotSchemas(spark, dir).last.id
+      fresh.foreach { e =>
+        assert(e.stats.contains("id"), s"$name: ${e.path} lacks id stats")
+        assert(e.blooms.contains("id"), s"$name: ${e.path} lacks the id bloom")
+        assert(e.schemaId.contains(sid), s"$name: ${e.path} schema ${e.schemaId} != $sid")
+      }
+      val all = Layout.snapshotRead(spark, dir)
+      for (k <- Seq(7L, 8L, 9L, 200L, 900L, 901L, 903L, 5000L)) {
+        val pruned = Layout.snapshotRead(spark, dir,
+          prune = Some(Layout.StatPred.Eq("id", k)))
+        assert(pruned.collect().toSet == all.filter(col("id") === k).collect().toSet,
+          s"$name: point lookup of $k")
+      }
+    }
+  }
+
   test("mergeInto: stats-bounded rewrite, untouched files byte-identical") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_merge").toString

@@ -3,6 +3,8 @@ package graft.operators
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicReference
 
+import graft.SparkTestSession
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class ParallelismSpec extends AnyFunSuite {
@@ -32,5 +34,16 @@ class ParallelismSpec extends AnyFunSuite {
     assert(thrown.isInstanceOf[InterruptedException])
     assert(flagRestored)
     assert(cancelled.await(10, TimeUnit.SECONDS), "the sleeping thunk kept running")
+  }
+
+  test("ensurePinned returns an already-parallel or derived input untouched") {
+    val spark = SparkTestSession.spark
+    val p = spark.sparkContext.defaultParallelism
+    val parallel = spark.range(0, 1000, 1, p).toDF("id")
+    assert(Parallelism.ensurePinned(parallel) eq parallel)
+    val joined = parallel.join(spark.range(0, 10).toDF("id"), "id")
+    assert(Parallelism.ensurePinned(joined) eq joined)
+    val agg = parallel.groupBy(col("id") % 7).count()
+    assert(Parallelism.ensurePinned(agg) eq agg)
   }
 }
