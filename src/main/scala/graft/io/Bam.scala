@@ -233,7 +233,8 @@ object Bam {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!files.forall { case (p, _) =>
-      fs.exists(new org.apache.hadoop.fs.Path(p + ".bai")) }) return None
+      fs.exists(new org.apache.hadoop.fs.Path(p + ".bai")) &&
+        isBgzf(fs, new org.apache.hadoop.fs.Path(p)) }) return None
     val metas: Map[String, HeaderMeta] = files.map { case (p, _) =>
       p -> readHeaderMeta(fs, new org.apache.hadoop.fs.Path(p))
     }.toMap
@@ -255,7 +256,10 @@ object Bam {
     a._1 < b._1 || (a._1 == b._1 && a._2 <= b._2)
 
   /** The probe half of region planning (see [[readRegion]]): returns
-    * (all ranges, surviving ranges, per-file header meta).
+    * (all ranges, surviving ranges, per-file header meta). A plain-gzip
+    * (non-BGZF) file has no block boundaries to probe or prune: it
+    * plans as its one whole range, which the scan decodes in one pass
+    * and filters per record, and it has no header meta here.
     */
   private[graft] def regionPlan(spark: SparkSession, path: String,
       rname: String, start: Int, end: Int, splitBytes: Long, maxSpan: Int)
@@ -265,38 +269,41 @@ object Bam {
     val files = listBams(spark, path)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val metas: Map[String, HeaderMeta] =
-      files.map { case (p, _) =>
+    val metas: Map[String, HeaderMeta] = files.collect {
+      case (p, _) if isBgzf(fs, new org.apache.hadoop.fs.Path(p)) =>
         p -> readHeaderMeta(fs, new org.apache.hadoop.fs.Path(p))
-      }.toMap
+    }.toMap
     val ranges: Seq[(String, Long, Long)] = files.flatMap { case (p, len) =>
-      (0L until len by splitBytes).map(s => (p, s, math.min(s + splitBytes, len)))
+      if (!metas.contains(p)) Seq((p, 0L, len))
+      else (0L until len by splitBytes).map(s => (p, s, math.min(s + splitBytes, len)))
     }
+    val probed = ranges.filter(r => metas.contains(r._1))
     val conf = new HadoopConfCarrier(spark.sparkContext.hadoopConfiguration)
     // distributed probe: decode exactly ONE record per range (a couple
     // of blocks each); unmapped/unknown refs key as MaxValue — the slot
     // coordinate sort gives them (end of file)
-    val probes: Map[(String, Long), Option[(Int, Int)]] = spark.sparkContext
-      .parallelize(ranges, math.max(1, ranges.size))
-      .map { case (p, s, e) =>
-        val (refs, fb, fo, _) = metas(p)
-        val refIdx = refs.zipWithIndex.toMap
-        val it = decodeRange(conf.toConf, p, s, e, refs, fb, fo)
-        val first =
-          if (it.hasNext) {
-            val r = it.next()
-            Some((refIdx.getOrElse(r._3, Int.MaxValue), r._4))
-          } else None
-        closeEarly(it)
-        ((p, s), first)
-      }.collect().toMap
+    val probes: Map[(String, Long), Option[(Int, Int)]] =
+      if (probed.isEmpty) Map.empty
+      else spark.sparkContext.parallelize(probed, probed.size)
+        .map { case (p, s, e) =>
+          val (refs, fb, fo, _) = metas(p)
+          val refIdx = refs.zipWithIndex.toMap
+          val it = decodeRange(conf.toConf, p, s, e, refs, fb, fo)
+          val first =
+            if (it.hasNext) {
+              val r = it.next()
+              Some((refIdx.getOrElse(r._3, Int.MaxValue), r._4))
+            } else None
+          closeEarly(it)
+          ((p, s), first)
+        }.collect().toMap
     // one pass over the ranges list (grouped per file), and the
     // next-defined-key lookup precomputed as a suffix scan — both
     // linear in |ranges|, so planning stays cheap at millions of ranges
     val byFile = ranges.groupBy(_._1)
     val surviving = files.flatMap { case (p, _) =>
       val frs = byFile.getOrElse(p, Seq.empty)
-      val los = frs.map(r => probes((p, r._2)))
+      val los = frs.map(r => probes.getOrElse((p, r._2), None))
       val defined = los.flatten
       val probesMonotone = defined.size < 2 ||
         defined.sliding(2).forall {
@@ -309,13 +316,14 @@ object Bam {
       // otherwise drop records), any other declared SO forbids it. With
       // no SO declared, the probe alone decides — BEST-EFFORT: it sees
       // one record per byte range, so a file unsorted only WITHIN
-      // ranges passes undetected.
-      val isSorted = metas(p)._4 match {
+      // ranges passes undetected. A plain-gzip file has no meta: its
+      // one range is kept.
+      val isSorted = metas.get(p).exists(_._4 match {
         case Some("coordinate") => probesMonotone
         case Some(_) => false
         case None => probesMonotone
-      }
-      val refIdx = metas(p)._1.zipWithIndex.toMap
+      })
+      lazy val refIdx = metas(p)._1.zipWithIndex.toMap
       if (!isSorted) frs // unsorted: keep all (scan + filter, no pruning)
       else if (!refIdx.contains(rname)) Seq.empty // unknown ref: no rows
       else {
@@ -538,6 +546,16 @@ object Bam {
     new BamRangeIterator(in, len, e, startBlock, off0, refs)
   }
 
+  /** Whether the file opens with a BGZF block (a plain-gzip BAM does not). */
+  private def isBgzf(fs: org.apache.hadoop.fs.FileSystem,
+                     path: org.apache.hadoop.fs.Path): Boolean = {
+    val in = fs.open(path)
+    try {
+      val head = new Array[Byte](4096)
+      bgzfBlockSize(head, 0, in.readNBytes(head, 0, head.length)) > 0
+    } finally in.close()
+  }
+
   /** The records of one planned range [s, e) of `pathStr`, read by the
     * scan's tasks: the file's own header gives the references and the
     * first record's position; `recordOff >= 0` is instead the exact
@@ -551,12 +569,7 @@ object Bam {
                                  recordOff: Int): Iterator[Rec] = {
     val path = new org.apache.hadoop.fs.Path(pathStr)
     val fs = path.getFileSystem(conf)
-    val in = fs.open(path)
-    val bgzf = try {
-      val head = new Array[Byte](4096)
-      bgzfBlockSize(head, 0, in.readNBytes(head, 0, head.length)) > 0
-    } finally in.close()
-    if (!bgzf) {
+    if (!isBgzf(fs, path)) {
       if (s > 0) return Iterator.empty
       val whole = fs.open(path)
       return try parseBam(whole.readAllBytes()) finally whole.close()

@@ -489,31 +489,14 @@ object Layout {
                         snapshotId: Long = -1L,
                         mergeSchema: Boolean = false): DataFrame = {
     val pred = toStatPred(filter)
-    val (all, schemas) = snapshotState(spark, dir, snapshotId)
-    val kept = pred match {
-      case None => all
-      case Some(p) => all.filter(e => mayMatchEvolved(e, p, schemas))
-    }
+    val (_, m) = snapshotAt(tableFs(spark, dir), dir, snapshotId)
+    val kept = pruned(m, pred)
     // zero survivors: a schema-correct empty result with no scan over
     // the full list ([[emptyLike]] — manifest schema when recorded, a
     // bounded file subset otherwise)
     if (kept.isEmpty && pred.isDefined)
-      return emptyLike(spark, dir, all, schemas, mergeSchema)
-    if (!uniformSchema(all, schemas)) {
-      val base = evolvedRead(spark, dir, kept, schemas, mergeSchema,
-        deletes = resolvedDeletes(spark, dir, snapshotId),
-        eqDeletes = resolvedEqDeletes(spark, dir, snapshotId))
-      return base.filter(filter)
-    }
-    val files = kept.map(e => s"$dir/${e.path}")
-    val reader =
-      if (mergeSchema) spark.read.option("mergeSchema", "true")
-      else spark.read
-    val base = eqFilter(spark, dir,
-      dvFilter(spark, dir, reader.parquet(files: _*), kept,
-        resolvedDeletes(spark, dir, snapshotId)),
-      resolvedEqDeletes(spark, dir, snapshotId))
-    base.filter(filter)
+      return emptyLike(spark, dir, m.entries, m.schemas, mergeSchema)
+    liveRead(spark, dir, m, kept, mergeSchema).filter(filter)
   }
 
   /** The kept-file count [[snapshotReadWhere]] would resolve — the
@@ -521,14 +504,8 @@ object Layout {
     */
   def snapshotFilesWhere(spark: org.apache.spark.sql.SparkSession,
                          dir: String, filter: Column,
-                         snapshotId: Long = -1L): Seq[FileEntry] = {
-    val pred = toStatPred(filter)
-    val (all, schemas) = snapshotState(spark, dir, snapshotId)
-    pred match {
-      case None => all
-      case Some(p) => all.filter(e => mayMatchEvolved(e, p, schemas))
-    }
-  }
+                         snapshotId: Long = -1L): Seq[FileEntry] =
+    snapshotFiles(spark, dir, snapshotId, toStatPred(filter))
 
   /** Morton z-value of the given (column, bits) dimensions as ONE
     * codegen-friendly Column: bit j of dimension i lands at the j-th
@@ -743,45 +720,21 @@ object Layout {
                     statsCols: Seq[String] = Nil,
                     bloomCols: Seq[String] = Nil): Long = {
     val spark = df.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = tableFs(spark, dir)
     // next id = max existing + 1 (single-writer assumption; a real
     // catalog arbitrates concurrent committers)
-    val ids = listSnapshotIds(fs, dir)
-    val snapId = if (ids.isEmpty) 1L else ids.max + 1L
+    val (cur, prev) = latestOrEmpty(fs, dir)
+    val snapId = cur + 1L
     // field-id continuity across overwrites: existing names keep their
     // permanent ids, so a later rename serves pre-overwrite snapshots too
-    val prevSchemas =
-      if (ids.isEmpty) Nil else readManifestFull(fs, dir, ids.max)._2
-    val (schemas, sid) = assignSchema(prevSchemas, df.schema)
+    val (schemas, sid) = assignSchema(prev.schemas, df.schema)
     val dataRel = attemptDir("data/snap", snapId)
-    val dataDir = s"$dir/$dataRel"
-    df.write.mode("overwrite").parquet(dataDir)
-    val (names, sizes) = listDataFiles(fs, dataDir)
+    df.write.mode("overwrite").parquet(s"$dir/$dataRel")
     // an overwrite keeps the table's stats contract unless told
-    // otherwise — same inheritance append uses (tracked columns
-    // translate by field id, so this survives renames too)
-    val prevEntries =
-      if (ids.isEmpty) Nil else readManifestFull(fs, dir, ids.max)._1
-    // explicit columns fail loudly on a typo; the INHERITED set is
-    // filtered because an overwrite may legitimately reshape the table
-    val cols =
-      if (statsCols.nonEmpty) statsCols
-      else statColsCurrent(prevEntries, schemas, _.stats.keys)
-        .filter(df.schema.fieldNames.contains)
-    val bCols =
-      if (bloomCols.nonEmpty) bloomCols
-      else statColsCurrent(prevEntries, schemas, _.blooms.keys)
-        .filter(df.schema.fieldNames.contains)
-    val stats =
-      if (cols.isEmpty) Map.empty[String, (Map[String, ColStat], Long)]
-      else collectFileStats(spark, dataDir, cols)
-    val blooms =
-      if (bCols.isEmpty) Map.empty[String, Map[String, BloomStat]]
-      else collectFileBlooms(spark, dataDir, bCols)
-    writeManifest(fs, dir, snapId, names.toIndexedSeq.map(n =>
-      entryFor(dataRel, n, stats, blooms, sizes)
-        .copy(schemaId = Some(sid))), schemas, op = "overwrite")
+    // otherwise — same inheritance append uses
+    writeManifest(fs, dir, snapId, writtenEntries(spark, fs, dir, dataRel,
+      prev.entries, schemas, Some(sid), statsCols, bloomCols), schemas,
+      op = "overwrite")
     snapId
   }
 
@@ -799,42 +752,18 @@ object Layout {
                      statsCols: Seq[String] = Nil,
                      bloomCols: Seq[String] = Nil): Long = {
     val spark = df.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = listSnapshotIds(fs, dir)
-    val (prev, prevSchemas) =
-      if (ids.isEmpty) (Nil, Nil) else readManifestFull(fs, dir, ids.max)
-    val (schemas, sid) = assignSchema(prevSchemas, df.schema, merge = true)
-    val snapId = (if (ids.isEmpty) 0L else ids.max) + 1L
+    val fs = tableFs(spark, dir)
+    val (cur, prev) = latestOrEmpty(fs, dir)
+    val (schemas, sid) = assignSchema(prev.schemas, df.schema, merge = true)
+    val snapId = cur + 1L
     val dataRel = attemptDir("data/snap", snapId)
-    val dataDir = s"$dir/$dataRel"
-    df.write.mode("overwrite").parquet(dataDir)
-    val (names, sizes) = listDataFiles(fs, dataDir)
-    // carried stat/bloom keys translate by field id to current names,
-    // so appends after a rename keep collecting the same columns
-    val cols =
-      if (statsCols.nonEmpty) statsCols
-      else statColsCurrent(prev, schemas, _.stats.keys)
-    val bCols =
-      if (bloomCols.nonEmpty) bloomCols
-      else statColsCurrent(prev, schemas, _.blooms.keys)
-    val stats =
-      if (cols.isEmpty) Map.empty[String, (Map[String, ColStat], Long)]
-      else collectFileStats(spark, dataDir, cols)
-    val blooms =
-      if (bCols.isEmpty) Map.empty[String, Map[String, BloomStat]]
-      else collectFileBlooms(spark, dataDir, bCols)
-    writeManifest(fs, dir, snapId,
-      prev ++ names.toIndexedSeq.map(n =>
-        entryFor(dataRel, n, stats, blooms, sizes)
-          .copy(schemaId = Some(sid))), schemas,
-      // outstanding deletes carry: appended files are new (no
-      // positions reference them; equality tombstones intentionally
-      // cover the new rows too), prior files are verbatim
-      deletes = if (ids.isEmpty) Nil
-        else readManifestDeletes(fs, dir, ids.max),
-      eqDeletes = if (ids.isEmpty) Nil
-        else readManifestEqDeletes(fs, dir, ids.max))
+    df.write.mode("overwrite").parquet(s"$dir/$dataRel")
+    // outstanding deletes carry: appended files are new (no positions
+    // reference them; equality tombstones intentionally cover the new
+    // rows too), prior files are verbatim
+    writeManifest(fs, dir, snapId, prev.entries ++ writtenEntries(spark, fs,
+      dir, dataRel, prev.entries, schemas, Some(sid), statsCols, bloomCols),
+      schemas, prev.deletes, prev.eqDeletes)
     snapId
   }
 
@@ -943,35 +872,16 @@ object Layout {
                            statsCols: Seq[String] = Nil,
                            bloomCols: Seq[String] = Nil): String = {
     val spark = df.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = listSnapshotIds(fs, dir)
-    val base = if (ids.isEmpty) 0L else ids.max
-    val (prev, prevSchemas) =
-      if (ids.isEmpty) (Nil, Nil) else readManifestFull(fs, dir, base)
-    val (schemas, sid) = assignSchema(prevSchemas, df.schema, merge = true)
+    val fs = tableFs(spark, dir)
+    val (base, prev) = latestOrEmpty(fs, dir)
+    val (schemas, sid) = assignSchema(prev.schemas, df.schema, merge = true)
     val token = s"$base-${java.util.UUID.randomUUID().toString.take(8)}"
-    val dataDir = s"$dir/data/staged-$token"
-    df.write.mode("overwrite").parquet(dataDir)
-    val (names, sizes) = listDataFiles(fs, dataDir)
-    val cols =
-      if (statsCols.nonEmpty) statsCols
-      else statColsCurrent(prev, schemas, _.stats.keys)
-    val bCols =
-      if (bloomCols.nonEmpty) bloomCols
-      else statColsCurrent(prev, schemas, _.blooms.keys)
-    val stats =
-      if (cols.isEmpty) Map.empty[String, (Map[String, ColStat], Long)]
-      else collectFileStats(spark, dataDir, cols)
-    val blooms =
-      if (bCols.isEmpty) Map.empty[String, Map[String, BloomStat]]
-      else collectFileBlooms(spark, dataDir, bCols)
-    val entries = names.toIndexedSeq.map(n =>
-      entryFor(s"data/staged-$token", n, stats, blooms, sizes)
-        .copy(schemaId = Some(sid)))
-    val body = manifestBody(entries, schemas, Nil)
-    val p = new org.apache.hadoop.fs.Path(dir, s"staged-$token.json")
-    val out = fs.create(p, false)
+    val dataRel = s"data/staged-$token"
+    df.write.mode("overwrite").parquet(s"$dir/$dataRel")
+    val body = manifestBody(writtenEntries(spark, fs, dir, dataRel,
+      prev.entries, schemas, Some(sid), statsCols, bloomCols), schemas, Nil)
+    val out = fs.create(
+      new org.apache.hadoop.fs.Path(dir, s"staged-$token.json"), false)
     try out.write(body.getBytes("UTF-8")) finally out.close()
     token
   }
@@ -999,48 +909,27 @@ object Layout {
                       statsCols: Seq[String] = Nil,
                       bloomCols: Seq[String] = Nil): Unit = {
     val spark = df.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(dir, s"staged-$token.json")
-    require(fs.exists(p), s"no staged batch $token under $dir")
-    val (oldEntries, oldSchemas) = readManifestPath(fs, p)
-    val (schemas, sid) = assignSchema(oldSchemas, df.schema, merge = true)
+    val fs = tableFs(spark, dir)
+    val p = stagedPath(fs, dir, token)
+    val staged = readManifest(fs, p)
+    val (schemas, sid) = assignSchema(staged.schemas, df.schema, merge = true)
     // one schema id across the chain: publish stamps the whole token
     // with one id, so a mid-chain widening would mislabel the earlier
     // batches' files — publish first, then stage the wider batch
-    oldEntries.flatMap(_.schemaId).headOption.foreach(old =>
+    staged.entries.flatMap(_.schemaId).headOption.foreach(old =>
       require(old == sid,
         s"staged chain $token has schema id $old but this batch forks " +
           "it — publish the chain first, then stage the wider batch"))
-    val dataDir = s"$dir/data/staged-$token"
-    df.write.mode("append").parquet(dataDir)
-    val (names, sizes) = listDataFiles(fs, dataDir)
-    val known = oldEntries
-      .map(e => e.path.substring(e.path.lastIndexOf('/') + 1)).toSet
-    val fresh = names.filterNot(known)
-    val cols =
-      if (statsCols.nonEmpty) statsCols
-      else statColsCurrent(oldEntries, schemas, _.stats.keys)
-    val bCols =
-      if (bloomCols.nonEmpty) bloomCols
-      else statColsCurrent(oldEntries, schemas, _.blooms.keys)
+    val dataRel = s"data/staged-$token"
+    df.write.mode("append").parquet(s"$dir/$dataRel")
     // stats collect over the FRESH files only — prior entries keep
     // their recorded stats, so an N-batch WAP chain pays O(batch)
-    // per stage, not O(chain) (the r11 version scanned the whole
-    // staged dir every batch: O(N^2) over already-staged data)
-    val freshPaths = fresh.map(n => s"$dataDir/$n")
-    val stats =
-      if (cols.isEmpty || freshPaths.isEmpty)
-        Map.empty[String, (Map[String, ColStat], Long)]
-      else collectFileStats(spark, freshPaths, cols)
-    val blooms =
-      if (bCols.isEmpty || freshPaths.isEmpty)
-        Map.empty[String, Map[String, BloomStat]]
-      else collectFileBlooms(spark, freshPaths, bCols)
-    val entries = oldEntries ++ fresh.map(n =>
-      entryFor(s"data/staged-$token", n, stats, blooms, sizes)
-        .copy(schemaId = Some(sid)))
-    val body = manifestBody(entries, schemas, Nil)
+    // per stage, not O(chain)
+    val known = staged.entries
+      .map(e => e.path.substring(e.path.lastIndexOf('/') + 1)).toSet
+    val body = manifestBody(staged.entries ++ writtenEntries(spark, fs, dir,
+      dataRel, staged.entries, schemas, Some(sid), statsCols, bloomCols,
+      skip = known), schemas, Nil)
     val out = fs.create(p, true)
     try out.write(body.getBytes("UTF-8")) finally out.close()
   }
@@ -1051,11 +940,8 @@ object Layout {
     */
   def stagedRead(spark: org.apache.spark.sql.SparkSession, dir: String,
                  token: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(dir, s"staged-$token.json")
-    require(fs.exists(p), s"no staged batch $token under $dir")
-    val (entries, _) = readManifestPath(fs, p)
+    val fs = tableFs(spark, dir)
+    val entries = readManifest(fs, stagedPath(fs, dir, token)).entries
     spark.read.parquet(entries.map(e => s"$dir/${e.path}"): _*)
   }
 
@@ -1069,35 +955,24 @@ object Layout {
     */
   def publishStaged(spark: org.apache.spark.sql.SparkSession,
                     dir: String, token: String): Long = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(dir, s"staged-$token.json")
-    require(fs.exists(p), s"no staged batch $token under $dir")
+    val fs = tableFs(spark, dir)
+    val p = stagedPath(fs, dir, token)
     require(createExclusive(fs,
       new org.apache.hadoop.fs.Path(dir, s".publish-$token.lock")),
       s"staged batch $token is being published by another writer")
-    val (stagedEntries, stagedSchemas) = readManifestPath(fs, p)
+    val staged = readManifest(fs, p)
     val base = token.takeWhile(_ != '-').toLong
-    val ids = listSnapshotIds(fs, dir)
-    val (curEntries, curSchemas) =
-      if (ids.isEmpty) (Nil, Nil) else readManifestFull(fs, dir, ids.max)
-    val curDeletes =
-      if (ids.isEmpty) Nil else readManifestDeletes(fs, dir, ids.max)
-    // Equality tombstones carry exactly like position deletes
-    // (mirrors snapshotAppend): dropping them here would resurrect
-    // every key-deleted row the moment a staged batch publishes.
-    val curEqDeletes =
-      if (ids.isEmpty) Nil else readManifestEqDeletes(fs, dir, ids.max)
-    val stagedSid = stagedEntries.flatMap(_.schemaId).headOption.getOrElse(0)
+    val (cur, m) = latestOrEmpty(fs, dir)
+    val stagedSid = staged.entries.flatMap(_.schemaId).headOption.getOrElse(0)
     val (schemas, sid) =
-      if (ids.isEmpty || ids.max == base) (stagedSchemas, stagedSid)
+      if (cur == 0L || cur == base) (staged.schemas, stagedSid)
       else {
         // REBASE onto commits that landed since staging. A rename in
         // between would fork the staged parquet's old column names —
         // detect via field ids and refuse.
-        val stagedFields = stagedSchemas.find(_.id == stagedSid)
+        val stagedFields = staged.schemas.find(_.id == stagedSid)
           .map(_.fields).getOrElse(Nil)
-        val curById = currentSchemaOf(curSchemas)
+        val curById = currentSchemaOf(m.schemas)
           .map(_.fields.map(f => f.id -> f.name).toMap)
           .getOrElse(Map.empty[Int, String])
         stagedFields.foreach(f => curById.get(f.id).foreach(cn =>
@@ -1107,12 +982,14 @@ object Layout {
         val struct = org.apache.spark.sql.types.StructType(
           stagedFields.map(f => org.apache.spark.sql.types.StructField(
             f.name, org.apache.spark.sql.types.DataType.fromDDL(f.tpe))))
-        assignSchema(curSchemas, struct, merge = true)
+        assignSchema(m.schemas, struct, merge = true)
       }
-    val snapId = (if (ids.isEmpty) 0L else ids.max) + 1L
+    val snapId = cur + 1L
+    // both delete lists carry, as in snapshotAppend: dropping the
+    // equality tombstones would resurrect every key-deleted row
     writeManifest(fs, dir, snapId,
-      curEntries ++ stagedEntries.map(_.copy(schemaId = Some(sid))),
-      schemas, curDeletes, curEqDeletes)
+      m.entries ++ staged.entries.map(_.copy(schemaId = Some(sid))),
+      schemas, m.deletes, m.eqDeletes)
     fs.delete(p, false)
     fs.delete(new org.apache.hadoop.fs.Path(dir, s".publish-$token.lock"),
       false)
@@ -1125,11 +1002,8 @@ object Layout {
     */
   def abandonStaged(spark: org.apache.spark.sql.SparkSession,
                     dir: String, token: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(dir, s"staged-$token.json")
-    require(fs.exists(p), s"no staged batch $token under $dir")
-    fs.delete(p, false)
+    val fs = tableFs(spark, dir)
+    fs.delete(stagedPath(fs, dir, token), false)
     fs.delete(new org.apache.hadoop.fs.Path(s"$dir/data/staged-$token"),
       true)
   }
@@ -1174,25 +1048,21 @@ object Layout {
   private def evolveSchema(spark: org.apache.spark.sql.SparkSession,
                            dir: String, what: String)
                           (change: SchemaInfo => Seq[FieldInfo]): Long = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = listSnapshotIds(fs, dir)
-    require(ids.nonEmpty, s"no snapshot manifest under $dir")
-    val (entries, schemas) = readManifestFull(fs, dir, ids.max)
-    require(schemas.nonEmpty,
+    val fs = tableFs(spark, dir)
+    val (cur, m) = snapshotAt(fs, dir)
+    require(m.schemas.nonEmpty,
       s"cannot $what: table has no recorded schema history " +
         "(written before field-id tracking) — rewrite it once via " +
         "compactSnapshot/snapshotWrite first")
-    require(entries.forall(_.schemaId.isDefined),
+    require(m.entries.forall(_.schemaId.isDefined),
       s"cannot $what: some files predate schema recording — " +
         "compactSnapshot first so every file carries its schema id")
-    requireNoDeletes(spark, dir, s"schema evolution ($what)")
-    val cur = schemas.maxBy(_.id)
-    val next = SchemaInfo(schemas.map(_.id).max + 1, change(cur))
-    val snapId = ids.max + 1L
-    writeManifest(fs, dir, snapId, entries, schemas :+ next,
+    requireNoDeletes(dir, m, s"schema evolution ($what)")
+    val next = SchemaInfo(m.schemas.map(_.id).max + 1,
+      change(m.schemas.maxBy(_.id)))
+    writeManifest(fs, dir, cur + 1L, m.entries, m.schemas :+ next,
       op = "evolve")
-    snapId
+    cur + 1L
   }
 
   /** Compact a manifest-committed table's small files — [[compact]]'s
@@ -1214,54 +1084,24 @@ object Layout {
   def compactSnapshot(spark: org.apache.spark.sql.SparkSession, dir: String,
                       targetBytes: Long): (Long, Int, Int) = {
     require(targetBytes > 0, s"bad target size $targetBytes")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = listSnapshotIds(fs, dir)
-    require(ids.nonEmpty, s"no snapshot manifest under $dir")
-    val (entries, schemas) = readManifestFull(fs, dir, ids.max)
-    val totalBytes = entries.map(e => e.bytes.getOrElse(
-      fs.getFileStatus(new org.apache.hadoop.fs.Path(s"$dir/${e.path}")).getLen)).sum
+    val fs = tableFs(spark, dir)
+    val (cur, m) = snapshotAt(fs, dir)
+    val totalBytes = m.entries.map(bytesOf(fs, dir, _)).sum
     val n = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    val snapId = ids.max + 1L
+    val snapId = cur + 1L
     val dataRel = attemptDir("data/snap", snapId)
-    val dataDir = s"$dir/$dataRel"
-    // mergeSchema: the table supports schema-widening appends; a
-    // single-file inferred schema here would silently DROP the widened
-    // columns from every rewritten file — permanent loss from an
-    // operation documented as content-neutral. On an evolved table the
-    // rewrite goes through the id-resolving read, which also HEALS the
-    // table: rewritten files carry the current names, so SQL access and
-    // the single-scan fast path come back.
-    // a rewrite SETTLES outstanding deletes (the Iceberg rewrite
-    // contract): position- and equality-deleted rows are dropped here
-    // and the new manifest carries empty delete lists
-    val base =
-      if (uniformSchema(entries, schemas))
-        eqFilter(spark, dir,
-          dvFilter(spark, dir, spark.read.option("mergeSchema", "true")
-            .parquet(entries.map(e => s"$dir/${e.path}"): _*),
-            entries, readManifestDeletes(fs, dir, ids.max)),
-          readManifestEqDeletes(fs, dir, ids.max))
-      else evolvedRead(spark, dir, entries, schemas, mergeSchema = true,
-        deletes = readManifestDeletes(fs, dir, ids.max),
-        eqDeletes = readManifestEqDeletes(fs, dir, ids.max))
+    // the live read settles outstanding deletes (the Iceberg rewrite
+    // contract) and, on an evolved table, HEALS it: rewritten files
+    // carry the current names, so SQL access and the single-scan fast
+    // path come back
+    val base = liveRead(spark, dir, m, m.entries)
     base.coalesce(n)
-      .write.mode("overwrite").parquet(dataDir)
-    val (names, sizes) = listDataFiles(fs, dataDir)
-    val (outSchemas, sid) = assignSchema(schemas, base.schema)
-    val cols = statColsCurrent(entries, schemas, _.stats.keys)
-    val bCols = statColsCurrent(entries, schemas, _.blooms.keys)
-    val stats =
-      if (cols.isEmpty) Map.empty[String, (Map[String, ColStat], Long)]
-      else collectFileStats(spark, dataDir, cols)
-    val blooms =
-      if (bCols.isEmpty) Map.empty[String, Map[String, BloomStat]]
-      else collectFileBlooms(spark, dataDir, bCols)
-    writeManifest(fs, dir, snapId, names.toIndexedSeq.map(nm =>
-      entryFor(dataRel, nm, stats, blooms, sizes)
-        .copy(schemaId = if (outSchemas.isEmpty) None else Some(sid))),
-      outSchemas, op = "replace")
-    (snapId, entries.size, names.length)
+      .write.mode("overwrite").parquet(s"$dir/$dataRel")
+    val (outSchemas, sid) = assignSchema(m.schemas, base.schema)
+    val written = writtenEntries(spark, fs, dir, dataRel, m.entries,
+      m.schemas, Some(sid))
+    writeManifest(fs, dir, snapId, written, outSchemas, op = "replace")
+    (snapId, m.entries.size, written.size)
   }
 
   /** INCREMENTAL bin-packing compaction — the form that scales:
@@ -1289,70 +1129,28 @@ object Layout {
                         smallBytes: Long = -1L): (Long, Int, Int) = {
     require(targetBytes > 0, s"bad target size $targetBytes")
     val small = if (smallBytes > 0) smallBytes else targetBytes / 2
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = listSnapshotIds(fs, dir)
-    require(ids.nonEmpty, s"no snapshot manifest under $dir")
-    val (entries, schemas) = readManifestFull(fs, dir, ids.max)
-    require(uniformSchema(entries, schemas),
+    val fs = tableFs(spark, dir)
+    val (cur, m) = snapshotAt(fs, dir)
+    require(uniformSchema(m.entries, m.schemas),
       "incremental compaction needs a uniform-schema table — run the " +
         "full compactSnapshot to heal evolution first")
-    def sizeOf(e: FileEntry): Long = e.bytes.getOrElse(
-      fs.getFileStatus(new org.apache.hadoop.fs.Path(s"$dir/${e.path}"))
-        .getLen)
-    val (cand, carried) = entries.partition(e => sizeOf(e) < small)
-    if (cand.size < 2) return (ids.max, 0, 0)
-    val oldDeletes = readManifestDeletes(fs, dir, ids.max)
-    val eqDeletes = readManifestEqDeletes(fs, dir, ids.max)
-    val snapId = ids.max + 1L
+    val (cand, carried) = m.entries.partition(bytesOf(fs, dir, _) < small)
+    if (cand.size < 2) return (cur, 0, 0)
+    val snapId = cur + 1L
     val dataRel = attemptDir("data/snap", snapId)
-    val dataDir = s"$dir/$dataRel"
+    val n = math.max(1L, (cand.map(bytesOf(fs, dir, _)).sum +
+      targetBytes - 1) / targetBytes).toInt
     // live view of ONLY the candidates: their position deletes apply
     // here and settle; equality masking applies too (tombstones still
     // carry for the untouched files)
-    val base = eqFilter(spark, dir,
-      dvFilter(spark, dir, spark.read.option("mergeSchema", "true")
-        .parquet(cand.map(e => s"$dir/${e.path}"): _*),
-        cand, oldDeletes),
-      eqDeletes)
-    val candBytes = cand.map(sizeOf).sum
-    val n = math.max(1L, (candBytes + targetBytes - 1) / targetBytes).toInt
-    base.coalesce(n).write.mode("overwrite").parquet(dataDir)
-    val (names, sizes) = listDataFiles(fs, dataDir)
-    val cols = statColsCurrent(entries, schemas, _.stats.keys)
-    val bCols = statColsCurrent(entries, schemas, _.blooms.keys)
-    val stats =
-      if (cols.isEmpty) Map.empty[String, (Map[String, ColStat], Long)]
-      else collectFileStats(spark, dataDir, cols)
-    val blooms =
-      if (bCols.isEmpty) Map.empty[String, Map[String, BloomStat]]
-      else collectFileBlooms(spark, dataDir, bCols)
-    // re-filter the DV index to the carried files: positions on
-    // rewritten files are settled, positions on carried files stay
-    val newDeletes =
-      if (oldDeletes.isEmpty) Nil
-      else {
-        import spark.implicits._
-        val carriedPaths = carried.map(_.path).toDF("path")
-        val dvRel = attemptDir("deletes/snap", snapId)
-        val kept = spark.read
-          .parquet(oldDeletes.map(d => s"$dir/${d.path}"): _*)
-          .join(broadcast(carriedPaths), Seq("path"), "left_semi")
-        kept.write.mode("overwrite").parquet(s"$dir/$dvRel")
-        val nKept = spark.read.parquet(s"$dir/$dvRel").count()
-        if (nKept == 0L) {
-          fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$dvRel"), true)
-          Nil
-        } else Seq(DeleteFile(dvRel, nKept))
-      }
-    val sid = entries.flatMap(_.schemaId).headOption
-    writeManifest(fs, dir, snapId,
-      carried ++ names.toIndexedSeq.map(nm =>
-        entryFor(dataRel, nm, stats, blooms, sizes)
-          .copy(schemaId = sid)),
-      schemas, deletes = newDeletes, eqDeletes = eqDeletes,
-      op = "replace")
-    (snapId, cand.size, names.length)
+    liveRead(spark, dir, m, cand).coalesce(n)
+      .write.mode("overwrite").parquet(s"$dir/$dataRel")
+    val written = writtenEntries(spark, fs, dir, dataRel, m.entries,
+      m.schemas, m.entries.flatMap(_.schemaId).headOption)
+    writeManifest(fs, dir, snapId, carried ++ written, m.schemas,
+      deletes = carriedDeletes(spark, fs, dir, snapId, m.deletes, carried),
+      eqDeletes = m.eqDeletes, op = "replace")
+    (snapId, cand.size, written.size)
   }
 
   /** INCREMENTAL clustering maintenance — [[optimizeClustered]]'s
@@ -1377,15 +1175,12 @@ object Layout {
                                    dir: String, dim: String,
                                    targetBytes: Long): (Long, Int, Int) = {
     require(targetBytes > 0, s"bad target size $targetBytes")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = listSnapshotIds(fs, dir)
-    require(ids.nonEmpty, s"no snapshot manifest under $dir")
-    val (entries, schemas) = readManifestFull(fs, dir, ids.max)
-    require(uniformSchema(entries, schemas),
+    val fs = tableFs(spark, dir)
+    val (cur, m) = snapshotAt(fs, dir)
+    require(uniformSchema(m.entries, m.schemas),
       "incremental clustering needs a uniform-schema table — run the " +
         "full optimizeClustered to heal evolution first")
-    val bounds = entries.map { e =>
+    val bounds = m.entries.map { e =>
       val st = e.stats.get(dim)
       require(st.exists(s => s.min.isDefined && s.max.isDefined &&
         metadataExactType(s.tpe)),
@@ -1404,64 +1199,28 @@ object Layout {
       } else { comps.last += e; hi = hi.max(h) }
     }
     val rewriteComps = comps.filter(_.size >= 2).map(_.toSeq).toSeq
-    if (rewriteComps.isEmpty) return (ids.max, 0, 0)
+    if (rewriteComps.isEmpty) return (cur, 0, 0)
     val rewritten = rewriteComps.flatten
-    val carried = entries.filterNot(rewritten.contains)
-    val oldDeletes = readManifestDeletes(fs, dir, ids.max)
-    val eqDeletes = readManifestEqDeletes(fs, dir, ids.max)
-    val snapId = ids.max + 1L
+    val carried = m.entries.filterNot(rewritten.contains)
+    val snapId = cur + 1L
     val dataRel = attemptDir("data/snap", snapId)
-    val dataDir = s"$dir/$dataRel"
-    def sizeOf(e: FileEntry): Long = e.bytes.getOrElse(
-      fs.getFileStatus(new org.apache.hadoop.fs.Path(s"$dir/${e.path}"))
-        .getLen)
     // one range-sorted rewrite PER COMPONENT: components are disjoint
     // from every carried file by construction, and per-component
     // output keeps it that way (one global exchange could emit a file
     // spanning the gap a carried file occupies)
     rewriteComps.foreach { comp =>
-      val live = eqFilter(spark, dir,
-        dvFilter(spark, dir, spark.read.option("mergeSchema", "true")
-          .parquet(comp.map(e => s"$dir/${e.path}"): _*),
-          comp, oldDeletes),
-        eqDeletes)
-      val n = math.max(1L,
-        (comp.map(sizeOf).sum + targetBytes - 1) / targetBytes).toInt
-      live.repartitionByRange(n, col(dim)).sortWithinPartitions(dim)
-        .write.mode("append").parquet(dataDir)
+      val n = math.max(1L, (comp.map(bytesOf(fs, dir, _)).sum +
+        targetBytes - 1) / targetBytes).toInt
+      liveRead(spark, dir, m, comp)
+        .repartitionByRange(n, col(dim)).sortWithinPartitions(dim)
+        .write.mode("append").parquet(s"$dir/$dataRel")
     }
-    val (names, sizes) = listDataFiles(fs, dataDir)
-    val cols = statColsCurrent(entries, schemas, _.stats.keys)
-    val bCols = statColsCurrent(entries, schemas, _.blooms.keys)
-    val stats =
-      if (cols.isEmpty) Map.empty[String, (Map[String, ColStat], Long)]
-      else collectFileStats(spark, dataDir, cols)
-    val blooms =
-      if (bCols.isEmpty) Map.empty[String, Map[String, BloomStat]]
-      else collectFileBlooms(spark, dataDir, bCols)
-    val newDeletes =
-      if (oldDeletes.isEmpty) Nil
-      else {
-        import spark.implicits._
-        val carriedPaths = carried.map(_.path).toDF("path")
-        val dvRel = attemptDir("deletes/snap", snapId)
-        val kept = spark.read
-          .parquet(oldDeletes.map(d => s"$dir/${d.path}"): _*)
-          .join(broadcast(carriedPaths), Seq("path"), "left_semi")
-        kept.write.mode("overwrite").parquet(s"$dir/$dvRel")
-        val nKept = spark.read.parquet(s"$dir/$dvRel").count()
-        if (nKept == 0L) {
-          fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$dvRel"), true)
-          Nil
-        } else Seq(DeleteFile(dvRel, nKept))
-      }
-    val sid = entries.flatMap(_.schemaId).headOption
-    writeManifest(fs, dir, snapId,
-      carried ++ names.toIndexedSeq.map(nm =>
-        entryFor(dataRel, nm, stats, blooms, sizes).copy(schemaId = sid)),
-      schemas, deletes = newDeletes, eqDeletes = eqDeletes,
-      op = "replace")
-    (snapId, rewritten.size, names.length)
+    val written = writtenEntries(spark, fs, dir, dataRel, m.entries,
+      m.schemas, m.entries.flatMap(_.schemaId).headOption)
+    writeManifest(fs, dir, snapId, carried ++ written, m.schemas,
+      deletes = carriedDeletes(spark, fs, dir, snapId, m.deletes, carried),
+      eqDeletes = m.eqDeletes, op = "replace")
+    (snapId, rewritten.size, written.size)
   }
 
   /** OPTIMIZE-style clustering rewrite of a manifest-committed table —
@@ -1484,24 +1243,12 @@ object Layout {
                         dir: String, dims: Seq[String],
                         numFiles: Int = 0, zBits: Int = 16): Long = {
     require(dims.nonEmpty, "optimizeClustered needs at least one dimension")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = listSnapshotIds(fs, dir)
-    require(ids.nonEmpty, s"no snapshot manifest under $dir")
-    val (entries, schemas) = readManifestFull(fs, dir, ids.max)
-    val snapId = ids.max + 1L
-    val n = if (numFiles > 0) numFiles else math.max(1, entries.size)
+    val fs = tableFs(spark, dir)
+    val (cur, m) = snapshotAt(fs, dir)
+    val snapId = cur + 1L
+    val n = if (numFiles > 0) numFiles else math.max(1, m.entries.size)
     // like compactSnapshot, a clustering rewrite settles MoR deletes
-    val base =
-      if (uniformSchema(entries, schemas))
-        eqFilter(spark, dir,
-          dvFilter(spark, dir, spark.read.option("mergeSchema", "true")
-            .parquet(entries.map(e => s"$dir/${e.path}"): _*),
-            entries, readManifestDeletes(fs, dir, ids.max)),
-          readManifestEqDeletes(fs, dir, ids.max))
-      else evolvedRead(spark, dir, entries, schemas, mergeSchema = true,
-        deletes = readManifestDeletes(fs, dir, ids.max),
-        eqDeletes = readManifestEqDeletes(fs, dir, ids.max))
+    val base = liveRead(spark, dir, m, m.entries)
     val clustered =
       if (dims.size == 1)
         base.repartitionByRange(n, col(dims.head))
@@ -1514,21 +1261,10 @@ object Layout {
           .drop("_graft_z")
       }
     val dataRel = attemptDir("data/snap", snapId)
-    val dataDir = s"$dir/$dataRel"
-    clustered.write.mode("overwrite").parquet(dataDir)
-    val (names, sizes) = listDataFiles(fs, dataDir)
-    val (outSchemas, sid) = assignSchema(schemas, base.schema)
-    val statsCols = statColsCurrent(entries, schemas, _.stats.keys)
-    val bCols = statColsCurrent(entries, schemas, _.blooms.keys)
-    val stats =
-      if (statsCols.isEmpty) Map.empty[String, (Map[String, ColStat], Long)]
-      else collectFileStats(spark, dataDir, statsCols)
-    val blooms =
-      if (bCols.isEmpty) Map.empty[String, Map[String, BloomStat]]
-      else collectFileBlooms(spark, dataDir, bCols)
-    writeManifest(fs, dir, snapId, names.toIndexedSeq.map(nm =>
-      entryFor(dataRel, nm, stats, blooms, sizes)
-        .copy(schemaId = Some(sid))), outSchemas, op = "replace")
+    clustered.write.mode("overwrite").parquet(s"$dir/$dataRel")
+    val (outSchemas, sid) = assignSchema(m.schemas, base.schema)
+    writeManifest(fs, dir, snapId, writtenEntries(spark, fs, dir, dataRel,
+      m.entries, m.schemas, Some(sid)), outSchemas, op = "replace")
     snapId
   }
 
@@ -1572,34 +1308,25 @@ object Layout {
   private def deleteWhereImpl(spark: org.apache.spark.sql.SparkSession,
                               dir: String, pred: Option[StatPred],
                               cond: Column): (Long, Int) = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = listSnapshotIds(fs, dir)
-    require(ids.nonEmpty, s"no snapshot manifest under $dir")
+    val fs = tableFs(spark, dir)
+    val (cur, m) = snapshotAt(fs, dir)
     // a CoW rewrite of touched files would resurrect MoR-deleted rows
     // and strand delete counts — settle the debt first
-    requireNoDeletes(spark, dir, "copy-on-write deleteWhere")
-    val (entries, schemas) = readManifestFull(fs, dir, ids.max)
+    requireNoDeletes(dir, m, "copy-on-write deleteWhere")
     val (touched, untouched) = pred match {
       case Some(p) =>
-        entries.partition(e => mayMatchEvolved(e, p, schemas))
-      case None => (entries, Nil) // non-compilable: every file may match
+        m.entries.partition(e => mayMatchEvolved(e, p, m.schemas))
+      case None => (m.entries, Nil) // non-compilable: every file may match
     }
-    val snapId = ids.max + 1L
+    val snapId = cur + 1L
     if (touched.isEmpty) {
       // nothing can match: the new snapshot is the old file set
-      writeManifest(fs, dir, snapId, entries, schemas, op = "delete")
+      writeManifest(fs, dir, snapId, m.entries, m.schemas, op = "delete")
       return (snapId, 0)
     }
-    // mergeSchema for the same reason as compactSnapshot: rewritten
-    // files must keep columns a schema-widening append introduced; on
-    // an evolved table the id-resolving read yields CURRENT names, so
-    // the predicate (written in current names) applies directly
-    val touchedDf =
-      if (uniformSchema(touched, schemas))
-        spark.read.option("mergeSchema", "true")
-          .parquet(touched.map(e => s"$dir/${e.path}"): _*)
-      else evolvedRead(spark, dir, touched, schemas, mergeSchema = true)
+    // on an evolved table the id-resolving read yields CURRENT names,
+    // so the predicate (written in current names) applies directly
+    val touchedDf = rewriteRead(spark, dir, touched, m.schemas)
     val survivors = touchedDf
       .filter(!coalesce(cond, lit(false)))
     // the emptiness probe is a limit-1 job (first surviving row short-
@@ -1610,34 +1337,14 @@ object Layout {
       // manifest (and a table fully emptied this way must leave a
       // clean zero-file manifest, which downstream writers such as
       // upsertKeysMoR treat as a bootstrap)
-      writeManifest(fs, dir, snapId, untouched, schemas, op = "delete")
+      writeManifest(fs, dir, snapId, untouched, m.schemas, op = "delete")
       return (snapId, touched.size)
     }
     val dataRel = attemptDir("data/snap", snapId)
-    val dataDir = s"$dir/$dataRel"
-    survivors.write.mode("overwrite").parquet(dataDir)
-    val (names, sizes) = listDataFiles(fs, dataDir)
-    // partial rewrite: only a table ALREADY recording schemas evolves
-    // here (a fresh schema inferred from the touched subset alone could
-    // miss widened columns that live only in untouched legacy files —
-    // compact/OPTIMIZE, which rewrite everything, are the upgrade path)
-    val (outSchemas, sid) =
-      if (schemas.isEmpty) (Nil, 0)
-      else assignSchema(schemas, touchedDf.schema, merge = true)
-    val statsCols = statColsCurrent(entries, schemas, _.stats.keys)
-    val bCols = statColsCurrent(entries, schemas, _.blooms.keys)
-    val stats =
-      if (statsCols.isEmpty) Map.empty[String, (Map[String, ColStat], Long)]
-      else collectFileStats(spark, dataDir, statsCols)
-    val blooms =
-      if (bCols.isEmpty) Map.empty[String, Map[String, BloomStat]]
-      else collectFileBlooms(spark, dataDir, bCols)
-    writeManifest(fs, dir, snapId,
-      untouched ++ names.toIndexedSeq.map(n =>
-        entryFor(dataRel, n, stats, blooms, sizes)
-          .copy(schemaId =
-            if (outSchemas.isEmpty) None else Some(sid))),
-      outSchemas, op = "delete")
+    survivors.write.mode("overwrite").parquet(s"$dir/$dataRel")
+    val (outSchemas, sid) = partialSchema(m.schemas, touchedDf.schema)
+    writeManifest(fs, dir, snapId, untouched ++ writtenEntries(spark, fs, dir,
+      dataRel, m.entries, m.schemas, sid), outSchemas, op = "delete")
     (snapId, touched.size)
   }
 
@@ -1668,26 +1375,20 @@ object Layout {
     require(assignments.nonEmpty, "UPDATE needs at least one assignment")
     require(assignments.map(_._1).distinct.size == assignments.size,
       "duplicate assignment targets")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = listSnapshotIds(fs, dir)
-    require(ids.nonEmpty, s"no snapshot manifest under $dir")
-    requireNoDeletes(spark, dir, "copy-on-write updateWhere")
-    val (entries, schemas) = readManifestFull(fs, dir, ids.max)
+    val fs = tableFs(spark, dir)
+    val (cur, m) = snapshotAt(fs, dir)
+    requireNoDeletes(dir, m, "copy-on-write updateWhere")
     val (touched, untouched) = pred match {
-      case Some(p) => entries.partition(e => mayMatchEvolved(e, p, schemas))
-      case None => (entries, Nil)
+      case Some(p) =>
+        m.entries.partition(e => mayMatchEvolved(e, p, m.schemas))
+      case None => (m.entries, Nil)
     }
-    val snapId = ids.max + 1L
+    val snapId = cur + 1L
     if (touched.isEmpty) {
-      writeManifest(fs, dir, snapId, entries, schemas, op = "update")
+      writeManifest(fs, dir, snapId, m.entries, m.schemas, op = "update")
       return (snapId, 0)
     }
-    val touchedDf =
-      if (uniformSchema(touched, schemas))
-        spark.read.option("mergeSchema", "true")
-          .parquet(touched.map(e => s"$dir/${e.path}"): _*)
-      else evolvedRead(spark, dir, touched, schemas, mergeSchema = true)
+    val touchedDf = rewriteRead(spark, dir, touched, m.schemas)
     val byName = touchedDf.schema.fields.map(f => f.name -> f).toMap
     assignments.foreach { case (n, _) =>
       require(byName.contains(n), s"UPDATE target column $n not in table") }
@@ -1701,26 +1402,10 @@ object Layout {
       }
     }: _*)
     val dataRel = attemptDir("data/snap", snapId)
-    val dataDir = s"$dir/$dataRel"
-    updated.write.mode("overwrite").parquet(dataDir)
-    val (names, sizes) = listDataFiles(fs, dataDir)
-    val (outSchemas, sid) =
-      if (schemas.isEmpty) (Nil, 0)
-      else assignSchema(schemas, updated.schema, merge = true)
-    val statsCols = statColsCurrent(entries, schemas, _.stats.keys)
-    val bCols = statColsCurrent(entries, schemas, _.blooms.keys)
-    val stats =
-      if (statsCols.isEmpty) Map.empty[String, (Map[String, ColStat], Long)]
-      else collectFileStats(spark, dataDir, statsCols)
-    val blooms =
-      if (bCols.isEmpty) Map.empty[String, Map[String, BloomStat]]
-      else collectFileBlooms(spark, dataDir, bCols)
-    writeManifest(fs, dir, snapId,
-      untouched ++ names.toIndexedSeq.map(n =>
-        entryFor(dataRel, n, stats, blooms, sizes)
-          .copy(schemaId =
-            if (outSchemas.isEmpty) None else Some(sid))),
-      outSchemas, op = "update")
+    updated.write.mode("overwrite").parquet(s"$dir/$dataRel")
+    val (outSchemas, sid) = partialSchema(m.schemas, updated.schema)
+    writeManifest(fs, dir, snapId, untouched ++ writtenEntries(spark, fs, dir,
+      dataRel, m.entries, m.schemas, sid), outSchemas, op = "update")
     (snapId, touched.size)
   }
 
@@ -1763,26 +1448,121 @@ object Layout {
       .select(out.map(col): _*)
   }
 
-  /** The outstanding delete files of the resolved (latest or pinned)
-    * snapshot — Nil when the table has none or does not exist yet.
-    */
-  private def resolvedDeletes(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, snapshotId: Long)
-      : Seq[DeleteFile] = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = listSnapshotIds(fs, dir)
-    if (ids.isEmpty) Nil
-    else readManifestDeletes(fs, dir,
-      if (snapshotId > 0) snapshotId else ids.max)
-  }
-
-  private def requireNoDeletes(spark: org.apache.spark.sql.SparkSession,
-                               dir: String, op: String): Unit =
-    require(resolvedDeletes(spark, dir, -1L).isEmpty &&
-      resolvedEqDeletes(spark, dir, -1L).isEmpty,
+  private def requireNoDeletes(dir: String, m: Manifest, op: String): Unit =
+    require(m.deletes.isEmpty && m.eqDeletes.isEmpty,
       s"$op is not defined over outstanding position/equality deletes " +
         s"— run Layout.materializeDeletes($dir) first")
+
+  /** The delete directories (position and equality) a manifest keeps
+    * alive — live as units, their part files key by the dir prefix.
+    */
+  private def deleteDirs(m: Manifest): Seq[String] =
+    m.deletes.map(_.path) ++ m.eqDeletes.map(_.path)
+
+  /** `scan` — keyed by its manifest-relative `relCol` path and
+    * `_gdv_pos` row index — without the rows `deletes` already list:
+    * a new position index computed over this LIVE view stays disjoint
+    * from the ones before it, keeping Σrows arithmetic exact.
+    */
+  private def liveRows(spark: org.apache.spark.sql.SparkSession,
+                       dir: String, scan: DataFrame, relCol: String,
+                       deletes: Seq[DeleteFile]): DataFrame =
+    if (deletes.isEmpty) scan
+    else scan.join(
+      spark.read.parquet(deletes.map(d => s"$dir/${d.path}"): _*)
+        .select(col("path").as(relCol), col("pos").as("_gdv_pos")),
+      Seq(relCol, "_gdv_pos"), "left_anti")
+
+  /** Write one delete index — `(path, pos)` rows or equality keys —
+    * under a fresh `<prefix>-<snapId>-…` attempt directory; returns its
+    * relative path and row count, or None (directory removed) when it
+    * holds no rows.
+    */
+  private def writeDeleteIndex(fs: org.apache.hadoop.fs.FileSystem,
+                               dir: String, prefix: String, snapId: Long,
+                               rows: DataFrame): Option[(String, Long)] = {
+    val rel = attemptDir(prefix, snapId)
+    rows.write.mode("overwrite").parquet(s"$dir/$rel")
+    val n = rows.sparkSession.read.parquet(s"$dir/$rel").count()
+    if (n > 0L) Some((rel, n))
+    else { fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$rel"), true); None }
+  }
+
+  /** The position index of a PARTIAL rewrite: re-filtered to the
+    * carried files — positions on rewritten files are settled,
+    * positions on carried files stay.
+    */
+  private def carriedDeletes(spark: org.apache.spark.sql.SparkSession,
+                             fs: org.apache.hadoop.fs.FileSystem,
+                             dir: String, snapId: Long,
+                             deletes: Seq[DeleteFile],
+                             carried: Seq[FileEntry]): Seq[DeleteFile] =
+    if (deletes.isEmpty) Nil
+    else {
+      import spark.implicits._
+      val kept = spark.read
+        .parquet(deletes.map(d => s"$dir/${d.path}"): _*)
+        .join(broadcast(carried.map(_.path).toDF("path")), Seq("path"),
+          "left_semi")
+      writeDeleteIndex(fs, dir, "deletes/snap", snapId, kept).toSeq
+        .map { case (rel, n) => DeleteFile(rel, n) }
+    }
+
+  /** `es` read for a rewrite: by name when they share the current
+    * schema (mergeSchema keeps columns a widening append introduced),
+    * by field id otherwise ([[evolvedRead]]) — current names either way.
+    */
+  private def rewriteRead(spark: org.apache.spark.sql.SparkSession,
+                          dir: String, es: Seq[FileEntry],
+                          schemas: Seq[SchemaInfo]): DataFrame =
+    if (uniformSchema(es, schemas))
+      spark.read.option("mergeSchema", "true")
+        .parquet(es.map(e => s"$dir/${e.path}"): _*)
+    else evolvedRead(spark, dir, es, schemas, mergeSchema = true)
+
+  /** The schema of a PARTIAL rewrite: only a table ALREADY recording
+    * schemas evolves (a fresh schema inferred from the touched subset
+    * alone could miss widened columns that live only in untouched
+    * legacy files — compact/OPTIMIZE, which rewrite everything, are the
+    * upgrade path). Returns (schema history, id for the new files).
+    */
+  private def partialSchema(schemas: Seq[SchemaInfo],
+                            written: org.apache.spark.sql.types.StructType)
+      : (Seq[SchemaInfo], Option[Int]) =
+    if (schemas.isEmpty) (Nil, None)
+    else {
+      val (out, sid) = assignSchema(schemas, written, merge = true)
+      (out, Some(sid))
+    }
+
+  /** The files whose stats may hold a key of `source`: its
+    * per-key-column [min, max] box — one bounded aggregation,
+    * 2·|keys| scalars — compiled to a conjunctive [[StatPred]]; an
+    * all-null key column gives no bound, so cannot prune.
+    */
+  private def keyBoxCandidates(source: DataFrame, keyCols: Seq[String],
+                               entries: Seq[FileEntry],
+                               schemas: Seq[SchemaInfo]): Seq[FileEntry] = {
+    val r = source.agg(
+      min(col(keyCols.head)), max(col(keyCols.head)) +:
+        keyCols.tail.flatMap(c => Seq(min(col(c)), max(col(c)))): _*).head()
+    val box = keyCols.zipWithIndex.flatMap { case (c, i) =>
+      (Option(r.get(2 * i)), Option(r.get(2 * i + 1))) match {
+        case (Some(lo), Some(hi)) => Some(Between(c, lo, hi))
+        case _ => None
+      }
+    }
+    if (box.isEmpty) entries
+    else entries.filter(e => mayMatchEvolved(e, And(box), schemas))
+  }
+
+  /** A file's recorded byte size (one stat call for entries written
+    * before sizes were recorded).
+    */
+  private def bytesOf(fs: org.apache.hadoop.fs.FileSystem, dir: String,
+                      e: FileEntry): Long =
+    e.bytes.getOrElse(
+      fs.getFileStatus(new org.apache.hadoop.fs.Path(s"$dir/${e.path}")).getLen)
 
   /** MERGE-ON-READ delete — the Iceberg v2 position-delete / Delta
     * deletion-vector move: instead of REWRITING every file that may
@@ -1822,24 +1602,19 @@ object Layout {
   private def deleteWhereMoRImpl(spark: org.apache.spark.sql.SparkSession,
                                  dir: String, pred: Option[StatPred],
                                  cond: Column): (Long, Long) = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = listSnapshotIds(fs, dir)
-    require(ids.nonEmpty, s"no snapshot manifest under $dir")
-    val cur = ids.max
-    val (entries, schemas) = readManifestFull(fs, dir, cur)
-    require(uniformSchema(entries, schemas),
+    val fs = tableFs(spark, dir)
+    val (cur, m) = snapshotAt(fs, dir)
+    require(uniformSchema(m.entries, m.schemas),
       "merge-on-read delete needs a uniform-schema table — run " +
         "compactSnapshot/optimizeClustered to materialize evolution first")
     // a position delete computed over eq-masked rows would break the
     // disjoint-count invariant; the mixed case settles first
-    require(readManifestEqDeletes(fs, dir, cur).isEmpty,
+    require(m.eqDeletes.isEmpty,
       "settle outstanding equality deletes (materializeDeletes) " +
         "before position deletes")
-    val oldDeletes = readManifestDeletes(fs, dir, cur)
     val candidates = pred match {
-      case Some(p) => entries.filter(e => mayMatch(e, p))
-      case None => entries
+      case Some(p) => m.entries.filter(e => mayMatch(e, p))
+      case None => m.entries
     }
     if (candidates.isEmpty) return (cur, 0L)
     import spark.implicits._
@@ -1857,27 +1632,18 @@ object Layout {
       .join(broadcast(mapping), Seq("_abs"))
       .select(col("_rel").as("_gdv_path"), col("_gdv_pos"),
         col("_gdv_row"))
-    val live =
-      if (oldDeletes.isEmpty) scan
-      else scan.join(
-        spark.read.parquet(oldDeletes.map(d => s"$dir/${d.path}"): _*)
-          .select(col("path").as("_gdv_path"), col("pos").as("_gdv_pos")),
-        Seq("_gdv_path", "_gdv_pos"), "left_anti")
-    val marked = live
+    val marked = liveRows(spark, dir, scan, "_gdv_path", m.deletes)
       .select(col("_gdv_path"), col("_gdv_pos"), col("_gdv_row.*"))
       .filter(coalesce(cond, lit(false)))
       .select(col("_gdv_path").as("path"), col("_gdv_pos").as("pos"))
     val snapId = cur + 1L
-    val dvRel = attemptDir("deletes/snap", snapId)
-    marked.write.mode("overwrite").parquet(s"$dir/$dvRel")
-    val n = spark.read.parquet(s"$dir/$dvRel").count()
-    if (n == 0L) {
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$dvRel"), true)
-      return (cur, 0L)
+    writeDeleteIndex(fs, dir, "deletes/snap", snapId, marked) match {
+      case None => (cur, 0L)
+      case Some((dvRel, n)) =>
+        writeManifest(fs, dir, snapId, m.entries, m.schemas,
+          m.deletes :+ DeleteFile(dvRel, n), op = "delete")
+        (snapId, n)
     }
-    writeManifest(fs, dir, snapId, entries, schemas,
-      oldDeletes :+ DeleteFile(dvRel, n), op = "delete")
-    (snapId, n)
   }
 
   /** EQUALITY delete — the key-tombstone form of merge-on-read: commit
@@ -1896,13 +1662,9 @@ object Layout {
     */
   def deleteKeysMoR(spark: org.apache.spark.sql.SparkSession,
                     dir: String, keys: DataFrame): (Long, Long) = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = listSnapshotIds(fs, dir)
-    require(ids.nonEmpty, s"no snapshot manifest under $dir")
-    val cur = ids.max
-    val (entries, schemas) = readManifestFull(fs, dir, cur)
-    require(uniformSchema(entries, schemas),
+    val fs = tableFs(spark, dir)
+    val (cur, m) = snapshotAt(fs, dir)
+    require(uniformSchema(m.entries, m.schemas),
       "equality delete needs a uniform-schema table — materialize " +
         "evolution first")
     val cols = keys.columns.toSeq
@@ -1913,18 +1675,13 @@ object Layout {
     cols.foreach(c => require(tableCols.contains(c),
       s"key column $c not in table schema"))
     val snapId = cur + 1L
-    val dvRel = attemptDir("deletes/eq-snap", snapId)
-    keys.distinct().write.mode("overwrite").parquet(s"$dir/$dvRel")
-    val n = spark.read.parquet(s"$dir/$dvRel").count()
-    if (n == 0L) {
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$dvRel"), true)
-      return (cur, 0L)
+    writeDeleteIndex(fs, dir, "deletes/eq-snap", snapId, keys.distinct()) match {
+      case None => (cur, 0L)
+      case Some((dvRel, n)) =>
+        writeManifest(fs, dir, snapId, m.entries, m.schemas, m.deletes,
+          m.eqDeletes :+ EqDeleteFile(dvRel, n, cols), op = "delete")
+        (snapId, n)
     }
-    writeManifest(fs, dir, snapId, entries, schemas,
-      readManifestDeletes(fs, dir, cur),
-      readManifestEqDeletes(fs, dir, cur) :+ EqDeleteFile(dvRel, n, cols),
-      op = "delete")
-    (snapId, n)
   }
 
   /** ATOMIC merge-on-read UPSERT — streaming-CDC ingestion without the
@@ -1956,19 +1713,15 @@ object Layout {
                     dir: String, sourceIn: DataFrame,
                     keyCols: Seq[String]): (Long, Long) = {
     require(keyCols.nonEmpty, "upsertKeysMoR needs at least one key column")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = listSnapshotIds(fs, dir)
-    require(ids.nonEmpty, s"no snapshot manifest under $dir")
-    val cur = ids.max
-    val (entries, schemas) = readManifestFull(fs, dir, cur)
-    require(uniformSchema(entries, schemas),
+    val fs = tableFs(spark, dir)
+    val (cur, m) = snapshotAt(fs, dir)
+    val entries = m.entries
+    require(uniformSchema(entries, m.schemas),
       "merge-on-read upsert needs a uniform-schema table — run " +
         "compactSnapshot/optimizeClustered to materialize evolution first")
-    require(readManifestEqDeletes(fs, dir, cur).isEmpty,
+    require(m.eqDeletes.isEmpty,
       "settle outstanding equality deletes (materializeDeletes) " +
         "before a MoR upsert")
-    val oldDeletes = readManifestDeletes(fs, dir, cur)
     // pin the source (the mergeInto rationale): bounds agg, semi-join,
     // and the append each re-evaluate it
     val source = sourceIn.localCheckpoint()
@@ -1982,7 +1735,7 @@ object Layout {
       // replace: bootstrap-append semantics, aligned to the table's
       // recorded current schema when there is one — not a
       // NoSuchElementException off entries.head below.
-      val shaped = currentSchemaOf(schemas) match {
+      val shaped = currentSchemaOf(m.schemas) match {
         case Some(curSchema) =>
           val srcCols = source.columns.toSet
           source.select(curSchema.fields.toIndexedSeq.map(f =>
@@ -2001,24 +1754,11 @@ object Layout {
       (if (srcCols.contains(f.name)) col(f.name) else lit(null))
         .cast(f.dataType).as(f.name)): _*)
 
-    // the source's key box prunes candidate files via manifest stats
-    val boundsRow = source.agg(
-      min(col(keyCols.head)), max(col(keyCols.head)) +:
-        keyCols.tail.flatMap(c => Seq(min(col(c)), max(col(c)))): _*).head()
-    val boundPreds = keyCols.zipWithIndex.flatMap { case (c, i) =>
-      (Option(boundsRow.get(2 * i)), Option(boundsRow.get(2 * i + 1))) match {
-        case (Some(lo), Some(hi)) => Some(Between(c, lo, hi))
-        case _ => None
-      }
-    }
-    val candidates =
-      if (boundPreds.isEmpty) entries
-      else entries.filter(e => mayMatch(e, And(boundPreds)))
+    val candidates = keyBoxCandidates(source, keyCols, entries, m.schemas)
     import spark.implicits._
     val snapId = cur + 1L
-    val dvRel = attemptDir("deletes/snap", snapId)
-    val nReplaced =
-      if (candidates.isEmpty) 0L
+    val dv =
+      if (candidates.isEmpty) None
       else {
         val mapping = candidates
           .map(e => (normalizeAbs(s"$dir/${e.path}"), e.path))
@@ -2031,47 +1771,22 @@ object Layout {
             col("_metadata.row_index").as("_gdv_pos")) ++
             keyCols.map(col): _*)
           .join(broadcast(mapping), Seq("_gdv_abs"))
-        // positions compute against the LIVE view so accumulated DV
-        // files stay pairwise disjoint (deleteWhereMoR's invariant)
-        val live =
-          if (oldDeletes.isEmpty) scan
-          else scan.join(
-            spark.read.parquet(oldDeletes.map(d => s"$dir/${d.path}"): _*)
-              .select(col("path").as("_gdv_rel"), col("pos").as("_gdv_pos")),
-            Seq("_gdv_rel", "_gdv_pos"), "left_anti")
-        val marked = live
+        val marked = liveRows(spark, dir, scan, "_gdv_rel", m.deletes)
           .join(source.select(keyCols.map(col): _*).distinct(),
             keyCols, "left_semi")
           .select(col("_gdv_rel").as("path"), col("_gdv_pos").as("pos"))
-        marked.write.mode("overwrite").parquet(s"$dir/$dvRel")
-        spark.read.parquet(s"$dir/$dvRel").count()
+        writeDeleteIndex(fs, dir, "deletes/snap", snapId, marked)
       }
-    if (nReplaced == 0L)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$dvRel"), true)
 
     val dataRel = attemptDir("data/snap", snapId)
-    val dataDir = s"$dir/$dataRel"
-    aligned.write.mode("overwrite").parquet(dataDir)
-    val (names, sizes) = listDataFiles(fs, dataDir)
-    val cols = statColsCurrent(entries, schemas, _.stats.keys)
-    val bCols = statColsCurrent(entries, schemas, _.blooms.keys)
-    val stats =
-      if (cols.isEmpty) Map.empty[String, (Map[String, ColStat], Long)]
-      else collectFileStats(spark, dataDir, cols)
-    val blooms =
-      if (bCols.isEmpty) Map.empty[String, Map[String, BloomStat]]
-      else collectFileBlooms(spark, dataDir, bCols)
-    val (outSchemas, sid) = assignSchema(schemas, aligned.schema, merge = true)
-    writeManifest(fs, dir, snapId,
-      entries ++ names.toIndexedSeq.map(n =>
-        entryFor(dataRel, n, stats, blooms, sizes)
-          .copy(schemaId = if (outSchemas.isEmpty) None else Some(sid))),
-      outSchemas,
-      deletes =
-        if (nReplaced == 0L) oldDeletes
-        else oldDeletes :+ DeleteFile(dvRel, nReplaced),
+    aligned.write.mode("overwrite").parquet(s"$dir/$dataRel")
+    val (outSchemas, sid) =
+      assignSchema(m.schemas, aligned.schema, merge = true)
+    writeManifest(fs, dir, snapId, entries ++ writtenEntries(spark, fs, dir,
+      dataRel, entries, m.schemas, Some(sid)), outSchemas,
+      deletes = m.deletes ++ dv.map { case (rel, n) => DeleteFile(rel, n) },
       op = "merge")
-    (snapId, nReplaced)
+    (snapId, dv.fold(0L)(_._2))
   }
 
   /** Anti-join the snapshot's equality-delete key sets out of a read —
@@ -2102,8 +1817,8 @@ object Layout {
     */
   def materializeDeletes(spark: org.apache.spark.sql.SparkSession,
                          dir: String): Long = {
-    require(snapshotDeletes(spark, dir).nonEmpty ||
-      snapshotEqDeletes(spark, dir).nonEmpty,
+    val (_, m) = snapshotAt(tableFs(spark, dir), dir)
+    require(m.deletes.nonEmpty || m.eqDeletes.nonEmpty,
       s"no outstanding deletes under $dir — nothing to materialize")
     snapshotWrite(snapshotRead(spark, dir), dir)
   }
@@ -2139,13 +1854,11 @@ object Layout {
                 sourceIn: DataFrame, keyCols: Seq[String],
                 deleteWhen: Option[Column] = None): (Long, Int) = {
     require(keyCols.nonEmpty, "mergeInto needs at least one key column")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = listSnapshotIds(fs, dir)
-    require(ids.nonEmpty, s"no snapshot manifest under $dir")
-    requireNoDeletes(spark, dir, "mergeInto") // CoW rewrite — see deleteWhere
-    val (entries, schemas) = readManifestFull(fs, dir, ids.max)
-    val snapId = ids.max + 1L
+    val fs = tableFs(spark, dir)
+    val (cur, m) = snapshotAt(fs, dir)
+    requireNoDeletes(dir, m, "mergeInto") // CoW rewrite — see deleteWhere
+    val (entries, schemas) = (m.entries, m.schemas)
+    val snapId = cur + 1L
 
     // PIN the source before anything reads it (the snapshotAppendChecked
     // pattern): the merge evaluates it in several independent jobs
@@ -2156,16 +1869,7 @@ object Layout {
     // (the classic Delta MERGE source-rescan bug).
     val source = sourceIn.localCheckpoint()
 
-    // the source's key box: one bounded aggregation (2·|keys| scalars)
-    val boundsRow = source.agg(
-      min(col(keyCols.head)), max(col(keyCols.head)) +:
-        keyCols.tail.flatMap(c => Seq(min(col(c)), max(col(c)))): _*).head()
-    val boundPreds = keyCols.zipWithIndex.flatMap { case (c, i) =>
-      (Option(boundsRow.get(2 * i)), Option(boundsRow.get(2 * i + 1))) match {
-        case (Some(lo), Some(hi)) => Some(Between(c, lo, hi))
-        case _ => None // all-null key side: no bound, cannot prune on c
-      }
-    }
+    val boxed = keyBoxCandidates(source, keyCols, entries, schemas)
     val sourceEmpty = source.isEmpty
     // two-tier touched-file resolution (the Delta findTouchedFiles
     // shape): the manifest box prunes candidates for free, then ONE
@@ -2173,10 +1877,7 @@ object Layout {
     // with the source keys decides EXACTLY which files hold a source
     // key — an insert-heavy batch whose keys land outside every file
     // (the common CDC case) rewrites nothing it doesn't have to.
-    val candidates =
-      if (sourceEmpty) Nil
-      else if (boundPreds.isEmpty) entries // degenerate: cannot prune
-      else entries.filter(e => mayMatchEvolved(e, And(boundPreds), schemas))
+    val candidates = if (sourceEmpty) Nil else boxed
     // key columns under each candidate file's OWN names (rename-safe);
     // the semi-join probe reads per name-group so every file's keys
     // resolve correctly
@@ -2220,11 +1921,7 @@ object Layout {
     }
     val target =
       if (touched.isEmpty) None
-      else if (uniformSchema(touched, schemas))
-        Some(spark.read.option("mergeSchema", "true")
-          .parquet(touched.map(e => s"$dir/${e.path}"): _*))
-      else Some(evolvedRead(spark, dir, touched, schemas,
-        mergeSchema = true))
+      else Some(rewriteRead(spark, dir, touched, schemas))
     // carried = touched-file rows whose key the source does not claim;
     // the source side contributes updates and inserts in one pass
     val merged = target match {
@@ -2249,26 +1946,11 @@ object Layout {
       case None => inserts
     }
     val dataRel = attemptDir("data/snap", snapId)
-    val dataDir = s"$dir/$dataRel"
-    merged.write.mode("overwrite").parquet(dataDir)
-    val (names, sizes) = listDataFiles(fs, dataDir)
-    val (outSchemas, sid) =
-      if (schemas.isEmpty) (Nil, 0) // see deleteWhere: partial rewrite
-      else assignSchema(schemas, merged.schema, merge = true)
-    val statsCols = statColsCurrent(entries, schemas, _.stats.keys)
-    val bCols = statColsCurrent(entries, schemas, _.blooms.keys)
-    val stats =
-      if (statsCols.isEmpty) Map.empty[String, (Map[String, ColStat], Long)]
-      else collectFileStats(spark, dataDir, statsCols)
-    val blooms =
-      if (bCols.isEmpty) Map.empty[String, Map[String, BloomStat]]
-      else collectFileBlooms(spark, dataDir, bCols)
-    writeManifest(fs, dir, snapId,
-      untouched ++ names.toIndexedSeq.map(n =>
-        entryFor(dataRel, n, stats, blooms, sizes)
-          .copy(schemaId =
-            if (outSchemas.isEmpty) None else Some(sid))),
-      outSchemas, op = if (touched.isEmpty) "append" else "merge")
+    merged.write.mode("overwrite").parquet(s"$dir/$dataRel")
+    val (outSchemas, sid) = partialSchema(schemas, merged.schema)
+    writeManifest(fs, dir, snapId, untouched ++ writtenEntries(spark, fs, dir,
+      dataRel, entries, schemas, sid), outSchemas,
+      op = if (touched.isEmpty) "append" else "merge")
     (snapId, touched.size)
   }
 
@@ -2279,15 +1961,8 @@ object Layout {
     * leave the executors. Values serialize through a string cast; see
     * [[ColStat]] for the comparison contract.
     */
-  private def collectFileStats(spark: org.apache.spark.sql.SparkSession,
-                               dataDir: String, statsCols: Seq[String])
-      : Map[String, (Map[String, ColStat], Long)] =
-    collectFileStats(spark, Seq(dataDir), statsCols)
-
-  private def collectFileStats(spark: org.apache.spark.sql.SparkSession,
-                               paths: Seq[String], statsCols: Seq[String])
+  private def collectFileStats(df: DataFrame, statsCols: Seq[String])
       : Map[String, (Map[String, ColStat], Long)] = {
-    val df = spark.read.parquet(paths: _*)
     val types = statsCols.map { c =>
       require(df.columns.contains(c), s"stats column $c not in schema")
       c -> df.schema(c).dataType.catalogString
@@ -2336,23 +2011,11 @@ object Layout {
     * Restricted to integral and string columns: those are the types
     * whose probe-side value coercion is unambiguous ([[bloomProbeHash]]).
     */
-  private def collectFileBlooms(spark: org.apache.spark.sql.SparkSession,
-                                dataDir: String, bloomCols: Seq[String],
-                                bitsPerKey: Int, k: Int)
-      : Map[String, Map[String, BloomStat]] =
-    collectFileBlooms(spark, Seq(dataDir), bloomCols, bitsPerKey, k)
-
-  private def collectFileBlooms(spark: org.apache.spark.sql.SparkSession,
-                                dataDir: String, bloomCols: Seq[String])
-      : Map[String, Map[String, BloomStat]] =
-    collectFileBlooms(spark, Seq(dataDir), bloomCols)
-
-  private def collectFileBlooms(spark: org.apache.spark.sql.SparkSession,
-                                paths: Seq[String], bloomCols: Seq[String],
+  private def collectFileBlooms(df: DataFrame, bloomCols: Seq[String],
                                 bitsPerKey: Int = 10, k: Int = 4)
       : Map[String, Map[String, BloomStat]] = {
     import org.apache.spark.sql.types._
-    val df = spark.read.parquet(paths: _*)
+    val spark = df.sparkSession
     val types = bloomCols.map { c =>
       require(df.columns.contains(c), s"bloom column $c not in schema")
       val dt = df.schema(c).dataType
@@ -2421,16 +2084,49 @@ object Layout {
         .map { case (f, xs) => f -> xs.map(x => x._2 -> x._3).toMap }
   }
 
-  private def entryFor(relDir: String, name: String,
-                       stats: Map[String, (Map[String, ColStat], Long)],
-                       blooms: Map[String, Map[String, BloomStat]] =
-                         Map.empty,
-                       sizes: Map[String, Long] = Map.empty): FileEntry = {
-    val bl = blooms.getOrElse(name, Map.empty)
-    val sz = sizes.get(name)
-    stats.get(name) match {
-      case Some((cs, n)) => FileEntry(s"$relDir/$name", cs, Some(n), bl, sz)
-      case None => FileEntry(s"$relDir/$name", blooms = bl, bytes = sz)
+  /** The commit path every writer shares, run once its parquet sits
+    * under `relDir`: list the written files (minus `skip`, the names a
+    * staged chain already records), resolve the stats/bloom contract,
+    * collect both and return the entries stamped with `schemaId`. The
+    * contract: explicit columns are used as given, so a typo fails
+    * loudly; otherwise the columns `inherit`'s entries track,
+    * translated by field id through `schemas`, kept only where the
+    * written files have them — an append narrower than the table, or an
+    * overwrite that reshapes it, records no stats for what it lacks.
+    */
+  private def writtenEntries(spark: org.apache.spark.sql.SparkSession,
+                             fs: org.apache.hadoop.fs.FileSystem,
+                             dir: String, relDir: String,
+                             inherit: Seq[FileEntry],
+                             schemas: Seq[SchemaInfo],
+                             schemaId: Option[Int],
+                             statsCols: Seq[String] = Nil,
+                             bloomCols: Seq[String] = Nil,
+                             skip: Set[String] = Set.empty): Seq[FileEntry] = {
+    val dataDir = s"$dir/$relDir"
+    val (all, sizes) = listDataFiles(fs, dataDir)
+    val names = all.filterNot(skip)
+    lazy val written = spark.read.parquet(
+      (if (names.size == all.size) Seq(dataDir)
+       else names.map(n => s"$dataDir/$n")): _*)
+    lazy val have = written.columns.toSet
+    def contract(explicit: Seq[String],
+                 keys: FileEntry => Iterable[String]): Seq[String] =
+      if (names.isEmpty) Nil
+      else if (explicit.nonEmpty) explicit
+      else statColsCurrent(inherit, schemas, keys).filter(c => have(c))
+    val cols = contract(statsCols, _.stats.keys)
+    val bCols = contract(bloomCols, _.blooms.keys)
+    val stats =
+      if (cols.isEmpty) Map.empty[String, (Map[String, ColStat], Long)]
+      else collectFileStats(written, cols)
+    val blooms =
+      if (bCols.isEmpty) Map.empty[String, Map[String, BloomStat]]
+      else collectFileBlooms(written, bCols)
+    names.map { n =>
+      val st = stats.get(n)
+      FileEntry(s"$relDir/$n", st.fold(Map.empty[String, ColStat])(_._1),
+        st.map(_._2), blooms.getOrElse(n, Map.empty), sizes.get(n), schemaId)
     }
   }
 
@@ -2678,11 +2374,8 @@ object Layout {
     * `dir` — the SaveMode existence probe for the `snapshot` sink.
     */
   def tableExists(spark: org.apache.spark.sql.SparkSession,
-                  dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    listSnapshotIds(fs, dir).nonEmpty
-  }
+                  dir: String): Boolean =
+    listSnapshotIds(tableFs(spark, dir), dir).nonEmpty
 
   /** Manifest serialization. v1 (no stats): a bare JSON array of
     * relative paths — the format pre-stats tables on disk already use.
@@ -2822,75 +2515,148 @@ object Layout {
         catch { case _: java.io.IOException => false }
     }
 
-  private def readManifestEntries(fs: org.apache.hadoop.fs.FileSystem,
-                                  dir: String, snap: Long): Seq[FileEntry] =
-    readManifestFull(fs, dir, snap)._1
-
-  /** The snapshot's outstanding position-delete files (empty on v1
-    * manifests and on every table without MoR deletes).
+  /** One parsed manifest — a committed `manifest-<id>.json` or a
+    * write-audit-publish staging record: the file entries, the schema
+    * history, the outstanding position and equality deletes, and the
+    * commit kind (None on manifests written before ops were recorded).
     */
-  private def readManifestDeletes(fs: org.apache.hadoop.fs.FileSystem,
-                                  dir: String, snap: Long)
-      : Seq[DeleteFile] = {
+  private final case class Manifest(entries: Seq[FileEntry],
+                                    schemas: Seq[SchemaInfo] = Nil,
+                                    deletes: Seq[DeleteFile] = Nil,
+                                    eqDeletes: Seq[EqDeleteFile] = Nil,
+                                    op: Option[String] = None)
+
+  /** The one manifest reader: open, parse, done. A v1 body (a bare path
+    * array) is a plain append — every other writer forces the v2 body.
+    */
+  private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
+                           p: org.apache.hadoop.fs.Path): Manifest = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
-    val in = fs.open(new org.apache.hadoop.fs.Path(dir, s"manifest-$snap.json"))
+    val in = fs.open(p)
     val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
-    JsonMethods.parse(body) match {
-      case obj: JObject => (obj \ "deletes") match {
-        case JArray(ds) => ds.collect { case d: JObject =>
-          ((d \ "path"), (d \ "rows")) match {
-            case (JString(p), JInt(n)) => DeleteFile(p, n.toLong)
-            case (JString(p), JLong(n)) => DeleteFile(p, n)
-            case other => sys.error(s"bad delete entry: $other")
-          }
-        }
-        case _ => Nil
-      }
+    def num(v: JValue): Option[Long] = v match {
+      case JInt(n) => Some(n.toLong)
+      case JLong(n) => Some(n)
+      case _ => None
+    }
+    def str(v: JValue): Option[String] = v match {
+      case JString(x) => Some(x)
+      case _ => None
+    }
+    def list(v: JValue): List[JObject] = v match {
+      case JArray(xs) => xs.collect { case o: JObject => o }
       case _ => Nil
+    }
+    def entry(f: JObject): FileEntry = {
+      val path = str(f \ "path").getOrElse(
+        sys.error(s"bad manifest path: ${f \ "path"}"))
+      val stats = (f \ "stats") match {
+        case JObject(cols) => cols.map { case (c, st) =>
+          c -> ColStat(str(st \ "min"), str(st \ "max"),
+            str(st \ "type").getOrElse("string"), str(st \ "sum"))
+        }.toMap
+        case _ => Map.empty[String, ColStat]
+      }
+      val blooms = (f \ "blooms") match {
+        case JObject(cols) => cols.flatMap { case (c, b) =>
+          for {m <- num(b \ "m"); k <- num(b \ "k"); t <- str(b \ "type")
+               bits <- str(b \ "bits")}
+            yield c -> BloomStat(m.toInt, k.toInt, t, java.util.BitSet.valueOf(
+              java.util.Base64.getDecoder.decode(bits)))
+        }.toMap
+        case _ => Map.empty[String, BloomStat]
+      }
+      FileEntry(path, stats, num(f \ "rows"), blooms, num(f \ "bytes"),
+        num(f \ "schema").map(_.toInt))
+    }
+    JsonMethods.parse(body) match {
+      case JArray(vs) =>
+        Manifest(vs.collect { case JString(x) => FileEntry(x) },
+          op = Some("append"))
+      case obj: JObject =>
+        val files = (obj \ "files") match {
+          case JArray(_) => list(obj \ "files").map(entry)
+          case other => sys.error(s"bad manifest files list: $other")
+        }
+        val schemas = list(obj \ "schemas").map { sc =>
+          SchemaInfo(num(sc \ "id").getOrElse(
+            sys.error(s"bad schema id: ${sc \ "id"}")).toInt,
+            (sc \ "fields") match {
+              case JArray(_) => list(sc \ "fields").map { f =>
+                (num(f \ "id"), str(f \ "name"), str(f \ "type")) match {
+                  case (Some(i), Some(n), Some(t)) => FieldInfo(i.toInt, n, t)
+                  case other => sys.error(s"bad schema field: $other")
+                }
+              }
+              case other => sys.error(s"bad schema fields: $other")
+            })
+        }
+        def rowsOf(d: JObject, what: String): (String, Long) =
+          (str(d \ "path"), num(d \ "rows")) match {
+            case (Some(x), Some(n)) => (x, n)
+            case other => sys.error(s"bad $what entry: $other")
+          }
+        Manifest(files, schemas,
+          list(obj \ "deletes").map { d =>
+            val (x, n) = rowsOf(d, "delete"); DeleteFile(x, n) },
+          list(obj \ "eqdeletes").map { d =>
+            val (x, n) = rowsOf(d, "eq-delete")
+            EqDeleteFile(x, n, (d \ "cols") match {
+              case JArray(cs) => cs.collect { case JString(c) => c }
+              case _ => Nil
+            })
+          },
+          str(obj \ "op"))
+      case other => sys.error(s"bad manifest body: $other")
     }
   }
 
-  /** The snapshot's outstanding equality-delete files (empty unless
-    * [[deleteKeysMoR]] debt is outstanding).
-    */
-  private def readManifestEqDeletes(fs: org.apache.hadoop.fs.FileSystem,
-                                    dir: String, snap: Long)
-      : Seq[EqDeleteFile] = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val in = fs.open(new org.apache.hadoop.fs.Path(dir, s"manifest-$snap.json"))
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    JsonMethods.parse(body) match {
-      case obj: JObject => (obj \ "eqdeletes") match {
-        case JArray(ds) => ds.collect { case d: JObject =>
-          val cols = (d \ "cols") match {
-            case JArray(cs) => cs.collect { case JString(c) => c }
-            case _ => Nil
-          }
-          ((d \ "path"), (d \ "rows")) match {
-            case (JString(p), JInt(n)) => EqDeleteFile(p, n.toLong, cols)
-            case (JString(p), JLong(n)) => EqDeleteFile(p, n, cols)
-            case other => sys.error(s"bad eq-delete entry: $other")
-          }
-        }
-        case _ => Nil
-      }
-      case _ => Nil
-    }
-  }
+  private def manifestAt(fs: org.apache.hadoop.fs.FileSystem, dir: String,
+                         snap: Long): Manifest =
+    readManifest(fs, new org.apache.hadoop.fs.Path(dir, s"manifest-$snap.json"))
 
-  private def resolvedEqDeletes(spark: org.apache.spark.sql.SparkSession,
-                                dir: String, snapshotId: Long)
-      : Seq[EqDeleteFile] = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
+  private def tableFs(spark: org.apache.spark.sql.SparkSession,
+                      dir: String): org.apache.hadoop.fs.FileSystem =
+    new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The table's committed snapshot ids; loud when it has none. */
+  private def committedIds(fs: org.apache.hadoop.fs.FileSystem,
+                           dir: String): Array[Long] = {
     val ids = listSnapshotIds(fs, dir)
-    if (ids.isEmpty) Nil
-    else readManifestEqDeletes(fs, dir,
-      if (snapshotId > 0) snapshotId else ids.max)
+    require(ids.nonEmpty, s"no snapshot manifest under $dir")
+    ids
+  }
+
+  /** One manifest resolution: the snapshot `snapshotId` names (the
+    * latest when <= 0) and its manifest — entries, schemas and delete
+    * lists all from the same file, whatever commits land meanwhile.
+    */
+  private def snapshotAt(fs: org.apache.hadoop.fs.FileSystem, dir: String,
+                         snapshotId: Long = -1L): (Long, Manifest) = {
+    val ids = committedIds(fs, dir)
+    val snap = if (snapshotId > 0) snapshotId else ids.max
+    require(ids.contains(snap), s"snapshot $snap not found under $dir")
+    (snap, manifestAt(fs, dir, snap))
+  }
+
+  /** The latest snapshot id and manifest, or (0, empty) before the
+    * table's first commit.
+    */
+  private def latestOrEmpty(fs: org.apache.hadoop.fs.FileSystem,
+                            dir: String): (Long, Manifest) = {
+    val ids = listSnapshotIds(fs, dir)
+    if (ids.isEmpty) (0L, Manifest(Nil)) else (ids.max, manifestAt(fs, dir, ids.max))
+  }
+
+  /** The staging record of `token`; loud when it does not exist. */
+  private def stagedPath(fs: org.apache.hadoop.fs.FileSystem, dir: String,
+                         token: String): org.apache.hadoop.fs.Path = {
+    val p = new org.apache.hadoop.fs.Path(dir, s"staged-$token.json")
+    require(fs.exists(p), s"no staged batch $token under $dir")
+    p
   }
 
   /** Public view of a snapshot's outstanding equality deletes:
@@ -2899,7 +2665,7 @@ object Layout {
   def snapshotEqDeletes(spark: org.apache.spark.sql.SparkSession,
                         dir: String, snapshotId: Long = -1L)
       : Seq[(String, Long, Seq[String])] =
-    resolvedEqDeletes(spark, dir, snapshotId)
+    snapshotAt(tableFs(spark, dir), dir, snapshotId)._2.eqDeletes
       .map(d => (d.path, d.rows, d.cols))
 
   /** Public view of a snapshot's outstanding delete files:
@@ -2907,20 +2673,9 @@ object Layout {
     */
   def snapshotDeletes(spark: org.apache.spark.sql.SparkSession,
                       dir: String, snapshotId: Long = -1L)
-      : Seq[(String, Long)] = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = listSnapshotIds(fs, dir)
-    require(ids.nonEmpty, s"no snapshot manifest under $dir")
-    val snap = if (snapshotId > 0) snapshotId else ids.max
-    readManifestDeletes(fs, dir, snap).map(d => (d.path, d.rows))
-  }
-
-  private def readManifestFull(fs: org.apache.hadoop.fs.FileSystem,
-                               dir: String, snap: Long)
-      : (Seq[FileEntry], Seq[SchemaInfo]) =
-    readManifestPath(fs,
-      new org.apache.hadoop.fs.Path(dir, s"manifest-$snap.json"))
+      : Seq[(String, Long)] =
+    snapshotAt(tableFs(spark, dir), dir, snapshotId)._2.deletes
+      .map(d => (d.path, d.rows))
 
   /** The commit KIND the writer recorded in a snapshot's manifest —
     * the provenance a change consumer needs to interpret the
@@ -2933,119 +2688,8 @@ object Layout {
     * tables) — consumers treat unknown conservatively.
     */
   def snapshotOp(spark: org.apache.spark.sql.SparkSession, dir: String,
-                 snapshotId: Long): Option[String] = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    readManifestOp(fs, dir, snapshotId)
-  }
-
-  private[graft] def readManifestOp(fs: org.apache.hadoop.fs.FileSystem,
-                                    dir: String, snap: Long)
-      : Option[String] = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val p = new org.apache.hadoop.fs.Path(dir, s"manifest-$snap.json")
-    val in = fs.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    JsonMethods.parse(body) match {
-      // v1 bare path array carries no op — but it is only ever written
-      // by plain appends (every other path forces the v2 body)
-      case JArray(_) => Some("append")
-      case obj: JObject => (obj \ "op") match {
-        case JString(o) => Some(o)
-        case _ => None
-      }
-      case _ => None
-    }
-  }
-
-  private def readManifestPath(fs: org.apache.hadoop.fs.FileSystem,
-                               p: org.apache.hadoop.fs.Path)
-      : (Seq[FileEntry], Seq[SchemaInfo]) = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val in = fs.open(p)
-    val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    def parseSchemas(obj: JObject): Seq[SchemaInfo] =
-      (obj \ "schemas") match {
-        case JArray(ss) => ss.collect { case s: JObject =>
-          val sid = (s \ "id") match {
-            case JInt(n) => n.toInt
-            case other => sys.error(s"bad schema id: $other")
-          }
-          val fields = (s \ "fields") match {
-            case JArray(fls) => fls.collect { case f: JObject =>
-              ((f \ "id"), (f \ "name"), (f \ "type")) match {
-                case (JInt(i), JString(n), JString(t)) =>
-                  FieldInfo(i.toInt, n, t)
-                case other => sys.error(s"bad schema field: $other")
-              }
-            }
-            case other => sys.error(s"bad schema fields: $other")
-          }
-          SchemaInfo(sid, fields)
-        }
-        case _ => Nil
-      }
-    JsonMethods.parse(body) match {
-      case JArray(vs) => // v1: bare path array
-        (vs.collect { case JString(p) => FileEntry(p) }, Nil)
-      case obj: JObject =>
-        ((obj \ "files") match {
-          case JArray(fs2) => fs2.collect { case f: JObject =>
-            val path = (f \ "path") match {
-              case JString(p) => p
-              case other => sys.error(s"bad manifest path: $other")
-            }
-            val stats = (f \ "stats") match {
-              case JObject(cols) => cols.map { case (c, st) =>
-                def s(k: String): Option[String] = (st \ k) match {
-                  case JString(v) => Some(v)
-                  case _ => None
-                }
-                c -> ColStat(s("min"), s("max"),
-                  s("type").getOrElse("string"), s("sum"))
-              }.toMap
-              case _ => Map.empty[String, ColStat]
-            }
-            val rows = (f \ "rows") match {
-              case JInt(n) => Some(n.toLong)
-              case JLong(n) => Some(n)
-              case _ => None
-            }
-            val bytes = (f \ "bytes") match {
-              case JInt(n) => Some(n.toLong)
-              case JLong(n) => Some(n)
-              case _ => None
-            }
-            val schemaId = (f \ "schema") match {
-              case JInt(n) => Some(n.toInt)
-              case _ => None
-            }
-            val blooms = (f \ "blooms") match {
-              case JObject(cols) => cols.flatMap { case (c, b) =>
-                def i(key: String): Option[Int] = (b \ key) match {
-                  case JInt(n) => Some(n.toInt); case _ => None
-                }
-                def s(key: String): Option[String] = (b \ key) match {
-                  case JString(v) => Some(v); case _ => None
-                }
-                for {m <- i("m"); kk <- i("k"); t <- s("type")
-                     bits <- s("bits")}
-                  yield c -> BloomStat(m, kk, t, java.util.BitSet.valueOf(
-                    java.util.Base64.getDecoder.decode(bits)))
-              }.toMap
-              case _ => Map.empty[String, BloomStat]
-            }
-            FileEntry(path, stats, rows, blooms, bytes, schemaId)
-          }
-          case other => sys.error(s"bad manifest files list: $other")
-        }) -> parseSchemas(obj)
-      case other => sys.error(s"bad manifest body: $other")
-    }
-  }
+                 snapshotId: Long): Option[String] =
+    manifestAt(tableFs(spark, dir), dir, snapshotId).op
 
   /** Read a manifest-committed snapshot: latest by default, or a pinned
     * `snapshotId` (time travel). Only manifest-listed files are read —
@@ -3065,54 +2709,20 @@ object Layout {
                    snapshotId: Long = -1L,
                    prune: Option[StatPred] = None,
                    mergeSchema: Boolean = false): DataFrame = {
-    // ONE manifest resolution (glob + open + parse); pruning filters
-    // the loaded entries in memory — on an object store the manifest
-    // round-trip is exactly the cost this path exists to minimize
-    val (all, schemas) = snapshotState(spark, dir, snapshotId)
-    val kept = prune match {
-      case None => all
-      case Some(p) => all.filter(e => mayMatchEvolved(e, p, schemas))
-    }
+    // ONE manifest resolution (glob + open + parse) — entries, schemas
+    // and delete lists of the same snapshot; pruning filters the loaded
+    // entries in memory — on an object store the manifest round-trip is
+    // exactly the cost this path exists to minimize
+    val (_, m) = snapshotAt(tableFs(spark, dir), dir, snapshotId)
+    val kept = pruned(m, prune)
     // every file pruned — or a legitimately zero-file manifest (a
     // table fully emptied by a copy-on-write delete): a schema-correct
     // empty result without planning a scan over the empty list (a
     // zero-path parquet read throws UNABLE_TO_INFER_SCHEMA)
     if (kept.isEmpty)
-      return emptyLike(spark, dir, all, schemas, mergeSchema)
-    // Field-id evolution path: once the table's files span schemas
-    // whose (id, name) sets differ (rename/drop/widen history), reads
-    // resolve columns BY ID to the current schema — per-schema groups,
-    // aliased selects, one union. Uniform tables keep the single-scan
-    // fast path below.
-    if (!uniformSchema(all, schemas)) {
-      val base = evolvedRead(spark, dir, kept, schemas, mergeSchema,
-        deletes = resolvedDeletes(spark, dir, snapshotId),
-        eqDeletes = resolvedEqDeletes(spark, dir, snapshotId))
-      return prune match {
-        case Some(p) => base.filter(toColumn(p))
-        case None => base
-      }
-    }
-    val files = kept.map(e => s"$dir/${e.path}")
-    // mergeSchema: appends may have widened the schema (added columns);
-    // the default parquet read takes one file's schema and would
-    // silently drop the new column from old-file rows' view — schema
-    // evolution on a snapshot table needs the union schema (new columns
-    // surface as NULL on pre-widening files, nothing rewritten: the
-    // q148 property inside the snapshot contract)
-    val reader =
-      if (mergeSchema) spark.read.option("mergeSchema", "true")
-      else spark.read
-    // merge-on-read deletes: anti-join the snapshot's position-delete
-    // index and equality tombstones back out
-    val base = eqFilter(spark, dir,
-      dvFilter(spark, dir, reader.parquet(files: _*), kept,
-        resolvedDeletes(spark, dir, snapshotId)),
-      resolvedEqDeletes(spark, dir, snapshotId))
-    prune match {
-      case Some(p) => base.filter(toColumn(p))
-      case None => base
-    }
+      return emptyLike(spark, dir, m.entries, m.schemas, mergeSchema)
+    val base = liveRead(spark, dir, m, kept, mergeSchema)
+    prune.fold(base)(p => base.filter(toColumn(p)))
   }
 
   /** The manifest entries a (possibly pruned) snapshot read resolves
@@ -3120,44 +2730,54 @@ object Layout {
     */
   def snapshotFiles(spark: org.apache.spark.sql.SparkSession, dir: String,
                     snapshotId: Long = -1L,
-                    prune: Option[StatPred] = None): Seq[FileEntry] = {
-    val (entries, schemas) = snapshotState(spark, dir, snapshotId)
-    prune match {
-      case None => entries
-      case Some(p) => entries.filter(e => mayMatchEvolved(e, p, schemas))
-    }
-  }
+                    prune: Option[StatPred] = None): Seq[FileEntry] =
+    pruned(snapshotAt(tableFs(spark, dir), dir, snapshotId)._2, prune)
 
-  /** One manifest resolution → (entries, schema history). */
-  private def snapshotState(spark: org.apache.spark.sql.SparkSession,
-                            dir: String, snapshotId: Long)
-      : (Seq[FileEntry], Seq[SchemaInfo]) = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = listSnapshotIds(fs, dir)
-    require(ids.nonEmpty, s"no snapshot manifest under $dir")
-    val snap = if (snapshotId > 0) snapshotId else ids.max
-    require(ids.contains(snap), s"snapshot $snap not found under $dir")
-    readManifestFull(fs, dir, snap)
-  }
+  /** The entries whose stats may satisfy `prune` (all without one). */
+  private def pruned(m: Manifest, prune: Option[StatPred]): Seq[FileEntry] =
+    prune.fold(m.entries)(p =>
+      m.entries.filter(e => mayMatchEvolved(e, p, m.schemas)))
+
+  /** The LIVE rows of `kept`, a subset of `m`'s files: the snapshot's
+    * position-delete index and equality tombstones anti-joined back
+    * out. Once the table's files span schemas whose (id, name) sets
+    * differ (rename/drop/widen history) columns resolve BY ID to the
+    * current schema ([[evolvedRead]]); uniform tables take the single
+    * scan. `mergeSchema`: appends may have widened the schema, and the
+    * default parquet read takes one file's schema, silently dropping
+    * the new column from old-file rows' view — a rewrite reads the
+    * union schema (new columns surface as NULL on pre-widening files:
+    * the q148 property inside the snapshot contract).
+    */
+  private def liveRead(spark: org.apache.spark.sql.SparkSession,
+                       dir: String, m: Manifest, kept: Seq[FileEntry],
+                       mergeSchema: Boolean = true): DataFrame =
+    if (!uniformSchema(m.entries, m.schemas))
+      evolvedRead(spark, dir, kept, m.schemas, mergeSchema, m.deletes,
+        m.eqDeletes)
+    else {
+      val reader =
+        if (mergeSchema) spark.read.option("mergeSchema", "true")
+        else spark.read
+      eqFilter(spark, dir, dvFilter(spark, dir,
+        reader.parquet(kept.map(e => s"$dir/${e.path}"): _*), kept,
+        m.deletes), m.eqDeletes)
+    }
 
   /** The snapshot's recorded schema history (ascending id; last =
     * current). Empty on tables that predate schema recording.
     */
   def snapshotSchemas(spark: org.apache.spark.sql.SparkSession,
                       dir: String, snapshotId: Long = -1L): Seq[SchemaInfo] =
-    snapshotState(spark, dir, snapshotId)._2.sortBy(_.id)
+    snapshotAt(tableFs(spark, dir), dir, snapshotId)._2.schemas.sortBy(_.id)
 
   /** The table's committed snapshot ids, ascending — the DESCRIBE
     * HISTORY primitive, and the offset domain for incremental
     * consumption ([[snapshotChangesSince]]).
     */
   def snapshotIds(spark: org.apache.spark.sql.SparkSession,
-                  dir: String): Seq[Long] = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    listSnapshotIds(fs, dir).sorted.toSeq
-  }
+                  dir: String): Seq[Long] =
+    listSnapshotIds(tableFs(spark, dir), dir).sorted.toSeq
 
   /** min/max/count answered from the MANIFEST ALONE — the
     * metadata-only aggregate pushdown ([[snapshotCount]]'s sibling for
@@ -3177,12 +2797,12 @@ object Layout {
   def snapshotMinMax(spark: org.apache.spark.sql.SparkSession,
                      dir: String, column: String,
                      snapshotId: Long = -1L): DataFrame = {
-    val entries = snapshotFiles(spark, dir, snapshotId)
+    val (_, m) = snapshotAt(tableFs(spark, dir), dir, snapshotId)
+    val entries = m.entries
     require(entries.nonEmpty, s"empty snapshot under $dir")
     // a deleted row may BE the extreme — min/max from file stats is
     // only sound with zero outstanding deletes of either kind
-    require(resolvedDeletes(spark, dir, snapshotId).isEmpty &&
-      resolvedEqDeletes(spark, dir, snapshotId).isEmpty,
+    require(m.deletes.isEmpty && m.eqDeletes.isEmpty,
       "metadata min/max undefined over outstanding deletes — " +
         "materializeDeletes first")
     require(entries.forall(_.stats.contains(column)),
@@ -3239,25 +2859,20 @@ object Layout {
   def snapshotHistory(spark: org.apache.spark.sql.SparkSession,
                       dir: String): DataFrame = {
     import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = listSnapshotIds(fs, dir)
-    require(ids.nonEmpty, s"no snapshot manifest under $dir")
-    ids.sorted.map { sid =>
-      val entries = readManifestEntries(fs, dir, sid)
+    val fs = tableFs(spark, dir)
+    committedIds(fs, dir).sorted.map { sid =>
+      val m = manifestAt(fs, dir, sid)
       val mtime = fs.getFileStatus(
         new org.apache.hadoop.fs.Path(dir, s"manifest-$sid.json"))
         .getModificationTime
-      val dvRows = readManifestDeletes(fs, dir, sid).map(_.rows).sum
       val rows =
-        if (entries.isEmpty) Some(0L)
+        if (m.entries.isEmpty) Some(0L)
         // equality tombstones: live count unknowable from metadata
-        else if (readManifestEqDeletes(fs, dir, sid).nonEmpty) None
-        else if (entries.forall(_.rows.isDefined))
-          Some(entries.flatMap(_.rows).sum - dvRows) // live, not physical
+        else if (m.eqDeletes.nonEmpty) None
+        else if (m.entries.forall(_.rows.isDefined)) // live, not physical
+          Some(m.entries.flatMap(_.rows).sum - m.deletes.map(_.rows).sum)
         else None
-      (sid, new java.sql.Timestamp(mtime), entries.size, rows,
-        readManifestOp(fs, dir, sid))
+      (sid, new java.sql.Timestamp(mtime), m.entries.size, rows, m.op)
     }.toSeq
       .toDF("snapshot_id", "committed_at", "n_files", "n_rows", "op")
   }
@@ -3279,20 +2894,11 @@ object Layout {
                            dir: String, sinceSnapshotId: Long,
                            toSnapshotId: Long = -1L,
                            mergeSchema: Boolean = false): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = listSnapshotIds(fs, dir)
-    require(ids.nonEmpty, s"no snapshot manifest under $dir")
-    val to = if (toSnapshotId > 0) toSnapshotId else ids.max
-    require(ids.contains(to), s"snapshot $to not found under $dir")
-    val target = readManifestEntries(fs, dir, to)
+    val fs = tableFs(spark, dir)
+    val target = snapshotAt(fs, dir, toSnapshotId)._2.entries
     val basePaths =
       if (sinceSnapshotId <= 0) Set.empty[String]
-      else {
-        require(ids.contains(sinceSnapshotId),
-          s"snapshot $sinceSnapshotId not found under $dir")
-        readManifestEntries(fs, dir, sinceSnapshotId).map(_.path).toSet
-      }
+      else snapshotAt(fs, dir, sinceSnapshotId)._2.entries.map(_.path).toSet
     val added = target.filterNot(e => basePaths.contains(e.path))
     val reader =
       if (mergeSchema) spark.read.option("mergeSchema", "true")
@@ -3337,10 +2943,8 @@ object Layout {
   def changeFeed(spark: org.apache.spark.sql.SparkSession, dir: String,
                  sinceSnapshotId: Long, toSnapshotId: Long = -1L)
       : DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = listSnapshotIds(fs, dir)
-    require(ids.nonEmpty, s"no snapshot manifest under $dir")
+    val fs = tableFs(spark, dir)
+    val ids = committedIds(fs, dir)
     val to = if (toSnapshotId > 0) toSnapshotId else ids.max
     require(ids.contains(to), s"snapshot $to not found under $dir")
     require(sinceSnapshotId <= 0 || ids.contains(sinceSnapshotId),
@@ -3350,11 +2954,7 @@ object Layout {
     def readEntries(entries: Seq[FileEntry], schemas: Seq[SchemaInfo])
         : Option[DataFrame] =
       if (entries.isEmpty) None
-      else if (uniformSchema(entries, schemas))
-        Some(spark.read.option("mergeSchema", "true")
-          .parquet(entries.map(e => s"$dir/${e.path}"): _*))
-      else Some(evolvedRead(spark, dir, entries, schemas,
-        mergeSchema = true))
+      else Some(rewriteRead(spark, dir, entries, schemas))
 
     def tag(df: DataFrame, tpe: String, sid: Long): DataFrame =
       df.withColumn("_change_type", lit(tpe))
@@ -3389,28 +2989,19 @@ object Layout {
     }
 
     var prev = if (sinceSnapshotId > 0) sinceSnapshotId else 0L
+    var prevM = if (prev > 0) manifestAt(fs, dir, prev) else Manifest(Nil)
     val frames = Seq.newBuilder[DataFrame]
     span.foreach { sid =>
-      val (curE, curS) = readManifestFull(fs, dir, sid)
-      val op = readManifestOp(fs, dir, sid).getOrElse("unknown")
-      op match {
+      val cur = manifestAt(fs, dir, sid)
+      val prevPaths = prevM.entries.map(_.path).toSet
+      cur.op.getOrElse("unknown") match {
         case "replace" | "evolve" => // zero logical change
         case "append" =>
-          val prevPaths =
-            if (prev <= 0) Set.empty[String]
-            else readManifestEntries(fs, dir, prev).map(_.path).toSet
-          readEntries(curE.filterNot(e => prevPaths.contains(e.path)), curS)
-            .foreach(df => frames += tag(df, "insert", sid))
+          readEntries(cur.entries.filterNot(e => prevPaths.contains(e.path)),
+            cur.schemas).foreach(df => frames += tag(df, "insert", sid))
         case _ =>
-          val prevE =
-            if (prev <= 0) Nil else readManifestEntries(fs, dir, prev)
-          val dvDelta =
-            readManifestDeletes(fs, dir, sid).toSet !=
-              (if (prev <= 0) Set.empty
-               else readManifestDeletes(fs, dir, prev).toSet) ||
-            readManifestEqDeletes(fs, dir, sid).toSet !=
-              (if (prev <= 0) Set.empty
-               else readManifestEqDeletes(fs, dir, prev).toSet)
+          val dvDelta = cur.deletes.toSet != prevM.deletes.toSet ||
+            cur.eqDeletes.toSet != prevM.eqDeletes.toSet
           if (dvDelta) {
             // MoR tombstone movement: only the live views are exact
             val after = snapshotRead(spark, dir, sid)
@@ -3418,19 +3009,17 @@ object Layout {
               if (prev <= 0) None else Some(snapshotRead(spark, dir, prev))
             frames ++= pairDiff(Some(after), before, sid)
           } else {
-            val prevPaths = prevE.map(_.path).toSet
-            val curPaths = curE.map(_.path).toSet
-            val prevSchemas =
-              if (prev <= 0) Nil else readManifestFull(fs, dir, prev)._2
+            val curPaths = cur.entries.map(_.path).toSet
             frames ++= pairDiff(
-              readEntries(curE.filterNot(e => prevPaths.contains(e.path)),
-                curS),
-              readEntries(prevE.filterNot(e => curPaths.contains(e.path)),
-                prevSchemas),
+              readEntries(cur.entries.filterNot(e =>
+                prevPaths.contains(e.path)), cur.schemas),
+              readEntries(prevM.entries.filterNot(e =>
+                curPaths.contains(e.path)), prevM.schemas),
               sid)
           }
       }
       prev = sid
+      prevM = cur
     }
     val out = frames.result()
     if (out.isEmpty)
@@ -3446,11 +3035,8 @@ object Layout {
     */
   def snapshotAsOf(spark: org.apache.spark.sql.SparkSession, dir: String,
                    timestampMs: Long): Long = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = listSnapshotIds(fs, dir)
-    require(ids.nonEmpty, s"no snapshot manifest under $dir")
-    val eligible = ids.filter { id =>
+    val fs = tableFs(spark, dir)
+    val eligible = committedIds(fs, dir).filter { id =>
       fs.getFileStatus(new org.apache.hadoop.fs.Path(dir,
         s"manifest-$id.json")).getModificationTime <= timestampMs
     }
@@ -3467,19 +3053,16 @@ object Layout {
     */
   def rollbackTo(spark: org.apache.spark.sql.SparkSession, dir: String,
                  snapshotId: Long): Long = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = tableFs(spark, dir)
     val ids = listSnapshotIds(fs, dir)
     require(ids.contains(snapshotId),
       s"snapshot $snapshotId not found under $dir")
-    val (entries, schemas) = readManifestFull(fs, dir, snapshotId)
+    val m = manifestAt(fs, dir, snapshotId)
     val newId = ids.max + 1L
     // the rollback restores the TARGET's delete state too — rolling
     // past a MoR delete must resurrect exactly what that snapshot saw
-    writeManifest(fs, dir, newId, entries, schemas,
-      deletes = readManifestDeletes(fs, dir, snapshotId),
-      eqDeletes = readManifestEqDeletes(fs, dir, snapshotId),
-      op = "rollback")
+    writeManifest(fs, dir, newId, m.entries, m.schemas, m.deletes,
+      m.eqDeletes, op = "rollback")
     newId
   }
 
@@ -3491,15 +3074,14 @@ object Layout {
     */
   def snapshotCount(spark: org.apache.spark.sql.SparkSession, dir: String,
                     snapshotId: Long = -1L): Long = {
-    val entries = snapshotFiles(spark, dir, snapshotId)
+    val (snap, m) = snapshotAt(tableFs(spark, dir), dir, snapshotId)
     // position deletes stay metadata-exact (pairwise disjoint by
     // construction: live = Σ file rows − Σ delete rows); EQUALITY
     // deletes have unknown overlap with the data — real count
-    val dvRows = resolvedDeletes(spark, dir, snapshotId).map(_.rows).sum
-    if (entries.nonEmpty && entries.forall(_.rows.isDefined) &&
-        resolvedEqDeletes(spark, dir, snapshotId).isEmpty)
-      entries.map(_.rows.get).sum - dvRows
-    else snapshotRead(spark, dir, snapshotId).count()
+    if (m.entries.nonEmpty && m.entries.forall(_.rows.isDefined) &&
+        m.eqDeletes.isEmpty)
+      m.entries.map(_.rows.get).sum - m.deletes.map(_.rows).sum
+    else snapshotRead(spark, dir, snap).count()
   }
 
   /** Vacuum a manifest-committed table: delete every data file NOT
@@ -3517,55 +3099,41 @@ object Layout {
     require(keep >= 1, s"must keep at least 1 snapshot, got $keep")
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val manifests = listSnapshotIds(fs, dir).sorted
-    require(manifests.nonEmpty, s"no snapshot manifest under $dir")
+    val manifests = committedIds(fs, dir).sorted
     // refs PIN snapshots: a tagged/branched id keeps its manifest and
     // its files regardless of the keep horizon
     val keepIds = manifests.takeRight(keep).toSet ++ refPinnedIds(fs, dir)
+    val kept = keepIds.toSeq.map(manifestAt(fs, dir, _))
     // pending write-audit-publish batches are live-by-staging: their
     // files are referenced by no manifest yet, but dropping them would
     // destroy a batch mid-audit
     val stagedLive: Set[String] = Option(fs.globStatus(
       new org.apache.hadoop.fs.Path(dir, "staged-*.json")))
       .getOrElse(Array.empty)
-      .flatMap(st => readManifestPath(fs, st.getPath)._1.map(_.path))
+      .flatMap(st => readManifest(fs, st.getPath).entries.map(_.path))
       .toSet
-    val live: Set[String] = keepIds.flatMap { snap =>
-      readManifestEntries(fs, dir, snap).map(_.path).toSet
-    } ++ stagedLive
+    val live: Set[String] =
+      kept.flatMap(_.entries.map(_.path)).toSet ++ stagedLive
     // delete DIRECTORIES (position and equality) referenced by
     // surviving manifests are live as units (their part files key by
     // the dir prefix)
-    val liveDvDirs: Set[String] = keepIds.flatMap { snap =>
-      readManifestDeletes(fs, dir, snap).map(_.path).toSet ++
-        readManifestEqDeletes(fs, dir, snap).map(_.path).toSet
-    }
-    var deleted = 0
-    val dataRoot = new org.apache.hadoop.fs.Path(dir, "data")
-    if (fs.exists(dataRoot)) {
-      val it = fs.listFiles(dataRoot, true)
+    val liveDvDirs: Set[String] = kept.flatMap(deleteDirs).toSet
+    // every file under `sub` whose table-relative path is not live
+    def sweep(sub: String, isLive: String => Boolean): Int = {
+      val subRoot = new org.apache.hadoop.fs.Path(dir, sub)
+      if (!fs.exists(subRoot)) return 0
+      val it = fs.listFiles(subRoot, true)
       val dead = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.Path]
       while (it.hasNext) {
         val f = it.next()
         val rel = f.getPath.toString.stripPrefix(
           fs.makeQualified(root).toString + "/")
-        if (f.isFile && !live.contains(rel)) dead += f.getPath
+        if (f.isFile && !isLive(rel)) dead += f.getPath
       }
-      dead.foreach { p => if (fs.delete(p, false)) deleted += 1 }
+      dead.count(fs.delete(_, false))
     }
-    val dvRoot = new org.apache.hadoop.fs.Path(dir, "deletes")
-    if (fs.exists(dvRoot)) {
-      val it = fs.listFiles(dvRoot, true)
-      val dead = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.Path]
-      while (it.hasNext) {
-        val f = it.next()
-        val rel = f.getPath.toString.stripPrefix(
-          fs.makeQualified(root).toString + "/")
-        if (f.isFile && !liveDvDirs.exists(d => rel.startsWith(d + "/")))
-          dead += f.getPath
-      }
-      dead.foreach { p => if (fs.delete(p, false)) deleted += 1 }
-    }
+    val deleted = sweep("data", live.contains) +
+      sweep("deletes", rel => liveDvDirs.exists(d => rel.startsWith(d + "/")))
     manifests.filterNot(keepIds.contains).foreach { snap =>
       fs.delete(new org.apache.hadoop.fs.Path(dir, s"manifest-$snap.json"), false)
       // the id can never be recommitted (ids only grow), so its commit
@@ -3622,10 +3190,8 @@ object Layout {
                         tpe: String): Long = {
     require(RefNameRx.matches(name),
       s"ref name must match ${RefNameRx.regex}, got '$name'")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = listSnapshotIds(fs, dir)
-    require(ids.nonEmpty, s"no snapshot manifest under $dir")
+    val fs = tableFs(spark, dir)
+    val ids = committedIds(fs, dir)
     val sid = if (snapshotId < 0) ids.max else snapshotId
     require(ids.contains(sid), s"snapshot $sid does not exist under $dir")
     require(listRefVersions(fs, dir, name).isEmpty,
@@ -3648,8 +3214,7 @@ object Layout {
     */
   def fastForward(spark: org.apache.spark.sql.SparkSession, dir: String,
                   name: String, toSnapshotId: Long = -1L): Long = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = tableFs(spark, dir)
     val versions = listRefVersions(fs, dir, name)
     require(versions.nonEmpty, s"no ref '$name' under $dir")
     val curVer = versions.max
@@ -3678,8 +3243,7 @@ object Layout {
     */
   def dropRef(spark: org.apache.spark.sql.SparkSession, dir: String,
               name: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = tableFs(spark, dir)
     val versions = listRefVersions(fs, dir, name)
     require(versions.nonEmpty, s"no ref '$name' under $dir")
     versions.foreach(v => fs.delete(refVersionPath(dir, name, v), false))
@@ -3688,16 +3252,14 @@ object Layout {
   /** All refs on the table, one row each (max version wins per name). */
   def tableRefs(spark: org.apache.spark.sql.SparkSession,
                 dir: String): Seq[TableRef] = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = tableFs(spark, dir)
     listAllRefs(fs, dir).sortBy(_.name)
   }
 
   /** Resolve a ref name to its snapshot id (loudly absent if none). */
   def resolveRef(spark: org.apache.spark.sql.SparkSession, dir: String,
                  name: String): Long = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = tableFs(spark, dir)
     val versions = listRefVersions(fs, dir, name)
     require(versions.nonEmpty, s"no ref '$name' under $dir")
     readRefVersion(fs, dir, name, versions.max).snapshotId
@@ -3812,10 +3374,8 @@ object Layout {
                       keepLast: Int = 1,
                       pinnedIds: Set[Long] = Set.empty): (Int, Int) = {
     require(keepLast >= 1, s"must keep at least 1 snapshot, got $keepLast")
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = listSnapshotIds(fs, dir).sorted
-    require(ids.nonEmpty, s"no snapshot manifest under $dir")
+    val fs = tableFs(spark, dir)
+    val ids = committedIds(fs, dir).sorted
     // refs PIN snapshots: a tagged/branched id survives any horizon —
     // and so does anything the caller pins (catalogRetention passes
     // every snapshot a retained catalog version references)
@@ -3827,25 +3387,14 @@ object Layout {
           s"manifest-$id.json")).getModificationTime < olderThanMs
     }
     if (expired.isEmpty) return (0, 0)
-    val surviving = ids.filterNot(expired.contains)
-    val live: Set[String] = surviving
-      .flatMap(id => readManifestEntries(fs, dir, id).map(_.path)).toSet
-    val dead: Set[String] = expired
-      .flatMap(id => readManifestEntries(fs, dir, id).map(_.path))
-      .toSet -- live
+    val gone = expired.toSeq.map(manifestAt(fs, dir, _))
+    val kept = ids.filterNot(expired.contains).toSeq.map(manifestAt(fs, dir, _))
+    val dead = gone.flatMap(_.entries.map(_.path)).toSet --
+      kept.flatMap(_.entries.map(_.path))
     // same liveness rule for position- and equality-delete directories
-    val liveDv: Set[String] = surviving
-      .flatMap(id => readManifestDeletes(fs, dir, id).map(_.path) ++
-        readManifestEqDeletes(fs, dir, id).map(_.path)).toSet
-    val deadDv: Set[String] = expired
-      .flatMap(id => readManifestDeletes(fs, dir, id).map(_.path) ++
-        readManifestEqDeletes(fs, dir, id).map(_.path))
-      .toSet -- liveDv
-    var deleted = 0
-    dead.foreach { rel =>
-      if (fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$rel"), false))
-        deleted += 1
-    }
+    val deadDv = gone.flatMap(deleteDirs).toSet -- kept.flatMap(deleteDirs)
+    val deleted = dead.count(rel =>
+      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$rel"), false))
     deadDv.foreach { rel =>
       fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$rel"), true)
     }
@@ -4012,20 +3561,18 @@ object Layout {
       : DataFrame = {
     import spark.implicits._
     val actions = Seq.newBuilder[(String, String)]
+    val fs = tableFs(spark, dir)
+    val debt = snapshotAt(fs, dir)._2
     if (policy.settleDeletes &&
-        (snapshotDeletes(spark, dir).nonEmpty ||
-          snapshotEqDeletes(spark, dir).nonEmpty)) {
+        (debt.deletes.nonEmpty || debt.eqDeletes.nonEmpty)) {
       val sid = materializeDeletes(spark, dir)
       actions += (("settle_deletes", s"snapshot $sid"))
     }
-    val small = snapshotFiles(spark, dir)
+    val settled = snapshotAt(fs, dir)._2
+    val small = settled.entries
       .count(_.bytes.exists(_ < policy.targetFileBytes / 2))
     if (small >= policy.minSmallFiles) {
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val (entries, schemas) =
-        readManifestFull(fs, dir, listSnapshotIds(fs, dir).max)
-      if (uniformSchema(entries, schemas)) {
+      if (uniformSchema(settled.entries, settled.schemas)) {
         // the scalable pass: only the small-file debt rewrites
         val (sid, rewritten, after) =
           compactSmallFiles(spark, dir, policy.targetFileBytes)
@@ -4039,10 +3586,7 @@ object Layout {
       }
     }
     policy.clusterDim.foreach { dim =>
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val (entries, schemas) =
-        readManifestFull(fs, dir, listSnapshotIds(fs, dir).max)
+      val (_, Manifest(entries, schemas, _, _, _)) = snapshotAt(fs, dir)
       // Guard the POLICY step the way the schema check above does:
       // optimizeClusteredIncremental hard-requires exact [min,max]
       // bounds on the dim for EVERY file, and a nightly maintenance
@@ -4257,9 +3801,7 @@ object Layout {
                            tables: Map[String, String],
                            note: Option[String] = None): Long = {
     catalogCommit(spark, catalogDir, tables.map { case (t, dir) =>
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val ids = listSnapshotIds(fs, dir)
+      val ids = listSnapshotIds(tableFs(spark, dir), dir)
       require(ids.nonEmpty, s"table '$t' has no snapshots under $dir")
       t -> (dir, ids.max)
     }, note)

@@ -19,9 +19,10 @@ import org.apache.spark.sql.functions._
   * ids are drawn once, however often a caller reads the [[Result]].
   *
   * Scale: the only shuffles are the ones the semantics demand — the
-  * interleave pairing join, the k-mer aggregation, and the blast-filter
-  * join (exactly the reference's shuffle stages, §3.2 table). Everything
-  * else is narrow or a per-partition pipe.
+  * interleave's pairing window on the read name, the k-mer aggregation,
+  * and the assembler input's per-pair `min_by`. The blast-filter join
+  * broadcasts its small hits side. Everything else is narrow or a
+  * per-partition pipe.
   */
 object ViraPipeline {
 

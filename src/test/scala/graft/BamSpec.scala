@@ -186,6 +186,28 @@ class BamSpec extends AnyFunSuite {
     assert(rows(spark.read.format("bam").option("splitBytes", 65536).load(plain.toString)) == want)
   }
 
+  test("a region read of a plain-gzip BAM scans it whole and keeps the region's records") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_bam_gzip_region")
+    val sorted = dir.resolve("sorted.bam").toString
+    val recs = (0 until 50).map(i => (f"z$i%03d", 0, "chr1", i * 10 + 1, 60, "8M",
+      "ACGTACGT", "IIIIIIII")).toDF(recCols: _*)
+    Bam.write(recs.coalesce(1), sorted, refs = Seq(("chr1", 10000)),
+      singleFile = true, sortOrder = Some("coordinate"))
+    val raw = new java.util.zip.GZIPInputStream(new java.io.FileInputStream(sorted)).readAllBytes()
+    val plain = java.nio.file.Files.createDirectory(dir.resolve("plain")).resolve("plain.bam")
+    val go = new java.util.zip.GZIPOutputStream(java.nio.file.Files.newOutputStream(plain))
+    try go.write(raw) finally go.close()
+    val all = Bam.read(spark, plain.toString)
+    assert(all.count() == 50)
+    // starts 101, 111, ..., 191 overlap [100, 200] with their 8 bases
+    val want = rows(all.filter(col("referenceName") === "chr1" &&
+      col("start") <= 200 && col("start") + 7 >= 100))
+    assert(want.size == 10)
+    assert(rows(Bam.readRegion(spark, plain.toString, "chr1", 100, 200)) == want)
+    assert(Bam.readRegion(spark, plain.toString, "chrX", 1, 100).count() == 0)
+  }
+
   test("a glob of .bam files reads as their directory does, never the .bai beside them") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_bam_glob").toString

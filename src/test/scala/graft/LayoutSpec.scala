@@ -991,6 +991,36 @@ class LayoutSpec extends AnyFunSuite {
     }
   }
 
+  test("a narrow append onto a stats-tracked table keeps the stats it can") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_narrow").toString
+    Layout.snapshotWrite(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), dir,
+      statsCols = Seq("id", "v"))
+    val before = Layout.snapshotFiles(spark, dir).map(_.path).toSet
+    Layout.snapshotAppend(Seq(3L).toDF("id"), dir)
+    val tok = Layout.snapshotAppendStaged(Seq(4L).toDF("id"), dir)
+    Layout.publishStaged(spark, dir, tok)
+    val rows = Layout.snapshotRead(spark, dir).as[(Long, Option[String])]
+      .collect().toMap
+    assert(rows == Map(1L -> Some("a"), 2L -> Some("b"), 3L -> None, 4L -> None))
+    val fresh = Layout.snapshotFiles(spark, dir).filterNot(e => before(e.path))
+    assert(fresh.size == 2)
+    fresh.foreach { e =>
+      assert(e.stats.keySet == Set("id"), e.stats)
+      assert(e.rows.contains(1L))
+    }
+    // the stat-less column keeps those files in a pruned read, so it is exact
+    val pruned = Layout.snapshotRead(spark, dir,
+      prune = Some(Layout.StatPred.Eq("v", "b")))
+    assert(pruned.as[(Long, Option[String])].collect().toSeq == Seq((2L, Some("b"))))
+    assert(Layout.snapshotRead(spark, dir,
+      prune = Some(Layout.StatPred.Ge("id", 3L))).count() == 2)
+    // an explicitly named column the batch lacks still fails loudly
+    val typo = intercept[IllegalArgumentException](
+      Layout.snapshotAppend(Seq(5L).toDF("id"), dir, statsCols = Seq("v")))
+    assert(typo.getMessage.contains("stats column v"), typo.getMessage)
+  }
+
   test("mergeInto: stats-bounded rewrite, untouched files byte-identical") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_merge").toString
