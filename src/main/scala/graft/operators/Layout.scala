@@ -2106,6 +2106,7 @@ object Layout {
     val dataDir = s"$dir/$relDir"
     val (all, sizes) = listDataFiles(fs, dataDir)
     val names = all.filterNot(skip)
+    // the directory itself when every file is new: one root path to list
     lazy val written = spark.read.parquet(
       (if (names.size == all.size) Seq(dataDir)
        else names.map(n => s"$dataDir/$n")): _*)
