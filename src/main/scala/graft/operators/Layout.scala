@@ -1192,11 +1192,12 @@ object Layout {
     // sweep the sorted intervals into maximal overlap components
     val comps = scala.collection.mutable.ArrayBuffer
       .empty[scala.collection.mutable.ArrayBuffer[FileEntry]]
-    var hi: BigDecimal = null
+    val order = Ordering[(Int, BigDecimal)]
+    var hi: Option[(Int, BigDecimal)] = None
     bounds.foreach { case (e, lo, h) =>
-      if (hi == null || lo > hi) {
-        comps += scala.collection.mutable.ArrayBuffer(e); hi = h
-      } else { comps.last += e; hi = hi.max(h) }
+      if (hi.forall(order.gt(lo, _))) {
+        comps += scala.collection.mutable.ArrayBuffer(e); hi = Some(h)
+      } else { comps.last += e; hi = hi.map(order.max(_, h)) }
     }
     val rewriteComps = comps.filter(_.size >= 2).map(_.toSeq).toSeq
     if (rewriteComps.isEmpty) return (cur, 0, 0)
@@ -2837,19 +2838,24 @@ object Layout {
     * wrong as an answer), so the rule must refuse them like
     * [[snapshotMinMax]] does.
     */
-  private[graft] def statKeyOrder(v: String, tpe: String): BigDecimal =
+  private[graft] def statKeyOrder(v: String, tpe: String): (Int, BigDecimal) =
     cmpKey(v, tpe)
   private[graft] def metadataExactType(tpe: String): Boolean =
     numericType(tpe) || tpe == "date" || tpe == "timestamp" ||
       tpe == "timestamp_ntz"
 
   /** Orderable key for a stat string under its catalog type — reuses
-    * the exact [[cmp]] domains (BigDecimal / epoch micros / days).
+    * the exact [[cmp]] domains (BigDecimal / epoch micros / days), and
+    * ranks the non-finite float stats around the finite ones exactly as
+    * [[cmp]] does ([[numRank]]).
     */
-  private def cmpKey(v: String, tpe: String): BigDecimal =
-    if (numericType(tpe)) BigDecimal(v)
-    else if (tpe == "date") BigDecimal(toDays(v))
-    else BigDecimal(toMicros(v))
+  private def cmpKey(v: String, tpe: String): (Int, BigDecimal) =
+    if (!numericType(tpe))
+      (0, BigDecimal(if (tpe == "date") toDays(v) else toMicros(v)))
+    else numRank(v) match {
+      case 0 => (0, BigDecimal(v))
+      case r => (r, BigDecimal(0))
+    }
 
   /** The table's commit history as a DataFrame — DESCRIBE HISTORY:
     * one row per snapshot with its commit time (the manifest rename's

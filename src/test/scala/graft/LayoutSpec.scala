@@ -1244,6 +1244,52 @@ class LayoutSpec extends AnyFunSuite {
       Layout.snapshotMinMax(spark, dir2, "id"))
   }
 
+  /** Two overlapping files whose double stats are non-finite: `x`
+    * spans [1.0, NaN] and [-2.0, 3.0], `y` spans [5.0, Infinity] and
+    * [-Infinity, 7.0].
+    */
+  private def nonFiniteTable(tag: String): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory(tag).toString
+    Layout.snapshotWrite(Seq((1L, 1.0, 5.0), (2L, Double.NaN,
+      Double.PositiveInfinity)).toDF("id", "x", "y").coalesce(1), dir,
+      statsCols = Seq("x", "y"))
+    Layout.snapshotAppend(Seq((3L, -2.0, Double.NegativeInfinity),
+      (4L, 3.0, 7.0)).toDF("id", "x", "y").coalesce(1), dir)
+    dir
+  }
+
+  private def rowsById(dir: String): Seq[String] =
+    Layout.snapshotRead(spark, dir).orderBy("id").collect()
+      .map(_.mkString(",")).toSeq
+
+  test("snapshotMinMax over NaN and Infinity stats equals Spark's min/max") {
+    val dir = nonFiniteTable("graft_mm_nan")
+    for (c <- Seq("x", "y")) {
+      val meta = Layout.snapshotMinMax(spark, dir, c).head()
+      val spk = Layout.snapshotRead(spark, dir)
+        .agg(min(c), max(c), count(lit(1))).head()
+      assert(meta.toSeq.map(String.valueOf) === spk.toSeq.map(String.valueOf),
+        s"column $c")
+    }
+  }
+
+  test("incremental clustering on a NaN-bearing key keeps content; maintainTable completes") {
+    val dir = nonFiniteTable("graft_clu_nan")
+    val want = rowsById(dir)
+    val report = Layout.maintainTable(spark, dir,
+      Layout.MaintenancePolicy(minSmallFiles = 100, clusterDim = Some("x"),
+        vacuumKeep = None)).collect().map(_.getString(0)).toSeq
+    assert(report === Seq("recluster_incremental"), s"got $report")
+    assert(rowsById(dir) === want)
+    // the direct call on the Infinity-bounded key
+    val dir2 = nonFiniteTable("graft_clu_inf")
+    val (_, rewritten, _) =
+      Layout.optimizeClusteredIncremental(spark, dir2, "y", 64L << 20)
+    assert(rewritten === 2, "the two files overlap on y")
+    assert(rowsById(dir2) === want)
+  }
+
   test("snapshotAppendChecked: SQL CHECK null semantics, nothing silently dropped") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_chk").toString

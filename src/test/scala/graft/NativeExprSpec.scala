@@ -236,11 +236,34 @@ class NativeExprSpec extends AnyFunSuite {
   }
 
   test("extensions class registers the same functions at session build") {
-    // smoke: the injector runs without error on a fresh builder config
-    // (full withExtensions sessions share the JVM; runtime registry is
-    // equivalent and already covered above)
-    val ext = new graft.plans.GraftExtensions
-    val e = new org.apache.spark.sql.SparkSessionExtensions
-    ext.apply(e) // must not throw
+    // the names runtime registration adds to a fresh session...
+    val orig = spark
+    def names(s: org.apache.spark.sql.SparkSession): Set[String] =
+      s.sessionState.functionRegistry.listFunction().map(_.funcName).toSet
+    val plain = orig.newSession()
+    val before = names(plain)
+    graft.plans.NativeFunctions.register(plain)
+    val native = names(plain) -- before
+    assert(native.size >= 19 && native.forall(_.endsWith("_native")),
+      s"runtime registration added $native")
+    // ...a session built with the extensions class has every one of
+    org.apache.spark.sql.SparkSession.clearActiveSession()
+    org.apache.spark.sql.SparkSession.clearDefaultSession()
+    try {
+      val ext = org.apache.spark.sql.SparkSession.builder()
+        .master("local[4]")
+        .withExtensions(new graft.plans.GraftExtensions)
+        .getOrCreate()
+      assert(ext ne orig)
+      val missing = native -- names(ext)
+      assert(missing.isEmpty, s"not injected at session build: $missing")
+      assert(ext.sql("SELECT revcomp_native('AACG')").head().getString(0)
+        === "CGTT")
+    } finally {
+      org.apache.spark.sql.SparkSession.clearActiveSession()
+      org.apache.spark.sql.SparkSession.clearDefaultSession()
+      org.apache.spark.sql.SparkSession.setActiveSession(orig)
+      org.apache.spark.sql.SparkSession.setDefaultSession(orig)
+    }
   }
 }

@@ -581,6 +581,73 @@ class SnapshotSqlSpec extends AnyFunSuite {
         s"separate micro-batches; got ${batches.get()}")
   }
 
+  test("readStream.format(snapshot) refuses equality tombstones, an initial scan over position deletes, and rename-era files") {
+    import org.apache.spark.sql.streaming.Trigger
+    import spark.implicits._
+    def batch(r: Range) = r.map(i => (i.toLong, s"d$i")).toDF("k", "name")
+    // one AvailableNow drain; the refusal text of the failed query, or
+    // the rows the drain delivered
+    def drain(dir: String, opts: Map[String, String] = Map.empty)
+        : Either[String, Set[Long]] = {
+      val buf = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+      var r = spark.readStream.format("snapshot").option("path", dir)
+      opts.foreach { case (k, v) => r = r.option(k, v) }
+      val q = r.load().writeStream
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          b.collect().foreach(row => buf.add(row.getLong(0)))
+          ()
+        }
+        .option("checkpointLocation", freshDir("refuse_ckpt"))
+        .trigger(Trigger.AvailableNow()).start()
+      try {
+        q.awaitTermination(120000)
+        import scala.jdk.CollectionConverters._
+        Right(buf.asScala.toSet)
+      } catch {
+        case e: org.apache.spark.sql.streaming.StreamingQueryException =>
+          Left(Iterator.iterate[Throwable](e)(_.getCause)
+            .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+            .mkString(" | "))
+      }
+    }
+    def refused(got: Either[String, Set[Long]], words: String*): Unit =
+      got match {
+        case Left(msg) => words.foreach(w =>
+          assert(msg.contains(w), s"refusal must say '$w': $msg"))
+        case Right(rows) =>
+          fail(s"expected a refusal naming ${words.mkString(", ")}; " +
+            s"delivered ${rows.size} rows")
+      }
+
+    // equality tombstones mask rows at view time: refused on any batch,
+    // the initial scan and a tail alike
+    val eq = freshDir("refuse_eq")
+    Layout.snapshotWrite(batch(1 to 10), eq, statsCols = Seq("k"))  // snap 1
+    Layout.snapshotAppend(batch(11 to 12), eq)                      // snap 2
+    Layout.deleteKeysMoR(spark, eq, Seq(3L).toDF("k"))              // snap 3
+    refused(drain(eq), "outstanding", "equality")
+    refused(drain(eq, Map("startingSnapshotId" -> "1",
+      "skipChangeCommits" -> "true")), "outstanding", "equality")
+
+    // position deletes: the initial scan cannot apply them and refuses;
+    // tailing past the delete commit is fine (old deletes never touch
+    // newly appended files)
+    val pos = freshDir("refuse_pos")
+    Layout.snapshotWrite(batch(1 to 10), pos, statsCols = Seq("k"))  // snap 1
+    Layout.deleteWhereMoR(spark, pos, Layout.StatPred.Eq("k", 4L))   // snap 2
+    refused(drain(pos), "outstanding", "position")
+    Layout.snapshotAppend(batch(21 to 23), pos)                      // snap 3
+    assert(drain(pos, Map("startingSnapshotId" -> "2")) ===
+      Right(Set(21L, 22L, 23L)))
+
+    // rename-era files: by-name parquet reads would null-fill the
+    // renamed column
+    val ren = freshDir("refuse_rename")
+    Layout.snapshotWrite(batch(1 to 10), ren, statsCols = Seq("k"))
+    Layout.renameColumn(spark, ren, "name", "label")
+    refused(drain(ren), "renamed/dropped")
+  }
+
   test("manifest bytes feed the index: no per-file stat needed, sizes correct") {
     val dir = freshDir("bytes")
     writeTable(dir)
