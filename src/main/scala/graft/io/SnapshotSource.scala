@@ -1,19 +1,21 @@
 package graft.io
 
 import graft.operators.Layout
-import graft.operators.Layout.{FileEntry, StatPred}
+import graft.operators.Layout.{FileEntry, SchemaInfo, StatPred}
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession, SQLContext}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.{InsertIntoStatement, LogicalPlan}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** SQL/DataFrame-reader access to the manifest snapshot table format —
   * the registration → arbitrary-SQL lifecycle the reference is built
@@ -72,10 +74,7 @@ class SnapshotSource extends RelationProvider
                             providerName: String,
                             parameters: Map[String, String])
       : (String, StructType) = {
-    val opts = parameters.map { case (k, v) => k.toLowerCase -> v }
-    val dir = opts.getOrElse("path",
-      throw new IllegalArgumentException(
-        "snapshot stream source needs .option(\"path\", <table dir>)"))
+    val dir = pathOf(lower(parameters), "stream source")
     ("snapshot",
       schema.getOrElse(SnapshotStream.tableSchema(sqlContext.sparkSession, dir)))
   }
@@ -86,10 +85,8 @@ class SnapshotSource extends RelationProvider
                             parameters: Map[String, String])
       : org.apache.spark.sql.execution.streaming.Source = {
     val spark = sqlContext.sparkSession
-    val opts = parameters.map { case (k, v) => k.toLowerCase -> v }
-    val dir = opts.getOrElse("path",
-      throw new IllegalArgumentException(
-        "snapshot stream source needs .option(\"path\", <table dir>)"))
+    val opts = lower(parameters)
+    val dir = pathOf(opts, "stream source")
     new SnapshotStreamSource(spark, dir,
       schema.getOrElse(SnapshotStream.tableSchema(spark, dir)),
       startingSnapshotId = opts.get("startingsnapshotid").map(_.toLong),
@@ -102,13 +99,13 @@ class SnapshotSource extends RelationProvider
   /** `df.writeStream.format("snapshot")` — idempotent manifest
     * commits per micro-batch: each batch appends through
     * [[Layout.snapshotAppend]] guarded by a per-(checkpoint, batchId)
-    * marker. The marker lands AFTER the manifest commit, so the
-    * at-least-once window is exactly one rename wide — a crash between
-    * the commit and the marker re-appends that one batch on recovery
-    * (the [[graft.streaming.TableStreams.snapshotSink]] contract,
-    * reachable from the public writer API); every other replay is a
-    * no-op. Append mode only; options: `path` (required), `statsCols`
-    * (comma-separated).
+    * marker ([[graft.streaming.TableStreams.commitOnce]]). The marker
+    * lands AFTER the manifest commit, so the at-least-once window is
+    * exactly one rename wide — a crash between the commit and the
+    * marker re-appends that one batch on recovery; every other replay
+    * is a no-op. [[graft.streaming.TableStreams.snapshotSink]] is this
+    * sink drained once. Append mode only; options: `path` (required),
+    * `statsCols` (comma-separated).
     */
   override def createSink(sqlContext: SQLContext,
                           parameters: Map[String, String],
@@ -119,16 +116,11 @@ class SnapshotSource extends RelationProvider
       s"snapshot sink supports Append output mode only, got $outputMode")
     require(partitionColumns.isEmpty,
       "snapshot sink does not take partitionBy — use Layout layouts")
-    val opts = parameters.map { case (k, v) => k.toLowerCase -> v }
-    val dir = opts.getOrElse("path",
-      throw new IllegalArgumentException(
-        "snapshot sink needs .option(\"path\", <table dir>)"))
-    val stats = opts.get("statscols")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
+    val opts = lower(parameters)
+    val dir = pathOf(opts, "sink")
     val lineage = graft.streaming.TableStreams.sinkId(
       opts.getOrElse("checkpointlocation", dir))
-    new SnapshotStreamSink(dir, stats, lineage)
+    new SnapshotStreamSink(dir, colsOf(opts, "statscols"), lineage)
   }
 
   /** The WRITER half of the lifecycle — `df.write.format("snapshot")
@@ -148,15 +140,10 @@ class SnapshotSource extends RelationProvider
                               parameters: Map[String, String],
                               data: DataFrame): BaseRelation = {
     val spark = sqlContext.sparkSession
-    val opts = parameters.map { case (k, v) => k.toLowerCase -> v }
-    val dir = opts.getOrElse("path",
-      throw new IllegalArgumentException(
-        "snapshot sink needs .option(\"path\", <table dir>)"))
-    def cols(key: String): Seq[String] = opts.get(key)
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
-    val stats = cols("statscols")
-    val blooms = cols("bloomcols")
+    val opts = lower(parameters)
+    val dir = pathOf(opts, "sink")
+    val stats = colsOf(opts, "statscols")
+    val blooms = colsOf(opts, "bloomcols")
     val exists = Layout.tableExists(spark, dir)
     mode match {
       case SaveMode.Append =>
@@ -178,7 +165,7 @@ class SnapshotSource extends RelationProvider
                               parameters: Map[String, String]): BaseRelation = {
     val spark = sqlContext.sparkSession
     // DSv1 hands options through CaseInsensitiveMap, but be explicit
-    val opts0 = parameters.map { case (k, v) => k.toLowerCase -> v }
+    val opts0 = lower(parameters)
     // CATALOG resolution: `catalog` + `table` (+ optional
     // `catalogVersion`) resolve to the dir and snapshot id the catalog
     // version pinned — the multi-table-consistent read surface. The
@@ -202,9 +189,7 @@ class SnapshotSource extends RelationProvider
           ("path" -> e.dir) + ("snapshotid" -> e.snapshotId.toString)
       case None => opts0
     }
-    val dir = opts.getOrElse("path",
-      throw new IllegalArgumentException(
-        "snapshot source needs .option(\"path\", <table dir>)"))
+    val dir = pathOf(opts, "source")
     // time travel: by id, or AS OF a calendar instant (`asOfTimestamp`
     // accepts epoch millis, an ISO-8601 instant, or a local datetime
     // in the session timezone) — resolved to the newest snapshot whose
@@ -229,64 +214,86 @@ class SnapshotSource extends RelationProvider
           SnapshotSource.metadataDf(spark, dir, kind, snapId))
       case None => ()
     }
-    val mergeSchema = opts.get("mergeschema").exists(_.toBoolean)
-    // merge-on-read deletes are row-level; a FileIndex decides only
-    // WHICH FILES open, so serving a DV table here would silently
-    // resurrect deleted rows. Refuse loudly — Layout.snapshotRead
-    // applies the delete index, and materializeDeletes (or any
-    // OPTIMIZE/compact rewrite) restores SQL access.
-    require(Layout.snapshotDeletes(spark, dir, snapId).isEmpty &&
-      Layout.snapshotEqDeletes(spark, dir, snapId).isEmpty,
+    // ONE manifest resolution: the debt check, the listing, the
+    // rename guard and the schema all see the same snapshot, whatever
+    // commits land meanwhile. Merge-on-read deletes are row-level; a
+    // FileIndex decides only WHICH FILES open, so serving a DV table
+    // here would silently resurrect deleted rows. Refuse loudly —
+    // Layout.snapshotRead applies the delete index, and
+    // materializeDeletes (or any OPTIMIZE/compact rewrite) restores
+    // SQL access.
+    val m = SnapshotSource.manifest(spark, dir, snapId)
+    require(m.deletes.isEmpty && m.eqDeletes.isEmpty,
       s"snapshot table at $dir has outstanding position/equality " +
         "deletes; read via Layout.snapshotRead or settle them with " +
         "Layout.materializeDeletes, then re-register")
-    val entries = Layout.snapshotFiles(spark, dir, snapId)
-    // Rename/drop history can leave files whose parquet column names
-    // differ from the current schema; a HadoopFsRelation resolves
-    // strictly by name, so serving those files here would silently
-    // null-fill renamed columns. Refuse loudly — Layout.snapshotRead
-    // resolves by field id, and compactSnapshot/optimizeClustered
-    // rewrite to current names, restoring SQL access.
-    val schemas = Layout.snapshotSchemas(spark, dir, snapId)
-    schemas.lastOption.foreach { cur =>
-      val curSet = cur.fields.map(f => (f.id, f.name)).toSet
-      // by-name reading is safe iff every file's fields are a SUBSET of
-      // the current (id, name) pairs: widening appends qualify (old
-      // files just null-fill the added columns), renames (same id,
-      // different name) and drops (field gone from current) do not
-      val byNameSafe = entries.forall(e =>
-        e.schemaId.forall(id => schemas.find(_.id == id)
-          .forall(_.fields.map(f => (f.id, f.name)).toSet.subsetOf(curSet))))
-      require(byNameSafe,
+    SnapshotSource.requireByNameSafe(dir, m.entries, m.schemas)
+    SnapshotSource.relation(spark,
+      new SnapshotFileIndex(spark, dir, m.entries, snapId),
+      Layout.footerSchema(spark, dir, m.entries,
+        opts.get("mergeschema").exists(_.toBoolean)),
+      opts)
+  }
+
+  private def lower(parameters: Map[String, String]): Map[String, String] =
+    parameters.map { case (k, v) => k.toLowerCase -> v }
+
+  /** The required `path` option; `role` names the surface refusing. */
+  private def pathOf(opts: Map[String, String], role: String): String =
+    opts.getOrElse("path", throw new IllegalArgumentException(
+      s"snapshot $role needs .option(\"path\", <table dir>)"))
+
+  /** A comma-separated column-list option (empty when absent). */
+  private def colsOf(opts: Map[String, String], key: String): Seq[String] =
+    opts.get(key).map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
+      .getOrElse(Nil)
+}
+
+object SnapshotSource {
+
+  /** The one manifest resolution every snapshot this surface serves
+    * comes from: the id `snapId` names (latest when <= 0) and its
+    * entries, schemas and delete lists, parsed from one file.
+    */
+  private[io] def manifest(spark: SparkSession, dir: String,
+                           snapId: Long): Layout.Manifest =
+    Layout.snapshotAt(Layout.tableFs(spark, dir), dir, snapId)._2
+
+  /** The rename-era guard of every by-name read: a HadoopFsRelation
+    * resolves parquet columns strictly by name, which is safe iff every
+    * served file's (field id, name) pairs are a SUBSET of the current
+    * schema's — widening appends qualify (old files null-fill the added
+    * columns), renames (same id, new name) and drops do not. Refuse
+    * loudly: Layout.snapshotRead resolves by field id, and
+    * compactSnapshot/optimizeClustered rewrite to current names.
+    */
+  private[io] def requireByNameSafe(dir: String, entries: Seq[FileEntry],
+                                    schemas: Seq[SchemaInfo]): Unit =
+    if (schemas.nonEmpty) {
+      def idNames(s: SchemaInfo) = s.fields.map(f => (f.id, f.name)).toSet
+      val cur = idNames(schemas.maxBy(_.id))
+      require(entries.forall(e => e.schemaId
+        .flatMap(id => schemas.find(_.id == id))
+        .forall(idNames(_).subsetOf(cur))),
         s"snapshot table at $dir has files written under renamed/dropped " +
           "column names; read via Layout.snapshotRead (field-id " +
-          "resolution) or heal with Layout.compactSnapshot, then re-register")
+          "resolution) or heal with Layout.compactSnapshot")
     }
-    // Schema from a BOUNDED file subset, mirroring snapshotRead: one
-    // file plain, one per data directory under mergeSchema (schema can
-    // only change between commits, and each commit writes one dir).
-    val schemaFiles =
-      (if (!mergeSchema) entries.take(1)
-       else entries.groupBy(e => e.path.take(e.path.lastIndexOf('/') max 0))
-         .values.map(_.head).toSeq)
-        .map(e => s"$dir/${e.path}")
-    require(schemaFiles.nonEmpty, s"empty snapshot under $dir")
-    val reader =
-      if (mergeSchema) spark.read.option("mergeSchema", "true")
-      else spark.read
-    val dataSchema = reader.parquet(schemaFiles: _*).schema
-    val index = new SnapshotFileIndex(spark, dir, entries, snapId)
+
+  /** Spark's own parquet relation over a [[SnapshotFileIndex]]: the
+    * manifest decides which files open, the vectorized reader (with
+    * its pushed filters and read schema) scans them.
+    */
+  private[io] def relation(spark: SparkSession, index: SnapshotFileIndex,
+                           dataSchema: StructType,
+                           options: Map[String, String]): HadoopFsRelation =
     HadoopFsRelation(
       location = index,
       partitionSchema = new StructType(),
       dataSchema = dataSchema,
       bucketSpec = None,
       fileFormat = new ParquetFileFormat,
-      options = opts)(spark)
-  }
-}
-
-object SnapshotSource {
+      options = options)(spark)
 
   /** Tiny already-materialized relation: metadata tables are
     * manifest-sized, so a plain TableScan over a local DataFrame's
@@ -310,7 +317,7 @@ object SnapshotSource {
     import spark.implicits._
     kind match {
       case "files" =>
-        Layout.snapshotFiles(spark, dir, snapId)
+        manifest(spark, dir, snapId).entries
           .map(e => (e.path, e.bytes, e.rows, e.schemaId,
             e.stats.map { case (c, s) => c -> s.min.orNull },
             e.stats.map { case (c, s) => c -> s.max.orNull }))
@@ -322,10 +329,9 @@ object SnapshotSource {
           .map(r => (r.name, r.refType, r.snapshotId))
           .toDF("name", "type", "snapshot_id")
       case "deletes" =>
-        Layout.snapshotDeletes(spark, dir, snapId)
-          .map { case (p, n) => (p, n, "position", Seq.empty[String]) }
-          .++(Layout.snapshotEqDeletes(spark, dir, snapId)
-            .map { case (p, n, cs) => (p, n, "equality", cs) })
+        val m = manifest(spark, dir, snapId)
+        (m.deletes.map(d => (d.path, d.rows, "position", Seq.empty[String])) ++
+          m.eqDeletes.map(d => (d.path, d.rows, "equality", d.cols)))
           .toDF("path", "rows", "kind", "cols")
       case other => throw new IllegalArgumentException(
         s"unknown metadata table '$other' — " +
@@ -409,13 +415,14 @@ class SnapshotFileIndex(spark: SparkSession, val tableDir: String,
     // registration refused MoR debt; a refresh must RE-CHECK it — a
     // Scala-side deleteWhereMoR/deleteKeysMoR commit after
     // registration would otherwise leak deleted rows into SQL reads
-    // and metadata-only counts through the refreshed listing
-    require(Layout.snapshotDeletes(spark, tableDir, -1L).isEmpty &&
-      Layout.snapshotEqDeletes(spark, tableDir, -1L).isEmpty,
+    // and metadata-only counts through the refreshed listing. One
+    // manifest: the check and the listing are the same snapshot.
+    val m = SnapshotSource.manifest(spark, tableDir, -1L)
+    require(m.deletes.isEmpty && m.eqDeletes.isEmpty,
       s"snapshot table at $tableDir acquired outstanding position/" +
         "equality deletes after registration — run " +
         "Layout.materializeDeletes and refresh again")
-    statuses = resolve(Layout.snapshotFiles(spark, tableDir, -1L))
+    statuses = resolve(m.entries)
   }
   override def inputFiles: Array[String] =
     statuses.map(_._2.getPath.toString).toArray
@@ -438,49 +445,147 @@ class SnapshotFileIndex(spark: SparkSession, val tableDir: String,
   }
 }
 
-/** Resolution rule (injected by [[graft.plans.GraftExtensions]]) that
-  * routes SQL `INSERT INTO / INSERT OVERWRITE` on a registered
-  * snapshot view through the manifest commit protocol. Without it,
-  * Spark's generic `InsertIntoHadoopFsRelationCommand` would drop raw
-  * parquet into the table ROOT — files no manifest references, i.e. a
-  * write that "succeeds" and then never appears in any read (and that
-  * the next vacuum reclaims as orphans). The rule rewrites the insert
-  * into [[SnapshotInsertCommand]] BEFORE the generic file-source path
-  * can claim it.
+
+/** The snapshot table under a registered view: a temp view resolves to
+  * SubqueryAlias(...(View(...(LogicalRelation)))) over a
+  * HadoopFsRelation whose location is a [[SnapshotFileIndex]]. The one
+  * walker the DML rule and the metadata-aggregate rule share.
   */
-case class SnapshotInsertRule(session: SparkSession)
-    extends Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+object SnapshotView {
   import org.apache.spark.sql.catalyst.plans.logical.{SubqueryAlias, View}
 
-  // a temp view resolves to SubqueryAlias(...(View(...(LogicalRelation))))
-  private def snapshotTarget(p: LogicalPlan)
-      : Option[(HadoopFsRelation, SnapshotFileIndex)] = p match {
-    case SubqueryAlias(_, child) => snapshotTarget(child)
-    case v: View => snapshotTarget(v.child)
-    case l: LogicalRelation => l.relation match {
-      case h: HadoopFsRelation if h.location.isInstanceOf[SnapshotFileIndex] =>
-        Some((h, h.location.asInstanceOf[SnapshotFileIndex]))
+  def unapply(p: LogicalPlan): Option[(HadoopFsRelation, SnapshotFileIndex)] =
+    p match {
+      case SubqueryAlias(_, child) => unapply(child)
+      case v: View => unapply(v.child)
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation => h.location match {
+          case i: SnapshotFileIndex => Some((h, i))
+          case _ => None
+        }
+        case _ => None
+      }
       case _ => None
     }
-    case _ => None
-  }
+}
+
+/** Resolution rule (injected by [[graft.plans.GraftExtensions]]) that
+  * routes SQL DML on a registered snapshot view through the manifest
+  * commit protocol:
+  *
+  *  - `INSERT INTO / INSERT OVERWRITE` → [[SnapshotInsertCommand]].
+  *    Without it, Spark's generic `InsertIntoHadoopFsRelationCommand`
+  *    would drop raw parquet into the table ROOT — files no manifest
+  *    references, i.e. a write that "succeeds" and then never appears
+  *    in any read (and that the next vacuum reclaims as orphans);
+  *  - `DELETE FROM … WHERE …` → [[SnapshotDeleteCommand]] (without it
+  *    Spark rejects DELETE on a DSv1 relation outright);
+  *  - `UPDATE … SET … WHERE …` → [[SnapshotUpdateCommand]], the same
+  *    targeted rewrite with assignments;
+  *  - `MERGE INTO … USING … ON … WHEN MATCHED … WHEN NOT MATCHED …` →
+  *    [[SnapshotMergeCommand]], the CDC-apply idiom: matched source
+  *    rows replace the target row (UPDATE SET *), optionally delete
+  *    under a condition, and unmatched source rows insert (INSERT *).
+  *    The ON condition must be a conjunction of same-name
+  *    target=source column equalities (the key set [[Layout.mergeInto]]
+  *    joins and prunes by); richer clause shapes refuse loudly rather
+  *    than silently diverging from SQL MERGE semantics.
+  */
+case class SnapshotDmlRule(session: SparkSession)
+    extends Rule[LogicalPlan] {
+  import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Literal}
+  import org.apache.spark.sql.catalyst.plans.logical._
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.resolveOperators {
-      case i @ InsertIntoStatement(table, partSpec, userCols, query,
-          overwrite, _, byName)
-          if query.resolved && !table.isInstanceOf[UnresolvedRelation] =>
-        snapshotTarget(table) match {
-          case Some((rel, index)) =>
-            require(partSpec.isEmpty && userCols.isEmpty,
-              "snapshot INSERT supports neither PARTITION specs nor " +
-                "explicit column lists")
-            SnapshotInsertCommand(index, rel.schema, query, overwrite,
-              byName)
-          case None => i
+      case InsertIntoStatement(SnapshotView(rel, index), partSpec, userCols,
+          query, overwrite, _, byName) if query.resolved =>
+        require(partSpec.isEmpty && userCols.isEmpty,
+          "snapshot INSERT supports neither PARTITION specs nor " +
+            "explicit column lists")
+        SnapshotInsertCommand(index, rel.schema, query, overwrite, byName)
+      case DeleteFromTable(SnapshotView(_, index), condition)
+          if condition.resolved =>
+        SnapshotDeleteCommand(index, condition)
+      case UpdateTable(SnapshotView(_, index), assignments, condition)
+          if assignments.forall(a => a.key.resolved && a.value.resolved) &&
+            condition.forall(_.resolved) =>
+        val pairs = assignments.map { a =>
+          a.key match {
+            case attr: AttributeReference => (attr.name, a.value)
+            case other => throw new IllegalArgumentException(
+              s"snapshot UPDATE supports top-level columns only, got $other")
+          }
+        }
+        SnapshotUpdateCommand(index, pairs,
+          condition.getOrElse(Literal.TrueLiteral))
+      case m: MergeIntoTable
+          if m.targetTable.resolved && m.sourceTable.resolved &&
+            m.mergeCondition.resolved =>
+        m.targetTable match {
+          case SnapshotView(_, index) => merge(m, index)
+          case _ => m
         }
     }
+
+  private def conjuncts(e: Expression): Seq[Expression] = e match {
+    case And(l, r) => conjuncts(l) ++ conjuncts(r)
+    case other => Seq(other)
+  }
+
+  private def merge(m: MergeIntoTable,
+                    index: SnapshotFileIndex): SnapshotMergeCommand = {
+    require(m.notMatchedBySourceActions.isEmpty,
+      "snapshot MERGE carries not-matched-by-source rows " +
+        "unchanged; WHEN NOT MATCHED BY SOURCE is unsupported")
+    // ON: same-name target=source equalities → the key columns
+    val tOut = m.targetTable.outputSet
+    val sOut = m.sourceTable.outputSet
+    val keys = conjuncts(m.mergeCondition).map {
+      case EqualTo(a: AttributeReference, b: AttributeReference)
+          if tOut.contains(a) && sOut.contains(b) && a.name == b.name => a.name
+      case EqualTo(a: AttributeReference, b: AttributeReference)
+          if sOut.contains(a) && tOut.contains(b) && a.name == b.name => a.name
+      case other => throw new IllegalArgumentException(
+        "snapshot MERGE ON must be a conjunction of same-name " +
+          s"target=source column equalities, got $other")
+    }
+    // WHEN MATCHED: UPDATE SET * (replace), optional conditional
+    // DELETE; nothing else
+    var deleteWhen: Option[Expression] = None
+    var sawUpdate = false
+    m.matchedActions.foreach {
+      case UpdateStarAction(None) => sawUpdate = true
+      case UpdateAction(None, assigns, _)
+          if assigns.forall {
+            case Assignment(k: AttributeReference, v: AttributeReference) =>
+              k.name == v.name && tOut.contains(k) && sOut.contains(v)
+            case _ => false
+          } => sawUpdate = true // analyzer-expanded SET *
+      case DeleteAction(c) =>
+        deleteWhen = Some(c.getOrElse(Literal.TrueLiteral))
+      case other => throw new IllegalArgumentException(
+        "snapshot MERGE supports WHEN MATCHED THEN UPDATE SET * " +
+          s"and WHEN MATCHED [AND c] THEN DELETE, got $other")
+    }
+    // WHEN NOT MATCHED: INSERT * (Layout.mergeInto always inserts
+    // unmatched source rows)
+    val insertOk = m.notMatchedActions match {
+      case Seq(InsertStarAction(None)) => true
+      case Seq(InsertAction(None, assigns))
+          if assigns.forall {
+            case Assignment(k: AttributeReference, v: AttributeReference) =>
+              k.name == v.name
+            case _ => false
+          } => true
+      case _ => false
+    }
+    require(insertOk,
+      "snapshot MERGE requires WHEN NOT MATCHED THEN INSERT *")
+    require(sawUpdate || deleteWhen.isDefined,
+      "snapshot MERGE needs a WHEN MATCHED clause")
+    SnapshotMergeCommand(index, m.sourceTable, keys, deleteWhen)
+  }
 }
 
 /** The per-batch sink behind `writeStream.format("snapshot")`:
@@ -490,295 +595,86 @@ case class SnapshotInsertRule(session: SparkSession)
 class SnapshotStreamSink(dir: String, statsCols: Seq[String],
                          lineage: String)
     extends org.apache.spark.sql.execution.streaming.Sink {
-  override def addBatch(batchId: Long,
-                        data: org.apache.spark.sql.DataFrame): Unit = {
-    val spark = data.sparkSession
-    val fs = new Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(dir, s"_batch-$lineage-$batchId")
-    if (!fs.exists(marker)) {
+  override def addBatch(batchId: Long, data: DataFrame): Unit =
+    graft.streaming.TableStreams.commitOnce(data.sparkSession, dir,
+      lineage, batchId) {
       Layout.snapshotAppend(Bridge.fromBatch(data), dir, statsCols)
-      fs.create(marker, true).close()
     }
-  }
 }
 
-/** Resolution rule routing SQL `DELETE FROM <snapshot view> WHERE …`
-  * through [[Layout.deleteWhereMoR]] — without it Spark rejects DELETE
-  * on a DSv1 relation outright ("only supported with v2 tables").
-  * The condition prunes candidate files through the manifest StatPred
-  * tier and marks surviving rows into a position-delete commit: the
-  * cheapest correct delete at any scale (an index write, not a
-  * rewrite). Injected by [[graft.plans.GraftExtensions]].
+/** The rewriting DML commands' shared shape: the view-bound condition
+  * and values re-resolve BY NAME (the rewrite scans fresh relations,
+  * not the view's exprIds), the commit refreshes the view's index so
+  * the next query over the SAME view sees it, and the one output row
+  * is the files-rewritten count.
   */
-case class SnapshotDeleteRule(session: SparkSession)
-    extends Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, SubqueryAlias, View}
+sealed trait SnapshotRewriteCommand extends LeafRunnableCommand {
+  def index: SnapshotFileIndex
 
-  private def target(p: LogicalPlan): Option[SnapshotFileIndex] = p match {
-    case SubqueryAlias(_, child) => target(child)
-    case v: View => target(v.child)
-    case l: LogicalRelation => l.relation match {
-      case h: HadoopFsRelation => h.location match {
-        case i: SnapshotFileIndex => Some(i)
-        case _ => None
-      }
-      case _ => None
-    }
-    case _ => None
+  /** Commit the rewrite; returns the files-rewritten count. */
+  protected def rewrite(session: SparkSession): Int
+
+  protected def unbind(e: Expression): Column = Bridge.column(e.transform {
+    case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
+  })
+
+  override def run(session: SparkSession): Seq[Row] = {
+    val rewritten = rewrite(session)
+    index.refresh()
+    Seq(Row(rewritten.toLong))
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.resolveOperators {
-      case d @ DeleteFromTable(table, condition) if condition.resolved =>
-        target(table) match {
-          case Some(index) => SnapshotDeleteCommand(index, condition)
-          case None => d
-        }
-    }
+  override val output: Seq[Attribute] =
+    Seq(AttributeReference("files_rewritten", LongType, nullable = false)())
 }
 
-/** The DELETE command: compiles the resolved condition back to a
-  * Column and runs the COPY-ON-WRITE [[Layout.deleteWhere]] — only
-  * stat-surviving files rewrite, every other file is reused verbatim.
-  * CoW (not merge-on-read) because the registered view's FileIndex
-  * tier is file-granular: it could not subtract row-level position
-  * deletes, and a DELETE whose effects the same view cannot see would
-  * be a silent lie. The Scala `deleteWhereMoR` stays the
-  * rewrite-free scale lever for pipelines that read through
-  * `snapshotRead`. Refreshes the view's index so the next query over
-  * the SAME view sees the commit. Returns the files-rewritten count.
+/** The DELETE command: compiles the resolved condition into the
+  * StatPred pruning tier (the RESOLVED-expression walker — the Column
+  * walker cannot see through an expression-wrapped Column) and runs the
+  * COPY-ON-WRITE [[Layout.deleteWhere]] — only stat-surviving files
+  * rewrite, every other file is reused verbatim. CoW (not
+  * merge-on-read) because the registered view's FileIndex tier is
+  * file-granular: it could not subtract row-level position deletes,
+  * and a DELETE whose effects the same view cannot see would be a
+  * silent lie. The Scala `deleteWhereMoR` stays the rewrite-free scale
+  * lever for pipelines that read through `snapshotRead`.
   */
 case class SnapshotDeleteCommand(index: SnapshotFileIndex,
                                  condition: Expression)
-    extends org.apache.spark.sql.execution.command.LeafRunnableCommand {
-  override def run(session: SparkSession)
-      : Seq[org.apache.spark.sql.Row] = {
-    // the condition's attributes are bound to the VIEW's exprIds;
-    // the rewrite scans fresh relations, so re-resolve by NAME
-    val unbound = condition.transform {
-      case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
-        org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-          .quoted(a.name)
-    }
-    // prune via the RESOLVED-expression walker (the Column walker
-    // cannot see through an expression-wrapped Column)
-    val pred = Layout.fromPredNode(Bridge.predicateTree(condition))
-    val (_, rewritten) = Layout.deleteWhereCompiled(session,
-      index.tableDir, pred, Bridge.column(unbound))
-    index.refresh()
-    Seq(org.apache.spark.sql.Row(rewritten.toLong))
-  }
-  override val output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute] =
-    Seq(org.apache.spark.sql.catalyst.expressions.AttributeReference(
-      "files_rewritten", org.apache.spark.sql.types.LongType,
-      nullable = false)())
+    extends SnapshotRewriteCommand {
+  override protected def rewrite(session: SparkSession): Int =
+    Layout.deleteWhereCompiled(session, index.tableDir,
+      Layout.fromPredNode(Bridge.predicateTree(condition)),
+      unbind(condition))._2
 }
 
-/** Resolution rule routing SQL `UPDATE <snapshot view> SET … WHERE …`
-  * through [[Layout.updateWhere]] — the third leg of the DML surface
-  * (INSERT appends via the manifest, DELETE prunes a copy-on-write
-  * rewrite, UPDATE is the same targeted rewrite with assignments).
-  * Injected by [[graft.plans.GraftExtensions]].
-  */
-case class SnapshotUpdateRule(session: SparkSession)
-    extends Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.plans.logical.{SubqueryAlias, UpdateTable, View}
-
-  private def target(p: LogicalPlan): Option[SnapshotFileIndex] = p match {
-    case SubqueryAlias(_, child) => target(child)
-    case v: View => target(v.child)
-    case l: LogicalRelation => l.relation match {
-      case h: HadoopFsRelation => h.location match {
-        case i: SnapshotFileIndex => Some(i)
-        case _ => None
-      }
-      case _ => None
-    }
-    case _ => None
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.resolveOperators {
-      case u @ UpdateTable(table, assignments, condition)
-          if assignments.forall(a => a.key.resolved && a.value.resolved) &&
-            condition.forall(_.resolved) =>
-        target(table) match {
-          case Some(index) =>
-            val pairs = assignments.map { a =>
-              a.key match {
-                case attr: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
-                  (attr.name, a.value)
-                case other => throw new IllegalArgumentException(
-                  s"snapshot UPDATE supports top-level columns only, got $other")
-              }
-            }
-            SnapshotUpdateCommand(index, pairs,
-              condition.getOrElse(
-                org.apache.spark.sql.catalyst.expressions.Literal.TrueLiteral))
-          case None => u
-        }
-    }
-}
-
-/** The targeted-rewrite UPDATE command: re-resolves the view-bound
-  * attributes by name (same as DELETE), compiles the condition into
-  * the StatPred pruning tier, and commits through
-  * [[Layout.updateWhere]]. Returns the files-rewritten count.
+/** The targeted-rewrite UPDATE command: compiles the condition into
+  * the StatPred pruning tier and commits through [[Layout.updateWhere]].
   */
 case class SnapshotUpdateCommand(index: SnapshotFileIndex,
                                  assignments: Seq[(String, Expression)],
                                  condition: Expression)
-    extends org.apache.spark.sql.execution.command.LeafRunnableCommand {
-  private def unbind(e: Expression): Expression = e.transform {
-    case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
-      org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-        .quoted(a.name)
-  }
-
-  override def run(session: SparkSession)
-      : Seq[org.apache.spark.sql.Row] = {
-    val pred = Layout.fromPredNode(Bridge.predicateTree(condition))
-    val (_, rewritten) = Layout.updateWhereCompiled(session,
-      index.tableDir, pred, Bridge.column(unbind(condition)),
-      assignments.map { case (n, v) => (n, Bridge.column(unbind(v))) })
-    index.refresh()
-    Seq(org.apache.spark.sql.Row(rewritten.toLong))
-  }
-  override val output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute] =
-    Seq(org.apache.spark.sql.catalyst.expressions.AttributeReference(
-      "files_rewritten", org.apache.spark.sql.types.LongType,
-      nullable = false)())
-}
-
-/** Resolution rule routing SQL `MERGE INTO <snapshot view> USING … ON
-  * … WHEN MATCHED … WHEN NOT MATCHED …` through [[Layout.mergeInto]] —
-  * the CDC-apply idiom: matched source rows replace the target row
-  * (UPDATE SET *), optionally delete under a condition, and unmatched
-  * source rows insert (INSERT *). The ON condition must be a
-  * conjunction of same-name target=source column equalities (the key
-  * set [[Layout.mergeInto]] joins and prunes by); richer clause
-  * shapes refuse loudly rather than silently diverging from SQL MERGE
-  * semantics. Injected by [[graft.plans.GraftExtensions]].
-  */
-case class SnapshotMergeRule(session: SparkSession)
-    extends Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, Literal}
-  import org.apache.spark.sql.catalyst.plans.logical._
-
-  private def target(p: LogicalPlan): Option[SnapshotFileIndex] = p match {
-    case SubqueryAlias(_, child) => target(child)
-    case v: View => target(v.child)
-    case l: LogicalRelation => l.relation match {
-      case h: HadoopFsRelation => h.location match {
-        case i: SnapshotFileIndex => Some(i)
-        case _ => None
-      }
-      case _ => None
-    }
-    case _ => None
-  }
-
-  private def conjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => conjuncts(l) ++ conjuncts(r)
-    case other => Seq(other)
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.resolveOperators {
-      case m: MergeIntoTable
-          if m.targetTable.resolved && m.sourceTable.resolved &&
-            m.mergeCondition.resolved =>
-        target(m.targetTable) match {
-          case Some(index) =>
-            require(m.notMatchedBySourceActions.isEmpty,
-              "snapshot MERGE carries not-matched-by-source rows " +
-                "unchanged; WHEN NOT MATCHED BY SOURCE is unsupported")
-            // ON: same-name target=source equalities → the key columns
-            val tOut = m.targetTable.outputSet
-            val sOut = m.sourceTable.outputSet
-            val keys = conjuncts(m.mergeCondition).map {
-              case EqualTo(a: AttributeReference, b: AttributeReference)
-                  if tOut.contains(a) && sOut.contains(b) &&
-                    a.name == b.name => a.name
-              case EqualTo(a: AttributeReference, b: AttributeReference)
-                  if sOut.contains(a) && tOut.contains(b) &&
-                    a.name == b.name => a.name
-              case other => throw new IllegalArgumentException(
-                "snapshot MERGE ON must be a conjunction of same-name " +
-                  s"target=source column equalities, got $other")
-            }
-            // WHEN MATCHED: UPDATE SET * (replace), optional
-            // conditional DELETE; nothing else
-            var deleteWhen: Option[Expression] = None
-            var sawUpdate = false
-            m.matchedActions.foreach {
-              case UpdateStarAction(None) => sawUpdate = true
-              case UpdateAction(None, assigns, _)
-                  if assigns.forall {
-                    case Assignment(k: AttributeReference,
-                                    v: AttributeReference) =>
-                      k.name == v.name && tOut.contains(k) &&
-                        sOut.contains(v)
-                    case _ => false
-                  } => sawUpdate = true // analyzer-expanded SET *
-              case DeleteAction(c) =>
-                deleteWhen = Some(c.getOrElse(Literal.TrueLiteral))
-              case other => throw new IllegalArgumentException(
-                "snapshot MERGE supports WHEN MATCHED THEN UPDATE SET * " +
-                  s"and WHEN MATCHED [AND c] THEN DELETE, got $other")
-            }
-            // WHEN NOT MATCHED: INSERT * (Layout.mergeInto always
-            // inserts unmatched source rows)
-            val insertOk = m.notMatchedActions match {
-              case Seq(InsertStarAction(None)) => true
-              case Seq(InsertAction(None, assigns))
-                  if assigns.forall {
-                    case Assignment(k: AttributeReference,
-                                    v: AttributeReference) =>
-                      k.name == v.name
-                    case _ => false
-                  } => true
-              case _ => false
-            }
-            require(insertOk,
-              "snapshot MERGE requires WHEN NOT MATCHED THEN INSERT *")
-            require(sawUpdate || deleteWhen.isDefined,
-              "snapshot MERGE needs a WHEN MATCHED clause")
-            SnapshotMergeCommand(index, m.sourceTable, keys, deleteWhen)
-          case None => m
-        }
-    }
+    extends SnapshotRewriteCommand {
+  override protected def rewrite(session: SparkSession): Int =
+    Layout.updateWhereCompiled(session, index.tableDir,
+      Layout.fromPredNode(Bridge.predicateTree(condition)), unbind(condition),
+      assignments.map { case (n, v) => (n, unbind(v)) })._2
 }
 
 /** The MERGE command: pins nothing itself — [[Layout.mergeInto]] does
   * the source pinning, stats-box file pruning, and single-shuffle
   * rewrite. The delete condition re-resolves by name against the
-  * source frame. Returns the files-rewritten count.
+  * source frame.
   */
 case class SnapshotMergeCommand(index: SnapshotFileIndex,
                                 source: LogicalPlan, keyCols: Seq[String],
                                 deleteWhen: Option[Expression])
-    extends org.apache.spark.sql.execution.command.LeafRunnableCommand {
+    extends SnapshotRewriteCommand {
   override def innerChildren: Seq[LogicalPlan] = Seq(source)
 
-  override def run(session: SparkSession)
-      : Seq[org.apache.spark.sql.Row] = {
-    val src = Bridge.ofRows(session, source)
-    val del = deleteWhen.map(c => Bridge.column(c.transform {
-      case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
-        org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-          .quoted(a.name)
-    }))
-    val (_, rewritten) = Layout.mergeInto(session, index.tableDir, src,
-      keyCols, del)
-    index.refresh()
-    Seq(org.apache.spark.sql.Row(rewritten.toLong))
-  }
-  override val output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute] =
-    Seq(org.apache.spark.sql.catalyst.expressions.AttributeReference(
-      "files_rewritten", org.apache.spark.sql.types.LongType,
-      nullable = false)())
+  override protected def rewrite(session: SparkSession): Int =
+    Layout.mergeInto(session, index.tableDir, Bridge.ofRows(session, source),
+      keyCols, deleteWhen.map(unbind))._2
 }
 
 /** The manifest-committed INSERT: aligns the query to the table schema
@@ -790,11 +686,10 @@ case class SnapshotInsertCommand(index: SnapshotFileIndex,
                                  tableSchema: StructType,
                                  query: LogicalPlan, overwrite: Boolean,
                                  byName: Boolean)
-    extends org.apache.spark.sql.execution.command.LeafRunnableCommand {
+    extends LeafRunnableCommand {
   override def innerChildren: Seq[LogicalPlan] = Seq(query)
 
-  override def run(session: SparkSession)
-      : Seq[org.apache.spark.sql.Row] = {
+  override def run(session: SparkSession): Seq[Row] = {
     val src: DataFrame = Bridge.ofRows(session, query)
     require(src.schema.length == tableSchema.length || byName,
       s"INSERT arity ${src.schema.length} != table ${tableSchema.length}")

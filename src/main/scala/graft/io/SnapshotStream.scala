@@ -1,10 +1,8 @@
 package graft.io
 
 import graft.operators.Layout
-import graft.operators.Layout.FileEntry
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.graft.Bridge
@@ -47,8 +45,9 @@ import org.apache.spark.sql.types.StructType
   * `maxSnapshotsPerTrigger` (admission control: at most N commits per
   * micro-batch — the initial scan counts as one batch regardless).
   *
-  * Scale shape: each poll is one directory listing + one manifest read
-  * per new commit (metadata-bounded, no data I/O); each batch opens
+  * Scale shape: each poll is one directory listing; each batch reads
+  * one manifest per delivered commit plus the range's base (metadata-
+  * bounded, no data I/O); each batch opens
   * exactly the files the delivered commits added. The batch plan is a
   * pinned-file HadoopFsRelation inside Spark's vectorized parquet
   * scan, so pushed filters/column pruning in the streaming query still
@@ -137,64 +136,63 @@ class SnapshotStreamSource(spark: SparkSession, dir: String,
     lastSeen = math.max(lastSeen, math.max(startId, endId))
     if (startId >= 0 && endId <= startId)
       return Bridge.emptyStreaming(spark, fixedSchema)
-    require(Layout.snapshotEqDeletes(spark, dir, endId).isEmpty,
+    // ONE manifest of the end snapshot serves the debt checks, the
+    // initial scan's listing and the rename guard's schemas
+    val m = SnapshotSource.manifest(spark, dir, endId)
+    require(m.eqDeletes.isEmpty,
       s"snapshot table at $dir carries outstanding equality tombstones " +
         "— they mask rows at view time, which an insert-only stream " +
         "cannot honor. Settle with Layout.materializeDeletes first.")
     val entries =
       if (startId < 0) { // initial scan: full content of snapshot endId
-        require(Layout.snapshotDeletes(spark, dir, endId).isEmpty,
+        require(m.deletes.isEmpty,
           s"snapshot table at $dir has outstanding position deletes; " +
             "the streaming initial scan serves pinned manifest files " +
             "and cannot apply them — settle with " +
             "Layout.materializeDeletes, then start the stream")
-        Layout.snapshotFiles(spark, dir, endId)
+        m.entries
       } else {
-        val ids = Layout.snapshotIds(spark, dir)
+        // one manifest per delivered commit: each append's added files
+        // are its entries minus the previous commit's paths (the range's
+        // base is read only if the first append needs it)
+        lazy val basePaths =
+          if (startId > 0) paths(SnapshotSource.manifest(spark, dir, startId))
+          else Set.empty[String]
+        var prev: Option[Layout.Manifest] = None
+        Layout.snapshotIds(spark, dir)
           .filter(id => id > startId && id <= endId)
-        var prev = startId
-        val out = Seq.newBuilder[FileEntry]
-        ids.foreach { sid =>
-          Layout.snapshotOp(spark, dir, sid) match {
-            case Some("append") => out ++= added(sid, prev)
-            case Some("replace") | Some("evolve") => // no logical change
-            case other =>
-              require(skipChangeCommits,
-                s"snapshot $sid at $dir is a row-changing commit " +
-                  s"(op=${other.getOrElse("unknown")}); an insert-only " +
-                  "stream would miss its deletes/updates. Consume " +
-                  "row-level changes via Layout.changeFeed, or skip " +
-                  "such commits with .option(\"skipChangeCommits\", true)")
+          .flatMap { sid =>
+            val cur = if (sid == endId) m
+              else SnapshotSource.manifest(spark, dir, sid)
+            val added = cur.op match {
+              case Some("append") =>
+                val before = prev.fold(basePaths)(paths)
+                cur.entries.filterNot(e => before.contains(e.path))
+              case Some("replace") | Some("evolve") => Nil // no logical change
+              case other =>
+                require(skipChangeCommits,
+                  s"snapshot $sid at $dir is a row-changing commit " +
+                    s"(op=${other.getOrElse("unknown")}); an insert-only " +
+                    "stream would miss its deletes/updates. Consume " +
+                    "row-level changes via Layout.changeFeed, or skip " +
+                    "such commits with .option(\"skipChangeCommits\", true)")
+                Nil
+            }
+            prev = Some(cur)
+            added
           }
-          prev = sid
-        }
-        out.result()
       }
-    SnapshotStream.requireByNameSafe(spark, dir, endId, entries)
+    SnapshotSource.requireByNameSafe(dir, entries, m.schemas)
     if (entries.isEmpty) Bridge.emptyStreaming(spark, fixedSchema)
-    else {
-      val index = new SnapshotFileIndex(spark, dir, entries, endId)
-      val rel = HadoopFsRelation(
-        location = index,
-        partitionSchema = new StructType(),
-        dataSchema = fixedSchema,
-        bucketSpec = None,
-        fileFormat = new ParquetFileFormat,
-        options = Map.empty)(spark)
-      Bridge.ofRows(spark, LogicalRelation(rel, isStreaming = true))
-    }
+    else Bridge.ofRows(spark, LogicalRelation(
+      SnapshotSource.relation(spark,
+        new SnapshotFileIndex(spark, dir, entries, endId), fixedSchema,
+        Map.empty),
+      isStreaming = true))
   }
 
-  /** Files snapshot `sid` lists that snapshot `prevId` does not. */
-  private def added(sid: Long, prevId: Long): Seq[FileEntry] = {
-    val cur = Layout.snapshotFiles(spark, dir, sid)
-    if (prevId <= 0) cur
-    else {
-      val prevPaths = Layout.snapshotFiles(spark, dir, prevId)
-        .map(_.path).toSet
-      cur.filterNot(e => prevPaths.contains(e.path))
-    }
-  }
+  private def paths(m: Layout.Manifest): Set[String] =
+    m.entries.map(_.path).toSet
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -206,33 +204,7 @@ object SnapshotStream {
     * bounded read (one manifest + one parquet footer, mirroring
     * snapshotRead's derivation; never a full-directory listing).
     */
-  def tableSchema(spark: SparkSession, dir: String): StructType = {
-    val entries = Layout.snapshotFiles(spark, dir, -1L)
-    require(entries.nonEmpty,
-      s"cannot derive a stream schema from an empty snapshot table at $dir")
-    spark.read.parquet(s"$dir/${entries.head.path}").schema
-  }
-
-  /** Same rename-era guard as the batch SQL surface: by-name parquet
-    * reads are safe iff every delivered file's recorded (field id,
-    * name) pairs are a subset of the current schema's — widening
-    * appends pass (missing columns null-fill), renames and drops
-    * refuse (heal with compactSnapshot, or read via snapshotRead's
-    * field-id resolution).
-    */
-  private[io] def requireByNameSafe(spark: SparkSession, dir: String,
-                                    snapId: Long,
-                                    entries: Seq[FileEntry]): Unit = {
-    val schemas = Layout.snapshotSchemas(spark, dir, snapId)
-    schemas.lastOption.foreach { cur =>
-      val curSet = cur.fields.map(f => (f.id, f.name)).toSet
-      val byNameSafe = entries.forall(e =>
-        e.schemaId.forall(id => schemas.find(_.id == id)
-          .forall(_.fields.map(f => (f.id, f.name)).toSet.subsetOf(curSet))))
-      require(byNameSafe,
-        s"snapshot table at $dir serves files written under renamed/" +
-          "dropped column names; heal with Layout.compactSnapshot or " +
-          "read via Layout.snapshotRead (field-id resolution)")
-    }
-  }
+  def tableSchema(spark: SparkSession, dir: String): StructType =
+    Layout.footerSchema(spark, dir,
+      SnapshotSource.manifest(spark, dir, -1L).entries, mergeSchema = false)
 }

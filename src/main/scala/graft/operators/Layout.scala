@@ -211,13 +211,6 @@ object Layout {
     case _ => 0
   }
 
-  /** Timestamp/date predicate values normalize to epoch micros/days
-    * before comparison: Spark's cast-to-string stat rendering trims
-    * trailing fractional zeros ("2024-01-01 00:00:00") while
-    * java.sql.Timestamp.toString always appends ".0" and Instant uses
-    * the ISO 'T'/'Z' form — a raw string compare would mis-prune files
-    * that contain matching rows.
-    */
   /** The zone stat STRINGS were rendered in: Spark's cast-to-string
     * uses spark.sql.session.timeZone, NOT the JVM default — parsing
     * them back through Timestamp.valueOf (JVM zone) would shift every
@@ -231,6 +224,13 @@ object Layout {
       .map(java.time.ZoneId.of(_))
       .getOrElse(java.time.ZoneId.systemDefault())
 
+  /** Timestamp/date predicate values normalize to epoch micros/days
+    * before comparison: Spark's cast-to-string stat rendering trims
+    * trailing fractional zeros ("2024-01-01 00:00:00") while
+    * java.sql.Timestamp.toString always appends ".0" and Instant uses
+    * the ISO 'T'/'Z' form — a raw string compare would mis-prune files
+    * that contain matching rows.
+    */
   private def toMicros(v: Any): Long = v match {
     case t: java.sql.Timestamp => t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
     case i: java.time.Instant => i.getEpochSecond * 1000000L + i.getNano / 1000L
@@ -2215,6 +2215,49 @@ object Layout {
           _.fields.map(f => (f.id, f.name)).toSet == curSet))
     }
 
+  /** Schema-correct EMPTY result for a fully-pruned snapshot read.
+    * With a recorded schema history the result schema is synthesized
+    * from the manifest's CURRENT schema — zero data files opened, and
+    * the empty result carries every widened column no matter which
+    * files a predicate pruned. Only legacy tables (predating schema
+    * recording) still pay the bounded [[footerSchema]] read.
+    */
+  private def emptyLike(spark: org.apache.spark.sql.SparkSession,
+                        dir: String, all: Seq[FileEntry],
+                        schemas: Seq[SchemaInfo],
+                        mergeSchema: Boolean): DataFrame = {
+    val struct = currentSchemaOf(schemas) match {
+      case Some(cur) =>
+        org.apache.spark.sql.types.StructType(
+          cur.fields.map(f => org.apache.spark.sql.types.StructField(
+            f.name, org.apache.spark.sql.types.DataType.fromDDL(f.tpe))))
+      case None => footerSchema(spark, dir, all, mergeSchema)
+    }
+    spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], struct)
+  }
+
+  /** The data schema of `entries` from a BOUNDED footer read: one file
+    * plainly, one per data directory under `mergeSchema` (schema
+    * changes only between commits and each commit writes one
+    * directory, so one representative per directory covers the union —
+    * first-file-only would pin the schema to the OLDEST file).
+    */
+  private[graft] def footerSchema(spark: org.apache.spark.sql.SparkSession,
+                                  dir: String, entries: Seq[FileEntry],
+                                  mergeSchema: Boolean)
+      : org.apache.spark.sql.types.StructType = {
+    require(entries.nonEmpty, s"empty snapshot under $dir")
+    val subset =
+      if (!mergeSchema) entries.take(1)
+      else entries.groupBy(e => e.path.take(e.path.lastIndexOf('/') max 0))
+        .values.map(_.head).toSeq
+    val reader =
+      if (mergeSchema) spark.read.option("mergeSchema", "true")
+      else spark.read
+    reader.parquet(subset.map(e => s"$dir/${e.path}"): _*).schema
+  }
+
   /** Read `kept` resolving columns BY FIELD ID to the current schema:
     * files group by the schema they were written under (one group per
     * schema id — bounded by the table's evolution history, never by
@@ -2223,40 +2266,6 @@ object Layout {
     * projected away, and the groups union. On a uniform table this is
     * the single plain read.
     */
-  /** Schema-correct EMPTY result for a fully-pruned snapshot read.
-    * With a recorded schema history the result schema is synthesized
-    * from the manifest's CURRENT schema — zero data files opened, and
-    * the empty result carries every widened column no matter which
-    * files a predicate pruned. Only legacy tables (predating schema
-    * recording) still pay a bounded footer read: one file plainly, one
-    * per data directory under mergeSchema (schema changes only between
-    * commits, so one representative per snap-dir covers the union —
-    * first-file-only would pin the result to the OLDEST schema and
-    * make the schema vary with the predicate).
-    */
-  private def emptyLike(spark: org.apache.spark.sql.SparkSession,
-                        dir: String, all: Seq[FileEntry],
-                        schemas: Seq[SchemaInfo],
-                        mergeSchema: Boolean): DataFrame =
-    currentSchemaOf(schemas) match {
-      case Some(cur) =>
-        val struct = org.apache.spark.sql.types.StructType(
-          cur.fields.map(f => org.apache.spark.sql.types.StructField(
-            f.name, org.apache.spark.sql.types.DataType.fromDDL(f.tpe))))
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], struct)
-      case None =>
-        val subset =
-          if (!mergeSchema) all.take(1)
-          else all.groupBy(e => e.path.take(e.path.lastIndexOf('/') max 0))
-            .values.map(_.head).toSeq
-        val reader =
-          if (mergeSchema) spark.read.option("mergeSchema", "true")
-          else spark.read
-        reader.parquet(subset.map(e => s"$dir/${e.path}"): _*)
-          .filter(lit(false))
-    }
-
   private def evolvedRead(spark: org.apache.spark.sql.SparkSession,
                           dir: String, kept: Seq[FileEntry],
                           schemas: Seq[SchemaInfo],
@@ -2379,15 +2388,6 @@ object Layout {
                   dir: String): Boolean =
     listSnapshotIds(tableFs(spark, dir), dir).nonEmpty
 
-  /** Manifest serialization. v1 (no stats): a bare JSON array of
-    * relative paths — the format pre-stats tables on disk already use.
-    * v2 (any stats): {"format":2,"files":[{"path":…,"stats":{col:
-    * {"min":…,"max":…,"type":…}}}]}. Committed write-then-rename
-    * either way, so the manifest appears atomically or not at all;
-    * the rename is guarded by a create-exclusive `.commit-<id>.lock`
-    * token, so two writers racing the same snapshot id resolve to
-    * exactly one committed manifest and one loud loser.
-    */
   /** Serialized manifest body — shared by committed manifests and
     * write-audit-publish staging files.
     */
@@ -2454,6 +2454,15 @@ object Layout {
   private def attemptDir(prefix: String, snapId: Long): String =
     s"$prefix-$snapId-${java.util.UUID.randomUUID().toString.take(8)}"
 
+  /** Manifest serialization. v1 (no stats): a bare JSON array of
+    * relative paths — the format pre-stats tables on disk already use.
+    * v2 (any stats): {"format":2,"files":[{"path":…,"stats":{col:
+    * {"min":…,"max":…,"type":…}}}]}. Committed write-then-rename
+    * either way, so the manifest appears atomically or not at all;
+    * the rename is guarded by a create-exclusive `.commit-<id>.lock`
+    * token, so two writers racing the same snapshot id resolve to
+    * exactly one committed manifest and one loud loser.
+    */
   private[graft] def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
                             dir: String, snapId: Long,
                             entries: Seq[FileEntry],
@@ -2522,7 +2531,7 @@ object Layout {
     * history, the outstanding position and equality deletes, and the
     * commit kind (None on manifests written before ops were recorded).
     */
-  private final case class Manifest(entries: Seq[FileEntry],
+  private[graft] final case class Manifest(entries: Seq[FileEntry],
                                     schemas: Seq[SchemaInfo] = Nil,
                                     deletes: Seq[DeleteFile] = Nil,
                                     eqDeletes: Seq[EqDeleteFile] = Nil,
@@ -2619,8 +2628,8 @@ object Layout {
                          snap: Long): Manifest =
     readManifest(fs, new org.apache.hadoop.fs.Path(dir, s"manifest-$snap.json"))
 
-  private def tableFs(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): org.apache.hadoop.fs.FileSystem =
+  private[graft] def tableFs(spark: org.apache.spark.sql.SparkSession,
+                             dir: String): org.apache.hadoop.fs.FileSystem =
     new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -2636,8 +2645,9 @@ object Layout {
     * latest when <= 0) and its manifest — entries, schemas and delete
     * lists all from the same file, whatever commits land meanwhile.
     */
-  private def snapshotAt(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-                         snapshotId: Long = -1L): (Long, Manifest) = {
+  private[graft] def snapshotAt(fs: org.apache.hadoop.fs.FileSystem,
+                                dir: String,
+                                snapshotId: Long = -1L): (Long, Manifest) = {
     val ids = committedIds(fs, dir)
     val snap = if (snapshotId > 0) snapshotId else ids.max
     require(ids.contains(snap), s"snapshot $snap not found under $dir")
@@ -3435,28 +3445,6 @@ object Layout {
       .write.mode("overwrite").partitionBy(partCols: _*).parquet(path)
   }
 
-  /** Incremental view maintenance for an algebraic (count + sum)
-    * aggregate: apply a CDC change feed ([[snapshotDiff]]'s consumer
-    * side) to the previous materialized aggregate instead of
-    * recomputing from the table. Inserts add (+1, +new), deletes
-    * subtract (−1, −old), updates contribute the value delta
-    * (new − old). Groups whose maintained count reaches zero drop out
-    * of the view, exactly as a recompute would drop them.
-    *
-    * Why it matters at 100 TB: a full recompute scans the table; this
-    * maintains the view in O(|changes|) — the delta feed aggregates to
-    * at most |touched groups| rows, and the merge is one full-outer
-    * equi-join against the (already small) materialized aggregate.
-    * Correctness rests on the aggregate being algebraic (count/sum —
-    * and avg as their ratio); holistic aggregates (exact median)
-    * still need the recompute path.
-    *
-    * `changes` columns: `op` ('I' | 'D' | 'U'), the group key, `valOld`
-    * (null for inserts), `valNew` (null for deletes). `prevAgg` must
-    * hold the materialized view as (keyCol, countCol, sumCol) —
-    * `countCol`/`sumCol` name its count and sum columns (default
-    * `n`/`total`) and the maintained output reuses the same names.
-    */
   /** [[deltaAggMaintain]]'s second-moment sibling: maintain per-key
     * (n, sum, sumsq) under the same I/U/D change algebra, and derive
     * mean and POPULATION variance from the maintained moments —
@@ -3504,6 +3492,28 @@ object Layout {
         (col("s") / col("n")) * (col("s") / col("n")), lit(0.0)), 6)
         .as("var"))
 
+  /** Incremental view maintenance for an algebraic (count + sum)
+    * aggregate: apply a CDC change feed ([[snapshotDiff]]'s consumer
+    * side) to the previous materialized aggregate instead of
+    * recomputing from the table. Inserts add (+1, +new), deletes
+    * subtract (−1, −old), updates contribute the value delta
+    * (new − old). Groups whose maintained count reaches zero drop out
+    * of the view, exactly as a recompute would drop them.
+    *
+    * Why it matters at 100 TB: a full recompute scans the table; this
+    * maintains the view in O(|changes|) — the delta feed aggregates to
+    * at most |touched groups| rows, and the merge is one full-outer
+    * equi-join against the (already small) materialized aggregate.
+    * Correctness rests on the aggregate being algebraic (count/sum —
+    * and avg as their ratio); holistic aggregates (exact median)
+    * still need the recompute path.
+    *
+    * `changes` columns: `op` ('I' | 'D' | 'U'), the group key, `valOld`
+    * (null for inserts), `valNew` (null for deletes). `prevAgg` must
+    * hold the materialized view as (keyCol, countCol, sumCol) —
+    * `countCol`/`sumCol` name its count and sum columns (default
+    * `n`/`total`) and the maintained output reuses the same names.
+    */
   def deltaAggMaintain(prevAgg: DataFrame, changes: DataFrame,
                        keyCol: String, opCol: String, oldCol: String,
                        newCol: String, countCol: String = "n",
@@ -3837,10 +3847,6 @@ object Layout {
     }.toSet
   }
 
-  /** Read `table` through the catalog at `version` (default latest):
-    * the table's data AS OF the snapshot that catalog version pinned —
-    * appends no catalog version has published are invisible.
-    */
   /** CATALOG-WIDE retention (the r13 verdict's item 8): per-table
     * expire/vacuum exists, but a multi-table catalog needs ONE pass
     * that ages out history without ever breaking a published version.
@@ -3887,6 +3893,10 @@ object Layout {
     (dropped.length, expired, deleted)
   }
 
+  /** Read `table` through the catalog at `version` (default latest):
+    * the table's data AS OF the snapshot that catalog version pinned —
+    * appends no catalog version has published are invisible.
+    */
   def catalogRead(spark: org.apache.spark.sql.SparkSession,
                   catalogDir: String, table: String,
                   version: Long = -1L): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.io.SnapshotFileIndex
+import graft.io.{SnapshotFileIndex, SnapshotView}
 import graft.operators.Layout
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -8,7 +8,6 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Cas
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.internal.SQLConf
 
 /** Metadata-only aggregate answering over snapshot tables — the
@@ -67,14 +66,7 @@ class SnapshotMetadataAggRule extends Rule[LogicalPlan] {
       case Project(exprs, child)
           if exprs.forall(_.isInstanceOf[AttributeReference]) =>
         scanIndex(child)
-      case l: LogicalRelation => l.relation match {
-        case h: HadoopFsRelation =>
-          h.location match {
-            case i: SnapshotFileIndex => Some(i)
-            case _ => None
-          }
-        case _ => None
-      }
+      case SnapshotView(_, index) => Some(index)
       case _ => None
     }
 

@@ -1388,37 +1388,56 @@ case class ResolveUrlExpression(left: Expression, right: Expression)
   * runtime registry hook for already-built sessions.
   */
 object NativeFunctions {
-  private val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "revcomp_native" -> (exprs => RevCompExpression(exprs.head)),
-    "translate_dna_native" -> (exprs => TranslateDnaExpression(exprs.head)),
-    "kmers_native" -> (exprs => KmerGenerator(exprs(0), exprs(1))),
-    "dot_native" -> (exprs => DotProductExpression(exprs(0), exprs(1))),
-    "nfc_native" -> (exprs => NfcNormalizeExpression(exprs.head)),
-    "fix_encoding_native" -> (exprs => FixEncodingExpression(exprs.head)),
-    "strip_accents_native" -> (exprs => StripAccentsExpression(exprs.head)),
-    "tokens_native" -> (exprs => TokensExpression(exprs.head)),
-    "avg_quality_native" -> (exprs => AvgQualityExpression(exprs.head)),
-    "low_quality_count_native" -> (exprs =>
-      LowQualityCountExpression(exprs(0), exprs(1))),
-    "cosine_argmax_native" -> (exprs =>
-      CosineArgmaxExpression(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4))),
-    "l2_argmin_native" -> (exprs =>
-      L2ArgminExpression(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4))),
-    "logistic_score_native" -> (exprs =>
-      LogisticScoreExpression(exprs.head, exprs.tail)),
-    "adc_sum_native" -> (exprs =>
-      AdcSumExpression(exprs(0), exprs(1), exprs.drop(2))),
-    "binary_quantize_native" -> (exprs => BinaryQuantizeExpression(exprs.head)),
-    "hamming_native" -> (exprs =>
-      HammingDistanceExpression(exprs(0), exprs(1))),
-    "html_to_text_native" -> (exprs => HtmlToTextExpression(exprs.head)),
-    "canonicalize_url_native" -> (exprs =>
-      CanonicalizeUrlExpression(exprs.head)),
-    "resolve_url_native" -> (exprs =>
-      ResolveUrlExpression(exprs(0), exprs(1))))
+  /** name → (expression class, for the injected `ExpressionInfo`;
+    * builder) — the one table [[register]] and [[GraftExtensions]]
+    * both install.
+    */
+  private[plans] val fns
+      : Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] =
+    Seq(
+      ("revcomp_native", classOf[RevCompExpression],
+        exprs => RevCompExpression(exprs.head)),
+      ("translate_dna_native", classOf[TranslateDnaExpression],
+        exprs => TranslateDnaExpression(exprs.head)),
+      ("kmers_native", classOf[KmerGenerator],
+        exprs => KmerGenerator(exprs(0), exprs(1))),
+      ("dot_native", classOf[DotProductExpression],
+        exprs => DotProductExpression(exprs(0), exprs(1))),
+      ("nfc_native", classOf[NfcNormalizeExpression],
+        exprs => NfcNormalizeExpression(exprs.head)),
+      ("fix_encoding_native", classOf[FixEncodingExpression],
+        exprs => FixEncodingExpression(exprs.head)),
+      ("strip_accents_native", classOf[StripAccentsExpression],
+        exprs => StripAccentsExpression(exprs.head)),
+      ("tokens_native", classOf[TokensExpression],
+        exprs => TokensExpression(exprs.head)),
+      ("avg_quality_native", classOf[AvgQualityExpression],
+        exprs => AvgQualityExpression(exprs.head)),
+      ("low_quality_count_native", classOf[LowQualityCountExpression],
+        exprs => LowQualityCountExpression(exprs(0), exprs(1))),
+      ("cosine_argmax_native", classOf[CosineArgmaxExpression],
+        exprs => CosineArgmaxExpression(exprs(0), exprs(1), exprs(2),
+          exprs(3), exprs(4))),
+      ("l2_argmin_native", classOf[L2ArgminExpression],
+        exprs => L2ArgminExpression(exprs(0), exprs(1), exprs(2), exprs(3),
+          exprs(4))),
+      ("logistic_score_native", classOf[LogisticScoreExpression],
+        exprs => LogisticScoreExpression(exprs.head, exprs.tail)),
+      ("adc_sum_native", classOf[AdcSumExpression],
+        exprs => AdcSumExpression(exprs(0), exprs(1), exprs.drop(2))),
+      ("binary_quantize_native", classOf[BinaryQuantizeExpression],
+        exprs => BinaryQuantizeExpression(exprs.head)),
+      ("hamming_native", classOf[HammingDistanceExpression],
+        exprs => HammingDistanceExpression(exprs(0), exprs(1))),
+      ("html_to_text_native", classOf[HtmlToTextExpression],
+        exprs => HtmlToTextExpression(exprs.head)),
+      ("canonicalize_url_native", classOf[CanonicalizeUrlExpression],
+        exprs => CanonicalizeUrlExpression(exprs.head)),
+      ("resolve_url_native", classOf[ResolveUrlExpression],
+        exprs => ResolveUrlExpression(exprs(0), exprs(1))))
 
   def register(spark: SparkSession): Unit =
-    fns.foreach { case (name, builder) =>
+    fns.foreach { case (name, _, builder) =>
       val reg = spark.sessionState.functionRegistry
       // Idempotent: queries call register per invocation, and the
       // replace-path WARN (14 lines per call) floods the stdout tail
@@ -1430,81 +1449,14 @@ object NativeFunctions {
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("revcomp_native"),
-      new ExpressionInfo(classOf[RevCompExpression].getName, "revcomp_native"),
-      (exprs: Seq[Expression]) => RevCompExpression(exprs.head)))
-    e.injectFunction((FunctionIdentifier("translate_dna_native"),
-      new ExpressionInfo(classOf[TranslateDnaExpression].getName, "translate_dna_native"),
-      (exprs: Seq[Expression]) => TranslateDnaExpression(exprs.head)))
-    e.injectFunction((FunctionIdentifier("kmers_native"),
-      new ExpressionInfo(classOf[KmerGenerator].getName, "kmers_native"),
-      (exprs: Seq[Expression]) => KmerGenerator(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("dot_native"),
-      new ExpressionInfo(classOf[DotProductExpression].getName, "dot_native"),
-      (exprs: Seq[Expression]) => DotProductExpression(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("nfc_native"),
-      new ExpressionInfo(classOf[NfcNormalizeExpression].getName, "nfc_native"),
-      (exprs: Seq[Expression]) => NfcNormalizeExpression(exprs.head)))
-    e.injectFunction((FunctionIdentifier("fix_encoding_native"),
-      new ExpressionInfo(classOf[FixEncodingExpression].getName,
-        "fix_encoding_native"),
-      (exprs: Seq[Expression]) => FixEncodingExpression(exprs.head)))
-    e.injectFunction((FunctionIdentifier("strip_accents_native"),
-      new ExpressionInfo(classOf[StripAccentsExpression].getName,
-        "strip_accents_native"),
-      (exprs: Seq[Expression]) => StripAccentsExpression(exprs.head)))
-    e.injectFunction((FunctionIdentifier("tokens_native"),
-      new ExpressionInfo(classOf[TokensExpression].getName, "tokens_native"),
-      (exprs: Seq[Expression]) => TokensExpression(exprs.head)))
-    e.injectFunction((FunctionIdentifier("avg_quality_native"),
-      new ExpressionInfo(classOf[AvgQualityExpression].getName, "avg_quality_native"),
-      (exprs: Seq[Expression]) => AvgQualityExpression(exprs.head)))
-    e.injectFunction((FunctionIdentifier("low_quality_count_native"),
-      new ExpressionInfo(classOf[LowQualityCountExpression].getName, "low_quality_count_native"),
-      (exprs: Seq[Expression]) => LowQualityCountExpression(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("cosine_argmax_native"),
-      new ExpressionInfo(classOf[CosineArgmaxExpression].getName, "cosine_argmax_native"),
-      (exprs: Seq[Expression]) =>
-        CosineArgmaxExpression(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4))))
-    e.injectFunction((FunctionIdentifier("l2_argmin_native"),
-      new ExpressionInfo(classOf[L2ArgminExpression].getName, "l2_argmin_native"),
-      (exprs: Seq[Expression]) =>
-        L2ArgminExpression(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4))))
-    e.injectFunction((FunctionIdentifier("adc_sum_native"),
-      new ExpressionInfo(classOf[AdcSumExpression].getName,
-        "adc_sum_native"),
-      (exprs: Seq[Expression]) =>
-        AdcSumExpression(exprs(0), exprs(1), exprs.drop(2))))
-    e.injectFunction((FunctionIdentifier("logistic_score_native"),
-      new ExpressionInfo(classOf[LogisticScoreExpression].getName,
-        "logistic_score_native"),
-      (exprs: Seq[Expression]) =>
-        LogisticScoreExpression(exprs.head, exprs.tail)))
-    e.injectFunction((FunctionIdentifier("binary_quantize_native"),
-      new ExpressionInfo(classOf[BinaryQuantizeExpression].getName, "binary_quantize_native"),
-      (exprs: Seq[Expression]) => BinaryQuantizeExpression(exprs.head)))
-    e.injectFunction((FunctionIdentifier("hamming_native"),
-      new ExpressionInfo(classOf[HammingDistanceExpression].getName, "hamming_native"),
-      (exprs: Seq[Expression]) => HammingDistanceExpression(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("html_to_text_native"),
-      new ExpressionInfo(classOf[HtmlToTextExpression].getName, "html_to_text_native"),
-      (exprs: Seq[Expression]) => HtmlToTextExpression(exprs.head)))
-    e.injectFunction((FunctionIdentifier("canonicalize_url_native"),
-      new ExpressionInfo(classOf[CanonicalizeUrlExpression].getName, "canonicalize_url_native"),
-      (exprs: Seq[Expression]) => CanonicalizeUrlExpression(exprs.head)))
-    e.injectFunction((FunctionIdentifier("resolve_url_native"),
-      new ExpressionInfo(classOf[ResolveUrlExpression].getName, "resolve_url_native"),
-      (exprs: Seq[Expression]) => ResolveUrlExpression(exprs(0), exprs(1))))
-    // SQL INSERT INTO a registered snapshot view → manifest commit
-    // (without this, Spark's generic file-source insert would write
-    // raw files no manifest references — see SnapshotInsertRule)
-    e.injectResolutionRule(session => graft.io.SnapshotInsertRule(session))
-    // SQL DELETE FROM a snapshot view → pruned copy-on-write commit
-    e.injectResolutionRule(session => graft.io.SnapshotDeleteRule(session))
-    // SQL UPDATE ... SET on a snapshot view → targeted rewrite commit
-    e.injectResolutionRule(session => graft.io.SnapshotUpdateRule(session))
-    // SQL MERGE INTO a snapshot view → stats-bounded mergeInto commit
-    e.injectResolutionRule(session => graft.io.SnapshotMergeRule(session))
+    NativeFunctions.fns.foreach { case (name, cls, builder) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+    }
+    // SQL INSERT / DELETE / UPDATE / MERGE on a registered snapshot view
+    // → manifest commits (without it, Spark's generic file-source insert
+    // would write raw files no manifest references — see SnapshotDmlRule)
+    e.injectResolutionRule(session => graft.io.SnapshotDmlRule(session))
     // count(*)/min/max over a snapshot view → manifest constants
     e.injectOptimizerRule(_ => new SnapshotMetadataAggRule)
   }

@@ -751,11 +751,11 @@ object Layout {
     },
 
     // Streaming snapshot sink (q229): micro-batches committed as atomic
-    // table snapshots (one snapshotAppend per batch, idempotent under
-    // foreachBatch replay via batch markers) — the Delta-style streaming
-    // table-ingestion path on the engine's own manifest primitive. The
-    // oracle is the staged corpus: the drained table must hold exactly
-    // what the stream carried.
+    // table snapshots (one snapshotAppend per batch through
+    // writeStream.format("snapshot"), idempotent under replay via batch
+    // markers) — the Delta-style streaming table-ingestion path on the
+    // engine's own manifest primitive. The oracle is the staged corpus:
+    // the drained table must hold exactly what the stream carried.
     "q229_stream_snapshot_sink" -> { (s, d) =>
       val base = Fixtures.fresh(s"/tmp/graft_stream/${new java.io.File(d).getName}_snapsink")
       val docs = Tables.documents(s, d).select("doc_id", "text", "n_chars")

@@ -11,41 +11,43 @@ import org.apache.spark.sql.DataFrame
   * see a complete committed prefix of the stream, and time travel /
   * diff / vacuum all apply to the live ingestion table.
   *
-  * Exactly-once table state under retries: `foreachBatch` is
+  * Exactly-once table state under retries: a micro-batch sink is
   * at-least-once (a batch re-runs if the commit raced a crash), so
   * each commit writes a `_batch-<id>` marker AFTER its manifest
-  * commit and a replayed batch whose marker exists is skipped — the
-  * transactional-idempotence trick every table-format streaming sink
-  * uses (Delta records txn ids in the log; the marker file is that
-  * record). A crash BETWEEN manifest commit and marker write re-runs
-  * the batch once; the re-run re-appends over the previous attempt's
-  * manifest — callers needing hard exactly-once under that window
-  * vacuum by batch key downstream, and the window is one rename wide.
+  * commit and a replayed batch whose marker exists is skipped
+  * ([[commitOnce]]) — the transactional-idempotence trick every
+  * table-format streaming sink uses (Delta records txn ids in the log;
+  * the marker file is that record). A crash BETWEEN manifest commit and
+  * marker write re-runs the batch once; the re-run re-appends over the
+  * previous attempt's manifest — callers needing hard exactly-once
+  * under that window vacuum by batch key downstream, and the window is
+  * one rename wide.
   */
 object TableStreams {
 
-  /** Drain `stream` (Trigger.AvailableNow — one file per micro-batch
-    * when the source is configured so) into the snapshot table at
-    * `dir`, one snapshot per batch. Returns when the available input
-    * is fully committed.
-    *
-    * Markers are keyed by (checkpoint identity, batch id) — batch ids
-    * alone would be a data-loss trap: a job restarted with a FRESH
-    * checkpoint renumbers batches from 0 over a possibly-different
-    * file split, and bare `_batch-0..N` markers from the old run would
-    * silently skip genuinely new data (Delta keys txn ids by app
-    * identity for exactly this reason). Same checkpoint ⇒ same prefix
-    * ⇒ replays dedupe; new checkpoint ⇒ new prefix ⇒ everything
-    * commits (appending again whatever the old run already wrote —
-    * at-least-once across checkpoint changes, exactly-once within a
-    * checkpoint lineage; don't point two different checkpoints at one
-    * table unless re-appends are acceptable).
-    */
   /** The marker prefix for a checkpoint lineage — exposed so tests and
     * maintenance tooling can reason about a table's committed batches.
     */
   def sinkId(checkpoint: String): String =
     Digest.md5Hex(checkpoint).take(12)
+
+  /** Run `commit` as micro-batch `batchId` of checkpoint lineage
+    * `lineage` ([[sinkId]]) unless the batch's `_batch-<lineage>-<batchId>`
+    * marker under `dir` says it already committed; the marker lands
+    * AFTER the commit. The one marker protocol of [[snapshotSink]]
+    * (`writeStream.format("snapshot")`) and [[upsertSink]].
+    */
+  private[graft] def commitOnce(spark: org.apache.spark.sql.SparkSession,
+                                dir: String, lineage: String,
+                                batchId: Long)(commit: => Unit): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val marker = new org.apache.hadoop.fs.Path(dir, s"_batch-$lineage-$batchId")
+    if (!fs.exists(marker)) {
+      commit
+      fs.create(marker, true).close()
+    }
+  }
 
   /** The CONSUMER side of the streaming-table story — tail a snapshot
     * table incrementally, the Delta-streaming-source shape on the
@@ -149,17 +151,11 @@ object TableStreams {
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val marker = new org.apache.hadoop.fs.Path(dir,
-          s"_batch-$id-$batchId")
-        if (!fs.exists(marker)) {
+        commitOnce(spark, dir, id, batchId) {
           if (Layout.snapshotIds(spark, dir).isEmpty)
             Layout.snapshotAppend(batch, dir, statsCols)
           else Layout.upsertKeysMoR(spark, dir, batch, keyCols)
-          fs.create(marker, true).close()
         }
-        ()
       }
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
@@ -239,22 +235,30 @@ object TableStreams {
     q.awaitTermination()
   }
 
+  /** Drain `stream` (Trigger.AvailableNow — one file per micro-batch
+    * when the source is configured so) into the snapshot table at
+    * `dir` through `writeStream.format("snapshot")`
+    * ([[graft.io.SnapshotStreamSink]]), one snapshot per batch.
+    * Returns when the available input is fully committed.
+    *
+    * Markers are keyed by (checkpoint identity, batch id) — batch ids
+    * alone would be a data-loss trap: a job restarted with a FRESH
+    * checkpoint renumbers batches from 0 over a possibly-different
+    * file split, and bare `_batch-0..N` markers from the old run would
+    * silently skip genuinely new data (Delta keys txn ids by app
+    * identity for exactly this reason). Same checkpoint ⇒ same prefix
+    * ⇒ replays dedupe; new checkpoint ⇒ new prefix ⇒ everything
+    * commits (appending again whatever the old run already wrote —
+    * at-least-once across checkpoint changes, exactly-once within a
+    * checkpoint lineage; don't point two different checkpoints at one
+    * table unless re-appends are acceptable).
+    */
   def snapshotSink(stream: DataFrame, dir: String, checkpoint: String,
                    statsCols: Seq[String] = Nil): Unit = {
     import org.apache.spark.sql.streaming.Trigger
-    val id = sinkId(checkpoint)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val fs = new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-        val marker = new org.apache.hadoop.fs.Path(dir,
-          s"_batch-$id-$batchId")
-        if (!fs.exists(marker)) {
-          Layout.snapshotAppend(batch, dir, statsCols)
-          fs.create(marker, true).close()
-        }
-        ()
-      }
+    val q = stream.writeStream.format("snapshot")
+      .option("path", dir)
+      .option("statsCols", statsCols.mkString(","))
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .start()
