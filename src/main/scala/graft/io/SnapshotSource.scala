@@ -445,7 +445,6 @@ class SnapshotFileIndex(spark: SparkSession, val tableDir: String,
   }
 }
 
-
 /** The snapshot table under a registered view: a temp view resolves to
   * SubqueryAlias(...(View(...(LogicalRelation)))) over a
   * HadoopFsRelation whose location is a [[SnapshotFileIndex]]. The one
@@ -459,10 +458,8 @@ object SnapshotView {
       case SubqueryAlias(_, child) => unapply(child)
       case v: View => unapply(v.child)
       case l: LogicalRelation => l.relation match {
-        case h: HadoopFsRelation => h.location match {
-          case i: SnapshotFileIndex => Some((h, i))
-          case _ => None
-        }
+        case h @ HadoopFsRelation(i: SnapshotFileIndex, _, _, _, _, _) =>
+          Some((h, i))
         case _ => None
       }
       case _ => None

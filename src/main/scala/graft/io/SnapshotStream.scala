@@ -46,9 +46,8 @@ import org.apache.spark.sql.types.StructType
   * micro-batch — the initial scan counts as one batch regardless).
   *
   * Scale shape: each poll is one directory listing; each batch reads
-  * one manifest per delivered commit plus the range's base (metadata-
-  * bounded, no data I/O); each batch opens
-  * exactly the files the delivered commits added. The batch plan is a
+  * one manifest per delivered commit (metadata-bounded, no data I/O)
+  * and opens exactly the files those commits added. The batch plan is a
   * pinned-file HadoopFsRelation inside Spark's vectorized parquet
   * scan, so pushed filters/column pruning in the streaming query still
   * reach the parquet reader.
