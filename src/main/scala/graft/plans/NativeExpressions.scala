@@ -587,15 +587,6 @@ object NativeVec {
       .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
 }
 
-/** Native dot product over two array<float|double> columns.
-  *
-  * The `aggregate(zip_with(...))` HOF formulation is CodegenFallback —
-  * every element dispatches through interpreted lambda closures, the
-  * same trap that cost q21/q28 4-5× on k-mers. This expression compiles
-  * to one JIT-ed while-loop and stays inside whole-stage codegen — the
-  * hot kernel of every cosine operator (brute-force, ANN, IVF, k-means,
-  * embedding near-dup).
-  */
 /** Hilbert xy2d as a native codegen expression — the unrolled Column
   * form re-references x/y several times per level, growing the
   * expression TREE ~5^order nodes (minutes of analysis at order 8);
@@ -630,6 +621,15 @@ case class HilbertExpression(left: Expression, right: Expression,
     copy(left = newLeft, right = newRight)
 }
 
+/** Native dot product over two array<float|double> columns.
+  *
+  * The `aggregate(zip_with(...))` HOF formulation is CodegenFallback —
+  * every element dispatches through interpreted lambda closures, the
+  * same trap that cost q21/q28 4-5× on k-mers. This expression compiles
+  * to one JIT-ed while-loop and stays inside whole-stage codegen — the
+  * hot kernel of every cosine operator (brute-force, ANN, IVF, k-means,
+  * embedding near-dup).
+  */
 case class DotProductExpression(left: Expression, right: Expression)
     extends BinaryExpression {
 
