@@ -105,18 +105,49 @@ object TextFunctions {
       graft.plans.FixEncodingExpression(
         org.apache.spark.sql.graft.Bridge.expression(c)))
 
+  /** Spark's `lower`/`upper`, bit for bit, as a native codegen
+    * expression that skips the ICU title-case table Spark 4's first
+    * `lower()` builds (~1.7 s per JVM; see
+    * [[graft.plans.NativeText.lower]]). Every case mapping under
+    * `functions/` and `operators/` goes through these.
+    */
+  def lowerCase(c: Column): Column = caseMap(c, upper = false)
+  def upperCase(c: Column): Column = caseMap(c, upper = true)
+
+  private def caseMap(c: Column, upper: Boolean): Column =
+    org.apache.spark.sql.graft.Bridge.column(
+      graft.plans.CaseMapExpression(
+        org.apache.spark.sql.graft.Bridge.expression(c), upper))
+
+  /** Occurrences of `words` in a tokens column, repeats included; null
+    * tokens give null. One native pass against a hashed word set
+    * ([[graft.plans.TokenSetCountExpression]]).
+    */
+  def tokenSetCount(toks: Column, words: Seq[String]): Column =
+    org.apache.spark.sql.graft.Bridge.column(
+      graft.plans.TokenSetCountExpression(
+        org.apache.spark.sql.graft.Bridge.expression(toks),
+        org.apache.spark.sql.graft.Bridge.expression(typedLit(words))))
+
+  /** The per-word HOF sum [[tokenSetCount]] replaced — one interpreted
+    * `size(filter(...))` lambda per word; kept as the reference
+    * semantics for TokensSpec's equivalence checks.
+    */
+  private[graft] def tokenSetCountHof(toks: Column, words: Seq[String]): Column =
+    words.map(w => size(filter(toks, t => t === w))).reduce(_ + _)
+
   /** Whole-document fingerprint: md5 of the whitespace-normalized,
     * lower-cased text (SURVEY.md north-star "document fingerprinting").
     */
   def fingerprint(c: Column): Column =
-    md5(lower(regexp_replace(c, "\\s+", " ")))
+    md5(lowerCase(regexp_replace(c, "\\s+", " ")))
 
   /** Rolling/min-sampled fingerprint: the minimum md5 over character
     * 8-grams of the normalized text — a 1-hash winnowing sketch that is
     * stable under local edits far from the minimizer.
     */
   def minShingleFingerprint(c: Column): Column = {
-    val norm = lower(regexp_replace(c, "\\s+", " "))
+    val norm = lowerCase(regexp_replace(c, "\\s+", " "))
     when(length(norm) < 8, md5(norm))
       .otherwise(array_min(transform(
         sequence(lit(1), length(norm) - 7),
@@ -225,20 +256,26 @@ object TextFunctions {
 
   /** Count of stop-word tokens (occurrences, not distinct). */
   def stopwordCount(tokensCol: Column): Column =
-    StopWords.map(w => size(filter(tokensCol, t => t === w)))
-      .reduce(_ + _)
+    tokenSetCount(tokensCol, StopWords)
 
   /** Heuristic quality score in [0,1]:
     * 0.5·min(n_tokens/100,1) + 0.3·stopword_ratio + 0.2·alpha_ratio.
     */
-  def qualityScore(c: Column): Column = {
+  def qualityScore(c: Column): Column = qualityScoreWith(c, tokenSetCount)
+
+  /** [[qualityScore]] over the per-word HOF counts — the reference twin. */
+  private[graft] def qualityScoreHof(c: Column): Column =
+    qualityScoreWith(c, tokenSetCountHof)
+
+  private def qualityScoreWith(c: Column,
+                               count: (Column, Seq[String]) => Column): Column = {
     val toks = tokens(c)
     val n = size(toks).cast("double")
     val alpha = (length(regexp_replace(c, "[^a-zA-Z]", "")).cast("double") /
       greatest(length(c), lit(1)).cast("double"))
     round(
       least(n / 100.0, lit(1.0)) * 0.5 +
-        (stopwordCount(toks).cast("double") / greatest(n, lit(1.0))) * 0.3 +
+        (count(toks, StopWords).cast("double") / greatest(n, lit(1.0))) * 0.3 +
         alpha * 0.2,
       4)
   }
@@ -269,11 +306,15 @@ object TextFunctions {
   /** Deterministic language ID: occurrence-count score per language,
     * first language (in LangMarkers order) with the maximal score wins.
     */
-  def langId(c: Column): Column = {
+  def langId(c: Column): Column = langIdWith(c, tokenSetCount)
+
+  /** [[langId]] over the per-word HOF counts — the reference twin. */
+  private[graft] def langIdHof(c: Column): Column = langIdWith(c, tokenSetCountHof)
+
+  private def langIdWith(c: Column,
+                         count: (Column, Seq[String]) => Column): Column = {
     val toks = tokens(c)
-    val scores = LangMarkers.map { case (lang, ws) =>
-      lang -> ws.map(w => size(filter(toks, t => t === w))).reduce(_ + _)
-    }
+    val scores = LangMarkers.map { case (lang, ws) => lang -> count(toks, ws) }
     // en wins ties over de over es over fr (stable priority chain).
     scores.init.zipWithIndex.foldRight(lit(scores.last._1)) {
       case (((lang, s), i), elseCol) =>

@@ -412,16 +412,18 @@ class SnapshotFileIndex(spark: SparkSession, val tableDir: String,
   override def rootPaths: Seq[Path] = Seq(qualifiedRoot)
   override def partitionSchema: StructType = new StructType()
   override def refresh(): Unit = if (snapId < 0) {
-    // registration refused MoR debt; a refresh must RE-CHECK it — a
-    // Scala-side deleteWhereMoR/deleteKeysMoR commit after
-    // registration would otherwise leak deleted rows into SQL reads
-    // and metadata-only counts through the refreshed listing. One
-    // manifest: the check and the listing are the same snapshot.
+    // registration refused MoR debt and rename-era files; a refresh
+    // must RE-CHECK both — a Scala-side deleteWhereMoR/deleteKeysMoR
+    // commit after registration would otherwise leak deleted rows into
+    // SQL reads and metadata-only counts, and a renameColumn would
+    // null-fill the renamed column of the old files by name. One
+    // manifest: the checks and the listing are the same snapshot.
     val m = SnapshotSource.manifest(spark, tableDir, -1L)
     require(m.deletes.isEmpty && m.eqDeletes.isEmpty,
       s"snapshot table at $tableDir acquired outstanding position/" +
         "equality deletes after registration — run " +
         "Layout.materializeDeletes and refresh again")
+    SnapshotSource.requireByNameSafe(tableDir, m.entries, m.schemas)
     statuses = resolve(m.entries)
   }
   override def inputFiles: Array[String] =

@@ -1858,7 +1858,7 @@ object Corpus {
     val chars = filter(split(col("word"), ""), c => c =!= "")
     var vocab = Parallelism.ensure(docs)
       .select(explode(TextFunctions.tokens(col(textCol))).as("tok"))
-      .select(lower(col("tok")).as("word"))
+      .select(TextFunctions.lowerCase(col("tok")).as("word"))
       .filter(col("word").rlike("^[a-z]+$"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
       .select(col("word"), col("cnt"),
@@ -2047,7 +2047,7 @@ object Corpus {
     require(merges.nonEmpty && merges.size <= 64,
       s"merge table size ${merges.size} outside sane bounds (1..64)")
     val words = filter(
-      transform(TextFunctions.tokens(col(textCol)), t => lower(t)),
+      transform(TextFunctions.tokens(col(textCol)), t => TextFunctions.lowerCase(t)),
       w => w.rlike("^[a-z]+$"))
     val parenRepr = (w: Column) => concat(lit("("),
       concat_ws(")(", filter(split(w, ""), c => c =!= "")), lit(")"))
@@ -2094,7 +2094,7 @@ object Corpus {
     var vocab = Parallelism.ensure(docs)
       .select(explode(tokensOf(col(textCol))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
-      .select(col("cnt"), lower(hex(encode(col("word"), "UTF-8"))).as("h"))
+      .select(col("cnt"), TextFunctions.lowerCase(hex(encode(col("word"), "UTF-8"))).as("h"))
       .filter(length(col("h")).between(2, maxWordBytes * 2))
       .select(col("cnt"),
         regexp_replace(col("h"), "([0-9a-f]{2})", "($1)").as("repr"))
@@ -2153,7 +2153,7 @@ object Corpus {
       s"merge table size ${merges.size} outside sane bounds (1..64)")
     val kept = filter(
       transform(tokensOf(col(textCol)),
-        w => lower(hex(encode(w, "UTF-8")))),
+        w => TextFunctions.lowerCase(hex(encode(w, "UTF-8")))),
       h => length(h) <= lit(maxWordBytes * 2))
     val repr0 = concat_ws(" ", transform(kept,
       h => regexp_replace(h, lit("([0-9a-f]{2})"), lit("($1)"))))
@@ -2189,7 +2189,7 @@ object Corpus {
     val chars = filter(split(col("word"), ""), c => c =!= "")
     var vocab = Parallelism.ensure(docs)
       .select(explode(TextFunctions.tokens(col(textCol))).as("tok"))
-      .select(lower(col("tok")).as("word"))
+      .select(TextFunctions.lowerCase(col("tok")).as("word"))
       // {1,12} word-length cap — the unigram-family contract ([a-z]{1,16}
       // there): an EXPLICIT bound both engine and oracle enforce, so the
       // oracle's fixed greedy-segmentation chain depth (12 steps — each
@@ -2275,7 +2275,7 @@ object Corpus {
     val maxLen = vocab.map(_.length).max
     val words = docs
       .select(explode(filter(
-        transform(TextFunctions.tokens(col(textCol)), t => lower(t)),
+        transform(TextFunctions.tokens(col(textCol)), t => TextFunctions.lowerCase(t)),
         w => w.rlike("^[a-z]{1,12}$"))).as("word")) // train's word cap
       .distinct()
     val segmented = words.as[String].mapPartitions { it =>
@@ -2297,7 +2297,7 @@ object Corpus {
     val perDoc = docs
       .select(col(idCol).as("doc_id"),
         explode_outer(filter(
-          transform(TextFunctions.tokens(col(textCol)), t => lower(t)),
+          transform(TextFunctions.tokens(col(textCol)), t => TextFunctions.lowerCase(t)),
           w => w.rlike("^[a-z]{1,12}$"))).as("word"))
       .join(broadcast(segmented), Seq("word"), "left")
     perDoc.groupBy("doc_id")
@@ -2401,7 +2401,7 @@ object Corpus {
     val dw = Parallelism.ensure(docs)
       .select(col(idCol).as("doc_id"),
         explode(TextFunctions.tokens(col(textCol))).as("tok"))
-      .select(col("doc_id"), lower(col("tok")).as("word"))
+      .select(col("doc_id"), TextFunctions.lowerCase(col("tok")).as("word"))
       .filter(col("word").rlike("^[a-z]{1,16}$"))
       .groupBy("doc_id", "word").agg(count(lit(1)).as("c"))
       .localCheckpoint() // distinct-word DP + fan-back read it
@@ -2423,7 +2423,7 @@ object Corpus {
   private def unigramWords(docs: DataFrame, textCol: String): DataFrame =
     Parallelism.ensure(docs)
       .select(explode(TextFunctions.tokens(col(textCol))).as("tok"))
-      .select(lower(col("tok")).as("word"))
+      .select(TextFunctions.lowerCase(col("tok")).as("word"))
       .filter(col("word").rlike("^[a-z]{1,16}$"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
 

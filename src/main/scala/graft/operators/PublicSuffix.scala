@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.TextFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -48,7 +49,7 @@ object PublicSuffix {
     */
   def registrableDomains(df: DataFrame, hostCol: String, rules: DataFrame,
     outCol: String = "reg_domain"): DataFrame = {
-    val hosts = df.select(lower(col(hostCol)).as("host")).distinct()
+    val hosts = df.select(TextFunctions.lowerCase(col(hostCol)).as("host")).distinct()
       .withColumn("labels", split(col("host"), "\\."))
       .withColumn("n", size(col("labels")))
     // candidate suffixes of k labels, in both matchable forms: the
@@ -86,7 +87,7 @@ object PublicSuffix {
           array_join(slice(col("labels"),
             col("n") - col("ps_labels"), col("ps_labels") + 1), "."))
           .as(outCol))
-    df.withColumn("__psx_host", lower(col(hostCol)))
+    df.withColumn("__psx_host", TextFunctions.lowerCase(col(hostCol)))
       .join(perHost.withColumnRenamed("host", "__psx_host"),
         Seq("__psx_host"), "left")
       .drop("__psx_host")

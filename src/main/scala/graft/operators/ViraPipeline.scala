@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{Dna, DnaFunctions}
+import graft.functions.{Dna, DnaFunctions, TextFunctions}
 import graft.io.Fasta
 import graft.pipe.Pipes
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
@@ -723,8 +723,8 @@ object ViraPipeline {
     val snp = sites
       .select(col("ref"), explode(col("alt")).as("a"))
       .filter(length(col("ref")) === 1 && length(col("a")) === 1 &&
-        upper(col("a")) =!= upper(col("ref")))
-    val pair = concat(upper(col("ref")), upper(col("a")))
+        TextFunctions.upperCase(col("a")) =!= TextFunctions.upperCase(col("ref")))
+    val pair = concat(TextFunctions.upperCase(col("ref")), TextFunctions.upperCase(col("a")))
     val isTi = pair.isin("AG", "GA", "CT", "TC")
     snp.agg(
         sum(when(isTi, 1L).otherwise(0L)).as("n_ti"),

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.TextFunctions
 import graft.plans.{CanonicalizeUrlExpression, HtmlToTextExpression, ResolveUrlExpression}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -176,7 +177,7 @@ object Web {
                    defaultAllow: Boolean = true): DataFrame = {
     val hostRx = "^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)"
     val pathRx = "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]+([^#]*)"
-    def hostOf(u: Column) = lower(regexp_extract(u, hostRx, 1))
+    def hostOf(u: Column) = TextFunctions.lowerCase(regexp_extract(u, hostRx, 1))
     def pathOf(u: Column) = {
       val p = regexp_extract(u, pathRx, 1)
       when(p === "", "/").otherwise(p)

@@ -428,6 +428,144 @@ object NativeText {
     }
     sb.toString
   }
+
+  /** Spark 4.1's `lower`/`upper` under the default
+    * `spark.sql.icu.caseMappings.enabled`: an all-ASCII value through
+    * UTF8String's byte loop, anything else through ICU's root-locale
+    * full case mapping of its valid-string decoding. These are the two
+    * branches of `CollationAwareUTF8String.toLowerCase`/`toUpperCase`,
+    * without that class's static initializer: it builds a title-case
+    * table over all 1,114,112 code points (with a dictionary word
+    * BreakIterator), about 1.7 s in a fresh JVM, and the first
+    * `lower()` pays it even on pure ASCII.
+    */
+  def lower(u: UTF8String): UTF8String =
+    if (u.isFullAscii) u.toLowerCaseAscii
+    else UTF8String.fromString(
+      com.ibm.icu.lang.UCharacter.toLowerCase(u.toValidString))
+
+  def upper(u: UTF8String): UTF8String =
+    if (u.isFullAscii) u.toUpperCaseAscii
+    else UTF8String.fromString(
+      com.ibm.icu.lang.UCharacter.toUpperCase(u.toValidString))
+}
+
+/** `lower`/`upper` as a native codegen expression ([[NativeText.lower]]
+  * rules: the same result as Spark's, without the ICU title-case table
+  * its first call builds). Always the ICU default mapping — the session
+  * flag `spark.sql.icu.caseMappings.enabled=false` does not switch it.
+  * Registered as `lower_native`/`upper_native`;
+  * [[graft.functions.TextFunctions.lowerCase]] and `upperCase` build it.
+  */
+case class CaseMapExpression(child: Expression, upper: Boolean)
+    extends UnaryExpression {
+
+  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires STRING, got ${child.dataType.catalogString}")
+  override def dataType: DataType = StringType
+  override def prettyName: String = if (upper) "upper_native" else "lower_native"
+
+  override protected def nullSafeEval(v: Any): Any = {
+    val u = v.asInstanceOf[UTF8String]
+    if (upper) NativeText.upper(u) else NativeText.lower(u)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev,
+      c => s"graft.plans.NativeText.${if (upper) "upper" else "lower"}($c)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** The word set of a [[TokenSetCountExpression]], built once from its
+  * literal word list and handed to generated code via
+  * `addReferenceObj`. Null words never match (an `=== null` filter
+  * keeps nothing), and a word listed twice counts once.
+  */
+final class TokenSetKernel(words: Seq[UTF8String]) extends Serializable {
+  private val set = new java.util.HashSet[UTF8String]()
+  words.foreach(w => if (w != null) set.add(w))
+
+  /** Elements of `toks` that are in the set, repeats included; null
+    * elements never count.
+    */
+  def count(toks: org.apache.spark.sql.catalyst.util.ArrayData): Int = {
+    var n = 0
+    var i = 0
+    while (i < toks.numElements()) {
+      if (!toks.isNullAt(i) && set.contains(toks.getUTF8String(i))) n += 1
+      i += 1
+    }
+    n
+  }
+}
+
+/** Occurrences of a fixed word set in an `array<string>`: one pass
+  * over the array against a hashed set, null array in → null out. It
+  * equals the sum of per-word `size(filter(toks, t => t === w))` over
+  * distinct words under ANSI mode (Spark 4's default, where `size(null)`
+  * is null). That sum is one interpreted lambda per word, and the
+  * lambdas keep the enclosing predicate out of whole-stage codegen.
+  * `words` must be FOLDABLE: it is evaluated once into a
+  * [[TokenSetKernel]], not per row.
+  */
+case class TokenSetCountExpression(tokens: Expression, words: Expression)
+    extends Expression {
+
+  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+  override def children: Seq[Expression] = Seq(tokens, words)
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = tokens.nullable
+  override def prettyName: String = "token_set_count_native"
+
+  override def checkInputDataTypes(): TypeCheckResult = {
+    def strArray(e: Expression) = e.dataType match {
+      case ArrayType(StringType, _) => true
+      case _ => false
+    }
+    if (!strArray(tokens) || !strArray(words))
+      TypeCheckResult.TypeCheckFailure(
+        "token_set_count_native requires (ARRAY<STRING>, ARRAY<STRING>)")
+    else if (!words.foldable)
+      TypeCheckResult.TypeCheckFailure(
+        "token_set_count_native word list must be a literal")
+    else TypeCheckResult.TypeCheckSuccess
+  }
+
+  private lazy val kernel: TokenSetKernel = {
+    val ws = words.eval(null).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+    new TokenSetKernel(
+      if (ws == null) Nil
+      else (0 until ws.numElements()).map(i =>
+        if (ws.isNullAt(i)) null else ws.getUTF8String(i)))
+  }
+
+  override def eval(input: InternalRow): Any = {
+    val t = tokens.eval(input)
+    if (t == null) null
+    else kernel.count(t.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val kRef = ctx.addReferenceObj("tokenSet", kernel,
+      classOf[TokenSetKernel].getName)
+    val t = tokens.genCode(ctx)
+    ev.copy(code =
+      code"""
+        ${t.code}
+        boolean ${ev.isNull} = ${t.isNull};
+        int ${ev.value} = ${ev.isNull} ? 0 : $kRef.count(${t.value});
+      """)
+  }
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression =
+    copy(tokens = newChildren(0), words = newChildren(1))
 }
 
 /** Encoding repair as a native codegen expression — the "clean the
@@ -1411,6 +1549,12 @@ object NativeFunctions {
         exprs => StripAccentsExpression(exprs.head)),
       ("tokens_native", classOf[TokensExpression],
         exprs => TokensExpression(exprs.head)),
+      ("lower_native", classOf[CaseMapExpression],
+        exprs => CaseMapExpression(exprs.head, upper = false)),
+      ("upper_native", classOf[CaseMapExpression],
+        exprs => CaseMapExpression(exprs.head, upper = true)),
+      ("token_set_count_native", classOf[TokenSetCountExpression],
+        exprs => TokenSetCountExpression(exprs(0), exprs(1))),
       ("avg_quality_native", classOf[AvgQualityExpression],
         exprs => AvgQualityExpression(exprs.head)),
       ("low_quality_count_native", classOf[LowQualityCountExpression],

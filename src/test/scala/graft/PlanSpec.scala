@@ -615,4 +615,70 @@ test("q326: JPEG decode is one narrow codec pass — no shuffle, no join") {
       assert(!plan.contains("Join"), s"$q: ${plan.take(1200)}")
     }
   }
+
+  test("text kernels: no Lower/Upper/InitCap/ArrayFilter in the fingerprint and gate plans; the gate equals its HOF twins") {
+    import graft.functions.TextFunctions
+    import graft.plans.{CaseMapExpression, TokenSetCountExpression}
+    import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, Expression, InitCap, Lower, Upper}
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.functions._
+    // parquet input: a local Seq would fold the projection away
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val t = col("text")
+    def exprsOf(c: org.apache.spark.sql.Column): Seq[Expression] =
+      docs.select(c.as("v")).queryExecution.optimizedPlan
+        .flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    // (name, column, the native kernel it must hold, whole-stage-safe)
+    val cases = Seq(
+      ("fingerprint", TextFunctions.fingerprint(t), classOf[CaseMapExpression], true),
+      ("minShingleFingerprint", TextFunctions.minShingleFingerprint(t),
+        classOf[CaseMapExpression], false),
+      ("qualityScore", TextFunctions.qualityScore(t), classOf[TokenSetCountExpression], true),
+      ("langId", TextFunctions.langId(t), classOf[TokenSetCountExpression], true))
+    cases.foreach { case (name, c, kernel, fused) =>
+      val exprs = exprsOf(c)
+      val banned = exprs.collect {
+        case e @ (_: Lower | _: Upper | _: InitCap | _: ArrayFilter) => e.nodeName
+      }
+      assert(banned.isEmpty, s"$name plans ${banned.distinct}")
+      assert(exprs.exists(kernel.isInstance), s"$name holds no ${kernel.getSimpleName}")
+      if (fused) assert(!exprs.exists(_.isInstanceOf[CodegenFallback]),
+        s"$name: ${exprs.filter(_.isInstanceOf[CodegenFallback]).map(_.nodeName)}")
+    }
+    // the native gate scores every fixture document as the per-word
+    // HOF twins do
+    val scored = docs.select(t, TextFunctions.qualityScore(t), TextFunctions.qualityScoreHof(t),
+      TextFunctions.langId(t), TextFunctions.langIdHof(t)).collect()
+    assert(scored.length == 500)
+    scored.foreach { r =>
+      assert(r.get(1) == r.get(2) && r.get(3) == r.get(4), r.toString)
+    }
+    assert(scored.map(_.get(1)).distinct.length >= 10)
+    // the curation gate stays inside one whole-stage codegen stage
+    val gate = docs.filter(TextFunctions.qualityScore(t) >= 0.3)
+      .filter(TextFunctions.langId(t).isin("en", "de"))
+    gate.count()
+    val plan = gate.queryExecution.executedPlan.toString
+    assert(plan.contains("*(1) Filter"), plan.take(1200))
+  }
+
+  test("source fence: functions/ and operators/ never call Spark's lower, upper or initcap") {
+    // Spark 4's first lower()/upper()/initcap() in a JVM builds ICU's
+    // title-case table over every code point (~1.7 s);
+    // TextFunctions.lowerCase/upperCase give the same result without it
+    import scala.jdk.CollectionConverters._
+    val call = raw"(?<![\w.])(lower|upper|initcap)\s*\(|functions\s*\.\s*(lower|upper|initcap)\b".r
+    val files = Seq("src/main/scala/graft/functions", "src/main/scala/graft/operators")
+      .flatMap(d => java.nio.file.Files.walk(java.nio.file.Paths.get(d)).iterator.asScala)
+      .filter(_.toString.endsWith(".scala"))
+    assert(files.size > 20, s"fence premise: found ${files.size} source files")
+    val hits = for {
+      f <- files
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      code = line.replaceAll("//.*", "")
+      if !code.trim.startsWith("*") && !code.trim.startsWith("/*")
+      if call.findFirstIn(code).isDefined
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
 }

@@ -98,6 +98,25 @@ class SnapshotSqlSpec extends AnyFunSuite {
       .count() === Layout.snapshotRead(spark, dir).count())
   }
 
+  test("refresh refuses when a column is renamed after registration") {
+    import spark.implicits._
+    val dir = freshDir("refreshrename")
+    Layout.snapshotWrite(Seq((1L, "a"), (2L, "b")).toDF("k", "name"), dir,
+      statsCols = Seq("k"))
+    spark.sql(
+      s"CREATE OR REPLACE TEMPORARY VIEW snap_ren USING snapshot OPTIONS (path '$dir')")
+    val view = spark.table("snap_ren")
+    val idx = indexOf(scanOf(view))
+    assert(view.orderBy("k").collect().map(r => (r.getLong(0), r.getString(1))).toSeq ===
+      Seq((1L, "a"), (2L, "b")))
+    Layout.renameColumn(spark, dir, "name", "label")
+    Layout.snapshotAppend(Seq((3L, "c")).toDF("k", "label"), dir)
+    // the view's by-name read of the old files would serve name = null
+    // and a new [3,null] row; the refresh must refuse instead
+    val err = intercept[IllegalArgumentException](idx.refresh())
+    assert(err.getMessage.contains("renamed/dropped"), err.getMessage)
+  }
+
   test("non-compilable conjuncts drop soundly; compilable ones still prune") {
     val dir = freshDir("partial")
     writeTable(dir)
