@@ -851,19 +851,33 @@ object Bam {
     */
   private[graft] def cigarRefSpan(cigar: String): Int = {
     if (cigar == null) return 0
-    var i = 0
-    var n = 0
+    val ops = new CigarWalk(cigar)
     var span = 0
-    while (i < cigar.length) {
-      val c = cigar.charAt(i)
-      if (c >= '0' && c <= '9') n = n * 10 + (c - '0')
-      else {
-        if (c == 'M' || c == 'D' || c == 'N' || c == '=' || c == 'X') span += n
-        n = 0
-      }
-      i += 1
+    while (ops.next()) {
+      val c = ops.op
+      if (c == 'M' || c == 'D' || c == 'N' || c == '=' || c == 'X') span += ops.len
     }
     span
+  }
+
+  /** Cursor over a CIGAR string's ops: each true [[next]] loads one op
+    * character and the length its digits spell; trailing digits with
+    * no op are ignored. What an unknown op means is the caller's call.
+    */
+  private[graft] final class CigarWalk(cigar: String) {
+    private var i = 0
+    var op: Char = 0
+    var len = 0
+    def next(): Boolean = {
+      var n = 0
+      while (i < cigar.length) {
+        val c = cigar.charAt(i)
+        i += 1
+        if (c >= '0' && c <= '9') n = n * 10 + (c - '0')
+        else { op = c; len = n; return true }
+      }
+      false
+    }
   }
 
   /** Write BAM output. Default: one BAM file per partition under `path`

@@ -15,16 +15,21 @@ object SamText {
   /** FLAG bit tests (SAM spec; reference uses htsjdk's accessors). */
   def flagBit(flag: Column, bit: Int): Column = (flag.bitwiseAND(bit)) =!= 0
 
-  /** Read SAM text into the typed alignment shape (readName, flag,
-    * referenceName, start, mapq, cigar, bases, quality + derived
-    * readUnmapped/duplicateRead/firstOfPair/secondOfPair), built in one
-    * projection so the frame is analyzed once.
+  /** Read SAM text into the typed alignment shape of [[parse]]. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    parse(spark.read.text(path))
+
+  /** Project SAM lines (a `value` string column) into the typed
+    * alignment shape (readName, flag, referenceName, start, mapq,
+    * cigar, bases, quality + derived length/readUnmapped/duplicateRead/
+    * firstOfPair/secondOfPair), built in one projection so the frame is
+    * analyzed once. Header ('@') and blank lines drop.
     */
-  def read(spark: SparkSession, path: String): DataFrame = {
+  def parse(lines: DataFrame): DataFrame = {
     val f = split(col("value"), "\t")
     val flag = f.getItem(1).cast("int")
     val bases = f.getItem(9)
-    spark.read.text(path)
+    lines
       .filter(!col("value").startsWith("@") && length(trim(col("value"))) > 0)
       .select(
         f.getItem(0).as("readName"),

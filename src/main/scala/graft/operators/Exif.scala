@@ -27,28 +27,12 @@ object Exif {
   private val TagOrientation = 0x0112
   private val TagXResolution = 0x011a
   private val TagDateTime = 0x0132
-  private val TagExifIfd = 0x8769
   private val TagPixelX = 0xa002
   private val TagPixelY = 0xa003
 
   final case class Meta(orientation: Int, make: String, model: String,
                         dateTime: String, xresNum: Long, xresDen: Long,
                         pixelX: Long, pixelY: Long, littleEndian: Boolean)
-
-  private final class TiffWriter(littleEndian: Boolean) {
-    val buf = new java.io.ByteArrayOutputStream()
-    def u16(v: Int): Unit =
-      if (littleEndian) { buf.write(v & 0xff); buf.write((v >> 8) & 0xff) }
-      else { buf.write((v >> 8) & 0xff); buf.write(v & 0xff) }
-    def u32(v: Long): Unit =
-      if (littleEndian) {
-        buf.write((v & 0xff).toInt); buf.write(((v >> 8) & 0xff).toInt)
-        buf.write(((v >> 16) & 0xff).toInt); buf.write(((v >> 24) & 0xff).toInt)
-      } else {
-        buf.write(((v >> 24) & 0xff).toInt); buf.write(((v >> 16) & 0xff).toInt)
-        buf.write(((v >> 8) & 0xff).toInt); buf.write((v & 0xff).toInt)
-      }
-  }
 
   /** Build the APP1 payload ("Exif\0\0" + TIFF): IFD0 carries
     * make/model/orientation/XResolution/DateTime and the Exif-IFD
@@ -57,158 +41,51 @@ object Exif {
     * offset arithmetic the parser must get right is genuinely
     * exercised.
     */
-  def buildApp1(meta: Meta): Array[Byte] = {
-    val le = meta.littleEndian
-    // entry = (tag, type, count, either inline value or data bytes)
-    sealed trait V
-    case class Inline(v: Long) extends V
-    case class Data(bytes: Array[Byte]) extends V
-    def ascii(s: String): Array[Byte] = (s + "\u0000").getBytes("US-ASCII")
-    def rational(n: Long, d: Long): Array[Byte] = {
-      val w = new TiffWriter(le); w.u32(n); w.u32(d); w.buf.toByteArray
-    }
-    // IFD0 entries must be sorted by tag per TIFF 6.0
-    val ifd0 = Seq[(Int, Int, Long, V)](
-      (TagMake, 2, ascii(meta.make).length.toLong, Data(ascii(meta.make))),
-      (TagModel, 2, ascii(meta.model).length.toLong, Data(ascii(meta.model))),
-      (TagOrientation, 3, 1L, Inline(meta.orientation.toLong)),
-      (TagXResolution, 5, 1L, Data(rational(meta.xresNum, meta.xresDen))),
-      (TagDateTime, 2, ascii(meta.dateTime).length.toLong,
-        Data(ascii(meta.dateTime))),
-      (TagExifIfd, 4, 1L, Inline(-1L)) // patched to the sub-IFD offset
-    )
-    val exifIfd = Seq[(Int, Int, Long, V)](
-      (TagPixelX, 4, 1L, Inline(meta.pixelX)),
-      (TagPixelY, 4, 1L, Inline(meta.pixelY)))
-
-    // layout: header(8) | IFD0 | exif-IFD | data area
-    val ifd0Size = 2 + ifd0.size * 12 + 4
-    val exifIfdOff = 8L + ifd0Size
-    val exifIfdSize = 2 + exifIfd.size * 12 + 4
-    var dataOff = exifIfdOff + exifIfdSize
-    val data = new java.io.ByteArrayOutputStream()
-    def writeIfd(w: TiffWriter, entries: Seq[(Int, Int, Long, V)]): Unit = {
-      w.u16(entries.size)
-      entries.foreach { case (tag, typ, count, v) =>
-        w.u16(tag); w.u16(typ); w.u32(count)
-        v match {
-          case Inline(x) if tag == TagExifIfd => w.u32(exifIfdOff)
-          case Inline(x) =>
-            // SHORT inline values occupy the FIRST two bytes of the
-            // 4-byte field (type-sized packing, TIFF 6.0 §2)
-            if (typ == 3) { w.u16(x.toInt); w.u16(0) } else w.u32(x)
-          case Data(bytes) if bytes.length <= 4 =>
-            bytes.foreach(b => w.buf.write(b & 0xff))
-            (bytes.length until 4).foreach(_ => w.buf.write(0))
-          case Data(bytes) =>
-            w.u32(dataOff)
-            data.write(bytes, 0, bytes.length)
-            dataOff += bytes.length
-        }
-      }
-      w.u32(0L) // next-IFD pointer: none
-    }
-    val w = new TiffWriter(le)
-    // TIFF header
-    val bom = if (le) "II" else "MM"
-    w.buf.write(bom.getBytes("US-ASCII"), 0, 2)
-    w.u16(42)
-    w.u32(8L) // IFD0 offset
-    writeIfd(w, ifd0)
-    writeIfd(w, exifIfd)
-    val tiff = w.buf.toByteArray ++ data.toByteArray
-    "Exif\u0000\u0000".getBytes("US-ASCII") ++ tiff
-  }
+  def buildApp1(meta: Meta): Array[Byte] = app1Of(meta, None)
 
   final case class Gps(latUdeg: Long, lonUdeg: Long)
 
-  /** Append a GPS sub-IFD (tag 0x8825) to an APP1 built by
-    * [[buildApp1]]: GPSLatitude/GPSLongitude as the spec's 3-RATIONAL
-    * triples (microdegrees in the first rational, zero min/sec — a
-    * legal encoding that keeps the value on the integer lattice) plus
-    * N/E refs. Works by REBUILDING: the GPS IFD and its data area are
-    * appended and IFD0 gains the pointer entry, so offsets stay
-    * consistent.
+  /** [[buildApp1]] plus a GPS sub-IFD (tag 0x8825):
+    * GPSLatitude/GPSLongitude as the spec's 3-RATIONAL triples
+    * (microdegrees in the first rational, zero min/sec — a legal
+    * encoding that keeps the value on the integer lattice) plus N/E
+    * refs.
     */
-  def buildApp1WithGps(meta: Meta, gps: Gps): Array[Byte] = {
-    val base = buildApp1(meta) // "Exif\0\0" + TIFF
-    val le = meta.littleEndian
-    val tiff = base.drop(6)
-    // IFD0 currently has 6 entries; rebuild with a 7th (GPS pointer,
-    // tag 0x8825 sorted after 0x8769) pointing past the existing bytes.
-    // Simplest robust rebuild: regenerate from scratch with the same
-    // writer, mirroring buildApp1's layout plus the GPS block.
-    val w = new TiffWriter(le)
-    def ascii(s: String): Array[Byte] = (s + "\u0000").getBytes("US-ASCII")
-    val mk = ascii(meta.make); val md = ascii(meta.model)
-    val dt = ascii(meta.dateTime)
-    val ifd0N = 7
-    val exifN = 2
-    val gpsN = 4
-    val ifd0Size = 2 + ifd0N * 12 + 4
-    val exifOff = 8L + ifd0Size
-    val exifSize = 2 + exifN * 12 + 4
-    val gpsOff = exifOff + exifSize
-    val gpsSize = 2 + gpsN * 12 + 4
-    var dataOff = gpsOff + gpsSize
-    val data = new java.io.ByteArrayOutputStream()
-    def rat(n: Long, d: Long): Unit = {
-      val t = new TiffWriter(le); t.u32(n); t.u32(d)
-      data.write(t.buf.toByteArray)
-    }
-    def entry(tag: Int, typ: Int, count: Long, inline: Long): Unit = {
-      w.u16(tag); w.u16(typ); w.u32(count)
-      if (typ == 3 && count == 1) { w.u16(inline.toInt); w.u16(0) }
-      else w.u32(inline)
-    }
-    def dataEntry(tag: Int, typ: Int, count: Long,
-                  bytes: Array[Byte]): Unit = {
-      w.u16(tag); w.u16(typ); w.u32(count)
-      if (bytes.length <= 4) {
-        bytes.foreach(b => w.buf.write(b & 0xff))
-        (bytes.length until 4).foreach(_ => w.buf.write(0))
-      } else {
-        w.u32(dataOff)
-        data.write(bytes, 0, bytes.length)
-        dataOff += bytes.length
-      }
-    }
-    w.buf.write((if (le) "II" else "MM").getBytes("US-ASCII"), 0, 2)
-    w.u16(42); w.u32(8L)
-    // IFD0 (sorted by tag)
-    w.u16(ifd0N)
-    dataEntry(TagMake, 2, mk.length.toLong, mk)
-    dataEntry(TagModel, 2, md.length.toLong, md)
-    entry(TagOrientation, 3, 1L, meta.orientation.toLong)
-    dataEntry(TagXResolution, 5, 1L, {
-      val t = new TiffWriter(le); t.u32(meta.xresNum); t.u32(meta.xresDen)
-      t.buf.toByteArray
-    })
-    dataEntry(TagDateTime, 2, dt.length.toLong, dt)
-    entry(TagExifIfd, 4, 1L, exifOff)
-    entry(TagGpsIfd, 4, 1L, gpsOff)
-    w.u32(0L)
-    // Exif sub-IFD
-    w.u16(exifN)
-    entry(TagPixelX, 4, 1L, meta.pixelX)
-    entry(TagPixelY, 4, 1L, meta.pixelY)
-    w.u32(0L)
-    // GPS sub-IFD: refs inline, coordinates in the data area
-    w.u16(gpsN)
-    dataEntry(1, 2, 2L, "N\u0000".getBytes("US-ASCII"))
-    w.u16(2); w.u16(5); w.u32(3L); w.u32(dataOff)
-    rat(gps.latUdeg, 1000000L); rat(0L, 1L); rat(0L, 1L)
-    dataOff += 24
-    dataEntry(3, 2, 2L, "E\u0000".getBytes("US-ASCII"))
-    w.u16(4); w.u16(5); w.u32(3L); w.u32(dataOff)
-    rat(gps.lonUdeg, 1000000L); rat(0L, 1L); rat(0L, 1L)
-    dataOff += 24
-    w.u32(0L)
-    "Exif\u0000\u0000".getBytes("US-ASCII") ++ w.buf.toByteArray ++
-      data.toByteArray
-  }
+  def buildApp1WithGps(meta: Meta, gps: Gps): Array[Byte] =
+    app1Of(meta, Some(gps))
 
-  private val TagGpsIfd = 0x8825
+  private val ExifHeader = "Exif\u0000\u0000".getBytes("US-ASCII")
+
+  /** "Exif\0\0" + the TIFF of `meta`: IFD0, the Exif sub-IFD and, with
+    * `gps`, the GPS sub-IFD, laid out by [[Tiff.writeIfds]].
+    */
+  private def app1Of(meta: Meta, gps: Option[Gps]): Array[Byte] = {
+    import Tiff.{Entry, IfdAt, Num, Raw}
+    val le = meta.littleEndian
+    def ascii(tag: Int, s: String): Entry = {
+      val b = (s + "\u0000").getBytes("US-ASCII")
+      Entry(tag, 2, b.length, Raw(b))
+    }
+    def rationals(vs: Long*): Raw = Raw(Tiff.longs(le, vs: _*))
+    // entries sorted by tag per TIFF 6.0
+    val ifd0 = Seq(
+      ascii(TagMake, meta.make),
+      ascii(TagModel, meta.model),
+      Entry(TagOrientation, 3, 1, Num(meta.orientation)),
+      Entry(TagXResolution, 5, 1, rationals(meta.xresNum, meta.xresDen)),
+      ascii(TagDateTime, meta.dateTime),
+      Entry(Tiff.TagExifIfd, 4, 1, IfdAt(1))) ++
+      gps.map(_ => Entry(Tiff.TagGpsIfd, 4, 1, IfdAt(2)))
+    val exifIfd = Seq(
+      Entry(TagPixelX, 4, 1, Num(meta.pixelX)),
+      Entry(TagPixelY, 4, 1, Num(meta.pixelY)))
+    val gpsIfd = gps.map(g => Seq(
+      ascii(1, "N"),
+      Entry(2, 5, 3, rationals(g.latUdeg, 1000000L, 0L, 1L, 0L, 1L)),
+      ascii(3, "E"),
+      Entry(4, 5, 3, rationals(g.lonUdeg, 1000000L, 0L, 1L, 0L, 1L))))
+    ExifHeader ++ Tiff.writeIfds(le, Seq(ifd0, exifIfd) ++ gpsIfd)
+  }
 
   /** Parse the GPS sub-IFD out of a JPEG's APP1 (None when the payload
     * carries no GPS block): microdegrees from the first rational of
@@ -216,44 +93,29 @@ object Exif {
     */
   def parseGps(jpeg: Array[Byte]): Option[Gps] = {
     appTiffOf(jpeg).flatMap { tiff =>
-      val le = tiff(0) == 'I'.toByte
-      def u16(at: Int): Int =
-        if (le) (tiff(at) & 0xff) | ((tiff(at + 1) & 0xff) << 8)
-        else ((tiff(at) & 0xff) << 8) | (tiff(at + 1) & 0xff)
-      def u32(at: Int): Long =
-        if (le) (tiff(at) & 0xffL) | ((tiff(at + 1) & 0xffL) << 8) |
-          ((tiff(at + 2) & 0xffL) << 16) | ((tiff(at + 3) & 0xffL) << 24)
-        else ((tiff(at) & 0xffL) << 24) | ((tiff(at + 1) & 0xffL) << 16) |
-          ((tiff(at + 2) & 0xffL) << 8) | (tiff(at + 3) & 0xffL)
-      val ifd = u32(4).toInt
-      val n = u16(ifd)
+      val r = new Tiff.Reader(tiff)
       var gpsOff = -1L
-      (0 until n).foreach { i =>
-        val e = ifd + 2 + i * 12
-        if (u16(e) == TagGpsIfd) gpsOff = u32(e + 8)
-      }
+      r.open(r.ifd0)
+      while (r.next()) if (r.tag == Tiff.TagGpsIfd) gpsOff = r.u32(r.at)
       if (gpsOff < 0) None
       else {
-        val g = gpsOff.toInt
-        val gn = u16(g)
         var lat = -1L
         var lon = -1L
         var latSign = 1L
         var lonSign = 1L
-        (0 until gn).foreach { i =>
-          val e = g + 2 + i * 12
-          val tag = u16(e)
+        r.open(gpsOff)
+        while (r.next()) {
+          val tag = r.tag
           if (tag == 1 || tag == 3) {
             // GPSLatitudeRef / GPSLongitudeRef: 2-byte ASCII, inline.
             // S/W hemispheres negate the coordinate in the audit trail.
-            val ref = (tiff(e + 8) & 0xff).toChar
+            val ref = r.u8(r.at).toChar
             require("NSEW".indexOf(ref) >= 0, s"bad GPS ref '$ref'")
             if (tag == 1) latSign = if (ref == 'S') -1L else 1L
             else lonSign = if (ref == 'W') -1L else 1L
           }
           if (tag == 2 || tag == 4) {
-            val vOff = u32(e + 8).toInt
-            val num = u32(vOff); val den = u32(vOff + 4)
+            val num = r.u32(r.at); val den = r.u32(r.at + 4)
             require(den == 1000000L,
               s"GPS coordinate denominator $den outside the udeg contract")
             if (tag == 2) lat = num else lon = num
@@ -265,20 +127,17 @@ object Exif {
     }
   }
 
-  /** Extract the APP1 TIFF bytes of a JPEG (None when absent). */
+  /** Whether the walk's current segment is an Exif APP1. */
+  private def isExif(jpeg: Array[Byte], s: Jpeg.Segments): Boolean =
+    s.marker == 0xe1 && s.end - s.at >= 10 &&
+      new String(jpeg, s.at + 4, 4, "US-ASCII") == "Exif"
+
+  /** The TIFF bytes of a JPEG's first Exif APP1 (None when absent). */
   private def appTiffOf(jpeg: Array[Byte]): Option[Array[Byte]] = {
-    var p = 2
-    while (p + 2 <= jpeg.length) {
-      val m = jpeg(p + 1) & 0xff
-      if (m == 0xd9 || m == 0xda) return None
-      require(p + 4 <= jpeg.length, "truncated JPEG segment")
-      val len = ((jpeg(p + 2) & 0xff) << 8) | (jpeg(p + 3) & 0xff)
-      require(len >= 2 && p + 2 + len <= jpeg.length, "truncated JPEG segment")
-      if (m == 0xe1 && len >= 8 &&
-        new String(jpeg, p + 4, 4, "US-ASCII") == "Exif")
-        return Some(java.util.Arrays.copyOfRange(jpeg, p + 10, p + 2 + len))
-      p += 2 + len
-    }
+    val s = new Jpeg.Segments(jpeg)
+    while (s.next())
+      if (isExif(jpeg, s))
+        return Some(java.util.Arrays.copyOfRange(jpeg, s.at + 10, s.end))
     None
   }
 
@@ -291,29 +150,14 @@ object Exif {
   def stripGps(jpeg: Array[Byte]): Array[Byte] = {
     val meta = parseExif(jpeg).getOrElse(
       throw new IllegalArgumentException("no Exif APP1 to scrub"))
-    // remove the existing APP1
     val out = new java.io.ByteArrayOutputStream()
     out.write(0xff); out.write(0xd8)
-    var p = 2
-    var copying = true
-    while (copying && p + 2 <= jpeg.length) {
-      val m = jpeg(p + 1) & 0xff
-      if (m == 0xda) { // SOS: copy the rest verbatim
-        out.write(jpeg, p, jpeg.length - p)
-        copying = false
-      } else {
-        require(p + 4 <= jpeg.length, "truncated JPEG segment")
-        val len = ((jpeg(p + 2) & 0xff) << 8) | (jpeg(p + 3) & 0xff)
-        require(len >= 2 && p + 2 + len <= jpeg.length,
-          "truncated JPEG segment")
-        val isExif = m == 0xe1 && len >= 8 &&
-          new String(jpeg, p + 4, 4, "US-ASCII") == "Exif"
-        // drop EVERY Exif APP1: a wild JPEG can carry duplicates, and a
-        // survivor would be a silent PII-scrub miss
-        if (!isExif) out.write(jpeg, p, 2 + len)
-        p += 2 + len
-      }
-    }
+    val s = new Jpeg.Segments(jpeg)
+    // drop EVERY Exif APP1: a wild JPEG can carry duplicates, and a
+    // survivor would be a silent PII-scrub miss
+    while (s.next()) if (!isExif(jpeg, s)) out.write(jpeg, s.at, s.end - s.at)
+    // SOS (or EOI): copy the rest verbatim
+    if (s.marker >= 0) out.write(jpeg, s.at, jpeg.length - s.at)
     insertApp1(out.toByteArray, buildApp1(meta))
   }
 
@@ -340,28 +184,7 @@ object Exif {
     * present; throws on a STRUCTURALLY corrupt one (truncated IFD,
     * out-of-range offsets) — malformed metadata must fail loudly.
     */
-  def parseExif(jpeg: Array[Byte]): Option[Meta] = {
-    require(jpeg.length >= 2 && (jpeg(0) & 0xff) == 0xff &&
-      (jpeg(1) & 0xff) == 0xd8, "not a JPEG (no SOI)")
-    var p = 2
-    var tiff: Array[Byte] = null
-    var scanning = true
-    while (scanning && p + 4 <= jpeg.length) {
-      require((jpeg(p) & 0xff) == 0xff, f"bad marker byte at $p")
-      val m = jpeg(p + 1) & 0xff
-      if (m == 0xd9 || m == 0xda) scanning = false // EOI / SOS: no APP1 ahead
-      else {
-        val len = ((jpeg(p + 2) & 0xff) << 8) | (jpeg(p + 3) & 0xff)
-        require(len >= 2 && p + 2 + len <= jpeg.length, "truncated JPEG segment")
-        if (m == 0xe1 && len >= 8 &&
-            new String(jpeg, p + 4, 4, "US-ASCII") == "Exif") {
-          tiff = java.util.Arrays.copyOfRange(jpeg, p + 10, p + 2 + len)
-          scanning = false
-        } else p += 2 + len
-      }
-    }
-    if (tiff == null) None else Some(parseTiff(tiff))
-  }
+  def parseExif(jpeg: Array[Byte]): Option[Meta] = appTiffOf(jpeg).map(parseTiff)
 
   /** Parse a raw TIFF byte stream (either byte order) into [[Meta]] —
     * shared by the JPEG APP1 path and PNG's standardized eXIf chunk
@@ -369,23 +192,7 @@ object Exif {
     * Exif-plus-two-NUL prefix, per the PNG 1.2 extension spec).
     */
   def parseTiff(tiff: Array[Byte]): Meta = {
-    require(tiff.length >= 8, "truncated TIFF header")
-    val le = tiff(0) == 'I'.toByte && tiff(1) == 'I'.toByte
-    require(le || (tiff(0) == 'M'.toByte && tiff(1) == 'M'.toByte),
-      "bad TIFF byte-order mark")
-    def u16(at: Int): Int = {
-      require(at >= 0 && at + 2 <= tiff.length, s"TIFF read past end at $at")
-      if (le) (tiff(at) & 0xff) | ((tiff(at + 1) & 0xff) << 8)
-      else ((tiff(at) & 0xff) << 8) | (tiff(at + 1) & 0xff)
-    }
-    def u32(at: Int): Long = {
-      require(at >= 0 && at + 4 <= tiff.length, s"TIFF read past end at $at")
-      if (le) (tiff(at) & 0xffL) | ((tiff(at + 1) & 0xffL) << 8) |
-        ((tiff(at + 2) & 0xffL) << 16) | ((tiff(at + 3) & 0xffL) << 24)
-      else ((tiff(at) & 0xffL) << 24) | ((tiff(at + 1) & 0xffL) << 16) |
-        ((tiff(at + 2) & 0xffL) << 8) | (tiff(at + 3) & 0xffL)
-    }
-    require(u16(2) == 42, "bad TIFF magic")
+    val r = new Tiff.Reader(tiff)
     var orientation = 1
     var make = ""; var model = ""; var dateTime = ""
     var xn = 0L; var xd = 1L; var px = 0L; var py = 0L
@@ -396,35 +203,27 @@ object Exif {
       if (raw.nonEmpty && raw.last == '\u0000') raw.dropRight(1) else raw
     }
     def walkIfd(ifdOff: Long): Unit = {
-      val base = ifdOff.toInt
-      val n = u16(base)
-      (0 until n).foreach { i =>
-        val e = base + 2 + i * 12
-        val tag = u16(e); val typ = u16(e + 2); val count = u32(e + 4)
-        val valueSize = (typ match {
-          case 1 | 2 | 7 => 1L; case 3 => 2L; case 4 | 9 => 4L
-          case 5 | 10 => 8L
-          case other => throw new IllegalArgumentException(s"TIFF type $other")
-        }) * count
-        val vOff = if (valueSize <= 4) e + 8 else u32(e + 8).toInt
-        tag match {
-          case TagOrientation => orientation = u16(vOff)
-          case TagMake => make = asciiAt(vOff, count.toInt)
-          case TagModel => model = asciiAt(vOff, count.toInt)
-          case TagDateTime => dateTime = asciiAt(vOff, count.toInt)
-          case TagXResolution => xn = u32(vOff); xd = u32(vOff + 4)
-          case TagPixelX => px = if (typ == 3) u16(vOff).toLong else u32(vOff)
-          case TagPixelY => py = if (typ == 3) u16(vOff).toLong else u32(vOff)
-          case TagExifIfd => exifIfdOff = u32(vOff)
+      r.open(ifdOff)
+      while (r.next()) {
+        val at = r.at
+        r.tag match {
+          case TagOrientation => orientation = r.u16(at)
+          case TagMake => make = asciiAt(at, r.count.toInt)
+          case TagModel => model = asciiAt(at, r.count.toInt)
+          case TagDateTime => dateTime = asciiAt(at, r.count.toInt)
+          case TagXResolution => xn = r.u32(at); xd = r.u32(at + 4)
+          case TagPixelX => px = if (r.typ == 3) r.u16(at).toLong else r.u32(at)
+          case TagPixelY => py = if (r.typ == 3) r.u16(at).toLong else r.u32(at)
+          case Tiff.TagExifIfd => exifIfdOff = r.u32(at)
           case _ => // unknown tag: skip (forward compatibility)
         }
       }
     }
-    walkIfd(u32(4))
+    walkIfd(r.ifd0)
     if (exifIfdOff > 0) walkIfd(exifIfdOff)
     require(orientation >= 1 && orientation <= 8,
       s"Exif orientation $orientation out of range")
-    Meta(orientation, make, model, dateTime, xn, xd, px, py, le)
+    Meta(orientation, make, model, dateTime, xn, xd, px, py, r.littleEndian)
   }
 
   /** Splice an eXIf chunk (raw TIFF payload, no JPEG prefix) into a

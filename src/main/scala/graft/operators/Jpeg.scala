@@ -174,10 +174,62 @@ object Jpeg {
     t
   }
 
-  /** Per-component block encoder: gather an 8×8 block from a plane
-    * (edge replication past the plane bounds), level shift, FDCT,
-    * quantize, DC-diff + AC-run-length Huffman. One instance per scan
-    * component — `pred` is that component's DC predictor.
+  /** The encoders' output stream: raw bytes plus T.81 B.1 markers and
+    * length-counted segments.
+    */
+  private final class SegmentWriter extends java.io.ByteArrayOutputStream {
+    def marker(m: Int): Unit = { write(0xff); write(m) }
+    def segment(m: Int, body: Array[Int]): Unit = {
+      marker(m)
+      val len = body.length + 2
+      write(len >> 8); write(len & 0xff)
+      body.foreach(write)
+    }
+    /** DQT for table `tq`: natural order in, zigzag on the wire. */
+    def dqt(tq: Int, quant: Array[Int]): Unit = segment(0xdb, tq +: Zigzag.map(quant))
+    /** DHT for class/id byte `tcTh`. */
+    def dht(tcTh: Int, bits: Array[Int], vals: Array[Byte]): Unit =
+      segment(0xc4, tcTh +: (bits ++ vals.map(_ & 0xff)))
+  }
+
+  /** Gather the 8×8 block at (ox, oy) of a plane (edge replication
+    * past the plane bounds), level shift, FDCT and quantize it into
+    * `coef(at until at + 64)`, natural order; `block` is the caller's
+    * 64-entry scratch. A uniform block skips the transform: its FDCT
+    * is exactly DC = 8·(v−128) with every AC 0 (the encode twin of the
+    * decoder's dcval shortcut; bit-identical to the full transform).
+    */
+  private def quantizeBlock(plane: Array[Byte], pw: Int, ph: Int, ox: Int, oy: Int,
+                            quant: Array[Int], block: Array[Double],
+                            coef: Array[Int], at: Int): Unit = {
+    var uniform = true
+    val first = plane(math.min(oy, ph - 1) * pw + math.min(ox, pw - 1)) & 0xff
+    var y = 0
+    while (y < 8) {
+      val sy = math.min(oy + y, ph - 1)
+      var x = 0
+      while (x < 8) {
+        val sx = math.min(ox + x, pw - 1)
+        val v = plane(sy * pw + sx) & 0xff
+        if (v != first) uniform = false
+        block(y * 8 + x) = v - 128.0
+        x += 1
+      }
+      y += 1
+    }
+    if (uniform) {
+      java.util.Arrays.fill(coef, at, at + 64, 0)
+      coef(at) = Math.round(8.0 * (first - 128) / quant(0)).toInt
+    } else {
+      fdct(block)
+      var i = 0
+      while (i < 64) { coef(at + i) = Math.round(block(i) / quant(i)).toInt; i += 1 }
+    }
+  }
+
+  /** Per-component block encoder: [[quantizeBlock]], then DC-diff +
+    * AC-run-length Huffman. One instance per scan component — `pred`
+    * is that component's DC predictor.
     */
   private final class BlockEncoder(bw: BitWriter, quant: Array[Int],
                                    dcTab: Array[(Int, Int)],
@@ -186,32 +238,7 @@ object Jpeg {
     private val coef = new Array[Int](64)
     var pred = 0
     def encode(plane: Array[Byte], pw: Int, ph: Int, ox: Int, oy: Int): Unit = {
-      var uniform = true
-      val first = plane(math.min(oy, ph - 1) * pw + math.min(ox, pw - 1)) & 0xff
-      var y = 0
-      while (y < 8) {
-        val sy = math.min(oy + y, ph - 1)
-        var x = 0
-        while (x < 8) {
-          val sx = math.min(ox + x, pw - 1)
-          val v = plane(sy * pw + sx) & 0xff
-          if (v != first) uniform = false
-          block(y * 8 + x) = v - 128.0
-          x += 1
-        }
-        y += 1
-      }
-      if (uniform) {
-        // FDCT of a constant block is exactly DC = 8·(v−128), ACs = 0
-        // (the encode twin of the decoder's dcval shortcut) — skip the
-        // two 8-point passes; bit-identical to the full transform
-        java.util.Arrays.fill(coef, 0)
-        coef(0) = Math.round(8.0 * (first - 128) / quant(0)).toInt
-      } else {
-        fdct(block)
-        var i = 0
-        while (i < 64) { coef(i) = Math.round(block(i) / quant(i)).toInt; i += 1 }
-      }
+      quantizeBlock(plane, pw, ph, ox, oy, quant, block, coef, 0)
       // DC
       val diff = coef(0) - pred
       pred = coef(0)
@@ -255,23 +282,16 @@ object Jpeg {
       s"bad dimensions: $width x $height for ${pixels.length} pixels")
     require(quant.length == 64 && quant.forall(q => q >= 1 && q <= 255),
       "quant table must be 64 entries in 1..255")
-    val out = new java.io.ByteArrayOutputStream()
-    def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
-    def segment(m: Int, body: Array[Int]): Unit = {
-      marker(m)
-      val len = body.length + 2
-      out.write(len >> 8); out.write(len & 0xff)
-      body.foreach(out.write)
-    }
-    marker(0xd8) // SOI
-    segment(0xdb, 0 +: Zigzag.map(quant)) // DQT: Pq=0/Tq=0, zigzag order
-    segment(0xc0, Array(8, height >> 8, height & 0xff, width >> 8,
+    val out = new SegmentWriter
+    out.marker(0xd8) // SOI
+    out.dqt(0, quant)
+    out.segment(0xc0, Array(8, height >> 8, height & 0xff, width >> 8,
       width & 0xff, 1, 1, 0x11, 0)) // SOF0: 1 component, 1x1, table 0
-    segment(0xc4, 0x00 +: (DcBits ++ DcVals.map(_ & 0xff)))
-    segment(0xc4, 0x10 +: (AcBits ++ AcVals.map(_ & 0xff)))
+    out.dht(0x00, DcBits, DcVals)
+    out.dht(0x10, AcBits, AcVals)
     if (restartInterval > 0)
-      segment(0xdd, Array(restartInterval >> 8, restartInterval & 0xff))
-    segment(0xda, Array(1, 1, 0x00, 0, 63, 0)) // SOS
+      out.segment(0xdd, Array(restartInterval >> 8, restartInterval & 0xff))
+    out.segment(0xda, Array(1, 1, 0x00, 0, 63, 0)) // SOS
     val bw = new BitWriter(out)
     val enc = new BlockEncoder(bw, quant,
       buildEncodeTable(DcBits, DcVals), buildEncodeTable(AcBits, AcVals))
@@ -285,7 +305,7 @@ object Jpeg {
       while (bx < bw8) {
         if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
           bw.flush()
-          marker(0xd0 + rstIdx)
+          out.marker(0xd0 + rstIdx)
           rstIdx = (rstIdx + 1) % 8
           enc.pred = 0
         }
@@ -296,8 +316,51 @@ object Jpeg {
       by += 1
     }
     bw.flush()
-    marker(0xd9) // EOI
+    out.marker(0xd9) // EOI
     out.toByteArray
+  }
+
+  /** The color encoders' argument checks; returns the chroma plane
+    * size (ceil(width/hSamp), ceil(height/vSamp)).
+    */
+  private def colorPlaneDims(width: Int, height: Int, yPlane: Array[Byte],
+                             cbPlane: Array[Byte], crPlane: Array[Byte],
+                             hSamp: Int, vSamp: Int, quantY: Array[Int],
+                             quantC: Array[Int]): (Int, Int) = {
+    require(width > 0 && height > 0 && yPlane.length == width * height,
+      s"bad dimensions: $width x $height for ${yPlane.length} luma pixels")
+    require(hSamp >= 1 && hSamp <= 2 && vSamp >= 1 && vSamp <= 2,
+      s"sampling factors ${hSamp}x$vSamp outside 1..2 (4:4:4/4:2:2/4:2:0)")
+    val cw = (width + hSamp - 1) / hSamp
+    val ch = (height + vSamp - 1) / vSamp
+    require(cbPlane.length == cw * ch && crPlane.length == cw * ch,
+      s"chroma planes must be $cw x $ch for ${hSamp}x$vSamp sampling")
+    Seq(quantY, quantC).foreach(q => require(
+      q.length == 64 && q.forall(v => v >= 1 && v <= 255),
+      "quant tables must be 64 entries in 1..255"))
+    (cw, ch)
+  }
+
+  /** SOI, APP0 JFIF, the luma/chroma DQTs and the 3-component frame
+    * header `sof` (SOF0 baseline, SOF2 progressive): Y sampled
+    * `hSamp`×`vSamp` with tables 0, Cb/Cr 1×1 with tables 1.
+    */
+  private def colorHeader(sof: Int, width: Int, height: Int, hSamp: Int,
+                          vSamp: Int, quantY: Array[Int],
+                          quantC: Array[Int]): SegmentWriter = {
+    val out = new SegmentWriter
+    out.marker(0xd8) // SOI
+    // APP0 JFIF v1.02, no thumbnail: declares the full-range YCbCr
+    // interpretation every JFIF reader assumes for 3-component frames
+    out.segment(0xe0, Array('J', 'F', 'I', 'F', 0, 1, 2, 0, 0, 1, 0, 1, 0, 0))
+    out.dqt(0, quantY)
+    out.dqt(1, quantC)
+    out.segment(sof, Array(8, height >> 8, height & 0xff, width >> 8,
+      width & 0xff, 3,
+      1, (hSamp << 4) | vSamp, 0, // Y: tables 0
+      2, 0x11, 1, // Cb: 1x1, tables 1
+      3, 0x11, 1)) // Cr
+    out
   }
 
   /** Encode a COLOR baseline sequential JPEG from YCbCr planes (JFIF
@@ -316,43 +379,16 @@ object Jpeg {
                   hSamp: Int = 2, vSamp: Int = 2,
                   quantY: Array[Int] = FlatQuant, quantC: Array[Int] = FlatQuant,
                   restartInterval: Int = 0): Array[Byte] = {
-    require(width > 0 && height > 0 && yPlane.length == width * height,
-      s"bad dimensions: $width x $height for ${yPlane.length} luma pixels")
-    require(hSamp >= 1 && hSamp <= 2 && vSamp >= 1 && vSamp <= 2,
-      s"sampling factors ${hSamp}x$vSamp outside 1..2 (4:4:4/4:2:2/4:2:0)")
-    val cw = (width + hSamp - 1) / hSamp
-    val ch = (height + vSamp - 1) / vSamp
-    require(cbPlane.length == cw * ch && crPlane.length == cw * ch,
-      s"chroma planes must be $cw x $ch for ${hSamp}x$vSamp sampling")
-    Seq(quantY, quantC).foreach(q => require(
-      q.length == 64 && q.forall(v => v >= 1 && v <= 255),
-      "quant tables must be 64 entries in 1..255"))
-    val out = new java.io.ByteArrayOutputStream()
-    def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
-    def segment(m: Int, body: Array[Int]): Unit = {
-      marker(m)
-      val len = body.length + 2
-      out.write(len >> 8); out.write(len & 0xff)
-      body.foreach(out.write)
-    }
-    marker(0xd8) // SOI
-    // APP0 JFIF v1.02, no thumbnail: declares the full-range YCbCr
-    // interpretation every JFIF reader assumes for 3-component frames
-    segment(0xe0, Array('J', 'F', 'I', 'F', 0, 1, 2, 0, 0, 1, 0, 1, 0, 0))
-    segment(0xdb, 0x00 +: Zigzag.map(quantY)) // DQT Tq=0
-    segment(0xdb, 0x01 +: Zigzag.map(quantC)) // DQT Tq=1
-    segment(0xc0, Array(8, height >> 8, height & 0xff, width >> 8,
-      width & 0xff, 3,
-      1, (hSamp << 4) | vSamp, 0, // Y: tables 0
-      2, 0x11, 1, // Cb: 1x1, tables 1
-      3, 0x11, 1)) // Cr
-    segment(0xc4, 0x00 +: (DcBits ++ DcVals.map(_ & 0xff)))
-    segment(0xc4, 0x10 +: (AcBits ++ AcVals.map(_ & 0xff)))
-    segment(0xc4, 0x01 +: (DcBitsC ++ DcValsC.map(_ & 0xff)))
-    segment(0xc4, 0x11 +: (AcBitsC ++ AcValsC.map(_ & 0xff)))
+    val (cw, ch) = colorPlaneDims(width, height, yPlane, cbPlane, crPlane,
+      hSamp, vSamp, quantY, quantC)
+    val out = colorHeader(0xc0, width, height, hSamp, vSamp, quantY, quantC)
+    out.dht(0x00, DcBits, DcVals)
+    out.dht(0x10, AcBits, AcVals)
+    out.dht(0x01, DcBitsC, DcValsC)
+    out.dht(0x11, AcBitsC, AcValsC)
     if (restartInterval > 0)
-      segment(0xdd, Array(restartInterval >> 8, restartInterval & 0xff))
-    segment(0xda, Array(3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0)) // SOS
+      out.segment(0xdd, Array(restartInterval >> 8, restartInterval & 0xff))
+    out.segment(0xda, Array(3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0)) // SOS
     val bw = new BitWriter(out)
     val encY = new BlockEncoder(bw, quantY,
       buildEncodeTable(DcBits, DcVals), buildEncodeTable(AcBits, AcVals))
@@ -370,7 +406,7 @@ object Jpeg {
       while (mx < mcusX) {
         if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
           bw.flush()
-          marker(0xd0 + rstIdx)
+          out.marker(0xd0 + rstIdx)
           rstIdx = (rstIdx + 1) % 8
           encY.pred = 0; encCb.pred = 0; encCr.pred = 0
         }
@@ -392,7 +428,7 @@ object Jpeg {
       my += 1
     }
     bw.flush()
-    marker(0xd9) // EOI
+    out.marker(0xd9) // EOI
     out.toByteArray
   }
 
@@ -422,37 +458,12 @@ object Jpeg {
                              hSamp: Int = 2, vSamp: Int = 2,
                              quantY: Array[Int] = FlatQuant,
                              quantC: Array[Int] = FlatQuant): Array[Byte] = {
-    require(width > 0 && height > 0 && yPlane.length == width * height,
-      s"bad dimensions: $width x $height for ${yPlane.length} luma pixels")
-    require(hSamp >= 1 && hSamp <= 2 && vSamp >= 1 && vSamp <= 2,
-      s"sampling factors ${hSamp}x$vSamp outside 1..2 (4:4:4/4:2:2/4:2:0)")
-    val cw = (width + hSamp - 1) / hSamp
-    val chh = (height + vSamp - 1) / vSamp
-    require(cbPlane.length == cw * chh && crPlane.length == cw * chh,
-      s"chroma planes must be $cw x $chh for ${hSamp}x$vSamp sampling")
-    Seq(quantY, quantC).foreach(q => require(
-      q.length == 64 && q.forall(v => v >= 1 && v <= 255),
-      "quant tables must be 64 entries in 1..255"))
-    val out = new java.io.ByteArrayOutputStream()
-    def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
-    def segment(m: Int, body: Array[Int]): Unit = {
-      marker(m)
-      val len = body.length + 2
-      out.write(len >> 8); out.write(len & 0xff)
-      body.foreach(out.write)
-    }
-    marker(0xd8) // SOI
-    segment(0xe0, Array('J', 'F', 'I', 'F', 0, 1, 2, 0, 0, 1, 0, 1, 0, 0))
-    segment(0xdb, 0x00 +: Zigzag.map(quantY))
-    segment(0xdb, 0x01 +: Zigzag.map(quantC))
-    segment(0xc2, Array(8, height >> 8, height & 0xff, width >> 8, // SOF2
-      width & 0xff, 3,
-      1, (hSamp << 4) | vSamp, 0,
-      2, 0x11, 1,
-      3, 0x11, 1))
-    segment(0xc4, 0x00 +: (DcBits ++ DcVals.map(_ & 0xff)))
-    segment(0xc4, 0x01 +: (DcBitsC ++ DcValsC.map(_ & 0xff)))
-    segment(0xc4, 0x10 +: (ProgAcBits ++ ProgAcVals.map(_ & 0xff)))
+    val (cw, chh) = colorPlaneDims(width, height, yPlane, cbPlane, crPlane,
+      hSamp, vSamp, quantY, quantC)
+    val out = colorHeader(0xc2, width, height, hSamp, vSamp, quantY, quantC)
+    out.dht(0x00, DcBits, DcVals)
+    out.dht(0x01, DcBitsC, DcValsC)
+    out.dht(0x10, ProgAcBits, ProgAcVals)
     val mcusX = (width + 8 * hSamp - 1) / (8 * hSamp)
     val mcusY = (height + 8 * vSamp - 1) / (8 * vSamp)
     // quantized coefficient grids, padded to the interleaved MCU grid
@@ -470,36 +481,8 @@ object Jpeg {
         while (bRow < bh) {
           var bCol = 0
           while (bCol < bw) {
-            var uniform = true
-            val first = plane(math.min(bRow * 8, ph - 1) * pw +
-              math.min(bCol * 8, pw - 1)) & 0xff
-            var y = 0
-            while (y < 8) {
-              val sy = math.min(bRow * 8 + y, ph - 1)
-              var x = 0
-              while (x < 8) {
-                val sx = math.min(bCol * 8 + x, pw - 1)
-                val v = plane(sy * pw + sx) & 0xff
-                if (v != first) uniform = false
-                block(y * 8 + x) = v - 128.0
-                x += 1
-              }
-              y += 1
-            }
-            val base = (bRow * bw + bCol) * 64
-            if (uniform) {
-              // constant block: DC = 8·(v−128) exactly, ACs = 0
-              var i = 0
-              while (i < 64) { coef(base + i) = 0; i += 1 }
-              coef(base) = Math.round(8.0 * (first - 128) / q(0)).toInt
-            } else {
-              fdct(block)
-              var i = 0
-              while (i < 64) {
-                coef(base + i) = Math.round(block(i) / q(i)).toInt
-                i += 1
-              }
-            }
+            quantizeBlock(plane, pw, ph, bCol * 8, bRow * 8, q, block, coef,
+              (bRow * bw + bCol) * 64)
             bCol += 1
           }
           bRow += 1
@@ -538,7 +521,7 @@ object Jpeg {
       }
     }
     // scan 1: interleaved DC first, Al=1 — DPCM over (DC >> 1)
-    segment(0xda, Array(3, 1, 0x00, 2, 0x10, 3, 0x10, 0, 0, 0x01))
+    out.segment(0xda, Array(3, 1, 0x00, 2, 0x10, 3, 0x10, 0, 0, 0x01))
     val bw1 = new BitWriter(out)
     val preds = new Array[Int](3)
     mcuWalk { (ci, bi) =>
@@ -552,7 +535,7 @@ object Jpeg {
     }
     bw1.flush()
     // scan 2: interleaved DC refinement, Ah=1 Al=0 — the DC low bit
-    segment(0xda, Array(3, 1, 0x00, 2, 0x10, 3, 0x10, 0, 0, 0x10))
+    out.segment(0xda, Array(3, 1, 0x00, 2, 0x10, 3, 0x10, 0, 0, 0x10))
     val bw2 = new BitWriter(out)
     mcuWalk { (ci, bi) => bw2.put(pcs(ci).coef(bi * 64) & 1, 1) }
     bw2.flush()
@@ -560,7 +543,7 @@ object Jpeg {
     var ci = 0
     while (ci < 3) {
       val c = pcs(ci)
-      segment(0xda, Array(1, ci + 1, 0x00, 1, 63, 0x00))
+      out.segment(0xda, Array(1, ci + 1, 0x00, 1, 63, 0x00))
       val bw3 = new BitWriter(out)
       var eobrun = 0
       def flushEob(): Unit = if (eobrun > 0) {
@@ -616,7 +599,7 @@ object Jpeg {
       bw3.flush()
       ci += 1
     }
-    marker(0xd9) // EOI
+    out.marker(0xd9) // EOI
     out.toByteArray
   }
 
@@ -658,6 +641,41 @@ object Jpeg {
         u += 1
       }
       c += 1
+    }
+  }
+
+  // ---- header segments ------------------------------------------------------
+
+  /** Cursor over a JPEG's header segments (T.81 B.1): construction
+    * checks SOI, and each true [[next]] steps onto the following
+    * marker — `at` its offset, `marker` its code, `end` the offset
+    * after its length-counted segment (`at + 2` for the standalone SOI
+    * and RSTn). [[next]] returns false at SOS or EOI (`at` points at
+    * it) or when fewer than two bytes remain (`marker` -1). A marker
+    * byte other than 0xFF or a length past the buffer fails with
+    * IllegalArgumentException.
+    */
+  private[graft] final class Segments(bytes: Array[Byte]) {
+    require(bytes.length >= 2 && (bytes(0) & 0xff) == 0xff &&
+      (bytes(1) & 0xff) == 0xd8, "not a JPEG (no SOI)")
+    var at = 2
+    var marker = -1
+    var end = 2
+    def next(): Boolean = {
+      at = end
+      marker = -1
+      if (at + 2 > bytes.length) return false
+      require((bytes(at) & 0xff) == 0xff, s"bad marker byte at $at")
+      marker = bytes(at + 1) & 0xff
+      if (marker == 0xd9 || marker == 0xda) return false
+      if (marker >= 0xd0 && marker <= 0xd8) end = at + 2
+      else {
+        require(at + 4 <= bytes.length, "truncated JPEG segment")
+        val len = ((bytes(at + 2) & 0xff) << 8) | (bytes(at + 3) & 0xff)
+        require(len >= 2 && at + 2 + len <= bytes.length, "truncated JPEG segment")
+        end = at + 2 + len
+      }
+      true
     }
   }
 

@@ -552,35 +552,21 @@ object Multimodal {
   }
 
   /** JPEG (width, height) via the SOF marker walk — the second real
-    * container format: scans the marker stream past APPn/DQT/etc. to
-    * the first start-of-frame (SOF0-SOF15, excluding DHT/DAC/RST) and
-    * reads the 2-byte big-endian dimensions. None if not a JPEG or no
-    * SOF found.
+    * container format: walks the header segments ([[Jpeg.Segments]])
+    * past APPn/DQT/etc. to the first start-of-frame (SOF0-SOF15,
+    * excluding DHT/DAC/JPG) and reads the 2-byte big-endian dimensions.
+    * None if not a JPEG, no SOF comes before SOS/EOI, or the header is
+    * malformed.
     */
-  def jpegDims(bytes: Array[Byte]): Option[(Int, Int)] = {
-    if (bytes.length < 4 || (bytes(0) & 0xff) != 0xff || (bytes(1) & 0xff) != 0xd8)
-      return None
-    var p = 2
-    while (p + 4 <= bytes.length) {
-      if ((bytes(p) & 0xff) != 0xff) return None
-      val marker = bytes(p + 1) & 0xff
-      if (marker == 0xd8 || (marker >= 0xd0 && marker <= 0xd7)) { p += 2 }
-      else {
-        val segLen = ((bytes(p + 2) & 0xff) << 8) | (bytes(p + 3) & 0xff)
-        val isSof = marker >= 0xc0 && marker <= 0xcf &&
-          marker != 0xc4 && marker != 0xc8 && marker != 0xcc
-        if (isSof) {
-          if (p + 9 > bytes.length) return None
-          val h = ((bytes(p + 5) & 0xff) << 8) | (bytes(p + 6) & 0xff)
-          val w = ((bytes(p + 7) & 0xff) << 8) | (bytes(p + 8) & 0xff)
-          return Some((w, h))
-        }
-        if (marker == 0xda) return None // entropy stream, no SOF seen
-        p += 2 + segLen
-      }
-    }
-    None
-  }
+  def jpegDims(bytes: Array[Byte]): Option[(Int, Int)] =
+    try {
+      val s = new Jpeg.Segments(bytes)
+      def isSof(m: Int) = m >= 0xc0 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc
+      while (s.next() && !isSof(s.marker)) {}
+      def u16(at: Int) = ((bytes(at) & 0xff) << 8) | (bytes(at + 1) & 0xff)
+      if (isSof(s.marker) && s.end >= s.at + 9) Some((u16(s.at + 7), u16(s.at + 5)))
+      else None
+    } catch { case _: IllegalArgumentException => None }
 
   /** Deterministic image-pixel rule shared with the DuckDB oracle:
     * pixels = the text's UTF-8 bytes, '.'-padded (0x2e) to a whole

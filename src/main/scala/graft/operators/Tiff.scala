@@ -39,6 +39,152 @@ object Tiff {
   val CompPackBits = 32773
 
   // ------------------------------------------------------------------
+  // IFD codec (TIFF 6.0 §2) — the byte layer under this codec and
+  // Exif's APP1 / eXIf metadata
+  // ------------------------------------------------------------------
+
+  /** Sub-IFD pointer tags (Exif 2.32 §4.6.3). */
+  private[graft] val TagExifIfd = 0x8769
+  private[graft] val TagGpsIfd = 0x8825
+
+  /** Bytes per value of a field type: BYTE/ASCII/SBYTE/UNDEFINED 1,
+    * SHORT 2, LONG/SLONG 4, RATIONAL/SRATIONAL 8.
+    */
+  private def typeSize(typ: Int): Int = typ match {
+    case 1 | 2 | 6 | 7 => 1; case 3 => 2; case 4 | 9 => 4; case 5 | 10 => 8
+    case o => throw new IllegalArgumentException(s"TIFF type $o")
+  }
+
+  /** Bounds-checked reader over a TIFF byte stream in either byte
+    * order; construction checks the byte-order mark and the magic.
+    * [[open]] puts an entry cursor on an IFD and each true [[next]]
+    * loads one entry: `tag`, `typ`, `count`, and `at`, the offset of
+    * its value — the entry's own 4-byte field when the value fits,
+    * else the offset that field holds. A sub-IFD pointer must point
+    * inside the stream. Every read past the end fails with
+    * IllegalArgumentException.
+    */
+  private[graft] final class Reader(bytes: Array[Byte]) {
+    require(bytes.length >= 8, "truncated TIFF header")
+    val littleEndian: Boolean = bytes(0) == 'I'.toByte && bytes(1) == 'I'.toByte
+    require(littleEndian || (bytes(0) == 'M'.toByte && bytes(1) == 'M'.toByte),
+      "bad TIFF byte-order mark")
+    require(u16(2) == 42, "bad TIFF magic")
+
+    private def check(at: Int, n: Int): Unit =
+      require(at >= 0 && at + n <= bytes.length, s"TIFF read past end at $at")
+    def u8(at: Int): Int = { check(at, 1); bytes(at) & 0xff }
+    def u16(at: Int): Int = {
+      check(at, 2)
+      if (littleEndian) (bytes(at) & 0xff) | ((bytes(at + 1) & 0xff) << 8)
+      else ((bytes(at) & 0xff) << 8) | (bytes(at + 1) & 0xff)
+    }
+    def u32(at: Int): Long = {
+      check(at, 4)
+      if (littleEndian) (bytes(at) & 0xffL) | ((bytes(at + 1) & 0xffL) << 8) |
+        ((bytes(at + 2) & 0xffL) << 16) | ((bytes(at + 3) & 0xffL) << 24)
+      else ((bytes(at) & 0xffL) << 24) | ((bytes(at + 1) & 0xffL) << 16) |
+        ((bytes(at + 2) & 0xffL) << 8) | (bytes(at + 3) & 0xffL)
+    }
+    def ifd0: Long = u32(4)
+
+    var tag = 0
+    var typ = 0
+    var count = 0L
+    var at = 0
+    private var base = 0
+    private var n = 0
+    private var i = 0
+    def open(ifd: Long): Unit = { base = ifd.toInt; n = u16(base); i = 0 }
+    def next(): Boolean = i < n && {
+      val e = base + 2 + 12 * i
+      tag = u16(e); typ = u16(e + 2); count = u32(e + 4)
+      at = if (typeSize(typ) * count <= 4) e + 8 else u32(e + 8).toInt
+      if (tag == TagExifIfd || tag == TagGpsIfd) {
+        val ptr = u32(at)
+        require(ptr + 2 <= bytes.length, s"TIFF sub-IFD pointer $ptr past end")
+      }
+      i += 1
+      true
+    }
+  }
+
+  /** An IFD entry for [[writeIfds]]. */
+  private[graft] final case class Entry(tag: Int, typ: Int, count: Long, value: Value)
+  private[graft] sealed trait Value
+  /** A SHORT (first two bytes of the field) or LONG in the entry itself. */
+  private[graft] final case class Num(v: Long) extends Value
+  /** Value bytes: in the entry's field when they fit in 4, else in the
+    * data area.
+    */
+  private[graft] final case class Raw(bytes: Array[Byte]) extends Value
+  /** The offset of the `index`-th IFD of the same stream. */
+  private[graft] final case class IfdAt(index: Int) extends Value
+  /** The LONG offsets of the strips trailing the data area. */
+  private[graft] case object StripAt extends Value
+
+  /** A byte buffer that writes SHORT/LONG fields in one byte order. */
+  private final class Out(littleEndian: Boolean)
+      extends java.io.ByteArrayOutputStream {
+    def u16(v: Int): Unit =
+      if (littleEndian) { write(v & 0xff); write((v >> 8) & 0xff) }
+      else { write((v >> 8) & 0xff); write(v & 0xff) }
+    def u32(v: Long): Unit =
+      if (littleEndian) { u16((v & 0xffff).toInt); u16(((v >> 16) & 0xffff).toInt) }
+      else { u16(((v >> 16) & 0xffff).toInt); u16((v & 0xffff).toInt) }
+  }
+
+  /** LONG values as field bytes in the given byte order. */
+  private[graft] def longs(littleEndian: Boolean, vs: Long*): Array[Byte] = {
+    val o = new Out(littleEndian); vs.foreach(o.u32); o.toByteArray
+  }
+
+  /** Lay out a TIFF stream: header | the IFDs in order (each with a
+    * zero next-IFD pointer) | data area (out-of-line values in entry
+    * order) | strips. Entries come sorted by tag (TIFF 6.0 §2).
+    */
+  private[graft] def writeIfds(littleEndian: Boolean, ifds: Seq[Seq[Entry]],
+                               strips: Seq[Array[Byte]] = Nil): Array[Byte] = {
+    val ifdOffsets = ifds.scanLeft(8L)((off, es) => off + 2 + 12 * es.size + 4)
+    val dataStart = ifdOffsets.last
+    val outOfLine = ifds.flatten.iterator.map(_.value match {
+      case Raw(b) => b.length
+      case StripAt => 4 * strips.size
+      case _ => 0
+    }).filter(_ > 4).sum
+    val stripOffsets = longs(littleEndian,
+      strips.scanLeft(dataStart + outOfLine)(_ + _.length).init: _*)
+    val out = new Out(littleEndian)
+    val data = new Out(littleEndian)
+    def raw(b: Array[Byte]): Unit =
+      if (b.length <= 4) {
+        out.write(b, 0, b.length)
+        (b.length until 4).foreach(_ => out.write(0))
+      } else {
+        out.u32(dataStart + data.size)
+        data.write(b, 0, b.length)
+      }
+    val bom = if (littleEndian) 'I' else 'M'
+    out.write(bom); out.write(bom); out.u16(42); out.u32(8)
+    ifds.foreach { es =>
+      out.u16(es.size)
+      es.foreach { e =>
+        out.u16(e.tag); out.u16(e.typ); out.u32(e.count)
+        e.value match {
+          case Num(v) => if (e.typ == 3) { out.u16(v.toInt); out.u16(0) } else out.u32(v)
+          case IfdAt(i) => out.u32(ifdOffsets(i))
+          case Raw(b) => raw(b)
+          case StripAt => raw(stripOffsets)
+        }
+      }
+      out.u32(0L) // next-IFD pointer: none
+    }
+    data.writeTo(out)
+    strips.foreach(s => out.write(s, 0, s.length))
+    out.toByteArray
+  }
+
+  // ------------------------------------------------------------------
   // PackBits (TIFF 6.0 §9)
   // ------------------------------------------------------------------
 
@@ -270,55 +416,21 @@ object Tiff {
         case CompPackBits => packBits(raw)
       }
     }
-    val out = new java.io.ByteArrayOutputStream()
-    def u16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def u32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    out.write('I'); out.write('I'); u16(42); u32(8)
-    // IFD at offset 8; entry list sorted by tag — nine entries for
-    // both pixel formats (gray's BitsPerSample is inline, RGB's is an
-    // out-of-line triple)
-    val nEntries = 9
-    val ifdSize = 2 + nEntries * 12 + 4
-    var dataOff = 8L + ifdSize
-    // out-of-line areas: BitsPerSample (RGB only), StripOffsets,
-    // StripByteCounts (when nStrips > 2), then strip data
-    val bpsOff = dataOff
-    if (channels == 3) dataOff += 6
-    val soOff = dataOff
-    if (nStrips > 1) dataOff += 4L * nStrips
-    // strip byte counts: always LONG; inline only when there is 1 strip
-    val sbcInline = nStrips == 1
-    val sbcOff =
-      if (nStrips > 1) { val o = dataOff; dataOff += 4L * nStrips; o }
-      else 0L
-    val stripDataOff = dataOff
-    val stripOffsets = strips.scanLeft(stripDataOff)((acc, s) => acc + s.length)
-    u16(nEntries)
-    def entry(tag: Int, typ: Int, count: Long, value: Long): Unit = {
-      u16(tag); u16(typ); u32(count)
-      if (typ == 3 && count == 1) { u16(value.toInt); u16(0) } else u32(value)
-    }
-    entry(TImageWidth, 3, 1, width)
-    entry(TImageLength, 3, 1, height)
-    if (channels == 3) entry(TBitsPerSample, 3, 3, bpsOff)
-    else entry(TBitsPerSample, 3, 1, 8)
-    entry(TCompression, 3, 1, compression)
-    entry(TPhotometric, 3, 1, if (channels == 3) 2 else 1)
-    if (nStrips == 1) entry(TStripOffsets, 4, 1, stripOffsets(0))
-    else entry(TStripOffsets, 4, nStrips, soOff)
-    entry(TSamplesPerPixel, 3, 1, channels)
-    entry(TRowsPerStrip, 3, 1, RowsPerStrip)
-    if (sbcInline) entry(TStripByteCounts, 4, 1, strips(0).length)
-    else entry(TStripByteCounts, 4, nStrips, sbcOff)
-    u32(0) // next IFD
-    if (channels == 3) { u16(8); u16(8); u16(8) }
-    if (nStrips > 1) stripOffsets.init.foreach(u32)
-    if (!sbcInline) strips.foreach(s => u32(s.length))
-    strips.foreach(s => out.write(s, 0, s.length))
-    out.toByteArray
+    // one IFD, sorted by tag: gray's BitsPerSample is inline, RGB's an
+    // out-of-line triple; the strip tables are inline for one strip
+    val ifd = Seq(
+      Entry(TImageWidth, 3, 1, Num(width)),
+      Entry(TImageLength, 3, 1, Num(height)),
+      if (channels == 3) Entry(TBitsPerSample, 3, 3, Raw(Array[Byte](8, 0, 8, 0, 8, 0)))
+      else Entry(TBitsPerSample, 3, 1, Num(8)),
+      Entry(TCompression, 3, 1, Num(compression)),
+      Entry(TPhotometric, 3, 1, Num(if (channels == 3) 2 else 1)),
+      Entry(TStripOffsets, 4, nStrips, StripAt),
+      Entry(TSamplesPerPixel, 3, 1, Num(channels)),
+      Entry(TRowsPerStrip, 3, 1, Num(RowsPerStrip)),
+      Entry(TStripByteCounts, 4, nStrips,
+        Raw(longs(true, strips.map(_.length.toLong): _*))))
+    writeIfds(littleEndian = true, Seq(ifd), strips)
   }
 
   /** Decode a baseline TIFF (either byte order): IFD walk, strip
@@ -326,53 +438,29 @@ object Tiff {
     * Throws on anything malformed or out of this baseline scope.
     */
   def decode(bytes: Array[Byte]): Image = {
-    require(bytes.length >= 8, "truncated TIFF header")
-    val le = bytes(0) == 'I'.toByte && bytes(1) == 'I'.toByte
-    require(le || (bytes(0) == 'M'.toByte && bytes(1) == 'M'.toByte),
-      "bad TIFF byte-order mark")
-    def u16(at: Int): Int = {
-      require(at >= 0 && at + 2 <= bytes.length, s"TIFF read past end at $at")
-      if (le) (bytes(at) & 0xff) | ((bytes(at + 1) & 0xff) << 8)
-      else ((bytes(at) & 0xff) << 8) | (bytes(at + 1) & 0xff)
-    }
-    def u32(at: Int): Long = {
-      require(at >= 0 && at + 4 <= bytes.length, s"TIFF read past end at $at")
-      if (le) (bytes(at) & 0xffL) | ((bytes(at + 1) & 0xffL) << 8) |
-        ((bytes(at + 2) & 0xffL) << 16) | ((bytes(at + 3) & 0xffL) << 24)
-      else ((bytes(at) & 0xffL) << 24) | ((bytes(at + 1) & 0xffL) << 16) |
-        ((bytes(at + 2) & 0xffL) << 8) | (bytes(at + 3) & 0xffL)
-    }
-    require(u16(2) == 42, "bad TIFF magic")
-    val ifd = u32(4).toInt
-    val n = u16(ifd)
+    val r = new Reader(bytes)
     var width = -1; var height = -1; var channels = 1
     var compression = 1; var photometric = -1; var rowsPerStrip = -1
     var soType = 0; var soCount = 0L; var soAt = 0
     var sbcType = 0; var sbcCount = 0L; var sbcAt = 0
-    (0 until n).foreach { i =>
-      val e = ifd + 2 + i * 12
-      val tag = u16(e); val typ = u16(e + 2); val count = u32(e + 4)
-      def sizeOf(t: Int) = t match {
-        case 1 | 2 | 6 | 7 => 1; case 3 => 2; case 4 | 9 => 4; case 5 | 10 => 8
-        case o => throw new IllegalArgumentException(s"TIFF type $o")
-      }
-      val inline = sizeOf(typ) * count <= 4
-      val vAt = if (inline) e + 8 else u32(e + 8).toInt
-      def scalar: Long = if (typ == 3) u16(vAt).toLong else u32(vAt)
-      tag match {
+    r.open(r.ifd0)
+    while (r.next()) {
+      val vAt = r.at
+      def scalar: Long = if (r.typ == 3) r.u16(vAt).toLong else r.u32(vAt)
+      r.tag match {
         case TImageWidth => width = scalar.toInt
         case TImageLength => height = scalar.toInt
         case TBitsPerSample =>
-          (0 until count.toInt).foreach { k =>
-            require(u16(vAt + 2 * k) == 8, "only 8-bit samples supported")
+          (0 until r.count.toInt).foreach { k =>
+            require(r.u16(vAt + 2 * k) == 8, "only 8-bit samples supported")
           }
         case TCompression => compression = scalar.toInt
         case TPhotometric => photometric = scalar.toInt
         case TSamplesPerPixel => channels = scalar.toInt
         case TRowsPerStrip =>
           rowsPerStrip = math.min(scalar, Int.MaxValue).toInt
-        case TStripOffsets => soType = typ; soCount = count; soAt = vAt
-        case TStripByteCounts => sbcType = typ; sbcCount = count; sbcAt = vAt
+        case TStripOffsets => soType = r.typ; soCount = r.count; soAt = vAt
+        case TStripByteCounts => sbcType = r.typ; sbcCount = r.count; sbcAt = vAt
         case _ => // ancillary: skip
       }
     }
@@ -386,7 +474,7 @@ object Tiff {
     require(soCount == nStrips && sbcCount == nStrips,
       s"strip table sizes $soCount/$sbcCount != $nStrips")
     def tableAt(typ: Int, at: Int, k: Int): Long =
-      if (typ == 3) u16(at + 2 * k).toLong else u32(at + 4 * k)
+      if (typ == 3) r.u16(at + 2 * k).toLong else r.u32(at + 4 * k)
     val rowBytes = width * channels
     val pixels = new Array[Byte](rowBytes * height)
     (0 until nStrips).foreach { s =>

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{Dna, DnaFunctions, TextFunctions}
-import graft.io.Fasta
+import graft.io.{Bam, Fasta, SamText}
 import graft.pipe.Pipes
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -98,18 +98,6 @@ object ViraPipeline {
       .as[String]
   }
 
-  /** Parse SAM lines coming back from the aligner pipe. */
-  private def parseSam(spark: SparkSession, sam: Dataset[String]): DataFrame = {
-    val f = split(col("value"), "\t")
-    sam.toDF("value")
-      .filter(!col("value").startsWith("@"))
-      .select(
-        f.getItem(0).as("readName"),
-        f.getItem(1).cast("int").as("flag"),
-        f.getItem(9).as("sequence"),
-        f.getItem(10).as("quality"))
-  }
-
   /** Run the full pipeline from paired FASTQ DataFrames (key, sequence,
     * quality). Eager: every stage runs, once, before this returns. Each
     * stage output is pinned in dependency order (`cfg.staging` picks
@@ -133,12 +121,12 @@ object ViraPipeline {
     // 2. AlignInterleavedMulti: BWA pipe, keep flag-77/141 pairs (F5).
     val samLines = Pipes.alignBwa(spark,
       toFastqLines(qualified.select("key", "sequence", "quality")), cfg.align)
-    val aligned = pin(parseSam(spark, samLines)
+    val aligned = pin(SamText.parse(samLines.toDF("value"))
       .filter(col("flag").isin(77, 141))
       .select(
         concat(col("readName"),
           when(col("flag") === 77, "/1").otherwise("/2")).as("key"),
-        col("sequence"), col("quality")), "aligned")
+        col("bases").as("sequence"), col("quality")), "aligned")
 
     // 3. NormalizeRDD: k-mer coverage-band digital normalization.
     val normalized = pin(digitalNormalize(aligned, cfg.k, cfg.minc, cfg.maxc), "normalized")
@@ -304,32 +292,28 @@ object ViraPipeline {
         else {
           val out = scala.collection.mutable.ArrayBuffer
             .empty[(String, Long, String)]
-          var refPos = start; var readPos = 0; var i = 0; var n = 0
-          while (i < cigar.length) {
-            val c = cigar.charAt(i)
-            if (c >= '0' && c <= '9') n = n * 10 + (c - '0')
-            else {
-              c match {
-                case 'M' | '=' | 'X' =>
-                  require(readPos + n <= bases.length,
-                    s"CIGAR $cigar consumes past ${bases.length} bases")
-                  var j = 0
-                  while (j < n) {
-                    out += ((ref, refPos + j,
-                      String.valueOf(Character.toUpperCase(
-                        bases.charAt(readPos + j)))))
-                    j += 1
-                  }
-                  refPos += n; readPos += n
-                case 'I' | 'S' => readPos += n
-                case 'D' | 'N' => refPos += n
-                case 'H' | 'P' => ()
-                case other =>
-                  sys.error(s"unsupported CIGAR op '$other' in $cigar")
-              }
-              n = 0
+          var refPos = start; var readPos = 0
+          val ops = new Bam.CigarWalk(cigar)
+          while (ops.next()) {
+            val n = ops.len
+            ops.op match {
+              case 'M' | '=' | 'X' =>
+                require(readPos + n <= bases.length,
+                  s"CIGAR $cigar consumes past ${bases.length} bases")
+                var j = 0
+                while (j < n) {
+                  out += ((ref, refPos + j,
+                    String.valueOf(Character.toUpperCase(
+                      bases.charAt(readPos + j)))))
+                  j += 1
+                }
+                refPos += n; readPos += n
+              case 'I' | 'S' => readPos += n
+              case 'D' | 'N' => refPos += n
+              case 'H' | 'P' => ()
+              case other =>
+                sys.error(s"unsupported CIGAR op '$other' in $cigar")
             }
-            i += 1
           }
           require(readPos == bases.length,
             s"CIGAR $cigar consumes $readPos of ${bases.length} bases")
@@ -612,26 +596,21 @@ object ViraPipeline {
           cigar == null || cigar == "*"
         if (unmapped) (name, flag, ref, -1L, false, mapq, false)
         else {
-          var lead = 0; var trail = 0; var refLen = 0L
-          var i = 0; var n = 0; var first = true
-          while (i < cigar.length) {
-            val c = cigar.charAt(i)
-            if (c >= '0' && c <= '9') n = n * 10 + (c - '0')
-            else {
-              c match {
-                case 'M' | '=' | 'X' | 'D' | 'N' =>
-                  refLen += n; first = false; trail = 0
-                case 'S' =>
-                  if (first) lead = n else trail = n
-                  first = false
-                case 'I' => first = false; trail = 0
-                case 'H' | 'P' => ()
-                case other =>
-                  sys.error(s"unsupported CIGAR op '$other' in $cigar")
-              }
-              n = 0
+          var lead = 0; var trail = 0; var refLen = 0L; var first = true
+          val ops = new Bam.CigarWalk(cigar)
+          while (ops.next()) {
+            val n = ops.len
+            ops.op match {
+              case 'M' | '=' | 'X' | 'D' | 'N' =>
+                refLen += n; first = false; trail = 0
+              case 'S' =>
+                if (first) lead = n else trail = n
+                first = false
+              case 'I' => first = false; trail = 0
+              case 'H' | 'P' => ()
+              case other =>
+                sys.error(s"unsupported CIGAR op '$other' in $cigar")
             }
-            i += 1
           }
           val rev = (flag & 0x10) != 0
           val pos5 =

@@ -226,6 +226,70 @@ class ExifSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Exif.parseGps(bad))
   }
 
+  /** Little-endian in-place writes and the IFD0 entry of `tag` in an
+    * II TIFF — the corrupt-structure fixtures below.
+    */
+  private def putLe(b: Array[Byte], at: Int, v: Long, n: Int): Unit =
+    (0 until n).foreach(i => b(at + i) = ((v >> (8 * i)) & 0xff).toByte)
+  private def ifd0Entry(tiff: Array[Byte], tag: Int): Int = {
+    val n = (tiff(8) & 0xff) | ((tiff(9) & 0xff) << 8)
+    (0 until n).map(i => 10 + 12 * i).find { e =>
+      ((tiff(e) & 0xff) | ((tiff(e + 1) & 0xff) << 8)) == tag
+    }.getOrElse(fail(f"no IFD0 entry for tag 0x$tag%04x"))
+  }
+
+  test("corrupt TIFF structure fails with IllegalArgumentException, never AIOOBE") {
+    val jpeg = sampleJpeg("corrupt tiff body")
+    def asJpeg(tiff: Array[Byte]) =
+      Exif.insertApp1(jpeg, "Exif\u0000\u0000".getBytes("US-ASCII") ++ tiff)
+    def allThrow(tiff: Array[Byte], what: String): Seq[String] = Seq(
+      intercept[IllegalArgumentException](Exif.parseGps(asJpeg(tiff))),
+      intercept[IllegalArgumentException](Exif.parseExif(asJpeg(tiff))),
+      intercept[IllegalArgumentException](graft.operators.Tiff.decode(tiff))
+    ).map(e => s"$what: ${e.getMessage}")
+
+    // an 8-byte TIFF whose IFD0 offset points past its end, both orders
+    val ii = Array[Byte]('I'.toByte, 'I'.toByte, 42, 0, 0, 1, 0, 0) // IFD0 at 256
+    val mm = Array[Byte]('M'.toByte, 'M'.toByte, 0, 42, 0, 0, 1, 0)
+    Seq(ii, mm).foreach { t =>
+      allThrow(t, "IFD0 past end").foreach(msg => assert(msg.contains("past end"), msg))
+    }
+
+    // a GPS sub-IFD pointer past the end of the TIFF
+    val m = meta(le = true, o = 1)
+    val withGps = Exif.buildApp1WithGps(m, Exif.Gps(1000000L, 2000000L)).drop(6)
+    val farGps = withGps.clone()
+    putLe(farGps, ifd0Entry(farGps, 0x8825) + 8, farGps.length + 64L, 4)
+    allThrow(farGps, "GPS pointer past end").foreach(msg =>
+      assert(msg.contains("past end"), msg))
+
+    // a bad byte-order mark ("XX" used to read as big-endian in parseGps)
+    val xx = withGps.clone()
+    xx(0) = 'X'.toByte; xx(1) = 'X'.toByte
+    allThrow(xx, "bad byte order").foreach(msg =>
+      assert(msg.contains("byte-order mark"), msg))
+
+    // an IFD entry of type 13 (IFD) is outside the value-type table
+    val t13 = Exif.buildApp1(m).drop(6)
+    putLe(t13, ifd0Entry(t13, 0x010f) + 2, 13, 2)
+    Seq(
+      intercept[IllegalArgumentException](Exif.parseExif(asJpeg(t13))),
+      intercept[IllegalArgumentException](graft.operators.Tiff.decode(t13))
+    ).foreach(e => assert(e.getMessage.contains("TIFF type 13"), e.getMessage))
+  }
+
+  test("an Exif entry of type 6 (SBYTE) reads as a 1-byte value") {
+    val jpeg = sampleJpeg("sbyte body")
+    val m = meta(le = true, o = 1)
+    // retype Make (ASCII, out of line) as SBYTE: same size per value,
+    // so the walk reads the same bytes; only the type changes
+    val tiff = Exif.buildApp1(m).drop(6)
+    putLe(tiff, ifd0Entry(tiff, 0x010f) + 2, 6, 2)
+    val parsed = Exif.parseExif(
+      Exif.insertApp1(jpeg, "Exif\u0000\u0000".getBytes("US-ASCII") ++ tiff))
+    assert(parsed.contains(m))
+  }
+
   test("truncated JPEG tails fail with a descriptive require, not AIOOBE") {
     val jpeg = sampleJpeg("truncation body")
     val m = meta(le = true, o = 1).copy(pixelX = 64, pixelY = 0)
