@@ -53,6 +53,7 @@ object Bam {
 
   private val SeqCode = "=ACMGRSVTWYHKDBN"
   private val CigarOps = "MIDNSHP=X"
+  private val CigarOpRe = "(\\d+)([MIDNSHP=X])".r
 
   /** Fixed BGZF end-of-file sentinel block (SAM spec §4.1.2). */
   private val BgzfEof: Array[Byte] = Array(
@@ -1010,7 +1011,7 @@ object Bam {
     val nameBytes = name.getBytes(US_ASCII)
     val cigarOps: Seq[Int] =
       if (cigar == null || cigar == "*") Seq.empty
-      else "(\\d+)([MIDNSHP=X])".r.findAllMatchIn(cigar)
+      else CigarOpRe.findAllMatchIn(cigar)
         .map(m => (m.group(1).toInt << 4) | CigarOps.indexOf(m.group(2).charAt(0)))
         .toSeq
     val seq = if (bases == null || bases == "*") "" else bases

@@ -2689,20 +2689,6 @@ object Layout {
     snapshotAt(tableFs(spark, dir), dir, snapshotId)._2.deletes
       .map(d => (d.path, d.rows))
 
-  /** The commit KIND the writer recorded in a snapshot's manifest —
-    * the provenance a change consumer needs to interpret the
-    * snapshot's file delta: `append` (new rows only — including
-    * published WAP batches and pure-insert merges), `overwrite`,
-    * `replace` (compaction/OPTIMIZE — files rewritten, zero logical
-    * row change), `delete` / `update` / `merge` (row-level change),
-    * `evolve` (metadata-only schema change), `rollback`. `None` on
-    * manifests written before ops were recorded (pre-provenance
-    * tables) — consumers treat unknown conservatively.
-    */
-  def snapshotOp(spark: org.apache.spark.sql.SparkSession, dir: String,
-                 snapshotId: Long): Option[String] =
-    manifestAt(tableFs(spark, dir), dir, snapshotId).op
-
   /** Read a manifest-committed snapshot: latest by default, or a pinned
     * `snapshotId` (time travel). Only manifest-listed files are read —
     * orphans from crashed writers and files of other snapshots are

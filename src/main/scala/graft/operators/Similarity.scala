@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -51,45 +51,73 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 
-  /** Repartition up to session parallelism ONLY when the input arrives
-    * with fewer partitions (the one-small-file case — a single task
-    * would own every per-row kernel, and the non-equi pair joins stream
-    * the probe side without a shuffle, so partition count IS the
-    * parallelism). An input already at/above parallelism — the normal
-    * state of a large table — keeps its partitioning: no exchange.
-    *
-    * Shared gate: [[Parallelism.ensure]] (scan-shaped inputs probe the
-    * partition count; derived inputs skip both the AQE-finalizing probe
-    * and the repartition).
+  /** `id`, `embedding`, the `keep` columns and the vector's `norm`,
+    * computed once per vector before any pair join. The input is
+    * spread to session parallelism first when it arrives with fewer
+    * partitions ([[Parallelism.ensure]]): the non-equi pair joins
+    * stream the probe side without a shuffle, so partition count IS
+    * the parallelism of every per-row kernel downstream.
     */
-  private def ensureParallelism(df: DataFrame): DataFrame =
-    Parallelism.ensure(df)
+  private def withNorm(df: DataFrame, keep: String*): DataFrame =
+    Parallelism.ensure(withNative(df))
+      .select((col("id") +: col("embedding") +: keep.map(col)) :+
+        sqrt(dotN(col("embedding"), col("embedding"))).as("norm"): _*)
 
-  private def withNorm(df: DataFrame): DataFrame =
-    ensureParallelism(withNative(df))
-      .select(col("id"), col("embedding"),
-        sqrt(dotN(col("embedding"), col("embedding"))).as("norm"))
+  /** The rounded (4 dp) cosine of two vectors with precomputed norms —
+    * the score every pairwise stage ranks by. A zero norm has no
+    * defined cosine: it scores null, which ranks last under the desc
+    * ordering in both engines (and never reaches the division, which
+    * Spark 4's ANSI mode fails with DIVIDE_BY_ZERO even for doubles).
+    */
+  private def cosCol(a: Column, b: Column, na: Column, nb: Column): Column =
+    when(na * nb === 0d, lit(null))
+      .otherwise(round(dotN(a, b) / (na * nb), 4))
 
-  private def topK(pairs: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    pairs.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+  private val byCos = Seq(col("cos").desc, col("neighbor_id").asc)
+
+  /** The one windowed cut: number the rows of each `by` group in
+    * `order` into `rank` and keep the first `k`.
+    */
+  private def topK(rows: DataFrame, k: Int, by: String = "query_id",
+                   order: Seq[Column] = byCos,
+                   rank: String = "rank"): DataFrame =
+    rows.withColumn(rank, row_number().over(
+        Window.partitionBy(by).orderBy(order: _*)))
+      .filter(col(rank) <= k)
+
+  /** The pair scorer: (query_id, neighbor_id, cos) for the rows of two
+    * bases (id, embedding, norm), aliased `q` and `c`, meeting on `on`.
+    */
+  private def scoredPairs(q: DataFrame, c: DataFrame, on: Column): DataFrame =
+    q.as("q").join(c.as("c"), on)
+      .select(col("q.id").as("query_id"), col("c.id").as("neighbor_id"),
+        cosCol(col("q.embedding"), col("c.embedding"), col("q.norm"),
+          col("c.norm")).as("cos"))
+
+  /** Exact re-rank of a (query_id, neighbor_id) pair list: two
+    * equi-joins back to the base `b` (id, embedding, norm and the
+    * `carry` columns) and the rounded cosine. Each carried column `c`
+    * comes back from both sides, as `qc` and `nc`.
+    */
+  private def rerank(pairs: DataFrame, b: DataFrame,
+                     carry: String*): DataFrame = {
+    def side(id: String, p: String) = b.select(col("id").as(id) +:
+      col("embedding").as(s"${p}e") +: col("norm").as(s"${p}n") +:
+      carry.map(c => col(c).as(p + c)): _*)
+    pairs.join(side("query_id", "q"), "query_id")
+      .join(side("neighbor_id", "n"), "neighbor_id")
+      .select(col("query_id") +: col("neighbor_id") +:
+        carry.flatMap(c => Seq(col("q" + c), col("n" + c))) :+
+        cosCol(col("qe"), col("ne"), col("qn"), col("nn")).as("cos"): _*)
   }
 
   /** Exact top-k neighbors for every vector in `queries` against `corpus`
     * (both with columns id, embedding). Deterministic: ties broken by
     * neighbor id on the ROUNDED similarity.
     */
-  def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val q = withNorm(queries)
-    val c = withNorm(corpus)
-    val pairs = q.as("q")
-      .join(c.as("c"), col("q.id") =!= col("c.id"))
-      .select(col("q.id").as("query_id"), col("c.id").as("neighbor_id"),
-        round(dotN(col("q.embedding"), col("c.embedding")) /
-          (col("q.norm") * col("c.norm")), 4).as("cos"))
-    topK(pairs, k)
-  }
+  def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    topK(scoredPairs(withNorm(queries), withNorm(corpus),
+      col("q.id") =!= col("c.id")), k)
 
   /** nDCG@k — the retrieval-quality metric that, unlike recall, also
     * scores the ORDER of the returned neighbors: graded relevance
@@ -129,13 +157,8 @@ object Similarity {
   def bucketedAnnTopK(vectors: DataFrame, k: Int, bits: Int = 4): DataFrame = {
     val b = withNorm(vectors)
       .withColumn("bucket", signBucket(col("embedding"), bits))
-    val pairs = b.as("q")
-      .join(b.as("c"),
-        col("q.bucket") === col("c.bucket") && col("q.id") =!= col("c.id"))
-      .select(col("q.id").as("query_id"), col("c.id").as("neighbor_id"),
-        round(dotN(col("q.embedding"), col("c.embedding")) /
-          (col("q.norm") * col("c.norm")), 4).as("cos"))
-    topK(pairs, k)
+    topK(scoredPairs(b, b,
+      col("q.bucket") === col("c.bucket") && col("q.id") =!= col("c.id")), k)
   }
 
   /** Multi-probe variant of [[bucketedAnnTopK]]: each query probes its
@@ -155,13 +178,8 @@ object Similarity {
       substring(col("bucket"), i + 1, bits - i))
     val probes = b.withColumn("probe",
       explode(array(col("bucket") +: (1 to bits).map(flip): _*)))
-    val pairs = probes.as("q")
-      .join(b.as("c"),
-        col("q.probe") === col("c.bucket") && col("q.id") =!= col("c.id"))
-      .select(col("q.id").as("query_id"), col("c.id").as("neighbor_id"),
-        round(dotN(col("q.embedding"), col("c.embedding")) /
-          (col("q.norm") * col("c.norm")), 4).as("cos"))
-    topK(pairs, k)
+    topK(scoredPairs(probes, b,
+      col("q.probe") === col("c.bucket") && col("q.id") =!= col("c.id")), k)
   }
 
   /** One sign-bucket key per hash table: table `t` reads the DISJOINT
@@ -178,21 +196,6 @@ object Similarity {
       }: _*)
     }: _*)
 
-  /** Multi-TABLE ANN — the recall fix that multi-PROBE cannot deliver:
-    * probing more buckets of ONE table only helps neighbors split by a
-    * single low-confidence bit, while L independent tables give every
-    * neighbor L independent chances to collide (miss probability decays
-    * exponentially in L). Measured on the 64-dim fixture (q82):
-    * single-table bits=4 recall 0.12, Hamming-1 multi-probe 0.47,
-    * 16 disjoint-slice tables 0.92 — with candidate volume still 35%
-    * BELOW brute force at n=500, and O(L · Σ bucket²) at scale.
-    *
-    * Plan shape: explode the L keys into a skinny (id, tkey) probe table,
-    * self equi-join on tkey (never all-pairs), `distinct` the candidate
-    * pairs so a pair colliding in several tables is scored ONCE, then two
-    * equi-joins back to the checkpointed vectors for the native-dot
-    * scoring pass.
-    */
   /** Table keys with the documented precondition enforced: a table
     * slice past the vector length would read null → a CONSTANT key
     * shared by every vector, silently degenerating that table's
@@ -209,11 +212,11 @@ object Similarity {
         lit(" — excess tables would hash every vector to one constant bucket"))))
       .otherwise(tableKeys(col("embedding"), bits, tables))
 
-  /** Distinct candidate pairs from a base carrying a `keys` column:
-    * explode into a skinny (id, tkey) probe table, self equi-join on
-    * tkey (never all-pairs), distinct so a pair colliding in several
-    * tables downstream-scores ONCE. Shared by [[multiTableAnnTopK]] and
-    * [[binaryPrefilterTopK]].
+  /** Distinct (query_id, neighbor_id) candidate pairs from a base
+    * carrying a `keys` column: explode into a skinny
+    * (id, tkey) probe table, self equi-join on tkey (never all-pairs),
+    * distinct so a pair colliding in several tables downstream-scores
+    * ONCE. The candidate stage of every multi-table funnel.
     */
   private def multiTableCandidates(b: DataFrame): DataFrame = {
     val probes = b.select(col("id"), explode(col("keys")).as("tkey"))
@@ -224,20 +227,27 @@ object Similarity {
       .distinct()
   }
 
+  /** Multi-TABLE ANN — the recall fix that multi-PROBE cannot deliver:
+    * probing more buckets of ONE table only helps neighbors split by a
+    * single low-confidence bit, while L independent tables give every
+    * neighbor L independent chances to collide (miss probability decays
+    * exponentially in L). Measured on the 64-dim fixture (q82):
+    * single-table bits=4 recall 0.12, Hamming-1 multi-probe 0.47,
+    * 16 disjoint-slice tables 0.92 — with candidate volume still 35%
+    * BELOW brute force at n=500, and O(L · Σ bucket²) at scale.
+    *
+    * Plan shape: explode the L keys into a skinny (id, tkey) probe table,
+    * self equi-join on tkey (never all-pairs), `distinct` the candidate
+    * pairs so a pair colliding in several tables is scored ONCE, then two
+    * equi-joins back to the checkpointed vectors for the native-dot
+    * scoring pass.
+    */
   def multiTableAnnTopK(vectors: DataFrame, k: Int, bits: Int = 4,
                         tables: Int = 16): DataFrame = {
     val b = withNorm(vectors)
       .withColumn("keys", tableKeysChecked(bits, tables))
       .localCheckpoint() // probe table + both scoring sides read it
-    val cand = multiTableCandidates(b)
-    val scored = cand
-      .join(b.select(col("id").as("query_id"),
-        col("embedding").as("qe"), col("norm").as("qn")), "query_id")
-      .join(b.select(col("id").as("neighbor_id"),
-        col("embedding").as("ce"), col("norm").as("cn")), "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(dotN(col("qe"), col("ce")) / (col("qn") * col("cn")), 4).as("cos"))
-    topK(scored, k)
+    topK(rerank(multiTableCandidates(b), b), k)
   }
 
   /** Embedding-cosine NEAR-DUP pairs (the dedup-family member of the
@@ -251,12 +261,10 @@ object Similarity {
                             bits: Int = 4): DataFrame = {
     val b = withNorm(vectors)
       .withColumn("bucket", signBucket(col("embedding"), bits))
-    b.as("a")
-      .join(b.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"),
-        round(dotN(col("a.embedding"), col("b.embedding")) /
-          (col("a.norm") * col("b.norm")), 4).as("cos"))
+    scoredPairs(b, b,
+        col("q.bucket") === col("c.bucket") && col("q.id") < col("c.id"))
+      .select(col("query_id").as("doc_a"), col("neighbor_id").as("doc_b"),
+        col("cos"))
       .filter(col("cos") >= threshold)
   }
 
@@ -301,17 +309,13 @@ object Similarity {
     def assign(cent: Array[(Long, Array[Double], Double)]): DataFrame =
       if (cent.length <= litMaxK) {
         val scored = cent.map { case (cid, ce, cnorm) =>
-          // A zero-norm centroid (or row) has no defined cosine: its rc
-          // is null, which sorts below every real score in the struct
-          // ordering (and Spark 4 ANSI mode — empirically — THROWS
-          // DIVIDE_BY_ZERO even for double division on the 0 divisor).
-          // All-null falls back to the smallest cid via the
-          // -cid struct field — the kernel path mirrors both rules.
-          val denom = col("norm") * lit(cnorm)
+          // A zero-norm centroid (or row) scores a null rc, which
+          // sorts below every real score in the struct ordering;
+          // all-null falls back to the smallest cid via the -cid
+          // struct field — the kernel path mirrors both rules.
           struct(
-            when(denom === 0d, lit(null).cast("double"))
-              .otherwise(round(dotN(col("embedding"), typedlit(ce.toSeq)) /
-                denom, 4)).as("rc"),
+            cosCol(col("embedding"), typedlit(ce.toSeq), col("norm"),
+              lit(cnorm)).as("rc"),
             lit(-cid).as("negcid"), lit(cid).as("cid"))
         }
         v.withColumn("cluster", array_max(array(scored.toSeq: _*)).getField("cid"))
@@ -338,14 +342,9 @@ object Similarity {
         .sortBy(_._1)
     require(cent.nonEmpty, "k-means needs a non-empty vector set")
     for (_ <- 1 to iters) {
-      // per-dim mean, rounded to 6 dp for cross-engine determinism
-      val dims = assign(cent)
-        .select(col("cluster"), posexplode(col("embedding")).as(Seq("dim", "x")))
-        .groupBy("cluster", "dim")
-        .agg(round(avg(col("x").cast("double")), 6).as("m"))
-      cent = dims.groupBy("cluster")
-        .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("dm"))
-        .select(col("cluster"), transform(col("dm"), e => e.getField("m")))
+      cent = meanVectors(assign(cent)
+          .select(col("cluster"), posexplode(col("embedding")).as(Seq("dim", "x"))),
+          "cluster")
         .collect()
         .map { r =>
           val ce = r.getSeq[Double](1).toArray
@@ -355,6 +354,18 @@ object Similarity {
     }
     assign(cent).select(col("id").as("vec_id"), col("cluster"))
   }
+
+  /** Per-group mean vectors from long-form (keys.., dim, x) rows as
+    * (keys.., ce): each dimension's mean rounded to 6 dp, quantizing
+    * away the summation-order noise that would make a mean of doubles
+    * engine-dependent — the centroid update of k-means and PQ training.
+    */
+  private def meanVectors(long: DataFrame, keys: String*): DataFrame =
+    long.groupBy((keys :+ "dim").map(col): _*)
+      .agg(round(avg(col("x").cast("double")), 6).as("m"))
+      .groupBy(keys.map(col): _*)
+      .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("dm"))
+      .select(keys.map(col) :+ transform(col("dm"), e => e.getField("m")).as("ce"): _*)
 
   /** Production-quality DETERMINISTIC seeding (the k-means‖ recipe made
     * replayable): lowest-id seeding is deterministic but quality-poor
@@ -447,10 +458,10 @@ object Similarity {
       .join(v.as("c"), col("q.id") =!= col("c.id"))
       .select(col("q.id").as("query_id"), col("c.id").as("neighbor_id"),
         hammingN(col("q.codes"), col("c.codes")).as("hamming"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("hamming").asc, col("neighbor_id").asc)
-    pairs.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topK(pairs, k, order = byHamming)
   }
+
+  private val byHamming = Seq(col("hamming").asc, col("neighbor_id").asc)
 
   /** Candidate-gated binary search — the composed production shape for
     * the 1-bit rung, mirroring [[pqRerankTopK]]'s funnel: multi-table
@@ -482,27 +493,16 @@ object Similarity {
       .withColumn("codes",
         call_function("binary_quantize_native", col("embedding")))
       .localCheckpoint()
-    val cand = multiTableCandidates(b)
-    val ham = cand
+    val ham = multiTableCandidates(b)
       .join(b.select(col("id").as("query_id"), col("codes").as("qc")),
         "query_id")
       .join(b.select(col("id").as("neighbor_id"), col("codes").as("cc")),
         "neighbor_id")
       .select(col("query_id"), col("neighbor_id"),
         hammingN(col("qc"), col("cc")).as("hamming"))
-    val wS = Window.partitionBy("query_id")
-      .orderBy(col("hamming").asc, col("neighbor_id").asc)
-    val short = ham.withColumn("hrank", row_number().over(wS))
-      .filter(col("hrank") <= shortlist)
+    val short = topK(ham, shortlist, order = byHamming, rank = "hrank")
       .select("query_id", "neighbor_id")
-    val scored = short
-      .join(b.select(col("id").as("query_id"),
-        col("embedding").as("qe"), col("norm").as("qn")), "query_id")
-      .join(b.select(col("id").as("neighbor_id"),
-        col("embedding").as("ce"), col("norm").as("cn")), "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(dotN(col("qe"), col("ce")) / (col("qn") * col("cn")), 4).as("cos"))
-    topK(scored, k)
+    topK(rerank(short, b), k)
   }
 
   /** SemDeDup-style semantic deduplication (the published recipe:
@@ -527,15 +527,10 @@ object Similarity {
     val b = withNorm(vectors)
       .join(assigned, col("id") === col("vec_id"))
       .select(col("id"), col("embedding"), col("norm"), col("cluster"))
-    val removed = b.as("a")
-      .join(b.as("b"),
-        col("a.cluster") === col("b.cluster") && col("a.id") < col("b.id"))
-      .select(col("b.id").as("rid"),
-        when(col("a.norm") * col("b.norm") === 0d, lit(null).cast("double"))
-          .otherwise(round(dotN(col("a.embedding"), col("b.embedding")) /
-            (col("a.norm") * col("b.norm")), 4)).as("cos"))
+    val removed = scoredPairs(b, b,
+        col("q.cluster") === col("c.cluster") && col("q.id") < col("c.id"))
       .filter(col("cos") >= threshold)
-      .select(col("rid").as("vec_id")).distinct()
+      .select(col("neighbor_id").as("vec_id")).distinct()
       .withColumn("removed", lit(true))
     assigned.join(removed, Seq("vec_id"), "left")
       .select(col("vec_id"), col("cluster"),
@@ -581,21 +576,15 @@ object Similarity {
     * with exactly this expression, never n²).
     */
   def int8TopK(vectors: DataFrame, k: Int): DataFrame = {
-    val v = ensureParallelism(withNative(quantizeInt8(vectors)))
-      .select(col("id"), col("codes").cast("array<double>").as("q8"))
-      .withColumn("norm", sqrt(dotN(col("q8"), col("q8"))))
-    // zero-norm guard (same rule as kmeansAssign): a zero vector
-    // quantizes to all-zero codes, and NaN cosines would sort above
-    // every real score (or raise DIVIDE_BY_ZERO under ANSI) — null
-    // ranks last under desc ordering in both engines
-    val pairs = v.as("q")
-      .join(v.as("c"), col("q.id") =!= col("c.id"))
-      .select(col("q.id").as("query_id"), col("c.id").as("neighbor_id"),
-        when(col("q.norm") * col("c.norm") === 0d, lit(null))
-          .otherwise(round(dotN(col("q.q8"), col("c.q8")) /
-            (col("q.norm") * col("c.norm")), 4)).as("cos"))
-    topK(pairs, k)
+    // a zero vector quantizes to all-zero codes: cosCol's null
+    val v = withNorm(int8Embedding(vectors))
+    topK(scoredPairs(v, v, col("q.id") =!= col("c.id")), k)
   }
+
+  /** The int8 codes as the `embedding` the cosine stages score. */
+  private def int8Embedding(vectors: DataFrame): DataFrame =
+    quantizeInt8(vectors)
+      .select(col("id"), col("codes").cast("array<double>").as("embedding"))
 
   /** Candidate-gated int8 search — the composed production shape for
     * the int8 rung, closing the same gap [[binaryPrefilterTopK]] closes
@@ -612,27 +601,14 @@ object Similarity {
     */
   def int8PrefilterTopK(vectors: DataFrame, k: Int, bits: Int = 4,
                         tables: Int = 16): DataFrame = {
-    // one checkpointed base: float embedding builds the table keys,
-    // int8 codes (+ their norm) carry the scoring
-    val q8 = quantizeInt8(vectors)
-      .select(col("id"), col("codes").cast("array<double>").as("q8"))
+    // one checkpointed base: the float embedding builds the table
+    // keys, the int8 codes (+ their norm) carry the scoring
     val b = withNorm(vectors)
-      .withColumn("keys", tableKeysChecked(bits, tables))
-      .join(q8, "id")
-      .withColumn("n8", sqrt(dotN(col("q8"), col("q8"))))
-      .select(col("id"), col("keys"), col("q8"), col("n8"))
+      .select(col("id"), tableKeysChecked(bits, tables).as("keys"))
+      .join(int8Embedding(vectors), "id")
+      .withColumn("norm", sqrt(dotN(col("embedding"), col("embedding"))))
       .localCheckpoint()
-    val cand = multiTableCandidates(b)
-    val scored = cand
-      .join(b.select(col("id").as("query_id"),
-        col("q8").as("qq"), col("n8").as("qn")), "query_id")
-      .join(b.select(col("id").as("neighbor_id"),
-        col("q8").as("cq"), col("n8").as("cn")), "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        when(col("qn") * col("cn") === 0d, lit(null))
-          .otherwise(round(dotN(col("qq"), col("cq")) /
-            (col("qn") * col("cn")), 4)).as("cos"))
-    topK(scored, k)
+    topK(rerank(multiTableCandidates(b), b), k)
   }
 
   // ---------- Product quantization (PQ) ----------
@@ -655,7 +631,7 @@ object Similarity {
     val subs = (0 until m).map(s =>
       slice(col("e"), s * dsub + 1, dsub).as(s"sub$s"))
     val nvs = (0 until m).map(s => dotN(col(s"sub$s"), col(s"sub$s")).as(s"nv$s"))
-    ensureParallelism(withNative(vectors))
+    Parallelism.ensure(withNative(vectors))
       .select(col("id"), col("embedding").cast("array<double>").as("e"))
       .withColumn("nrm", sqrt(dotN(col("e"), col("e"))))
       .select(col("id"),
@@ -734,8 +710,7 @@ object Similarity {
       require(seeds.nonEmpty, "PQ training needs a non-empty vector set")
       (0 until m).map { s =>
         seeds.zipWithIndex.map { case (r, cid) =>
-          val ce = r.getSeq[Double](1 + s).toArray
-          (cid.toLong, ce, ce.foldLeft(0.0)((a, x) => a + x * x))
+          bookEntry(cid.toLong, r.getSeq[Double](1 + s))
         }: Codebook
       }.toArray
     }
@@ -751,23 +726,26 @@ object Similarity {
         .select((col("fdim") / dsub).cast("int").as("s"),
           element_at(col("asgs"), (col("fdim") / dsub).cast("int") + 1).as("cluster"),
           (col("fdim") % dsub).as("dim"), col("x"))
-      val updated = longForm
-        .groupBy("s", "cluster", "dim")
-        .agg(round(avg(col("x")), 6).as("mv"))
-        .groupBy("s", "cluster")
-        .agg(array_sort(collect_list(struct(col("dim"), col("mv")))).as("dm"))
-        .select(col("s"), col("cluster"),
-          transform(col("dm"), e => e.getField("mv")).as("ce"))
-        .collect()
-      books = (0 until m).map { s =>
-        updated.filter(_.getInt(0) == s).map { r =>
-          val ce = r.getSeq[Double](2).toArray
-          (r.getLong(1), ce, ce.foldLeft(0.0)((a, x) => a + x * x))
-        }.sortBy(_._1): Codebook
-      }.toArray
+      books = booksOf(meanVectors(longForm, "s", "cluster").collect(), m)
     }
     (base, books, dsub)
   }
+
+  private def bookEntry(cid: Long, ce: Seq[Double]) =
+    (cid, ce.toArray, ce.foldLeft(0.0)((a, x) => a + x * x))
+
+  /** Per-subspace codebooks from long-form (s, cid, ce) rows. */
+  private def booksOf(rows: Array[Row], m: Int): Array[Codebook] =
+    (0 until m).map { s =>
+      rows.filter(_.getInt(0) == s)
+        .map(r => bookEntry(r.getLong(1), r.getSeq[Double](2)))
+        .sortBy(_._1): Codebook
+    }.toArray
+
+  /** The vectors' PQ codes: (id, a0..a{m-1}). */
+  private def pqCodes(base: DataFrame, books: Array[Codebook]): DataFrame =
+    base.select(col("id") +:
+      books.indices.map(s => pqAssign(s, books(s)).as(s"a$s")): _*)
 
   /** Encode against FIXED codebooks through either assignment path —
     * the parity harness for the native kernel (DedupSpec pins
@@ -793,10 +771,9 @@ object Similarity {
   def pqEncode(vectors: DataFrame, m: Int = 8, ksub: Int = 16,
                iters: Int = 1): DataFrame = {
     val (base, books, _) = pqPrepare(vectors, m, ksub, iters)
-    val coded = base.select(col("id"),
-      array((0 until m).map(s => pqAssign(s, books(s))): _*).as("codes"))
-    coded.select(col("id"),
-      posexplode(col("codes")).as(Seq("subspace", "code")))
+    pqCodes(base, books).select(col("id"),
+      posexplode(array((0 until m).map(s => col(s"a$s")): _*))
+        .as(Seq("subspace", "code")))
       .select(col("id"), col("subspace").cast("int").as("subspace"),
         col("code"))
   }
@@ -809,22 +786,25 @@ object Similarity {
     */
   private def adcTerms(books: Array[Codebook], m: Int, ksub: Int,
                        dsub: Int): Seq[Column] = {
-    def ceTable(s: Int): Seq[Seq[Double]] = {
-      val t = Array.fill(ksub)(Seq.fill(dsub)(0.0))
-      books(s).foreach { case (cid, ce, _) => t(cid.toInt) = ce.toSeq }
-      t.toSeq
-    }
-    def ncTable(s: Int): Seq[Double] = {
-      val t = Array.fill(ksub)(0.0)
-      books(s).foreach { case (cid, _, nc) => t(cid.toInt) = nc }
-      t.toSeq
-    }
+    val (ceTable, ncTable) = adcTables(books, m, ksub, dsub)
     (0 until m).map { s =>
       val ce = element_at(typedlit(ceTable(s)), col(s"a$s").cast("int") + 1)
       val nc = element_at(typedlit(ncTable(s)), col(s"a$s").cast("int") + 1)
       col(s"qnv$s") + nc - lit(2.0) * dotN(col(s"qsub$s"), ce)
     }
   }
+
+  /** Per subspace, the cid-indexed centroid and squared-norm tables. */
+  private def adcTables(books: Array[Codebook], m: Int, ksub: Int, dsub: Int)
+      : (Seq[Seq[Seq[Double]]], Seq[Seq[Double]]) =
+    (0 until m).map { s =>
+      val ce = Array.fill(ksub)(Seq.fill(dsub)(0.0))
+      val nc = Array.fill(ksub)(0.0)
+      books(s).foreach { case (cid, cev, ncv) =>
+        ce(cid.toInt) = cev.toSeq; nc(cid.toInt) = ncv
+      }
+      (ce.toSeq, nc.toSeq)
+    }.unzip
 
   /** The m-term ADC sum as ONE native kernel call (adc_sum_native) —
     * bit-identical to `adcTerms(...).reduce(_ + _)` (same left-to-right
@@ -838,16 +818,7 @@ object Similarity {
     */
   private def adcSum(books: Array[Codebook], m: Int, ksub: Int,
                      dsub: Int): Column = {
-    val ce: Seq[Seq[Seq[Double]]] = (0 until m).map { s =>
-      val t = Array.fill(ksub)(Seq.fill(dsub)(0.0))
-      books(s).foreach { case (cid, cev, _) => t(cid.toInt) = cev.toSeq }
-      t.toSeq
-    }
-    val nc: Seq[Seq[Double]] = (0 until m).map { s =>
-      val t = Array.fill(ksub)(0.0)
-      books(s).foreach { case (cid, _, ncv) => t(cid.toInt) = ncv }
-      t.toSeq
-    }
+    val (ce, nc) = adcTables(books, m, ksub, dsub)
     val args = Seq(typedlit(ce), typedlit(nc)) ++
       (0 until m).map(s => col(s"a$s").cast("long")) ++
       (0 until m).map(s => col(s"qsub$s")) ++
@@ -888,22 +859,20 @@ object Similarity {
                                    ksub: Int, iters: Int,
                                    useLitTerms: Boolean): DataFrame = {
     val (base, books, dsub) = pqPrepare(vectors, m, ksub, iters)
-    val coded = base.select(
-      col("id") +: (0 until m).map(s => pqAssign(s, books(s)).as(s"a$s")): _*)
-    val dist = adcDistance(books, m, ksub, dsub, useLitTerms)
-    val q = base.select(col("id").as("query_id") +:
+    val c = pqCodes(base, books).withColumnRenamed("id", "neighbor_id")
+    val pairs = adcQuery(base, m).join(c, col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        round(adcDistance(books, m, ksub, dsub, useLitTerms), 4).as("adist"))
+    topK(pairs, k, order = byAdist)
+  }
+
+  private val byAdist = Seq(col("adist").asc, col("neighbor_id").asc)
+
+  /** The ADC query side: (query_id, qsub_s, qnv_s) plus `extra`. */
+  private def adcQuery(base: DataFrame, m: Int, extra: Column*): DataFrame =
+    base.select(col("id").as("query_id") +: extra ++:
       (0 until m).flatMap(s => Seq(col(s"sub$s").as(s"qsub$s"),
         col(s"nv$s").as(s"qnv$s"))): _*)
-    val c = coded.select(col("id").as("neighbor_id") +:
-      (0 until m).map(s => col(s"a$s")): _*)
-    val pairs = q.join(c, col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(dist, 4).as("adist"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adist").asc, col("neighbor_id").asc)
-    pairs.withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-  }
 
   /** ADC shortlist → exact re-rank: the production PQ search shape.
     * Codes alone cannot separate the top-3 of unstructured data (q82
@@ -922,14 +891,7 @@ object Similarity {
     val short = pqAdcTopK(vectors, shortlist, m, ksub, iters)
       .select("query_id", "neighbor_id")
     val v = withNorm(vectors).localCheckpoint() // both re-rank sides read it
-    val scored = short
-      .join(v.select(col("id").as("query_id"),
-        col("embedding").as("qe"), col("norm").as("qn")), "query_id")
-      .join(v.select(col("id").as("neighbor_id"),
-        col("embedding").as("ce"), col("norm").as("cn")), "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(dotN(col("qe"), col("ce")) / (col("qn") * col("cn")), 4).as("cos"))
-    topK(scored, k)
+    topK(rerank(short, v), k)
   }
 
   /** IVF-style ANN: a coarse quantizer assigns every vector to its
@@ -946,26 +908,31 @@ object Similarity {
     */
   def ivfTopK(vectors: DataFrame, k: Int, nCells: Int = 8): DataFrame = {
     val v = withNorm(vectors)
-    // the nCells lowest-id vectors (not `id < nCells` — see kmeansAssign)
-    val cent = v.orderBy(col("id")).limit(nCells)
-      .select(col("id").as("cid"), col("embedding").as("ce"), col("norm").as("cnorm"))
-    // tiny centroid table broadcast to every task — no shuffle to assign
-    val asg = v.crossJoin(broadcast(cent))
-      .withColumn("rc", round(dotN(col("embedding"), col("ce")) /
-        (col("norm") * col("cnorm")), 4))
-    // hash-agg argmax (see kmeansAssign): unique (rc, -cid) ordering ⇒
-    // deterministic min-cid tiebreak, no sort-based window
-    val cells = asg.groupBy("id")
-      .agg(max_by(col("cid"), struct(col("rc"), -col("cid"))).as("cell"))
-    val b = v.join(cells, "id")
-    val pairs = b.as("q")
-      .join(b.as("c"),
-        col("q.cell") === col("c.cell") && col("q.id") =!= col("c.id"))
-      .select(col("q.id").as("query_id"), col("c.id").as("neighbor_id"),
-        round(dotN(col("q.embedding"), col("c.embedding")) /
-          (col("q.norm") * col("c.norm")), 4).as("cos"))
-    topK(pairs, k)
+    val b = v.join(ivfProbes(v, ivfSeedCells(v, nCells), 1), "id")
+    topK(scoredPairs(b, b,
+      col("q.cell") === col("c.cell") && col("q.id") =!= col("c.id")), k)
   }
+
+  /** The coarse quantizer: the `nCells` lowest-id vectors (not
+    * `id < nCells` — see kmeansAssign) as the (cid, ce, cnorm) table.
+    */
+  private def ivfSeedCells(v: DataFrame, nCells: Int): DataFrame =
+    v.orderBy(col("id")).limit(nCells)
+      .select(col("id").as("cid"), col("embedding").as("ce"),
+        col("norm").as("cnorm"))
+
+  /** Each vector's `nProbe` nearest cells by rounded cosine, ties to
+    * the smaller cid, as (id, cell, crn) — crn 1 is the home cell. The
+    * tiny centroid table (cid, ce, cnorm) is broadcast to every task:
+    * no shuffle to assign.
+    */
+  private def ivfProbes(v: DataFrame, cent: DataFrame,
+                        nProbe: Int): DataFrame =
+    topK(v.crossJoin(broadcast(cent)).withColumn("rc",
+        cosCol(col("embedding"), col("ce"), col("norm"), col("cnorm"))),
+      nProbe, by = "id", order = Seq(col("rc").desc, col("cid").asc),
+      rank = "crn")
+      .select(col("id"), col("cid").as("cell"), col("crn"))
 
   /** IVF-ADC with exact re-rank — THE billion-scale composition (the
     * FAISS IVFADC recipe): the coarse quantizer bounds WHO is compared
@@ -1000,51 +967,45 @@ object Similarity {
   def ivfAdcRerankTopK(vectors: DataFrame, k: Int, nCells: Int = 16,
                        nProbe: Int = 12, shortlist: Int = 256, m: Int = 8,
                        ksub: Int = 16, iters: Int = 1): DataFrame = {
-    // The coarse probe-assignment chain (v → ranked) and PQ training
+    // The coarse probe-assignment chain (v → probes) and PQ training
     // are INDEPENDENT lineages over `vectors` — overlap them as
     // concurrent jobs (guide §2.6).
     val par0 = Parallelism.inParallel[Any](
       () => {
         // reused by the coarse assignment AND the final re-rank
         val v = withNorm(vectors).localCheckpoint()
-        val cent = v.orderBy(col("id")).limit(nCells)
-          .select(col("id").as("cid"), col("embedding").as("ce"),
-            col("norm").as("cnorm"))
-        val wProbe = Window.partitionBy("id")
-          .orderBy(col("rc").desc, col("cid").asc)
         // ONE broadcast assignment pass, materialized as the skinny
-        // (id, cell, crn) table (n·nProbe rows of three longs) that
-        // BOTH consumers below read — without pinning it, the
-        // cross-join subtree would execute twice
-        val ranked = v.crossJoin(broadcast(cent))
-          .withColumn("rc", round(dotN(col("embedding"), col("ce")) /
-            (col("norm") * col("cnorm")), 4))
-          .withColumn("crn", row_number().over(wProbe))
-          .filter(col("crn") <= nProbe)
-          .select(col("id"), col("cid").as("cell"), col("crn"))
-          .localCheckpoint()
-        (v, ranked)
+        // (id, cell, crn) table that BOTH funnel sides read — without
+        // pinning it, the cross-join subtree would execute twice
+        (v, ivfProbes(v, ivfSeedCells(v, nCells), nProbe).localCheckpoint())
       },
       () => pqPrepare(vectors, m, ksub, iters))
-    val (v, ranked) = par0(0).asInstanceOf[(DataFrame, DataFrame)]
+    val (v, probes) = par0(0).asInstanceOf[(DataFrame, DataFrame)]
     val (base, books, dsub) =
       par0(1).asInstanceOf[(DataFrame, Array[Codebook], Int)]
-    // corpus side: every vector lives in exactly ONE cell (its argmax —
-    // crn 1)…
-    val cells = ranked.filter(col("crn") === 1).select("id", "cell")
-    // …queries PROBE their nProbe nearest cells — the recall knob
-    // (pairs stay unique: a corpus vector can meet a query through its
-    // single home cell only)
-    val probes = ranked.select("id", "cell")
-    val coded = base.select(
-      col("id") +: (0 until m).map(s => pqAssign(s, books(s)).as(s"a$s")): _*)
-    val q = base.join(probes, "id").select(
-      col("id").as("query_id") +: col("cell") +:
-        (0 until m).flatMap(s => Seq(col(s"sub$s").as(s"qsub$s"),
-          col(s"nv$s").as(s"qnv$s"))): _*)
-    val c = coded.join(cells, "id").select(
-      col("id").as("neighbor_id") +: col("cell").as("ncell") +:
+    // corpus side: every vector lives in exactly ONE cell (crn 1)
+    val coded = pqCodes(base, books)
+      .join(probes.filter(col("crn") === 1), "id")
+      .select(col("id").as("neighbor_id") +: col("cell").as("ncell") +:
         (0 until m).map(s => col(s"a$s")): _*)
+    ivfAdcFunnel(v, probes, base, coded, books, ksub, dsub, k, shortlist)
+  }
+
+  /** probe → ADC shortlist → exact re-rank, the funnel of
+    * [[ivfAdcRerankTopK]] and [[ivfAdcSearchWith]]. Queries PROBE
+    * their `probes` cells (id, cell — the recall knob) and meet the
+    * coded corpus side (neighbor_id, ncell, a0..a{m-1}) in each; pairs
+    * stay unique because a corpus vector sits in its single home cell.
+    * Each pair is ADC-scored from the query's PQ `base` slices, each
+    * query's `shortlist` nearest by ADC distance go to the exact
+    * re-rank against the float vectors `v`.
+    */
+  private def ivfAdcFunnel(v: DataFrame, probes: DataFrame, base: DataFrame,
+                           coded: DataFrame, books: Array[Codebook],
+                           ksub: Int, dsub: Int, k: Int,
+                           shortlist: Int): DataFrame = {
+    val m = books.length
+    val q = adcQuery(base.join(probes, "id"), m, col("cell"))
     // EXPLICIT co-partitioning on the cell key for the scoring join:
     // its inputs are byte-small but its output is Σ|cell|² scored pairs
     // — per-PAIR compute, so AQE's byte-based coalescing folds it into
@@ -1052,30 +1013,19 @@ object Similarity {
     // AQE-non-coalescible and the join reuses it, so scoring spreads
     // over min(nCells, parallelism) tasks — at production cell counts
     // (thousands) that is full spread; broadcasting either side would
-    // ship a corpus-sized table and is NOT the 100 TB shape.
-    val par = vectors.sparkSession.sparkContext.defaultParallelism
+    // ship a corpus-sized table and is NOT the 100 TB shape. The
+    // shortlist window is pinned the same way, so its sort over the
+    // candidate pairs cannot fold into one post-shuffle partition.
+    val par = v.sparkSession.sparkContext.defaultParallelism
     val adc = q.repartition(par, col("cell"))
-      .join(c.repartition(par, col("ncell")),
+      .join(coded.repartition(par, col("ncell")),
         col("cell") === col("ncell") && col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(adcSum(books, m, ksub, dsub), 4).as("adist"))
-    val wShort = Window.partitionBy("query_id")
-      .orderBy(col("adist").asc, col("neighbor_id").asc)
-    // explicit repartition on the window key, same reason: the
-    // shortlist sort over the candidate pairs must not fold into one
-    // byte-small post-shuffle partition
-    val short = adc.repartition(par, col("query_id"))
-      .withColumn("srank", row_number().over(wShort))
-      .filter(col("srank") <= shortlist)
+    val short = topK(adc.repartition(par, col("query_id")), shortlist,
+        order = byAdist, rank = "srank")
       .select("query_id", "neighbor_id")
-    val scored = short
-      .join(v.select(col("id").as("query_id"),
-        col("embedding").as("qe"), col("norm").as("qn")), "query_id")
-      .join(v.select(col("id").as("neighbor_id"),
-        col("embedding").as("ne"), col("norm").as("nn")), "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(dotN(col("qe"), col("ne")) / (col("qn") * col("nn")), 4).as("cos"))
-    topK(scored, k)
+    topK(rerank(short, v), k)
   }
 
   /** BUILD the PERSISTED IVF-ADC serving index — [[ivfAdcRerankTopK]]
@@ -1090,8 +1040,14 @@ object Similarity {
     *  - `codes`    — per corpus vector its home cell + m PQ codes
     *                 (id, cell, codes), with min/max stats on `cell`
     *                 so cell-restricted scans prune at planning time;
-    *  - `meta`     — one row (n_cells, m, ksub, dim) making the index
-    *                 self-describing.
+    *  - `meta`     — one row (n_cells, m, ksub, dim, attrs) making the
+    *                 index self-describing, plus the snapshot ids of the
+    *                 `centroids` and `codebooks` it was built with
+    *                 (centroids_snap, codebooks_snap): search and append
+    *                 read the quantizers at those ids, so an optimize
+    *                 that fails after publishing new quantizers but
+    *                 before its codes commit leaves every reader on the
+    *                 quantizers the live codes were encoded with.
     *
     * Training is bit-identical to the direct funnel (same seed
     * selection, same 4dp/6dp rounding contracts), so a search through
@@ -1107,29 +1063,18 @@ object Similarity {
     // The coarse-cell checkpoint chain (v → cent) and PQ training
     // (pqPrepare) are INDEPENDENT lineages over `vectors`: overlap
     // them as concurrent jobs (guide §2.6) instead of paying their
-    // fixed costs back to back. dim comes from training (dsub·m) —
-    // the old separate `v.select(size).head()` job is gone.
+    // fixed costs back to back. dim comes from training (dsub·m).
     val par0 = Parallelism.inParallel[Any](
       () => {
         val v = withNorm(vectors).localCheckpoint()
-        val cent = v.orderBy(col("id")).limit(nCells)
-          .select(col("id").as("cid"), col("embedding").as("ce"),
-            col("norm").as("cnorm"))
-          .localCheckpoint() // home-cell assignment + persist read it
-        (v, cent)
+        // home-cell assignment + persist read it
+        (v, ivfSeedCells(v, nCells).localCheckpoint())
       },
       () => pqPrepare(vectors, m, ksub, iters))
     val (v, cent) = par0(0).asInstanceOf[(DataFrame, DataFrame)]
     val (base, books, dsub) =
       par0(1).asInstanceOf[(DataFrame, Array[Codebook], Int)]
-    val dim = dsub * m
-    val cells = ivfHomeCells(v, cent)
-    val coded = base.select(
-      col("id") +: (0 until m).map(s => pqAssign(s, books(s)).as(s"a$s")): _*)
-    val codes = withAttrs(coded.join(cells, "id")
-      .select(col("id"), col("cell"),
-        array((0 until m).map(s => col(s"a$s").cast("long")): _*).as("codes")),
-      vectors, attrCols)
+    val codes = codeRows(base, books, ivfProbes(v, cent, 1), vectors, attrCols)
     // attrs ride IN the codes table with min/max stats: a filtered
     // search pushes its predicate into the codes parquet scan and
     // prunes files — the filtered-ANN story needs no side join at all.
@@ -1150,7 +1095,7 @@ object Similarity {
     // once all three have committed: a failed data write throws out of
     // inParallel and leaves the previous meta — the contract an
     // optimize must not overwrite with one describing unpublished data.
-    Parallelism.inParallel[Long](
+    val snaps = Parallelism.inParallel[Long](
       () => Layout.snapshotWrite(cent, s"$indexDir/centroids"),
       () => Layout.snapshotWrite(
         books.zipWithIndex.flatMap { case (cb, s) =>
@@ -1160,18 +1105,27 @@ object Similarity {
       () => Layout.snapshotWrite(codesOut, s"$indexDir/codes",
         statsCols = "cell" +: attrCols))
     Layout.snapshotWrite(
-      Seq((nCells, m, ksub, dim, attrCols.mkString(",")))
-        .toDF("n_cells", "m", "ksub", "dim", "attrs"),
+      Seq((nCells, m, ksub, dsub * m, attrCols.mkString(","), snaps(0), snaps(1)))
+        .toDF("n_cells", "m", "ksub", "dim", "attrs", "centroids_snap",
+          "codebooks_snap"),
       s"$indexDir/meta")
     ()
   }
 
-  /** Denormalize filterable metadata columns into the codes rows. */
-  private def withAttrs(codes: DataFrame, vectors: DataFrame,
-                        attrCols: Seq[String]): DataFrame =
+  /** The `codes` table rows: per vector of `base` its home cell (from
+    * `cells`) and its PQ codes array, plus the filterable attr columns
+    * denormalized in from `vectors` — shared by build and append, so
+    * the delta path is the bulk path's arithmetic.
+    */
+  private def codeRows(base: DataFrame, books: Array[Codebook],
+                       cells: DataFrame, vectors: DataFrame,
+                       attrCols: Seq[String]): DataFrame = {
+    val codes = pqCodes(base, books).join(cells, "id")
+      .select(col("id"), col("cell"), array(books.indices.map(s =>
+        col(s"a$s").cast("long")): _*).as("codes"))
     if (attrCols.isEmpty) codes
-    else codes.join(
-      vectors.select((col("id") +: attrCols.map(col)): _*), "id")
+    else codes.join(vectors.select((col("id") +: attrCols.map(col)): _*), "id")
+  }
 
   /** INCREMENTAL index maintenance — assign + encode ONLY the new
     * vectors against the FROZEN centroids and codebooks and append
@@ -1183,30 +1137,11 @@ object Similarity {
     * rebuild on a schedule; that trade is the published IVF contract.
     */
   def ivfAdcIndexAppend(newVectors: DataFrame, indexDir: String): Long = {
-    val spark = newVectors.sparkSession
-    // four independent artifact loads (frozen quantizers, centroid
-    // table, the batch's norm checkpoint, the attr contract) — overlap
-    // them (guide §2.6) instead of serializing their fixed costs
-    val par0 = Parallelism.inParallel[Any](
-      () => loadIndexBooks(spark, indexDir),
-      () => Layout.snapshotRead(spark, s"$indexDir/centroids")
-        .localCheckpoint(),
-      () => withNorm(newVectors).localCheckpoint(),
-      () => indexAttrCols(spark, indexDir))
-    val (books, m, dsub) =
-      par0(0).asInstanceOf[(Array[Codebook], Int, Int)]
-    val cent = par0(1).asInstanceOf[DataFrame]
-    val v = par0(2).asInstanceOf[DataFrame]
-    val attrCols = par0(3).asInstanceOf[Seq[String]]
-    val cells = ivfHomeCells(v, cent)
-    val base = pqBase(newVectors, m, dsub)
-    val coded = base.select(
-      col("id") +: (0 until m).map(s => pqAssign(s, books(s)).as(s"a$s")): _*)
-    val codes = withAttrs(coded.join(cells, "id")
-      .select(col("id"), col("cell"),
-        array((0 until m).map(s => col(s"a$s").cast("long")): _*).as("codes")),
-      newVectors, attrCols)
-    Layout.snapshotAppend(codes, s"$indexDir/codes")
+    val (meta, books, cent, v) = openIndex(newVectors, indexDir)
+    val base = pqBase(newVectors, books.length,
+      meta.getAs[Int]("dim") / books.length)
+    Layout.snapshotAppend(codeRows(base, books, ivfProbes(v, cent, 1),
+      newVectors, indexAttrCols(meta)), s"$indexDir/codes")
   }
 
   /** OPTIMIZE the persisted serving index — the maintenance pass a
@@ -1236,25 +1171,47 @@ object Similarity {
     */
   def ivfAdcIndexOptimize(vectors: DataFrame, indexDir: String,
                           iters: Int = 1): Unit = {
-    val spark = vectors.sparkSession
-    val knobs = Layout.snapshotRead(spark, s"$indexDir/meta")
-      .select("n_cells", "m", "ksub").head()
-    ivfAdcBuildIndex(vectors, indexDir, knobs.getInt(0), knobs.getInt(1),
-      knobs.getInt(2), iters, indexAttrCols(spark, indexDir),
-      clusterCodes = true)
+    val meta = Layout.snapshotRead(vectors.sparkSession, s"$indexDir/meta").head()
+    ivfAdcBuildIndex(vectors, indexDir, meta.getAs[Int]("n_cells"),
+      meta.getAs[Int]("m"), meta.getAs[Int]("ksub"), iters,
+      indexAttrCols(meta), clusterCodes = true)
   }
 
   /** The attr columns the index was built with (meta `attrs`; empty
     * for indexes predating filtered search).
     */
-  private def indexAttrCols(spark: org.apache.spark.sql.SparkSession,
-                            indexDir: String): Seq[String] = {
-    val meta = Layout.snapshotRead(spark, s"$indexDir/meta")
-    if (!meta.columns.contains("attrs")) Nil
-    else meta.select("attrs").head().getString(0) match {
+  private def indexAttrCols(meta: Row): Seq[String] =
+    if (!meta.schema.fieldNames.contains("attrs")) Nil
+    else meta.getAs[String]("attrs") match {
       case null | "" => Nil
       case s => s.split(',').toSeq
     }
+
+  /** Open the persisted index for a search or an append: its meta row
+    * and, loaded concurrently (guide §2.6), the codebooks re-hydrated
+    * to the driver-literal form the ADC kernel inlines (m×ksub×dsub
+    * doubles, metadata-sized like [[pqPrepare]]'s training collect),
+    * the centroid table, and `vectors`' norm checkpoint. The
+    * quantizers are read at the snapshot ids meta pins; a meta written
+    * before those ids were recorded reads the latest snapshots (the
+    * `attrs` rule). `codes` is always read at its latest snapshot:
+    * appends extend it under the same quantizers.
+    */
+  private def openIndex(vectors: DataFrame, indexDir: String)
+      : (Row, Array[Codebook], DataFrame, DataFrame) = {
+    val spark = vectors.sparkSession
+    val meta = Layout.snapshotRead(spark, s"$indexDir/meta").head()
+    def pinned(c: String): Long =
+      if (meta.schema.fieldNames.contains(c)) meta.getAs[Long](c) else -1L
+    val par = Parallelism.inParallel[Any](
+      () => booksOf(Layout.snapshotRead(spark, s"$indexDir/codebooks",
+        pinned("codebooks_snap")).select("s", "cid", "ce").collect(),
+        meta.getAs[Int]("m")),
+      () => Layout.snapshotRead(spark, s"$indexDir/centroids",
+        pinned("centroids_snap")).localCheckpoint(),
+      () => withNorm(vectors).localCheckpoint())
+    (meta, par(0).asInstanceOf[Array[Codebook]],
+      par(1).asInstanceOf[DataFrame], par(2).asInstanceOf[DataFrame])
   }
 
   /** SEARCH through the persisted index: the same three-rung funnel as
@@ -1284,95 +1241,15 @@ object Similarity {
                        nProbe: Int = 12, shortlist: Int = 256,
                        neighborFilter: Option[Column] = None): DataFrame = {
     require(k >= 1, s"bad k $k")
-    val spark = vectors.sparkSession
-    // three independent artifact loads — overlap them (guide §2.6)
-    val par0 = Parallelism.inParallel[Any](
-      () => loadIndexBooks(spark, indexDir),
-      () => Layout.snapshotRead(spark, s"$indexDir/centroids")
-        .localCheckpoint(),
-      () => withNorm(vectors).localCheckpoint())
-    val (books, m, dsub) =
-      par0(0).asInstanceOf[(Array[Codebook], Int, Int)]
-    val ksub = books.head.length
-    val cent = par0(1).asInstanceOf[DataFrame]
-    val v = par0(2).asInstanceOf[DataFrame]
-    val wProbe = Window.partitionBy("id")
-      .orderBy(col("rc").desc, col("cid").asc)
-    val probes = v.crossJoin(broadcast(cent))
-      .withColumn("rc", round(dotN(col("embedding"), col("ce")) /
-        (col("norm") * col("cnorm")), 4))
-      .withColumn("crn", row_number().over(wProbe))
-      .filter(col("crn") <= nProbe)
-      .select(col("id"), col("cid").as("cell"))
-    val base = pqBase(vectors, m, dsub)
-    val q = base.join(probes, "id").select(
-      col("id").as("query_id") +: col("cell") +:
-        (0 until m).flatMap(s => Seq(col(s"sub$s").as(s"qsub$s"),
-          col(s"nv$s").as(s"qnv$s"))): _*)
-    val codesTable = Layout.snapshotRead(spark, s"$indexDir/codes")
-    val c = neighborFilter.fold(codesTable)(codesTable.filter).select(
+    val (meta, books, cent, v) = openIndex(vectors, indexDir)
+    val m = books.length
+    val codes = Layout.snapshotRead(vectors.sparkSession, s"$indexDir/codes")
+    val coded = neighborFilter.fold(codes)(codes.filter).select(
       col("id").as("neighbor_id") +: col("cell").as("ncell") +:
-        (0 until m).map(s =>
-          element_at(col("codes"), s + 1).as(s"a$s")): _*)
-    // explicit co-partitioning on the cell key + spread shortlist sort —
-    // same per-pair-compute-vs-byte-coalescing reasoning as
-    // ivfAdcRerankTopK (the q193 lesson)
-    val par = spark.sparkContext.defaultParallelism
-    val adc = q.repartition(par, col("cell"))
-      .join(c.repartition(par, col("ncell")),
-        col("cell") === col("ncell") && col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(adcSum(books, m, ksub, dsub), 4).as("adist"))
-    val wShort = Window.partitionBy("query_id")
-      .orderBy(col("adist").asc, col("neighbor_id").asc)
-    val short = adc.repartition(par, col("query_id"))
-      .withColumn("srank", row_number().over(wShort))
-      .filter(col("srank") <= shortlist)
-      .select("query_id", "neighbor_id")
-    val scored = short
-      .join(v.select(col("id").as("query_id"),
-        col("embedding").as("qe"), col("norm").as("qn")), "query_id")
-      .join(v.select(col("id").as("neighbor_id"),
-        col("embedding").as("ne"), col("norm").as("nn")), "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(dotN(col("qe"), col("ne")) / (col("qn") * col("nn")), 4).as("cos"))
-    topK(scored, k)
-  }
-
-  /** Home-cell assignment (crn == 1 of the probe ranking) against a
-    * small broadcast centroid table — shared by build and append so
-    * the delta path is the same arithmetic as the bulk path.
-    */
-  private def ivfHomeCells(v: DataFrame, cent: DataFrame): DataFrame = {
-    val w = Window.partitionBy("id").orderBy(col("rc").desc, col("cid").asc)
-    v.crossJoin(broadcast(cent))
-      .withColumn("rc", round(dotN(col("embedding"), col("ce")) /
-        (col("norm") * col("cnorm")), 4))
-      .withColumn("crn", row_number().over(w))
-      .filter(col("crn") === 1)
-      .select(col("id"), col("cid").as("cell"))
-  }
-
-  /** The stored codebooks re-hydrated to the driver-literal form the
-    * ADC kernel inlines — m×ksub×dsub doubles, metadata-sized by the
-    * same bound as [[pqPrepare]]'s training collect.
-    */
-  private def loadIndexBooks(spark: org.apache.spark.sql.SparkSession,
-                             indexDir: String)
-      : (Array[Codebook], Int, Int) = {
-    val meta = Layout.snapshotRead(spark, s"$indexDir/meta")
-      .select("m", "dim").head()
-    val m = meta.getInt(0)
-    val dsub = meta.getInt(1) / m
-    val rows = Layout.snapshotRead(spark, s"$indexDir/codebooks")
-      .select("s", "cid", "ce").collect()
-    val books = (0 until m).map { s =>
-      rows.filter(_.getInt(0) == s).map { r =>
-        val ce = r.getSeq[Double](2).toArray
-        (r.getLong(1), ce, ce.foldLeft(0.0)((a, x) => a + x * x))
-      }.sortBy(_._1): Codebook
-    }.toArray
-    (books, m, dsub)
+        (0 until m).map(s => element_at(col("codes"), s + 1).as(s"a$s")): _*)
+    val dsub = meta.getAs[Int]("dim") / m
+    ivfAdcFunnel(v, ivfProbes(v, cent, nProbe), pqBase(vectors, m, dsub),
+      coded, books, meta.getAs[Int]("ksub"), dsub, k, shortlist)
   }
 
   /** Principal-component projection (PCA whitening's first step) —
@@ -1547,21 +1424,13 @@ object Similarity {
     */
   def hardNegativesTopK(vectors: DataFrame, k: Int, bits: Int = 4,
                         tables: Int = 16): DataFrame = {
-    val b = ensureParallelism(withNative(vectors))
-      .select(col("id"), col("embedding"), col("label"),
-        sqrt(dotN(col("embedding"), col("embedding"))).as("norm"))
+    val b = withNorm(vectors, "label")
       .withColumn("keys", tableKeysChecked(bits, tables))
       .localCheckpoint() // probe table + both scoring sides read it
-    val cand = multiTableCandidates(b)
-    val scored = cand
-      .join(b.select(col("id").as("query_id"), col("embedding").as("qe"),
-        col("norm").as("qn"), col("label").as("qlabel")), "query_id")
-      .join(b.select(col("id").as("neighbor_id"), col("embedding").as("ce"),
-        col("norm").as("cn"), col("label").as("neg_label")), "neighbor_id")
-      .filter(col("qlabel") =!= col("neg_label"))
-      .select(col("query_id"), col("neighbor_id"), col("neg_label"),
-        round(dotN(col("qe"), col("ce")) / (col("qn") * col("cn")), 4)
-          .as("cos"))
+    val scored = rerank(multiTableCandidates(b), b, "label")
+      .filter(col("qlabel") =!= col("nlabel"))
+      .select(col("query_id"), col("neighbor_id"),
+        col("nlabel").as("neg_label"), col("cos"))
     topK(scored, k)
   }
 
@@ -1592,19 +1461,14 @@ object Similarity {
     val v = withNorm(vectors).localCheckpoint()
     val a = v.join(kmeansAssign(vectors, k, iters)
       .withColumnRenamed("vec_id", "id"), "id").localCheckpoint()
-    val cent = a
-      .select(col("cluster"), posexplode(col("embedding")).as(Seq("dim", "x")))
-      .groupBy("cluster", "dim")
-      .agg(round(avg(col("x").cast("double")), 6).as("m"))
-      .groupBy("cluster")
-      .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("dm"))
-      .select(col("cluster"),
-        transform(col("dm"), e => e.getField("m")).as("ce"))
+    val cent = meanVectors(a
+        .select(col("cluster"), posexplode(col("embedding")).as(Seq("dim", "x"))),
+        "cluster")
       .withColumn("cnorm", sqrt(dotN(col("ce"), col("ce"))))
     val scored = a.join(broadcast(cent), "cluster")
       .select(col("id"), col("cluster"),
-        (round(dotN(col("embedding"), col("ce")) /
-          (col("norm") * col("cnorm")), 4) + lit(0.0)).as("cos"))
+        (cosCol(col("embedding"), col("ce"), col("norm"), col("cnorm")) +
+          lit(0.0)).as("cos"))
     val w = Window.partitionBy("cluster")
       .orderBy(col("cos").asc, col("id").asc)
     scored.withColumn("pr0", percent_rank().over(w))
@@ -1638,45 +1502,30 @@ object Similarity {
                       threshold: Double = 1.0, bits: Int = 4,
                       tables: Int = 16): DataFrame = {
     require(k >= 1, s"bad k $k")
-    val b = ensureParallelism(withNative(vectors))
-      .select(col("id"), col("embedding"), col("label"),
-        sqrt(dotN(col("embedding"), col("embedding"))).as("norm"))
+    val b = withNorm(vectors, "label")
       .withColumn("keys", tableKeysChecked(bits, tables))
       .withColumn("side", pmod(col("label"), lit(2)))
       .localCheckpoint() // probe table + both scoring sides read it
-    val scored = multiTableCandidates(b)
-      .join(b.select(col("id").as("query_id"), col("embedding").as("qe"),
-        col("norm").as("qn"), col("side").as("qside")), "query_id")
-      .join(b.select(col("id").as("neighbor_id"), col("embedding").as("ce"),
-        col("norm").as("cn"), col("side").as("cside")), "neighbor_id")
-      .filter(col("qside") === 0 && col("cside") === 1)
+    val scored = rerank(multiTableCandidates(b), b, "side")
+      .filter(col("qside") === 0 && col("nside") === 1)
       .select(col("query_id").as("src_id"), col("neighbor_id").as("tgt_id"),
-        round(dotN(col("qe"), col("ce")) / (col("qn") * col("cn")), 4)
-          .as("cos"))
+        col("cos"))
       .localCheckpoint() // knn averages + margins + both argmaxes read it
-    def knnAvg(side: String, other: String): DataFrame = {
-      val w = Window.partitionBy(side)
-        .orderBy(col("cos").desc, col(other).asc)
-      scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+    def knnAvg(side: String, other: String): DataFrame =
+      topK(scored, k, by = side, order = Seq(col("cos").desc, col(other).asc))
         .groupBy(side)
         .agg((round(avg(col("cos")), 6) + lit(0.0)).as(s"den_$side"))
-    }
     val m = scored
       .join(knnAvg("src_id", "tgt_id"), "src_id")
       .join(knnAvg("tgt_id", "src_id"), "tgt_id")
       .withColumn("margin", round(col("cos") /
         ((col("den_src_id") + col("den_tgt_id")) / 2), 4) + lit(0.0))
       .localCheckpoint() // forward and backward argmaxes both read it
-    val wf = Window.partitionBy("src_id")
-      .orderBy(col("margin").desc, col("tgt_id").asc)
-    val wb = Window.partitionBy("tgt_id")
-      .orderBy(col("margin").desc, col("src_id").asc)
-    val fwd = m.withColumn("rn", row_number().over(wf))
-      .filter(col("rn") === 1).drop("rn")
-    val bwd = m.withColumn("rn", row_number().over(wb))
-      .filter(col("rn") === 1)
-      .select(col("src_id"), col("tgt_id"))
-    fwd.join(bwd, Seq("src_id", "tgt_id"), "left_semi")
+    def best(side: String, other: String): DataFrame =
+      topK(m, 1, by = side, order = Seq(col("margin").desc, col(other).asc))
+    best("src_id", "tgt_id")
+      .join(best("tgt_id", "src_id").select("src_id", "tgt_id"),
+        Seq("src_id", "tgt_id"), "left_semi")
       .filter(col("margin") >= threshold)
       .select("src_id", "tgt_id", "cos", "margin")
   }
@@ -1721,10 +1570,8 @@ object Similarity {
       .groupBy("query_id", "neighbor_id")
       .agg((round(sum(lit(1.0) / (lit(c) + col("rank"))), 6) + lit(0.0))
         .as("rrf"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("rrf").desc, col("neighbor_id").asc)
-    scored.withColumn("fused_rank", row_number().over(w).cast("int"))
-      .filter(col("fused_rank") <= k)
+    topK(scored, k, order = Seq(col("rrf").desc, col("neighbor_id").asc),
+      rank = "fused_rank")
   }
 
   /** Maximal-marginal-relevance selection: from the `poolK` most-
@@ -1756,7 +1603,7 @@ object Similarity {
     val qn = qRow.getDouble(1)
     val pool = base.filter(col("id") =!= queryId)
       .select(col("id"), col("embedding"), col("norm"),
-        round(dotN(col("embedding"), qe) / (col("norm") * qn), 4).as("rel"))
+        cosCol(col("embedding"), qe, col("norm"), lit(qn)).as("rel"))
       .orderBy(col("rel").desc, col("id").asc).limit(poolK)
       .localCheckpoint() // k narrow rounds re-read it
     var selected = Vector.empty[(Long, Seq[Float], Double, Double)]
@@ -1767,8 +1614,8 @@ object Similarity {
     while (selected.length < k && !exhausted) {
       val chosenIds = selected.map(_._1)
       val sims = selected.map { case (_, se, sn, _) =>
-        round(dotN(col("embedding"),
-          array(se.map(lit).toIndexedSeq: _*)) / (col("norm") * sn), 4)
+        cosCol(col("embedding"), array(se.map(lit).toIndexedSeq: _*),
+          col("norm"), lit(sn))
       }
       val penalty = sims match {
         case Seq() => lit(0.0)
@@ -1866,26 +1713,12 @@ object Similarity {
     val b = chunkFrame(chunks, docCol, idCol, vecCol)
       .withColumn("keys", tableKeysChecked(bits, tables))
       .localCheckpoint() // gate probes + both rerank sides read it
-    val probes = b.select(col("cid"), explode(col("keys")).as("tkey"))
-    val candChunks = probes.as("q")
-      .join(probes.as("c"),
-        col("q.tkey") === col("c.tkey") && col("q.cid") =!= col("c.cid"))
-      .select(col("q.cid").as("qcid"), col("c.cid").as("ccid"))
+    // scored pairs of chunks (query_id, neighbor_id) from different
+    // docs (qdoc, ndoc); each query chunk nominates its m nearest
+    val cand = topK(rerank(multiTableCandidates(b), b, "doc")
+        .filter(col("qdoc") =!= col("ndoc")), m)
+      .select(col("qdoc").as("query_id"), col("ndoc").as("doc_id"))
       .distinct()
-    val scored = candChunks
-      .join(b.select(col("cid").as("qcid"), col("doc").as("query_id"),
-        col("embedding").as("qe"), col("norm").as("qn")), "qcid")
-      .join(b.select(col("cid").as("ccid"), col("doc").as("doc_id"),
-        col("embedding").as("ce"), col("norm").as("cn")), "ccid")
-      .filter(col("query_id") =!= col("doc_id"))
-      .select(col("query_id"), col("doc_id"), col("qcid"), col("ccid"),
-        round(dotN(col("qe"), col("ce")) / (col("qn") * col("cn")), 4)
-          .as("cos"))
-    val w = Window.partitionBy("qcid")
-      .orderBy(col("cos").desc, col("ccid").asc)
-    val cand = scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= m)
-      .select("query_id", "doc_id").distinct()
     maxSimScore(b, cand, k)
   }
 
@@ -1926,30 +1759,26 @@ object Similarity {
 
   private def chunkFrame(chunks: DataFrame, docCol: String, idCol: String,
                          vecCol: String): DataFrame =
-    ensureParallelism(withNative(chunks))
+    Parallelism.ensure(withNative(chunks))
       .select(col(docCol).cast("long").as("doc"),
-        col(idCol).cast("long").as("cid"),
+        col(idCol).cast("long").as("id"),
         col(vecCol).cast("array<double>").as("embedding"))
       .withColumn("norm", sqrt(dotN(col("embedding"), col("embedding"))))
 
   private def maxSimScore(b: DataFrame, cand: DataFrame,
                           k: Int): DataFrame = {
     val pairs = cand
-      .join(b.select(col("doc").as("query_id"), col("cid").as("qcid"),
+      .join(b.select(col("doc").as("query_id"), col("id").as("qcid"),
         col("embedding").as("qe"), col("norm").as("qn")), "query_id")
       .join(b.select(col("doc").as("doc_id"),
         col("embedding").as("de"), col("norm").as("dn")), "doc_id")
       .select(col("query_id"), col("doc_id"), col("qcid"),
-        round(dotN(col("qe"), col("de")) / (col("qn") * col("dn")), 4)
-          .as("cos"))
+        cosCol(col("qe"), col("de"), col("qn"), col("dn")).as("cos"))
     val scored = pairs
       .groupBy("query_id", "doc_id", "qcid").agg(max("cos").as("m"))
       .groupBy("query_id", "doc_id")
       .agg((round(sum("m"), 4) + lit(0.0)).as("score"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("doc_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(scored, k, order = Seq(col("score").desc, col("doc_id").asc))
       .select("query_id", "doc_id", "rank", "score")
   }
 }

@@ -42,12 +42,6 @@ final case class PipeStage(cmd: Seq[String], env: Map[String, String] = Map.empt
     val extraEnv = env
     input.mapPartitions(records => PipeStage.pipeIterator(command, extraEnv, records))
   }
-
-  /** Pipe a single-string-column DataFrame; returns one `value` column. */
-  def runDf(df: DataFrame): DataFrame = {
-    import df.sparkSession.implicits._
-    run(df.select(col(df.columns.head)).as[String]).toDF("value")
-  }
 }
 
 object PipeStage {

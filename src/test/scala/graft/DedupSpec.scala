@@ -472,15 +472,64 @@ class DedupSpec extends AnyFunSuite {
       attrCols = Seq("lang"))
     def search() = Similarity.ivfAdcSearchWith(vecs, idx, 1, nProbe = 1,
       shortlist = 3).collect().map(_.toSeq).toSet
-    def metaSnapshots() = graft.operators.Layout.snapshotHistory(spark, s"$idx/meta").count()
-    val (before, metaBefore) = (search(), metaSnapshots())
-    // same corpus, so retraining reproduces centroids and codebooks; only
-    // the codes write reads the attr column, and it fails on one row
-    val poisoned = vecs.withColumn("lang",
-      when(col("id") === 4L, raise_error(lit("codes write fails"))).otherwise(col("lang")))
+    def snapshots(t: String) = graft.operators.Layout.snapshotHistory(spark, s"$idx/$t").count()
+    val (before, metaBefore, centBefore) = (search(), snapshots("meta"), snapshots("centroids"))
+    // a SHIFTED corpus: the lowest ids (the seeds) now point along other
+    // directions, so the retrained centroids and codebooks differ from
+    // the built ones. Training succeeds and publishes them; only the
+    // codes write reads the attr column, and it fails on one row
+    (0 until 9).map(i => (i.toLong, dirs((i + 1) % 3).map(x => x * (1f + 0.01f * (i / 3))), "en"))
+      .toDF("id", "embedding", "lang").write.parquet(s"$tmp/shifted")
+    val poisoned = spark.read.parquet(s"$tmp/shifted").withColumn("lang",
+        when(col("id") === 4L, raise_error(lit("codes write fails"))).otherwise(col("lang")))
     intercept[Exception](Similarity.ivfAdcIndexOptimize(poisoned, idx))
-    assert(metaSnapshots() === metaBefore)
+    assert(snapshots("centroids") > centBefore) // new quantizers were published
+    assert(snapshots("meta") === metaBefore)
+    // search reads the quantizers meta pins, consistent with the old codes
     assert(search() === before)
+  }
+
+  test("ivfAdcSearchWith sizes its ADC tables by meta ksub when a codebook cluster empties") {
+    import spark.implicits._
+    // ids 0 and 1 are the same vector, so in every subspace seed cid 1
+    // ties cid 0, loses every assignment and drops out of the trained
+    // codebook: each book holds cids {0, 2, 3} of ksub = 4
+    val vecs = Seq(
+      Array(1f, 0f, 1f, 0f), Array(1f, 0f, 1f, 0f), Array(0f, 1f, 0f, 1f),
+      Array(1f, 1f, 0f, 0f), Array(0.9f, 0.1f, 1f, 0f), Array(0f, 1f, 0.1f, 1f),
+      Array(1f, 1f, 0.1f, 0f), Array(0.5f, 0.5f, 0.5f, 0.2f))
+      .zipWithIndex.map { case (e, i) => (i.toLong, e) }.toDF("id", "embedding")
+    val idx = java.nio.file.Files.createTempDirectory("graft_ivfksub").toString + "/idx"
+    Similarity.ivfAdcBuildIndex(vecs, idx, nCells = 2, m = 2, ksub = 4)
+    val stored = Similarity.ivfAdcSearchWith(vecs, idx, 2, nProbe = 2, shortlist = 8)
+    val direct = Similarity.ivfAdcRerankTopK(vecs, 2, nCells = 2, nProbe = 2,
+      shortlist = 8, m = 2, ksub = 4)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    assert(rows(stored) === rows(direct))
+  }
+
+  test("a zero vector scores a null cosine that ranks last instead of failing") {
+    import spark.implicits._
+    val vecs = Seq(
+      (1L, Array(1f, 0f, 0f, 0f)), (2L, Array(0.9f, 0.1f, 0f, 0f)),
+      (3L, Array(0f, 0f, 0f, 0f)), (4L, Array(0.5f, 0.5f, 0.1f, 0f)))
+      .toDF("id", "embedding")
+    // every vector has non-negative leading dims, so each multi-table
+    // key collides and the candidate stage sees all pairs
+    for ((name, out) <- Seq(
+        "bruteForceTopK" -> Similarity.bruteForceTopK(vecs, vecs, 3),
+        "multiTableAnnTopK" -> Similarity.multiTableAnnTopK(vecs, 3, bits = 2, tables = 2))) {
+      val rows = out.collect().map(r => (r.getAs[Long]("query_id"),
+        r.getAs[Long]("neighbor_id"), Option(r.getAs[java.lang.Double]("cos")),
+        r.getAs[Int]("rank")))
+      assert(rows.length == 12, name)
+      rows.filter(r => r._1 == 3L || r._2 == 3L).foreach(r => assert(r._3.isEmpty, s"$name $r"))
+      rows.filter(r => r._1 != 3L && r._2 != 3L).foreach(r => assert(r._3.isDefined, s"$name $r"))
+      for (q <- Seq(1L, 2L, 4L))
+        assert(rows.filter(_._1 == q).maxBy(_._4)._2 == 3L, s"$name query $q")
+      // the zero vector's own neighbors tie on null: by neighbor id
+      assert(rows.filter(_._1 == 3L).sortBy(_._4).map(_._2).toSeq == Seq(1L, 2L, 4L), name)
+    }
   }
 
   test("ADC distance: kernel and literal terms agree on an out-of-range code") {

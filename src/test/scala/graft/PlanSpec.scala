@@ -130,51 +130,52 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(1200))
   }
 
-  test("multi-table ANN: candidate + scoring joins are equi joins, never cartesian") {
-    val e = graft.Tables.embeddings(spark, sf)
-      .select(org.apache.spark.sql.functions.col("vec_id").as("id"),
-        org.apache.spark.sql.functions.col("embedding"))
-    val plan = graft.operators.Similarity.multiTableAnnTopK(e, 3, bits = 4, tables = 16)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"), plan.take(1200))
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(1200))
+  // One table of every gated ANN funnel. Each plan must hold no
+  // CartesianProduct; the only nested loop allowed is the coarse
+  // assignment against the broadcast nCells-row centroid table
+  // (cid, ce, cnorm).
+  private object Ann extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+    import org.apache.spark.sql.functions.{col, floor}
+    import graft.operators.Similarity
+    lazy val emb = graft.Tables.embeddings(spark, sf)
+    lazy val e = emb.select(col("vec_id").as("id"), col("embedding"))
+    lazy val labeled = emb.select(col("vec_id").as("id"), col("embedding"), col("label"))
+    lazy val idx = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_plan_ivf").toString + "/idx"
+      Similarity.ivfAdcBuildIndex(e, dir, nCells = 8)
+      dir
+    }
+    val funnels = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "bucketed" -> (() => Similarity.bucketedAnnTopK(e, 3)),
+      "multi-probe" -> (() => Similarity.multiProbeAnnTopK(e, 3)),
+      "multi-table" -> (() => Similarity.multiTableAnnTopK(e, 3, bits = 4, tables = 16)),
+      "binary prefilter" -> (() => Similarity.binaryPrefilterTopK(e, 3, shortlist = 64)),
+      "int8 prefilter" -> (() => Similarity.int8PrefilterTopK(e, 3)),
+      "IVF" -> (() => Similarity.ivfTopK(e, 3, nCells = 8)),
+      "IVF-ADC rerank" -> (() =>
+        Similarity.ivfAdcRerankTopK(e, 3, nCells = 8, nProbe = 2, shortlist = 16)),
+      "IVF-ADC index search" -> (() =>
+        Similarity.ivfAdcSearchWith(e, idx, 3, nProbe = 2, shortlist = 16)),
+      "hard negatives" -> (() => Similarity.hardNegativesTopK(labeled, 3)),
+      "margin mining" -> (() => Similarity.marginMinePairs(labeled)),
+      "maxsim" -> (() => Similarity.maxSimTopK(
+        emb.select(floor(col("vec_id") / 5).cast("long").as("doc_id"),
+          col("vec_id"), col("embedding")), "doc_id", "vec_id", "embedding", k = 3)))
   }
 
-  test("binary prefilter: every stage of the composed funnel is an equi join, never cartesian") {
-    val e = graft.Tables.embeddings(spark, sf)
-      .select(org.apache.spark.sql.functions.col("vec_id").as("id"),
-        org.apache.spark.sql.functions.col("embedding"))
-    val plan = graft.operators.Similarity
-      .binaryPrefilterTopK(e, 3, shortlist = 64)
-      .queryExecution.executedPlan.toString
+  for ((name, funnel) <- Ann.funnels) test(s"ANN funnel plan ($name): never cartesian") {
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    val exec = funnel().queryExecution.executedPlan
+    val plan = exec.toString
     assert(!plan.contains("CartesianProduct"), plan.take(1200))
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(1200))
+    Ann.collect(exec) { case j: BroadcastNestedLoopJoinExec => j }.foreach { j =>
+      val built = if (j.buildSide == BuildRight) j.right else j.left
+      assert(built.output.map(_.name).contains("cnorm"), plan.take(1200))
+    }
     // the Hamming kernel in the plan is the native expression, not a HOF
-    assert(plan.contains("hamming_native"), plan.take(1200))
-  }
-
-  test("int8 prefilter: candidate + scoring joins are equi joins, never cartesian") {
-    val e = graft.Tables.embeddings(spark, sf)
-      .select(org.apache.spark.sql.functions.col("vec_id").as("id"),
-        org.apache.spark.sql.functions.col("embedding"))
-    val plan = graft.operators.Similarity.int8PrefilterTopK(e, 3)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"), plan.take(1200))
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(1200))
-  }
-
-  test("IVF-ADC rerank: cell gate, ADC, and re-rank are all equi joins, never cartesian") {
-    val e = graft.Tables.embeddings(spark, sf)
-      .select(org.apache.spark.sql.functions.col("vec_id").as("id"),
-        org.apache.spark.sql.functions.col("embedding"))
-    val plan = graft.operators.Similarity
-      .ivfAdcRerankTopK(e, 3, nCells = 8, nProbe = 2, shortlist = 16)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"), plan.take(1200))
-    // the cell-assignment pass is checkpointed before plan capture, so
-    // the only joins left are the candidate/scoring equi-joins — no
-    // nested loop anywhere
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(1200))
+    if (name == "binary prefilter")
+      assert(plan.contains("hamming_native"), plan.take(1200))
   }
 
   test("q68: TF-IDF corpus size joins as a broadcast, term join stays equi") {
