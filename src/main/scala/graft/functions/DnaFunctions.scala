@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.model.Orf
+import graft.plans.NativeFunctions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,11 +34,10 @@ object DnaFunctions {
     * and no interpreted-HOF per-element re-evaluation, so this is the hot
     * path for corpus-scale k-mer counting (q21/q28/digitalNormalize).
     * Unlike [[kmersCol]] it IS the exploded form: select it directly.
+    * `spark` is unused: the column needs no session registration.
     */
-  def kmersExploded(spark: SparkSession, c: Column, k: Int): Column = {
-    graft.plans.NativeFunctions.register(spark)
-    call_function("kmers_native", c, lit(k))
-  }
+  def kmersExploded(spark: SparkSession, c: Column, k: Int): Column =
+    NativeFunctions.call("kmers_native", c, lit(k))
 
   /** Non-overlapping codon triplets (step-3 k-mers) for A6/X8. */
   def codonsCol(c: Column): Column =
@@ -51,22 +51,17 @@ object DnaFunctions {
     * single-char string + one interpreted lambda eval PER BASE and
     * ejected the projection from codegen; at 100 TB of reads this is
     * the hottest scalar in the quality-filter path. Bit-compatible with
-    * the HOF twin (QualitySpec pins equality, incl. the empty-string
+    * the HOF twin (TokensSpec pins equality, incl. the empty-string
     * null from the divide-by-zero rule).
     */
   def avgQualityCol(c: Column): Column =
-    org.apache.spark.sql.graft.Bridge.column(
-      graft.plans.AvgQualityExpression(
-        org.apache.spark.sql.graft.Bridge.expression(c)))
+    NativeFunctions.call("avg_quality_native", c)
 
   /** X7 NATIVE: count of code points below `t` — same one-pass loop. */
   def lowQualityCountCol(c: Column, t: Int): Column =
-    org.apache.spark.sql.graft.Bridge.column(
-      graft.plans.LowQualityCountExpression(
-        org.apache.spark.sql.graft.Bridge.expression(c),
-        org.apache.spark.sql.catalyst.expressions.Literal(t)))
+    NativeFunctions.call("low_quality_count_native", c, lit(t))
 
-  /** Pre-native HOF twins — reference semantics for QualitySpec. */
+  /** Pre-native HOF twins — reference semantics for TokensSpec. */
   private[graft] def avgQualityHof(c: Column): Column =
     aggregate(split(c, ""), lit(0L), (acc, ch) => acc + ascii(ch))
       .cast("double") / length(c)

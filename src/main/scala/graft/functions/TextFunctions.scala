@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.plans.NativeFunctions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -30,10 +31,7 @@ object TextFunctions {
     * every text query. Semantics are bit-identical (TokensSpec pins
     * equality against the HOF form on hostile inputs).
     */
-  def tokens(c: Column): Column =
-    org.apache.spark.sql.graft.Bridge.column(
-      graft.plans.TokensExpression(
-        org.apache.spark.sql.graft.Bridge.expression(c)))
+  def tokens(c: Column): Column = NativeFunctions.call("tokens_native", c)
 
   /** The pre-native HOF form — kept as the reference semantics for
     * TokensSpec's equivalence check.
@@ -100,10 +98,7 @@ object TextFunctions {
     * crawls need before any tokenizer. Native codegen expression;
     * decision rule documented at [[graft.plans.NativeText]].
     */
-  def fixEncoding(c: Column): Column =
-    org.apache.spark.sql.graft.Bridge.column(
-      graft.plans.FixEncodingExpression(
-        org.apache.spark.sql.graft.Bridge.expression(c)))
+  def fixEncoding(c: Column): Column = NativeFunctions.call("fix_encoding_native", c)
 
   /** Spark's `lower`/`upper`, bit for bit, as a native codegen
     * expression that skips the ICU title-case table Spark 4's first
@@ -111,23 +106,15 @@ object TextFunctions {
     * [[graft.plans.NativeText.lower]]). Every case mapping under
     * `functions/` and `operators/` goes through these.
     */
-  def lowerCase(c: Column): Column = caseMap(c, upper = false)
-  def upperCase(c: Column): Column = caseMap(c, upper = true)
-
-  private def caseMap(c: Column, upper: Boolean): Column =
-    org.apache.spark.sql.graft.Bridge.column(
-      graft.plans.CaseMapExpression(
-        org.apache.spark.sql.graft.Bridge.expression(c), upper))
+  def lowerCase(c: Column): Column = NativeFunctions.call("lower_native", c)
+  def upperCase(c: Column): Column = NativeFunctions.call("upper_native", c)
 
   /** Occurrences of `words` in a tokens column, repeats included; null
     * tokens give null. One native pass against a hashed word set
     * ([[graft.plans.TokenSetCountExpression]]).
     */
   def tokenSetCount(toks: Column, words: Seq[String]): Column =
-    org.apache.spark.sql.graft.Bridge.column(
-      graft.plans.TokenSetCountExpression(
-        org.apache.spark.sql.graft.Bridge.expression(toks),
-        org.apache.spark.sql.graft.Bridge.expression(typedLit(words))))
+    NativeFunctions.call("token_set_count_native", toks, typedLit(words))
 
   /** The per-word HOF sum [[tokenSetCount]] replaced — one interpreted
     * `size(filter(...))` lambda per word; kept as the reference

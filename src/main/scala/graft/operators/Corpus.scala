@@ -2668,7 +2668,6 @@ object Corpus {
     val df = Parallelism.ensure(features)
       .select((labelCol +: featureCols).map(c => col(c).cast("double")): _*)
       .localCheckpoint()
-    graft.plans.NativeFunctions.register(features.sparkSession)
     var w = Array.fill(featureCols.size + 1)(0.0)
     var it = 0
     while (it < iterations) {
@@ -2678,7 +2677,7 @@ object Corpus {
       // every iteration's aggregation reuses ONE compiled codegen unit
       // instead of paying a fresh Janino compile per weight update
       // (q312's 40 iterations were analysis/codegen-bound).
-      val err = call_function("logistic_score_native",
+      val err = graft.plans.NativeFunctions.call("logistic_score_native",
         (typedlit(w.toSeq) +: featureCols.map(col)): _*) - col(labelCol)
       val aggs = avg(err) +: featureCols.map(c => avg(err * col(c)))
       val row = df.agg(aggs.head, aggs.tail: _*).head()

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.NativeFunctions
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -33,17 +34,12 @@ object Similarity {
 
   /** Native codegen'd dot product (plans.DotProductExpression) —
     * bit-identical to [[dot]] but JIT-compiled instead of interpreted
-    * per element (HOFs are CodegenFallback). The operators below
-    * register it per session and use this form: it is the O(n·dim)
-    * inner-loop kernel of every pairwise stage.
+    * per element (HOFs are CodegenFallback). The operators below use
+    * this form: it is the O(n·dim) inner-loop kernel of every pairwise
+    * stage.
     */
   private def dotN(x: Column, y: Column): Column =
-    call_function("dot_native", x, y)
-
-  private def withNative(df: DataFrame): DataFrame = {
-    graft.plans.NativeFunctions.register(df.sparkSession)
-    df
-  }
+    NativeFunctions.call("dot_native", x, y)
 
   /** Cosine similarity (use the norm-precomputing operators below for
     * anything pairwise — this recomputes norms per call).
@@ -59,7 +55,7 @@ object Similarity {
     * the parallelism of every per-row kernel downstream.
     */
   private def withNorm(df: DataFrame, keep: String*): DataFrame =
-    Parallelism.ensure(withNative(df))
+    Parallelism.ensure(df)
       .select((col("id") +: col("embedding") +: keep.map(col)) :+
         sqrt(dotN(col("embedding"), col("embedding"))).as("norm"): _*)
 
@@ -320,7 +316,7 @@ object Similarity {
         }
         v.withColumn("cluster", array_max(array(scored.toSeq: _*)).getField("cid"))
       } else {
-        v.withColumn("cluster", call_function("cosine_argmax_native",
+        v.withColumn("cluster", NativeFunctions.call("cosine_argmax_native",
           col("embedding"), col("norm"),
           typedlit(cent.map(_._1).toSeq),
           typedlit(cent.map(_._2.toSeq).toSeq),
@@ -431,16 +427,15 @@ object Similarity {
     * yields a zero-length codes array.
     */
   def binaryQuantize(vectors: DataFrame): DataFrame =
-    withNative(vectors).select(col("id"),
-      call_function("binary_quantize_native", col("embedding")).as("codes"))
+    vectors.select(col("id"),
+      NativeFunctions.call("binary_quantize_native", col("embedding")).as("codes"))
 
   /** Native xor+popcount Hamming kernel over packed code arrays
     * (plans.HammingDistanceExpression — JIT-ed while-loop, not
-    * interpreted per-block HOF dispatch). Callers must have native
-    * functions registered (binaryQuantize does).
+    * interpreted per-block HOF dispatch).
     */
   private def hammingN(x: Column, y: Column): Column =
-    call_function("hamming_native", x, y)
+    NativeFunctions.call("hamming_native", x, y)
 
   /** Exact Hamming top-k in the binary code space: xor + bit_count per
     * 32-bit block, summed — pure integer arithmetic, so unlike every
@@ -491,7 +486,7 @@ object Similarity {
     val b = withNorm(vectors)
       .withColumn("keys", tableKeysChecked(bits, tables))
       .withColumn("codes",
-        call_function("binary_quantize_native", col("embedding")))
+        NativeFunctions.call("binary_quantize_native", col("embedding")))
       .localCheckpoint()
     val ham = multiTableCandidates(b)
       .join(b.select(col("id").as("query_id"), col("codes").as("qc")),
@@ -631,7 +626,7 @@ object Similarity {
     val subs = (0 until m).map(s =>
       slice(col("e"), s * dsub + 1, dsub).as(s"sub$s"))
     val nvs = (0 until m).map(s => dotN(col(s"sub$s"), col(s"sub$s")).as(s"nv$s"))
-    Parallelism.ensure(withNative(vectors))
+    Parallelism.ensure(vectors)
       .select(col("id"), col("embedding").cast("array<double>").as("e"))
       .withColumn("nrm", sqrt(dotN(col("e"), col("e"))))
       .select(col("id"),
@@ -656,7 +651,7 @@ object Similarity {
     * DedupSpec pins the two paths equal row-for-row on fixed books.
     */
   private def pqAssign(s: Int, cents: Codebook): Column =
-    call_function("l2_argmin_native", col(s"sub$s"), col(s"nv$s"),
+    NativeFunctions.call("l2_argmin_native", col(s"sub$s"), col(s"nv$s"),
       typedlit(cents.map(_._1).toSeq),
       typedlit(cents.map(_._2.toSeq).toSeq),
       typedlit(cents.map(_._3).toSeq))
@@ -823,7 +818,7 @@ object Similarity {
       (0 until m).map(s => col(s"a$s").cast("long")) ++
       (0 until m).map(s => col(s"qsub$s")) ++
       (0 until m).map(s => col(s"qnv$s"))
-    call_function("adc_sum_native", args: _*)
+    NativeFunctions.call("adc_sum_native", args: _*)
   }
 
   /** Asymmetric-distance (ADC) top-k over PQ codes: the query keeps its
@@ -1296,7 +1291,7 @@ object Similarity {
       : (DataFrame, Array[Double], Array[Double], Int) = {
     val spark = vecs.sparkSession
     import spark.implicits._
-    val base = Parallelism.ensure(withNative(vecs))
+    val base = Parallelism.ensure(vecs)
       .select(col(idCol).cast("long").as("id"),
         col(vecCol).cast("array<double>").as("v"))
       .localCheckpoint() // gram pass + projection pass read it
@@ -1759,7 +1754,7 @@ object Similarity {
 
   private def chunkFrame(chunks: DataFrame, docCol: String, idCol: String,
                          vecCol: String): DataFrame =
-    Parallelism.ensure(withNative(chunks))
+    Parallelism.ensure(chunks)
       .select(col(docCol).cast("long").as("doc"),
         col(idCol).cast("long").as("id"),
         col(vecCol).cast("array<double>").as("embedding"))

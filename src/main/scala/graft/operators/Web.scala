@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
-import graft.plans.{CanonicalizeUrlExpression, HtmlToTextExpression, ResolveUrlExpression}
+import graft.plans.NativeFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -18,26 +18,20 @@ object Web {
     * [[graft.functions.Web.htmlToText]] rules; one scan per document,
     * fused into the enclosing projection).
     */
-  def htmlToText(html: Column): Column =
-    org.apache.spark.sql.graft.Bridge.column(
-      HtmlToTextExpression(org.apache.spark.sql.graft.Bridge.expression(html)))
+  def htmlToText(html: Column): Column = NativeFunctions.call("html_to_text_native", html)
 
   /** URL canonicalization as a Column (native codegen expression —
     * [[graft.functions.Web.canonicalizeUrl]] rules).
     */
   def canonicalizeUrl(url: Column): Column =
-    org.apache.spark.sql.graft.Bridge.column(
-      CanonicalizeUrlExpression(org.apache.spark.sql.graft.Bridge.expression(url)))
+    NativeFunctions.call("canonicalize_url_native", url)
 
   /** RFC 3986 reference resolution as a Column (native codegen
     * expression — [[graft.functions.Web.resolveUrl]] rules; null =
     * drop the link).
     */
   def resolveUrl(baseUrl: Column, href: Column): Column =
-    org.apache.spark.sql.graft.Bridge.column(
-      ResolveUrlExpression(
-        org.apache.spark.sql.graft.Bridge.expression(baseUrl),
-        org.apache.spark.sql.graft.Bridge.expression(href)))
+    NativeFunctions.call("resolve_url_native", baseUrl, href)
 
   /** [[extractLinks]] with relative-URL resolution against each page's
     * own URL — the form a real crawl link graph needs (most organic

@@ -156,7 +156,12 @@ object PipeStage {
 object Pipes {
 
   /** The default commands: deterministic awk stand-ins for the four
-    * tools, each honouring its tool's line contract (see the wrappers).
+    * tools, each honouring its tool's line contract (see the wrappers)
+    * and its framing: the assembler logs progress to stderr, and
+    * hmmsearch frames its `--tblout` rows with `#` header and footer
+    * lines, so the stderr drainer and the tblout comment filter run on
+    * every default pipeline. (`> "/dev/stderr"` is awk's own special
+    * file in mawk and gawk: no extra process per spawn.)
     */
   private[graft] val AlignMock: Seq[String] = Seq("awk",
     "NR % 4 == 1 { name = substr($1, 2) } " +
@@ -164,15 +169,21 @@ object Pipes {
       "NR % 4 == 0 { flag = (name ~ /\\/1$/) ? 77 : 141; sub(/\\/[12]$/, \"\", name); " +
       "print name \"\\t\" flag \"\\t*\\t0\\t0\\t*\\t*\\t0\\t0\\t\" seq \"\\t\" $0 }")
   private[graft] val AssembleMock: Seq[String] = Seq("awk",
-    """/^>/ { n += 1; print ">contig_" n; next } { print }""")
+    """BEGIN { print "MEGAHIT mock: assembling reads from stdin" > "/dev/stderr" } """ +
+      """/^>/ { n += 1; print ">contig_" n; next } { print }""")
   private[graft] val BlastnMock: Seq[String] = Seq("awk",
     "/^>/ { id = substr($1, 2); next } " +
       "{ print id \"\\tSUBJ\\t\" (50 + length($0) % 50) \".0\\t\" length($0) " +
       "\"\\t0\\t0\\t1\\t\" length($0) \"\\t1\\t\" length($0) \"\\t0.001\\t100.0\\t\" " +
       "(length($0) % 7) }")
   private[graft] val HmmsearchMock: Seq[String] = Seq("awk",
-    "/^>/ { id = substr($1, 2); next } " +
-      "{ print id \" - vFam_mock - 1e-5 \" length($0) \" 0.0\" }")
+    "BEGIN { print \"#                                          --- full sequence ----\"; " +
+      "print \"# target name  accession  query name  accession  E-value  score  bias\"; " +
+      "print \"#------------ ---------- ----------- ---------- -------- ------ -----\" } " +
+      "/^>/ { id = substr($1, 2); next } " +
+      "{ print id \" - vFam_mock - 1e-5 \" length($0) \" 0.0\" } " +
+      "END { print \"#\"; print \"# Program:         hmmsearch\"; " +
+      "print \"# Pipeline mode:   SEARCH\"; print \"# [ok]\" }")
 
   /** Typed argv builder for REAL blastn, reproducing the reference's
     * command line and defaults verbatim (BlastN.java:69-82 builds
@@ -238,7 +249,8 @@ object Pipes {
 
   /** P2 `assemble_megahit`: FASTA reads in → contig FASTA out
     * (Assemble.java:106-177). Mock: pass-through renaming headers to
-    * `>contig_<n>` like an assembler's own numbering.
+    * `>contig_<n>` like an assembler's own numbering, with one progress
+    * line on stderr.
     */
   def assembleMegahit(spark: SparkSession, fasta: Dataset[String],
                       cmd: Option[Seq[String]] = None): Dataset[String] = {
@@ -298,7 +310,8 @@ object Pipes {
   }
 
   /** P4 `hmmsearch`: protein FASTA in → tblout-style lines out
-    * (HMMSearch.java:82-163). Mock: one domain hit per sequence.
+    * (HMMSearch.java:82-163). Mock: one domain hit per sequence,
+    * between tblout-style `#` header and footer lines.
     */
   def hmmsearch(spark: SparkSession, proteinFasta: Dataset[String],
                 cmd: Option[Seq[String]] = None): Dataset[String] = {

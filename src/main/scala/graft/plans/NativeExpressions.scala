@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.functions.Dna
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -17,11 +18,27 @@ import org.apache.spark.unsafe.types.UTF8String
   * preference ladder from SURVEY.md §7.3: built-in composition first,
   * then a custom `Expression` with codegen (this file), then UDFs.
   *
-  * `RevCompExpression` generates straight-line Java (no row boxing, no
-  * Scala closure dispatch) and stays inside whole-stage codegen;
-  * `KmerGenerator` is a true Catalyst Generator: it streams k-mers to
-  * the consumer without materializing the full substring array the
-  * `transform(sequence(...))` formulation builds per row.
+  * Every kernel is plain JVM code shared by the interpreted and the
+  * generated path: static methods on [[NativeDna]], [[NativeText]] and
+  * [[NativeVec]], or a driver-built object handed to generated code
+  * through `addReferenceObj` when the expression holds a literal table
+  * (word set, centroids, weights, PQ lookup tables). Two bases carry
+  * the repeated expression shapes:
+  *  - [[StringKernelExpression]]: the nine `STRING → X` scalars. It owns
+  *    the type check, the interpreted call and the generated code, one
+  *    call of the static kernel inside whole-stage codegen;
+  *  - [[CentroidArgBestExpression]] over [[CentroidArgBestKernel]]: the
+  *    per-row arg-best over a literal centroid table, one loop for
+  *    cosine (k-means, IVF) and squared L2 (PQ), each kind supplying
+  *    only its score and skip rule.
+  * The rest hand-write their codegen (quality scores, vector kernels,
+  * literal-table scorers); [[KmerGenerator]] is the one Generator.
+  *
+  * One table, [[NativeFunctions.fns]], maps each SQL name to its
+  * builder: `register` installs it in a live session,
+  * [[GraftExtensions]] at session build, and [[NativeFunctions.call]]
+  * builds Columns from it, so a name means one expression in SQL and in
+  * the Column API.
   */
 object NativeDna {
 
@@ -151,53 +168,67 @@ object NativeDna {
   }
 }
 
-/** X1 as a native unary expression with whole-stage codegen support. */
-case class RevCompExpression(child: Expression) extends UnaryExpression {
+/** A `STRING → X` scalar over one static kernel: the STRING type check,
+  * `nullSafeEval` through [[kernel]], and generated code that is one
+  * call of [[kernelPath]] (straight-line Java inside whole-stage
+  * codegen, no row boxing, no Scala closure dispatch). A subclass names
+  * its SQL function (`prettyName`) and its kernel twice: as the Java
+  * path generated code calls and as the same call for the interpreted
+  * path. The result type is STRING unless the subclass says otherwise.
+  */
+abstract class StringKernelExpression extends UnaryExpression {
+
+  /** The kernel's static Java path, e.g. `graft.plans.NativeDna.tokens`. */
+  protected def kernelPath: String
+  protected def kernel(s: UTF8String): Any
 
   import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"revcomp_native requires STRING, got ${child.dataType.catalogString}")
+      s"$prettyName requires STRING, got ${child.dataType.catalogString}")
   override def dataType: DataType = StringType
-  override def prettyName: String = "revcomp_native"
 
-  override protected def nullSafeEval(v: Any): Any =
-    NativeDna.revcomp(v.asInstanceOf[UTF8String])
+  override protected def nullSafeEval(v: Any): Any = kernel(v.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.NativeDna.revcomp($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+    defineCodeGen(ctx, ev, c => s"$kernelPath($c)")
 }
 
-/** Whitespace tokenizer as a native codegen expression. The HOF form
-  * (`filter(split(...), lambda)`) is CodegenFallback: the per-element
-  * predicate interprets AND the fallback breaks whole-stage codegen for
-  * the entire enclosing projection — every text query paid that. This
-  * stays inside the fused stage and runs one compiled-regex pass per
-  * row. Registered as `tokens_native`; [[graft.functions.TextFunctions
-  * .tokens]] builds it directly.
+/** Generated code for a kernel whose Java `null` is SQL NULL: the boxed
+  * result unboxes into `ev.value` or sets `ev.isNull`. For the body of
+  * a nullable expression's `nullSafeCodeGen`, which declares both.
   */
-case class TokensExpression(child: Expression) extends UnaryExpression {
+private[plans] object BoxedResult {
+  def apply(ctx: CodegenContext, ev: ExprCode, dt: DataType, call: String): String = {
+    val res = ctx.freshName("res")
+    s"""${CodeGenerator.boxedType(dt)} $res = $call;
+       |${ev.isNull} = $res == null;
+       |if (!${ev.isNull}) { ${ev.value} = $res; }""".stripMargin
+  }
+}
 
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"tokens_native requires STRING, got ${child.dataType.catalogString}")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+/** X1: reverse complement. */
+case class RevCompExpression(child: Expression) extends StringKernelExpression {
+  override def prettyName: String = "revcomp_native"
+  override protected def kernelPath = "graft.plans.NativeDna.revcomp"
+  override protected def kernel(s: UTF8String): Any = NativeDna.revcomp(s)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** Whitespace tokenizer. The HOF form (`filter(split(...), lambda)`) is
+  * CodegenFallback: the per-element predicate interprets AND the
+  * fallback breaks whole-stage codegen for the entire enclosing
+  * projection — every text query paid that. This stays inside the
+  * fused stage and runs one compiled-regex pass per row;
+  * [[graft.functions.TextFunctions.tokens]] builds it.
+  */
+case class TokensExpression(child: Expression) extends StringKernelExpression {
   override def prettyName: String = "tokens_native"
-
-  override protected def nullSafeEval(v: Any): Any =
-    NativeDna.tokens(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.NativeDna.tokens($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override protected def kernelPath = "graft.plans.NativeDna.tokens"
+  override protected def kernel(s: UTF8String): Any = NativeDna.tokens(s)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** X6 as a native expression: mean Phred score = code-point sum /
@@ -279,74 +310,31 @@ case class LowQualityCountExpression(child: Expression, threshold: Expression)
     copy(child = newLeft, threshold = newRight)
 }
 
-/** X2 as a native unary expression: the 64-entry codon table compiled
-  * into JIT-ed Scala, invoked from whole-stage-generated code — replaces
+/** X2: the 64-entry codon table compiled into JIT-ed Scala — replaces
   * the per-row Scala UDF (closure dispatch + row boxing) in q24.
   */
-case class TranslateDnaExpression(child: Expression) extends UnaryExpression {
-
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"translate_dna_native requires STRING, got ${child.dataType.catalogString}")
-  override def dataType: DataType = StringType
+case class TranslateDnaExpression(child: Expression) extends StringKernelExpression {
   override def prettyName: String = "translate_dna_native"
-
-  override protected def nullSafeEval(v: Any): Any =
-    NativeDna.translateDna(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.NativeDna.translateDna($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def kernelPath = "graft.plans.NativeDna.translateDna"
+  override protected def kernel(s: UTF8String): Any = NativeDna.translateDna(s)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** Unicode NFC normalization as a native unary expression (whole-stage
-  * codegen): text-pipeline preprocessing so canonically-equivalent
-  * strings fingerprint identically before dedup.
+/** Unicode NFC normalization: text-pipeline preprocessing so
+  * canonically-equivalent strings fingerprint identically before dedup.
   */
-case class NfcNormalizeExpression(child: Expression) extends UnaryExpression {
-
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"nfc_native requires STRING, got ${child.dataType.catalogString}")
-  override def dataType: DataType = StringType
+case class NfcNormalizeExpression(child: Expression) extends StringKernelExpression {
   override def prettyName: String = "nfc_native"
-
-  override protected def nullSafeEval(v: Any): Any =
-    NativeDna.nfc(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.NativeDna.nfc($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def kernelPath = "graft.plans.NativeDna.nfc"
+  override protected def kernel(s: UTF8String): Any = NativeDna.nfc(s)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-case class StripAccentsExpression(child: Expression)
-    extends UnaryExpression {
-
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"strip_accents_native requires STRING, got " +
-        child.dataType.catalogString)
-  override def dataType: DataType = StringType
+case class StripAccentsExpression(child: Expression) extends StringKernelExpression {
   override def prettyName: String = "strip_accents_native"
-
-  override protected def nullSafeEval(v: Any): Any =
-    NativeDna.stripAccents(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.NativeDna.stripAccents($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def kernelPath = "graft.plans.NativeDna.stripAccents"
+  override protected def kernel(s: UTF8String): Any = NativeDna.stripAccents(s)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Mojibake repair kernel (the deterministic ftfy-core subset): detect
@@ -458,27 +446,13 @@ object NativeText {
   * [[graft.functions.TextFunctions.lowerCase]] and `upperCase` build it.
   */
 case class CaseMapExpression(child: Expression, upper: Boolean)
-    extends UnaryExpression {
-
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires STRING, got ${child.dataType.catalogString}")
-  override def dataType: DataType = StringType
+    extends StringKernelExpression {
   override def prettyName: String = if (upper) "upper_native" else "lower_native"
-
-  override protected def nullSafeEval(v: Any): Any = {
-    val u = v.asInstanceOf[UTF8String]
-    if (upper) NativeText.upper(u) else NativeText.lower(u)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.NativeText.${if (upper) "upper" else "lower"}($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def kernelPath =
+    s"graft.plans.NativeText.${if (upper) "upper" else "lower"}"
+  override protected def kernel(s: UTF8String): Any =
+    if (upper) NativeText.upper(s) else NativeText.lower(s)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** The word set of a [[TokenSetCountExpression]], built once from its
@@ -572,24 +546,11 @@ case class TokenSetCountExpression(tokens: Expression, words: Expression)
   * crawl before any tokenizer" scalar. Narrow, zero shuffle; stays
   * inside whole-stage codegen like its NFC sibling.
   */
-case class FixEncodingExpression(child: Expression) extends UnaryExpression {
-
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"fix_encoding_native requires STRING, got ${child.dataType.catalogString}")
-  override def dataType: DataType = StringType
+case class FixEncodingExpression(child: Expression) extends StringKernelExpression {
   override def prettyName: String = "fix_encoding_native"
-
-  override protected def nullSafeEval(v: Any): Any =
-    NativeText.fixEncoding(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.NativeText.fixEncoding($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def kernelPath = "graft.plans.NativeText.fixEncoding"
+  override protected def kernel(s: UTF8String): Any = NativeText.fixEncoding(s)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** X5 as a Catalyst Generator: one output row per k-mer, streamed —
@@ -797,15 +758,8 @@ case class DotProductExpression(left: Expression, right: Expression)
       isFloat(left), isFloat(right))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) => {
-      val tmp = ctx.freshName("dotRes")
-      s"""
-         |java.lang.Double $tmp = graft.plans.NativeVec.dot(
-         |  $l, $r, ${isFloat(left)}, ${isFloat(right)});
-         |if ($tmp == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $tmp.doubleValue(); }
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (l, r) => BoxedResult(ctx, ev, dataType,
+      s"graft.plans.NativeVec.dot($l, $r, ${isFloat(left)}, ${isFloat(right)})"))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -879,54 +833,57 @@ case class HammingDistanceExpression(left: Expression, right: Expression)
       r.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) => {
-      val tmp = ctx.freshName("hammRes")
-      s"""
-         |java.lang.Integer $tmp = graft.plans.NativeVec.hamming($l, $r);
-         |if ($tmp == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $tmp.intValue(); }
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (l, r) =>
+      BoxedResult(ctx, ev, dataType, s"graft.plans.NativeVec.hamming($l, $r)"))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
 }
 
-/** Driver-precomputed centroid table for [[CosineArgmaxExpression]]:
+/** Driver-precomputed centroid table for [[CentroidArgBestExpression]]:
   * one plain JVM object handed to generated code via `addReferenceObj`,
   * so the generated method is O(1) in k — the literal-baked per-centroid
   * argmax (k inline struct/round/dot expressions) blows past javac's
   * 64 KB method limit around k ≈ 10²-10³, exactly the range an IVF
-  * coarse quantizer trains at. Rides the task-binary broadcast: Spark
-  * serializes the plan (centroid literals included) once per stage and
-  * broadcasts it, so executors receive the k×dim matrix once, not per
-  * task.
+  * coarse quantizer trains at, and its analysis + codegen cost
+  * dominates small PQ runs (pqEncode measured ~8 s on 2 000 rows,
+  * nearly all plan compilation — BASELINE.md, Round-7 funnel probe).
+  * Rides the task-binary broadcast: Spark serializes the plan (centroid
+  * literals included) once per stage and broadcasts it, so executors
+  * receive the k×dim matrix once, not per task.
+  *
+  * [[apply]] is the arg-best of the kind's [[score]] with ties toward
+  * the smaller centroid id — replicating the literal path's `array_max`
+  * over `struct(score, -cid, cid)` bit for bit (same cast-then-multiply
+  * dot order, same HALF_UP rounding, [[NativeVec.round4]]). Comparison
+  * uses SPARK's total order for doubles: NaN is GREATER than every real
+  * value and EQUAL to itself (an all-NaN row still scores NaN, and the
+  * literal array_max then prefers it / tie-breaks by cid — plain
+  * `>`/`==` would instead keep whichever came first in centroid order).
+  * A dim-mismatched centroid, or one the kind [[skips]], scores null in
+  * the literal path and loses to any real score, so it is skipped here;
+  * all-null falls back to the smallest centroid id, as lexicographic
+  * max of (null, -cid) does.
   */
-final class CosineArgmaxKernel(ids: Array[Long], vecs: Array[Array[Double]],
-    norms: Array[Double], embIsFloat: Boolean) extends Serializable {
+abstract class CentroidArgBestKernel(ids: Array[Long], vecs: Array[Array[Double]],
+    protected val norms: Array[Double], rowIsFloat: Boolean) extends Serializable {
 
-  /** Argmax of round(cos, 4) with ties toward the smaller centroid id —
-    * replicating the literal path's `array_max` over
-    * `struct(rc, -cid, cid)` bit for bit (same cast-then-multiply dot
-    * order, same HALF_UP rounding). Comparison uses SPARK's total order
-    * for doubles: NaN is GREATER than every real value and EQUAL to
-    * itself (an all-NaN embedding still scores NaN, and the literal
-    * array_max then prefers it / tie-breaks by cid — plain `>`/`==`
-    * would instead keep whichever came first in centroid order). A
-    * dim-mismatched OR zero-denominator centroid (zero-norm centroid
-    * or row — cosine undefined, and ANSI mode would throw on the 0
-    * divisor) scores null in the literal path and loses to any real
-    * score, so it is skipped here; all-null falls back to the smallest
-    * centroid id, as lexicographic max of (null, -cid) does.
+  /** Whether centroid `ci` has no score for a row of norm value `rowNorm`. */
+  protected def skips(rowNorm: Double, ci: Int): Boolean
+  /** Centroid `ci`'s score for a row of norm value `rowNorm` whose dot
+    * with the centroid is `dot`; the highest score wins.
     */
-  def apply(e: org.apache.spark.sql.catalyst.util.ArrayData,
-            norm: Double): Long = {
-    // Spark SQL double ordering: NaN greatest, NaN == NaN, -0.0 == 0.0.
-    def gtSpark(a: Double, b: Double): Boolean =
-      if (a.isNaN) !b.isNaN else if (b.isNaN) false else a > b
-    def eqSpark(a: Double, b: Double): Boolean =
-      (a.isNaN && b.isNaN) || a == b
+  protected def score(dot: Double, rowNorm: Double, ci: Int): Double
+
+  // Spark SQL double ordering: NaN greatest, NaN == NaN, -0.0 == 0.0.
+  private def gtSpark(a: Double, b: Double): Boolean =
+    if (a.isNaN) !b.isNaN else if (b.isNaN) false else a > b
+  private def eqSpark(a: Double, b: Double): Boolean =
+    (a.isNaN && b.isNaN) || a == b
+
+  final def apply(e: org.apache.spark.sql.catalyst.util.ArrayData,
+                  rowNorm: Double): Long = {
     val nDim = e.numElements()
     var best = Double.NaN
     var bestId = Long.MaxValue
@@ -934,19 +891,18 @@ final class CosineArgmaxKernel(ids: Array[Long], vecs: Array[Array[Double]],
     var ci = 0
     while (ci < ids.length) {
       val c = vecs(ci)
-      val denom = norm * norms(ci)
-      if (c.length == nDim && denom != 0.0) {
+      if (c.length == nDim && !skips(rowNorm, ci)) {
         var acc = 0.0
         var i = 0
         while (i < nDim) {
-          val x = if (embIsFloat) e.getFloat(i).toDouble else e.getDouble(i)
+          val x = if (rowIsFloat) e.getFloat(i).toDouble else e.getDouble(i)
           acc += x * c(i)
           i += 1
         }
-        val rc = NativeVec.round4(acc / denom)
-        if (!found || gtSpark(rc, best) ||
-          (eqSpark(rc, best) && ids(ci) < bestId)) {
-          best = rc; bestId = ids(ci); found = true
+        val s = score(acc, rowNorm, ci)
+        if (!found || gtSpark(s, best) ||
+          (eqSpark(s, best) && ids(ci) < bestId)) {
+          best = s; bestId = ids(ci); found = true
         }
       }
       ci += 1
@@ -956,60 +912,92 @@ final class CosineArgmaxKernel(ids: Array[Long], vecs: Array[Array[Double]],
 
   /** The literal path's all-null fallback (lexicographic max of
     * (null, -cid) structs): the smallest centroid id. Used both when
-    * every centroid is excluded and when the row's embedding/norm is
-    * null (dot_native over a null-element array) — the literal structs
-    * all score null rc there too, so parity demands a cid, not null.
+    * every centroid is excluded and when the row's vector/norm is null
+    * (dot_native over a null-element array) — the literal structs all
+    * score null there too, so parity demands a cid, not null.
     */
-  val fallback: Long = if (ids.isEmpty) -1L else ids.min
+  final val fallback: Long = if (ids.isEmpty) -1L else ids.min
 }
 
-/** Narrow per-row cosine argmax over a driver-held centroid table —
-  * the large-k twin of the literal-baked k-means assignment (see
-  * [[graft.operators.Similarity.kmeansAssign]]). Children 3-5 must be
-  * FOLDABLE (centroid ids, vectors, norms as literals): they are
-  * evaluated once on the driver into a [[CosineArgmaxKernel]].
+/** k-means / IVF assignment: the rounded cosine, `norms` holding the
+  * centroid norms. A zero denominator (zero-norm centroid or row —
+  * cosine undefined, and ANSI mode would throw on the 0 divisor) is
+  * skipped.
   */
-case class CosineArgmaxExpression(emb: Expression, norm: Expression,
-    cids: Expression, cvecs: Expression, cnorms: Expression)
-    extends Expression {
+final class CosineArgmaxKernel(ids: Array[Long], vecs: Array[Array[Double]],
+    cnorms: Array[Double], embIsFloat: Boolean)
+    extends CentroidArgBestKernel(ids, vecs, cnorms, embIsFloat) {
+  override protected def skips(rowNorm: Double, ci: Int): Boolean =
+    rowNorm * norms(ci) == 0.0
+  override protected def score(dot: Double, rowNorm: Double, ci: Int): Double =
+    NativeVec.round4(dot / (rowNorm * norms(ci)))
+}
 
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  override def children: Seq[Expression] = Seq(emb, norm, cids, cvecs, cnorms)
+/** PQ subspace assignment: nd = −round(nv + ‖c‖² − 2·v·c, 4), `norms`
+  * holding the squared centroid norms and the row's norm value being
+  * its own squared norm nv. Nothing is skipped.
+  */
+final class L2ArgminKernel(ids: Array[Long], vecs: Array[Array[Double]],
+    normsSq: Array[Double], subIsFloat: Boolean)
+    extends CentroidArgBestKernel(ids, vecs, normsSq, subIsFloat) {
+  override protected def skips(rowNorm: Double, ci: Int): Boolean = false
+  override protected def score(dot: Double, rowNorm: Double, ci: Int): Double =
+    -NativeVec.round4(rowNorm + norms(ci) - 2.0 * dot)
+}
+
+/** Narrow per-row arg-best over a driver-held centroid table — one
+  * expression node instead of k inlined struct terms (see
+  * [[CentroidArgBestKernel]]). Children: the row vector
+  * (ARRAY<FLOAT|DOUBLE>), its norm value (DOUBLE), then the centroid
+  * ids, vectors and norm values, which must be FOLDABLE: they are
+  * evaluated once on the driver into the subclass's kernel. A null row
+  * vector or norm yields the kernel's fallback cid, never null.
+  */
+abstract class CentroidArgBestExpression extends Expression {
+
+  /** The kind's kernel over (ids, vectors, norm values, row is float). */
+  protected type KernelOf =
+    (Array[Long], Array[Array[Double]], Array[Double], Boolean) => CentroidArgBestKernel
+  protected def newKernel: KernelOf
+
+  private def row = children(0)
+  private def rowNorm = children(1)
+  private def table = children.drop(2)
+
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
-  override def prettyName: String = "cosine_argmax_native"
 
+  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
   override def checkInputDataTypes(): TypeCheckResult = {
-    val embOk = emb.dataType match {
+    val rowOk = row.dataType match {
       case ArrayType(FloatType | DoubleType, _) => true
       case _ => false
     }
-    if (!embOk || norm.dataType != DoubleType)
+    if (!rowOk || rowNorm.dataType != DoubleType)
       TypeCheckResult.TypeCheckFailure(
-        "cosine_argmax_native requires (ARRAY<FLOAT|DOUBLE>, DOUBLE, ...)")
-    else if (!(cids.foldable && cvecs.foldable && cnorms.foldable))
+        s"$prettyName requires (ARRAY<FLOAT|DOUBLE>, DOUBLE, ...)")
+    else if (!table.forall(_.foldable))
       TypeCheckResult.TypeCheckFailure(
-        "cosine_argmax_native centroid arguments must be literals")
+        s"$prettyName centroid arguments must be literals")
     else TypeCheckResult.TypeCheckSuccess
   }
 
-  private lazy val kernel: CosineArgmaxKernel = {
+  private lazy val kernel: CentroidArgBestKernel = {
     import org.apache.spark.sql.catalyst.util.ArrayData
-    val idArr = cids.eval(null).asInstanceOf[ArrayData].toLongArray()
-    val vecArr = cvecs.eval(null).asInstanceOf[ArrayData].toObjectArray(
-      ArrayType(DoubleType)).map(_.asInstanceOf[ArrayData].toDoubleArray())
-    val normArr = cnorms.eval(null).asInstanceOf[ArrayData].toDoubleArray()
+    val Seq(ids, vecs, norms) = table.map(_.eval(null).asInstanceOf[ArrayData])
+    val idArr = ids.toLongArray()
+    val vecArr = vecs.toObjectArray(ArrayType(DoubleType))
+      .map(_.asInstanceOf[ArrayData].toDoubleArray())
+    val normArr = norms.toDoubleArray()
     require(idArr.length == vecArr.length && idArr.length == normArr.length,
       s"centroid table arity mismatch: ${idArr.length}/${vecArr.length}/${normArr.length}")
-    val isFloat = emb.dataType.asInstanceOf[ArrayType].elementType == FloatType
-    new CosineArgmaxKernel(idArr, vecArr, normArr, isFloat)
+    newKernel(idArr, vecArr, normArr,
+      row.dataType.asInstanceOf[ArrayType].elementType == FloatType)
   }
 
   override def eval(input: InternalRow): Any = {
-    val e = emb.eval(input)
-    val n = norm.eval(input)
-    // null embedding/norm: the literal path's structs all score null rc
-    // and array_max still yields the smallest cid — mirror it
+    val e = row.eval(input)
+    val n = rowNorm.eval(input)
     if (e == null || n == null) kernel.fallback
     else kernel(e.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
       n.asInstanceOf[Double])
@@ -1017,155 +1005,46 @@ case class CosineArgmaxExpression(emb: Expression, norm: Expression,
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val kRef = ctx.addReferenceObj("argmaxKernel", kernel,
-      classOf[CosineArgmaxKernel].getName)
-    val embCode = emb.genCode(ctx)
-    val normCode = norm.genCode(ctx)
+    val kRef = ctx.addReferenceObj("argBestKernel", kernel,
+      classOf[CentroidArgBestKernel].getName)
+    val rowCode = row.genCode(ctx)
+    val normCode = rowNorm.genCode(ctx)
     ev.copy(code =
       code"""
-        ${embCode.code}
+        ${rowCode.code}
         ${normCode.code}
         boolean ${ev.isNull} = false;
-        long ${ev.value} = (${embCode.isNull} || ${normCode.isNull})
+        long ${ev.value} = (${rowCode.isNull} || ${normCode.isNull})
           ? $kRef.fallback()
-          : $kRef.apply(${embCode.value}, ${normCode.value});
+          : $kRef.apply(${rowCode.value}, ${normCode.value});
       """)
   }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(emb = newChildren(0), norm = newChildren(1), cids = newChildren(2),
-      cvecs = newChildren(3), cnorms = newChildren(4))
 }
 
-/** Driver-precomputed codebook for [[L2ArgminExpression]] — the
-  * squared-L2 twin of [[CosineArgmaxKernel]], for PQ subspace
-  * assignment. The literal path (ksub inline struct/round/dot
-  * expressions PER SUBSPACE — m·ksub struct nodes in one projection)
-  * is correct but its analysis + codegen cost dominates small-input
-  * runs: pqEncode measured ~8 s on 2 000 rows, nearly all of it plan
-  * compilation (BASELINE.md, Round-7 funnel probe). One kernel call per
-  * subspace collapses the tree to O(m).
+/** Per-row cosine argmax — the large-k twin of the literal-baked k-means
+  * assignment (see [[graft.operators.Similarity.kmeansAssign]]).
   */
-final class L2ArgminKernel(ids: Array[Long], vecs: Array[Array[Double]],
-    normsSq: Array[Double], subIsFloat: Boolean) extends Serializable {
-
-  /** Argmax of nd = −round(nv + ‖c‖² − 2·v·c, 4) with ties toward the
-    * smaller centroid id — replicating the literal `array_max` over
-    * `struct(nd, -cid, cid)` bit for bit: same dot accumulation order,
-    * same HALF_UP rounding ([[NativeVec.round4]]), Spark's total order
-    * for doubles (NaN greatest, NaN == NaN). A dim-mismatched centroid
-    * scores null in the literal path (dot_native returns null) and
-    * loses to every real score, so it is skipped; all-null falls back
-    * to the smallest centroid id, as lexicographic max of (null, -cid)
-    * does.
-    */
-  def apply(s: org.apache.spark.sql.catalyst.util.ArrayData,
-            nv: Double): Long = {
-    def gtSpark(a: Double, b: Double): Boolean =
-      if (a.isNaN) !b.isNaN else if (b.isNaN) false else a > b
-    def eqSpark(a: Double, b: Double): Boolean =
-      (a.isNaN && b.isNaN) || a == b
-    val nDim = s.numElements()
-    var best = Double.NaN
-    var bestId = Long.MaxValue
-    var found = false
-    var ci = 0
-    while (ci < ids.length) {
-      val c = vecs(ci)
-      if (c.length == nDim) {
-        var acc = 0.0
-        var i = 0
-        while (i < nDim) {
-          val x = if (subIsFloat) s.getFloat(i).toDouble else s.getDouble(i)
-          acc += x * c(i)
-          i += 1
-        }
-        val nd = -NativeVec.round4(nv + normsSq(ci) - 2.0 * acc)
-        if (!found || gtSpark(nd, best) ||
-          (eqSpark(nd, best) && ids(ci) < bestId)) {
-          best = nd; bestId = ids(ci); found = true
-        }
-      }
-      ci += 1
-    }
-    if (found) bestId else fallback
-  }
-
-  def fallback: Long = if (ids.isEmpty) -1L else ids.min
+case class CosineArgmaxExpression(emb: Expression, norm: Expression,
+    cids: Expression, cvecs: Expression, cnorms: Expression)
+    extends CentroidArgBestExpression {
+  override def children: Seq[Expression] = Seq(emb, norm, cids, cvecs, cnorms)
+  override def prettyName: String = "cosine_argmax_native"
+  override protected def newKernel: KernelOf = new CosineArgmaxKernel(_, _, _, _)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
+    copy(c(0), c(1), c(2), c(3), c(4))
 }
 
-/** Narrow per-row squared-L2 argmin over a driver-held subspace
-  * codebook — PQ assignment as ONE expression node instead of ksub
-  * inlined struct terms (see [[L2ArgminKernel]]). Children 2-4 must be
-  * FOLDABLE (centroid ids, vectors, squared norms as literals): they
-  * are evaluated once on the driver into the kernel.
+/** Per-row squared-L2 argmin over a subspace codebook — PQ assignment
+  * as one expression node (the literal form is `pqAssignLit`).
   */
 case class L2ArgminExpression(sub: Expression, nv: Expression,
     cids: Expression, cvecs: Expression, cnormsSq: Expression)
-    extends Expression {
-
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+    extends CentroidArgBestExpression {
   override def children: Seq[Expression] = Seq(sub, nv, cids, cvecs, cnormsSq)
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
   override def prettyName: String = "l2_argmin_native"
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val subOk = sub.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    if (!subOk || nv.dataType != DoubleType)
-      TypeCheckResult.TypeCheckFailure(
-        "l2_argmin_native requires (ARRAY<FLOAT|DOUBLE>, DOUBLE, ...)")
-    else if (!(cids.foldable && cvecs.foldable && cnormsSq.foldable))
-      TypeCheckResult.TypeCheckFailure(
-        "l2_argmin_native codebook arguments must be literals")
-    else TypeCheckResult.TypeCheckSuccess
-  }
-
-  private lazy val kernel: L2ArgminKernel = {
-    import org.apache.spark.sql.catalyst.util.ArrayData
-    val idArr = cids.eval(null).asInstanceOf[ArrayData].toLongArray()
-    val vecArr = cvecs.eval(null).asInstanceOf[ArrayData].toObjectArray(
-      ArrayType(DoubleType)).map(_.asInstanceOf[ArrayData].toDoubleArray())
-    val normArr = cnormsSq.eval(null).asInstanceOf[ArrayData].toDoubleArray()
-    require(idArr.length == vecArr.length && idArr.length == normArr.length,
-      s"codebook arity mismatch: ${idArr.length}/${vecArr.length}/${normArr.length}")
-    val isFloat = sub.dataType.asInstanceOf[ArrayType].elementType == FloatType
-    new L2ArgminKernel(idArr, vecArr, normArr, isFloat)
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val s = sub.eval(input)
-    val n = nv.eval(input)
-    if (s == null || n == null) kernel.fallback
-    else kernel(s.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      n.asInstanceOf[Double])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val kRef = ctx.addReferenceObj("l2ArgminKernel", kernel,
-      classOf[L2ArgminKernel].getName)
-    val subCode = sub.genCode(ctx)
-    val nvCode = nv.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${subCode.code}
-        ${nvCode.code}
-        boolean ${ev.isNull} = false;
-        long ${ev.value} = (${subCode.isNull} || ${nvCode.isNull})
-          ? $kRef.fallback()
-          : $kRef.apply(${subCode.value}, ${nvCode.value});
-      """)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(sub = newChildren(0), nv = newChildren(1), cids = newChildren(2),
-      cvecs = newChildren(3), cnormsSq = newChildren(4))
+  override protected def newKernel: KernelOf = new L2ArgminKernel(_, _, _, _)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
+    copy(c(0), c(1), c(2), c(3), c(4))
 }
 
 /** Driver-held weight vector for [[LogisticScoreExpression]] — one
@@ -1442,48 +1321,22 @@ case class AdcSumExpression(ceLit: Expression, ncLit: Expression,
   * regexp_replace calls (each a separate compiled-regex traversal);
   * here it is one scan per document and the projection stays fused.
   */
-case class HtmlToTextExpression(child: Expression) extends UnaryExpression {
-
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"html_to_text_native requires STRING, got ${child.dataType.catalogString}")
-  override def dataType: DataType = StringType
+case class HtmlToTextExpression(child: Expression) extends StringKernelExpression {
   override def prettyName: String = "html_to_text_native"
-
-  override protected def nullSafeEval(v: Any): Any =
-    NativeDna.htmlToText(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.NativeDna.htmlToText($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def kernelPath = "graft.plans.NativeDna.htmlToText"
+  override protected def kernel(s: UTF8String): Any = NativeDna.htmlToText(s)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** URL canonicalization as a native unary expression
-  * ([[graft.functions.Web.canonicalizeUrl]] rules) — the key-building
-  * scalar of URL-level dedup, run once per crawl record.
+/** URL canonicalization ([[graft.functions.Web.canonicalizeUrl]] rules)
+  * — the key-building scalar of URL-level dedup, run once per crawl
+  * record.
   */
-case class CanonicalizeUrlExpression(child: Expression) extends UnaryExpression {
-
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"canonicalize_url_native requires STRING, got ${child.dataType.catalogString}")
-  override def dataType: DataType = StringType
+case class CanonicalizeUrlExpression(child: Expression) extends StringKernelExpression {
   override def prettyName: String = "canonicalize_url_native"
-
-  override protected def nullSafeEval(v: Any): Any =
-    NativeDna.canonicalUrl(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.NativeDna.canonicalUrl($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def kernelPath = "graft.plans.NativeDna.canonicalUrl"
+  override protected def kernel(s: UTF8String): Any = NativeDna.canonicalUrl(s)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** RFC 3986 reference resolution (base, href) → absolute http(s) URL,
@@ -1511,26 +1364,25 @@ case class ResolveUrlExpression(left: Expression, right: Expression)
       h.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, h) => s"""
-      ${ev.value} = graft.plans.NativeDna.resolveUrl($b, $h);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
+    nullSafeCodeGen(ctx, ev, (b, h) =>
+      BoxedResult(ctx, ev, dataType, s"graft.plans.NativeDna.resolveUrl($b, $h)"))
 
   override protected def withNewChildrenInternal(newLeft: Expression,
                                                  newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration: both an extensions class (for
-  * `SparkSession.builder.withExtensions(new GraftExtensions)`) and a
-  * runtime registry hook for already-built sessions.
+/** The native function table and its three consumers: the extensions
+  * class (`SparkSession.builder.withExtensions(new GraftExtensions)`),
+  * the runtime registry hook for already-built sessions ([[register]],
+  * the SQL surface) and the Column builder ([[call]]).
   */
 object NativeFunctions {
   /** name → (expression class, for the injected `ExpressionInfo`;
-    * builder) — the one table [[register]] and [[GraftExtensions]]
-    * both install.
+    * builder) — the one table [[register]], [[GraftExtensions]] and
+    * [[call]] all build from.
     */
-  private[plans] val fns
+  private[graft] val fns
       : Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] =
     Seq(
       ("revcomp_native", classOf[RevCompExpression],
@@ -1589,6 +1441,18 @@ object NativeFunctions {
       if (!reg.functionExists(FunctionIdentifier(name)))
         reg.createOrReplaceTempFunction(name, builder, "built-in")
     }
+
+  /** The native function `name` over `args` as a Column, built by the
+    * same [[fns]] builder the SQL surface uses — no session registry
+    * involved, so it works in any session without [[register]]. An
+    * unknown name fails here, not at analysis.
+    */
+  def call(name: String, args: Column*): Column = {
+    val build = fns.collectFirst { case (n, _, b) if n == name => b }.getOrElse(
+      throw new IllegalArgumentException(
+        s"no native function $name; known: ${fns.map(_._1).mkString(", ")}"))
+    Bridge.column(build(args.map(Bridge.expression)))
+  }
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

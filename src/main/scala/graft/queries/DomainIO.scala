@@ -490,9 +490,9 @@ object DomainIO {
         .filter(length(col("line")) > 0)
         .as[String]
       val f = split(col("value"), " ")
-      graft.pipe.Pipes.hmmsearch(s, lines).toDF("value").select(
-        f.getItem(0).as("id"),
-        f.getItem(5).cast("int").as("seq_len"))
+      graft.pipe.Pipes.hmmsearch(s, lines).toDF("value")
+        .filter(!col("value").startsWith("#")) // tblout comment lines
+        .select(f.getItem(0).as("id"), f.getItem(5).cast("int").as("seq_len"))
     },
 
     // P1 under oracle test: interleaved FASTQ lines → BWA pipe

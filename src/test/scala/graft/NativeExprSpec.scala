@@ -266,4 +266,84 @@ class NativeExprSpec extends AnyFunSuite {
       org.apache.spark.sql.SparkSession.setDefaultSession(orig)
     }
   }
+
+  test("native fence: every table entry's Column form equals its SQL form, inside whole-stage codegen") {
+    import graft.plans.KmerGenerator
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.functions.expr
+    NativeFunctions.register(spark)
+    def cp(cps: Int*) = new String(cps.toArray, 0, cps.length)
+    // a decomposed e-acute and an i-diaeresis; then "cafe-acute" as mojibake
+    val text = Seq("caf" + cp(0x65, 0x301) + " na" + cp(0xef) + "ve the a the",
+      graft.plans.NativeText.mojibake("caf" + cp(0xe9)) + " THE  x")
+    // two rows of every argument type, then an all-NULL row; shuffled,
+    // because a projection over a local relation is folded away
+    spark.sql(s"""SELECT * FROM VALUES
+        ('ACGTACGTN', '${text(0)}', '<p>Hi <b>there</b> &amp; bye</p>',
+         'HTTP://Ex.COM:80/a/./b/../c?x=1#f', '../d.html', 'II#5+',
+         cast(array(0.5, -1, 2) as array<float>), cast(array(1, 0.25, -0.75) as array<float>),
+         2.29D, array('the', 'a', 'b'), array(5L, 9L), array(3L, 1L), 0.5D, -2D,
+         0L, 1L, array(0.5D, 1D), array(2D, -1D), 1.25D, 5D),
+        ('acgtt', '${text(1)}', '<div>a<br>b</div>', 'https://x.org/p?b=2&a=1', 'q?z=1',
+         '!!!!', cast(array(0, 0, 0) as array<float>), cast(array(-1, 2, 3) as array<float>),
+         0D, array('the', 'the', 'x'), array(0L), array(0L, 7L), -1D, 3D,
+         1L, 0L, array(-0.5D, 2D), array(0D, 0D), 4.25D, 0D),
+        (NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL,
+         NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL)
+      AS t(dna, text, html, url, href, qual, x, y, nx, toks, c1, c2, f1, f2,
+        a0, a1, q0, q1, n0, n1)""").repartition(2).createOrReplaceTempView("native_fence")
+    val cents = Seq("array(7L, 3L)", "array(array(1D, 0D, 0D), array(0D, 1D, 1D))",
+      "array(1D, 1.4142135623730951D)")
+    val adcTables = Seq(
+      "array(array(array(1D, 0D), array(0D, 1D)), array(array(1D, 1D), array(2D, 0D)))",
+      "array(array(1D, 1D), array(2D, 4D))")
+    // SQL argument text per table entry; the Column form parses the same text
+    val args = Map(
+      "revcomp_native" -> Seq("dna"),
+      "translate_dna_native" -> Seq("dna"),
+      "kmers_native" -> Seq("dna", "3"),
+      "dot_native" -> Seq("x", "y"),
+      "nfc_native" -> Seq("text"),
+      "fix_encoding_native" -> Seq("text"),
+      "strip_accents_native" -> Seq("text"),
+      "tokens_native" -> Seq("text"),
+      "lower_native" -> Seq("text"),
+      "upper_native" -> Seq("text"),
+      "token_set_count_native" -> Seq("toks", "array('a', 'the')"),
+      "avg_quality_native" -> Seq("qual"),
+      "low_quality_count_native" -> Seq("qual", "40"),
+      "cosine_argmax_native" -> (Seq("x", "nx") ++ cents),
+      "l2_argmin_native" -> (Seq("x", "nx") ++ cents),
+      "logistic_score_native" -> Seq("array(0.5D, -1D, 2D)", "f1", "f2"),
+      "adc_sum_native" -> (adcTables ++ Seq("a0", "a1", "q0", "q1", "n0", "n1")),
+      "binary_quantize_native" -> Seq("x"),
+      "hamming_native" -> Seq("c1", "c2"),
+      "html_to_text_native" -> Seq("html"),
+      "canonicalize_url_native" -> Seq("url"),
+      "resolve_url_native" -> Seq("url", "href"))
+    assert(args.keySet == NativeFunctions.fns.map(_._1).toSet)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    NativeFunctions.fns.foreach { case (name, cls, _) =>
+      val a = args(name)
+      val viaCall = spark.table("native_fence").select(NativeFunctions.call(name, a.map(expr): _*))
+      val viaSql = spark.sql(s"SELECT $name(${a.mkString(", ")}) FROM native_fence")
+      assert(viaCall.columns.toSeq == viaSql.columns.toSeq, name)
+      assert(rows(viaCall) == rows(viaSql), name)
+      if (cls != classOf[KmerGenerator]) Seq(viaCall, viaSql).foreach { df =>
+        val nodes = FinalPlan.collectAll(df.queryExecution.executedPlan)
+        val fused = nodes.collect { case w: WholeStageCodegenExec => w }
+          .flatMap(_.collect { case p: ProjectExec => p })
+          .exists(_.projectList.exists(_.find(cls.isInstance).isDefined))
+        assert(fused, s"$name: ${df.queryExecution.executedPlan}")
+        val fallback = nodes.flatMap(_.expressions.flatMap(_.collect {
+          case e: CodegenFallback => e.nodeName }))
+        assert(fallback.isEmpty, s"$name: $fallback")
+      }
+    }
+    val unknown = intercept[IllegalArgumentException](
+      NativeFunctions.call("no_such_native", expr("dna")))
+    assert(unknown.getMessage.contains("no_such_native"))
+  }
 }
