@@ -360,7 +360,7 @@ object Bench {
         .filter(col("rn") <= 3).count()
     }, "skew_topk_window")._1
     val aggTopK = timedRuns({
-      val topk = udaf(new graft.operators.TopKTermsAggregator(3))
+      val topk = udaf(graft.operators.BoundedKAggregator.topTerms(3))
       li.groupBy("k")
         .agg(topk(col("l_orderkey").cast("string"), col("l_quantity").cast("long"),
           col("l_extendedprice")).as("top"))

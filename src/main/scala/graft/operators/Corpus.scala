@@ -1232,7 +1232,7 @@ object Corpus {
                    k: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val topk = udaf(new TopKTermsAggregator(k))
+    val topk = udaf(BoundedKAggregator.topTerms(k))
     tfidfScored(docs, idCol, textCol)
       .groupBy("doc_id")
       .agg(topk(col("term"), col("tf"), col("tfidf")).as("top"))
@@ -1327,7 +1327,7 @@ object Corpus {
   def stratifiedTakeAgg(docs: DataFrame, idCol: String, stratumCol: String,
                         k: Int): DataFrame = {
     require(k > 0, s"bad take size $k")
-    val minK = udaf(new BoundedMinKAggregator(k))
+    val minK = udaf(BoundedKAggregator.minK(k))
     docs.groupBy(col(stratumCol))
       .agg(minK(md5(col(idCol).cast("string")), col(idCol)).as("__ids"))
       .select(col(stratumCol), explode(col("__ids")).as(idCol))
@@ -1820,7 +1820,7 @@ object Corpus {
       .crossJoin(broadcast(nc))
       .withColumn("score",
         round(col("tf") * log(col("n_clusters").cast("double") / col("df")), 4))
-    val topk = udaf(new TopKTermsAggregator(k))
+    val topk = udaf(BoundedKAggregator.topTerms(k))
     scored.groupBy("cluster")
       .agg(topk(col("term"), col("tf"), col("score")).as("top"))
       .select(col("cluster"), posexplode(col("top")).as(Seq("i", "e")))
@@ -1851,27 +1851,66 @@ object Corpus {
     * (the k-means centroid-fetch contract); the vocab is
     * localCheckpoint'd per round so each round's plan stays flat.
     */
-  def bpeTrain(docs: DataFrame, textCol: String, merges: Int): DataFrame = {
-    require(merges >= 1 && merges <= 64,
-      s"merges $merges outside sane bounds (1..64)")
-    val spark = docs.sparkSession
-    val chars = filter(split(col("word"), ""), c => c =!= "")
-    var vocab = Parallelism.ensure(docs)
+  def bpeTrain(docs: DataFrame, textCol: String, merges: Int): DataFrame =
+    trainMerges(charVocab(docs, textCol, "^[a-z]+$"), "\\([a-z]+\\)", merges)(byCount)
+
+  /** The BPE pick: the most frequent pair (count desc, then pair asc). */
+  private val byCount: (DataFrame, DataFrame) => DataFrame = (pairs, _) =>
+    pairs.orderBy(col("c").desc, col("s1").asc, col("s2").asc)
+      .select(col("s1"), col("s2"), col("c").as("cnt"))
+
+  /** The (cnt, repr) vocab of the character-alphabet trainers: the
+    * lowercased tokens matching `wordRegex`, counted, each rendered as
+    * its paren-delimited character symbols ("the" → "(t)(h)(e)").
+    */
+  private def charVocab(docs: DataFrame, textCol: String,
+                        wordRegex: String): DataFrame =
+    Parallelism.ensure(docs)
       .select(explode(TextFunctions.tokens(col(textCol))).as("tok"))
       .select(TextFunctions.lowerCase(col("tok")).as("word"))
-      .filter(col("word").rlike("^[a-z]+$"))
+      .filter(col("word").rlike(wordRegex))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
-      .select(col("word"), col("cnt"),
-        concat_ws("", transform(chars, c => concat(lit("("), c, lit(")"))))
-          .as("repr"))
-      .localCheckpoint()
-    val learned = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
-    var r = 1
+      .select(col("cnt"), parenChars(col("word")).as("repr"))
+
+  /** A non-empty word as its paren-delimited character symbols. */
+  private def parenChars(w: Column): Column =
+    concat(lit("("), concat_ws(")(", filter(split(w, ""), c => c =!= "")), lit(")"))
+
+  /** A word's UTF-8 bytes as lowercase hex, two digits per byte. */
+  private def hexBytes(w: Column): Column =
+    TextFunctions.lowerCase(hex(encode(w, "UTF-8")))
+
+  /** Hex digits as paren-delimited byte symbols ("7468" → "(74)(68)"). */
+  private def parenHex(h: Column): Column =
+    regexp_replace(h, lit("([0-9a-f]{2})"), lit("($1)"))
+
+  /** The one merge-training loop of the BPE family ([[bpeTrain]],
+    * [[byteBpeTrain]], [[wordpieceTrain]]). `vocab` holds (cnt, repr)
+    * rows, repr a word's symbols as a paren-delimited string matched
+    * symbol by symbol by `symbol`. One round: explode each word's
+    * adjacent symbol pairs into (s1, s2, c = Σ cnt); `pick` orders that
+    * frame (it also receives the vocab's (cnt, syms) rows for per-symbol
+    * statistics) and selects (s1, s2, stats…); the first row comes to
+    * the driver; a literal `replace` applies the merge; the vocab is
+    * localCheckpoint'd so each round's plan stays flat. Stops after
+    * `merges` rounds or when no word has two symbols left. Returns one
+    * row per learned merge: (round, lhs, rhs, merged, stats…).
+    */
+  private def trainMerges(vocab: DataFrame, symbol: String, merges: Int)(
+      pick: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    require(merges >= 1 && merges <= 64,
+      s"merges $merges outside sane bounds (1..64)")
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    val spark = vocab.sparkSession
+    val syms = regexp_extract_all(col("repr"), lit(symbol), lit(0))
+    var v = vocab.localCheckpoint()
+    val learned = scala.collection.mutable.ArrayBuffer.empty[Row]
+    var stats = Seq.empty[StructField]
     var exhausted = false
-    while (r <= merges && !exhausted) {
-      val syms = regexp_extract_all(col("repr"), lit("\\([a-z]+\\)"), lit(0))
-      val best = vocab
-        .select(col("cnt"), syms.as("syms"))
+    while (learned.size < merges && !exhausted) {
+      val withSyms = v.select(col("cnt"), syms.as("syms"))
+      val pairs = withSyms
         .select(col("cnt"), explode(when(size(col("syms")) > 1,
           transform(sequence(lit(1), size(col("syms")) - 1),
             i => struct(element_at(col("syms"), i).as("s1"),
@@ -1879,25 +1918,25 @@ object Corpus {
           .otherwise(array())).as("p"))
         .groupBy(col("p.s1").as("s1"), col("p.s2").as("s2"))
         .agg(sum("cnt").as("c"))
-        .orderBy(col("c").desc, col("s1").asc, col("s2").asc)
-        .limit(1)
-        .collect() // exactly one row (or none) — bounded driver fetch
+      val ranked = pick(pairs, withSyms)
+      stats = ranked.schema.fields.toSeq.drop(2)
+      val best = ranked.limit(1).collect() // one row (or none) — bounded driver fetch
       if (best.isEmpty) exhausted = true
       else {
         val row = best.head
-        val (s1, s2, c) = (row.getString(0), row.getString(1), row.getLong(2))
+        val (s1, s2) = (row.getString(0), row.getString(1))
         val i1 = s1.substring(1, s1.length - 1)
         val i2 = s2.substring(1, s2.length - 1)
-        learned += ((r, i1, i2, i1 + i2, c))
-        vocab = vocab
-          .withColumn("repr",
+        learned += Row.fromSeq(Seq(learned.size + 1, i1, i2, i1 + i2) ++ row.toSeq.drop(2))
+        v = v.withColumn("repr",
             replace(col("repr"), lit(s1 + s2), lit("(" + i1 + i2 + ")")))
           .localCheckpoint()
-        r += 1
       }
     }
-    import spark.implicits._
-    learned.toSeq.toDF("round", "lhs", "rhs", "merged", "cnt")
+    val schema = StructType(StructField("round", IntegerType, nullable = false) +:
+      Seq("lhs", "rhs", "merged").map(StructField(_, StringType)) ++: stats)
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(learned.asJava, schema)
   }
 
   /** Per-slice KL divergence against the whole-corpus token
@@ -2043,21 +2082,31 @@ object Corpus {
     * from both counts (same contract as training).
     */
   def bpeEncode(docs: DataFrame, idCol: String, textCol: String,
-                merges: Seq[(String, String)]): DataFrame = {
+                merges: Seq[(String, String)]): DataFrame =
+    encodeMerges(docs, idCol, filter(
+      transform(TextFunctions.tokens(col(textCol)), t => TextFunctions.lowerCase(t)),
+      w => w.rlike("^[a-z]+$")), parenChars, merges, "n_bpe")
+
+  /** The one merge-chain encoder of [[bpeEncode]] and [[byteBpeEncode]]:
+    * each doc's `words` render through `render` as paren-symbol strings
+    * joined by a space (no "(x)(y)" pattern can span it, so one
+    * doc-level replace equals per-word application), the merges apply
+    * as chained literal `replace`s in training order, and the token
+    * count (`countCol`) is the number of surviving "(".
+    */
+  private def encodeMerges(docs: DataFrame, idCol: String, words: Column,
+                           render: Column => Column,
+                           merges: Seq[(String, String)],
+                           countCol: String): DataFrame = {
     require(merges.nonEmpty && merges.size <= 64,
       s"merge table size ${merges.size} outside sane bounds (1..64)")
-    val words = filter(
-      transform(TextFunctions.tokens(col(textCol)), t => TextFunctions.lowerCase(t)),
-      w => w.rlike("^[a-z]+$"))
-    val parenRepr = (w: Column) => concat(lit("("),
-      concat_ws(")(", filter(split(w, ""), c => c =!= "")), lit(")"))
-    val repr0 = concat_ws(" ", transform(words, parenRepr))
+    val repr0 = concat_ws(" ", transform(words, render))
     val encoded = merges.foldLeft(repr0) { case (c, (l, r)) =>
       replace(c, lit(s"($l)($r)"), lit(s"($l$r)"))
     }
     docs.select(col(idCol).as("doc_id"), size(words).as("n_words"),
       (length(encoded) - length(replace(encoded, lit("("), lit(""))))
-        .cast("int").as("n_bpe"))
+        .cast("int").as(countCol))
   }
 
   /** BYTE-LEVEL BPE training (the GPT-2 recipe, Radford et al. 2019 —
@@ -2077,61 +2126,24 @@ object Corpus {
     * inside the paren-delimited symbol string ("the" → "(74)(68)(65)",
     * "🚀" → "(f0)(9f)(9a)(80)"), so a symbol is an even-length hex run
     * and multi-byte UTF-8 merges are ordinary pair merges. Everything
-    * else is [[bpeTrain]]'s loop verbatim: per round one vocab-sized
-    * pair aggregation, a 1-row argmax fetch (count desc, pair asc),
-    * one literal replace — 100 TB costs ONE corpus aggregation plus
-    * `merges` vocab-sized rounds.
+    * else is [[bpeTrain]]'s loop ([[trainMerges]]): per round one
+    * vocab-sized pair aggregation, a 1-row argmax fetch (count desc,
+    * pair asc), one literal replace — 100 TB costs ONE corpus
+    * aggregation plus `merges` vocab-sized rounds.
     */
   def byteBpeTrain(docs: DataFrame, textCol: String, merges: Int,
                    maxWordBytes: Int = 16,
                    tokensOf: Column => Column =
                      TextFunctions.tokens): DataFrame = {
-    require(merges >= 1 && merges <= 64,
-      s"merges $merges outside sane bounds (1..64)")
     require(maxWordBytes >= 1 && maxWordBytes <= 64,
       s"maxWordBytes $maxWordBytes outside sane bounds (1..64)")
-    val spark = docs.sparkSession
-    var vocab = Parallelism.ensure(docs)
+    val vocab = Parallelism.ensure(docs)
       .select(explode(tokensOf(col(textCol))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
-      .select(col("cnt"), TextFunctions.lowerCase(hex(encode(col("word"), "UTF-8"))).as("h"))
+      .select(col("cnt"), hexBytes(col("word")).as("h"))
       .filter(length(col("h")).between(2, maxWordBytes * 2))
-      .select(col("cnt"),
-        regexp_replace(col("h"), "([0-9a-f]{2})", "($1)").as("repr"))
-      .localCheckpoint()
-    val learned = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
-    var r = 1
-    var exhausted = false
-    while (r <= merges && !exhausted) {
-      val syms = regexp_extract_all(col("repr"), lit("\\([0-9a-f]+\\)"), lit(0))
-      val best = vocab
-        .select(col("cnt"), syms.as("syms"))
-        .select(col("cnt"), explode(when(size(col("syms")) > 1,
-          transform(sequence(lit(1), size(col("syms")) - 1),
-            i => struct(element_at(col("syms"), i).as("s1"),
-              element_at(col("syms"), i + 1).as("s2"))))
-          .otherwise(array())).as("p"))
-        .groupBy(col("p.s1").as("s1"), col("p.s2").as("s2"))
-        .agg(sum("cnt").as("c"))
-        .orderBy(col("c").desc, col("s1").asc, col("s2").asc)
-        .limit(1)
-        .collect() // exactly one row (or none) — bounded driver fetch
-      if (best.isEmpty) exhausted = true
-      else {
-        val row = best.head
-        val (s1, s2, c) = (row.getString(0), row.getString(1), row.getLong(2))
-        val i1 = s1.substring(1, s1.length - 1)
-        val i2 = s2.substring(1, s2.length - 1)
-        learned += ((r, i1, i2, i1 + i2, c))
-        vocab = vocab
-          .withColumn("repr",
-            replace(col("repr"), lit(s1 + s2), lit("(" + i1 + i2 + ")")))
-          .localCheckpoint()
-        r += 1
-      }
-    }
-    import spark.implicits._
-    learned.toSeq.toDF("round", "lhs", "rhs", "merged", "cnt")
+      .select(col("cnt"), parenHex(col("h")).as("repr"))
+    trainMerges(vocab, "\\([0-9a-f]+\\)", merges)(byCount)
   }
 
   /** Byte-level BPE ENCODING under [[byteBpeTrain]]'s merge table —
@@ -2148,22 +2160,9 @@ object Corpus {
                     merges: Seq[(String, String)],
                     maxWordBytes: Int = 16,
                     tokensOf: Column => Column =
-                      TextFunctions.tokens): DataFrame = {
-    require(merges.nonEmpty && merges.size <= 64,
-      s"merge table size ${merges.size} outside sane bounds (1..64)")
-    val kept = filter(
-      transform(tokensOf(col(textCol)),
-        w => TextFunctions.lowerCase(hex(encode(w, "UTF-8")))),
-      h => length(h) <= lit(maxWordBytes * 2))
-    val repr0 = concat_ws(" ", transform(kept,
-      h => regexp_replace(h, lit("([0-9a-f]{2})"), lit("($1)"))))
-    val encoded = merges.foldLeft(repr0) { case (c, (l, r)) =>
-      replace(c, lit(s"($l)($r)"), lit(s"($l$r)"))
-    }
-    docs.select(col(idCol).as("doc_id"), size(kept).as("n_words"),
-      (length(encoded) - length(replace(encoded, lit("("), lit(""))))
-        .cast("int").as("n_tokens"))
-  }
+                      TextFunctions.tokens): DataFrame =
+    encodeMerges(docs, idCol, filter(transform(tokensOf(col(textCol)), hexBytes(_)),
+      h => length(h) <= lit(maxWordBytes * 2)), parenHex, merges, "n_tokens")
 
   /** WordPiece tokenizer training (Schuster & Nakajima 2012 — BERT's
     * tokenizer), completing the production triad next to [[bpeTrain]]
@@ -2182,74 +2181,30 @@ object Corpus {
     * WORD vocab (never documents), a 1-row argmax fetch, a literal
     * replace; the driver holds the ≤`merges`-row table.
     */
-  def wordpieceTrain(docs: DataFrame, textCol: String, merges: Int): DataFrame = {
-    require(merges >= 1 && merges <= 64,
-      s"merges $merges outside sane bounds (1..64)")
-    val spark = docs.sparkSession
-    val chars = filter(split(col("word"), ""), c => c =!= "")
-    var vocab = Parallelism.ensure(docs)
-      .select(explode(TextFunctions.tokens(col(textCol))).as("tok"))
-      .select(TextFunctions.lowerCase(col("tok")).as("word"))
-      // {1,12} word-length cap — the unigram-family contract ([a-z]{1,16}
-      // there): an EXPLICIT bound both engine and oracle enforce, so the
-      // oracle's fixed greedy-segmentation chain depth (12 steps — each
-      // consumes ≥1 char) is guaranteed by the data contract, not by a
-      // comment about the fixture.
-      .filter(col("word").rlike("^[a-z]{1,12}$"))
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
-      .select(col("word"), col("cnt"),
-        concat_ws("", transform(chars, c => concat(lit("("), c, lit(")"))))
-          .as("repr"))
-      .localCheckpoint()
-    val learned = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, String, String, String, Long, Long, Long)]
-    var r = 1
-    var exhausted = false
-    while (r <= merges && !exhausted) {
-      val syms = regexp_extract_all(col("repr"), lit("\\([a-z]+\\)"), lit(0))
-      val symCounts = vocab
-        .select(col("cnt"), explode(syms).as("sym"))
-        .groupBy("sym").agg(sum("cnt").as("sc"))
-      val best = vocab
-        .select(col("cnt"), syms.as("syms"))
-        .select(col("cnt"), explode(when(size(col("syms")) > 1,
-          transform(sequence(lit(1), size(col("syms")) - 1),
-            i => struct(element_at(col("syms"), i).as("s1"),
-              element_at(col("syms"), i + 1).as("s2"))))
-          .otherwise(array())).as("p"))
-        .groupBy(col("p.s1").as("s1"), col("p.s2").as("s2"))
-        .agg(sum("cnt").as("c"))
-        .join(symCounts.select(col("sym").as("s1"), col("sc").as("sc1")), "s1")
-        .join(symCounts.select(col("sym").as("s2"), col("sc").as("sc2")), "s2")
-        .orderBy((col("c") / (col("sc1") * col("sc2"))).desc,
-          col("s1").asc, col("s2").asc)
-        .limit(1)
-        .select("s1", "s2", "c", "sc1", "sc2")
-        .collect() // exactly one row (or none) — bounded driver fetch
-      if (best.isEmpty) exhausted = true
-      else {
-        val row = best.head
-        val (s1, s2) = (row.getString(0), row.getString(1))
-        val i1 = s1.substring(1, s1.length - 1)
-        val i2 = s2.substring(1, s2.length - 1)
-        learned += ((r, i1, i2, i1 + i2, row.getLong(2), row.getLong(3),
-          row.getLong(4)))
-        vocab = vocab
-          .withColumn("repr",
-            replace(col("repr"), lit(s1 + s2), lit("(" + i1 + i2 + ")")))
-          .localCheckpoint()
-        r += 1
-      }
+  def wordpieceTrain(docs: DataFrame, textCol: String, merges: Int): DataFrame =
+    // {1,12} word-length cap — the unigram-family contract ([a-z]{1,16}
+    // there): an EXPLICIT bound both engine and oracle enforce, so the
+    // oracle's fixed greedy-segmentation chain depth (12 steps — each
+    // consumes ≥1 char) is guaranteed by the data contract, not by a
+    // comment about the fixture.
+    trainMerges(charVocab(docs, textCol, "^[a-z]{1,12}$"), "\\([a-z]+\\)", merges) {
+      (pairs, withSyms) =>
+        val symCounts = withSyms
+          .select(col("cnt"), explode(col("syms")).as("sym"))
+          .groupBy("sym").agg(sum("cnt").as("sc"))
+        pairs
+          .join(symCounts.select(col("sym").as("s1"), col("sc").as("sc1")), "s1")
+          .join(symCounts.select(col("sym").as("s2"), col("sc").as("sc2")), "s2")
+          .orderBy((col("c") / (col("sc1") * col("sc2"))).desc,
+            col("s1").asc, col("s2").asc)
+          .select(col("s1"), col("s2"), col("c").as("pair_cnt"),
+            col("sc1").as("lhs_cnt"), col("sc2").as("rhs_cnt"))
     }
-    import spark.implicits._
-    learned.toSeq
-      .toDF("round", "lhs", "rhs", "merged", "pair_cnt", "lhs_cnt", "rhs_cnt")
       // raw score ≈ 1e-7 vanishes under 6dp compare; the log form keeps
       // the likelihood ordering visible at hash-safe precision
       .withColumn("score_ln",
         round(log(col("pair_cnt")) - log(col("lhs_cnt")) - log(col("rhs_cnt")),
           6) + lit(0.0))
-  }
 
   /** WordPiece corpus encoding — greedy LONGEST-MATCH-FIRST inference
     * (the rule BERT ships): at each position take the longest vocab
@@ -2768,18 +2723,36 @@ object Corpus {
   }
 }
 
-/** Bounded top-k buffer for [[Corpus.tfidfTopKAgg]]: both the partial
-  * (reduce) and merge paths trim to k under the total order
-  * (tfidf desc, term asc), so no buffer anywhere — executor, shuffle,
-  * or final — ever holds more than k entries per group. k is tiny, so
-  * sort-and-take beats a heap on constant factors and stays allocation-
-  * simple for the encoder.
+/** Bounded k-best Aggregator: the buffer keeps the k smallest inputs
+  * under `ord`, and both the partial (reduce) and merge paths trim to
+  * k, so no buffer anywhere — executor, shuffle, or final — ever holds
+  * more than k entries per group; `out` maps the final buffer. k is
+  * tiny, so sort-and-take beats a heap on constant factors and stays
+  * allocation-simple for the encoder. The buffer is kept sorted, so
+  * the hot path (a row at or past the k-th entry of a full buffer, the
+  * overwhelming majority of rows in a skewed group) is one comparison
+  * and no allocation.
   */
-final class TopKTermsAggregator(k: Int)
-    extends org.apache.spark.sql.expressions.Aggregator[
-      (String, Long, Double), Seq[(String, Long, Double)],
-      Seq[(String, Long, Double)]] {
-  import org.apache.spark.sql.Encoder
+final class BoundedKAggregator[IN, OUT](k: Int, ord: Ordering[IN],
+                                        out: Seq[IN] => OUT)(
+    implicit bufEnc: org.apache.spark.sql.Encoder[Seq[IN]],
+    outEnc: org.apache.spark.sql.Encoder[OUT])
+    extends org.apache.spark.sql.expressions.Aggregator[IN, Seq[IN], OUT] {
+
+  private def trim(xs: Seq[IN]): Seq[IN] = xs.sorted(ord).take(k)
+
+  override def zero: Seq[IN] = Seq.empty
+  override def reduce(b: Seq[IN], a: IN): Seq[IN] =
+    if (b.length >= k && ord.compare(a, b.last) >= 0) b
+    else trim(b :+ a)
+  override def merge(x: Seq[IN], y: Seq[IN]): Seq[IN] = trim(x ++ y)
+  override def finish(r: Seq[IN]): OUT = out(r)
+  override def bufferEncoder: org.apache.spark.sql.Encoder[Seq[IN]] = bufEnc
+  override def outputEncoder: org.apache.spark.sql.Encoder[OUT] = outEnc
+}
+
+object BoundedKAggregator {
+  import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 
   // Terms compare as UNSIGNED UTF-8 BYTES — the order Spark's
   // UTF8String sort and DuckDB's binary string comparison share.
@@ -2799,69 +2772,28 @@ final class TopKTermsAggregator(k: Int)
     x.length - y.length
   }
 
-  private val ord: Ordering[(String, Long, Double)] =
-    (p: (String, Long, Double), q: (String, Long, Double)) => {
-      val c = java.lang.Double.compare(q._3, p._3) // tfidf desc
-      if (c != 0) c else utf8Compare(p._1, q._1) // term asc (utf-8)
-    }
+  /** The k best (term, tf, tfidf) rows under (tfidf desc, term asc) —
+    * [[Corpus.tfidfTopKAgg]] and [[Corpus.clusterTopTerms]].
+    */
+  def topTerms(k: Int): BoundedKAggregator[(String, Long, Double), Seq[(String, Long, Double)]] =
+    new BoundedKAggregator[(String, Long, Double), Seq[(String, Long, Double)]](k,
+      (p, q) => {
+        val c = java.lang.Double.compare(q._3, p._3) // tfidf desc
+        if (c != 0) c else utf8Compare(p._1, q._1) // term asc (utf-8)
+      },
+      identity)(ExpressionEncoder(), ExpressionEncoder())
 
-  private def trim(xs: Seq[(String, Long, Double)]): Seq[(String, Long, Double)] =
-    xs.sorted(ord).take(k)
-
-  override def zero: Seq[(String, Long, Double)] = Seq.empty
-  override def reduce(b: Seq[(String, Long, Double)],
-                      a: (String, Long, Double)): Seq[(String, Long, Double)] =
-    // buffer stays sorted (trim's output): once full, a row at or past
-    // the k-th entry can never enter — skip the append + re-sort on the
-    // hot path (the overwhelming majority of rows in a skewed group)
-    if (b.length >= k && ord.compare(a, b.last) >= 0) b
-    else trim(b :+ a)
-  override def merge(x: Seq[(String, Long, Double)],
-                     y: Seq[(String, Long, Double)]): Seq[(String, Long, Double)] =
-    trim(x ++ y)
-  override def finish(r: Seq[(String, Long, Double)]): Seq[(String, Long, Double)] = r
-  override def bufferEncoder: Encoder[Seq[(String, Long, Double)]] =
-    org.apache.spark.sql.catalyst.encoders
-      .ExpressionEncoder[Seq[(String, Long, Double)]]()
-  override def outputEncoder: Encoder[Seq[(String, Long, Double)]] =
-    org.apache.spark.sql.catalyst.encoders
-      .ExpressionEncoder[Seq[(String, Long, Double)]]()
-}
-
-/** Bounded "k smallest (md5, id) pairs" Aggregator — the map-side
-  * buffer of [[Corpus.stratifiedTakeAgg]]. The hex md5 is lowercase
-  * ASCII, so Scala string comparison, UTF8String order, and DuckDB
-  * binary collation all agree; ties (impossible for distinct ids, but
-  * contractually) break on the id. Buffer is kept sorted so the hot
-  * path (a row past the k-th entry in an already-full buffer) is one
-  * comparison, no allocation.
-  */
-final class BoundedMinKAggregator(k: Int)
-    extends org.apache.spark.sql.expressions.Aggregator[
-      (String, Long), Seq[(String, Long)], Seq[Long]] {
-  import org.apache.spark.sql.Encoder
-
-  private val ord: Ordering[(String, Long)] =
-    (p: (String, Long), q: (String, Long)) => {
-      val c = p._1.compareTo(q._1) // ASCII hex: byte order == char order
-      if (c != 0) c else java.lang.Long.compare(p._2, q._2)
-    }
-
-  private def trim(xs: Seq[(String, Long)]): Seq[(String, Long)] =
-    xs.sorted(ord).take(k)
-
-  override def zero: Seq[(String, Long)] = Seq.empty
-  override def reduce(b: Seq[(String, Long)],
-                      a: (String, Long)): Seq[(String, Long)] =
-    if (b.length >= k && ord.compare(a, b.last) >= 0) b
-    else trim(b :+ a)
-  override def merge(x: Seq[(String, Long)],
-                     y: Seq[(String, Long)]): Seq[(String, Long)] =
-    trim(x ++ y)
-  override def finish(r: Seq[(String, Long)]): Seq[Long] = r.map(_._2)
-  override def bufferEncoder: Encoder[Seq[(String, Long)]] =
-    org.apache.spark.sql.catalyst.encoders
-      .ExpressionEncoder[Seq[(String, Long)]]()
-  override def outputEncoder: Encoder[Seq[Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
+  /** The ids of the k smallest (md5, id) pairs — the map-side buffer of
+    * [[Corpus.stratifiedTakeAgg]]. The hex md5 is lowercase ASCII, so
+    * Scala string comparison, UTF8String order, and DuckDB binary
+    * collation all agree; ties (impossible for distinct ids, but
+    * contractually) break on the id.
+    */
+  def minK(k: Int): BoundedKAggregator[(String, Long), Seq[Long]] =
+    new BoundedKAggregator[(String, Long), Seq[Long]](k,
+      (p, q) => {
+        val c = p._1.compareTo(q._1) // ASCII hex: byte order == char order
+        if (c != 0) c else java.lang.Long.compare(p._2, q._2)
+      },
+      _.map(_._2))(ExpressionEncoder(), ExpressionEncoder())
 }

@@ -416,21 +416,18 @@ object Exif {
     }.toDF("doc_id", "payload")
   }
 
-  /** Orientation-NORMALIZED perceptual near-dup pairs: parse Exif,
-    * decode, apply the upright transform, THEN pHash and band-join —
-    * the composition that makes a rotated re-upload of the same photo
-    * hash-identical. Without the normalization step the stored pixels
-    * differ and the pair is invisible; with it the planted twins land
-    * at Hamming 0.
-    */
   /** Per-document orientation-NORMALIZED pHash: parse Exif, decode,
     * upright, hash — the building block of [[orientedPHashPairs]] and
-    * the rotation-robust dedup compositions.
+    * the rotation-robust dedup compositions. Eager: the hashes are
+    * pinned ([[Staging.localPin]]) before this returns, so a
+    * composition that reads them twice (q380's keeper aggregate and
+    * join) decodes every image once.
     */
   def orientedPHash(media: DataFrame): Dataset[Multimodal.PHash] = {
+    import media.sparkSession.implicits._
     // decode + upright + DCT per row over what is often a pinned
     // byte-small parquet scan (q380): spread before paying the codec
-    Multimodal.perPayload(Parallelism.ensure(media)) { records =>
+    val hashes = Multimodal.perPayload(Parallelism.ensure(media)) { records =>
       records.map { r =>
         val o = parseExif(r.payload).map(_.orientation).getOrElse(1)
         val img = Jpeg.decodeColor(r.payload)
@@ -439,11 +436,18 @@ object Exif {
         Multimodal.PHash(r.doc_id, b(0), b(1), b(2), b(3))
       }
     }
+    Staging.localPin(hashes.toDF())._1.as[Multimodal.PHash]
   }
 
+  /** Orientation-NORMALIZED perceptual near-dup pairs: parse Exif,
+    * decode, apply the upright transform, THEN pHash and band-join —
+    * the composition that makes a rotated re-upload of the same photo
+    * hash-identical. Without the normalization step the stored pixels
+    * differ and the pair is invisible; with it the planted twins land
+    * at Hamming 0.
+    */
   def orientedPHashPairs(media: DataFrame, radius: Int = 2): DataFrame =
-    Multimodal.blockHashPairs(
-      orientedPHash(media).toDF().localCheckpoint(), radius)
+    Multimodal.blockHashPairs(orientedPHash(media).toDF(), radius)
 
   /** Attach eXIf-carrying color PNGs: [[Multimodal.asColorMedia]]'s
     * payloads (all three storage types) with the q363 tag rule spliced

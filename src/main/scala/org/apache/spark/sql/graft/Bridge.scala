@@ -31,6 +31,28 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       session.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `df` (a checkpointed frame) with its measured row count as the
+    * planner's statistics: `rows` rows of `EstimationUtils.getSizePerRow`
+    * bytes each. A checkpoint's `LogicalRDD` otherwise plans with the
+    * optimizer's estimate of the plan it replaced (often far too large),
+    * so every join against it plans sort-merge. Any other plan returns
+    * unchanged.
+    */
+  def withRowCount(df: org.apache.spark.sql.DataFrame, rows: Long)
+      : org.apache.spark.sql.DataFrame = df.queryExecution.logical match {
+    case r: org.apache.spark.sql.execution.LogicalRDD =>
+      import org.apache.spark.sql.catalyst.plans.logical.Statistics
+      import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+      val session = df.sparkSession
+        .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val bytes = EstimationUtils.getSizePerRow(r.output) * rows
+      ofRows(session, org.apache.spark.sql.execution.LogicalRDD(r.output, r.rdd,
+        r.outputPartitioning, r.outputOrdering, r.isStreaming, r.stream)(
+        session, Some(Statistics(bytes.max(1), Some(BigInt(rows)))),
+        Some(r.constraints)))
+    case _ => df
+  }
+
   /** The micro-batch a DSv1 `Sink.addBatch` receives is backed by an
     * incremental streaming execution — re-planning it through a
     * normal writer fails. The standard sink move is to drop to its

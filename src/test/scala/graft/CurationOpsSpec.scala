@@ -203,6 +203,26 @@ class CurationOpsSpec extends AnyFunSuite {
       (3, "a", "a", "aa", 2L, 4L, 4L)))
   }
 
+  test("the BPE-family trainers stop early and return only the learned rows") {
+    import spark.implicits._
+    // vocab: ab×2 — one adjacent pair, so one merge, whatever is asked
+    val docs = Seq((1L, "ab ab")).toDF("doc_id", "text")
+    val cases = Seq[(String, Int => org.apache.spark.sql.DataFrame, Seq[Any], Seq[String])](
+      ("bpeTrain", Corpus.bpeTrain(docs, "text", _),
+        Seq(1, "a", "b", "ab", 2L), Seq("round", "lhs", "rhs", "merged", "cnt")),
+      ("byteBpeTrain", Corpus.byteBpeTrain(docs, "text", _),
+        Seq(1, "61", "62", "6162", 2L), Seq("round", "lhs", "rhs", "merged", "cnt")),
+      ("wordpieceTrain", Corpus.wordpieceTrain(docs, "text", _),
+        Seq(1, "a", "b", "ab", 2L, 2L, 2L, -0.693147),
+        Seq("round", "lhs", "rhs", "merged", "pair_cnt", "lhs_cnt", "rhs_cnt",
+          "score_ln")))
+    for ((name, train, row, cols) <- cases) {
+      val out = train(5)
+      assert(out.columns.toSeq == cols, name)
+      assert(out.collect().map(_.toSeq).toSeq == Seq(row), name)
+    }
+  }
+
   test("wordpieceEncode segments greedy longest-match-first with ## continuations") {
     import spark.implicits._
     val docs = Seq(

@@ -97,7 +97,7 @@ class PlanSpec extends AnyFunSuite {
     // group BEFORE the window sort/exchange. This built-in covers the
     // rank-top-k pattern — the reason the engine does NOT ship a custom
     // rewrite rule for it (Spark-first doctrine); the bounded
-    // TopKTermsAggregator (q104) remains the tool for the SKEWED case
+    // BoundedKAggregator.topTerms (q104) remains the tool for the SKEWED case
     // the pushdown doesn't fix (one hot group still sorts on one core).
     val plan = planOf("q10_window_rank")
     assert(plan.contains("WindowGroupLimit"), plan.take(1500))
@@ -115,6 +115,35 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("Expand"), plan.take(1200))
     assert(plan.linesIterator.count(_.contains("Scan parquet")) == 1,
       "the lattice must come from ONE scan")
+  }
+
+  test("a join against a small pinned frame plans a broadcast of it, no Exchange on its side") {
+    import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.functions.col
+    // 2,000 rows from a self-join: the optimizer estimates the join at
+    // 2,000 × 2,000 rows' worth of bytes, far over the broadcast
+    // threshold, while the pin holds 2,000 rows
+    val ids = spark.range(0, 2000)
+    val pinned = graft.operators.Staging.pin(
+      ids.join(ids.select(col("id").as("id2")), col("id") === col("id2")),
+      None, "plan-spec-small")
+    val big = spark.range(0, 20000000L).select((col("id") % 4000).as("id"))
+    val plan = big.join(pinned, "id").queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    val joins = plan.collect { case j: BroadcastHashJoinExec => j }
+    assert(joins.size == 1, plan.toString)
+    val build: SparkPlan = joins.head.buildSide match {
+      case org.apache.spark.sql.catalyst.optimizer.BuildLeft => joins.head.left
+      case org.apache.spark.sql.catalyst.optimizer.BuildRight => joins.head.right
+    }
+    assert(build.isInstanceOf[BroadcastExchangeExec], plan.toString)
+    assert(build.collect { case r: RDDScanExec => r }.nonEmpty, plan.toString)
+    assert(build.collect { case e: ShuffleExchangeExec => e }.isEmpty, plan.toString)
   }
 
   test("q01: aggregation is partial (map-side combine) before the exchange") {

@@ -223,6 +223,38 @@ class PropertySpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet
       assert(got == expect, s"trial $trial n=$n")
     }
+    // the tf-idf order of the same aggregator: tfidf desc, then term asc
+    // in UTF-8 byte order. U+FF21 (EF BC A1) sorts before U+1F680
+    // (F0 9F 9A 80) in UTF-8 but after it in UTF-16 (FF21 > D83D), so
+    // the "tie" group's head is the fullwidth letter.
+    val fullwidthA = new String(Character.toChars(0xFF21))
+    val rocket = new String(Character.toChars(0x1F680))
+    val pool = (0 until 12).map(i => s"t$i") ++
+      (0 until 6).map(i => new String(Character.toChars(0xFF21 + i))) ++
+      (0 until 6).map(i => new String(Character.toChars(0x1F680 + i)))
+    val utf8Order: Ordering[(String, Long, Double)] = (p, q) => {
+      val c = java.lang.Double.compare(q._3, p._3)
+      if (c != 0) c
+      else java.util.Arrays.compareUnsigned(
+        p._1.getBytes("UTF-8"), q._1.getBytes("UTF-8"))
+    }
+    val topk = udaf(graft.operators.BoundedKAggregator.topTerms(5))
+    for (trial <- 1 to 3) {
+      val rows = (0 until 4).flatMap { g =>
+        Random.shuffle(pool).take(8 + rnd.nextInt(12)).map(t =>
+          (s"g$g", t, rnd.nextInt(9).toLong, Seq(0.5, 0.25, 0.125)(rnd.nextInt(3))))
+      } ++ Seq(("tie", rocket, 1L, 0.9), ("tie", fullwidthA, 2L, 0.9),
+        ("tie", "t0", 3L, 0.1))
+      val expect = rows.groupBy(_._1).map { case (g, xs) =>
+        g -> xs.map(r => (r._2, r._3, r._4)).sorted(utf8Order).take(5)
+      }
+      assert(expect("tie").head._1 == fullwidthA)
+      val got = rows.toDF("g", "term", "tf", "tfidf")
+        .repartition(1 + rnd.nextInt(15) + trial)
+        .groupBy("g").agg(topk(col("term"), col("tf"), col("tfidf")).as("top"))
+        .as[(String, Seq[(String, Long, Double)])].collect().toMap
+      assert(got == expect, s"tf-idf trial $trial")
+    }
   }
 
   test("resizeNearest at factor 1 is the identity through a second codec pass") {
