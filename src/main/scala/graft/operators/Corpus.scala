@@ -1919,7 +1919,8 @@ object Corpus {
         .groupBy(col("p.s1").as("s1"), col("p.s2").as("s2"))
         .agg(sum("cnt").as("c"))
       val ranked = pick(pairs, withSyms)
-      stats = ranked.schema.fields.toSeq.drop(2)
+      // the pick's sums are nullable in its schema; a learned row's are not
+      stats = ranked.schema.fields.toSeq.drop(2).map(_.copy(nullable = false))
       val best = ranked.limit(1).collect() // one row (or none) — bounded driver fetch
       if (best.isEmpty) exhausted = true
       else {

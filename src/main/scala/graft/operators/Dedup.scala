@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{Digest, TextFunctions}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for large text corpora (north-star surface:
@@ -157,10 +157,10 @@ object Dedup {
     // reclaimed by the ContextCleaner once the result is dropped — no
     // CacheManager entry survives the query (a long-lived session would
     // otherwise accumulate one cached plan per invocation). The pin
-    // carries its measured row count, so the joins against it plan
-    // with its real size.
+    // carries its stored bytes, shingle arrays included, so the joins
+    // against it plan with its real size.
     val sh = Staging.localPin(
-      signedDocs(docs, idCol, textCol, shingleN, numHashes, bands))._1
+      signedDocs(docs, idCol, textCol, shingleN, numHashes, bands))
     val banded = sh
       .select(col("id"), posexplode(col("bands")).as(Seq("band", "bkey")))
 
@@ -259,13 +259,15 @@ object Dedup {
     val edges = Staging.localPin(pairs
       .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
       .unionAll(pairs
-        .select(col(bCol).cast("long").as("u"), col(aCol).cast("long").as("v"))))._1
+        .select(col(bCol).cast("long").as("u"), col(aCol).cast("long").as("v"))))
     // pin `df` and read its label sum off the same job. coalesce: an
     // EMPTY pair list (a corpus with zero near-dups — legal and common on
     // clean data) sums to NULL; 0 == 0 converges on the first round.
     def pinWithSum(df: DataFrame): (DataFrame, Long) = {
-      val (pinned, m) = Staging.localPin(df, coalesce(sum("lbl"), lit(0L)).as("s"))
-      (pinned, m("s").asInstanceOf[Long])
+      val obs = Observation()
+      val pinned = Staging.localPin(
+        df.observe(obs, coalesce(sum("lbl"), lit(0L)).as("s")))
+      (pinned, obs.get("s").asInstanceOf[Long])
     }
     var (labels, prevSum) = pinWithSum(edges
       .select(col("u").as("id"), col("u").as("lbl"))

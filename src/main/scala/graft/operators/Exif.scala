@@ -436,7 +436,7 @@ object Exif {
         Multimodal.PHash(r.doc_id, b(0), b(1), b(2), b(3))
       }
     }
-    Staging.localPin(hashes.toDF())._1.as[Multimodal.PHash]
+    Staging.localPin(hashes.toDF()).as[Multimodal.PHash]
   }
 
   /** Orientation-NORMALIZED perceptual near-dup pairs: parse Exif,

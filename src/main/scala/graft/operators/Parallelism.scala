@@ -44,12 +44,12 @@ private[operators] object Parallelism {
     * the spread blocks. Already-parallel and derived inputs return
     * UNTOUCHED — at 100 TB this is a no-op pass-through, never a
     * corpus materialization; only an under-parallel small input pays
-    * the (small, by definition) pin, whose measured size the planner
+    * the (small, by definition) pin, whose stored size the planner
     * then sees ([[Staging.localPin]]).
     */
   def ensurePinned(df: DataFrame): DataFrame = {
     val e = ensure(df)
-    if (e eq df) df else Staging.localPin(e)._1
+    if (e eq df) df else Staging.localPin(e)
   }
 
   /** Run INDEPENDENT driver-side actions as concurrent Spark jobs —

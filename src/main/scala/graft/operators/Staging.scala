@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graft.Bridge
 
 /** Composition-point pinning for multi-stage pipelines.
@@ -36,25 +35,18 @@ object Staging {
     */
   def pin(df: DataFrame, staging: Option[String], stage: String): DataFrame =
     staging match {
-      case None => localPin(df)._1
+      case None => localPin(df)
       case Some(root) =>
         val dir = s"$root/$stage"
         Layout.snapshotWrite(df, dir)
         Layout.snapshotRead(df.sparkSession, dir)
     }
 
-  /** localCheckpoint `df` and hand the planner its measured size: an
-    * [[Observation]] on the pinning job counts the rows (no extra job),
-    * and the checkpoint is rewrapped with that count, so a join against
-    * a small pin plans a broadcast of it. `metrics` are further named
-    * aggregates observed on the same job; all of them come back by name.
+  /** localCheckpoint `df` and hand the planner the bytes its blocks
+    * hold ([[Bridge.withStoredSize]], no extra job), so a join against
+    * a small pin plans a broadcast of it and one against a wide pin
+    * does not.
     */
-  private[graft] def localPin(df: DataFrame, metrics: Column*)
-      : (DataFrame, Map[String, Any]) = {
-    val obs = Observation()
-    val pinned = df.observe(obs, count(lit(1)).as("pin_rows"), metrics: _*)
-      .localCheckpoint()
-    val m = obs.get
-    (Bridge.withRowCount(pinned, m("pin_rows").asInstanceOf[Long]), m)
-  }
+  private[graft] def localPin(df: DataFrame): DataFrame =
+    Bridge.withStoredSize(df.localCheckpoint())
 }

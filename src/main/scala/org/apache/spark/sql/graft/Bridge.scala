@@ -31,25 +31,35 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       session.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** `df` (a checkpointed frame) with its measured row count as the
-    * planner's statistics: `rows` rows of `EstimationUtils.getSizePerRow`
-    * bytes each. A checkpoint's `LogicalRDD` otherwise plans with the
-    * optimizer's estimate of the plan it replaced (often far too large),
-    * so every join against it plans sort-merge. Any other plan returns
-    * unchanged.
+  /** `df` (a localCheckpoint'd frame) with the bytes its checkpoint
+    * blocks hold as the planner's size. A checkpoint's `LogicalRDD`
+    * otherwise plans with the optimizer's estimate of the plan it
+    * replaced (often far too large), so every join against it plans
+    * sort-merge. The size is read off the block manager, which every
+    * stored block reports to before its task ends, so no job runs:
+    * like a cached relation's statistics it counts the rows' real
+    * bytes, a long string or array column included. Any other plan,
+    * or a checkpoint whose blocks are not found, returns unchanged.
     */
-  def withRowCount(df: org.apache.spark.sql.DataFrame, rows: Long)
+  def withStoredSize(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = df.queryExecution.logical match {
     case r: org.apache.spark.sql.execution.LogicalRDD =>
-      import org.apache.spark.sql.catalyst.plans.logical.Statistics
-      import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
-      val session = df.sparkSession
-        .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      val bytes = EstimationUtils.getSizePerRow(r.output) * rows
-      ofRows(session, org.apache.spark.sql.execution.LogicalRDD(r.output, r.rdd,
-        r.outputPartitioning, r.outputOrdering, r.isStreaming, r.stream)(
-        session, Some(Statistics(bytes.max(1), Some(BigInt(rows)))),
-        Some(r.constraints)))
+      import org.apache.spark.storage.RDDBlockId
+      val blocks = org.apache.spark.SparkEnv.get.blockManager.master
+        .getStorageStatus.toSeq
+        .flatMap(_.rddBlocks.collect {
+          case (RDDBlockId(id, _), b) if id == r.rdd.id => b.memSize + b.diskSize
+        })
+      if (blocks.isEmpty) df
+      else {
+        val session = df.sparkSession
+          .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        val stats = org.apache.spark.sql.catalyst.plans.logical.Statistics(
+          BigInt(blocks.sum.max(1L)))
+        ofRows(session, org.apache.spark.sql.execution.LogicalRDD(r.output, r.rdd,
+          r.outputPartitioning, r.outputOrdering, r.isStreaming, r.stream)(
+          session, Some(stats), Some(r.constraints)))
+      }
     case _ => df
   }
 

@@ -219,6 +219,9 @@ class CurationOpsSpec extends AnyFunSuite {
     for ((name, train, row, cols) <- cases) {
       val out = train(5)
       assert(out.columns.toSeq == cols, name)
+      // round and the counts are non-nullable, the strings and score_ln not
+      assert(out.schema.forall(f =>
+        f.nullable != (f.name == "round" || f.name.endsWith("cnt"))), s"$name ${out.schema}")
       assert(out.collect().map(_.toSeq).toSeq == Seq(row), name)
     }
   }

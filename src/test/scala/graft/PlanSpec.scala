@@ -146,6 +146,32 @@ class PlanSpec extends AnyFunSuite {
     assert(build.collect { case e: ShuffleExchangeExec => e }.isEmpty, plan.toString)
   }
 
+  test("a join against a pinned frame with a wide array column does not broadcast it") {
+    import org.apache.spark.sql.execution.RDDScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.functions.{col, concat, lit, sequence, transform}
+    // 2,000 rows of 400 shingle strings each: ~19 MB of row bytes, while
+    // a per-type row width counts the array as one 20-byte string
+    // (~36 B a row, ~72 KB in all) — under the 10 MB broadcast threshold
+    val wide = graft.operators.Staging.pin(
+      spark.range(0, 2000).select(col("id"),
+        transform(sequence(lit(1), lit(400)),
+          i => concat(lit("shingle-"), i.cast("string"))).as("shs")),
+      None, "plan-spec-wide")
+    val threshold = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
+    assert(wide.queryExecution.optimizedPlan.stats.sizeInBytes > threshold)
+    val big = spark.range(0, 20000000L).select((col("id") % 4000).as("id"))
+    val plan = big.join(wide, "id").queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    val broadcastPins = plan.collect {
+      case b: BroadcastExchangeExec if b.collect { case r: RDDScanExec => r }.nonEmpty => b
+    }
+    assert(broadcastPins.isEmpty, plan.toString)
+  }
+
   test("q01: aggregation is partial (map-side combine) before the exchange") {
     val plan = planOf("q01_agg_sum")
     // Two HashAggregate nodes around one Exchange = partial + final.
