@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.{Digest, TextFunctions}
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Observation}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for large text corpora (north-star surface:
@@ -56,77 +56,121 @@ object Dedup {
           .otherwise(lit(0.0))) / grid, 6) + lit(0.0)).as("fn_area"))
   }
 
-  /** One row per doc: (id, shingles, band keys) computed in a single
-    * typed pass. Must stay bit-compatible with the expression/oracle
-    * formulation: whitespace tokens, first-occurrence-distinct word
-    * n-grams, md5 hex per shingle, hash j = digest window [2j, 2j+8),
-    * band key = md5 of the '|'-joined rows of the band.
+  /** The one typed shingle pass: per document, whitespace tokens →
+    * first-occurrence-distinct word n-grams, handed with the id to the
+    * row builder `perPartition` makes once per partition. Documents with
+    * fewer than `shingleN` tokens emit nothing.
+    */
+  private def shingled[T: Encoder](docs: DataFrame, idCol: String, textCol: String,
+                                   shingleN: Int)
+                                  (perPartition: () => (Long, Seq[String]) => T)
+      : Dataset[T] = {
+    import docs.sparkSession.implicits._
+    Parallelism.ensure(docs)
+      .select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
+      .mapPartitions { it =>
+        val row = perPartition()
+        it.flatMap { case (id, text) =>
+          val toks = text.trim.split("\\s+").filter(_.nonEmpty)
+          if (toks.length < shingleN) None
+          else Some(row(id, (0 to toks.length - shingleN)
+            .map(i => toks.slice(i, i + shingleN).mkString(" "))
+            .distinct))
+        }
+      }
+  }
+
+  /** One row per doc: (id, shingles, band keys). Must stay bit-compatible
+    * with the expression/oracle formulation: md5 hex per shingle, hash
+    * j = digest window [2j, 2j+8), band key = md5 of the '|'-joined rows
+    * of the band.
     */
   final case class SignedDoc(id: Long, shs: Seq[String], bands: Seq[String])
 
   private def signedDocs(docs: DataFrame, idCol: String, textCol: String,
                          shingleN: Int, numHashes: Int, nBands: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
+    import docs.sparkSession.implicits._
     val rows = numHashes / nBands
-    Parallelism.ensure(docs)
-      .select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
-      .mapPartitions { it =>
-        val md = Digest.md5()
-        it.flatMap { case (id, text) =>
-          val toks = text.trim.split("\\s+").filter(_.nonEmpty)
-          if (toks.length < shingleN) None
-          else {
-            val shs = (0 to toks.length - shingleN)
-              .map(i => toks.slice(i, i + shingleN).mkString(" "))
-              .distinct
-            // Hash window j = hex chars [2j, 2j+8) of the shingle md5 =
-            // digest bytes [j, j+4). Lowercase-hex lexicographic order ==
-            // unsigned big-endian byte order, so the per-window MIN is an
-            // unsigned-int comparison on the raw digest — no per-shingle
-            // hex string, no per-(shingle, j) substring. Bit-identical to
-            // the oracle's substr(md5(x), 1+2j, 8) formulation.
-            val mins = Array.fill(numHashes)(Long.MaxValue)
-            shs.foreach { s =>
-              val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              var j = 0
-              while (j < numHashes) {
-                val w = ((d(j) & 0xffL) << 24) | ((d(j + 1) & 0xffL) << 16) |
-                  ((d(j + 2) & 0xffL) << 8) | (d(j + 3) & 0xffL)
-                if (w < mins(j)) mins(j) = w
-                j += 1
-              }
-            }
-            val mh = mins.map(w => f"$w%08x")
-            val bandKeys = (0 until nBands).map { b =>
-              Digest.md5Hex(mh.slice(b * rows, (b + 1) * rows).mkString("|"))
-            }
-            Some(SignedDoc(id, shs, bandKeys))
+    shingled(docs, idCol, textCol, shingleN) { () =>
+      val md = Digest.md5()
+      (id: Long, shs: Seq[String]) => {
+        // Hash window j = hex chars [2j, 2j+8) of the shingle md5 =
+        // digest bytes [j, j+4). Lowercase-hex lexicographic order ==
+        // unsigned big-endian byte order, so the per-window MIN is an
+        // unsigned-int comparison on the raw digest — no per-shingle
+        // hex string, no per-(shingle, j) substring. Bit-identical to
+        // the oracle's substr(md5(x), 1+2j, 8) formulation.
+        val mins = Array.fill(numHashes)(Long.MaxValue)
+        shs.foreach { s =>
+          val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          var j = 0
+          while (j < numHashes) {
+            val w = ((d(j) & 0xffL) << 24) | ((d(j + 1) & 0xffL) << 16) |
+              ((d(j + 2) & 0xffL) << 8) | (d(j + 3) & 0xffL)
+            if (w < mins(j)) mins(j) = w
+            j += 1
           }
         }
-      }.toDF("id", "shs", "bands")
+        val mh = mins.map(w => f"$w%08x")
+        SignedDoc(id, shs, (0 until nBands).map { b =>
+          Digest.md5Hex(mh.slice(b * rows, (b + 1) * rows).mkString("|"))
+        })
+      }
+    }.toDF("id", "shs", "bands")
   }
 
-  /** Shingle-only typed pass: (id, distinct word n-grams) with NO digest
-    * work — the exact-Jaccard path needs the shingle strings themselves,
-    * so the md5-per-shingle the minhash signature pass pays would be
-    * wasted here (one digest per shingle ≈ 500k digests at sf0.1).
+  /** (id, distinct word n-grams) with NO digest work — the exact-Jaccard
+    * path needs the shingle strings themselves, so the md5-per-shingle
+    * the minhash signature pass pays would be wasted here (one digest
+    * per shingle ≈ 500k digests at sf0.1).
     */
   private def shingledDocs(docs: DataFrame, idCol: String, textCol: String,
                            shingleN: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    Parallelism.ensure(docs)
-      .select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
-      .mapPartitions { it =>
-        it.flatMap { case (id, text) =>
-          val toks = text.trim.split("\\s+").filter(_.nonEmpty)
-          if (toks.length < shingleN) None
-          else Some((id, (0 to toks.length - shingleN)
-            .map(i => toks.slice(i, i + shingleN).mkString(" "))
-            .distinct))
-        }
-      }.toDF("id", "shs")
+    import docs.sparkSession.implicits._
+    shingled(docs, idCol, textCol, shingleN)(() => (id: Long, shs: Seq[String]) => (id, shs))
+      .toDF("id", "shs")
+  }
+
+  /** LSH band keys of a signature table as keyed rows (id, slot, key). */
+  private def bandKeys(signed: DataFrame): DataFrame =
+    signed.select(col("id"), posexplode(col("bands")).as(Seq("slot", "key")))
+
+  /** The collision join: distinct candidate pairs (doc_a, doc_b) of keyed
+    * rows (id, slot, key) that agree on (slot, key) — LSH bands, SimHash
+    * blocks. Alone it is a self-join kept to doc_a < doc_b; with `right`
+    * it is the bipartite `left` × `right` join. Only the skinny keyed
+    * rows cross its shuffle; wide side columns [[attach]] after the
+    * dedup, on the candidate set.
+    */
+  private def collisions(left: DataFrame,
+                         right: Option[DataFrame] = None): DataFrame = {
+    val on = col("a.slot") === col("b.slot") && col("a.key") === col("b.key")
+    left.as("a")
+      .join(right.getOrElse(left).as("b"),
+        if (right.isEmpty) on && col("a.id") < col("b.id") else on)
+      .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
+      .dropDuplicates("doc_a", "doc_b")
+  }
+
+  /** The two-sided attach: column `c` of `a` (keyed by `id`) onto the
+    * `ends._1` end of every pair as `c_a`, and of `b` onto the `ends._2`
+    * end as `c_b`.
+    */
+  private def attach(pairs: DataFrame, c: String, a: DataFrame, b: DataFrame,
+                     ends: (String, String) = ("doc_a", "doc_b")): DataFrame =
+    pairs
+      .join(a.select(col("id"), col(c).as(s"${c}_a")), col(ends._1) === col("id")).drop("id")
+      .join(b.select(col("id"), col(c).as(s"${c}_b")), col(ends._2) === col("id")).drop("id")
+
+  /** The exact-Jaccard verify: |A∩B| / |A∪B| of the distinct shingle
+    * arrays `shs_a` and `shs_b`, rounded to 4 places as `jaccard`, kept
+    * at ≥ `threshold`.
+    */
+  private def jaccardAtLeast(pairs: DataFrame, threshold: Double): DataFrame = {
+    val inter = size(array_intersect(col("shs_a"), col("shs_b"))).cast("double")
+    val uni = (size(col("shs_a")) + size(col("shs_b"))).cast("double") - inter
+    pairs.withColumn("jaccard", round(inter / uni, 4))
+      .filter(col("jaccard") >= threshold)
   }
 
   /** A2/A3 exact dedup, deterministic: group rows by normalized-text
@@ -161,28 +205,7 @@ object Dedup {
     // against it plan with its real size.
     val sh = Staging.localPin(
       signedDocs(docs, idCol, textCol, shingleN, numHashes, bands))
-    val banded = sh
-      .select(col("id"), posexplode(col("bands")).as(Seq("band", "bkey")))
-
-    // Candidate pairs: same (band, band-hash), id_a < id_b, deduped.
-    // Only (id, band, bkey) rows cross this shuffle — the shingle arrays
-    // rejoin AFTER dedup, on the tiny candidate set.
-    val cands = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
-      .dropDuplicates("doc_a", "doc_b")
-
-    // Exact Jaccard verify on the candidate set.
-    val withShs = cands
-      .join(sh.select(col("id"), col("shs").as("shs_a")), col("doc_a") === col("id")).drop("id")
-      .join(sh.select(col("id"), col("shs").as("shs_b")), col("doc_b") === col("id")).drop("id")
-    val inter = size(array_intersect(col("shs_a"), col("shs_b"))).cast("double")
-    val uni = (size(col("shs_a")) + size(col("shs_b"))).cast("double") - inter
-    withShs
-      .withColumn("jaccard", round(inter / uni, 4))
-      .filter(col("jaccard") >= threshold)
+    jaccardAtLeast(attach(collisions(bandKeys(sh)), "shs", sh, sh), threshold)
       .select("doc_a", "doc_b", "jaccard")
   }
 
@@ -202,25 +225,13 @@ object Dedup {
                     threshold: Double = 0.5): DataFrame = {
     val sh = signedDocs(docs, idCol, textCol, shingleN, numHashes, bands)
       .localCheckpoint()
-    def jaccardPairs(pairs: DataFrame): DataFrame = {
-      val inter = size(array_intersect(col("shs_a"), col("shs_b"))).cast("double")
-      val uni = (size(col("shs_a")) + size(col("shs_b"))).cast("double") - inter
-      pairs.withColumn("jaccard", round(inter / uni, 4))
-        .filter(col("jaccard") >= threshold)
-        .select("doc_a", "doc_b")
-    }
-    val exact = jaccardPairs(
+    val exact = jaccardAtLeast(
       sh.as("a").join(sh.as("b"), col("a.id") < col("b.id"))
         .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"),
-          col("a.shs").as("shs_a"), col("b.shs").as("shs_b")))
+          col("a.shs").as("shs_a"), col("b.shs").as("shs_b")), threshold)
+      .select("doc_a", "doc_b")
       .localCheckpoint()
-    val banded = sh.select(col("id"), posexplode(col("bands")).as(Seq("band", "bkey")))
-    val found = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
-      .dropDuplicates("doc_a", "doc_b")
+    val found = collisions(bandKeys(sh))
       .join(exact, Seq("doc_a", "doc_b"), "left_semi")
     exact.agg(count(lit(1)).as("n_exact"))
       .crossJoin(found.agg(count(lit(1)).as("n_found")))
@@ -303,6 +314,18 @@ object Dedup {
     labels.select(col("id").as("doc_id"), col("lbl").as("cluster_id"))
   }
 
+  /** The persistable signature table of a corpus: `(id, shs, bands)` —
+    * exactly what [[incrementalDedupAgainstSignatures]] consumes as its
+    * history side. A deployed pipeline writes this ONCE per corpus
+    * snapshot (parquet, partitioned however the corpus is) and appends
+    * each accepted batch's signatures, so per-batch dedup never
+    * re-reads, re-tokenizes, or re-hashes the corpus text.
+    */
+  def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
+                        shingleN: Int = 3, numHashes: Int = 12,
+                        bands: Int = 4): DataFrame =
+    signedDocs(docs, idCol, textCol, shingleN, numHashes, bands)
+
   /** Incremental (cross-corpus) fuzzy dedup — the production mode at
     * 100 TB: you never re-dedup the full corpus; each new crawl batch
     * dedups AGAINST the existing corpus. Returns the rows of `newDocs`
@@ -320,18 +343,6 @@ object Dedup {
     * equi-join on the batch side. Nothing rescans history per batch
     * beyond the band-key join.
     */
-  /** The persistable signature table of a corpus: `(id, shs, bands)` —
-    * exactly what [[incrementalDedupAgainstSignatures]] consumes as its
-    * history side. A deployed pipeline writes this ONCE per corpus
-    * snapshot (parquet, partitioned however the corpus is) and appends
-    * each accepted batch's signatures, so per-batch dedup never
-    * re-reads, re-tokenizes, or re-hashes the corpus text.
-    */
-  def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-                        shingleN: Int = 3, numHashes: Int = 12,
-                        bands: Int = 4): DataFrame =
-    signedDocs(docs, idCol, textCol, shingleN, numHashes, bands)
-
   def incrementalDedup(newDocs: DataFrame, history: DataFrame,
                        idCol: String, textCol: String,
                        shingleN: Int = 3, numHashes: Int = 12, bands: Int = 4,
@@ -358,25 +369,11 @@ object Dedup {
                                         threshold: Double = 0.5): DataFrame = {
     val newSigned = signedDocs(newDocs, idCol, textCol, shingleN, numHashes, bands)
       .localCheckpoint()
-    val histSigned = histSignatures
-    def banded(df: DataFrame) =
-      df.select(col("id"), posexplode(col("bands")).as(Seq("band", "bkey")))
-    val cands = banded(newSigned).as("n")
-      .join(banded(histSigned).as("h"),
-        col("n.band") === col("h.band") && col("n.bkey") === col("h.bkey"))
-      .select(col("n.id").as("new_id"), col("h.id").as("hist_id"))
-      .dropDuplicates("new_id", "hist_id")
-    val withShs = cands
-      .join(newSigned.select(col("id"), col("shs").as("shs_n")),
-        col("new_id") === col("id")).drop("id")
-      .join(histSigned.select(col("id"), col("shs").as("shs_h")),
-        col("hist_id") === col("id")).drop("id")
-    val inter = size(array_intersect(col("shs_n"), col("shs_h"))).cast("double")
-    val uni = (size(col("shs_n")) + size(col("shs_h"))).cast("double") - inter
-    val dupNew = withShs
-      .withColumn("jaccard", round(inter / uni, 4))
-      .filter(col("jaccard") >= threshold)
-      .select(col("new_id")).distinct()
+    // pairs are (doc_a = new, doc_b = history)
+    val cands = collisions(bandKeys(newSigned), Some(bandKeys(histSignatures)))
+    val dupNew = jaccardAtLeast(
+        attach(cands, "shs", newSigned, histSignatures), threshold)
+      .select(col("doc_a").as("new_id")).distinct()
     newDocs.join(dupNew, newDocs(idCol) === dupNew("new_id"), "left_anti")
   }
 
@@ -446,20 +443,12 @@ object Dedup {
       .localCheckpoint()
     val blocks = sig.select(col("id"),
       posexplode(array((0 until 4).map(b =>
-        substring(col("sim"), b * 16 + 1, 16)): _*)).as(Seq("blk", "key")))
-    val cands = blocks.as("a")
-      .join(blocks.as("b"),
-        col("a.blk") === col("b.blk") && col("a.key") === col("b.key") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
-      .dropDuplicates("doc_a", "doc_b")
+        substring(col("sim"), b * 16 + 1, 16)): _*)).as(Seq("slot", "key")))
     val ham = (0 until 64).map(i =>
       when(substring(col("sim_a"), i + 1, 1) =!=
         substring(col("sim_b"), i + 1, 1), 1).otherwise(0))
       .reduce(_ + _)
-    cands
-      .join(sig.select(col("id"), col("sim").as("sim_a")), col("doc_a") === col("id")).drop("id")
-      .join(sig.select(col("id"), col("sim").as("sim_b")), col("doc_b") === col("id")).drop("id")
+    attach(collisions(blocks), "sim", sig, sig)
       .withColumn("hamming", ham.cast("int"))
       .filter(col("hamming") <= radius)
       .select("doc_a", "doc_b", "hamming")
@@ -546,11 +535,7 @@ object Dedup {
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .dropDuplicates("id_a", "id_b")
 
-    cands
-      .join(base.select(col("id"), col("s").as("s_a")),
-        col("id_a") === col("id")).drop("id")
-      .join(base.select(col("id"), col("s").as("s_b")),
-        col("id_b") === col("id")).drop("id")
+    attach(cands, "s", base, base, ("id_a", "id_b"))
       // threshold variant: banded DP, O(d·n) per pair instead of the
       // full O(n²) matrix (measured 14× on 200-char pairs) — candidates
       // above d short-circuit to -1, so ONE reference filters exactly
@@ -583,7 +568,21 @@ object Dedup {
     */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         shingleN: Int = 3, threshold: Double = 0.3,
-                        maxDf: Int = 1000): DataFrame = {
+                        maxDf: Int = 1000): DataFrame =
+    cappedOverlap(docs, idCol, textCol, shingleN, maxDf)
+      .withColumn("jaccard",
+        round(col("m").cast("double") /
+          (col("n_a") + col("n_b") - col("m")).cast("double"), 4))
+      .filter(col("jaccard") >= threshold)
+      .select("doc_a", "doc_b", "jaccard")
+
+  /** The capped-overlap core of [[ngramJaccardPairs]] and
+    * [[containmentPairs]]: (doc_a < doc_b, m, n_a, n_b) for every pair
+    * sharing at least one shingle after the df cap, with `m` the shared
+    * count and `n_a`, `n_b` the capped set sizes.
+    */
+  private def cappedOverlap(docs: DataFrame, idCol: String, textCol: String,
+                            shingleN: Int, maxDf: Int): DataFrame = {
     // typed shingle pass (no digests — see shingledDocs); localCheckpoint:
     // several branches (df agg, anti join, sizes) re-read it, and the
     // blocks are GC'd with the result, no CacheManager residue. ex0 is a
@@ -604,7 +603,7 @@ object Dedup {
       .agg(count(lit(1)).as("df")).filter(col("df") > maxDf)
       .select("sh")
     val ex = ex0.join(dropped, Seq("sh"), "left_anti")
-    // Jaccard denominators over the CAPPED sets, derived pre-explode.
+    // Set sizes over the CAPPED sets, derived pre-explode.
     val droppedPerDoc = ex0.join(dropped, Seq("sh"))
       .groupBy("id").agg(count(lit(1)).as("nd"))
     val sizes = sh.select(col("id"), size(col("shs")).as("n0"))
@@ -623,15 +622,7 @@ object Dedup {
       .join(ex.as("b"), col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
       .agg(count(lit(1)).as("m"))
-
-    overlap
-      .join(sizes.as("sa"), col("doc_a") === col("sa.id"))
-      .join(sizes.as("sb"), col("doc_b") === col("sb.id"))
-      .withColumn("jaccard",
-        round(col("m").cast("double") /
-          (col("sa.n") + col("sb.n") - col("m")).cast("double"), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
+    attach(overlap, "n", sizes, sizes)
   }
 
   /** Shingle CONTAINMENT pairs — the asymmetric sibling of
@@ -649,54 +640,15 @@ object Dedup {
     */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
                        shingleN: Int = 3, threshold: Double = 0.8,
-                       maxDf: Int = 1000): DataFrame = {
-    val sh = shingledDocs(docs, idCol, textCol, shingleN).localCheckpoint()
-    val ex0 = sh.select(col("id"), explode(col("shs")).as("shStr"))
-      .select(col("id"), xxhash64(col("shStr")).as("sh"))
-    val dropped = ex0.groupBy("sh")
-      .agg(count(lit(1)).as("df")).filter(col("df") > maxDf)
-      .select("sh")
-    val ex = ex0.join(dropped, Seq("sh"), "left_anti")
-    val droppedPerDoc = ex0.join(dropped, Seq("sh"))
-      .groupBy("id").agg(count(lit(1)).as("nd"))
-    val sizes = sh.select(col("id"), size(col("shs")).as("n0"))
-      .join(droppedPerDoc, Seq("id"), "left")
-      .select(col("id"),
-        (col("n0") - coalesce(col("nd"), lit(0))).cast("long").as("n"))
-    val overlap = ex.as("a").hint("SHUFFLE_HASH")
-      .join(ex.as("b"), col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
-      .agg(count(lit(1)).as("m"))
-    overlap
-      .join(sizes.as("sa"), col("doc_a") === col("sa.id"))
-      .join(sizes.as("sb"), col("doc_b") === col("sb.id"))
+                       maxDf: Int = 1000): DataFrame =
+    cappedOverlap(docs, idCol, textCol, shingleN, maxDf)
       .withColumn("cont_ab",
-        round(col("m").cast("double") / col("sa.n").cast("double"), 4))
+        round(col("m").cast("double") / col("n_a").cast("double"), 4))
       .withColumn("cont_ba",
-        round(col("m").cast("double") / col("sb.n").cast("double"), 4))
+        round(col("m").cast("double") / col("n_b").cast("double"), 4))
       .filter(greatest(col("cont_ab"), col("cont_ba")) >= threshold)
       .select("doc_a", "doc_b", "cont_ab", "cont_ba")
-  }
 
-  /** EXACT substring dedup — the published remove-repeated-passages
-    * pass (boilerplate, licenses, templated pages repeated verbatim
-    * across a crawl): every token position covered by a `w`-token
-    * window whose content occurs ≥ 2 times ANYWHERE in the corpus
-    * (other documents or elsewhere in the same one) is CUT from the
-    * document; the survivors re-join in order. Suffix-array systems
-    * find the same regions single-node; the Spark-natural equivalent
-    * is rolling `w`-gram keys + one count aggregation:
-    *
-    *   1. narrow gram pass — (doc, start, md5(w-gram)) skinny rows;
-    *   2. ONE hash aggregation finds duplicated gram VALUES (map-side
-    *      partial count collapses the unique tail);
-    *   3. marked starts expand to covered positions (explode bounded
-    *      by |duplicated regions|·w, not corpus size);
-    *   4. anti-join + ordered reassembly per document.
-    *
-    * Emits (id, clean_md5, n_tokens, n_cut) — digests, not the
-    * rebuilt text.
-    */
   /** Winnowing document fingerprints (Schleimer/Wilkerson/Aiken — the
     * MOSS algorithm): hash every character k-gram, slide a window of w
     * consecutive gram hashes, and select each window's MINIMUM hash;
@@ -713,70 +665,26 @@ object Dedup {
     * per-document). Documents with fewer than k+w−1 chars have no full
     * window and are absent, the standard boundary.
     *
-    * Scale shape: the default `kernel` path is ONE narrow mapPartitions
-    * pass — per document: rolling gram digests, a monotonic-deque
-    * window minimum, and local distinct — so the operator shuffles
-    * NOTHING in digest form (the relational twin explodes one row per
-    * gram and pays two corpus-sized exchanges: the window's
-    * partitionBy-id and the distinct). Both paths emit bit-identical
-    * fingerprints (md5-prefix 60-bit — DedupSpec pins the equality on
-    * hostile unicode), so the DuckDB oracle replays either. The
-    * relational form stays for cross-checking and SQL-only contexts.
+    * Scale shape: ONE narrow mapPartitions pass — per document: gram
+    * digests, a monotonic-deque window minimum, and local distinct — so
+    * the operator shuffles NOTHING in digest form (the relational
+    * reference [[winnowingRelational]] explodes one row per gram and
+    * pays two corpus-sized exchanges: the window's partitionBy-id and
+    * the distinct). Both emit bit-identical fingerprints (md5-prefix
+    * 60-bit — DedupSpec pins the equality on hostile unicode), so the
+    * DuckDB oracle replays either.
+    *
+    * Gram slicing goes through UTF8String.substringSQL — the exact
+    * code-point arithmetic Spark's `substr` uses — and the 60-bit value
+    * is the md5 digest's first 8 bytes big-endian >>> 4, which IS
+    * `conv(substring(md5hex, 1, 15), 16, 10)` without building the hex
+    * string (nibbles 0–14).
     */
   def winnowingFingerprints(docs: DataFrame, idCol: String,
                             textCol: String, k: Int = 8,
-                            w: Int = 4, exploded: Boolean = false,
-                            kernel: Boolean = true)
+                            w: Int = 4, exploded: Boolean = false)
       : DataFrame = {
     require(k >= 2 && w >= 1, s"bad winnowing params k=$k w=$w")
-    if (kernel)
-      return winnowingKernel(docs, idCol, textCol, k, w, exploded)
-    import org.apache.spark.sql.expressions.Window
-    val len = length(col(textCol))
-    val nGrams = len - k + 1
-    val grams = docs
-      .select(col(idCol), col(textCol), nGrams.as("ng"),
-        explode(when(len >= k + w - 1,
-          sequence(lit(1), nGrams)).otherwise(array())).as("pos"))
-      // 15 hex chars = a 60-bit hash space. 8 chars (32 bits) is a
-      // scale-killer: at ~10¹³ corpus k-grams every one of the 2³²
-      // values collects df ≈ 2,300 ≫ any sane maxDf, so the overlap
-      // join's df gate silently drops EVERY fingerprint and the
-      // operator degrades to a no-op exactly when it matters. At 60
-      // bits the expected df is ~10⁻⁵ — boilerplate stays the only
-      // thing the gate removes. 15 (not 16) chars so the value fits a
-      // signed 64-bit long in both engines (16 would overflow the cast
-      // to NULL for hashes above 2⁶³).
-      .select(col(idCol), col("ng"), col("pos"),
-        conv(substring(md5(col(textCol).substr(col("pos"), lit(k))),
-          1, 15), 16, 10).cast("long").as("h"))
-    val win = Window.partitionBy(col(idCol)).orderBy(col("pos"))
-      .rowsBetween(Window.currentRow, w - 1)
-    val sel = grams
-      .withColumn("minh", min(col("h")).over(win))
-      .filter(col("pos") <= col("ng") - w + 1) // full windows only
-      .select(col(idCol), col("minh").as("fp")).distinct()
-    if (exploded) sel // the overlap-join form
-    else sel.groupBy(col(idCol))
-      // checksum mod 1e9+7: raw 60-bit fingerprints summed over a
-      // large doc overflow a signed long (ANSI abort); reduced values
-      // stay < 2³⁰ so even a billion fingerprints sum within range
-      .agg(count(lit(1)).as("n_fp"),
-        sum(col("fp") % 1000000007L).as("fp_sum"))
-  }
-
-  /** The zero-shuffle winnowing pass: per document, gram digests +
-    * deque window-min + local distinct, one narrow mapPartitions.
-    * Gram slicing goes through UTF8String.substringSQL — the exact
-    * code-point arithmetic Spark's `substr` uses — and the 60-bit
-    * value is the md5 digest's first 8 bytes big-endian >>> 4, which
-    * IS `conv(substring(md5hex, 1, 15), 16, 10)` without building the
-    * hex string (nibbles 0–14). Keeps the relational form's boundary:
-    * docs shorter than k+w−1 code points emit nothing.
-    */
-  private def winnowingKernel(docs: DataFrame, idCol: String,
-                              textCol: String, k: Int, w: Int,
-                              exploded: Boolean): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     import org.apache.spark.unsafe.types.UTF8String
@@ -840,6 +748,47 @@ object Dedup {
       }(org.apache.spark.sql.Encoders.row(outSchema))
   }
 
+  /** The relational reference twin of [[winnowingFingerprints]]: one row
+    * per gram, a window min over `partitionBy(id)` and a distinct — the
+    * same fingerprints in plain Spark SQL, kept for cross-checking.
+    */
+  private[graft] def winnowingRelational(docs: DataFrame, idCol: String,
+                                         textCol: String, k: Int, w: Int,
+                                         exploded: Boolean): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val len = length(col(textCol))
+    val nGrams = len - k + 1
+    val grams = docs
+      .select(col(idCol), col(textCol), nGrams.as("ng"),
+        explode(when(len >= k + w - 1,
+          sequence(lit(1), nGrams)).otherwise(array())).as("pos"))
+      // 15 hex chars = a 60-bit hash space. 8 chars (32 bits) is a
+      // scale-killer: at ~10¹³ corpus k-grams every one of the 2³²
+      // values collects df ≈ 2,300 ≫ any sane maxDf, so the overlap
+      // join's df gate silently drops EVERY fingerprint and the
+      // operator degrades to a no-op exactly when it matters. At 60
+      // bits the expected df is ~10⁻⁵ — boilerplate stays the only
+      // thing the gate removes. 15 (not 16) chars so the value fits a
+      // signed 64-bit long in both engines (16 would overflow the cast
+      // to NULL for hashes above 2⁶³).
+      .select(col(idCol), col("ng"), col("pos"),
+        conv(substring(md5(col(textCol).substr(col("pos"), lit(k))),
+          1, 15), 16, 10).cast("long").as("h"))
+    val win = Window.partitionBy(col(idCol)).orderBy(col("pos"))
+      .rowsBetween(Window.currentRow, w - 1)
+    val sel = grams
+      .withColumn("minh", min(col("h")).over(win))
+      .filter(col("pos") <= col("ng") - w + 1) // full windows only
+      .select(col(idCol), col("minh").as("fp")).distinct()
+    if (exploded) sel // the overlap-join form
+    else sel.groupBy(col(idCol))
+      // checksum mod 1e9+7: raw 60-bit fingerprints summed over a
+      // large doc overflow a signed long (ANSI abort); reduced values
+      // stay < 2³⁰ so even a billion fingerprints sum within range
+      .agg(count(lit(1)).as("n_fp"),
+        sum(col("fp") % 1000000007L).as("fp_sum"))
+  }
+
   /** Document-overlap pairs from winnowing fingerprints — the
     * detection JOIN on the [[winnowingFingerprints]] sketch: documents
     * sharing ≥ `minShared` selected hashes are reported with their
@@ -872,6 +821,25 @@ object Dedup {
       .filter(col("n_shared") >= minShared)
   }
 
+  /** EXACT substring dedup — the published remove-repeated-passages
+    * pass (boilerplate, licenses, templated pages repeated verbatim
+    * across a crawl): every token position covered by a `w`-token
+    * window whose content occurs ≥ 2 times ANYWHERE in the corpus
+    * (other documents or elsewhere in the same one) is CUT from the
+    * document; the survivors re-join in order. Suffix-array systems
+    * find the same regions single-node; the Spark-natural equivalent
+    * is rolling `w`-gram keys + one count aggregation:
+    *
+    *   1. narrow gram pass — (doc, start, md5(w-gram)) skinny rows;
+    *   2. ONE hash aggregation finds duplicated gram VALUES (map-side
+    *      partial count collapses the unique tail);
+    *   3. marked starts expand to covered positions (explode bounded
+    *      by |duplicated regions|·w, not corpus size);
+    *   4. anti-join + ordered reassembly per document.
+    *
+    * Emits (id, clean_md5, n_tokens, n_cut) — digests, not the
+    * rebuilt text.
+    */
   def substringDedup(docs: DataFrame, idCol: String, textCol: String,
                      w: Int = 20): DataFrame = {
     require(w >= 2, s"window $w too small")
@@ -961,19 +929,6 @@ object Dedup {
     out.result()
   }
 
-  /** Content-defined chunk dedup — the blob/dataset dedup primitive
-    * (LBFS/FastCDC lineage): split every document at content-defined
-    * boundaries, digest each chunk, and aggregate per digest. A
-    * passage shared across documents chunks IDENTICALLY once the
-    * 16-byte window is inside it (boundaries are content-local), so
-    * shared chunks collapse regardless of their byte offset — the
-    * property fixed-size blocking lacks. Emits per distinct chunk:
-    * its length, total copies, and distinct carrying documents.
-    *
-    * Scale shape: one narrow mapPartitions pass per document (digest
-    * + length only — chunk BYTES never shuffle), then a groupBy on the
-    * digest; at 100 TB the shuffle carries ~48 bytes per chunk.
-    */
   /** The chunk-extraction stage alone (doc_id, chunk_idx, chunk_md5,
     * chunk_len) — STATELESS per document, so it runs unchanged on a
     * Structured Streaming dataset (the online half of CDC dedup).
@@ -1003,6 +958,19 @@ object Dedup {
       .toDF("doc_id", "chunk_idx", "chunk_md5", "chunk_len")
   }
 
+  /** Content-defined chunk dedup — the blob/dataset dedup primitive
+    * (LBFS/FastCDC lineage): split every document at content-defined
+    * boundaries, digest each chunk, and aggregate per digest. A
+    * passage shared across documents chunks IDENTICALLY once the
+    * 16-byte window is inside it (boundaries are content-local), so
+    * shared chunks collapse regardless of their byte offset — the
+    * property fixed-size blocking lacks. Emits per distinct chunk:
+    * its length, total copies, and distinct carrying documents.
+    *
+    * Scale shape: one narrow mapPartitions pass per document (digest
+    * + length only — chunk BYTES never shuffle), then a groupBy on the
+    * digest; at 100 TB the shuffle carries ~48 bytes per chunk.
+    */
   def cdcChunkDedup(docs: DataFrame, idCol: String = "doc_id",
                     textCol: String = "text"): DataFrame =
     cdcChunks(Parallelism.ensure(docs), idCol, textCol)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over edge tables. [[Dedup.connectedComponents]]
@@ -11,6 +11,9 @@ import org.apache.spark.sql.functions._
   * crawl corpora for LLM training).
   */
 object Graph {
+
+  private def requireSane(name: String, v: Int): Unit =
+    require(v >= 1 && v <= 50, s"$name $v outside sane bounds (1..50)")
 
   /** Power-iteration PageRank with uniform teleport.
     *
@@ -42,25 +45,47 @@ object Graph {
                srcCol: String = "src", dstCol: String = "dst",
                iterations: Int = 5, damping: Double = 0.85,
                staging: Option[String] = None): DataFrame = {
-    require(iterations >= 1 && iterations <= 50,
-      s"iterations $iterations outside sane bounds (1..50)")
+    requireSane("iterations", iterations)
     val n = Staging.pin(Parallelism.ensure(nodes)
       .select(col(idCol).cast("long").as("id")), staging, "nodes")
     val nCount = n.count() // one scalar to the driver
     require(nCount > 0, "pageRank needs at least one node")
+    val e = outEdges(edges, srcCol, dstCol, staging, "edges")
+    val r0 = Staging.pin(n.select(col("id"), lit(1.0 / nCount).as("r")),
+      staging, "ranks-0")
+    rankLoop(n, e, r0, iterations, damping, staging, "ranks")(
+      lit((1.0 - damping) / nCount))
+  }
+
+  /** The static edge table of the rank loop: (src, dst, outdeg), pinned
+    * as `name`. */
+  private def outEdges(edges: DataFrame, srcCol: String, dstCol: String,
+                       staging: Option[String], name: String): DataFrame = {
     val deg = edges.groupBy(col(srcCol)).agg(count(lit(1)).as("outdeg"))
-    val e = Staging.pin(edges
+    Staging.pin(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .join(deg.select(col(srcCol).cast("long").as("src"), col("outdeg")), "src"),
-      staging, "edges")
-    val teleport = lit((1.0 - damping) / nCount)
-    var ranks = Staging.pin(n.select(col("id"), lit(1.0 / nCount).as("r")),
-      staging, "ranks-0")
+      staging, name)
+  }
+
+  /** The power-iteration loop of both PageRanks: each round
+    *
+    *   r'(v) = teleport(v) + damping · Σ_{(u,v) ∈ e} r(u) / outdeg(u)
+    *
+    * over the node table `base` (the ranks left-join onto it, so nodes
+    * without in-links keep the teleport term alone), starting from
+    * `r0` (id, r). `teleport` is a column over `base`.
+    */
+  private def rankLoop(base: DataFrame, e: DataFrame, r0: DataFrame,
+                       iterations: Int, damping: Double,
+                       staging: Option[String], name: String)
+                      (teleport: Column): DataFrame = {
+    var ranks = r0
     for (i <- 1 to iterations) {
       val contrib = e.join(ranks, e("src") === ranks("id"))
         .groupBy(col("dst"))
         .agg(sum(col("r") / col("outdeg")).as("c"))
-      ranks = n.join(contrib, n("id") === contrib("dst"), "left")
+      ranks = base.join(contrib, base("id") === contrib("dst"), "left")
         .select(col("id"),
           (teleport + lit(damping) * coalesce(col("c"), lit(0.0))).as("r"))
       // pin INTERMEDIATE vectors only (truncates the growing lineage);
@@ -69,8 +94,8 @@ object Graph {
       // checkpoints do NOT help here — the cost is the iteration's own
       // shuffle jobs, not the checkpoint barrier.) In staged mode every
       // round is a durable restart point: a preempted run re-reads
-      // ranks-i instead of re-iterating from ranks-0.
-      if (i < iterations) ranks = Staging.pin(ranks, staging, s"ranks-$i")
+      // `name`-i instead of re-iterating from the start.
+      if (i < iterations) ranks = Staging.pin(ranks, staging, s"$name-$i")
     }
     ranks
   }
@@ -95,8 +120,7 @@ object Graph {
                            srcCol: String = "src", dstCol: String = "dst",
                            iterations: Int = 5, damping: Double = 0.85,
                            staging: Option[String] = None): DataFrame = {
-    require(iterations >= 1 && iterations <= 50,
-      s"iterations $iterations outside sane bounds (1..50)")
+    requireSane("iterations", iterations)
     val s0 = seeds.select(col(idCol).cast("long").as("id")).distinct()
     val seedCount = s0.count() // one scalar
     require(seedCount > 0, "personalizedPageRank needs at least one seed")
@@ -106,25 +130,19 @@ object Graph {
         Seq("id"), "left")
       .select(col("id"), coalesce(col("p0"), lit(0.0)).as("p")),
       staging, "ppr-p")
-    val deg = edges.groupBy(col(srcCol)).agg(count(lit(1)).as("outdeg"))
-    val e = Staging.pin(edges
-      .select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .join(deg.select(col(srcCol).cast("long").as("src"), col("outdeg")),
-        "src"),
-      staging, "ppr-edges")
-    var ranks = p.select(col("id"), col("p").as("r"))
-    for (i <- 1 to iterations) {
-      val contrib = e.join(ranks, e("src") === ranks("id"))
-        .groupBy(col("dst"))
-        .agg(sum(col("r") / col("outdeg")).as("c"))
-      ranks = p.join(contrib, p("id") === contrib("dst"), "left")
-        .select(col("id"),
-          (lit(1.0 - damping) * col("p") +
-            lit(damping) * coalesce(col("c"), lit(0.0))).as("r"))
-      if (i < iterations) ranks = Staging.pin(ranks, staging, s"ppr-ranks-$i")
-    }
-    ranks
+    val e = outEdges(edges, srcCol, dstCol, staging, "ppr-edges")
+    rankLoop(p, e, p.select(col("id"), col("p").as("r")), iterations,
+      damping, staging, "ppr-ranks")(lit(1.0 - damping) * col("p"))
+  }
+
+  /** The undirected simple edge table (u, v) of a directed edge list:
+    * self-loops dropped, both directions, de-duplicated. */
+  private def undirected(edges: DataFrame, srcCol: String,
+                         dstCol: String): DataFrame = {
+    val raw = edges
+      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
+      .filter(col("u") =!= col("v"))
+    raw.union(raw.select(col("v").as("u"), col("u").as("v"))).distinct()
   }
 
   /** Synchronous label-propagation community detection (LPA) on an
@@ -152,14 +170,9 @@ object Graph {
   def labelPropagation(edges: DataFrame, srcCol: String = "src",
                        dstCol: String = "dst", iterations: Int = 3,
                        staging: Option[String] = None): DataFrame = {
-    require(iterations >= 1 && iterations <= 50,
-      s"iterations $iterations outside sane bounds (1..50)")
-    val raw = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-    val sym = Staging.pin(
-      raw.union(raw.select(col("v").as("u"), col("u").as("v"))).distinct(),
-      staging, "lpa-edges")
+    requireSane("iterations", iterations)
+    val sym = Staging.pin(undirected(edges, srcCol, dstCol), staging,
+      "lpa-edges")
     var labels = Staging.pin(
       sym.select(col("u").as("id")).distinct()
         .select(col("id"), col("id").as("label")),
@@ -197,14 +210,9 @@ object Graph {
                    idCol: String = "id", srcCol: String = "src",
                    dstCol: String = "dst", maxDepth: Int = 5,
                    staging: Option[String] = None): DataFrame = {
-    require(maxDepth >= 1 && maxDepth <= 50,
-      s"maxDepth $maxDepth outside sane bounds (1..50)")
-    val raw = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-    val sym = Staging.pin(
-      raw.union(raw.select(col("v").as("u"), col("u").as("v"))).distinct(),
-      staging, "bfs-edges")
+    requireSane("maxDepth", maxDepth)
+    val sym = Staging.pin(undirected(edges, srcCol, dstCol), staging,
+      "bfs-edges")
     var settled = Staging.pin(
       sources.select(col(idCol).cast("long").as("id")).distinct()
         .select(col("id"), lit(0).as("dist")),
@@ -250,14 +258,9 @@ object Graph {
             srcCol: String = "src", dstCol: String = "dst",
             staging: Option[String] = None): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    require(rounds >= 1 && rounds <= 50,
-      s"rounds $rounds outside sane bounds (1..50)")
-    val raw = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-    var live = Staging.pin(
-      raw.union(raw.select(col("v").as("u"), col("u").as("v"))).distinct(),
-      staging, "kcore-0")
+    requireSane("rounds", rounds)
+    var live = Staging.pin(undirected(edges, srcCol, dstCol), staging,
+      "kcore-0")
     var r = 0
     var settled = false
     while (r < rounds && !settled) {
@@ -291,11 +294,7 @@ object Graph {
     */
   def triangleCounts(edges: DataFrame, srcCol: String = "src",
                      dstCol: String = "dst"): DataFrame = {
-    val raw = edges
-      .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-    val sym = raw.union(raw.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
+    val sym = undirected(edges, srcCol, dstCol)
       .localCheckpoint() // read by the degree agg AND both join sides
     val deg = sym.groupBy("u").agg(count(lit(1)).as("d"))
     val o = sym

@@ -34,13 +34,12 @@ import java.nio.charset.StandardCharsets
   *    first to match the cluster's process budget (the reference's
   *    `-partitions 100` before blastn, virapipe.sh:24).
   */
-final case class PipeStage(cmd: Seq[String], env: Map[String, String] = Map.empty) {
+final case class PipeStage(cmd: Seq[String]) {
 
   def run(input: Dataset[String]): Dataset[String] = {
     import input.sparkSession.implicits._
     val command = cmd
-    val extraEnv = env
-    input.mapPartitions(records => PipeStage.pipeIterator(command, extraEnv, records))
+    input.mapPartitions(records => PipeStage.pipeIterator(command, records))
   }
 }
 
@@ -56,12 +55,10 @@ object PipeStage {
     * path ([[Pipes.assembleMegahitGrouped]] — one process per
     * `groupByKey` group, the reference's per-sample assembly shape).
     */
-  def pipeIterator(command: Seq[String], extraEnv: Map[String, String],
-                   records: Iterator[String]): Iterator[String] = {
+  def pipeIterator(command: Seq[String], records: Iterator[String]): Iterator[String] = {
     if (records.isEmpty) Iterator.empty
     else {
       val pb = new ProcessBuilder(command: _*)
-      extraEnv.foreach { case (k, v) => pb.environment().put(k, v) }
       pb.redirectErrorStream(false)
       val proc = pb.start()
       Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
@@ -291,7 +288,7 @@ object Pipes {
         }
         // one-line bodies in, header/body alternation out
         var header: String = null
-        PipeStage.pipeIterator(command, Map.empty, fastaLines).flatMap { line =>
+        PipeStage.pipeIterator(command, fastaLines).flatMap { line =>
           if (line.startsWith(">")) { header = line.substring(1); Iterator.empty }
           else Iterator((sample, header, line))
         }

@@ -41,6 +41,56 @@ class DedupSpec extends AnyFunSuite {
     assert(pairs((1L, 2L)) > 0.5 && pairs((1L, 2L)) < 1.0)
   }
 
+  test("capped shingle overlap: Jaccard and containment equal a brute-force pair scan") {
+    import spark.implicits._
+    // "boiler plate header" sits in five documents, above maxDf = 3, so
+    // it leaves every set (numerator and denominators); the shingles
+    // after it sit in at most three and stay
+    val docs = Seq(
+      (1L, "boiler plate header alpha beta gamma delta epsilon"),
+      (2L, "boiler plate header alpha beta gamma delta zeta"),
+      (3L, "boiler plate header one two three four five"),
+      (4L, "boiler plate header six seven eight nine ten"),
+      (5L, "alpha beta gamma delta epsilon eta theta"),
+      (6L, "boiler plate header alpha beta gamma"),
+      (7L, "one two three four five six seven"),
+      (8L, "tiny doc"))
+    val maxDf = 3
+    def shingles(t: String): Set[String] = {
+      val toks = t.split(" ")
+      if (toks.length < 3) Set.empty
+      else (0 to toks.length - 3).map(i => toks.slice(i, i + 3).mkString(" ")).toSet
+    }
+    val df = docs.flatMap(d => shingles(d._2)).groupBy(identity).view.mapValues(_.size)
+    assert(df.values.exists(_ > maxDf) && df.values.exists(v => v > 1 && v <= maxDf))
+    def r4(x: Double): Double =
+      BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    // (a, b, m, |A|, |B|) over the capped sets, pairs sharing a shingle
+    val overlaps = for {
+      (ia, ta) <- docs; (ib, tb) <- docs if ia < ib
+      sa = shingles(ta).filter(df(_) <= maxDf); sb = shingles(tb).filter(df(_) <= maxDf)
+      m = (sa intersect sb).size if m > 0
+    } yield (ia, ib, m, sa.size, sb.size)
+    val frame = docs.toDF("doc_id", "text")
+    val cases = Seq[(String, () => Set[Seq[Any]], Set[Seq[Any]])](
+      ("ngramJaccardPairs",
+        () => Dedup.ngramJaccardPairs(frame, "doc_id", "text", threshold = 0.1,
+          maxDf = maxDf).collect().map(_.toSeq).toSet,
+        overlaps.map { case (a, b, m, na, nb) => (a, b, r4(m.toDouble / (na + nb - m))) }
+          .collect { case (a, b, j) if j >= 0.1 => Seq[Any](a, b, j) }.toSet),
+      ("containmentPairs",
+        () => Dedup.containmentPairs(frame, "doc_id", "text", threshold = 0.3,
+          maxDf = maxDf).collect().map(_.toSeq).toSet,
+        overlaps.map { case (a, b, m, na, nb) =>
+          (a, b, r4(m.toDouble / na), r4(m.toDouble / nb)) }
+          .collect { case (a, b, ca, cb) if math.max(ca, cb) >= 0.3 =>
+            Seq[Any](a, b, ca, cb) }.toSet))
+    for ((name, run, expected) <- cases) {
+      assert(expected.nonEmpty, name)
+      assert(run() == expected, name)
+    }
+  }
+
   test("connectedComponents labels every node with the min reachable id") {
     import spark.implicits._
     // two components: {1,2,4} chained (1-2, 2-4) and {7,9}; 3/5 absent
@@ -967,9 +1017,8 @@ class DedupSpec extends AnyFunSuite {
     for (exploded <- Seq(true, false)) {
       val kern = graft.operators.Dedup.winnowingFingerprints(
         docs, "doc_id", "text", k = 8, w = 4, exploded = exploded)
-      val rel = graft.operators.Dedup.winnowingFingerprints(
-        docs, "doc_id", "text", k = 8, w = 4, exploded = exploded,
-        kernel = false)
+      val rel = graft.operators.Dedup.winnowingRelational(
+        docs, "doc_id", "text", k = 8, w = 4, exploded = exploded)
       val a = kern.collect().map(_.toSeq).toSet
       val b = rel.collect().map(_.toSeq).toSet
       assert(a == b, s"exploded=$exploded: kernel $a vs relational $b")

@@ -179,11 +179,18 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("Exchange"))
   }
 
-  test("q31: LSH candidate join is an equi join, never a cartesian") {
-    val plan = planOf("q31_minhash_lsh")
-    assert(!plan.contains("CartesianProduct"), plan.take(1200))
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(1200))
-  }
+  // One table of Dedup's collision-join operators: LSH bands (q31), the
+  // bipartite new × history band join (q136) and SimHash 16-bit blocks
+  // (q170) must all plan their candidates as an equi join.
+  for ((q, name, what) <- Seq(
+      ("q31", "q31_minhash_lsh", "LSH candidate"),
+      ("q136", "q136_incremental_dedup", "incremental (bipartite) LSH candidate"),
+      ("q170", "q170_simhash_pairs", "SimHash block candidate")))
+    test(s"$q: $what join is an equi join, never a cartesian") {
+      val plan = planOf(name)
+      assert(!plan.contains("CartesianProduct"), s"$name: ${plan.take(1200)}")
+      assert(!plan.contains("BroadcastNestedLoopJoin"), s"$name: ${plan.take(1200)}")
+    }
 
   // One table of every gated ANN funnel. Each plan must hold no
   // CartesianProduct; the only nested loop allowed is the coarse
